@@ -28,6 +28,10 @@ import sys
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # git log dump format: \x01-separated records, \x02-separated header
 # fields — exactly what etl.gitlog.parse_git_log consumes.  ``-M -C``
@@ -94,17 +98,17 @@ def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | None:
     """Run ``git log`` for one candidate directory into
-    ``<dump_dir>/<index>/<name>.log``; returns (name, remote_url) or
-    None when the directory is not a usable git repository (→ skipped
-    report).
+    ``<dump_dir>/<index>.log``; returns (name, remote_url) or None when
+    the directory is not a usable git repository (→ skipped report).
 
-    Each dump lands in its own per-directory subfolder: two scanned
-    directories can share a basename (root/a/proj and root/b/proj),
-    and a flat layout would have both threads clobbering one file,
-    silently losing a repository's history. The parser derives the
-    repository name from the FILE basename, so same-named directories
-    still merge under one name key downstream — the reference's own
-    name-keyed behavior — but every commit is parsed.
+    Dumps are named by scan index, never by repository name: two
+    scanned directories can share a basename (root/a/proj and
+    root/b/proj) and would clobber one file, Spark skips files whose
+    names start with ``.`` or ``_``, and ``input_file_name()`` is
+    URL-encoded. The caller maps each index back to its name, so
+    same-named directories still merge under one name key downstream —
+    the reference's own name-keyed behavior — and every commit is
+    parsed.
     """
     name = os.path.basename(directory.rstrip("/"))
     try:
@@ -118,9 +122,7 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
         return None  # not a git repo / empty — reference skips it too
     if not log.strip():
         return None
-    sub = os.path.join(dump_dir, str(index))
-    os.makedirs(sub, exist_ok=True)
-    with open(os.path.join(sub, f"{name}.log"), "w", encoding="utf-8") as fh:
+    with open(os.path.join(dump_dir, f"{index}.log"), "w", encoding="utf-8") as fh:
         fh.write(log)
     url = subprocess.run(
         ("git", "-C", directory, "config", "--get", "remote.origin.url"),
@@ -128,6 +130,17 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
         text=True,
     ).stdout.strip()
     return name, url or _NO_REMOTE
+
+
+def _named_by_dump(commits: DataFrame, dumps: DataFrame) -> DataFrame:
+    """Replace the parsed ``repository`` (the dump index, taken from the
+    file name) with the repository name, keeping the column order."""
+    from pyspark.sql import functions as F
+
+    names = F.broadcast(dumps.selectExpr("dump AS repository", "name"))
+    return commits.join(names, "repository").selectExpr(
+        *("name AS repository" if c == "repository" else c for c in commits.columns)
+    )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -138,7 +151,7 @@ def main(argv: list[str] | None = None) -> int:
     from .etl.gitlog import parse_git_log
     from .etl.pipeline import run_pipeline, scan_directories
     from .etl.writers import write_sqlite
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     config = Config.load(args.config)
     spark = get_spark(
@@ -147,10 +160,9 @@ def main(argv: list[str] | None = None) -> int:
         extra_conf={"spark.sql.session.timeZone": "UTC"},
     )
 
-    scanned = scan_directories(
-        spark, args.root, recursive=args.recursive, max_depth=args.max_depth
+    directories = scan_directories(
+        args.root, recursive=args.recursive, max_depth=args.max_depth
     )
-    directories = [r.path for r in scanned.collect()]
 
     # Ignore-list filter at scan time with side collection, matching
     # analyzer.rs:115-126 (recursive branch only, as in the reference;
@@ -159,16 +171,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.recursive and config.ignored_repositories:
         ignore = set(config.ignored_repositories)
         ignored = sorted(
-            os.path.basename(d.rstrip("/"))
-            for d in directories
-            if os.path.basename(d.rstrip("/")) in ignore
+            {os.path.basename(d.rstrip("/")) for d in directories} & ignore
         )
         directories = [
             d for d in directories if os.path.basename(d.rstrip("/")) not in ignore
         ]
-        scanned = spark.createDataFrame(
-            [(d,) for d in directories] or [], "path string"
-        )
 
     with tempfile.TemporaryDirectory(prefix="gitlog_dump_") as dump_dir:
         with ThreadPoolExecutor(max_workers=max(args.num_threads, 1)) as pool:
@@ -178,9 +185,9 @@ def main(argv: list[str] | None = None) -> int:
                     enumerate(directories),
                 )
             )
-        repos_meta_rows = sorted({r for r in dumped if r is not None})
+        dumps = [(str(i), *r) for i, r in enumerate(dumped) if r is not None]
 
-        if not repos_meta_rows:
+        if not dumps:
             if args.clear:
                 # Reference parity: truncation happens during prepare,
                 # before scanning (analyzer.rs:190-194) — an empty scan
@@ -199,8 +206,14 @@ def main(argv: list[str] | None = None) -> int:
                 print("\n".join(directories))
             return 0
 
-        repos_meta = spark.createDataFrame(repos_meta_rows, "name string, url string")
-        commits = parse_git_log(spark, f"{dump_dir}/*/*.log")
+        # Every ignored name was dropped at scan time (or the list is
+        # stripped below), so the analyzed names are the dumped ones.
+        analyzed = sorted({name for _, name, _ in dumps})
+        # The dump results and the path listing are Arrow LocalRelations:
+        # the jobs that read them then run without Python workers.
+        repos_meta = local_frame(spark, dumps, "dump string, name string, url string")
+        scanned = local_frame(spark, [(d,) for d in directories], "path string")
+        commits = _named_by_dump(parse_git_log(spark, dump_dir), repos_meta)
         # Reference parity (analyzer.rs:108-131): the ignore list applies
         # only to the recursive scan — a non-recursive run analyzes the
         # root even when its name is listed, so strip the list before the
@@ -231,8 +244,6 @@ def main(argv: list[str] | None = None) -> int:
                 result.changed_files,
                 clear=args.clear,
             )
-            analyzed = [r.name for r in result.repositories.orderBy("name").collect()]
-            ignored = sorted({*ignored, *(r.name for r in result.ignored.collect())})
             skipped = sorted(r.path for r in result.skipped.collect())
         finally:
             commits.unpersist()

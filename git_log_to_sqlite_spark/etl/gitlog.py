@@ -28,34 +28,49 @@ Reference semantics reproduced (file:line in /root/reference):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.core import commit_summary, with_author_sentinels, zero_oid_parent
+from ..functions.core import (
+    commit_summary,
+    sql_string,
+    with_author_sentinels,
+    zero_oid_parent,
+)
 
 # One numstat line: "<ins>\t<del>\t<path>" where ins/del are digits or
 # "-" for binary files.
-_NUMSTAT_RE = r"^(\d+|-)\t(\d+|-)\t(.+)$"
+_NUMSTAT = sql_string(r"^(\d+|-)\t(\d+|-)\t(.+)$")
 
 RECORD_SEP = "\x01"
 FIELD_SEP = "\x02"
 
+_LF = sql_string("\n")
+_CRLF = sql_string("\r\n")
+_REPO_FROM_FILE = sql_string(r"([^/]+?)(\.(log|txt))?$")
+_RENAME_BRACE = sql_string(r"\{[^{}]*? => ([^{}]*?)\}")
 
-def _numstat_lines(block: Column) -> Column:
+
+def _numstat_lines(block: str) -> str:
     """All numstat lines of a commit block (skips the header line and
     blank separator lines)."""
-    lines = F.split(block, "\n")
-    body = F.slice(lines, 2, F.greatest(F.size(lines) - 1, F.lit(0)))
-    return F.filter(body, lambda line: line.rlike(_NUMSTAT_RE))
+    lines = f"split({block}, {_LF})"
+    body = f"slice({lines}, 2, greatest(size({lines}) - 1, 0))"
+    return f"filter({body}, line -> line RLIKE {_NUMSTAT})"
 
 
-def _count_from(line: Column, group: int) -> Column:
+def _count_from(line: str, group: int) -> str:
     """Numstat count field -> long; binary-file '-' contributes 0."""
-    raw = F.regexp_extract(line, _NUMSTAT_RE, group)
-    return F.when(raw == "-", F.lit(0)).otherwise(raw.cast("long"))
+    raw = f"regexp_extract({line}, {_NUMSTAT}, {group})"
+    return f"CASE WHEN {raw} = '-' THEN 0 ELSE CAST({raw} AS BIGINT) END"
 
 
-def _rename_new_path(path: Column) -> Column:
+def _sum_counts(numstat: str, group: int) -> str:
+    """Per-commit sum of one numstat count field."""
+    count = _count_from("line", group)
+    return f"aggregate({numstat}, CAST(0 AS BIGINT), (acc, line) -> acc + {count})"
+
+
+def _rename_new_path(path: str) -> str:
     """Keep the NEW side of a rename, matching the reference's use of
     the delta's new_file path (repository.rs:149-152).
 
@@ -64,11 +79,12 @@ def _rename_new_path(path: Column) -> Column:
         (empty sides collapse the doubled slash)
       * plain form   ``old.txt => new.txt``         -> ``new.txt``
     """
-    debraced = F.regexp_replace(path, r"\{[^{}]*? => ([^{}]*?)\}", r"$1")
-    collapsed = F.regexp_replace(debraced, r"//+", "/")
-    return F.when(
-        collapsed.rlike(r" => "), F.regexp_extract(collapsed, r" => (.*)$", 1)
-    ).otherwise(collapsed)
+    debraced = f"regexp_replace({path}, {_RENAME_BRACE}, '$1')"
+    collapsed = f"regexp_replace({debraced}, '//+', '/')"
+    return (
+        f"CASE WHEN {collapsed} RLIKE ' => ' "
+        f"THEN regexp_extract({collapsed}, ' => (.*)$', 1) ELSE {collapsed} END"
+    )
 
 
 def parse_git_log(
@@ -83,8 +99,8 @@ def parse_git_log(
     array; explode happens in the load stage, like the reference's
     normalization at analyzer.rs:337-343).
     """
-    raw = spark.read.text(path, wholetext=True).withColumn(
-        "_file", F.input_file_name()
+    raw = spark.read.text(path, wholetext=True).selectExpr(
+        "value", "input_file_name() AS _file"
     )
     return parse_raw_logs(raw, repository_from_filename)
 
@@ -103,85 +119,59 @@ def read_gitlog_stream(
         spark.readStream.option("wholetext", "true")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .text(path)
-        .withColumn("_file", F.input_file_name())
+        .selectExpr("value", "input_file_name() AS _file")
     )
     return parse_raw_logs(raw, repository_from_filename=True)
 
 
 def parse_raw_logs(raw: DataFrame, repository_from_filename: bool = True) -> DataFrame:
     """Shared batch/stream parse: (value, _file) rows -> commit rows.
-    All transformations are stateless Column expressions, so the same
-    plan serves ``spark.read`` and ``spark.readStream`` inputs."""
+    All transformations are stateless SQL expressions, one
+    ``selectExpr``/``where`` per stage, so the same plan serves
+    ``spark.read`` and ``spark.readStream`` inputs and each stage parses
+    JVM-side in one call."""
     repository = (
-        F.regexp_extract(F.col("_file"), r"([^/]+?)(\.(log|txt))?$", 1)
-        if repository_from_filename
-        else F.lit("")
+        f"regexp_extract(_file, {_REPO_FROM_FILE}, 1)" if repository_from_filename else "''"
     )
-
     blocks = (
-        raw.select(
-            repository.alias("repository"),
-            F.explode(F.split(F.col("value"), RECORD_SEP)).alias("block"),
+        raw.selectExpr(
+            f"{repository} AS repository",
+            f"explode(split(value, {sql_string(RECORD_SEP)})) AS block",
         )
-        .withColumn("block", F.regexp_replace(F.col("block"), "\r\n", "\n"))
-        .filter(F.trim(F.col("block")) != "")
+        .selectExpr("repository", f"regexp_replace(block, {_CRLF}, {_LF}) AS block")
+        .where("trim(block) != ''")
     )
 
-    header = F.split(F.split_part(F.col("block"), F.lit("\n"), F.lit(1)), FIELD_SEP)
-    parents = F.filter(
-        F.split(F.trim(header.getItem(1)), " "), lambda p: p != F.lit("")
-    )
-    numstat = _numstat_lines(F.col("block"))
-
-    parsed = blocks.select(
+    header = f"split(split_part(block, {_LF}, 1), {sql_string(FIELD_SEP)})"
+    parsed = blocks.selectExpr(
         "repository",
-        F.trim(header.getItem(0)).alias("commit_hash"),
-        parents.alias("parents"),
-        header.getItem(2).alias("raw_author_name"),
-        header.getItem(3).alias("raw_author_email"),
-        header.getItem(4).cast("long").alias("commit_epoch"),
-        header.getItem(5).alias("raw_message"),
-        numstat.alias("numstat"),
+        f"trim({header}[0]) AS commit_hash",
+        f"filter(split(trim({header}[1]), ' '), p -> p != '') AS parents",
+        f"{header}[2] AS raw_author_name",
+        f"{header}[3] AS raw_author_email",
+        f"CAST({header}[4] AS BIGINT) AS commit_epoch",
+        f"{header}[5] AS raw_message",
+        f"{_numstat_lines('block')} AS numstat",
+    ).where(
+        # Error-tolerant filters (R8/R10 equivalents): malformed blocks ->
+        # dropped, like the reference's filter_map(ok) at repository.rs:109-111.
+        "commit_hash RLIKE '^[0-9a-f]{7,40}$' AND commit_epoch IS NOT NULL"
+        # Merge exclusion — the tool's defining predicate (repository.rs:112).
+        " AND size(parents) < 2"
     )
 
-    # Error-tolerant filters (R8/R10 equivalents): malformed blocks ->
-    # dropped, like the reference's filter_map(ok) at repository.rs:109-111.
-    parsed = parsed.filter(
-        F.col("commit_hash").rlike(r"^[0-9a-f]{7,40}$")
-        & F.col("commit_epoch").isNotNull()
-    )
-
-    # Merge exclusion — the tool's defining predicate (repository.rs:112).
-    parsed = parsed.filter(F.size("parents") < 2)
-
-    author_name, author_email = with_author_sentinels(
-        F.col("raw_author_name"), F.col("raw_author_email")
-    )
-    insertions = F.aggregate(
-        F.col("numstat"),
-        F.lit(0).cast("long"),
-        lambda acc, line: acc + _count_from(line, 1),
-    )
-    deletions = F.aggregate(
-        F.col("numstat"),
-        F.lit(0).cast("long"),
-        lambda acc, line: acc + _count_from(line, 2),
-    )
-    changed_files = F.transform(
-        F.col("numstat"),
-        lambda line: _rename_new_path(F.regexp_extract(line, _NUMSTAT_RE, 3)),
-    )
-
-    return parsed.select(
-        F.col("commit_hash"),
-        zero_oid_parent(F.get(F.col("parents"), 0)).alias("parent_hash"),
-        author_name.alias("author_name"),
-        author_email.alias("author_email"),
-        commit_summary(F.col("raw_message")).alias("message"),
-        F.col("commit_epoch"),
-        F.to_timestamp(F.from_unixtime(F.col("commit_epoch"))).alias("commit_ts"),
-        insertions.alias("insertions"),
-        deletions.alias("deletions"),
-        F.col("repository"),
-        changed_files.alias("changed_files"),
+    author_name, author_email = with_author_sentinels("raw_author_name", "raw_author_email")
+    changed_file = _rename_new_path(f"regexp_extract(line, {_NUMSTAT}, 3)")
+    return parsed.selectExpr(
+        "commit_hash",
+        f"{zero_oid_parent('get(parents, 0)')} AS parent_hash",
+        f"{author_name} AS author_name",
+        f"{author_email} AS author_email",
+        f"{commit_summary('raw_message')} AS message",
+        "commit_epoch",
+        "to_timestamp(from_unixtime(commit_epoch)) AS commit_ts",
+        f"{_sum_counts('numstat', 1)} AS insertions",
+        f"{_sum_counts('numstat', 2)} AS deletions",
+        "repository",
+        f"transform(numstat, line -> {changed_file}) AS changed_files",
     )

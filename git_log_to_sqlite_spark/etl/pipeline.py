@@ -13,6 +13,7 @@ correlated SQLite subquery per row, analyzer.rs:322).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -77,7 +78,7 @@ def build_repositories(repos_meta: DataFrame) -> DataFrame:
         .select(
             F.row_number().over(w).cast("long").alias("id"),
             F.col("name"),
-            normalize_remote_url(F.col("url")).alias("url"),
+            F.expr(normalize_remote_url("url")).alias("url"),
         )
     )
 
@@ -124,9 +125,11 @@ def build_changed_files(commits: DataFrame) -> DataFrame:
 
 def build_skipped(scanned_dirs: DataFrame, repositories: DataFrame) -> DataFrame:
     """R25: directories whose basename is not among analyzed repo names
-    — left anti-join (analyzer.rs:255-263)."""
+    — left anti-join (analyzer.rs:255-263). The basename ignores any run
+    of trailing slashes, the rule the CLI names its dumps by
+    (``basename(path.rstrip("/"))``)."""
     names = F.broadcast(repositories.select("name"))
-    basename = F.regexp_extract(F.col("path"), r"([^/]+)/?$", 1)
+    basename = F.regexp_extract(F.col("path"), r"([^/]+)/*$", 1)
     return (
         scanned_dirs.withColumn("_name", basename)
         .join(names, F.col("_name") == names["name"], "left_anti")
@@ -142,7 +145,8 @@ def run_pipeline(
     config: Config | None = None,
 ) -> EtlResult:
     """Full load stage. ``commits`` is the parse_git_log output;
-    ``repos_meta`` has (name, url); ``scanned_dirs`` has (path)."""
+    ``repos_meta`` has (name, url) — further columns are ignored;
+    ``scanned_dirs`` has (path)."""
     config = config or Config()
 
     # R5: ignored-repositories filter with side collection of matches.
@@ -173,27 +177,23 @@ def run_pipeline(
     )
 
 
-def scan_directories(
-    spark: SparkSession, root: str, recursive: bool = True, max_depth: int = 1
-) -> DataFrame:
-    """R1-R4: enumerate candidate repository directories.
+def scan_directories(root: str, recursive: bool = True, max_depth: int = 1) -> list[str]:
+    """R1-R4: enumerate candidate repository directories, sorted.
 
-    Driver-side listing (the reference walks the filesystem on the
-    driver too, analyzer.rs:102-135); the result is a small DataFrame —
-    repo *contents* are the big data, not the directory list.
+    A plain in-process filesystem walk, as in the reference
+    (analyzer.rs:102-135): repo *contents* are the big data, not the
+    directory list, so callers that need it as a DataFrame build one
+    with ``session.local_frame``.
     """
-    import os
-
     if not recursive:
-        dirs = [root]
-    else:
-        dirs = []
-        base_depth = root.rstrip("/").count("/")
-        for cur, subdirs, _files in os.walk(root):
-            depth = cur.rstrip("/").count("/") - base_depth
-            subdirs[:] = [d for d in subdirs if d != ".git"]  # R4
-            if depth >= max_depth:
-                subdirs[:] = []
-            if cur != root and depth <= max_depth:  # R2 skip root
-                dirs.append(cur)
-    return spark.createDataFrame([(d,) for d in sorted(dirs)] or [], "path string")
+        return [root]
+    dirs = []
+    base_depth = root.rstrip("/").count("/")
+    for cur, subdirs, _files in os.walk(root):
+        depth = cur.rstrip("/").count("/") - base_depth
+        subdirs[:] = [d for d in subdirs if d != ".git"]  # R4
+        if depth >= max_depth:
+            subdirs[:] = []
+        if cur != root and depth <= max_depth:  # R2 skip root
+            dirs.append(cur)
+    return sorted(dirs)

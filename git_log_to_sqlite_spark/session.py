@@ -139,9 +139,10 @@ def local_frame(spark: SparkSession, rows, schema):
     measured twice on this box: the round-13 centroid write (8 rows:
     0.57-1.7 s tuple-list vs 0.25-0.31 s Arrow) and the round-14
     broadcast-dim probe (4-row bands join at sf0.01: 0.401 s vs
-    0.212 s min-of-5, BASELINE.md).  Use for every small dim/model
-    frame on a TIMED or gated path; plain tuple-list remains fine for
-    one-shot setup (CLI report tables, test fixtures).
+    0.212 s min-of-5, BASELINE.md).  Use for every small in-process
+    frame on a timed, gated or user-facing path — dims, model state,
+    the CLI's directory listing and dump results; plain tuple-list
+    remains fine for test fixtures.
 
     ``rows`` is a list of tuples in ``schema`` column order; ``schema``
     is a DDL string or a StructType.  The explicit schema keeps types

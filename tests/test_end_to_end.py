@@ -9,6 +9,8 @@ the materialized tables rather than the driver's fixtures.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 from pyspark.sql import Window
@@ -18,6 +20,10 @@ from git_log_to_sqlite_spark.etl import parse_git_log, run_pipeline
 from git_log_to_sqlite_spark.etl.writers import write_parquet
 
 from .fixtures import write_fixture_logs
+
+# The checkout these tests belong to: CLI subprocesses import the
+# package from here, whichever directory pytest was started in.
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 @pytest.fixture(scope="module")
@@ -159,7 +165,7 @@ def test_cli_end_to_end_subprocess(tmp_path):
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     out = proc.stdout
@@ -227,10 +233,88 @@ def test_cli_duplicate_basename_repos_lose_no_commits(tmp_path):
             "--recursive", "--max-depth", "2",
             "--database", str(db), "--num-threads", "4",
         ),
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     con = sqlite3.connect(db)
     assert con.execute("SELECT COUNT(*) FROM repositories").fetchone()[0] == 1
     assert con.execute("SELECT COUNT(*) FROM logs").fetchone()[0] == 5
     con.close()
+
+
+def _repo_with_commit(path):
+    path.mkdir(parents=True)
+    _git(path, "init", "-q")
+    (path / "f.txt").write_text(f"{path.name}\n")
+    _git(path, "add", "f.txt")
+    _git(path, "commit", "-q", "-m", "add f.txt")
+
+
+def _cli(spark, *argv):
+    """Run the CLI's ``main`` in this process, on the test session.
+    ``-n`` is the session's own shuffle-partition count, so the settings
+    the CLI applies leave the shared session as it found them."""
+    from git_log_to_sqlite_spark.__main__ import main
+
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert main([*argv, "--num-threads", n]) == 0
+
+
+def test_cli_repo_names_spark_would_skip_or_encode(spark, tmp_path, capsys):
+    """Names Spark's file source treats specially — hidden (``.dot``,
+    ``_priv``) or URL-encoded by ``input_file_name()`` (``br[1]``) —
+    still get their commits, each linked to its repository row."""
+    import sqlite3
+
+    names = (".dot", "_priv", "br[1]", "plain")
+    for name in names:
+        _repo_with_commit(tmp_path / "root" / name)
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(db))
+
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute(
+            "SELECT r.name, l.repository_id FROM logs l "
+            "LEFT JOIN repositories r ON l.repository_id = r.id"
+        ).fetchall()
+    finally:
+        con.close()
+    assert len(rows) == len(names)  # one commit per repository
+    assert all(repository_id is not None for _, repository_id in rows), rows
+    assert sorted(name for name, _ in rows) == sorted(names)
+    assert f"# 4 repositories in the table\n\n{', '.join(sorted(names))}\n" in (
+        capsys.readouterr().out
+    )
+
+
+def test_cli_root_with_trailing_slashes_is_analyzed_not_skipped(spark, tmp_path, capsys):
+    """Non-recursive run on ``proj//``: the root is analyzed and not also
+    reported as a skipped directory."""
+    _repo_with_commit(tmp_path / "proj")
+    _cli(spark, f"{tmp_path / 'proj'}//", "--database", str(tmp_path / "out.db"))
+    out = capsys.readouterr().out
+    assert "# 1 repositories in the table\n\nproj\n" in out
+    assert "not stored" not in out
+
+
+def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, monkeypatch):
+    """Cost guard: the scanned-path and repository frames the CLI hands
+    to ``run_pipeline`` are Arrow ``LocalRelation``s — a tuple-list
+    frame (``LogicalRDD``) makes every job that reads it start Python
+    workers."""
+    from git_log_to_sqlite_spark.etl import pipeline
+
+    seen = {}
+    real = pipeline.run_pipeline
+
+    def capture(spark_, commits, repos_meta, scanned_dirs=None, config=None):
+        seen.update(repos_meta=repos_meta, scanned_dirs=scanned_dirs)
+        return real(spark_, commits, repos_meta, scanned_dirs, config)
+
+    monkeypatch.setattr(pipeline, "run_pipeline", capture)
+    _repo_with_commit(tmp_path / "root" / "proj")
+    (tmp_path / "root" / "not_a_repo").mkdir()
+    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(tmp_path / "o.db"))
+    for name, df in seen.items():
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name

@@ -115,6 +115,44 @@ def test_skipped_and_ignored_side_outputs(etl):
     assert ignored == {"ignored-repo"}
 
 
+def test_skipped_basename_ignores_trailing_slash_runs(spark, etl):
+    """A scanned path ending in any run of slashes names the repository
+    its basename names (``proj//`` is ``proj``), so it is analyzed and
+    not also reported as skipped."""
+    from git_log_to_sqlite_spark.session import local_frame
+
+    repos_meta = local_frame(spark, FX.REPOS_META, "name string, url string")
+    dirs = local_frame(
+        spark, [("/tmp/scan/alpha//",), ("/tmp/scan/beta/",), ("/tmp/scan/gone//",)], "path string"
+    )
+    res = run_pipeline(spark, etl.commits, repos_meta, scanned_dirs=dirs)
+    assert {r["path"] for r in res.skipped.collect()} == {"/tmp/scan/gone//"}
+
+
+def test_parse_raw_logs_construction_py4j_calls(spark, monkeypatch):
+    """Cost guard: building the parse plan is a handful of JVM-side SQL
+    parses, not one py4j round trip per Column node (the Column-API form
+    made about 2,000 calls)."""
+    import gc
+
+    from git_log_to_sqlite_spark.etl import parse_raw_logs
+
+    raw = spark.createDataFrame([(FX.ALPHA_LOG, "/logs/alpha.log")], "value string, _file string")
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(client, "send_command", counted)
+    parsed = parse_raw_logs(raw)
+    monkeypatch.undo()
+    assert len(calls) <= 100, len(calls)
+    assert parsed.columns[0] == "commit_hash"
+
+
 def test_sqlite_parity_sink(etl, tmp_path):
     db = tmp_path / "out.sqlite"
     write_sqlite(str(db), etl.repositories, etl.logs, etl.changed_files)
