@@ -139,6 +139,14 @@ def write_sqlite(
     analyzer.rs:327).  Batched executemany over ``toLocalIterator``:
     constant driver memory, one transaction per batch (the reference
     batches one transaction per repository, analyzer.rs:305-346).
+
+    Writing into a populated database without ``clear`` appends, as
+    the reference's AUTOINCREMENT ids do: a stored repository name
+    keeps its id, new names take ids after the stored maximum (and
+    ``logs.repository_id`` follows), new ``changed_files`` ids start
+    after the stored maximum, and a re-written commit's earlier
+    ``changed_files`` rows are replaced.  On an empty database the
+    frames' own ids are written unchanged.
     """
     con = sqlite3.connect(db_path)
     try:
@@ -147,10 +155,35 @@ def write_sqlite(
         if clear:  # R23 (analyzer.rs:190-194)
             for table in ("changed_files", "logs", "repositories"):
                 con.execute(f"DELETE FROM {table}")
+        stored = dict(con.execute("SELECT name, id FROM repositories"))
+        (file_offset,) = con.execute(
+            "SELECT coalesce(max(id), 0) FROM changed_files"
+        ).fetchone()
+        repo_rows = repositories.select("id", "name", "url")
+        log_rows = logs.select(
+            "commit_hash",
+            "author_name",
+            "author_email",
+            "message",
+            "commit_epoch",
+            "insertions",
+            "deletions",
+            "repository_id",
+            "parent_hash",
+        )
+        if stored:
+            # repositories is a bounded dimension: remap it on the driver
+            repo_rows = repo_rows.collect()
+            repo_id = _appended_ids(stored, repo_rows)
+            repo_rows = [(repo_id[i], name, url) for i, name, url in repo_rows]
+            log_rows = (
+                (*row[:7], repo_id.get(row[7]), row[8])
+                for row in log_rows.toLocalIterator()
+            )
         _insert_stream(
             con,
             "INSERT OR REPLACE INTO repositories (id, name, url) VALUES (?, ?, ?)",
-            repositories.select("id", "name", "url"),
+            repo_rows,
             batch_size,
         )
         _insert_stream(
@@ -158,34 +191,58 @@ def write_sqlite(
             "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
             " message, commit_datetime, insertions, deletions, repository_id,"
             " parent_hash) VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-            logs.select(
-                "commit_hash",
-                "author_name",
-                "author_email",
-                "message",
-                "commit_epoch",
-                "insertions",
-                "deletions",
-                "repository_id",
-                "parent_hash",
-            ),
+            log_rows,
             batch_size,
         )
+        file_rows = changed_files.select("id", "commit_hash", "file_path")
+        if file_offset:
+            file_rows = (
+                (i + file_offset, h, p) for i, h, p in file_rows.toLocalIterator()
+            )
         _insert_stream(
             con,
             "INSERT OR REPLACE INTO changed_files (id, commit_hash, file_path)"
             " VALUES (?, ?, ?)",
-            changed_files.select("id", "commit_hash", "file_path"),
+            file_rows,
             batch_size,
         )
+        if file_offset:
+            # A commit's file list is a function of its hash, so the
+            # commits written now are the ones with rows above the offset.
+            con.execute(
+                "DELETE FROM changed_files WHERE id <= ? AND commit_hash IN"
+                " (SELECT commit_hash FROM changed_files WHERE id > ?)",
+                (file_offset, file_offset),
+            )
         con.commit()
     finally:
         con.close()
 
 
-def _insert_stream(con: sqlite3.Connection, sql: str, df: DataFrame, batch_size: int) -> None:
+def _appended_ids(stored: dict[str, int], rows: list) -> dict[int, int]:
+    """Frame repository id -> database id: a stored name keeps its id,
+    new names are numbered after the stored maximum in frame-id order."""
+    by_name = dict(stored)
+    next_id = max(stored.values())
+    ids = {}
+    for rid, name, _url in sorted(rows, key=lambda r: r[0]):
+        if name not in by_name:
+            next_id += 1
+            by_name[name] = next_id
+        ids[rid] = by_name[name]
+    return ids
+
+
+def _insert_stream(
+    con: sqlite3.Connection,
+    sql: str,
+    rows: "DataFrame | Iterable[tuple]",
+    batch_size: int,
+) -> None:
+    if isinstance(rows, DataFrame):
+        rows = rows.toLocalIterator()
     batch: list[tuple] = []
-    for row in df.toLocalIterator():
+    for row in rows:
         batch.append(tuple(row))
         if len(batch) >= batch_size:
             con.executemany(sql, batch)

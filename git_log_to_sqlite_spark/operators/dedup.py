@@ -18,10 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .caching import pin
-from .skew import _quantile_cap  # noqa: F401 — re-export; see note at
-# the round-14 relocation comment (the shared quantile statistic moved
-# to skew so skew no longer imports dedup; this direction is cycle-free
-# because skew's remaining dedup references are docstring-only)
+from .skew import _quantile_cap
 
 if TYPE_CHECKING:
     from pyspark.sql import Observation
@@ -449,59 +446,16 @@ def _capped_bands(
     return bands.join(hot, ["band", "band_key"], "left_anti")
 
 
-def _validate_salting(salt_buckets: int, salt_min_bucket: int | None) -> None:
-    """Salt-argument validation shared by every band-join entry point
-    — called BEFORE any pin (the :func:`_validate_band_caps` rule) and
-    again by :func:`_band_self_pairs` for direct callers. Delegates to
-    the one shared validator (:func:`~.skew._validate_pair_salting`)
-    in this family's parameter vocabulary."""
-    from .skew import _validate_pair_salting
-
-    _validate_pair_salting(salt_buckets, salt_min_bucket, "salt_min_bucket")
-
-
-def _band_self_pairs(
-    bands: DataFrame,
-    id_col: str,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
-) -> DataFrame:
+def _band_self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     """Candidate ``(id_a, id_b)`` pairs from an (id, band, band_key)
     table: self-join on the bucket key with ``id_a < id_b``, distinct
     across bands — the ONE band self-join both LSH families share
     (minhash band keys via :func:`minhash_lsh_pairs`, simhash /
-    perceptual bit slices via :func:`hamming_pairs`; previously two
-    identical inline copies). Sides are column-renamed projections,
-    not aliases: an alias does not survive the salting branch's
-    ``withColumn``/``repartition``, renamed columns do.
-
-    ``salt_buckets > 1`` engages :func:`~.skew.salted_pair_sides` —
-    the recall-PRESERVING arm against a hot bucket, complementing the
-    :func:`_capped_bands` valve's recall-shedding drop: a degenerate
-    bucket with d members is ONE join key, so one task pays its
-    d(d-1)/2 pairs serially; salting spreads that work over S tasks
-    with row-identical output (every pair still meets exactly once,
-    at a's salt — the ``distinct`` across bands is unaffected because
-    salting never duplicates a (band, pair) meeting). Default 1 keeps
-    the gated plans' join shape unchanged. Arm it when the valve's
-    telemetry reports hot buckets the caller cannot afford to DROP
-    (e.g. fuzzy decontamination, where the docstring voids the recall
-    guarantee under any cap).
-
-    ``salt_min_bucket`` makes the salt TARGETED — the production form
-    at corpus scale: only buckets with >= that many members are
-    salted/replicated (derived by the valve's own
-    :func:`_hot_key_set` count, map-combinable and skew-free), every
-    other bucket's shuffle volume is unchanged. Without it the whole
-    b-side replicates S ways — fine at probe scale, a non-starter on
-    a corpus-sized bands table, and measured on this box to overtake
-    its own win as S grows (BASELINE.md's hot-band probe). Note the
-    regime: at small corpus the unsalted join broadcast-converts and
-    the stream side rides the signature groupBy's id partitioning —
-    already parallel, salting only adds cost; the knob is for the
-    at-scale SMJ regime where the bucket key IS the shuffle key and
-    one hot bucket is one task."""
-    _validate_salting(salt_buckets, salt_min_bucket)
+    perceptual bit slices via :func:`hamming_pairs`). Sides are
+    column-renamed projections, so the join condition names each side
+    unambiguously. A hot bucket with d members emits d(d-1)/2 pairs on
+    one join key; the defence is the :func:`_capped_bands` valve
+    upstream and AQE's skew-join split."""
     a = bands.select(
         F.col("band").alias("_band_a"),
         F.col("band_key").alias("_bk_a"),
@@ -517,33 +471,6 @@ def _band_self_pairs(
         & (F.col("_bk_a") == F.col("_bk_b"))
         & (F.col("id_a") < F.col("id_b"))
     )
-    if salt_buckets > 1:
-        from .skew import salted_pair_sides
-
-        hot_a = hot_b = None
-        if salt_min_bucket is not None:
-            hot = _hot_key_set(
-                bands, ["band", "band_key"], salt_min_bucket - 1, None
-            )
-            hot_a = hot.select(
-                F.col("band").alias("_band_a"),
-                F.col("band_key").alias("_bk_a"),
-            )
-            hot_b = hot.select(
-                F.col("band").alias("_band_b"),
-                F.col("band_key").alias("_bk_b"),
-            )
-        a, b, salt_cond = salted_pair_sides(
-            a,
-            b,
-            ["_band_a", "_bk_a"],
-            ["_band_b", "_bk_b"],
-            "id_a",
-            salt_buckets,
-            hot_a=hot_a,
-            hot_b=hot_b,
-        )
-        pair_cond = pair_cond & salt_cond
     return a.join(b, pair_cond).select("id_a", "id_b").distinct()
 
 
@@ -552,86 +479,20 @@ def _band_probe_pairs(
     bands_c: DataFrame,
     p_ids: list[str],
     c_ids: list[str],
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from a probe-bands x corpus-bands equi-join on
     (band, band_key) — the PROBE-shaped twin of
     :func:`_band_self_pairs`, shared by :func:`hamming_probe` and
-    :func:`incremental_minhash_dedup` (previously two inline copies).
-    Returns ``(*p_ids, *c_ids)`` distinct.
-
-    ``salt_buckets > 1`` is the same recall-preserving hot-bucket arm,
-    with the sides chosen for the probe shape's asymmetry: the CORPUS
-    side (100 TB of history/train — the big one) takes the
-    deterministic per-row salt, and the PROBE side (a daily increment,
-    an eval suite — the small one) replicates S ways, so the
-    replication price lands on the side that can afford it. A hot
-    bucket's |probe bucket| x |corpus bucket| candidate product — one
-    join key, one task, and invisible to AQE's byte-based sizing
-    because the explosion is downstream of the shuffle read — spreads
-    over S tasks with row-identical output (each (p, c) match meets
-    exactly once, at c's salt). ``salt_min_bucket`` targets the salt
-    at corpus buckets >= that size (hotness measured on the CORPUS
-    side, matching the probe-shape valve's ``join_shape='probe'``
-    counting); everything below keeps salt 0 and its shuffle volume
-    unchanged. This is the arm :func:`fuzzy_decontaminate` can
-    actually use: its docstring forbids the capping valve (a capped
-    train bucket is a silent false negative), and salting preserves
-    the pigeonhole recall guarantee by construction.
-
-    Arming precondition (the round-13 regime law, BASELINE.md): the
-    single-key serialization this arm fixes only EXISTS when the
-    join shuffles. A probe side small enough to broadcast gives a
-    BroadcastHashJoin, which parallelizes a hot bucket's product
-    over the corpus side's input splits — no hot task, nothing to
-    salt, and arming (whose co-partition pin forces the shuffled
-    join) can only lose. Arm for backfill-scale probes; never for a
-    broadcastable daily increment."""
-    _validate_salting(salt_buckets, salt_min_bucket)
-    if salt_buckets <= 1:
-        return (
-            bands_p.join(bands_c, ["band", "band_key"])
-            .select(*p_ids, *c_ids)
-            .distinct()
-        )
-    from .skew import salted_pair_sides
-
-    a = bands_c.select(
-        F.col("band").alias("_band_c"),
-        F.col("band_key").alias("_bk_c"),
-        *c_ids,
+    :func:`incremental_minhash_dedup`. Returns ``(*p_ids, *c_ids)``
+    distinct: every (probe, corpus) pair that shares at least one
+    bucket, once. A probe side small enough to broadcast gives a
+    BroadcastHashJoin, which parallelizes a hot bucket's product over
+    the corpus side's input splits."""
+    return (
+        bands_p.join(bands_c, ["band", "band_key"])
+        .select(*p_ids, *c_ids)
+        .distinct()
     )
-    b = bands_p.select(
-        F.col("band").alias("_band_p"),
-        F.col("band_key").alias("_bk_p"),
-        *p_ids,
-    )
-    pair_cond = (F.col("_band_c") == F.col("_band_p")) & (
-        F.col("_bk_c") == F.col("_bk_p")
-    )
-    hot_a = hot_b = None
-    if salt_min_bucket is not None:
-        hot = _hot_key_set(
-            bands_c, ["band", "band_key"], salt_min_bucket - 1, None
-        )
-        hot_a = hot.select(
-            F.col("band").alias("_band_c"), F.col("band_key").alias("_bk_c")
-        )
-        hot_b = hot.select(
-            F.col("band").alias("_band_p"), F.col("band_key").alias("_bk_p")
-        )
-    a, b, salt_cond = salted_pair_sides(
-        a,
-        b,
-        ["_band_c", "_bk_c"],
-        ["_band_p", "_bk_p"],
-        list(c_ids),
-        salt_buckets,
-        hot_a=hot_a,
-        hot_b=hot_b,
-    )
-    return a.join(b, pair_cond & salt_cond).select(*p_ids, *c_ids).distinct()
 
 
 def minhash_lsh_pairs(
@@ -645,8 +506,6 @@ def minhash_lsh_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
@@ -663,17 +522,11 @@ def minhash_lsh_pairs(
     one quadratic-risk surface of the band join — are anti-filtered
     before the self-join, bounding candidate mass by cap x buckets.
     Pass an :class:`~pyspark.sql.Observation` to receive
-    ``bands_dropped`` / ``pairs_avoided`` telemetry. ``salt_buckets``
-    is the recall-PRESERVING alternative when a hot bucket must be
-    consumed rather than dropped: the self-join spreads each bucket's
-    pair work over S tasks with row-identical output; add
-    ``salt_min_bucket`` to salt ONLY buckets that size or larger —
-    the bounded-replication production form (:func:`_band_self_pairs`).
+    ``bands_dropped`` / ``pairs_avoided`` telemetry.
     """
     _validate_band_caps(  # before the pin — a bad call must not leak a cache entry
         max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same rule
     # The signature table is referenced 4x downstream (both band-join
     # branches + both agreement joins); without persisting, Spark
     # recomputes the shingle explode + K-way min aggregate per branch.
@@ -687,7 +540,7 @@ def minhash_lsh_pairs(
         observation,
     )
 
-    cand = _band_self_pairs(bands, id_col, salt_buckets, salt_min_bucket)
+    cand = _band_self_pairs(bands, id_col)
     ma = mh.select(
         F.col(id_col).alias("_ida"), *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(num_hashes)]
     )
@@ -708,58 +561,6 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("est_jaccard") >= min_agree)
     )
-
-
-def recommend_salt_min_bucket(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-    quantile: float = 0.92,
-    spread: int = 10,
-    straggler_factor: float = 2.0,
-) -> "int | None":
-    """Derive a recommended ``salt_min_bucket`` for this corpus at
-    these banding parameters, from the band-bucket size distribution
-    the hot-band valve observes (:func:`~.skew.
-    recommend_salt_threshold` — the shared spread + straggler
-    guards). ``None`` means don't arm: every bucket sits near the
-    bulk, or the hottest bucket's pair mass is too light to be the
-    critical path. A non-None value passes verbatim to
-    :func:`minhash_lsh_pairs` ``salt_min_bucket`` at the SAME banding
-    parameters — the recommendation is a property of THIS band-bucket
-    distribution, so it does NOT transfer to :func:`simhash_pairs` /
-    :func:`hamming_pairs`, whose buckets come from signature
-    bit-slices: for those, feed their own band frames
-    (:func:`_sig_bands`) to the core helper with the
-    ``["band", "band_key"]`` keys.
-    Diagnostic-only: no pins, no effect on any subsequent plan — but
-    the convenience costs one corpus pass (the shingle explode + K-way
-    min signature build); at production scale, prefer handing
-    :func:`~.skew.recommend_salt_threshold` the band frame your
-    pipeline already computes instead of re-deriving it here."""
-    from .skew import recommend_salt_threshold
-
-    mh = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    bands = _band_keys(mh, id_col, num_hashes, rows_per_band)
-    return recommend_salt_threshold(
-        bands,
-        ["band", "band_key"],
-        quantile=quantile,
-        spread=spread,
-        straggler_factor=straggler_factor,
-    )
-
-
-# _quantile_cap lives in skew.py since round 14: the recommend helper
-# made the skew <-> dedup cycle load-bearing in both directions (dedup
-# pulled salted_pair_sides, skew pulled _quantile_cap via a
-# function-body import); lifting the shared quantile statistic into
-# skew makes every import point one direction (dedup -> skew).  The
-# module-top re-export keeps dedup._quantile_cap valid for existing
-# callers and docstring references.
 
 
 def ngram_jaccard_pairs(
@@ -1177,8 +978,6 @@ def incremental_substring_spans(
     quantile_headroom: int = 10,
     history_windows: DataFrame | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Passage-level dedup of a daily batch against accumulated
     history — :func:`substring_span_pairs`' production increment
@@ -1215,42 +1014,14 @@ def incremental_substring_spans(
     re-deriving means re-tokenizing history; without a cap the derived
     table is consumed once and a cache would only add write cost.
 
-    ``salt_buckets`` / ``salt_min_bucket`` are the recall-preserving
-    hot-window arm (:func:`~.skew.salted_pair_sides`, the probe
-    shape): a boilerplate window occurring d times in history meets
-    every increment occurrence on ONE join key — capping it sheds
-    real passage matches, salting consumes it over S tasks with
-    row-identical output (history side salted per (id, pos) window
-    row, increment replicated; downstream gaps-and-islands groups on
-    (inc_id, hist_id, diag), so per-salt partials are disjoint pair
-    meetings, never double-counted). ``salt_min_bucket`` targets
-    history windows with >= that many occurrences (counted on the
-    history side, the probe-valve convention). The batch operator
-    (:func:`substring_span_pairs`) deliberately has NO salt arm — its
-    pair stage is a posting-list explode (one ROW per hot window, the
-    jaccard adjudication), not a join.
-
-    The arming regime is the JOIN STRATEGY, not the product size
-    (established round 13, BASELINE.md — resolving the round-12
-    "crossover unmeasured" note): a daily-scale increment broadcasts
-    (the window table sits far under the broadcast threshold), and a
-    BroadcastHashJoin has NO single-key serialization to fix — the
-    hot key's d_hist x d_inc product parallelizes over the HISTORY
-    side's input splits, so the unsalted join stage reads 1.3-2.7 s
-    even at 487M one-key products while arming the salt (whose
-    co-partition pin deliberately forces the shuffled join) can only
-    add overhead: it measured SLOWER at 17M, 152M, AND 487M products
-    in this regime — every earlier "product crossover" probe was
-    unknowingly here, which is why no crossover ever appeared. The
-    serialization the arm exists for is the SMJ/backfill regime —
-    an increment too large to broadcast — where one hot window's
-    sort-merge group IS one task: forced-SMJ at the same 487M shape,
-    the unsalted join stage reads 36-53 s against 7-8 s targeted
-    S=16 (5-7.6x), 152-233 s vs 66-95 s end-to-end. So: arm the salt
-    only when BOTH hold — the increment is backfill-scale (the join
-    would shuffle anyway) and occurrence telemetry shows a hot
-    window; never for a broadcastable daily increment, where the
-    knob trades a parallel BHJ for the SMJ it then has to salt.
+    Hot windows: a daily-scale increment's window table sits far under
+    the broadcast threshold, so the probe join is a BroadcastHashJoin
+    and a boilerplate window's d_hist x d_inc product parallelizes over
+    the history side's input splits. When the increment is too large
+    to broadcast, one hot window is one sort-merge group; bound it with
+    ``max_df`` / ``max_df_quantile`` (which sheds the capped window's
+    matches, reported in the telemetry) or rely on AQE's skew-join
+    split.
     """
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
@@ -1260,7 +1031,6 @@ def incremental_substring_spans(
             "a shorter run has no complete window and cannot be observed"
         )
     _validate_df_caps(max_df, max_df_quantile, observation)
-    _validate_salting(salt_buckets, salt_min_bucket)  # before any pin
     if (history is None) == (history_windows is None):
         raise ValueError("exactly one of history / history_windows is required")
     if history_windows is not None:
@@ -1288,9 +1058,7 @@ def incremental_substring_spans(
             avoided="rows",
         )
         wh = wh.join(hot, "h", "left_anti")
-    # renamed projections, not aliases (an alias does not survive the
-    # salting branch's withColumn/repartition — the _band_self_pairs
-    # rule); history = corpus side (salted), increment = probe side
+    # renamed projections: history = corpus side, increment = probe side
     a = wh.select(
         F.col("h").alias("_h_h"),
         F.col("_id").alias("_hid"),
@@ -1301,21 +1069,7 @@ def incremental_substring_spans(
         F.col("_id").alias("_iid"),
         F.col("pos").alias("_ipos"),
     )
-    pair_cond = F.col("_h_i") == F.col("_h_h")
-    if salt_buckets > 1:
-        from .skew import salted_pair_sides
-
-        hot_a = hot_b = None
-        if salt_min_bucket is not None:
-            hot = _hot_key_set(wh, ["h"], salt_min_bucket - 1, None)
-            hot_a = hot.select(F.col("h").alias("_h_h"))
-            hot_b = hot.select(F.col("h").alias("_h_i"))
-        a, b, salt_cond = salted_pair_sides(
-            a, b, ["_h_h"], ["_h_i"], ["_hid", "_hpos"], salt_buckets,
-            hot_a=hot_a, hot_b=hot_b,
-        )
-        pair_cond = pair_cond & salt_cond
-    m = b.join(a, pair_cond).select(
+    m = b.join(a, F.col("_h_i") == F.col("_h_h")).select(
         F.col("_iid").alias("inc_id"),
         F.col("_hid").alias("hist_id"),
         (F.col("_ipos") - F.col("_hpos")).alias("diag"),
@@ -1402,8 +1156,6 @@ def simhash_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via SimHash bit-slice banding — the pair
     stage :func:`simhash`'s docstring promises. Returns ``(id_a, id_b,
@@ -1451,7 +1203,6 @@ def simhash_pairs(
     _validate_banding(
         bits, bands, max_hamming, max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same before-the-pin rule
     sig = pin(simhash(df, id_col, text_col, bits))
     return hamming_pairs(
         sig,
@@ -1463,8 +1214,6 @@ def simhash_pairs(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )
 
 
@@ -1536,8 +1285,6 @@ def hamming_probe(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Probe-shaped Hamming lookup: every (probe row, corpus row) pair
     within ``max_hamming`` bits — the content-ID / lookup twin of
@@ -1561,10 +1308,7 @@ def hamming_probe(
     bucket|, so capping the corpus bucket bounds every key at
     |probe| x cap — and telemetry reports ``rows_dropped``, the
     honest per-side number). Same keyspace-sizing caveat as
-    :func:`simhash_pairs`: size ``bits/bands`` to the CORPUS.
-    ``salt_buckets`` / ``salt_min_bucket`` are the recall-preserving
-    hot-bucket arm for when capping is not acceptable — corpus side
-    salted, probe side replicated (:func:`_band_probe_pairs`)."""
+    :func:`simhash_pairs`: size ``bits/bands`` to the CORPUS."""
     p_ids = [probe_id] if isinstance(probe_id, str) else list(probe_id)
     c_ids = [corpus_id] if isinstance(corpus_id, str) else list(corpus_id)
     clash = set(p_ids) & set(c_ids)
@@ -1575,7 +1319,6 @@ def hamming_probe(
     _validate_banding(
         bits, bands, max_hamming, max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # before the valve's pin
     bands_c = _capped_bands(
         _sig_bands(corpus, c_ids, sig_col, bits, bands),
         max_band_size,
@@ -1584,9 +1327,7 @@ def hamming_probe(
         join_shape="probe",
     )
     bands_p = _sig_bands(probe, p_ids, sig_col, bits, bands)
-    cand = _band_probe_pairs(
-        bands_p, bands_c, p_ids, c_ids, salt_buckets, salt_min_bucket
-    )
+    cand = _band_probe_pairs(bands_p, bands_c, p_ids, c_ids)
     sp = probe.select(
         *[F.col(c) for c in p_ids], F.col(sig_col).alias("_sp")
     )
@@ -1612,8 +1353,6 @@ def hamming_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Pairs within ``max_hamming`` bits over ANY precomputed
     fixed-width signature column — the bit-slice band machinery
@@ -1628,23 +1367,17 @@ def hamming_pairs(
 
     ``sig`` must carry one row per id; signatures are non-negative
     BIGINTs below 2^bits. Returns ``(id_a, id_b, hamming)``.
-    ``salt_buckets`` / ``salt_min_bucket`` are the recall-preserving
-    hot-bucket arm (:func:`_band_self_pairs`) — relevant here above
-    all, because the bit-slice keyspace is BOUNDED
-    (``2^(bits/bands)`` values), so an under-sized slice width
-    concentrates mass in few buckets by construction.
     """
     _validate_banding(
         bits, bands, max_hamming, max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # before the valve's pin
     bands_df = _capped_bands(
         _sig_bands(sig, [id_col], sig_col, bits, bands),
         max_band_size,
         band_size_quantile,
         observation,
     )
-    cand = _band_self_pairs(bands_df, id_col, salt_buckets, salt_min_bucket)
+    cand = _band_self_pairs(bands_df, id_col)
     sa = sig.select(F.col(id_col).alias("_ida"), F.col(sig_col).alias("_sa"))
     sb = sig.select(F.col(id_col).alias("_idb"), F.col(sig_col).alias("_sb"))
     ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
@@ -1732,8 +1465,6 @@ def fuzzy_decontaminate(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: flag training
     documents whose simhash is within ``max_hamming`` bits of any
@@ -1764,23 +1495,16 @@ def fuzzy_decontaminate(
     with the probe side already small); reach for the valve only if
     a degenerate bucket (near-empty documents majority-voting to one
     signature) actually materializes, and treat its telemetry as a
-    recall warning, not bookkeeping. ``salt_buckets`` /
-    ``salt_min_bucket`` are the arm that needs NO such warning — the
-    recall-preserving answer to a hot train bucket this operator was
-    previously not allowed to have: the train side salts, the tiny
-    eval side replicates, matches are row-identical and the
-    pigeonhole guarantee holds untouched (:func:`_band_probe_pairs`).
-    Reach for the salt FIRST; the valve remains for corpora where
-    shedding the degenerate bucket is an accepted recall trade. Same
-    honest limit as every
-    simhash operator: the
+    recall warning, not bookkeeping. Uncapped, a hot train bucket is
+    still matched in full: the eval side is small enough to
+    broadcast, so its product parallelizes over the train side's
+    input splits. Same honest limit as every simhash operator: the
     signature distance is a document-LEVEL proxy — passage-level
     leakage belongs to :func:`decontaminate` or the substring
     operators."""
     _validate_banding(
         bits, bands, max_hamming, max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # before the pins
     sig_t = pin(
         simhash(train, id_col, text_col, bits).withColumnRenamed(
             id_col, "_train_id"
@@ -1807,8 +1531,6 @@ def fuzzy_decontaminate(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )
     hits = matches.groupBy("_train_id").agg(
         F.count(F.lit(1)).alias("matched_evals"),
@@ -1848,8 +1570,6 @@ def incremental_minhash_dedup(
     observation: "Observation | None" = None,
     history_signatures: DataFrame | None = None,
     best_match: bool = False,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Dedup a new batch against the historical corpus WITHOUT
     re-pairing history with itself — the daily-ingest shape of fuzzy
@@ -1885,10 +1605,7 @@ def incremental_minhash_dedup(
     bucket bounds every key's candidate mass at |increment| x cap —
     linear in the (small) increment even when the increment itself
     carries a degenerate key, while removing a hot history bucket
-    removes the key from the join outright. ``salt_buckets`` /
-    ``salt_min_bucket`` are the recall-PRESERVING alternative when a
-    hot history bucket must be consumed, not dropped: history side
-    salted, increment replicated (:func:`_band_probe_pairs`).
+    removes the key from the join outright.
 
     Pass ``history_signatures`` (a wide ``(id, mh_0..mh_{K-1})`` table,
     e.g. :meth:`SignatureStore.read`) INSTEAD of ``history`` to run
@@ -1907,7 +1624,6 @@ def incremental_minhash_dedup(
     _validate_band_caps(  # before the pins — a bad call must not leak a cache entry
         max_band_size, band_size_quantile, observation
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same rule
     if history_signatures is not None:
         missing = {id_col, *(f"mh_{j}" for j in range(num_hashes))} - set(
             history_signatures.columns
@@ -1928,15 +1644,13 @@ def incremental_minhash_dedup(
         join_shape="probe",
     )
     bands_i = _band_keys(mh_i, id_col, num_hashes, rows_per_band)
-    # shared probe-pair stage: increment = probe (small, replicates
-    # under a salt), history = corpus (big, salted per row)
+    # shared probe-pair stage: increment = probe (small),
+    # history = corpus (big)
     cand = _band_probe_pairs(
         bands_i.withColumnRenamed(id_col, "_inc"),
         bands_h.withColumnRenamed(id_col, "_hist"),
         ["_inc"],
         ["_hist"],
-        salt_buckets,
-        salt_min_bucket,
     )
     mi = mh_i.select(
         F.col(id_col).alias("_inc"),
@@ -2147,16 +1861,10 @@ class SignatureStore(_ParquetStore):
         min_agree: float = 0.25,
         max_band_size: int | None = None,
         band_size_quantile: float | None = None,
-        salt_buckets: int = 1,
-        salt_min_bucket: int | None = None,
     ) -> DataFrame:
         """Dedup ``batch`` against the store and append the novel
         documents' signatures. Returns the materialized per-batch
         annotation ``(id, dup_of, best_est, is_new)``.
-        ``salt_buckets`` / ``salt_min_bucket`` ride through to
-        :func:`incremental_minhash_dedup`'s probe-shaped salt arm
-        (history side salted, batch replicated — row-identical, the
-        recall-preserving alternative to the capping valve).
 
         Every cache this call creates — the batch signature pin, the
         operator's internal twin of it, and (under the quantile valve)
@@ -2173,7 +1881,6 @@ class SignatureStore(_ParquetStore):
         post-append."""
         from .caching import cache_scope
 
-        _validate_salting(salt_buckets, salt_min_bucket)  # before the pin
         self._require_bootstrapped()
         with cache_scope():
             sigs = pin(self.signatures_for(batch, text_col))
@@ -2189,8 +1896,6 @@ class SignatureStore(_ParquetStore):
                 max_band_size=max_band_size,
                 band_size_quantile=band_size_quantile,
                 history_signatures=self.read(),
-                salt_buckets=salt_buckets,
-                salt_min_bucket=salt_min_bucket,
             ).localCheckpoint(eager=True)
             new_ids = res.filter(F.col("is_new") == 1).select(self.id_col)
             sigs.join(new_ids, self.id_col, "left_semi").write.mode(
@@ -2258,8 +1963,6 @@ class HammingStore(_ParquetStore):
         max_band_size: int | None = None,
         band_size_quantile: float | None = None,
         observation: "Observation | None" = None,
-        salt_buckets: int = 1,
-        salt_min_bucket: int | None = None,
     ) -> DataFrame:
         """Dedup a batch's signature table against the store and
         append the novel items' signatures. Returns the materialized
@@ -2269,17 +1972,13 @@ class HammingStore(_ParquetStore):
         ``is_new`` = 1 when no history signature is within
         ``max_hamming``. Cache hygiene mirrors
         :meth:`SignatureStore.ingest` (everything in a cache_scope;
-        checkpoint before append). ``salt_buckets`` /
-        ``salt_min_bucket`` ride through to :func:`hamming_probe`'s
-        probe-shaped salt arm (history side salted, batch
-        replicated)."""
+        checkpoint before append)."""
         from .caching import cache_scope
 
         _validate_banding(
             self.bits, bands, max_hamming, max_band_size,
             band_size_quantile, observation,
         )
-        _validate_salting(salt_buckets, salt_min_bucket)  # same rule
         self._require_bootstrapped()
         with cache_scope():
             sigs = pin(signatures.select(self.id_col, self.sig_col))
@@ -2296,8 +1995,6 @@ class HammingStore(_ParquetStore):
                 max_band_size=max_band_size,
                 band_size_quantile=band_size_quantile,
                 observation=observation,
-                salt_buckets=salt_buckets,
-                salt_min_bucket=salt_min_bucket,
             )
             best = matches.groupBy(self.id_col).agg(
                 F.min(F.struct("hamming", "_hist_id")).alias("_best")
@@ -2379,8 +2076,6 @@ class WindowStore(_ParquetStore):
         max_df: int | None = None,
         max_df_quantile: float | None = None,
         quantile_headroom: int = 10,
-        salt_buckets: int = 1,
-        salt_min_bucket: int | None = None,
     ) -> DataFrame:
         """Check ``batch`` for shared passages against the store and
         append the novel documents' windows. Returns the materialized
@@ -2396,13 +2091,9 @@ class WindowStore(_ParquetStore):
         cache_scope, so a long-lived foreachBatch loop neither leaks a
         pin per micro-batch nor serves a later batch a STALE
         pre-append cache; the annotation is checkpointed before the
-        append inside the scope. ``salt_buckets`` /
-        ``salt_min_bucket`` ride through to
-        :func:`incremental_substring_spans`' probe-shaped salt arm
-        (history windows salted, batch replicated)."""
+        append inside the scope."""
         from .caching import cache_scope
 
-        _validate_salting(salt_buckets, salt_min_bucket)  # before the pin
         self._require_bootstrapped()
         with cache_scope():
             wb = pin(self.windows_for(batch, text_col))
@@ -2417,8 +2108,6 @@ class WindowStore(_ParquetStore):
                 max_df_quantile=max_df_quantile,
                 quantile_headroom=quantile_headroom,
                 history_windows=self.read(),
-                salt_buckets=salt_buckets,
-                salt_min_bucket=salt_min_bucket,
             )
             per_doc = pairs.groupBy(F.col("inc_id").alias(self.id_col)).agg(
                 F.max("longest_run_tokens").alias("max_run_tokens"),

@@ -332,8 +332,6 @@ def image_near_dup_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation=None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Image near-duplicate pairs: :func:`image_dhash` feeding
     :func:`~git_log_to_sqlite_spark.operators.dedup.hamming_pairs` —
@@ -346,13 +344,12 @@ def image_near_dup_pairs(
     cap) receives the same eager ``bands_dropped`` telemetry as every
     valve caller — see ``dedup._hot_key_set``."""
     from .caching import pin
-    from .dedup import _validate_banding, _validate_salting, hamming_pairs
+    from .dedup import _validate_banding, hamming_pairs
 
     _validate_banding(  # all arg checks before the pin (incl. valve args)
         rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
         observation,
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same before-the-pin rule
     sig = pin(image_dhash(media, rows, cols, grid_fn))
     return hamming_pairs(
         sig,
@@ -364,8 +361,6 @@ def image_near_dup_pairs(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )
 
 
@@ -452,8 +447,6 @@ def audio_near_dup_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation=None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Audio near-duplicate pairs: :func:`audio_fingerprint` feeding
     the shared :func:`~git_log_to_sqlite_spark.operators.dedup.
@@ -461,14 +454,13 @@ def audio_near_dup_pairs(
     and image dHash) on the one pigeonhole-exact pair machinery.
     Returns ``(id_a, id_b, hamming)``."""
     from .caching import pin
-    from .dedup import _validate_banding, _validate_salting, hamming_pairs
+    from .dedup import _validate_banding, hamming_pairs
 
     bits = (frames - 1) * (bands - 1)
     _validate_banding(  # all arg checks before the pin (incl. valve args)
         bits, lsh_bands, max_hamming, max_band_size, band_size_quantile,
         observation,
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same before-the-pin rule
     sig = pin(audio_fingerprint(media, frames, bands, energy_fn))
     return hamming_pairs(
         sig,
@@ -480,8 +472,6 @@ def audio_near_dup_pairs(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )
 
 
@@ -783,8 +773,6 @@ def image_in_video_frames(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation=None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Cross-modal content lookup: which video frames (near-)match a
     batch of still images — ``image_dhash`` over the stills probed
@@ -800,13 +788,12 @@ def image_in_video_frames(
     side (black frames are the degenerate bucket; ``rows_dropped``
     telemetry), mirroring every probe-shaped caller."""
     from .caching import pin
-    from .dedup import _validate_banding, _validate_salting, hamming_probe
+    from .dedup import _validate_banding, hamming_probe
 
     _validate_banding(  # all arg checks before the pins (incl. valve args)
         rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
         observation,
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same before-the-pin rule
     if frame_bytes < 1:  # video_frame_dhash re-checks, but after sig_p pins
         raise ValueError(f"frame_bytes must be >= 1, got {frame_bytes}")
     sig_p = pin(
@@ -831,8 +818,6 @@ def image_in_video_frames(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )
 
 
@@ -925,8 +910,6 @@ def video_near_dup_pairs(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation=None,
-    salt_buckets: int = 1,
-    salt_min_bucket: int | None = None,
 ) -> DataFrame:
     """Video near-duplicate pairs: :func:`video_fingerprint` feeding
     the shared :func:`~git_log_to_sqlite_spark.operators.dedup.
@@ -938,13 +921,12 @@ def video_near_dup_pairs(
     frames majority-voting to 0 — are exactly the hot-band
     pathology the valve bounds)."""
     from .caching import pin
-    from .dedup import _validate_banding, _validate_salting, hamming_pairs
+    from .dedup import _validate_banding, hamming_pairs
 
     _validate_banding(  # all arg checks before the pin (incl. valve args)
         rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
         observation,
     )
-    _validate_salting(salt_buckets, salt_min_bucket)  # same before-the-pin rule
     sig = pin(video_fingerprint(media, rows, cols, frame_bytes, grid_fn))
     return hamming_pairs(
         sig,
@@ -956,6 +938,4 @@ def video_near_dup_pairs(
         max_band_size=max_band_size,
         band_size_quantile=band_size_quantile,
         observation=observation,
-        salt_buckets=salt_buckets,
-        salt_min_bucket=salt_min_bucket,
     )

@@ -416,8 +416,6 @@ def semantic_dedup(
     round_to: int | None = None,
     dist_round_to: int | None = None,
     observation: "Observation | None" = None,
-    salt_buckets: int = 1,
-    salt_min_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-scoped
     SEMANTIC dedup — near-duplicate *meanings* (a paraphrase, a
@@ -483,28 +481,15 @@ def semantic_dedup(
     is upstream (exact-dedup first; refit with larger k), so this
     valve OBSERVES and never caps — capping would void the
     upper-triangular semantics the way the fuzzy_decontaminate
-    docstring warns.
-
-    ``salt_buckets`` is the telemetry's ACTION arm when refitting is
-    not an option and the hot cell's members are genuinely distinct
-    (post-exact-dedup): the pair join parallelizes each cell over S
-    salted tasks with row-identical output (see
-    :func:`_semantic_annotate` — the mega-cell probe's 10k-row cell
-    consumed 721 s unsalted vs the alarm's 1.4 s; salting is the
-    semantics-preserving way to spend cores on it). Default 1: the
-    gate plan (`sem_dedup_assign`) and every healthy-quantizer run
-    keep the unsalted single-pass shape. ``salt_min_cell`` targets
-    the salt at cells that size or larger, so only the hot cells pay
-    the S-way replication — the at-scale form
-    (:func:`_semantic_annotate`)."""
+    docstring warns. The pair join's only equi-key is the cell id, so
+    one oversized cell is one join key whose d(d-1)/2 pairs run in one
+    task; the telemetry is how a pipeline sees that coming."""
     ranked = _semantic_ranked(
         df, id_col, vec_col, centroids, round_to, dist_round_to
     )
     if observation is not None:
         _observe_cell_stats(ranked, observation)
-    return _semantic_annotate(
-        ranked, id_col, threshold, round_to, salt_buckets, salt_min_cell
-    )
+    return _semantic_annotate(ranked, id_col, threshold, round_to)
 
 
 def _centroids_frame(spark, centroids: "list[list[float]]") -> DataFrame:
@@ -533,56 +518,6 @@ def _centroids_frame(spark, centroids: "list[list[float]]") -> DataFrame:
     return spark.createDataFrame(
         pdf, "cell int, centroid array<double>"
     ).repartition(1)
-
-
-def recommend_salt_min_cell(
-    df: DataFrame,
-    vec_col: str,
-    centroids: "list[list[float]] | DataFrame",
-    quantile: float = 0.92,
-    spread: int = 10,
-    straggler_factor: float = 2.0,
-    dist_round_to: int | None = None,
-) -> "int | None":
-    """Derive a recommended ``salt_min_cell`` for this corpus under
-    this quantizer, from the cell-occupancy distribution
-    :func:`_observe_cell_stats` reports (:func:`~.skew.
-    recommend_salt_threshold` — the shared spread + straggler
-    guards). ``None`` means don't arm: the quantizer spreads the
-    corpus (every cell near the bulk occupancy), or the largest
-    cell's pair mass is too light to be the critical path. A non-None
-    value passes verbatim to :func:`semantic_dedup` /
-    :class:`SemanticStore` ``salt_min_cell``. Runs the assignment
-    only (no rank window, no cosine — cheaper than the operator it
-    advises); ``centroids`` takes either form
-    (:func:`~.clustering.assign_clusters` literals or the
-    :func:`~.clustering.assign_clusters_table` large-k table), with
-    ``dist_round_to`` matching the operator call so the advised plan
-    assigns identically. Diagnostic-only: no pins, no effect on any
-    subsequent plan — but the convenience costs one corpus pass (the
-    k-way assignment fold); at production scale, prefer handing
-    :func:`~.skew.recommend_salt_threshold` a cell-assigned frame
-    your pipeline already has (the SemDeDup ranked frame, a store's
-    kept table) instead of re-assigning here."""
-    from .clustering import assign_clusters, assign_clusters_table
-    from .skew import recommend_salt_threshold
-
-    base = df.select(_as_double(F.col(vec_col)).alias("_v"))
-    if isinstance(centroids, DataFrame):
-        assigned = assign_clusters_table(
-            base, "_v", centroids, round_to=dist_round_to
-        )
-    else:
-        assigned = assign_clusters(
-            base, "_v", centroids, round_to=dist_round_to
-        )
-    return recommend_salt_threshold(
-        assigned.select(F.col("cluster").alias("cell")),
-        ["cell"],
-        quantile=quantile,
-        spread=spread,
-        straggler_factor=straggler_factor,
-    )
 
 
 def _observe_cell_stats(ranked: DataFrame, observation: "Observation") -> None:
@@ -757,62 +692,13 @@ def _semantic_annotate(
     id_col: str,
     threshold: float,
     round_to: int | None,
-    salt_buckets: int = 1,
-    salt_min_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup's upper-triangular drop stage over a pinned
     :func:`_semantic_ranked` frame: cell-local (rank_a < rank_b) pair
     join, drop b on >= threshold cosine, blame the lowest-ranked such
-    a (min (rank, id) structs — deterministic).
-
-    ``salt_buckets`` recovers PARALLELISM on hot cells without
-    touching the semantics: the pair join's only equi-key is the cell
-    id, so one oversized cell is ONE join key — one task pays that
-    cell's d(d-1)/2 pairs serially, no matter how many cores idle
-    (measured in BASELINE.md's mega-cell probe: a 10k-row cell's 50M
-    pairs ran 87x slower than 16 cells carrying 3.1M, quadratic AND
-    serialized; AQE's skew split cannot divide a single key's sort-
-    merge group). With ``salt_buckets=S > 1`` the a-side gets a
-    deterministic id-hash salt, the b-side replicates S ways
-    (:func:`~.skew.salted_pair_sides` — the shared AQE-proof shape,
-    :func:`~.skew._salt`'s deterministic-never-rand() rule), and the
-    join keys on
-    (cell, salt): every (a, b) pair still meets exactly once — at
-    a's salt — so the output is row-identical to the unsalted plan,
-    while the hot cell's pair work spreads over S tasks. Price:
-    S x the b-side shuffle volume, so the default stays 1 for
-    healthy quantizers; arm it when :func:`_observe_cell_stats`
-    reports a max_cell_rows worth splitting. Unlike CAPPING (which
-    the fuzzy_decontaminate doctrine forbids here — shedding members
-    voids the paper's drop rule), salting is a pure execution
-    strategy: the recall guarantee is untouched.
-
-    Scope note: the salt parallelizes the PAIR JOIN only. The rank
-    window upstream still sorts each cell in one task (row_number
-    requires its partition on one reducer) — but that term is
-    O(d log d) per cell against the join's O(d^2), so at mega-cell
-    d the join dominates by ~d/log d (the probe's 10k-row cell:
-    ranked build ~1.4 s vs 720.9 s unsalted join); the window is the
-    lesser term precisely when salting matters.
-
-    ``salt_min_cell`` makes the salt TARGETED — the production form
-    at corpus scale: only cells with >= that many members salt and
-    replicate (a map-combinable cell count derives the hot set;
-    :func:`~.skew.salted_pair_sides` marks both sides), every other
-    cell keeps salt 0 and its shuffle volume UNCHANGED. Without it
-    the whole b-side (the entire ranked corpus) replicates S ways —
-    acceptable for a one-off rescue on a mid-size corpus, a
-    non-starter at 100 TB. Pick the threshold from the cell-stats
-    telemetry's max_cell_rows.  The contract is ``salt_min_cell >= 2``
-    (enforced by :func:`~.skew._validate_pair_salting` here and in
-    :class:`SemanticStore`): the shared :func:`~.dedup._hot_key_set`
-    derivation pre-filters to repeated cells (d >= 2), which is
-    behavior-identical to the inline derivation it replaced exactly
-    because 1 is rejected — a singleton cell emits no pairs, so it
-    could never need the salt anyway."""
-    from .skew import _validate_pair_salting
-
-    _validate_pair_salting(salt_buckets, salt_min_cell, "salt_min_cell")
+    a (min (rank, id) structs — deterministic). The join keys on the
+    cell id alone, so each cell's pairs are one sort-merge group: the
+    cost is sum over cells of d(d-1)/2, in one task per cell."""
     a = ranked.select(
         F.col("cell").alias("_ca"), F.col("_rank").alias("_ra"),
         F.col("_id").alias("_ia"), F.col("_v").alias("_va"),
@@ -824,30 +710,6 @@ def _semantic_annotate(
         F.col("_n").alias("_nb"),
     )
     pair_cond = (F.col("_ca") == F.col("_cb")) & (F.col("_ra") < F.col("_rb"))
-    if salt_buckets > 1:
-        # the shared AQE-proof salting shape (deterministic a-side
-        # id-hash salt, b-side replicated S ways, both sides
-        # co-partitioned on (cell, salt) at a FIXED partition count —
-        # the full why, including the two measured AQE defeat modes
-        # of key-only salting, lives on the helper)
-        from .skew import salted_pair_sides
-
-        hot_a = hot_b = None
-        if salt_min_cell is not None:
-            # the shared hot-key derivation (single-sourced with the
-            # band valves: map-combinable count, > cap-1 == the
-            # >= salt_min_cell contract, returned pinned for the two
-            # marking consumers)
-            from .dedup import _hot_key_set
-
-            hot = _hot_key_set(ranked, ["cell"], salt_min_cell - 1, None)
-            hot_a = hot.select(F.col("cell").alias("_ca"))
-            hot_b = hot.select(F.col("cell").alias("_cb"))
-        a, b, salt_cond = salted_pair_sides(
-            a, b, ["_ca"], ["_cb"], "_ia", salt_buckets,
-            hot_a=hot_a, hot_b=hot_b,
-        )
-        pair_cond = pair_cond & salt_cond
     # zero-norm guard #2: a pair cosine involving a zero vector would
     # be 0/0 — DIVIDE_BY_ZERO under ANSI, and under non-ANSI a NaN
     # that Spark compares LARGER than any number, which would mark
@@ -1296,8 +1158,6 @@ class SemanticStore(_ParquetStore):
         threshold: float = 0.95,
         round_to: int | None = None,
         dist_round_to: int | None = None,
-        salt_buckets: int = 1,
-        salt_min_cell: int | None = None,
     ) -> None:
         super().__init__(spark, f"{path.rstrip('/')}/kept")
         self.base = path.rstrip("/")
@@ -1306,26 +1166,6 @@ class SemanticStore(_ParquetStore):
         self.threshold = threshold
         self.round_to = round_to
         self.dist_round_to = dist_round_to
-        #: hot-cell parallelism for the intra-batch/bootstrap pair
-        #: stage (see :func:`_semantic_annotate` — row-identical
-        #: output, S x b-side shuffle) AND for the history probe join
-        #: in :meth:`ingest` (probe shape: store side salted per kept
-        #: row, batch replicated — the backfill-regime arm, where a
-        #: hot cell's |batch cell| x |kept cell| product is one join
-        #: key unsalted; when armed, a small daily batch pays the
-        #: pinned co-partitioning shuffles instead of the free
-        #: broadcast — pennies on an increment). Validated HERE, not
-        #: first inside bootstrap's annotate stage — by then the
-        #: centroid table has already been overwritten and the store
-        #: would be left half-written. salt_min_cell targets the salt
-        #: at hot cells only (bounded replication — the at-scale
-        #: form; on the history probe, hotness is measured on the
-        #: STORE side, the _band_probe_pairs convention).
-        from .skew import _validate_pair_salting
-
-        _validate_pair_salting(salt_buckets, salt_min_cell, "salt_min_cell")
-        self.salt_buckets = salt_buckets
-        self.salt_min_cell = salt_min_cell
         self._dim_cache: int | None = None
 
     def centroids_df(self) -> DataFrame:
@@ -1379,8 +1219,7 @@ class SemanticStore(_ParquetStore):
             if observation is not None:
                 _observe_cell_stats(ranked, observation)
             kept_ids = _semantic_annotate(
-                ranked, self.id_col, self.threshold, self.round_to,
-                self.salt_buckets, self.salt_min_cell,
+                ranked, self.id_col, self.threshold, self.round_to
             ).filter(F.col("is_kept") == 1).select(self.id_col)
             (
                 ranked.select(
@@ -1438,10 +1277,7 @@ class SemanticStore(_ParquetStore):
         collected cell set (see the in-body note: DPP skips this
         join shape); a backfill-scale batch
         degrades to a shuffled cell join instead of a broadcast
-        cliff — and with the store's ``salt_buckets`` armed, that
-        shuffled regime's hot cells spread over S salted tasks,
-        row-identical by test) and
-        the batch-internal annotate stage. Cache hygiene mirrors
+        cliff) and the batch-internal annotate stage. Cache hygiene mirrors
         every sibling ingest: pins in a cache_scope, annotation
         checkpointed before the append. ``observation`` arms
         :func:`_observe_cell_stats` over the batch's ranked frame —
@@ -1476,45 +1312,7 @@ class SemanticStore(_ParquetStore):
             # degrades to a shuffled cell join instead of hitting the
             # 8 GB broadcast cliff a hard hint would force
             probe = ranked.select("_id", "_v", "_n", "cell")
-            if self.salt_buckets > 1:
-                # the store's salt knobs ride the HISTORY probe too
-                # (probe shape: store = corpus side, salted per kept
-                # row; batch = probe side, replicated): in the
-                # backfill SMJ regime a hot cell's
-                # |batch cell| x |kept cell| product is one join key
-                # — one task, invisible to AQE's byte sizing — and
-                # the groupBy below is on _id, so per-salt partials
-                # combine without any semantic change. Hotness for
-                # salt_min_cell is measured on the STORE side (the
-                # _band_probe_pairs convention). Price when armed: a
-                # small daily batch pays the pinned co-partitioning
-                # shuffles instead of the free broadcast — pennies on
-                # an increment, and the knob is opt-in for degenerate
-                # corpora (default S=1 keeps the broadcast regime).
-                from .dedup import _hot_key_set
-                from .skew import salted_pair_sides
-
-                a = s.withColumnRenamed("cell", "_cs")
-                b = probe.withColumnRenamed("cell", "_cp")
-                hot_a = hot_b = None
-                if self.salt_min_cell is not None:
-                    # the shared hot-key derivation (single-sourced
-                    # with the band valves; > cap-1 == the
-                    # >= salt_min_cell contract, returned pinned)
-                    hot = _hot_key_set(
-                        s, ["cell"], self.salt_min_cell - 1, None
-                    )
-                    hot_a = hot.select(F.col("cell").alias("_cs"))
-                    hot_b = hot.select(F.col("cell").alias("_cp"))
-                a, b, salt_cond = salted_pair_sides(
-                    a, b, ["_cs"], ["_cp"], "_hid", self.salt_buckets,
-                    hot_a=hot_a, hot_b=hot_b,
-                )
-                joined = b.join(
-                    a, (F.col("_cp") == F.col("_cs")) & salt_cond
-                )
-            else:
-                joined = probe.join(s, "cell")
+            joined = probe.join(s, "cell")
             hist = (
                 joined.filter(sim >= F.lit(self.threshold))
                 .groupBy(F.col("_id").alias(self.id_col))
@@ -1525,8 +1323,7 @@ class SemanticStore(_ParquetStore):
                 )
             )
             ann_b = _semantic_annotate(
-                ranked, self.id_col, self.threshold, self.round_to,
-                self.salt_buckets, self.salt_min_cell,
+                ranked, self.id_col, self.threshold, self.round_to
             ).withColumnRenamed("dup_of", "_batch_dup")
             dup_of = F.coalesce(F.col("_hist_dup"), F.col("_batch_dup"))
             res = (

@@ -9,18 +9,14 @@ operators cover the cases AQE cannot fix:
   recombines, so the hot key's work spreads over B tasks;
 * a hot join key against a small-but-not-broadcastable dimension —
   ``salted_join`` replicates the small side B ways so the hot key's
-  fact rows spread over B tasks;
-* a hot PAIR-join bucket, whose d(d-1)/2 (or |probe| x |corpus|)
-  output explosion is invisible to AQE's byte-based sizing —
-  ``salted_pair_sides`` is the one shared, co-partition-pinned
-  derivation behind every pair/probe stage's ``salt_buckets`` /
-  ``salt_min_*`` knobs: the band self-joins (minhash/simhash/hamming
-  and the image/audio/video wrappers), the probe joins
-  (hamming_probe, incremental_minhash_dedup, fuzzy_decontaminate,
-  image_in_video_frames, incremental_substring_spans), the SemDeDup
-  cell join (semantic_dedup), and the persisted stores' ingest paths
-  (SemanticStore history probe, SignatureStore / HammingStore /
-  WindowStore pass-through).
+  fact rows spread over B tasks.
+
+Pair joins (the LSH band self/probe joins, the SemDeDup cell join) are
+not salted: their defence against a hot bucket is the hot-key valve in
+``dedup`` (``max_band_size`` / ``band_size_quantile``, ``max_df`` /
+``max_df_quantile``), which drops above-cap buckets before the join and
+reports what it dropped. ``_quantile_cap`` here is the valves' shared
+bucket-size quantile statistic.
 
 Salts are deterministic (hash of a caller-named unique column, never
 rand()): results are reproducible and retried tasks can't double-count.
@@ -41,9 +37,8 @@ _MERGEABLE = {
 }
 
 
-def _salt(unique_col: "Column | list[Column]", buckets: int) -> Column:
-    cols = unique_col if isinstance(unique_col, list) else [unique_col]
-    return F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
+def _salt(unique_col: Column, buckets: int) -> Column:
+    return F.pmod(F.xxhash64(unique_col), F.lit(buckets)).cast("int")
 
 
 def salted_aggregate(
@@ -96,17 +91,12 @@ def salted_join(
     one. Dim cost: B x |dim| rows — use only when the dim is too big to
     broadcast but B x |dim| still shuffles comfortably.
 
-    Deliberately NOT co-partition-pinned (contrast
-    :func:`salted_pair_sides`): here AQE's rewrites are benign-to-good.
-    A broadcast conversion of the replicated dim turns the join
-    map-side over the fact's EXISTING partitioning — no fact shuffle at
-    all, strictly better than any salt; and partition coalescing only
-    fires when the fact side's shuffle bytes are small, in which case
-    per-row join work is linear (one dim row per key), not the
-    downstream pair EXPLOSION that defeats byte-based sizing in the
-    self-join case. The pinned variant exists for pair joins, where
-    output is quadratic in the hot key and invisible to AQE's
-    estimates.
+    Deliberately NOT co-partition-pinned: AQE's rewrites are
+    benign-to-good here. A broadcast conversion of the replicated dim
+    turns the join map-side over the fact's EXISTING partitioning — no
+    fact shuffle at all, strictly better than any salt; and partition
+    coalescing only fires when the fact side's shuffle bytes are small,
+    in which case per-row join work is linear (one dim row per key).
     """
     f = fact.withColumn("_salt", _salt(F.col(fact_unique), buckets))
     d = dim.withColumn(
@@ -115,206 +105,13 @@ def salted_join(
     return f.join(d, [on, "_salt"], how).drop("_salt")
 
 
-def _validate_pair_salting(
-    buckets: int, min_members: int | None, name: str
-) -> None:
-    """Salt-argument validation shared by every pair-salting entry
-    point (band joins' ``salt_min_bucket``, the semantic family's
-    ``salt_min_cell``) — callers invoke it BEFORE any pin, in their
-    own parameter vocabulary via ``name``."""
-    if buckets < 1:
-        raise ValueError(f"salt_buckets must be >= 1, got {buckets}")
-    if min_members is not None:
-        if buckets < 2:
-            raise ValueError(f"{name} requires salt_buckets > 1")
-        if min_members < 2:
-            raise ValueError(f"{name} must be >= 2, got {min_members}")
-
-
-def _fixed_partition_count(session, buckets: int) -> int:
-    """The FIXED partition count a pinned salted pair join shuffles to:
-    the session's shuffle.partitions where readable, falling through
-    managed-runtime "auto" values and Spark-Connect sessions (no
-    sparkContext) to Spark's own 200 default; never below ``buckets``
-    (fewer partitions than salts would re-collide salted keys by
-    pigeonhole).  Surprising counts are announced on this module's
-    logger (``git_log_to_sqlite_spark.operators.skew``, one WARNING
-    line each): the conf-unreadable fallback AND the pigeonhole bump
-    (``buckets`` exceeding the configured count), so a production user
-    debugging an unexpectedly narrow or wide salted shuffle can see
-    which count was chosen and why — the pinned repartition is exempt
-    from AQE coalescing by design, so a surprising count here is
-    otherwise invisible until stage metrics."""
-    import logging
-
-    log = logging.getLogger(__name__)
-    conf_unreadable = False
-    try:
-        n_part = int(session.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        conf_unreadable = True
-        try:
-            n_part = session.sparkContext.defaultParallelism
-        except Exception:
-            n_part = 200
-        # this line already reports the final (possibly bucket-bumped)
-        # count, so the pigeonhole warning below is suppressed for it
-        log.warning(
-            "spark.sql.shuffle.partitions unreadable (managed 'auto' "
-            "value or Spark-Connect session); salted-shuffle partition "
-            "count resolved to %d instead",
-            max(n_part, buckets),
-        )
-    if n_part < buckets and not conf_unreadable:
-        # worded for BOTH callers: the salted operators pin their
-        # shuffle to this count, while recommend_salt_threshold only
-        # EVALUATES its straggler guard at it (pure telemetry — no
-        # shuffle happens on that path)
-        log.warning(
-            "salt_buckets (%d) exceeds the configured shuffle "
-            "partition count (%d); salted-shuffle partition count "
-            "resolved to %d so salted keys cannot re-collide by "
-            "pigeonhole",
-            buckets,
-            n_part,
-            buckets,
-        )
-    return max(n_part, buckets)
-
-
-def salted_pair_sides(
-    a: DataFrame,
-    b: DataFrame,
-    a_keys: list[str],
-    b_keys: list[str],
-    a_salt_from: "str | list[str]",
-    buckets: int,
-    hot_a: DataFrame | None = None,
-    hot_b: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, Column]:
-    """The AQE-proof salting shape every PAIR join shares (SemDeDup's
-    cell join, the minhash/simhash band-bucket self-joins — one
-    derivation, no drifting copies; the :func:`~.dedup._hot_key_set`
-    precedent). A pair join's only equi-key is the bucket id, so one
-    oversized bucket is ONE join key — one task pays that bucket's
-    d(d-1)/2 pairs serially however many cores idle (AQE's skew split
-    cannot divide a single key's sort-merge group; measured in
-    BASELINE.md's mega-cell probe: 720.9 s unsalted vs 101.6 s at
-    S=32). Unlike a CAPPING valve, salting is a pure execution
-    strategy — every (a, b) pair still meets exactly once, at a's
-    salt — so recall guarantees are untouched.
-
-    Returns ``(a, b, cond)``: the a-side carries a deterministic
-    id-hash salt ``_salt_a`` (:func:`_salt`'s never-rand() rule —
-    reproducible, retry-safe), the b-side replicates ``buckets`` ways
-    as ``_salt_b``, both sides are explicitly co-partitioned on
-    (keys..., salt) at a fixed partition count, and ``cond`` is the
-    salt-equality clause the caller ANDs into its join condition.
-    Callers skip the call entirely when ``buckets == 1`` so the
-    default plan stays byte-identical to the unsalted form.
-
-    The explicit ``repartition(n, ...)`` (REPARTITION_BY_NUM — the one
-    shuffle origin AQE never rewrites) is the load-bearing half,
-    measured the hard way on the mega-cell probe: salting by join key
-    alone is SILENTLY DEFEATED by AQE, whose sizing sees only shuffle
-    BYTES while the pair explosion happens downstream of the shuffle
-    read — it either broadcast-converts the join (the stream side then
-    inherits its upstream bucket-hash partitioning: the hot bucket is
-    one non-empty partition again) or coalesces the tiny salted
-    partitions back into one task; the first salted probe ran at the
-    unsalted ~720 s. The b-side salt sequence casts to array<int>
-    INSIDE explode's argument (casting the generator's output is the
-    disallowed nesting): a bigint ``_salt_b`` would wrap ``_salt_a``
-    in a cast, the repartition would no longer satisfy the join's
-    required distribution, and the resulting ENSURE_REQUIREMENTS
-    shuffle is exactly the AQE-rewritable kind this helper exists to
-    avoid.
-
-    Price and the TARGETED form: uniform salting replicates the WHOLE
-    b-side ``buckets`` ways — S x the b-side shuffle volume, a
-    non-starter when the b-side is corpus-sized (and measured to
-    overtake its own win on this box: the sf0.1 hot-band probe's SMJ
-    regime read S=8 faster than S=32 because the replication term
-    grows with S while the hot family's spread gain saturates at the
-    family size). Passing ``hot_a`` / ``hot_b`` — the same tiny
-    keys-only frame, column-named for each side (the
-    :func:`~.dedup._hot_key_set` derivation both LSH valves and the
-    cell telemetry already compute) — switches to the targeted form:
-    only rows of hot buckets are salted (a-side) and replicated
-    (b-side, via a per-row ``when(hot, 0..S-1, [0])`` explode); every
-    other bucket keeps salt 0 on both sides, so its distribution by
-    (key, 0) is its distribution by key and its shuffle volume is
-    UNCHANGED. Hotness is a property of the BUCKET key, so within any
-    bucket both sides agree on whether it is salted and every pair
-    still meets exactly once. The marking joins are unhinted left
-    joins against the hot set (tiny in natural corpora — the planner
-    broadcasts it from estimates; grows only with corpus pathology,
-    where it degrades to a shuffled join on the bucket key). When the
-    hot set is runtime-empty, AQE's empty-relation propagation folds
-    the marks to NULL and every salt is 0 — the unsalted semantics,
-    output unchanged.
-
-    Arming precondition (the round-13 regime law, BASELINE.md): the
-    single-key serialization this helper fixes only exists when the
-    join SHUFFLES — one key is one sort-merge group is one task. When
-    one side is small enough to broadcast, the BroadcastHashJoin
-    parallelizes a hot key's product over the other side's input
-    splits and there is no hot task at all; the explicit repartition
-    here (deliberately AQE-proof) then FORCES the shuffled join, so
-    arming in a broadcast regime can only lose — measured on the
-    substring probe shape at 17M/152M/487M one-key products. Keep the
-    default 1 for healthy corpora or broadcastable probes, and arm
-    the knob when hot-key telemetry (cell stats, band-valve
-    observations) reports a bucket worth splitting.
-    """
-    if buckets < 1:
-        raise ValueError(f"salt_buckets must be >= 1, got {buckets}")
-    if (hot_a is None) != (hot_b is None):
-        raise ValueError("hot_a and hot_b must be passed together")
-    salt_src = [
-        F.col(c)
-        for c in ([a_salt_from] if isinstance(a_salt_from, str) else a_salt_from)
-    ]
-    if hot_a is None:
-        a = a.withColumn("_salt_a", _salt(salt_src, buckets))
-        b = b.withColumn(
-            "_salt_b",
-            F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>")),
-        )
-    else:
-        a = a.join(hot_a.withColumn("_hot_a", F.lit(True)), a_keys, "left")
-        a = a.withColumn(
-            "_salt_a",
-            F.when(F.col("_hot_a"), _salt(salt_src, buckets))
-            .otherwise(F.lit(0))
-            .cast("int"),
-        ).drop("_hot_a")
-        b = b.join(hot_b.withColumn("_hot_b", F.lit(True)), b_keys, "left")
-        b = b.withColumn(
-            "_salt_b",
-            F.explode(
-                F.when(
-                    F.col("_hot_b"),
-                    F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>"),
-                ).otherwise(F.array(F.lit(0)).cast("array<int>"))
-            ),
-        ).drop("_hot_b")
-    n_part = _fixed_partition_count(a.sparkSession, buckets)
-    a = a.repartition(n_part, *[F.col(k) for k in a_keys], F.col("_salt_a"))
-    b = b.repartition(n_part, *[F.col(k) for k in b_keys], F.col("_salt_b"))
-    return a, b, F.col("_salt_a") == F.col("_salt_b")
-
-
 def _quantile_cap(d_values: DataFrame, q: float) -> DataFrame:
     """1-row ``(_max_df)`` DataFrame: the smallest posting-list length
     d* such that at least fraction ``q`` of (length >= 2) posting lists
     have length <= d* — a discrete quantile of the shingle
     document-frequency distribution, computed INSIDE the plan (no
-    driver collect, no corpus constant).  (Lives here since round 14 —
-    it is the shared bucket-size quantile statistic behind both the
-    dedup valves and :func:`recommend_salt_threshold`; hosting it in
-    ``skew`` keeps every ``skew``/``dedup`` import pointing one
-    direction, dedup -> skew.)
+    driver collect, no corpus constant) — the shared bucket-size
+    quantile statistic behind the dedup valves.
 
     Takes a ``(d)`` DataFrame with one row per length-{>=2} posting
     list. Since round 7 the caller derives it from the PERSISTED
@@ -390,111 +187,3 @@ def _quantile_cap(d_values: DataFrame, q: float) -> DataFrame:
         lambda acc: acc["best"],
     )
     return one.select(crossing.alias("_max_df"))
-
-
-def recommend_salt_threshold(
-    keyed: DataFrame,
-    key_cols: list[str],
-    quantile: float = 0.92,
-    spread: int = 10,
-    straggler_factor: float = 2.0,
-    salt_buckets: int = 1,
-) -> "int | None":
-    """Close the telemetry->knob loop for the targeted pair salt:
-    derive a recommended ``salt_min_bucket`` / ``salt_min_cell`` from
-    the same repeated-key count distribution the skew valves already
-    observe (:func:`~.dedup._hot_key_set`'s histogram, the SemDeDup
-    cell stats), so a production user arms the salt from numbers the
-    engine emits instead of hand-tuning.
-
-    ``keyed`` is one row per bucket MEMBER — exactly the frame the
-    valves count: the ``(id, band, band_key)`` projection for the LSH
-    families, the cell-assigned corpus for the semantic family (the
-    public wrappers :func:`~.dedup.recommend_salt_min_bucket` /
-    :func:`~.similarity.recommend_salt_min_cell` build it from a raw
-    corpus). The recommendation is the hot-key statistic the valves'
-    quantile route already computes, re-used as an ARMING threshold:
-
-    * bulk = the ``quantile`` point of the repeated-key (d >= 2) size
-      distribution (:func:`_quantile_cap` — derived in-plan, no
-      corpus constant);
-    * spread guard: a key is HOT when d > ``spread`` x bulk — the
-      same headroom shape :func:`~.dedup._capped_bands` defaults to,
-      so a healthy corpus (every bucket near the bulk) recommends
-      nothing no matter its absolute size;
-    * straggler guard: hotness only matters because one join key is
-      one task, so arming is recommended only when the LARGEST key's
-      pair mass d(d-1)/2 exceeds ``straggler_factor`` x the even
-      per-partition share of TOTAL pair mass.  The partition count is
-      :func:`_fixed_partition_count` at ``salt_buckets`` — pass the
-      ``salt_buckets`` the join will actually use and the guard's
-      even share is computed at exactly the count the salted join
-      shuffles to (max(shuffle.partitions, salt_buckets)); the
-      default (1) evaluates at plain shuffle.partitions, which is
-      conservative when salt_buckets would exceed it (a smaller
-      denominator count means a LARGER even share, so the guard can
-      only under-arm, never over-arm) — i.e. the hot key alone would
-      run several even shares long and is the critical path salting
-      can actually cut.
-
-    Returns the value to pass verbatim as ``salt_min_bucket`` /
-    ``salt_min_cell`` (hot set == keys with d >= the returned value:
-    the ``> threshold`` spelling below is the valves' ``> cap``
-    convention, returned as ``threshold + 1`` to match the knobs'
-    ``>= min_members`` contract), or ``None`` when the corpus is
-    healthy or the hot tail is too light to pay the salt's
-    replication. Purely diagnostic: one tiny aggregate collected to
-    the driver (a scalar probe, the CC-convergence class — never on a
-    default plan), NO pins, NO cache entries, NO effect on any
-    subsequent plan; default operator plans stay byte-identical
-    whether or not this ran (asserted in tests). Pair mass uses the
-    valves' ``shiftright`` exact-long form, so the guard arithmetic
-    cannot round at exactly the mega-key scale it exists to detect.
-
-    Scope: this recommends the TARGETED knob only. A flat-but-coarse
-    distribution — a handful of equally huge buckets with no bulk
-    below them (p-quantile ~ max, so the spread guard never fires) —
-    deliberately returns None: targeting there would replicate
-    essentially the whole b-side, which is just uniform salting with
-    extra marking joins; arm plain ``salt_buckets`` for that regime.
-    """
-    if spread < 1:
-        raise ValueError(f"spread must be >= 1, got {spread}")
-    if straggler_factor <= 0:
-        raise ValueError(
-            f"straggler_factor must be > 0, got {straggler_factor}"
-        )
-    if salt_buckets < 1:
-        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-
-    counts = (
-        keyed.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("d"))
-        .filter(F.col("d") >= 2)
-    )
-    cap = _quantile_cap(
-        counts.select(F.col("d").cast("long").alias("d")), quantile
-    )
-    d = F.col("d").cast("long")
-    threshold = F.col("_max_df") * F.lit(spread)
-    mass = F.shiftright(d * (d - 1), 1)
-    row = (
-        counts.crossJoin(F.broadcast(cap))
-        .agg(
-            F.coalesce(F.sum(mass), F.lit(0)).cast("long").alias("_total"),
-            F.coalesce(F.max(mass), F.lit(0)).cast("long").alias("_max_mass"),
-            F.coalesce(
-                F.sum((d > threshold).cast("long")), F.lit(0)
-            ).alias("_hot_keys"),
-            F.coalesce(F.max(threshold), F.lit(0))
-            .cast("long")
-            .alias("_threshold"),
-        )
-        .first()
-    )
-    if row is None or row["_hot_keys"] == 0 or row["_total"] == 0:
-        return None
-    n_part = _fixed_partition_count(keyed.sparkSession, salt_buckets)
-    if row["_max_mass"] * n_part <= straggler_factor * row["_total"]:
-        return None
-    return int(row["_threshold"]) + 1

@@ -318,3 +318,50 @@ def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, mon
     _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(tmp_path / "o.db"))
     for name, df in seen.items():
         assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name
+
+
+def test_cli_second_root_appends_to_existing_database(spark, tmp_path):
+    """Two runs without ``--clear`` into one database: the second
+    root's repository gets a new id instead of taking over the first
+    one's, and every commit keeps its repository and its files.
+    Re-running the second root adds nothing."""
+    import sqlite3
+
+    for root, name in (("r1", "beta"), ("r2", "alpha")):
+        d = tmp_path / root / name
+        d.mkdir(parents=True)
+        _git(d, "init", "-q")
+        for i in range(2):
+            (d / f"{name}{i}.txt").write_text(f"{name} {i}\n")
+            _git(d, "add", f"{name}{i}.txt")
+            _git(d, "commit", "-q", "-m", f"{name} commit {i}")
+    db = str(tmp_path / "db.sqlite")
+
+    def state():
+        con = sqlite3.connect(db)
+        try:
+            repos = con.execute("SELECT id, name FROM repositories").fetchall()
+            commits = con.execute(
+                "SELECT l.message, r.name FROM logs l"
+                " JOIN repositories r ON l.repository_id = r.id"
+            ).fetchall()
+            files = con.execute(
+                "SELECT c.file_path, l.message FROM changed_files c"
+                " JOIN logs l ON c.commit_hash = l.commit_hash"
+            ).fetchall()
+            n_files = con.execute("SELECT count(*) FROM changed_files").fetchone()[0]
+        finally:
+            con.close()
+        return sorted(repos), sorted(commits), sorted(files), n_files
+
+    _cli(spark, str(tmp_path / "r1"), "-r", "-d", db)
+    _cli(spark, str(tmp_path / "r2"), "-r", "-d", db)
+    want = (
+        [(1, "beta"), (2, "alpha")],
+        sorted((f"{n} commit {i}", n) for n in ("alpha", "beta") for i in range(2)),
+        sorted((f"{n}{i}.txt", f"{n} commit {i}") for n in ("alpha", "beta") for i in range(2)),
+        4,
+    )
+    assert state() == want
+    _cli(spark, str(tmp_path / "r2"), "-r", "-d", db)
+    assert state() == want

@@ -190,99 +190,26 @@ def test_minhash_band_cap_preserves_pairs(spark, oracle_sf_dir):
     assert inc_cap == inc_un and len(inc_un) > 0
 
 
-def test_band_self_join_salted_row_identical(spark, oracle_sf_dir):
-    """salt_buckets on the band self-join (minhash + simhash/hamming —
-    the shared :func:`_band_self_pairs` stage): the recall-PRESERVING
-    hot-bucket arm. The valve DROPS degenerate buckets (recall loss by
-    design, forbidden where a guarantee is promised); salting CONSUMES
-    them in parallel with row-identical output — every pair still
-    meets exactly once, at a's salt, and the distinct-across-bands is
-    unaffected because salting never duplicates a (band, pair)
-    meeting. Corpus plants a hot bucket (15 byte-identical docs: every
-    band of their signatures collides) beside the real sf docs."""
-    from git_log_to_sqlite_spark.operators import simhash_pairs
-
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-    viral = spark.createDataFrame(
-        [
-            (100000 + i, "viral boilerplate shard every copy identical " * 3)
-            for i in range(15)
-        ],
-        "doc_id long, text string",
-    )
-    corpus = docs.select("doc_id", "text").unionByName(viral)
-
-    def norm(out):
-        return sorted(map(tuple, out.collect()))
-
-    plain = norm(minhash_lsh_pairs(corpus, "doc_id", "text"))
-    # non-vacuous: the planted bucket's 105 within-family pairs are in
-    # the set (est_jaccard 1.0 for byte-identical texts)
-    fam = [t for t in plain if t[0] >= 100000 and t[1] >= 100000]
-    assert len(fam) == 15 * 14 // 2 and all(t[2] == 1.0 for t in fam)
-    for s in (4, 32):
-        assert (
-            norm(minhash_lsh_pairs(corpus, "doc_id", "text", salt_buckets=s))
-            == plain
-        ), s
-    # TARGETED salting (the at-scale form: only buckets >= the
-    # threshold replicate) — same rows whether the threshold bites
-    # only the planted family (10), everything repeated (2), or
-    # nothing at all (10**6 -> runtime-empty hot set, AQE's
-    # empty-relation fold must still yield the unsalted semantics)
-    for thresh in (10, 2, 10**6):
-        assert (
-            norm(
-                minhash_lsh_pairs(
-                    corpus, "doc_id", "text",
-                    salt_buckets=8, salt_min_bucket=thresh,
-                )
-            )
-            == plain
-        ), thresh
-    plain_sh = norm(simhash_pairs(corpus, "doc_id", "text"))
-    assert (
-        norm(simhash_pairs(corpus, "doc_id", "text", salt_buckets=4))
-        == plain_sh
-    )
-    assert len(plain_sh) >= len(fam)  # identical docs are 0-hamming pairs
-    assert (
-        norm(
-            simhash_pairs(
-                corpus, "doc_id", "text",
-                salt_buckets=4, salt_min_bucket=10,
-            )
-        )
-        == plain_sh
-    )
-
-
-def test_band_self_join_salted_plan_pinned_and_validated(spark):
-    """The salted band join must carry the same load-bearing plan
-    shape as the semantic pair join (one shared helper now —
-    :func:`~.skew.salted_pair_sides`): both sides explicitly
-    co-partitioned at a FIXED count (REPARTITION_BY_NUM — the one
-    shuffle origin AQE never rewrites on byte estimates; key-only
-    salting measured at the unsalted wall clock in BASELINE.md's
-    mega-cell probe), still an equi-join, never a cartesian. Defaults
-    stay salt-free, and salt_buckets=0 fails BEFORE any pin on every
-    entry point (the banding-validation precedent)."""
+def test_band_join_default_plans_are_plain_equi_joins(spark):
+    """The shared band self-join and probe-join stages plan as one
+    equi-join on (band, band_key): no explicitly pinned repartition
+    (REPARTITION_BY_NUM — AQE never rewrites it), no cartesian, no
+    nested-loop join."""
     import contextlib
     import io
 
-    from git_log_to_sqlite_spark.operators import (
-        fuzzy_decontaminate,
-        hamming_pairs,
-        hamming_probe,
-        incremental_minhash_dedup,
-        simhash_pairs,
+    from git_log_to_sqlite_spark.operators.dedup import (
+        _band_probe_pairs,
+        _band_self_pairs,
     )
-    from git_log_to_sqlite_spark.operators.caching import _LIVE, release_caches
-    from git_log_to_sqlite_spark.operators.dedup import _band_self_pairs
 
     bands = spark.createDataFrame(
         [(i, 0, "k") for i in range(6)],
         "doc_id long, band int, band_key string",
+    )
+    bands_p = spark.createDataFrame(
+        [(100 + i, 0, "k") for i in range(2)],
+        "pid long, band int, band_key string",
     )
 
     def plan_of(df_):
@@ -291,148 +218,13 @@ def test_band_self_join_salted_plan_pinned_and_validated(spark):
             df_.explain("formatted")
         return buf.getvalue()
 
-    salted = plan_of(_band_self_pairs(bands, "doc_id", salt_buckets=4))
-    assert salted.count("REPARTITION_BY_NUM") == 2, salted
-    assert "CartesianProduct" not in salted
-    assert "BroadcastNestedLoopJoin" not in salted
-    # default plan carries no salting machinery at all
-    assert "REPARTITION_BY_NUM" not in plan_of(_band_self_pairs(bands, "doc_id"))
-
-    # targeted mode: the hot-set derivation + marking joins must keep
-    # the pinned co-partitioning and never go cartesian either
-    targeted = plan_of(
-        _band_self_pairs(bands, "doc_id", salt_buckets=4, salt_min_bucket=3)
-    )
-    assert targeted.count("REPARTITION_BY_NUM") == 2, targeted
-    assert "CartesianProduct" not in targeted
-    release_caches()  # the targeted hot set pins
-
-    # the probe-shaped stage carries the identical pins (same shared
-    # helper, but its own entry path — both sides renamed, corpus side
-    # salted): uniform and targeted both co-partition at a fixed
-    # count, default is pin-free
-    from git_log_to_sqlite_spark.operators.dedup import _band_probe_pairs
-
-    bands_p = spark.createDataFrame(
-        [(100 + i, 0, "k") for i in range(2)],
-        "pid long, band int, band_key string",
-    )
-    for kw in ({"salt_buckets": 4}, {"salt_buckets": 4, "salt_min_bucket": 3}):
-        probe_plan = plan_of(
-            _band_probe_pairs(bands_p, bands, ["pid"], ["doc_id"], **kw)
-        )
-        assert probe_plan.count("REPARTITION_BY_NUM") == 2, (kw, probe_plan)
-        assert "CartesianProduct" not in probe_plan, kw
-        assert "BroadcastNestedLoopJoin" not in probe_plan, kw
-    release_caches()  # the targeted hot set pins
-    assert "REPARTITION_BY_NUM" not in plan_of(
-        _band_probe_pairs(bands_p, bands, ["pid"], ["doc_id"])
-    )
-
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    sig = spark.createDataFrame([(1, 7)], "doc_id long, sig long")
-    for call in (
-        lambda: _band_self_pairs(bands, "doc_id", salt_buckets=0),
-        lambda: minhash_lsh_pairs(docs, "doc_id", "text", salt_buckets=0),
-        lambda: simhash_pairs(docs, "doc_id", "text", salt_buckets=0),
-        lambda: hamming_pairs(sig, "doc_id", "sig", bits=32, salt_buckets=0),
-        # salt_min_bucket without a salt, and a degenerate threshold,
-        # both fail before any pin too
-        lambda: minhash_lsh_pairs(
-            docs, "doc_id", "text", salt_min_bucket=10
-        ),
-        lambda: simhash_pairs(
-            docs, "doc_id", "text", salt_buckets=4, salt_min_bucket=1
-        ),
-        lambda: hamming_pairs(
-            sig, "doc_id", "sig", bits=32, salt_min_bucket=10
-        ),
-        # the probe-shaped entry points share the rule
-        lambda: fuzzy_decontaminate(
-            docs, docs, "doc_id", "text", salt_buckets=0
-        ),
-        lambda: incremental_minhash_dedup(
-            docs, docs.limit(1), "doc_id", "text", salt_min_bucket=10
-        ),
-        lambda: hamming_probe(
-            sig.withColumnRenamed("doc_id", "pid"), sig,
-            probe_id="pid", corpus_id="doc_id", sig_col="sig",
-            bits=32, salt_buckets=4, salt_min_bucket=1,
-        ),
+    for plan in (
+        plan_of(_band_self_pairs(bands, "doc_id")),
+        plan_of(_band_probe_pairs(bands_p, bands, ["pid"], ["doc_id"])),
     ):
-        with pytest.raises(ValueError, match="salt_"):
-            call()
-        assert _LIVE == []
-
-
-def test_band_probe_join_salted_row_identical(spark, oracle_sf_dir):
-    """Probe-shaped salting (:func:`_band_probe_pairs` behind
-    hamming_probe / fuzzy_decontaminate / incremental_minhash_dedup):
-    the CORPUS side salts, the small PROBE side replicates — the
-    asymmetry that keeps the replication price on the side that can
-    afford it. Row-identical output in uniform, targeted, and
-    runtime-empty-hot-set modes. fuzzy_decontaminate is the headline:
-    its no-cap recall contract previously left it with NO skew arm at
-    all (any valve cap is a silent false negative), and salting is
-    the arm that preserves the pigeonhole guarantee."""
-    from git_log_to_sqlite_spark.operators import (
-        fuzzy_decontaminate,
-        incremental_minhash_dedup,
-    )
-
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-    viral_text = "viral boilerplate shard every copy identical " * 3
-    viral = spark.createDataFrame(
-        [(100000 + i, viral_text) for i in range(12)],
-        "doc_id long, text string",
-    )
-    train = docs.select("doc_id", "text").unionByName(viral)
-    bench = spark.createDataFrame(
-        [(1, viral_text), (2, "unrelated held-out evaluation question")],
-        "doc_id long, text string",
-    )
-
-    def norm(out):
-        return sorted(map(tuple, out.collect()))
-
-    plain = norm(fuzzy_decontaminate(train, bench, "doc_id", "text"))
-    # non-vacuous: every viral train member is flagged (hamming 0 to
-    # the identical eval doc)
-    flagged = {t[0] for t in plain if t[3] == 1}
-    assert {100000 + i for i in range(12)} <= flagged
-    for kw in (
-        {"salt_buckets": 4},
-        {"salt_buckets": 8, "salt_min_bucket": 10},
-        {"salt_buckets": 8, "salt_min_bucket": 10**6},
-    ):
-        assert (
-            norm(fuzzy_decontaminate(train, bench, "doc_id", "text", **kw))
-            == plain
-        ), kw
-
-    inc = spark.createDataFrame(
-        [(555555, viral_text), (555556, "a brand new never seen document")],
-        "doc_id long, text string",
-    )
-    plain_inc = norm(incremental_minhash_dedup(train, inc, "doc_id", "text"))
-    by_id = {t[0]: t for t in plain_inc}
-    assert by_id[555555][1] == 100000 or by_id[555555][1] in set(
-        r.doc_id for r in docs.select("doc_id").collect()
-    )  # matched SOME history doc (min-id pick); definitely not new
-    assert by_id[555555][3] == 0
-    for kw in (
-        {"salt_buckets": 4},
-        {"salt_buckets": 8, "salt_min_bucket": 10},
-        {"salt_buckets": 8, "salt_min_bucket": 10**6},
-    ):
-        assert (
-            norm(
-                incremental_minhash_dedup(
-                    train, inc, "doc_id", "text", **kw
-                )
-            )
-            == plain_inc
-        ), kw
+        assert "REPARTITION_BY_NUM" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_minhash_band_cap_validation(spark):
@@ -1004,90 +796,6 @@ def test_incremental_substring_persisted_window_table(spark, oracle_sf_dir, tmp_
             None, increment, "doc_id", "text",
             history_windows=stored.drop("pos"),
         )
-
-
-def test_incremental_substring_salted_row_identical(
-    spark, oracle_sf_dir, tmp_path
-):
-    """salt_buckets on the substring probe join (history windows
-    salted per (id, pos) row, increment replicated — the last
-    probe-shaped join to gain the arm): row-identical spans in
-    uniform, targeted, and runtime-empty-hot-set modes on a history
-    carrying a planted hot boilerplate passage; WindowStore threads
-    the knobs; bad salt args fail before any pin."""
-    from git_log_to_sqlite_spark.operators import (
-        WindowStore,
-        incremental_substring_spans,
-    )
-    from git_log_to_sqlite_spark.operators.caching import (
-        _LIVE,
-        release_caches,
-    )
-
-    d = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    boiler = (
-        "shared legal boilerplate passage repeated verbatim in every "
-        "single copy here"
-    )
-    hot = spark.createDataFrame(
-        [
-            (100000 + i, f"doc {i} unique prefix {boiler} unique suffix {i}")
-            for i in range(12)
-        ],
-        "doc_id long, text string",
-    )
-    history = d.filter(F.col("doc_id") % 5 != 0).unionByName(hot)
-    increment = spark.createDataFrame(
-        [
-            (900000, f"probe document carrying {boiler} and nothing else"),
-            (900001, "a fully novel document with no shared runs at all"),
-        ],
-        "doc_id long, text string",
-    )
-
-    def norm(**kw):
-        return sorted(
-            tuple(r)
-            for r in incremental_substring_spans(
-                history, increment, "doc_id", "text",
-                window=6, min_run_tokens=6, **kw,
-            ).collect()
-        )
-
-    plain = norm()
-    hits = {t[1] for t in plain if t[0] == 900000}
-    assert {100000 + i for i in range(12)} <= hits  # non-vacuous
-    assert norm(salt_buckets=4) == plain
-    assert norm(salt_buckets=8, salt_min_bucket=10) == plain
-    assert norm(salt_buckets=8, salt_min_bucket=10**6) == plain
-
-    def run_store(path, **kw):
-        st = WindowStore(
-            spark, str(tmp_path / path), id_col="doc_id", window=6
-        )
-        st.bootstrap(history, "text")
-        ann = sorted(map(tuple, st.ingest(
-            increment, "text", min_run_tokens=6, **kw
-        ).collect()))
-        return ann, st.read().count()
-
-    splain = run_store("w_plain")
-    assert run_store("w_t", salt_buckets=4, salt_min_bucket=10) == splain
-
-    release_caches()  # the direct targeted calls' hot-set pins
-    stb = WindowStore(spark, str(tmp_path / "w_plain"), id_col="doc_id",
-                      window=6)
-    for call in (
-        lambda: incremental_substring_spans(
-            history, increment, "doc_id", "text", salt_buckets=0
-        ),
-        lambda: stb.ingest(increment, "text", salt_min_bucket=10),
-    ):
-        with pytest.raises(ValueError, match="salt_"):
-            call()
-        assert _LIVE == []
 
 
 def test_incremental_substring_history_valve(spark):
@@ -1850,191 +1558,6 @@ def test_semantic_dedup_zero_norm_never_dropped(spark):
     assert got[4] == (None, 1)     # ...even of each other (exact dedup's job)
 
 
-def test_semantic_dedup_salted_pair_join_row_identical(spark):
-    """The hot-cell ACTION arm behind the round-12 telemetry (the
-    mega-cell probe measured the unsalted pair join quadratic AND
-    serialized — one cell is one join key): salt_buckets=S salts the
-    a-side by id hash and replicates the b-side S ways, so every
-    (a, b) pair still meets exactly once and the annotation is
-    ROW-IDENTICAL to the unsalted plan — salting is an execution
-    strategy, never a semantics change (capping is the forbidden
-    one). Corpus plants the hard cases: a 12-member hot cell with an
-    upper-triangular chain (a~b~c, a !~ c: both b and c drop), a
-    second cell, and a zero-norm vector (NaN cosines — never dropped,
-    never blamed, in both plans)."""
-    import math
-
-    from git_log_to_sqlite_spark.operators import semantic_dedup
-    from git_log_to_sqlite_spark.operators.similarity import (
-        _semantic_annotate,
-    )
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    # hot cell 0: 12 members, 3-degree ladder -> chains at a ~4.5deg
-    # threshold; cell 1: one close pair; plus one zero vector
-    rows = [(i, at(3 * i)) for i in range(12)]
-    rows += [(20, at(180)), (21, at(178)), (22, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    threshold = math.cos(math.radians(4.5))
-
-    def norm(df_):
-        # the zero vector's centroid_sim is NaN by design, and
-        # nan != nan would fail tuple equality on identical rows
-        return sorted(
-            tuple("NaN" if isinstance(x, float) and x != x else x for x in r)
-            for r in map(tuple, df_.collect())
-        )
-
-    plain = norm(semantic_dedup(
-        df, "vec_id", "embedding", cents, threshold=threshold))
-    for s in (2, 4, 7):
-        salted = semantic_dedup(df, "vec_id", "embedding", cents,
-                                threshold=threshold, salt_buckets=s)
-        assert norm(salted) == plain, s
-    # TARGETED form: only cells >= salt_min_cell replicate — identical
-    # rows whether the threshold bites the 12-member hot cell only
-    # (10), every cell (2), or none (10**6: runtime-empty hot set,
-    # AQE's empty-relation fold must keep unsalted semantics)
-    for mc in (10, 2, 10**6):
-        targeted = semantic_dedup(df, "vec_id", "embedding", cents,
-                                  threshold=threshold, salt_buckets=4,
-                                  salt_min_cell=mc)
-        assert norm(targeted) == plain, mc
-    # non-vacuous: the chain dropped somebody and kept somebody in
-    # the hot cell, and the zero vector survived
-    by_id = dict((t[0], t[3]) for t in plain)
-    assert any(v is not None for k, v in by_id.items() if k < 12)
-    assert any(v is None for k, v in by_id.items() if 0 < k < 12)
-    assert by_id[22] is None
-
-    # plan shape: the salted pair join replicates b via a Generate and
-    # stays an equi-join (never a cartesian); salt is a join key, so
-    # the hot cell hashes across salt_buckets partitions
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        semantic_dedup(df, "vec_id", "embedding", cents,
-                       threshold=threshold, salt_buckets=4
-                       ).explain("formatted")
-    plan = buf.getvalue()
-    assert "Generate" in plan and "explode(" in plan, plan
-    assert "CartesianProduct" not in plan
-    # the only nested-loop joins are renderings of the 1-row
-    # centroid-array attach of the table-form assignment (round 15
-    # quantizer default; the cached subtree re-renders it with fresh
-    # ids, so ids are not countable here) — every occurrence must be
-    # the Cross BuildRight scalar-attach shape; the salted PAIR join
-    # itself stays an equi-join, pinned by the co-partitioning asserts
-    # below
-    import re
-
-    bnlj_lines = [l for l in plan.splitlines()
-                  if "BroadcastNestedLoopJoin" in l]
-    tree_lines = [l for l in bnlj_lines if not l.strip().startswith("(")]
-    header_lines = [l for l in bnlj_lines if l.strip().startswith("(")]
-    # every TREE rendering (including re-renderings inside cached /
-    # reused subtrees) must be the Cross BuildRight scalar-attach
-    assert tree_lines and all(
-        "Cross BuildRight" in l for l in tree_lines
-    ), bnlj_lines
-    # resolve the detail-section headers "(id) BroadcastNestedLoopJoin"
-    # back to tree ids: every header id must be one the tree pinned as
-    # Cross BuildRight above — a NEW nested-loop join could not sneak
-    # in via a details block whose tree line this test never saw
-    attach_ids = {
-        m.group(1)
-        for l in tree_lines
-        for m in [re.search(r"BroadcastNestedLoopJoin Cross BuildRight \((\d+)\)", l)]
-        if m
-    }
-    header_ids = {
-        m.group(1)
-        for l in header_lines
-        for m in [re.match(r"\((\d+)\) BroadcastNestedLoopJoin", l.strip())]
-        if m
-    }
-    assert header_ids <= attach_ids, (header_ids, attach_ids, bnlj_lines)
-    # the load-bearing half of the fix: both pair-join sides are
-    # explicitly co-partitioned on (cell, salt) with a FIXED count
-    # (REPARTITION_BY_NUM — the one shuffle origin AQE never
-    # rewrites); without it AQE broadcast-converts or coalesces the
-    # salt away on byte estimates and the hot cell re-serializes
-    # (measured at the unsalted 720 s in BASELINE.md's probe). Count
-    # only the hash-partitioned (cell, salt) co-partitions: the
-    # table-form centroid frame adds SinglePartition
-    # REPARTITION_BY_NUM lines (the one-row model-state move, a
-    # different class)
-    copart = [l for l in plan.splitlines()
-              if "REPARTITION_BY_NUM" in l and "hashpartitioning" in l]
-    assert len(copart) == 2, plan
-
-    with pytest.raises(ValueError, match="salt_buckets"):
-        _semantic_annotate(df.limit(0), "vec_id", 0.9, None, salt_buckets=0)
-    with pytest.raises(ValueError, match="salt_min_cell"):
-        _semantic_annotate(
-            df.limit(0), "vec_id", 0.9, None, salt_min_cell=100
-        )
-
-
-def test_semantic_store_salt_buckets_pass_through(spark, tmp_path):
-    """SemanticStore(salt_buckets=S) must reproduce the unsalted
-    store bit for bit across bootstrap AND ingest — the knob rides
-    BOTH intra-batch annotate stages AND the history probe join
-    (probe shape: store side salted per kept row, batch replicated;
-    the backfill-regime arm — a hot cell's |batch cell| x |kept cell|
-    product is one join key unsalted). Uniform, targeted, and
-    runtime-empty-hot-set modes all bit-equal."""
-    import math
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    schema = "vec_id long, embedding array<double>"
-    boot = [(i, at(6 * i)) for i in range(10)]
-    batch = [(100 + i, at(6 * i + 1)) for i in range(5)]      # history dups
-    batch += [(200, at(45.0)), (201, at(45.5)), (202, at(46.0))]  # batch chain
-
-    def run(path, s, mc=None):
-        store = SemanticStore(
-            spark, path, threshold=0.9995, salt_buckets=s, salt_min_cell=mc
-        )
-        store.bootstrap(spark.createDataFrame(boot, schema), cents)
-        ann = sorted(map(tuple, store.ingest(
-            spark.createDataFrame(batch, schema)).collect()))
-        kept = sorted(r["vec_id"] for r in store.read().collect())
-        return ann, kept
-
-    plain = run(str(tmp_path / "plain"), 1)
-    assert run(str(tmp_path / "salted"), 3) == plain
-    # targeted: threshold bites the store's populated cells (2), and
-    # a runtime-empty hot set (10**6 — AQE's empty-relation fold must
-    # keep the unsalted semantics on the history probe too)
-    assert run(str(tmp_path / "targeted"), 3, mc=2) == plain
-    assert run(str(tmp_path / "empty_hot"), 3, mc=10**6) == plain
-    # non-vacuous: both drop sources actually fired under the fixture,
-    # so the salted annotate path was exercised on real drops
-    ann, kept = plain
-    sources = [r[4] for r in ann]
-    assert sources.count("history") == 5
-    assert sources.count("batch") >= 1
-    assert len(kept) == 10 + (len(batch) - 5 - sources.count("batch"))
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="salt_buckets"):
-        SemanticStore(spark, str(tmp_path / "bad"), salt_buckets=0)
-
-
 def test_semantic_dedup_cell_stats_observation(spark):
     """The round-11 scale watch: semantic_dedup was the one pair stage
     without a cell-occupancy observable. Planted mega-cell — six
@@ -2742,65 +2265,6 @@ def test_image_near_dup_planted_twins(spark):
     assert (1, 3) not in got and (2, 3) not in got
 
 
-def test_multimodal_salt_passthrough_row_identical(spark):
-    """The four Hamming-modality wrappers (image/audio/video near-dup,
-    cross-modal image-in-video) thread salt_buckets / salt_min_bucket
-    through to the shared pair/probe stages with row-identical output
-    — the knobs are pure execution strategy, and the stage-level
-    semantics are proven in the band-join tests; this pins the wrapper
-    plumbing, plus the before-the-pin validation (a bad salt arg must
-    not leak a signature-pin registry entry)."""
-    import random
-
-    from git_log_to_sqlite_spark.operators.caching import (
-        _LIVE,
-        release_caches,
-    )
-    from git_log_to_sqlite_spark.operators.multimodal import (
-        audio_near_dup_pairs,
-        image_in_video_frames,
-        image_near_dup_pairs,
-        video_near_dup_pairs,
-    )
-
-    def payload(seed, n=600):
-        r = random.Random(seed)
-        return bytes(r.randrange(256) for _ in range(n))
-
-    fam = payload("fam")
-    media = spark.createDataFrame(
-        [(i, fam, "application/octet-stream", len(fam)) for i in range(1, 7)]
-        + [
-            (10 + i, payload(f"solo{i}"), "application/octet-stream", 600)
-            for i in range(3)
-        ],
-        "media_id long, payload binary, mime_type string, byte_len int",
-    )
-    stills = media.filter("media_id >= 10")
-    grid_fn = lambda p, r, c: list(p[: r * (c + 1)])  # noqa: E731
-
-    def norm(df_):
-        return sorted(map(tuple, df_.collect()))
-
-    ops = (
-        lambda **s: image_near_dup_pairs(media, grid_fn=grid_fn, **s),
-        lambda **s: audio_near_dup_pairs(media, **s),
-        lambda **s: video_near_dup_pairs(media, grid_fn=grid_fn, **s),
-        lambda **s: image_in_video_frames(
-            stills, media, grid_fn=grid_fn, **s
-        ),
-    )
-    for op in ops:
-        plain = norm(op())
-        assert len(plain) > 0  # the 6-copy family pairs at hamming 0
-        assert norm(op(salt_buckets=3)) == plain
-        assert norm(op(salt_buckets=4, salt_min_bucket=4)) == plain
-        release_caches()
-        with pytest.raises(ValueError, match="salt_"):
-            op(salt_buckets=0)
-        assert _LIVE == []
-
-
 def test_audio_near_dup_planted_twins(spark):
     """Haitsma-Kalker fingerprint + hamming_pairs over a raw-energy
     payload format (the energy_fn seam makes the bit math testable
@@ -3502,85 +2966,6 @@ def test_hamming_store_multi_day_ingest(spark, tmp_path):
     # store grew by exactly the novel items: 20 bootstrap + 101
     assert store.read().count() == 21
     assert {r["mid"] for r in store.read().collect()} == set(base) | {101}
-
-
-def test_band_stores_salt_passthrough_row_identical(spark, tmp_path):
-    """SignatureStore.ingest / HammingStore.ingest thread the probe-
-    shaped salt knobs through to their operators (history side salted,
-    batch replicated — the SemanticStore precedent) with bit-identical
-    annotations AND store growth in uniform, targeted, and runtime-
-    empty-hot-set modes; bad salt args fail before any pin."""
-    import random
-
-    from git_log_to_sqlite_spark.operators import HammingStore, SignatureStore
-    from git_log_to_sqlite_spark.operators.caching import (
-        _LIVE,
-        release_caches,
-    )
-
-    rng = random.Random(7)
-    base = [(i, rng.getrandbits(60)) for i in range(12)]
-    # hot history bucket: identical signatures — every band collides
-    hot = [(100 + i, base[0][1]) for i in range(10)]
-    batch = [(500, base[0][1] ^ 0b1), (501, rng.getrandbits(60))]
-
-    def run_h(path, **kw):
-        st = HammingStore(spark, str(tmp_path / path), id_col="mid",
-                          sig_col="sig", bits=60)
-        st.bootstrap(spark.createDataFrame(base + hot, "mid long, sig long"))
-        ann = sorted(map(tuple, st.ingest(
-            spark.createDataFrame(batch, "mid long, sig long"),
-            bands=4, max_hamming=3, **kw,
-        ).collect()))
-        return ann, sorted(r["mid"] for r in st.read().collect())
-
-    plain = run_h("h_plain")
-    assert plain[0][0][4] == 0  # the near-copy matched history
-    assert run_h("h_u", salt_buckets=4) == plain
-    assert run_h("h_t", salt_buckets=4, salt_min_bucket=5) == plain
-    assert run_h("h_e", salt_buckets=4, salt_min_bucket=10**6) == plain
-
-    viral_text = "viral boilerplate every copy identical " * 3
-    docs = [(i, f"some shared prefix words document number {i} " * 2)
-            for i in range(8)]
-    viral = [(50 + i, viral_text) for i in range(8)]
-    inc = [(900, viral_text), (901, "a genuinely brand new document")]
-
-    def run_s(path, **kw):
-        st = SignatureStore(spark, str(tmp_path / path), id_col="doc_id")
-        st.bootstrap(
-            spark.createDataFrame(docs + viral, "doc_id long, text string"),
-            "text",
-        )
-        ann = sorted(map(tuple, st.ingest(
-            spark.createDataFrame(inc, "doc_id long, text string"),
-            "text", **kw,
-        ).collect()))
-        return ann, sorted(r["doc_id"] for r in st.read().collect())
-
-    splain = run_s("s_plain")
-    by_id = {t[0]: t for t in splain[0]}
-    assert by_id[900][3] == 0 and by_id[901][3] == 1  # non-vacuous
-    assert run_s("s_u", salt_buckets=4) == splain
-    assert run_s("s_t", salt_buckets=4, salt_min_bucket=5) == splain
-
-    # the no-leak assertion below is about THIS test's calls: clear
-    # whatever pins earlier suite tests may have left (the sibling
-    # salted tests' release-then-assert pattern — _LIVE is global)
-    release_caches()
-    stb = HammingStore(spark, str(tmp_path / "h_plain"), id_col="mid",
-                       sig_col="sig", bits=60)
-    sts = SignatureStore(spark, str(tmp_path / "s_plain"), id_col="doc_id")
-    bdf = spark.createDataFrame(batch, "mid long, sig long")
-    idf = spark.createDataFrame(inc, "doc_id long, text string")
-    for call in (
-        lambda: stb.ingest(bdf, salt_buckets=0),
-        lambda: stb.ingest(bdf, salt_buckets=4, salt_min_bucket=1),
-        lambda: sts.ingest(idf, "text", salt_min_bucket=10),
-    ):
-        with pytest.raises(ValueError, match="salt_"):
-            call()
-        assert _LIVE == []
 
 
 def test_semantic_store_multi_day_ingest(spark, tmp_path):
@@ -4820,244 +4205,6 @@ def test_token_budget_routes_agree_on_fractional_weights(spark):
     b = {r["doc_id"]: r["cum_before"] for r in two.collect()}
     assert set(a) == set(b)
     assert all(abs(a[k] - b[k]) < 1e-9 for k in a)
-
-
-def test_recommend_salt_threshold_core_guards(spark):
-    """The telemetry->knob loop (VERDICT r12 #3): the recommendation
-    must flag a planted mega key, stay None on healthy corpora, and
-    respect BOTH guards — spread (hot tail exists above the bulk) and
-    straggler (that tail's largest key would actually serialize a
-    task worth splitting). Parallelism is pinned to the driver's 32
-    for the straggler arithmetic: the guard is DELIBERATELY
-    parallelism-dependent (four equal hot buckets on four partitions
-    are balanced, the same corpus on 32 is one straggler)."""
-    from git_log_to_sqlite_spark.operators import recommend_salt_threshold
-    from git_log_to_sqlite_spark.operators.dedup import _hot_key_set
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        # healthy: 200 keys x 3 members — nothing above 10 x p92
-        healthy = spark.range(600).select((F.col("id") % 200).alias("k"))
-        assert recommend_salt_threshold(healthy, ["k"]) is None
-        # planted mega key (-1, 500 members) over the same bulk:
-        # p92 of the repeated-key sizes = 3, so the recommendation is
-        # 10 x 3 + 1 — and _hot_key_set armed with it (the knobs'
-        # >= contract == the valve's > rec-1 spelling) captures
-        # EXACTLY the planted key
-        mega = healthy.unionByName(
-            spark.range(500).select(F.lit(-1).alias("k"))
-        )
-        rec = recommend_salt_threshold(mega, ["k"])
-        assert rec == 31
-        hot = _hot_key_set(mega, ["k"], rec - 1, None)
-        assert [r["k"] for r in hot.collect()] == [-1]
-        # hot-but-light: a 41-member key over 10k 4-member keys —
-        # the spread guard fires (41 > 10 x p92=4) but its 820 pairs
-        # are no critical path next to 60k bulk pairs, so the
-        # straggler guard vetoes the salt's replication cost
-        light = (
-            spark.range(40000)
-            .select((F.col("id") % 10000).alias("k"))
-            .unionByName(spark.range(41).select(F.lit(-1).alias("k")))
-        )
-        assert recommend_salt_threshold(light, ["k"]) is None
-        # singleton-only corpus: no repeated keys at all -> None
-        # (the empty-histogram path, coalesced zeros end to end)
-        singles = spark.range(100).select(F.col("id").alias("k"))
-        assert recommend_salt_threshold(singles, ["k"]) is None
-        with pytest.raises(ValueError):
-            recommend_salt_threshold(healthy, ["k"], spread=0)
-        with pytest.raises(ValueError):
-            recommend_salt_threshold(healthy, ["k"], straggler_factor=0.0)
-        with pytest.raises(ValueError):
-            recommend_salt_threshold(healthy, ["k"], salt_buckets=0)
-        # salt_buckets pass-through (round-14 ADVICE): the armed join
-        # shuffles to max(shuffle.partitions, salt_buckets), so the
-        # straggler guard's even share must be computed at that SAME
-        # count. The hot-but-light corpus above is vetoed at 32
-        # partitions (820-pair max key vs a ~1.9k even share), but at
-        # salt_buckets=256 the even share shrinks ~8x below the max
-        # key's mass — the key IS the critical path at that
-        # parallelism and the guard arms: rec = 10 x p92(=4) + 1.
-        assert (
-            recommend_salt_threshold(light, ["k"], salt_buckets=256) == 41
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def test_fixed_partition_count_announces_surprising_counts(spark, caplog):
-    """_fixed_partition_count (round-14 ADVICE): the pigeonhole bump
-    (salt_buckets above the configured shuffle partition count) must be
-    announced on this module's own logger — the pinned repartition is
-    AQE-exempt, so a silently widened count is otherwise invisible
-    until stage metrics — while in-range bucket counts stay silent."""
-    import logging
-
-    from git_log_to_sqlite_spark.operators.skew import (
-        _fixed_partition_count,
-    )
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        logger = "git_log_to_sqlite_spark.operators.skew"
-        with caplog.at_level(logging.WARNING, logger=logger):
-            assert _fixed_partition_count(spark, 8) == 32
-            assert not caplog.records
-            assert _fixed_partition_count(spark, 128) == 128
-        assert any(
-            "pigeonhole" in r.getMessage() for r in caplog.records
-        ), [r.getMessage() for r in caplog.records]
-        # conf-unreadable AND bucket-bumped: exactly ONE line — the
-        # fallback already reports the final bumped count, so the
-        # pigeonhole warning is suppressed for it (no duplicate,
-        # conflicting-sounding pair for the same call). The live conf
-        # validates its values, so the managed-'auto' case is driven
-        # through a stub exposing the two attributes the helper reads.
-        caplog.clear()
-
-        class _AutoConf:
-            def get(self, key):
-                return "auto"
-
-        class _ManagedSession:
-            conf = _AutoConf()
-            sparkContext = spark.sparkContext
-
-        big = spark.sparkContext.defaultParallelism + 64
-        with caplog.at_level(logging.WARNING, logger=logger):
-            assert _fixed_partition_count(_ManagedSession(), big) == big
-        assert len(caplog.records) == 1, [
-            r.getMessage() for r in caplog.records
-        ]
-        assert "unreadable" in caplog.records[0].getMessage()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def test_recommend_salt_knob_wrappers_and_noop_path(spark, oracle_sf_dir):
-    """The public wrappers arm the knobs from a raw corpus: the band
-    form flags the planted viral-boilerplate buckets on real sf docs
-    and stays None without the plant; the cell form flags a planted
-    mega cell and stays None on a balanced quantizer. The helpers are
-    diagnostic-ONLY: the advised operators' default plans are
-    byte-identical whether or not a recommendation ran (the no-op
-    mutation check — no pins, no cache entries, no conf writes)."""
-    import io
-    import contextlib
-    import math
-
-    from git_log_to_sqlite_spark.operators import (
-        minhash_lsh_pairs,
-        recommend_salt_min_bucket,
-        recommend_salt_min_cell,
-        semantic_dedup,
-    )
-    from git_log_to_sqlite_spark.operators.dedup import (
-        _band_keys,
-        _hot_key_set,
-        minhash_signatures,
-    )
-
-    def plan(df):
-        import re
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        # strip the session-monotonic counters (attribute exprIds,
-        # plan/cache ids) — they advance on EVERY query the session
-        # ran in between, so "byte-identical plan" means identical
-        # after this normalization and nothing else may differ
-        out = re.sub(r"#\d+|plan_id=\d+|cached \d+", "#", buf.getvalue())
-        return re.sub(r"lambda [a-z]+_\d+", "lambda v", out)
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        docs = spark.read.parquet(
-            f"{oracle_sf_dir}/documents.parquet"
-        ).select("doc_id", "text")
-        assert recommend_salt_min_bucket(docs, "doc_id", "text") is None
-        viral = spark.createDataFrame(
-            [
-                (100000 + i, "viral boilerplate shard every copy identical " * 3)
-                for i in range(100)
-            ],
-            "doc_id long, text string",
-        )
-        corpus = docs.unionByName(viral)
-        spark.catalog.clearCache()
-        before = plan(minhash_lsh_pairs(corpus, "doc_id", "text"))
-        spark.catalog.clearCache()
-        rec_b = recommend_salt_min_bucket(corpus, "doc_id", "text")
-        # the hot set the recommendation selects is exactly the
-        # plant: one bucket per band of the identical-signature
-        # family, every member a viral doc id
-        assert rec_b is not None and 2 <= rec_b <= 100
-        bands = _band_keys(
-            minhash_signatures(corpus, "doc_id", "text", 8, 3),
-            "doc_id", 8, 2,
-        )
-        hot = _hot_key_set(bands, ["band", "band_key"], rec_b - 1, None)
-        assert hot.count() == 4  # 8 hashes / 2 rows -> 4 bands
-        hot_members = bands.join(hot, ["band", "band_key"], "left_semi")
-        assert hot_members.filter(F.col("doc_id") < 100000).count() == 0
-        spark.catalog.clearCache()
-        after = plan(minhash_lsh_pairs(corpus, "doc_id", "text"))
-        assert before == after  # byte-identical default plan
-
-        def at(deg):
-            r = math.radians(deg)
-            return [math.cos(r), math.sin(r)]
-
-        cents = [at(360 * j / 20) for j in range(20)]
-        balanced = spark.createDataFrame(
-            [(i * 1000 + j, at(360 * j / 20)) for j in range(20) for i in range(20)],
-            "vec_id long, embedding array<double>",
-        )
-        assert recommend_salt_min_cell(balanced, "embedding", cents) is None
-        rows = [(i * 1000 + j, at(360 * j / 20)) for j in range(20) for i in range(3)]
-        rows += [(90000 + i, at(0.001)) for i in range(400)]
-        megacell = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        spark.catalog.clearCache()
-        before = plan(
-            semantic_dedup(megacell, "vec_id", "embedding", cents, threshold=0.9)
-        )
-        spark.catalog.clearCache()
-        # 403-member cell over a 3-member bulk: 10 x p92(=3) + 1
-        rec_c = recommend_salt_min_cell(megacell, "embedding", cents)
-        assert rec_c == 31
-        spark.catalog.clearCache()
-        after = plan(
-            semantic_dedup(megacell, "vec_id", "embedding", cents, threshold=0.9)
-        )
-        assert before == after  # byte-identical default plan
-        # the loop end to end: feed the recommendation straight into
-        # the knob it names — output row-identical to unsalted
-        def rows(df_):
-            return sorted(
-                tuple("NaN" if isinstance(x, float) and x != x else x for x in r)
-                for r in map(tuple, df_.collect())
-            )
-
-        plain = rows(
-            semantic_dedup(megacell, "vec_id", "embedding", cents, threshold=0.9)
-        )
-        armed = rows(
-            semantic_dedup(
-                megacell, "vec_id", "embedding", cents, threshold=0.9,
-                salt_buckets=4, salt_min_cell=rec_c,
-            )
-        )
-        assert armed == plain
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.catalog.clearCache()
 
 
 def test_append_assignment_never_shuffles_the_data(clustered_vectors, tmp_path):

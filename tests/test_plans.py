@@ -136,9 +136,8 @@ def test_simhash_pairs_no_cartesian(spark, sf):
         i
         for i, b in nodes.items()
         # the shared _band_self_pairs stage joins renamed projections
-        # (_bk_a on the left, in every salting mode) — the ONLY
-        # spelling; a raw band_key join here would mean a plan that
-        # bypassed the shared stage
+        # (_bk_a on the left) — the ONLY spelling; a raw band_key join
+        # here would mean a plan that bypassed the shared stage
         if "Join type: Inner" in b and "_bk_a" in b.split("Right keys")[0]
     ]
     assert len(anti) == 2 and band_inner
@@ -485,9 +484,8 @@ def test_minhash_band_cap_filters_before_band_join(spark, sf):
         i
         for i, b in nodes.items()
         # _band_self_pairs joins renamed projections (_bk_a on the
-        # left, in every salting mode) — the ONLY spelling; a raw
-        # band_key join here would mean a plan that bypassed the
-        # shared stage
+        # left) — the ONLY spelling; a raw band_key join here would
+        # mean a plan that bypassed the shared stage
         if "Join type: Inner" in b and "_bk_a" in b.split("Right keys")[0]
     ]
     assert len(anti) == 2, sorted(nodes)  # one per self-join alias
@@ -798,17 +796,15 @@ def test_video_fingerprint_vote_combines_map_side(spark, sf):
 
 
 def test_incremental_substring_default_plan_broadcasts_small_increment(spark, sf):
-    """The regime-law premise (BASELINE.md round 13): a daily-sized
-    increment's window table must BROADCAST in the default (unsalted,
-    uncapped) incremental plan — the BroadcastHashJoin parallelizes a
-    hot window's d_hist x d_inc product over the history side's input
-    splits, which is exactly why the salt knob must stay off in this
-    regime (its co-partition pin would force the shuffled join:
-    measured 36-53 s vs 1.3-2.7 s on the join stage at 487M one-key
-    products). A change that silently defeats this broadcast — a
-    stray repartition on the default path, a projection that breaks
-    size estimation — costs 10-50x at scale, so the strategy is
-    pinned here."""
+    """A daily-sized increment's window table must BROADCAST in the
+    default (uncapped) incremental plan: the BroadcastHashJoin
+    parallelizes a hot window's d_hist x d_inc product over the history
+    side's input splits, where a shuffled join would run it in one
+    sort-merge task (measured 1.3-2.7 s vs 36-53 s on the join stage
+    at 487M one-key products). A change that silently defeats this
+    broadcast — a stray repartition, a projection that breaks size
+    estimation — costs 10-50x at scale, so the strategy is pinned
+    here."""
     from pyspark.sql import functions as F
 
     from git_log_to_sqlite_spark.operators import incremental_substring_spans

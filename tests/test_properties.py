@@ -365,23 +365,15 @@ _band_rows = st.lists(
 )
 
 
-@given(
-    rows=_band_rows,
-    probe=_band_rows,
-    s=st.sampled_from([2, 3, 5]),
-    thresh=st.sampled_from([None, 2, 3, 10**6]),
-)
+@given(rows=_band_rows, probe=_band_rows)
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_salted_pair_joins_row_identical_any_input(sess, rows, probe, s, thresh):
-    """Salting invariant on ANY bands table (SURVEY 5.2.4): the salted
-    self-join and probe-join stages are pure execution strategies —
-    for every salt width and every targeted threshold (including one
-    that never fires), the pair set equals the unsalted stage's. The
-    planted-fixture tests prove the interesting regimes; this pins the
-    algebra (every pair meets exactly once, at a's salt) against
-    arbitrary bucket shapes, duplicate rows included."""
-    from git_log_to_sqlite_spark.operators.caching import release_caches
+def test_salted_pair_joins_row_identical_any_input(sess, rows, probe):
+    """Band-join algebra on ANY bands table (SURVEY 5.2.4), duplicate
+    rows included, against a pure-Python reference: the self join
+    yields every ``(id_a, id_b)`` with ``id_a < id_b`` sharing a
+    ``(band, band_key)``, once across bands; the probe join yields
+    every ``(pid, doc_id)`` sharing a ``(band, band_key)``, once."""
     from git_log_to_sqlite_spark.operators.dedup import (
         _band_probe_pairs,
         _band_self_pairs,
@@ -390,90 +382,30 @@ def test_salted_pair_joins_row_identical_any_input(sess, rows, probe, s, thresh)
     bands = sess.createDataFrame(
         rows, "doc_id long, band int, band_key string"
     )
-    kw = dict(salt_buckets=s)
-    if thresh is not None:
-        kw["salt_min_bucket"] = thresh
-    plain_self = set(map(tuple, _band_self_pairs(bands, "doc_id").collect()))
-    got_self = set(map(tuple, _band_self_pairs(bands, "doc_id", **kw).collect()))
-    release_caches()
-    assert got_self == plain_self
+    want_self = {
+        (a, b)
+        for a, ba, ka in rows
+        for b, bb, kb in rows
+        if (ba, ka) == (bb, kb) and a < b
+    }
+    got_self = list(map(tuple, _band_self_pairs(bands, "doc_id").collect()))
+    assert len(got_self) == len(set(got_self))
+    assert set(got_self) == want_self
 
     bands_p = sess.createDataFrame(
         probe, "pid long, band int, band_key string"
     )
-    plain_probe = set(map(tuple, _band_probe_pairs(
+    want_probe = {
+        (p, c)
+        for p, bp, kp in probe
+        for c, bc, kc in rows
+        if (bp, kp) == (bc, kc)
+    }
+    got_probe = list(map(tuple, _band_probe_pairs(
         bands_p, bands, ["pid"], ["doc_id"]
     ).collect()))
-    got_probe = set(map(tuple, _band_probe_pairs(
-        bands_p, bands, ["pid"], ["doc_id"], **kw
-    ).collect()))
-    release_caches()
-    assert got_probe == plain_probe
-
-
-@given(
-    counts=st.lists(st.integers(1, 400), min_size=1, max_size=10),
-    spread=st.integers(2, 12),
-    factor=st.floats(0.5, 4.0, allow_nan=False),
-)
-@settings(**_SETTINGS)
-def test_recommend_salt_threshold_matches_python_reference(
-    sess, counts, spread, factor
-):
-    """Pure-Python reference equality for the telemetry->knob
-    recommendation on ARBITRARY bucket shapes (the DSIR-style oracle):
-    the reference re-implements the exact contract — repeated-key
-    (d >= 2) histogram, the smallest d* with >= q of repeated keys at
-    or under it via the same exact integer compare _quantile_cap
-    compiles (cum * den >= num * tot), hot = d > spread x d*,
-    straggler = max d(d-1)/2 x n_part > factor x total pair mass —
-    so the Spark plan and the spec can never drift silently."""
-    from fractions import Fraction
-
-    from git_log_to_sqlite_spark.operators.skew import (
-        _fixed_partition_count,
-        recommend_salt_threshold,
-    )
-
-    q = 0.92
-    old = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        rows = [(k,) for k, c in enumerate(counts) for _ in range(c)]
-        keyed = sess.createDataFrame(rows, "k long")
-
-        rep = sorted(c for c in counts if c >= 2)
-        if not rep:
-            expected = None
-        else:
-            frac = Fraction(str(q))
-            tot = len(rep)
-            cum = 0
-            dstar = rep[-1]
-            seen = 0
-            for d in sorted(set(rep)):
-                seen += rep.count(d)
-                if seen * frac.denominator >= frac.numerator * tot:
-                    dstar = d
-                    break
-            threshold = dstar * spread
-            hot = [c for c in rep if c > threshold]
-            total = sum(c * (c - 1) // 2 for c in rep)
-            max_mass = max(c * (c - 1) // 2 for c in rep)
-            n_part = _fixed_partition_count(sess, 1)
-            if not hot or total == 0:
-                expected = None
-            elif max_mass * n_part <= factor * total:
-                expected = None
-            else:
-                expected = threshold + 1
-
-        got = recommend_salt_threshold(
-            keyed, ["k"], quantile=q, spread=spread, straggler_factor=factor
-        )
-        assert got == expected, (counts, spread, factor, got, expected)
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(got_probe) == len(set(got_probe))
+    assert set(got_probe) == want_probe
 
 
 @given(
