@@ -109,25 +109,33 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
     same-named directories still merge under one name key downstream —
     the reference's own name-keyed behavior — and every commit is
     parsed.
+
+    The log is written as the raw bytes git printed: a name or message
+    that is not valid UTF-8 reaches Spark's text reader, which turns
+    each invalid byte into U+FFFD, instead of failing the whole run.
+    ``core.quotePath=false`` makes ``--numstat`` print non-ASCII paths
+    as they are (``café.txt``, not ``"caf\\303\\251.txt"``). Paths
+    holding ``"``, ``\\`` or control characters are still C-quoted by
+    git, and are stored as git prints them.
     """
     name = os.path.basename(directory.rstrip("/"))
     try:
         log = subprocess.run(
-            ("git", "-C", directory, *_GIT_LOG_ARGS),
+            ("git", "-c", "core.quotePath=false", "-C", directory, *_GIT_LOG_ARGS),
             capture_output=True,
             check=True,
-            text=True,
         ).stdout
     except (subprocess.CalledProcessError, OSError):
         return None  # not a git repo / empty — reference skips it too
     if not log.strip():
         return None
-    with open(os.path.join(dump_dir, f"{index}.log"), "w", encoding="utf-8") as fh:
+    with open(os.path.join(dump_dir, f"{index}.log"), "wb") as fh:
         fh.write(log)
     url = subprocess.run(
         ("git", "-C", directory, "config", "--get", "remote.origin.url"),
         capture_output=True,
         text=True,
+        errors="replace",
     ).stdout.strip()
     return name, url or _NO_REMOTE
 

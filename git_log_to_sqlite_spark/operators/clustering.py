@@ -5,20 +5,22 @@ behind corpus bucketing, IVF index building (the coarse quantizer for
 
 Execution model per iteration:
 
-* **assignment** is a pure column expression — squared distance to each
-  of the k centroids unrolled as ``aggregate(zip_with(...))`` over the
-  vector, argmin via ``array_min`` over ``(dist, cluster)`` structs
-  (struct comparison breaks distance ties toward the lower cluster id,
-  so results are deterministic) — whole-stage codegen, no Python;
+* **assignment** (:func:`assign_clusters_table`) crosses the corpus
+  with the centroids collapsed to ONE broadcast row and takes, per
+  row, the argmin via ``array_min`` over ``(dist, cluster)`` structs
+  of a higher-order ``transform`` (struct comparison breaks distance
+  ties toward the lower cluster id, so results are deterministic) —
+  no shuffle of the corpus, no Python;
 * **update** shuffles ``(cluster, dim)`` partial sums — one
   ``posexplode`` + groupBy per iteration, k*dims result rows.
 
 Centroids are MODEL STATE, not data: k*dims doubles collected to the
-driver per iteration and rebroadcast — as a one-row centroid-array
-table by default, as plan literals under a raised
-``similarity._LITERAL_FANOUT_MAX`` — bounded regardless of corpus
-size (the standard structure for distributed k-means; only the
-per-row assignment and the partial sums are distributed work).
+driver per iteration and rebroadcast as that one-row centroid-array
+table — bounded regardless of corpus size (the standard structure for
+distributed k-means; only the per-row assignment and the partial sums
+are distributed work). :func:`assign_clusters` is the same assignment
+with the centroids inlined as plan literals — the reference form the
+table form is tested equal against.
 """
 
 from __future__ import annotations
@@ -65,7 +67,9 @@ def assign_clusters(
     round_to: int | None = None,
 ) -> DataFrame:
     """Adds a ``cluster`` column: index of the nearest centroid
-    (squared euclidean; ties break to the lower index). ``round_to``
+    (squared euclidean; ties break to the lower index), with the
+    centroids inlined as plan literals — the reference form
+    :func:`assign_clusters_table` is tested equal against. ``round_to``
     selects :func:`_sq_dist`'s cross-engine-stable rounded form —
     pass it when an SQL oracle must reproduce the assignment."""
     choices = F.array(
@@ -86,12 +90,11 @@ def assign_clusters_table(
     round_to: int | None = None,
 ) -> DataFrame:
     """:func:`assign_clusters` with the centroids as DATA instead of
-    plan literals — the large-k form. The literal version inlines
-    k x dims literal nodes into the plan (the right trade up to a few
-    hundred cells: pure codegen, zero joins), but at quantizer scales
-    like SemDeDup's LAION setting (k ~ 11k x 768 dims) that is ~17M
-    expression nodes through the analyzer — the plan, not the data,
-    becomes the bottleneck. Here the centroids collapse to ONE row
+    plan literals — the assignment every quantizer consumer runs. The
+    literal version inlines k x dims literal nodes into the plan, and
+    its analysis+codegen cost grows with k (at SemDeDup's LAION setting,
+    k ~ 11k x 768 dims, that is ~17M expression nodes through the
+    analyzer). Here the centroids collapse to ONE row
     holding a cell-ordered ``array<struct<c, cen>>`` (k x dims
     doubles of DATA — megabytes), broadcast via a 1-row cross join,
     and the argmin runs as a higher-order ``transform`` +
@@ -105,8 +108,9 @@ def assign_clusters_table(
     cells 0..k-1 (:class:`~git_log_to_sqlite_spark.operators.
     similarity.IvfIndex` stores exactly this table). ``round_to``
     selects the same cross-engine-stable rounded dot-identity
-    distance as the literal form, so the two forms are asserted
-    EQUAL — not just similar — in tests, both modes."""
+    distance as the literal form, which stays as the reference the
+    two modes are asserted EQUAL — not just similar — against in
+    tests."""
     choices = _table_choices(vec_col, round_to)
     return (
         df.crossJoin(F.broadcast(_collapsed_centroids(centroids_df)))
@@ -160,26 +164,21 @@ def nearest_cells_table(
     round_to: int | None = None,
     out_col: str = "_probe_cells",
 ) -> DataFrame:
-    """The n-probe fan-out with the centroids as DATA instead of plan
-    literals — the large-k form of ``similarity._nearest_cells``,
-    exactly as :func:`assign_clusters_table` is the large-k form of
-    :func:`assign_clusters`. Adds ``out_col``: the ordered array of
-    the ``n_probe`` nearest cell ids.
+    """The n-probe fan-out every IVF probe runs, with the centroids as
+    DATA — the table form of the literal ``similarity._nearest_cells``
+    reference, exactly as :func:`assign_clusters_table` is the table
+    form of :func:`assign_clusters`. Adds ``out_col``: the ordered
+    array of the ``n_probe`` nearest cell ids.
 
-    Why it exists (measured, round 15): the literal fan-out inlines
-    k x dims literal nodes into ONE expression, and analysis + codegen
-    of that expression is the probe's dominant cost once k passes a
-    few dozen cells — a 100-row probe batch against k=80 centroids
-    spent ~28-50 s in the fan-out projection (vs ~4 s at k=8) while
-    the data work was milliseconds. Since a deployment grows k WITH
-    the corpus (bounded cell size is what makes probes flat), the
-    literal form's cost curve is the wrong one at exactly the scale
-    the index exists for. Here the centroids collapse to the one-row
-    broadcast array (:func:`_collapsed_centroids`), the per-row
-    distances run as a higher-order transform over that array column
-    (O(1) analyzer cost at any k), and ordering/tie-break is the
-    IDENTICAL struct comparison — (distance, cell), ties to the lower
-    cell id — so the two forms are asserted EQUAL in tests."""
+    The centroids collapse to the one-row broadcast array
+    (:func:`_collapsed_centroids`) and the per-row distances run as a
+    higher-order transform over that array column, so analyzer cost
+    is O(1) at any k — a deployment grows k WITH the corpus to keep
+    cells bounded, and the literal fan-out's analysis+codegen grows
+    with k (round 15: ~28-50 s per 100-row batch at k=80). Ordering
+    and tie-break are the IDENTICAL struct comparison — (distance,
+    cell), ties to the lower cell id — asserted EQUAL to the literal
+    form in tests."""
     choices = _table_choices(vec_col, round_to)
     picked = F.transform(
         F.slice(F.array_sort(choices), 1, n_probe), lambda s: s["c"]
@@ -224,16 +223,11 @@ def kmeans(
     dims = len(centroids[0])
 
     def _assign(cents: list[list[float]]) -> DataFrame:
-        # per-iteration assignment: the one-row broadcast centroid
-        # table by default (round 15: the literal expression's
-        # analysis+codegen grows with k and is paid FRESH every
-        # iteration here — max_iter times the cost the probe fix
-        # measured — and was no faster even at k=8; equality of the
-        # two forms is pinned in tests, literal via the raised knob)
-        from .similarity import _LITERAL_FANOUT_MAX, _centroids_frame
+        # per-iteration assignment via the one-row broadcast centroid
+        # table: its analyzer cost is flat in k, and it is paid FRESH
+        # every iteration here
+        from .similarity import _centroids_frame
 
-        if len(cents) <= _LITERAL_FANOUT_MAX:
-            return assign_clusters(df, vec_col, cents)
         return assign_clusters_table(
             df, vec_col, _centroids_frame(df.sparkSession, cents)
         )
@@ -287,8 +281,8 @@ def kmeans_fit_sample(
 
     This is the scale-correct fit for an IVF quantizer, not just a
     small-SF speedup: the distributed :func:`kmeans` loop costs
-    ``max_iter`` full corpus scans plus per-iteration codegen compile
-    of fresh centroid literals and job dispatch — measured 11.4-11.7 s
+    ``max_iter`` full corpus scans plus per-iteration plan compile
+    and job dispatch — measured 11.4-11.7 s
     at bench SF where the sample fit is the same quality at a fraction
     of the cost — and at 100 TB those full scans are the entire build
     cost, while a fixed-size sample is one bounded-output job no
@@ -301,7 +295,9 @@ def kmeans_fit_sample(
     (numpy argmin), and empty clusters keep their previous centroid.
 
     Returns the fitted centroids (``k x dims`` floats). Use
-    :func:`assign_clusters` for the distributed assignment pass;
+    :func:`assign_clusters_table` (over
+    ``similarity._centroids_frame``) for the distributed assignment
+    pass;
     :func:`kmeans` remains the full-corpus fit for callers that want
     every row to pull on the centroids.
     """

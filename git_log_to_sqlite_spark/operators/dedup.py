@@ -1701,10 +1701,10 @@ def incremental_minhash_dedup(
 
 
 class _ParquetStore:
-    """Shared persistence machinery of the per-modality history stores
-    (:class:`SignatureStore` for minhash, :class:`WindowStore` for
-    exact-substring): a plain append-only parquet table with an
-    existence probe that maps ONLY a missing path to False, a lazy
+    """Shared persistence machinery of every persisted store
+    (:class:`SignatureStore`, :class:`WindowStore`, ``HammingStore``,
+    ``SemanticStore`` and ``IvfIndex``): an append-only parquet table
+    with an existence probe that maps ONLY a missing path to False, a lazy
     read, a fail-fast bootstrap guard, and staged-swap compaction.
     One implementation so a fix to any of them lands once."""
 
@@ -1754,8 +1754,7 @@ class _ParquetStore:
             # setup error with an obvious fix.
             raise FileNotFoundError(
                 f"{type(self).__name__} at {self.path!r} has no table "
-                f"yet; call {self._bootstrap_hint} once before the "
-                "first ingest()"
+                f"yet; call {self._bootstrap_hint} first"
             )
 
     def compact(self, num_files: int | None = None) -> None:

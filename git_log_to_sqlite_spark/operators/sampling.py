@@ -140,7 +140,6 @@ def token_budget_sample(
     budget: int,
     domain_col: str,
     cum_out: str = "cum_before",
-    via: str = "window",
 ) -> DataFrame:
     """Greedy deterministic budget fill per domain — the corpus-mixing
     step that answers "give me ~B tokens from every source": rows are
@@ -156,58 +155,14 @@ def token_budget_sample(
     the keep set for any B' >= B, which makes budget sweeps consistent
     (no reshuffling of what was already admitted).
 
-    Two physical routes with identical results (equivalence-tested):
-
-    * ``via="window"`` (default): one projection for the coin, one
-      shuffle on the domain key, one running-sum window per domain
-      (frame = UNBOUNDED PRECEDING to 1 PRECEDING), one filter. Each
-      domain's window is a SINGLE partition — right while every domain
-      fits one task.
-    * ``via="two_phase"``: the mega-domain route. A GLOBAL two-phase
-      prefix sum over the total order ``(domain, u, id)``
-      (``ordered_running_sum`` — range partition + pid-local windows +
-      broadcast offsets, so a domain spans MANY partitions), then the
-      per-domain prefix is recovered as ``global_cum - row_weight -
-      offset[domain]``, where ``offset[domain]`` is the summed weight
-      of all domains strictly before it in the same total order — a
-      tiny per-domain aggregate, cumulated over |domains| rows and
-      broadcast back. No single task ever holds a whole domain.
+    Plan shape: one projection for the coin, one shuffle on the
+    domain key, one running-sum window per domain (frame = UNBOUNDED
+    PRECEDING to 1 PRECEDING), one filter. Each domain's window is a
+    SINGLE partition, so one domain must fit one task. ``cum_out``
+    keeps the weight column's summed type (long for integral
+    weights, double for fractional).
     """
-    if via not in ("window", "two_phase"):
-        raise ValueError(f"via must be 'window' or 'two_phase', got {via!r}")
     keyed = df.withColumn("_u", uniform_key(F.col(id_col)))
-    if via == "two_phase":
-        from .ordered import ordered_running_sum
-
-        g = ordered_running_sum(
-            keyed, [domain_col, "_u", id_col], weight_col, out_col="_gcum"
-        )
-        totals = keyed.groupBy(domain_col).agg(
-            F.sum(weight_col).alias("_dtotal")
-        )
-        off_w = (
-            Window.orderBy(domain_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.select(
-            domain_col,
-            F.coalesce(F.sum("_dtotal").over(off_w), F.lit(0).cast("long"))
-            .alias("_doffset"),
-        )
-        # No cast: cum_out keeps the natural summed type, matching the
-        # window route exactly (long for integral weights, double for
-        # fractional — where the two routes may still differ by a
-        # float-summation ulp, as any re-associated double sum does;
-        # route equivalence is exact for integral weights).
-        return (
-            g.join(F.broadcast(offsets), domain_col)
-            .withColumn(
-                cum_out,
-                F.col("_gcum") - F.col(weight_col) - F.col("_doffset"),
-            )
-            .filter(F.col(cum_out) < budget)
-            .drop("_u", "_gcum", "_doffset")
-        )
     w = (
         Window.partitionBy(domain_col)
         .orderBy(F.col("_u").asc(), F.col(id_col).asc())

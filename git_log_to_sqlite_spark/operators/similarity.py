@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.schema_cache import read_parquet_cached
+from .dedup import _ParquetStore
 
 if TYPE_CHECKING:
     from pyspark.sql import Observation
@@ -84,35 +85,19 @@ def _topk(joined: DataFrame, sim: Column, k: int, round_to: int | None) -> DataF
     )
 
 
-#: quantizer size up to which IvfIndex/kmeans/in-memory-ANN build
-#: their assignment/fan-out expressions from centroid LITERALS instead
-#: of the one-row broadcast centroid table
-#: (``clustering.assign_clusters_table`` / ``nearest_cells_table``).
-#: DEFAULT 0 — the table form everywhere — because it measured faster
-#: or at parity at EVERY k tried (round 15, interleaved same-window
-#: A/Bs at sf0.1: probe k=8 min 1.05 s table vs 1.49 s literal; build
-#: k=8 1.34 vs 1.68 s; and at k=80 the literal expression's
-#: analysis+codegen alone cost 28-50 s per 100-row batch vs
-#: milliseconds of data work, since the literal plan GROWS with k
-#: while the table plan is O(1) in analyzer cost). The literal form
-#: remains the cross-checkable reference: identical arithmetic and
-#: (distance, cell) tie-break, equality-asserted against the table
-#: form in tests by raising this knob.
-_LITERAL_FANOUT_MAX = 0
-
-
 def _nearest_cells(
     vec_col_name: str,
     centroids: list[list[float]],
     n_probe: int,
     round_to: int | None = None,
 ) -> Column:
-    """The IVF probe expression: indices of the ``n_probe`` nearest
-    centroids (squared euclidean, ties to the lower cell id via struct
-    ordering) — shared by every quantizer consumer so probe ordering
-    can never drift between the in-memory, persisted, and dedup
-    paths. ``round_to`` selects the cross-engine-stable rounded
-    distance (see ``clustering._sq_dist``) for oracle-gated use."""
+    """The IVF probe as one literal expression: indices of the
+    ``n_probe`` nearest centroids (squared euclidean, ties to the lower
+    cell id via struct ordering). The reference form that
+    ``clustering.nearest_cells_table`` — the fan-out every quantizer
+    consumer runs — is tested equal against. ``round_to`` selects the
+    cross-engine-stable rounded distance (see
+    ``clustering._sq_dist``)."""
     from .clustering import _sq_dist
 
     dists = F.array(
@@ -251,9 +236,11 @@ def ivf_ann_topk(
     the cells follow the data's density, so the same scanned fraction
     buys more recall (asserted vs sign-LSH multiprobe at the bench SF).
 
-    Scale shape: centroids are MODEL STATE (k x dims doubles inlined
-    as literals — the same contract as ``assign_clusters``), so both
-    cell assignments are pure codegen projections; the probe fan-out
+    Scale shape: centroids are MODEL STATE — the k-row
+    :func:`_centroids_frame` table, collapsed to one broadcast row
+    (``clustering.assign_clusters_table`` / ``nearest_cells_table``),
+    so both cell assignments are projections with O(1) analyzer cost
+    at any k; the probe fan-out
     multiplies only the QUERY side (broadcast), the corpus keeps one
     row per vector and is never re-shuffled; norms fold once per
     vector per side. In a persisted deployment the corpus side
@@ -267,52 +254,32 @@ def ivf_ann_topk(
     k-means FIT stays outside any oracle; pass its output, or any
     pinned centroid list, here).
     """
-    from .clustering import (
-        assign_clusters,
-        assign_clusters_table,
-        nearest_cells_table,
-    )
+    from .clustering import assign_clusters_table, nearest_cells_table
 
-    # same literal-vs-table trade as IvfIndex (see _LITERAL_FANOUT_MAX):
-    # past a few dozen cells the literal expressions' analysis+codegen
-    # cost grows with k and dominates the wall clock
-    use_table = len(centroids) > _LITERAL_FANOUT_MAX
-    cdf = (
-        _centroids_frame(corpus.sparkSession, centroids) if use_table else None
-    )
-    corpus_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("_cv"),
-        vnorm(F.col(vec_col)).alias("_cn"),
-    )
-    if use_table:
-        c = assign_clusters_table(corpus_sel, "_cv", cdf, round_to=dist_round_to)
-    else:
-        c = assign_clusters(corpus_sel, "_cv", centroids, round_to=dist_round_to)
-    c = c.withColumnRenamed("cluster", "_cc")
+    cdf = _centroids_frame(corpus.sparkSession, centroids)
+    c = assign_clusters_table(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            _as_double(F.col(vec_col)).alias("_cv"),
+            vnorm(F.col(vec_col)).alias("_cn"),
+        ),
+        "_cv",
+        cdf,
+        round_to=dist_round_to,
+    ).withColumnRenamed("cluster", "_cc")
     q_base = queries.select(
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("_qv"),
         vnorm(F.col(vec_col)).alias("_qn"),
     )
-    if use_table:
-        q = nearest_cells_table(
-            q_base, "_qv", cdf, n_probe, round_to=dist_round_to
-        ).select(
-            "query_id",
-            F.explode("_probe_cells").alias("_qc"),
-            "_qv",
-            "_qn",
-        )
-    else:
-        q = q_base.select(
-            "query_id",
-            F.explode(
-                _nearest_cells("_qv", centroids, n_probe, round_to=dist_round_to)
-            ).alias("_qc"),
-            "_qv",
-            "_qn",
-        )
+    q = nearest_cells_table(
+        q_base, "_qv", cdf, n_probe, round_to=dist_round_to
+    ).select(
+        "query_id",
+        F.explode("_probe_cells").alias("_qc"),
+        "_qv",
+        "_qn",
+    )
     sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
     joined = F.broadcast(q).join(
         c, (F.col("_qc") == F.col("_cc")) & (F.col("query_id") != F.col("neighbor_id"))
@@ -352,45 +319,29 @@ def embedding_dedup_ann(
     which groups them in one hash shuffle; cell balance is the
     quantizer's job (re-fit when the corpus drifts).
     """
-    from .clustering import (
-        assign_clusters,
-        assign_clusters_table,
-        nearest_cells_table,
-    )
+    from .clustering import assign_clusters_table, nearest_cells_table
 
-    # literal-vs-table trade, as everywhere a quantizer meets a plan
-    # (see _LITERAL_FANOUT_MAX)
-    use_table = len(centroids) > _LITERAL_FANOUT_MAX
-    cdf = _centroids_frame(df.sparkSession, centroids) if use_table else None
-    corpus_sel = df.select(
-        F.col(id_col).alias("_idb"),
-        _as_double(F.col(vec_col)).alias("_bv"),
-        vnorm(F.col(vec_col)).alias("_bn"),
-    )
-    if use_table:
-        c = assign_clusters_table(corpus_sel, "_bv", cdf)
-    else:
-        c = assign_clusters(corpus_sel, "_bv", centroids)
-    c = c.withColumnRenamed("cluster", "_cell")
+    cdf = _centroids_frame(df.sparkSession, centroids)
+    c = assign_clusters_table(
+        df.select(
+            F.col(id_col).alias("_idb"),
+            _as_double(F.col(vec_col)).alias("_bv"),
+            vnorm(F.col(vec_col)).alias("_bn"),
+        ),
+        "_bv",
+        cdf,
+    ).withColumnRenamed("cluster", "_cell")
     a_base = df.select(
         F.col(id_col).alias("_ida"),
         _as_double(F.col(vec_col)).alias("_av"),
         vnorm(F.col(vec_col)).alias("_an"),
     )
-    if use_table:
-        a = nearest_cells_table(a_base, "_av", cdf, n_probe).select(
-            "_ida",
-            F.explode("_probe_cells").alias("_pcell"),
-            "_av",
-            "_an",
-        )
-    else:
-        a = a_base.select(
-            "_ida",
-            F.explode(_nearest_cells("_av", centroids, n_probe)).alias("_pcell"),
-            "_av",
-            "_an",
-        )
+    a = nearest_cells_table(a_base, "_av", cdf, n_probe).select(
+        "_ida",
+        F.explode("_probe_cells").alias("_pcell"),
+        "_av",
+        "_an",
+    )
     sim = _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn"))
     dup_ids = (
         a.join(
@@ -453,17 +404,14 @@ def semantic_dedup(
     id (the window's exchange is reused for the join sides), and
     candidate mass is sum over cells of |cell|^2/2 — bounded by k,
     the paper's knob. ``centroids`` takes EITHER a Python list OR a
-    ``(cell, centroid)`` DataFrame; both run the TABLE form by
-    default (round 15: a list converts to the k-row model-state frame
-    unless ``_LITERAL_FANOUT_MAX`` is raised — the literal expression
-    measured no faster even at k=8, and at the paper's LAION setting
-    — k ~ 11k x 768 dims — its k x dims literal nodes choke the
-    analyzer, not the executors): assignment via
+    ``(cell, centroid)`` DataFrame; a list becomes the k-row
+    model-state frame (:func:`_centroids_frame`), so both run the
+    same table form — O(1) analyzer cost at any k, including the
+    paper's LAION setting (k ~ 11k x 768 dims): assignment via
     :func:`~git_log_to_sqlite_spark.operators.clustering.
     assign_clusters_table`'s one-row broadcast array, centroid_sim
-    via a broadcast hash join to the k-row table; identical
-    arithmetic and tie-breaks to the raised-knob literal reference,
-    asserted equal in tests; ``IvfIndex`` stores exactly this table. Degenerate inputs (thousands of
+    via a broadcast hash join to the k-row table; ``IvfIndex``
+    stores exactly this table. Degenerate inputs (thousands of
     EXACT copies) belong to exact dedup first, which groups them in
     one hash shuffle instead of |cell|^2 cosine pairs. ``round_to``
     rounds both cosines before comparing/ordering and
@@ -614,13 +562,11 @@ def _semantic_ranked(
     times (measured: 3 scans, 2 window executions, 0 reuses at the
     bench SF; ~2x wall clock). One row per vector, input-proportional
     — the same trade as every pair-stage pin in this repo; the
-    table-path centroid columns are dropped BEFORE the pin so high
+    joined centroid columns are dropped BEFORE the pin so high
     dims don't double the cache bytes. ``expect_dim`` arms the
     per-row :func:`_checked_embedding` guard (store callers)."""
-    import math
-
     from .caching import pin
-    from .clustering import assign_clusters, assign_clusters_table
+    from .clustering import assign_clusters_table
 
     vec = (
         _checked_embedding(vec_col, expect_dim, guard_context)
@@ -632,42 +578,22 @@ def _semantic_ranked(
         vec.alias("_v"),
         vnorm(F.col(vec_col)).alias("_n"),
     )
-    if (
-        not isinstance(centroids, DataFrame)
-        and len(centroids) > _LITERAL_FANOUT_MAX
-    ):
-        # honor the quantizer-wide default (round 15: the table form
-        # measured faster at every k tried): a literal LIST converts
-        # to the k-row model-state frame unless the knob is raised
+    if not isinstance(centroids, DataFrame):
         centroids = _centroids_frame(df.sparkSession, centroids)
-    if isinstance(centroids, DataFrame):
-        # table path: centroids as DATA (see assign_clusters_table)
-        # — assignment via the one-row broadcast array, centroid_sim
-        # via a broadcast hash join back to the k-row table. Same
-        # arithmetic, O(1) analyzer cost at any k.
-        ranked = assign_clusters_table(
-            base, "_v", centroids, round_to=dist_round_to
-        ).withColumnRenamed("cluster", "cell")
-        cenj = centroids.select(
-            "cell",
-            F.col("centroid").alias("_cen"),
-            F.sqrt(_dot(F.col("centroid"), F.col("centroid"))).alias("_cen_n"),
-        )
-        ranked = ranked.join(F.broadcast(cenj), "cell")
-        cden = F.col("_n") * F.col("_cen_n")
-        cnum = _dot(F.col("_v"), F.col("_cen"))
-    else:
-        ranked = assign_clusters(
-            base, "_v", centroids, round_to=dist_round_to
-        ).withColumnRenamed("cluster", "cell")
-        cen_arr = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-        )
-        cen_norms = F.array(
-            *[F.lit(math.sqrt(sum(x * x for x in c))) for c in centroids]
-        )
-        cden = F.col("_n") * F.get(cen_norms, F.col("cell"))
-        cnum = _dot(F.col("_v"), F.get(cen_arr, F.col("cell")))
+    # centroids as DATA (see assign_clusters_table): assignment via the
+    # one-row broadcast array, centroid_sim via a broadcast hash join
+    # back to the k-row table — O(1) analyzer cost at any k
+    ranked = assign_clusters_table(
+        base, "_v", centroids, round_to=dist_round_to
+    ).withColumnRenamed("cluster", "cell")
+    cenj = centroids.select(
+        "cell",
+        F.col("centroid").alias("_cen"),
+        F.sqrt(_dot(F.col("centroid"), F.col("centroid"))).alias("_cen_n"),
+    )
+    ranked = ranked.join(F.broadcast(cenj), "cell")
+    cden = F.col("_n") * F.col("_cen_n")
+    cnum = _dot(F.col("_v"), F.col("_cen"))
     # zero-norm guard #1: a zero vector (failed encoder, empty input)
     # would make this 0/0 — a hard DIVIDE_BY_ZERO under ANSI mode.
     # NaN-out its centroid_sim instead: NaN sorts GREATEST, so zero
@@ -742,12 +668,15 @@ def _semantic_annotate(
     )
 
 
-class IvfIndex:
+class IvfIndex(_ParquetStore):
     """Persisted IVF index — the build-once / probe-many deployment of
     :func:`ivf_ann_topk`: the fitted corpus (one row per vector:
     id, cast vector, precomputed norm, assigned cell) lives as parquet
-    PARTITIONED BY CELL, and the centroids (model state, k x dims
-    doubles) live beside it as a tiny parquet. Each probe batch then
+    PARTITIONED BY CELL at ``{base}/index`` (``path`` — the inherited
+    ``_ParquetStore`` machinery points there; ``compact()`` keeps the
+    cell layout), and the centroids (model state, k x dims doubles)
+    live beside it as a tiny parquet at ``{base}/centroids``. Each
+    probe batch then
     reads only the probed cells: the batch's cell set is collected
     (bounded by k) and STATICALLY prunes the partitioned scan — see
     :meth:`probe` for why dynamic partition pruning is not relied on
@@ -758,6 +687,9 @@ class IvfIndex:
     same cadence as any ANN index rebuild).
     """
 
+    _bootstrap_hint = "build(corpus)"
+    _partition_cols = ("cell",)  # compact() must keep the cell layout
+
     def __init__(
         self,
         spark,
@@ -765,8 +697,8 @@ class IvfIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, f"{path.rstrip('/')}/index")
+        self.base = path.rstrip("/")
         self.id_col = id_col
         self.vec_col = vec_col
 
@@ -799,13 +731,16 @@ class IvfIndex:
         with ``fit_sample_size=None``. Also noted in README
         "Behavior changes".
 
+        The centroids are written BEFORE the index, so an existing
+        index table (:meth:`exists`) implies its quantizer exists.
+
         ``stage_times``: pass a dict to receive per-stage wall-clock
         seconds — ``fit`` (the quantizer training action),
+        ``centroids_write`` (the k-row model-state write), and
         ``assign_write`` (the cell assignment pipelined into the
         partitioned index write: assignment is a lazy projection the
         write executes, so the two are ONE job by design — timing
-        them apart would require an extra materialization), and
-        ``centroids_write`` (the k-row model-state write). A rebuild
+        them apart would require an extra materialization). A rebuild
         is the most contention-variance-prone extra in the bench
         (write amplification), so the per-stage split is what lets a
         reader attribute a slow whole-run number to fit dispatch vs
@@ -813,12 +748,7 @@ class IvfIndex:
         """
         import time
 
-        from .clustering import (
-            assign_clusters,
-            assign_clusters_table,
-            kmeans,
-            kmeans_fit_sample,
-        )
+        from .clustering import assign_clusters_table, kmeans, kmeans_fit_sample
 
         fit = corpus.select(
             self.id_col, _as_double(F.col(self.vec_col)).alias("_v")
@@ -833,60 +763,32 @@ class IvfIndex:
             )
         if stage_times is not None:
             stage_times["fit"] = round(time.perf_counter() - t0, 3)
-        to_assign = corpus.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            _as_double(F.col(self.vec_col)).alias("_cv"),
-            vnorm(F.col(self.vec_col)).alias("_cn"),
-        )
-        # same literal-vs-table trade as probe(): table form by
-        # default (the literal assignment expression's analysis+codegen
-        # cost grows with k and measured no faster even at k=8);
-        # identical arithmetic and tie-break, append() always used it
-        if len(centroids) <= _LITERAL_FANOUT_MAX:
-            indexed = assign_clusters(to_assign, "_cv", centroids)
-        else:
-            indexed = assign_clusters_table(
-                to_assign, "_cv", _centroids_frame(self.spark, centroids)
-            )
-        indexed = indexed.withColumnRenamed("cluster", "cell")
+        cdf = _centroids_frame(self.spark, centroids)
         t0 = time.perf_counter()
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{self.path}/index"
-        )
-        if stage_times is not None:
-            stage_times["assign_write"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        _centroids_frame(self.spark, centroids).write.mode("overwrite").parquet(
-            f"{self.path}/centroids"
-        )
+        cdf.write.mode("overwrite").parquet(f"{self.base}/centroids")
         if stage_times is not None:
             stage_times["centroids_write"] = round(time.perf_counter() - t0, 3)
+        indexed = assign_clusters_table(
+            corpus.select(
+                F.col(self.id_col).alias("neighbor_id"),
+                _as_double(F.col(self.vec_col)).alias("_cv"),
+                vnorm(F.col(self.vec_col)).alias("_cn"),
+            ),
+            "_cv",
+            cdf,
+        ).withColumnRenamed("cluster", "cell")
+        t0 = time.perf_counter()
+        indexed.write.mode("overwrite").partitionBy("cell").parquet(self.path)
+        if stage_times is not None:
+            stage_times["assign_write"] = round(time.perf_counter() - t0, 3)
 
     def centroids(self) -> list[list[float]]:
         rows = (
-            read_parquet_cached(self.spark, f"{self.path}/centroids")
+            read_parquet_cached(self.spark, f"{self.base}/centroids")
             .orderBy("cell")
             .collect()
         )
         return [list(r["centroid"]) for r in rows]
-
-    def exists(self) -> bool:
-        """True iff the index has been built at ``path`` — mapping
-        ONLY a missing location (the analyzer's PATH_NOT_FOUND) to
-        False, exactly ``SignatureStore.exists``'s contract: any
-        other failure — transient IO, permissions, a momentarily
-        unreachable object store — propagates, because conflating it
-        with "never built" would make :meth:`append`'s guard advise a
-        rebuild whose ``mode("overwrite")`` destroys a live index."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            self.spark.read.parquet(f"{self.path}/centroids").schema
-            return True
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc):
-                return False
-            raise
 
     def append(self, new_vectors: DataFrame) -> None:
         """Grow the index WITHOUT refitting — the daily-ingest shape of
@@ -903,7 +805,8 @@ class IvfIndex:
         corpus distribution drifts; :meth:`cell_sizes` is the
         observable (a cell absorbing a disproportionate share of
         appends means the Voronoi tessellation no longer fits the
-        data and probe candidate mass is skewing).
+        data and probe candidate mass is skewing). An index that was
+        never built raises the store family's ``FileNotFoundError``.
 
         Every appended vector is validated against the stored
         quantizer IN the assignment projection (a per-row
@@ -915,24 +818,17 @@ class IvfIndex:
         cell. A sampled pre-check can't catch a mixed batch; the
         inline guard fails the job before the parquet commit, so a
         bad batch leaves the index untouched."""
-        if not self.exists():
-            raise ValueError(
-                f"no index at {self.path}: build() first — appending to "
-                "an unbuilt index would silently create an empty-"
-                "quantizer store"
-            )
+        self._require_bootstrapped()
         from .clustering import assign_clusters_table
 
         # assignment via the centroid TABLE the index already persists
-        # (assign_clusters_table: one-row broadcast array, identical
-        # arithmetic and tie-break to the literal form by test) — no
-        # driver collect of the quantizer, so append stays
+        # — no driver collect of the quantizer, so append stays
         # O(increment) even under a large-k coarse quantizer; only the
         # 1-int dim probe touches the driver
-        cents_df = read_parquet_cached(self.spark, f"{self.path}/centroids")
+        cents_df = read_parquet_cached(self.spark, f"{self.base}/centroids")
         dim = cents_df.select(F.size("centroid")).first()[0]
         checked = _checked_embedding(
-            self.vec_col, dim, f"IvfIndex.append at {self.path}"
+            self.vec_col, dim, f"IvfIndex.append at {self.base}"
         )
         assigned = assign_clusters_table(
             new_vectors.select(
@@ -943,19 +839,15 @@ class IvfIndex:
             "_cv",
             cents_df,
         ).withColumnRenamed("cluster", "cell")
-        assigned.write.mode("append").partitionBy("cell").parquet(
-            f"{self.path}/index"
-        )
+        assigned.write.mode("append").partitionBy("cell").parquet(self.path)
 
     def cell_sizes(self) -> DataFrame:
         """``(cell, n_vectors)`` — the index-health observable: cell
         balance is the quantizer's job, and a skewing cell after
         appends is the rebuild signal. Partition-pruned count per
         cell (parquet row-group metadata makes this near-free)."""
-        return (
-            read_parquet_cached(self.spark, f"{self.path}/index")
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n_vectors"))
+        return self.read().groupBy("cell").agg(
+            F.count(F.lit(1)).alias("n_vectors")
         )
 
     def probe(
@@ -979,7 +871,7 @@ class IvfIndex:
         Partition pruning is STATIC, not dynamic: the batch's probed
         cells are collected (a bounded model-state-class collect —
         at most min(|batch| x n_probe, k) ints, the same class as the
-        ``centroids()`` read above) and applied as an ``isin`` filter
+        ``centroids()`` read) and applied as an ``isin`` filter
         on the partition column, so the scan reads exactly the probed
         cells' files whatever the planner estimates. Spark's dynamic
         partition pruning is NOT relied on because its insertion rule
@@ -998,53 +890,32 @@ class IvfIndex:
         the pruned scan disagreeing with the cells the join actually
         probes.
 
-        Fan-out form (round 15): by default the assignment runs via
-        ``clustering.nearest_cells_table`` — the one-row broadcast
-        centroid array with identical arithmetic and tie-break to the
-        literal expression (equality-asserted in tests) — because the
-        literal form's analysis+codegen GROWS with k (measured: it
-        dominated probe wall-clock by k=80, ~28-50 s per 100-row
-        batch vs milliseconds of data work) and measured SLOWER even
-        at k=8 (interleaved A/B: 1.49 vs 1.05 s min). A deployment
-        grows k with the corpus precisely to keep cells bounded, so
-        the table form's flat cost curve is the one the index needs;
-        raising ``_LITERAL_FANOUT_MAX`` restores the literal codegen
-        plan (the reference form the equality tests pin against).
-        Under the shipped default (``_LITERAL_FANOUT_MAX = 0``) the
-        form choice short-circuits without ANY Spark job: the count
-        comparison can never pick the literal branch, so the k-row
-        count() (parquet-metadata-only, but still a job dispatch per
-        probe call) runs only when the knob is raised."""
-        index = read_parquet_cached(self.spark, f"{self.path}/index")
-        cents_df = read_parquet_cached(self.spark, f"{self.path}/centroids")
+        The fan-out runs via ``clustering.nearest_cells_table`` over
+        the stored centroid table: one broadcast row, so analyzer cost
+        is O(1) at any k, which a deployment grows with the corpus to
+        keep cells bounded."""
+        from .clustering import nearest_cells_table
+
         base = queries.select(
             F.col(self.id_col).alias("query_id"),
             _as_double(F.col(self.vec_col)).alias("_qv"),
             vnorm(F.col(self.vec_col)).alias("_qn"),
         )
-        if _LITERAL_FANOUT_MAX > 0 and cents_df.count() <= _LITERAL_FANOUT_MAX:
-            fanned = base.select(
-                "query_id",
-                F.explode(
-                    _nearest_cells("_qv", self.centroids(), n_probe)
-                ).alias("_qc"),
-                "_qv",
-                "_qn",
-            )
-        else:
-            from .clustering import nearest_cells_table
-
-            fanned = nearest_cells_table(base, "_qv", cents_df, n_probe).select(
+        cents_df = read_parquet_cached(self.spark, f"{self.base}/centroids")
+        q = (
+            nearest_cells_table(base, "_qv", cents_df, n_probe)
+            .select(
                 "query_id",
                 F.explode("_probe_cells").alias("_qc"),
                 "_qv",
                 "_qn",
             )
-        q = fanned.localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)
+        )
         probed = sorted(
             r["_qc"] for r in q.select("_qc").distinct().collect()
         )
-        index = index.filter(F.col("cell").isin(probed))
+        index = self.read().filter(F.col("cell").isin(probed))
         sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
         joined = F.broadcast(q).join(
             index,
@@ -1098,8 +969,6 @@ def bucketed_ann_topk(
     )
     return _topk(joined, sim, k, round_to)
 
-
-from .dedup import _ParquetStore
 
 
 class SemanticStore(_ParquetStore):

@@ -367,9 +367,7 @@ def chunk_documents(
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str, text_col: str, via: str = "array"
-) -> DataFrame:
+def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Repetition-based quality signals (the Gopher/MassiveText rule
     family, adapted to token counts): per document,
 
@@ -384,78 +382,10 @@ def repetition_stats(
       engines or runs.
 
     Looping text is the classic failure mode cheap length/stopword
-    filters miss; these two signals catch it. Two physical routes with
-    identical results (equivalence-tested):
-
-    * ``via="array"`` (default): pure Column expressions (sequence ->
-      transform bigrams, array_distinct + filter counting) — one
-      codegen projection, ZERO shuffle, runs at scan speed. The per-row
-      top-bigram scan is O(distinct x total) on the token count: the
-      right choice for chunk/paragraph/web-page sized text.
-    * ``via="explode"``: bigram stream -> per-(doc, gram) count ->
-      per-doc max/sum — two map-side-combinable aggregates (shuffle
-      keys are (doc, gram-hash)-sized). O(n log n)-ish instead of
-      O(n*u) per doc: the route for book-length documents where the
-      quadratic per-row scan would stall a task, at the price of
-      shuffling the bigram stream.
+    filters miss; these two signals catch it. Pure Column expressions
+    over :func:`repetition_parts` (one sort + one fold per row) — one
+    projection, ZERO shuffle.
     """
-    if via not in ("array", "explode"):
-        raise ValueError(f"via must be 'array' or 'explode', got {via!r}")
-    if via == "explode":
-        toks = F.split(F.col(text_col), " ")
-        base = df.select(
-            F.col(id_col),
-            F.size(toks).alias("_n"),
-            F.size(F.array_distinct(toks)).alias("_u"),
-        )
-        # zip_with over shifted slices (not an index lambda) — see the
-        # repetition_parts perf note.
-        grams = df.select(
-            F.col(id_col),
-            F.explode(
-                F.when(
-                    F.size(toks) >= 2,
-                    F.zip_with(
-                        F.slice(toks, 1, F.size(toks) - 1),
-                        F.slice(toks, 2, F.size(toks) - 1),
-                        lambda a, b: F.concat_ws(" ", a, b),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("_gram"),
-        )
-        per_doc = (
-            grams.groupBy(id_col, "_gram")
-            .agg(F.count("*").alias("_c"))
-            .groupBy(id_col)
-            .agg(
-                F.max("_c").alias("_top"),
-                F.sum("_c").cast("int").alias("_nb"),
-            )
-        )
-        j = base.join(per_doc, id_col, "left").select(
-            F.col(id_col),
-            "_n",
-            "_u",
-            F.coalesce(F.col("_top"), F.lit(0)).alias("_top"),
-            F.coalesce(F.col("_nb"), F.lit(0)).alias("_nb"),
-        )
-        return j.select(
-            F.col(id_col),
-            F.round((F.col("_n") - F.col("_u")).cast("double") / F.col("_n"), 6)
-            .alias("dup_token_frac"),
-            F.when(
-                F.col("_nb") > 0,
-                F.round(F.col("_top").cast("double") / F.col("_nb"), 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("top_bigram_frac"),
-            (
-                (F.col("_top") * 5 <= F.col("_nb"))
-                & ((F.col("_n") - F.col("_u")) * 10 <= 7 * F.col("_n"))
-            )
-            .cast("int")
-            .alias("passes_repetition_gate"),
-        )
     n, n_uniq, n_bigrams, top_cnt = repetition_parts(F.col(text_col))
     dup_frac = F.round((n - n_uniq).cast("double") / n, 6)
     top_frac = F.when(

@@ -1949,8 +1949,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source has ~2000 chars — the 'B tokens from every source' "
     "corpus-mixing step, exactly reproducible (hash-oracle-checked) "
     "and monotone in the budget. One shuffle on the domain key + one "
-    "per-domain running-sum window; at mega-domain scale the prefix "
-    "sum swaps to the two-phase ordered_running_sum unchanged.",
+    "per-domain running-sum window.",
 )
 def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import token_budget_sample
@@ -2110,7 +2109,6 @@ def pretrain_corpus(
     telemetry: dict | None = None,
     char_budget_per_source: int = 4000,
     shard_chars: int = 2000,
-    mix_via: str = "window",
     token_col: str | None = None,
 ) -> DataFrame:
     """The composition behind ``pipeline_pretrain_corpus`` — quality
@@ -2118,12 +2116,7 @@ def pretrain_corpus(
     pack, reusing the operator library's single definitions
     (``repetition_gate``, ``shingles``, ``token_budget_sample``,
     ``ordered_running_sum``) so the composite can never drift from the
-    standalone operators. ``mix_via`` threads straight through to
-    ``token_budget_sample``: ``"window"`` (default — one single-task
-    window per source) or ``"two_phase"`` (the mega-domain route; when
-    one source alone outweighs an executor, the global prefix sum
-    keeps the composite safe end-to-end — equivalence-tested on the
-    skewed synthetic). ``telemetry`` collects per-stage retention
+    standalone operators. ``telemetry`` collects per-stage retention
     Observations inside the one execution (same contract as
     ``curate_corpus``; no metrics directly below the range-partitioned
     prefix sum — its sampling job would double-fire them).
@@ -2238,7 +2231,6 @@ def pretrain_corpus(
         weight_col,
         char_budget_per_source,
         domain_col="source",
-        via=mix_via,
     ).select(*carried)
     packed = ordered_running_sum(kept, ["doc_id"], weight_col, out_col="cum")
     out = packed.select(

@@ -365,3 +365,78 @@ def test_cli_second_root_appends_to_existing_database(spark, tmp_path):
     assert state() == want
     _cli(spark, str(tmp_path / "r2"), "-r", "-d", db)
     assert state() == want
+
+
+def test_cli_non_utf8_commit_keeps_every_repository(spark, tmp_path):
+    """A commit whose author and message are Latin-1 bytes (not valid
+    UTF-8) must not abort the run: the repository beside it and both
+    commits are stored, with each invalid byte read as U+FFFD."""
+    import sqlite3
+    import subprocess
+
+    latin = tmp_path / "root" / "latin"
+    latin.mkdir(parents=True)
+    _git(latin, "init", "-q")
+    msg = b"caf\xe9 raw\n"
+    stream = (
+        b"commit refs/heads/main\n"
+        b"author Jos\xe9 <jose@example.com> 1700000000 +0000\n"
+        b"committer Jos\xe9 <jose@example.com> 1700000000 +0000\n"
+        b"data %d\n%s"
+        b"M 644 inline f.txt\n"
+        b"data 3\nhi\n\n" % (len(msg), msg)
+    )
+    subprocess.run(
+        ("git", "fast-import", "--quiet"), cwd=latin, input=stream,
+        check=True, capture_output=True,
+    )
+    _git(latin, "symbolic-ref", "HEAD", "refs/heads/main")
+    _repo_with_commit(tmp_path / "root" / "plain")
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(db))
+
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute(
+            "SELECT r.name, l.author_name, l.message FROM logs l"
+            " JOIN repositories r ON l.repository_id = r.id"
+        ).fetchall()
+    finally:
+        con.close()
+    assert sorted(rows) == [
+        ("latin", "Jos�", "caf� raw"),
+        ("plain", "Fixture Author", "add f.txt"),
+    ]
+
+
+def test_cli_stores_non_ascii_file_paths_unquoted(spark, tmp_path):
+    """Non-ASCII file paths land in ``changed_files`` as the names
+    themselves, not git's C-quoted octal form; a rename stores the new
+    path."""
+    import sqlite3
+
+    repo = tmp_path / "root" / "uni"
+    repo.mkdir(parents=True)
+    _git(repo, "init", "-q")
+    for name in ("café.txt", "日本語.txt"):
+        (repo / name).write_text(f"{name}\n")
+        _git(repo, "add", name)
+        _git(repo, "commit", "-q", "-m", f"add {name}")
+    _git(repo, "mv", "café.txt", "naïve.txt")
+    _git(repo, "commit", "-q", "-m", "rename")
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(db))
+
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute(
+            "SELECT l.message, c.file_path FROM changed_files c"
+            " JOIN logs l ON c.commit_hash = l.commit_hash"
+        ).fetchall()
+    finally:
+        con.close()
+    assert sorted(rows) == [
+        ("add café.txt", "café.txt"),
+        ("add 日本語.txt", "日本語.txt"),
+        ("rename", "naïve.txt"),
+    ]

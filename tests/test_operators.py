@@ -1330,7 +1330,7 @@ def test_ivf_index_append_grows_without_refit(clustered_vectors, tmp_path):
     # un-built path fails fast
     empty = IvfIndex(e.sparkSession, str(tmp_path / "ivf_nope"))
     assert not empty.exists()
-    with pytest.raises(ValueError, match="build\\(\\) first"):
+    with pytest.raises(FileNotFoundError, match="build\\(corpus\\)"):
         empty.append(second)
 
 
@@ -1490,13 +1490,10 @@ def test_assign_clusters_table_equals_literal_form(clustered_vectors):
 
 
 def test_semantic_dedup_table_centroids_equal_literal(clustered_vectors):
-    """semantic_dedup with a (cell, centroid) DataFrame (the large-k
-    path: one-row broadcast assignment + broadcast join for
-    centroid_sim) must produce the IDENTICAL annotation — including
-    bit-identical centroid_sim, whose norms come from a Python
-    math.sqrt in the literal path and a JVM sqrt-fold in the table
-    path (same IEEE left-fold, so no ulp can diverge) — with and
-    without the rounding knobs."""
+    """semantic_dedup with a centroid list (converted to the k-row
+    model-state frame) and with a caller's (cell, centroid) DataFrame
+    must produce the IDENTICAL annotation, including bit-identical
+    centroid_sim, with and without the rounding knobs."""
     from git_log_to_sqlite_spark.operators import (
         kmeans_fit_sample,
         semantic_dedup,
@@ -3939,48 +3936,6 @@ def test_incremental_dedup_agrees_with_batch_pairs(spark, oracle_sf_dir):
     assert any(r["is_new"] == 0 for r in inc_rows.values())  # non-vacuous
 
 
-def test_pretrain_corpus_two_phase_mix_agrees(spark, oracle_sf_dir):
-    """mix_via='two_phase' must reproduce the default composite output
-    byte-for-byte — on the real corpus AND on a mega-domain synthetic
-    (90% of docs in one source, the shape where the per-source window
-    would funnel one task) — so the flagship is mega-domain-safe end
-    to end without forking the admission logic."""
-    import random as _random
-
-    from git_log_to_sqlite_spark.plans.llm_ops import pretrain_corpus
-    from git_log_to_sqlite_spark.plans.registry import table
-
-    d = table(spark, oracle_sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 29 == 0)
-    corpus = d.filter(F.col("doc_id") % 29 != 0)
-
-    _random.seed(31)
-    # vocabulary wide enough that random 60-token docs pass the
-    # distinct-token quality gate (needs >= 30% distinct tokens)
-    words = [f"w{j}" for j in range(400)]
-    rows = [
-        (
-            i,
-            "mega" if i % 10 else f"tail{i % 7}",
-            " ".join(_random.choice(words) for _ in range(60)),
-        )
-        for i in range(500)
-    ]
-    skewed = spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    ).withColumn("n_chars", F.length("text"))
-    skew_bench = skewed.filter(F.col("doc_id") % 97 == 0)
-    skew_corpus = skewed.filter(F.col("doc_id") % 97 != 0)
-
-    for c, b in ((corpus, bench), (skew_corpus, skew_bench)):
-        base = {tuple(r) for r in pretrain_corpus(c, b).collect()}
-        two = {
-            tuple(r)
-            for r in pretrain_corpus(c, b, mix_via="two_phase").collect()
-        }
-        assert two == base and len(base) > 0
-
-
 def test_pretrain_corpus_retention_telemetry(spark, oracle_sf_dir):
     """The pre-training pipeline's Observation funnel (input ->
     post_quality -> post_decontam -> post_mix) must equal
@@ -4067,28 +4022,6 @@ def test_token_budget_empty_and_single_row(spark):
     assert len(rows) == 1 and rows[0]["cum_before"] == 0
 
 
-def test_repetition_stats_routes_agree(spark, oracle_sf_dir):
-    """The zero-shuffle array route and the explode/aggregate scale
-    route (for book-length docs) must produce byte-identical results on
-    the real corpus AND on crafted edge docs."""
-    from git_log_to_sqlite_spark.operators.text import repetition_stats
-
-    edge = spark.createDataFrame(
-        [(1, "a a a b"), (2, "solo"), (3, ""), (4, "x y x y x y")],
-        "doc_id long, text string",
-    )
-    corpus = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-    for df in (edge, corpus):
-        a = {r["doc_id"]: r for r in repetition_stats(df, "doc_id", "text").collect()}
-        b = {
-            r["doc_id"]: r
-            for r in repetition_stats(df, "doc_id", "text", via="explode").collect()
-        }
-        assert set(a) == set(b)
-        for k in a:
-            assert a[k] == b[k], (k, a[k], b[k])
-
-
 def test_cache_scope_survives_external_clearcache(spark):
     """Round-7 review fix: cache_scope tracks membership by identity,
     not a list-length mark — after an external clearCache() pruned dead
@@ -4111,16 +4044,6 @@ def test_cache_scope_survives_external_clearcache(spark):
     )
     assert all(id(d) != id(b) for d in caching._LIVE)
     release_caches()
-
-
-def test_repetition_stats_rejects_unknown_route(spark):
-    from git_log_to_sqlite_spark.operators.text import repetition_stats
-
-    df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="via"):
-        repetition_stats(df, "doc_id", "text", via="exploded")
 
 
 def test_token_hofs_stay_capture_free(spark):
@@ -4147,48 +4070,12 @@ def test_token_hofs_stay_capture_free(spark):
     assert "aggregate(sort_array" in top_expr or "aggregate(sortarray" in top_expr
 
 
-def test_token_budget_two_phase_route_agrees(spark, oracle_sf_dir):
-    """The mega-domain two-phase route (global ordered prefix sum +
-    per-domain offsets, no single-task-per-domain window) must produce
-    the identical keep set and cum_before values as the window route,
-    on the real corpus and on a skewed synthetic (one giant domain)."""
-    from git_log_to_sqlite_spark.operators import token_budget_sample
-
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet").select(
-        "doc_id", "source", "n_chars"
-    )
-    random.seed(13)
-    skewed = spark.createDataFrame(
-        [(i, "big" if i % 10 else f"small{i % 7}", random.randint(10, 99))
-         for i in range(400)],
-        "doc_id long, source string, n_chars long",
-    ).repartition(16)
-
-    for df, budget in ((docs, 2000), (skewed, 500)):
-        a = {
-            r["doc_id"]: r["cum_before"]
-            for r in token_budget_sample(
-                df, "doc_id", "n_chars", budget, domain_col="source"
-            ).collect()
-        }
-        b = {
-            r["doc_id"]: r["cum_before"]
-            for r in token_budget_sample(
-                df, "doc_id", "n_chars", budget, domain_col="source",
-                via="two_phase",
-            ).collect()
-        }
-        assert a == b
-
-
 def test_token_budget_routes_agree_on_fractional_weights(spark):
-    """Fractional (double) weights: both routes must return the SAME
-    cum_before type (double — neither route may cast) and values equal
-    to float-sum tolerance (the two-phase global sum re-associates the
-    additions, so exact equality is only guaranteed for integral
-    weights; the admission SET must still match away from ulp-sized
-    budget boundaries)."""
+    """Fractional (double) weights: ``cum_before`` keeps the double
+    type (no cast) and equals a Python running sum, per domain in
+    md5-coin admission order, to 1e-9."""
     from git_log_to_sqlite_spark.operators import token_budget_sample
+    from git_log_to_sqlite_spark.operators.sampling import uniform_key
 
     random.seed(29)
     df = spark.createDataFrame(
@@ -4196,15 +4083,20 @@ def test_token_budget_routes_agree_on_fractional_weights(spark):
         "doc_id long, source string, w double",
     ).repartition(8)
     win = token_budget_sample(df, "doc_id", "w", 50, domain_col="source")
-    two = token_budget_sample(
-        df, "doc_id", "w", 50, domain_col="source", via="two_phase"
-    )
     assert dict(win.dtypes)["cum_before"] == "double"
-    assert dict(two.dtypes)["cum_before"] == "double"
-    a = {r["doc_id"]: r["cum_before"] for r in win.collect()}
-    b = {r["doc_id"]: r["cum_before"] for r in two.collect()}
-    assert set(a) == set(b)
-    assert all(abs(a[k] - b[k]) < 1e-9 for k in a)
+    got = {r["doc_id"]: r["cum_before"] for r in win.collect()}
+
+    rows = df.select(
+        "doc_id", "source", "w", uniform_key(F.col("doc_id")).alias("u")
+    ).collect()
+    want, running = {}, {}
+    for r in sorted(rows, key=lambda r: (r["source"], r["u"], r["doc_id"])):
+        before = running.get(r["source"], 0.0)
+        if before < 50:
+            want[r["doc_id"]] = before
+        running[r["source"]] = before + r["w"]
+    assert set(got) == set(want) and got
+    assert all(abs(got[k] - want[k]) < 1e-9 for k in got)
 
 
 def test_append_assignment_never_shuffles_the_data(clustered_vectors, tmp_path):
@@ -4230,7 +4122,7 @@ def test_append_assignment_never_shuffles_the_data(clustered_vectors, tmp_path):
         e.select("vec_id", "embedding"), k=4, max_iter=3,
         fit_sample_size=None,
     )
-    cdf = e.sparkSession.read.parquet(f"{idx.path}/centroids")
+    cdf = e.sparkSession.read.parquet(f"{idx.base}/centroids")
     new = e.select(
         F.col("vec_id").alias("neighbor_id"),
         _as_double(F.col("embedding")).alias("_cv"),
@@ -4403,12 +4295,9 @@ def test_subword_seam_plan_is_single_scan_projection(spark, oracle_sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Large-k probe fan-out (round 15): the literal _nearest_cells
-# expression inlines k x dims literal nodes, and its analysis+codegen
-# cost GROWS with k (measured: ~28-50 s per 100-row batch at k=80 vs
-# ~4 s at k=8) — so past _LITERAL_FANOUT_MAX cells IvfIndex switches
-# to nearest_cells_table, the one-row broadcast centroid array. These
-# pin the switch's correctness face: both forms are EQUAL, not just
+# Probe fan-out: every quantizer consumer runs nearest_cells_table, the
+# one-row broadcast centroid array; the literal _nearest_cells
+# expression stays as its reference. Both forms are EQUAL, not just
 # similar.
 
 
@@ -4442,119 +4331,3 @@ def test_nearest_cells_table_equals_literal_fanout(spark, oracle_sf_dir):
             for r in nearest_cells_table(base, "_v", cdf, 3, round_to=rt).collect()
         }
         assert got == want and len(got) == 200
-
-
-def test_ivf_probe_table_path_equals_literal_path(clustered_vectors, tmp_path, monkeypatch):
-    """An IvfIndex built and probed above the switch threshold (k=24 >
-    _LITERAL_FANOUT_MAX) must return the IDENTICAL neighbor set as the
-    literal path forced on the SAME index files — the fan-out form is
-    an execution detail, never a semantics knob. Also pins that the
-    table path still prunes: the probed-cell set collected from the
-    fan-out bounds the scan exactly as before."""
-    from git_log_to_sqlite_spark.operators import IvfIndex
-    from git_log_to_sqlite_spark.operators import similarity as sim_mod
-
-    spark = clustered_vectors.sparkSession
-    idx = IvfIndex(spark, str(tmp_path / "ivf_bigk"))
-    idx.build(clustered_vectors.select("vec_id", "embedding"), k=24, max_iter=5)
-    probes = clustered_vectors.select("vec_id", "embedding").filter(
-        F.col("vec_id") < 20
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 16)
-    table_path = rows(idx.probe(probes, n_probe=2, k=3, round_to=6))
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 10_000)
-    literal_path = rows(idx.probe(probes, n_probe=2, k=3, round_to=6))
-    assert table_path == literal_path and len(table_path) > 0
-
-
-def test_ivf_build_table_assignment_equals_literal(clustered_vectors, tmp_path, monkeypatch):
-    """build() above the threshold assigns cells via the centroid
-    TABLE; the resulting on-disk index (cell per vector) must be
-    byte-identical to the literal assignment's on the same fitted
-    quantizer."""
-    from git_log_to_sqlite_spark.operators import IvfIndex
-    from git_log_to_sqlite_spark.operators import similarity as sim_mod
-
-    spark = clustered_vectors.sparkSession
-    corpus = clustered_vectors.select("vec_id", "embedding")
-
-    def cells(path, fanout_max):
-        monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", fanout_max)
-        idx = IvfIndex(spark, str(tmp_path / path))
-        idx.build(corpus, k=24, max_iter=5)
-        return sorted(
-            (r["neighbor_id"], r["cell"])
-            for r in spark.read.parquet(f"{tmp_path / path}/index").collect()
-        )
-
-    table_cells = cells("ivf_table", 16)
-    literal_cells = cells("ivf_literal", 10_000)
-    assert table_cells == literal_cells and len(table_cells) == 100
-
-
-@pytest.mark.parametrize("op", ["topk", "dedup"])
-def test_in_memory_ann_table_form_equals_literal(clustered_vectors, monkeypatch, op):
-    """ivf_ann_topk / embedding_dedup_ann above the fan-out threshold
-    (k=24) switch assignment AND probe fan-out to the centroid-table
-    forms — row-identical to the literal path forced on the same
-    centroids (the same contract the persisted IvfIndex pins)."""
-    from git_log_to_sqlite_spark.operators import (
-        embedding_dedup_ann,
-        ivf_ann_topk,
-        kmeans_fit_sample,
-    )
-    from git_log_to_sqlite_spark.operators import similarity as sim_mod
-
-    e = clustered_vectors.select("vec_id", "embedding")
-    cents = kmeans_fit_sample(e, "vec_id", "embedding", k=24, max_iter=5,
-                              sample_size=64)
-    queries = e.filter(F.col("vec_id") < 10)
-
-    def run():
-        if op == "topk":
-            return sorted(
-                tuple(r)
-                for r in ivf_ann_topk(
-                    queries, e, "vec_id", "embedding", cents,
-                    n_probe=2, k=3, round_to=6, dist_round_to=6,
-                ).collect()
-            )
-        return sorted(
-            tuple(r)
-            for r in embedding_dedup_ann(
-                e, "vec_id", "embedding", cents, threshold=0.9, n_probe=2
-            ).collect()
-        )
-
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 16)
-    table_rows = run()
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 10_000)
-    literal_rows = run()
-    assert table_rows == literal_rows and len(table_rows) > 0
-
-
-def test_kmeans_large_k_table_assignment_equals_literal(clustered_vectors, monkeypatch):
-    """The distributed Lloyd's loop above the fan-out threshold (k=20)
-    pays the centroid-table assignment per iteration; its fitted
-    centroids AND final assignment must equal the literal path's
-    exactly (the per-iteration arithmetic and tie-break are the pinned
-    table-form contract, so the iterate sequence cannot diverge)."""
-    from git_log_to_sqlite_spark.operators import kmeans
-    from git_log_to_sqlite_spark.operators import similarity as sim_mod
-
-    e = clustered_vectors.select("vec_id", "embedding")
-
-    def run():
-        assigned, cents = kmeans(e, "vec_id", "embedding", k=20, max_iter=4)
-        return sorted((r["vec_id"], r["cluster"]) for r in assigned.collect()), cents
-
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 16)
-    table_assigned, table_cents = run()
-    monkeypatch.setattr(sim_mod, "_LITERAL_FANOUT_MAX", 10_000)
-    literal_assigned, literal_cents = run()
-    assert table_cents == literal_cents
-    assert table_assigned == literal_assigned and len(table_assigned) == 100

@@ -735,17 +735,6 @@ def test_pretrain_corpus_token_col_knob(spark, sf):
                 for r in ref.collect()}
     assert got_rows == ref_rows and got_rows
 
-    # the knob composes with the mega-domain two-phase mix route:
-    # identical admission set and shard boundaries as the window route
-    # (token_budget_sample's route equivalence, here THROUGH the knob)
-    got_tp = pretrain_corpus(
-        corpus, benchmark, char_budget_per_source=900, shard_chars=500,
-        token_col="subword_tokens", mix_via="two_phase",
-    )
-    got_tp_rows = {(r["doc_id"], r["source"], r["subword_tokens"], r["shard_id"])
-                   for r in got_tp.collect()}
-    assert got_tp_rows == got_rows
-
     # default path: schema unchanged (the gate row's shape)
     base = pretrain_corpus(corpus.drop("subword_tokens"), benchmark)
     assert base.columns == ["doc_id", "source", "n_chars", "shard_id"]

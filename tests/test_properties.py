@@ -8,7 +8,7 @@ counts are tuned so the whole module stays in tens of seconds.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -259,6 +259,7 @@ def test_decontaminate_matches_python_reference(sess, bench, train, n):
 
 
 @given(texts=st.lists(_doc_text, min_size=1, max_size=8))
+@example(texts=["a a a b", "solo", "", "x y x y x y"])
 @settings(**_SETTINGS)
 def test_repetition_stats_matches_python_reference(sess, texts):
     from git_log_to_sqlite_spark.operators.text import repetition_stats
