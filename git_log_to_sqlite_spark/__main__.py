@@ -1,22 +1,27 @@
 """CLI entry point — drop-in parity with the reference binary.
 
 ``python -m git_log_to_sqlite_spark <root> [flags]`` mirrors the
-reference's clap surface (/root/reference/src/analyzer.rs:32-62):
-positional root directory, ``--recursive``/``--max-depth`` scan
-control, ``--database``, ``--config``, ``--clear``, ``--num-threads``;
-and prints the end-of-run report of /root/reference/src/main.rs:5-26
-(done-in seconds, analyzed repositories, ignored repositories, skipped
-directories).
+reference's clap surface (analyzer.rs:32-62): positional root
+directory, ``--recursive``/``--max-depth`` scan control,
+``--database``, ``--config``, ``--clear``, ``--num-threads``. It writes
+the reference's SQLite tables and prints the end-of-run report of
+main.rs:5-26 (done-in seconds, analyzed repositories, ignored
+repositories, skipped directories).
 
-Execution model: the *directory list* is driver-side (as in the
-reference, analyzer.rs:102-135); ``git log`` dumps run in a
-``--num-threads`` pool (the reference's tokio worker pool,
-analyzer.rs:217-235); the parse + load stages are Spark jobs
-(etl/gitlog.py JVM parse → etl/pipeline.py), so the heavy lifting
-scales out while the per-repo subprocess fan-out matches the
-reference's one-task-per-repo model.  ``--num-threads`` also sizes the
-local session's cores/shuffle partitions, the closest Spark analogue
-of the reference's worker-thread knob.
+Execution model:
+
+* the directory scan, the ignore list and the skipped report are
+  driver-side, as in the reference (analyzer.rs:102-135);
+* ``git log`` dumps run in a ``--num-threads`` pool (the reference's
+  tokio worker pool, analyzer.rs:217-235);
+* the parse (``etl.gitlog``), the ignore filter, author map and
+  repositories dimension (``etl.pipeline.prepare``) are lazy Spark
+  frames, and ``etl.writers.write_sqlite`` runs them as one sorted pass
+  into SQLite. The CLI builds no ``logs`` or ``changed_files`` frame.
+
+``--num-threads`` also sizes the local session's cores and shuffle
+partitions, the closest Spark analogue of the reference's
+worker-thread knob.
 """
 
 from __future__ import annotations
@@ -157,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .config import Config
     from .etl.gitlog import parse_git_log
-    from .etl.pipeline import run_pipeline, scan_directories
+    from .etl.pipeline import prepare, scan_directories
     from .etl.writers import write_sqlite
     from .session import get_spark, local_frame
 
@@ -174,7 +179,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # Ignore-list filter at scan time with side collection, matching
     # analyzer.rs:115-126 (recursive branch only, as in the reference;
-    # run_pipeline re-applies the same filter defensively downstream).
+    # pipeline.prepare re-applies the same filter defensively downstream).
     ignored: list[str] = []
     if args.recursive and config.ignored_repositories:
         ignore = set(config.ignored_repositories)
@@ -215,12 +220,12 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         # Every ignored name was dropped at scan time (or the list is
-        # stripped below), so the analyzed names are the dumped ones.
-        analyzed = sorted({name for _, name, _ in dumps})
-        # The dump results and the path listing are Arrow LocalRelations:
-        # the jobs that read them then run without Python workers.
+        # stripped below), so the analyzed names are the dumped ones,
+        # and the skipped directories are the rest (R25, on the driver).
+        names = {name for _, name, _ in dumps}
+        analyzed = sorted(names)
+        skipped = [d for d in directories if os.path.basename(d.rstrip("/")) not in names]
         repos_meta = local_frame(spark, dumps, "dump string, name string, url string")
-        scanned = local_frame(spark, [(d,) for d in directories], "path string")
         commits = _named_by_dump(parse_git_log(spark, dump_dir), repos_meta)
         # Reference parity (analyzer.rs:108-131): the ignore list applies
         # only to the recursive scan — a non-recursive run analyzes the
@@ -231,30 +236,10 @@ def main(argv: list[str] | None = None) -> int:
             pipeline_config = Config(
                 ignored_repositories=[], author_map=config.author_map
             )
-        # Persist the parse across the pipeline's consumers: the logs
-        # writer, the changed_files writer, and the two-phase id
-        # assignment each action the plan, and without the persist each
-        # re-reads and re-parses the dumped text (the regex parse is
-        # the CPU floor of the cold path — measured at the 64-repo /
-        # 25,600-commit scale: 14.6k -> 20.4k commits/s end-to-end).
-        # MEMORY_AND_DISK: at corpus scale the parse output spills to
-        # local disk — one write + N reads beats N re-parses, and the
-        # cache is released as soon as the writes land.
-        from pyspark import StorageLevel
-
-        commits = commits.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            result = run_pipeline(spark, commits, repos_meta, scanned, pipeline_config)
-            write_sqlite(
-                args.database,
-                result.repositories,
-                result.logs,
-                result.changed_files,
-                clear=args.clear,
-            )
-            skipped = sorted(r.path for r in result.skipped.collect())
-        finally:
-            commits.unpersist()
+        commits, repositories, _ignored = prepare(
+            spark, commits, repos_meta, pipeline_config
+        )
+        write_sqlite(args.database, repositories, commits, clear=args.clear)
 
     # Report format of /root/reference/src/main.rs:7-26.
     print(f"# Done in {time.monotonic() - t0:.1f} seconds\n")

@@ -49,8 +49,8 @@ class Config:
 
     def author_map_df(self, spark: SparkSession) -> DataFrame:
         """The author map as a broadcastable dimension DataFrame —
-        built via the Arrow local path (``session.local_frame``) so the
-        broadcast build executes without a Python-worker round-trip."""
+        a LocalRelation (``session.local_frame``), so the broadcast
+        build executes without a Python-worker round-trip."""
         from .session import local_frame
 
         rows = [(email, name) for email, name in sorted(self.author_map.items())]

@@ -5,6 +5,15 @@ by design (SURVEY.md R19: the reference's ``INSERT OR IGNORE`` on a
 non-unique ``repositories.name`` duplicates rows on re-run; we make
 ``name`` a true key and assign deterministic ids).
 
+Two entry points, both lazy (constructing them runs no Spark job):
+
+* ``prepare``: the ignore filter, the author map and the repositories
+  dimension. The CLI's SQLite path needs only this; the sink derives
+  ``logs`` and ``changed_files`` rows from the commits itself.
+* ``run_pipeline``: ``prepare`` plus the ``logs``, ``changed_files``
+  and ``skipped`` frames with their ids, for the Parquet sink and the
+  parity plans.
+
 Every join here is a broadcast join: repositories and the author map
 are small dimensions even at 100 TB of commit data, so the fact table
 never shuffles for id resolution (the reference instead ran one
@@ -110,11 +119,12 @@ def build_changed_files(commits: DataFrame) -> DataFrame:
 
     ``posexplode`` keeps the array position so the id assignment is a
     total order; ids come from operators.ordered.ordered_row_number
-    (range-partition + partition-local row_number + broadcast offsets),
+    (value buckets + partition-local row_number + broadcast offsets),
     so the assignment parallelizes instead of sorting every row on one
-    reducer. At scale the (commit_hash, pos) composite key itself is
-    the better foreign key; the surrogate id is an oracle-parity
-    feature.
+    reducer, and constructing it runs no job. ``writers.write_sqlite``
+    assigns the same ids by inserting in this order. At scale the
+    (commit_hash, pos) composite key itself is the better foreign key;
+    the surrogate id is an oracle-parity feature.
     """
     exploded = commits.select(
         "commit_hash", F.posexplode_outer("changed_files").alias("pos", "file_path")
@@ -137,19 +147,19 @@ def build_skipped(scanned_dirs: DataFrame, repositories: DataFrame) -> DataFrame
     )
 
 
-def run_pipeline(
+def prepare(
     spark: SparkSession,
     commits: DataFrame,
     repos_meta: DataFrame,
-    scanned_dirs: DataFrame | None = None,
-    config: Config | None = None,
-) -> EtlResult:
-    """Full load stage. ``commits`` is the parse_git_log output;
-    ``repos_meta`` has (name, url) — further columns are ignored;
-    ``scanned_dirs`` has (path)."""
-    config = config or Config()
+    config: Config,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The load stage's shared first step: the R5 ignore filter, the
+    R16 author map and the repositories dimension.
 
-    # R5: ignored-repositories filter with side collection of matches.
+    Returns ``(commits, repositories, ignored)``: the filtered and
+    author-mapped denormalized commits, the keyed repositories
+    dimension, and the ignored names found in ``repos_meta``. Lazy: no
+    Spark job runs."""
     if config.ignored_repositories:
         ignore = config.ignored_repositories
         ignored = repos_meta.filter(F.col("name").isin(ignore)).select("name")
@@ -157,11 +167,28 @@ def run_pipeline(
         commits = commits.filter(~F.col("repository").isin(ignore))
     else:
         ignored = repos_meta.select("name").limit(0)
-
     commits = apply_author_map(commits, config, spark)
-    repositories = build_repositories(repos_meta)
-    logs = build_logs(commits, repositories)
-    changed_files = build_changed_files(commits)
+    return commits, build_repositories(repos_meta), ignored
+
+
+def run_pipeline(
+    spark: SparkSession,
+    commits: DataFrame,
+    repos_meta: DataFrame,
+    scanned_dirs: DataFrame | None = None,
+    config: Config | None = None,
+) -> EtlResult:
+    """The full load stage as lazy frames (no Spark job runs).
+
+    ``commits`` is the parse_git_log output; ``repos_meta`` has (name,
+    url) — further columns are ignored; ``scanned_dirs`` has (path).
+    Returns every table with its ids assigned, for the Parquet sink and
+    the parity plans. The SQLite sink needs only ``repositories`` and
+    ``commits``: SQLite numbers ``changed_files`` itself (see
+    ``writers.write_sqlite``)."""
+    commits, repositories, ignored = prepare(
+        spark, commits, repos_meta, config or Config()
+    )
     skipped = (
         build_skipped(scanned_dirs, repositories)
         if scanned_dirs is not None
@@ -169,8 +196,8 @@ def run_pipeline(
     )
     return EtlResult(
         repositories=repositories,
-        logs=logs,
-        changed_files=changed_files,
+        logs=build_logs(commits, repositories),
+        changed_files=build_changed_files(commits),
         commits=commits,
         ignored=ignored,
         skipped=skipped,

@@ -1,16 +1,19 @@
 """Sinks: Parquet (the scale path) and SQLite (reference drop-in parity).
 
-The reference writes SQLite through rusqlite with one transaction per
-repository (analyzer.rs:305-346).  At 100 TB the real sink is
-partitioned Parquet (or Delta/Iceberg where the jars exist — gated
-behind import-try per environment); the SQLite writer exists for
-drop-in parity with the reference's output file and streams batches
-through ``toLocalIterator`` so the driver never holds the full table.
+* ``write_parquet`` / ``write_delta`` write any frame, typically the
+  ``run_pipeline`` tables, with ``--clear`` semantics (overwrite).
+* ``write_sqlite`` writes the reference's SQLite layout
+  (analyzer.rs:149-188) from the repositories dimension and the
+  denormalized commits, streamed once in ``commit_hash`` order; SQLite
+  assigns the ``changed_files`` ids. The driver holds one partition of
+  the sorted commits at a time, never the full table.
+* ``clear_sqlite`` truncates the SQLite tables without writing.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import itertools
 import sqlite3
 from typing import Iterable
 
@@ -127,26 +130,43 @@ def clear_sqlite(db_path: str) -> None:
 def write_sqlite(
     db_path: str,
     repositories: DataFrame,
-    logs: DataFrame,
-    changed_files: DataFrame,
+    commits: DataFrame,
     clear: bool = False,
     batch_size: int = 10_000,
 ) -> None:
-    """Drop-in parity sink producing the reference's SQLite layout.
+    """Write the reference's SQLite layout (analyzer.rs:149-188) from
+    the repositories dimension and the denormalized commits.
+
+    ``repositories`` has (id, name, url) and is collected: it is a
+    bounded dimension. ``commits`` is ``EtlResult.commits`` (or
+    ``pipeline.prepare``'s commits): one row per commit with its
+    ``repository`` name and its ``changed_files`` array. It is streamed
+    once, sorted by ``commit_hash``, through ``toLocalIterator``, so the
+    driver holds one partition of the sorted frame at a time (AQE
+    coalesces the sort's partitions to the data's size). Each commit
+    yields its ``logs`` row, its ``repository_id`` looked up by name in
+    the dimension, and its ``changed_files`` rows.
+
+    ``changed_files.id`` is assigned by SQLite as the rows arrive, in
+    (commit_hash, array position) order: the reference's AUTOINCREMENT
+    rule (analyzer.rs:178-188, 305-346), and on an empty database the
+    ids ``pipeline.build_changed_files`` assigns. A commit found in
+    several scanned repositories is stored once, under the repository
+    whose name sorts first; its file rows are numbered position-major
+    across the copies, as ``build_changed_files`` numbers them.
 
     ``commit_datetime`` stores raw epoch seconds — exactly what the
     reference stores into its DATETIME column (repository.rs:178 via
-    analyzer.rs:327).  Batched executemany over ``toLocalIterator``:
-    constant driver memory, one transaction per batch (the reference
-    batches one transaction per repository, analyzer.rs:305-346).
+    analyzer.rs:327). Rows are inserted in batches of ``batch_size``,
+    one transaction per batch.
 
     Writing into a populated database without ``clear`` appends, as
     the reference's AUTOINCREMENT ids do: a stored repository name
     keeps its id, new names take ids after the stored maximum (and
-    ``logs.repository_id`` follows), new ``changed_files`` ids start
-    after the stored maximum, and a re-written commit's earlier
-    ``changed_files`` rows are replaced.  On an empty database the
-    frames' own ids are written unchanged.
+    ``logs.repository_id`` follows), new ``changed_files`` ids follow
+    the stored maximum, and a re-written commit's earlier
+    ``changed_files`` rows are replaced. On an empty database the
+    dimension's own ids are written unchanged.
     """
     con = sqlite3.connect(db_path)
     try:
@@ -159,53 +179,31 @@ def write_sqlite(
         (file_offset,) = con.execute(
             "SELECT coalesce(max(id), 0) FROM changed_files"
         ).fetchone()
-        repo_rows = repositories.select("id", "name", "url")
-        log_rows = logs.select(
-            "commit_hash",
-            "author_name",
-            "author_email",
-            "message",
-            "commit_epoch",
-            "insertions",
-            "deletions",
-            "repository_id",
-            "parent_hash",
-        )
+        repo_rows = [tuple(r) for r in repositories.select("id", "name", "url").collect()]
         if stored:
-            # repositories is a bounded dimension: remap it on the driver
-            repo_rows = repo_rows.collect()
             repo_id = _appended_ids(stored, repo_rows)
             repo_rows = [(repo_id[i], name, url) for i, name, url in repo_rows]
-            log_rows = (
-                (*row[:7], repo_id.get(row[7]), row[8])
-                for row in log_rows.toLocalIterator()
-            )
-        _insert_stream(
-            con,
+        con.executemany(
             "INSERT OR REPLACE INTO repositories (id, name, url) VALUES (?, ?, ?)",
             repo_rows,
-            batch_size,
         )
-        _insert_stream(
-            con,
-            "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
-            " message, commit_datetime, insertions, deletions, repository_id,"
-            " parent_hash) VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-            log_rows,
-            batch_size,
+        id_of = {name: i for i, name, _url in repo_rows}
+        rows = (
+            commits.select(*_LOG_COLUMNS, "repository", "changed_files")
+            .orderBy("commit_hash")
+            .toLocalIterator()
         )
-        file_rows = changed_files.select("id", "commit_hash", "file_path")
-        if file_offset:
-            file_rows = (
-                (i + file_offset, h, p) for i, h, p in file_rows.toLocalIterator()
-            )
-        _insert_stream(
-            con,
-            "INSERT OR REPLACE INTO changed_files (id, commit_hash, file_path)"
-            " VALUES (?, ?, ?)",
-            file_rows,
-            batch_size,
-        )
+        log_batch: list[tuple] = []
+        file_batch: list[tuple] = []
+        for commit_hash, copies in itertools.groupby(rows, key=lambda r: r[0]):
+            copies = sorted(copies, key=lambda r: r["repository"] or "")
+            first = copies[0]
+            log_batch.append((*first[:7], id_of.get(first["repository"]), first[7]))
+            for paths in itertools.zip_longest(*(r["changed_files"] or () for r in copies)):
+                file_batch.extend((commit_hash, p) for p in paths if p is not None)
+            if len(log_batch) + len(file_batch) >= batch_size:
+                _flush(con, log_batch, file_batch)
+        _flush(con, log_batch, file_batch)
         if file_offset:
             # A commit's file list is a function of its hash, so the
             # commits written now are the ones with rows above the offset.
@@ -217,6 +215,36 @@ def write_sqlite(
         con.commit()
     finally:
         con.close()
+
+
+# ``logs`` columns in the commits frame, with ``repository_id`` going
+# between the seventh and the last
+_LOG_COLUMNS = (
+    "commit_hash",
+    "author_name",
+    "author_email",
+    "message",
+    "commit_epoch",
+    "insertions",
+    "deletions",
+    "parent_hash",
+)
+
+
+def _flush(con: sqlite3.Connection, log_rows: list, file_rows: list) -> None:
+    """Insert and commit one batch, then empty the lists."""
+    con.executemany(
+        "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
+        " message, commit_datetime, insertions, deletions, repository_id,"
+        " parent_hash) VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
+        log_rows,
+    )
+    con.executemany(
+        "INSERT INTO changed_files (commit_hash, file_path) VALUES (?, ?)", file_rows
+    )
+    con.commit()
+    log_rows.clear()
+    file_rows.clear()
 
 
 def _appended_ids(stored: dict[str, int], rows: list) -> dict[int, int]:
@@ -231,23 +259,3 @@ def _appended_ids(stored: dict[str, int], rows: list) -> dict[int, int]:
             by_name[name] = next_id
         ids[rid] = by_name[name]
     return ids
-
-
-def _insert_stream(
-    con: sqlite3.Connection,
-    sql: str,
-    rows: "DataFrame | Iterable[tuple]",
-    batch_size: int,
-) -> None:
-    if isinstance(rows, DataFrame):
-        rows = rows.toLocalIterator()
-    batch: list[tuple] = []
-    for row in rows:
-        batch.append(tuple(row))
-        if len(batch) >= batch_size:
-            con.executemany(sql, batch)
-            con.commit()
-            batch.clear()
-    if batch:
-        con.executemany(sql, batch)
-        con.commit()

@@ -6,28 +6,25 @@ distributed plan (Spark even warns: "No Partition Defined for Window
 operation"). These operators compute the same totally-ordered result in
 two phases, the textbook parallel prefix-sum shape:
 
-1. **Contiguous bucketing on the order key.** Numeric first keys
-   (every analytical call site) use the round-16 VALUE-BUCKETED form:
-   an in-plan broadcast (min, max) of the key assigns each row its
-   equal-width bucket — fully lazy, fully visible to Catalyst, and
-   deterministic under recomputation because the pid is a function of
-   the row's value, not of partitioner state. Non-numeric first keys
-   (the ETL's commit ids) keep the `repartitionByRange` +
-   `localCheckpoint` form, which supports arbitrary orderable types at
-   the cost of construction-time materialization under AQE (see
-   `_bucketed_with_pid` for the measurement that motivated the split).
-   Either way each bucket computes its LOCAL running sum / row number
-   in parallel — the window partitions on the bucket id, never on a
-   single global partition.
+1. **Contiguous bucketing on the order key.** An in-plan broadcast
+   (min, max) of a numeric proxy of the first order column assigns each
+   row its equal-width bucket (`_bucketed_with_pid`): lazy, visible to
+   Catalyst, and deterministic under recomputation because the pid is a
+   function of the row's value, not of partitioner state. Numeric keys
+   are their own proxy; string keys use their first UTF-8 bytes
+   (`_bucket_key`). Each bucket computes its LOCAL running sum / row
+   number in parallel — the window partitions on the bucket id, never
+   on a single global partition.
 2. **Offsets**: one tiny aggregate (one row per bucket) is
    prefix-summed and broadcast back; adding `offset[pid]` to the local
    value yields the exact global result.
 
-Cost: one range shuffle + one pid shuffle of the data and a
+Cost: one pid shuffle of the data, a one-row (min, max) aggregate and a
 broadcast-joined aggregate of #partitions rows — versus the global
 window's shuffle of EVERYTHING to one reducer. The only remaining
 global sort is over the per-partition totals, bounded by the shuffle
-partition count (thousands of rows at most).
+partition count (thousands of rows at most). Construction runs no
+Spark job.
 
 Determinism: the order columns must form a total order (unique key) —
 the same requirement the global-window formulation has for a stable
@@ -46,6 +43,7 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     ShortType,
+    StringType,
 )
 
 _PID = "__ordered_pid"
@@ -59,69 +57,55 @@ _NUMERIC_FIRST = (
 )
 
 
-def _ranged_with_pid(df: DataFrame, order_cols: list[str], num_partitions: int | None) -> DataFrame:
-    cols = [F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
+def _bucket_key(df: DataFrame, col: str) -> F.Column:
+    """A double that is monotone (non-strict) in ``col``'s sort order.
+
+    Numeric columns cast to double. A string column maps to its first 7
+    UTF-8 bytes read as a big-endian unsigned integer, zero-padded on
+    the right (``''`` is 0, NULL stays NULL): Spark orders strings by
+    unsigned bytes, so ``a < b`` implies ``key(a) <= key(b)``, and
+    strings sharing a 7-byte prefix tie. Casting the 56-bit value to a
+    double rounds it, which is monotone too. Keys that use only
+    part of the byte range land in fewer buckets: lowercase hex hashes
+    (``0-9``, ``a-f``) cover two short runs of the first byte's range.
+    """
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, _NUMERIC_FIRST):
+        return F.col(col).cast("double")
+    if isinstance(dtype, StringType):
+        prefix = F.hex(F.substring(F.col(col).cast("binary"), 1, 7))
+        return F.conv(F.rpad(prefix, 14, "0"), 16, 10).cast("double")
+    raise TypeError(
+        f"ordered operators need a numeric or string first order column; "
+        f"{col!r} is {dtype.simpleString()}"
     )
-    # The ranged+pid result feeds TWO plan branches (per-pid totals and
-    # the partition-local window), and correctness requires both to see
-    # the SAME pid assignment. RangePartitioner samples its bounds per
-    # exchange execution, so relying on Catalyst's reuseExchange to
-    # plan the exchange once is fragile (a refactor that breaks
-    # canonical-plan equality, or disabling reuse, would let the two
-    # branches draw different bounds). localCheckpoint materializes the
-    # partitions on first use and both branches read the SAME frozen
-    # blocks; eager=False defers that to the query's own action, so no
-    # extra job runs. (Trade-off: truncated lineage means a lost block
-    # fails the job instead of recomputing — acceptable for a
-    # deterministic two-stage op; a retry recomputes both branches from
-    # the new blocks consistently.)
-    return ranged.withColumn(_PID, F.spark_partition_id()).localCheckpoint(eager=False)
 
 
 def _bucketed_with_pid(
     df: DataFrame, order_cols: list[str], num_partitions: int | None
 ) -> DataFrame:
-    """Value-deterministic pid assignment for a NUMERIC first order
-    column — the round-16 replacement for the checkpoint-frozen range
-    partitioning on every numeric-keyed call site.
+    """``df`` plus its bucket id: equal-width buckets over the (min,
+    max) range of the first order column's ``_bucket_key``.
 
-    Why (measured, tools/plan_cost_sweep_r16.py follow-up): the
-    ``localCheckpoint(eager=False)`` form is NOT lazy under AQE —
-    ``Dataset.checkpoint`` calls ``queryExecution.toRdd``, and
-    ``AdaptiveSparkPlanExec.doExecute`` materializes every upstream
-    query stage right there, at CONSTRUCTION time (the pretrain
-    composite measured 10 jobs / ~2-6.5 s of data work per
-    construction before any action ran). The checkpoint also severs
-    the plan at a LogicalRDD, so Catalyst cannot prune columns or push
-    filters across the prefix-sum boundary.
-
-    This form derives the pid from the ROW'S VALUE instead of from
-    partitioner state: a one-row (min, max) aggregate of the first
-    order column is broadcast (in-plan, lazy), and each row's bucket is
-    its equal-width position in that range. Determinism no longer
-    depends on materialization AT ALL — min/max are exact, so any
-    branch recomputation reproduces identical pids — which is what
-    makes dropping the checkpoint sound. The frame is pinned
-    (``caching.pin``: lazy persist + registry) so the totals branch and
-    the local-window branch still share one computation of the
-    upstream pipeline, matching the checkpoint's cost shape without its
-    eagerness; if the cache is evicted, recomputation is correct, just
-    slower — the failure mode the checkpoint turned into a job failure.
+    Lazy: the (min, max) aggregate is a broadcast inside the plan, so
+    constructing the frame runs no job (the retired
+    ``repartitionByRange`` + ``localCheckpoint`` form materialized its
+    input at construction under AQE). The pid is a function of the
+    row's value, so every recomputation reproduces it. The frame is
+    pinned (``caching.pin``: lazy persist + registry) so the totals
+    branch and the local-window branch share one computation of the
+    upstream plan; if the cache is evicted, recomputation is correct,
+    just slower.
 
     Bucketing correctness does not depend on balance: the pid is
-    monotone (non-strict) in the first order column, rows tying on it
-    share a bucket, and the local window orders by the FULL key inside
-    the bucket, so the offset identity holds for ANY bounds. Balance —
-    parallelism, not correctness — assumes a roughly uniform first
-    key (true of every call site: dense ids). Pathological doubles
-    degrade to fewer effective buckets, never to wrong results: NaN
-    and +inf keys land in the top bucket (their sort position), a
-    -inf/degenerate range collapses to one bucket, null keys take
-    bucket 0 (nulls-first sort position).
+    monotone (non-strict) in the first order column, rows tying on its
+    key share a bucket, and the local window orders by the FULL key
+    inside the bucket, so the offset identity holds for ANY bounds.
+    Balance — parallelism, not correctness — assumes a roughly uniform
+    key. Skewed keys degrade to fewer effective buckets, never to wrong
+    results: NaN and +inf keys land in the top bucket (their sort
+    position), a -inf/degenerate range collapses to one bucket, null
+    keys take bucket 0 (nulls-first sort position).
     """
     from .caching import pin
 
@@ -133,7 +117,7 @@ def _bucketed_with_pid(
     n = max(n, 1)
     if n == 1:
         return pin(df.withColumn(_PID, F.lit(0)))
-    key = F.col(order_cols[0]).cast("double")
+    key = _bucket_key(df, order_cols[0])
     rng = df.select(F.min(key).alias(_LO), F.max(key).alias(_HI))
     span = F.col(_HI) - F.col(_LO)
     frac = (key - F.col(_LO)) / span
@@ -164,26 +148,12 @@ def _bucketed_with_pid(
     return pin(bucketed)
 
 
-def _with_pid(
-    df: DataFrame, order_cols: list[str], num_partitions: int | None
-) -> DataFrame:
-    """Dispatch: numeric first order column -> the lazy value-bucketed
-    form; anything else (the ETL's string commit ids, the two-phase
-    mix's domain-first order) -> the checkpoint-frozen range form,
-    whose construction-time materialization is harmless there (those
-    callers execute the pipeline immediately) and whose ordering
-    supports arbitrary orderable types."""
-    if isinstance(df.schema[order_cols[0]].dataType, _NUMERIC_FIRST):
-        return _bucketed_with_pid(df, order_cols, num_partitions)
-    return _ranged_with_pid(df, order_cols, num_partitions)
-
-
-def _attach_offsets(ranged: DataFrame, partial: F.Column, local_fn,
+def _attach_offsets(bucketed: DataFrame, partial: F.Column, local_fn,
                     order_cols: list[str], out_col: str) -> DataFrame:
     """partial: per-row contribution aggregated per pid; local_fn: maps
     the partition-local window spec to the windowed value the offset is
     added to."""
-    totals = ranged.groupBy(_PID).agg(partial.alias("_ptotal"))
+    totals = bucketed.groupBy(_PID).agg(partial.alias("_ptotal"))
     # Global window over #partitions rows only — bounded, not a
     # data-sized single-reducer sort (warning suppressed at the logger
     # in session.get_spark; a lit(0) partition key gets folded away).
@@ -195,7 +165,7 @@ def _attach_offsets(ranged: DataFrame, partial: F.Column, local_fn,
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        ranged.withColumn(_LOCAL, local_fn(local_w))
+        bucketed.withColumn(_LOCAL, local_fn(local_w))
         .join(F.broadcast(offsets), _PID)
         .withColumn(out_col, F.col(_LOCAL) + F.col(_OFFSET))
         .drop(_PID, _LOCAL, _OFFSET)
@@ -214,9 +184,9 @@ def ordered_running_sum(
     docstring). Equivalent to
     ``SUM(value) OVER (ORDER BY order_cols ROWS UNBOUNDED PRECEDING)``.
     """
-    ranged = _with_pid(df, order_cols, num_partitions)
+    bucketed = _bucketed_with_pid(df, order_cols, num_partitions)
     return _attach_offsets(
-        ranged, F.sum(value_col), lambda w: F.sum(value_col).over(w), order_cols, out_col
+        bucketed, F.sum(value_col), lambda w: F.sum(value_col).over(w), order_cols, out_col
     )
 
 
@@ -231,9 +201,9 @@ def ordered_row_number(
     id assignment. Equivalent to
     ``ROW_NUMBER() OVER (ORDER BY order_cols)``.
     """
-    ranged = _with_pid(df, order_cols, num_partitions)
+    bucketed = _bucketed_with_pid(df, order_cols, num_partitions)
     return _attach_offsets(
-        ranged,
+        bucketed,
         F.count(F.lit(1)),
         lambda w: F.row_number().over(w).cast("long"),
         order_cols,

@@ -308,7 +308,7 @@ _REPOS_SKIPPED_ORACLE = f"""
 def etl_repos_skipped_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs_dir = _write_fixture_dir()
     commits = parse_git_log(spark, logs_dir)
-    # Arrow local path for both meta frames (round 14): each is a
+    # LocalRelations for both meta frames (round 14): each is a
     # broadcast build side executed per gate run
     repos_meta = local_frame(spark, _MULTI_REPOS_META, "name string, url string")
     scanned = local_frame(spark, [(p,) for p in _SCANNED_DIRS], "path string")

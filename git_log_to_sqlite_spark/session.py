@@ -129,42 +129,106 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
 
 
 def local_frame(spark: SparkSession, rows, schema):
-    """Bounded driver-side state as a JVM LocalRelation via the ARROW
-    local path: a pandas input converts driver-side to Arrow batches,
-    so the frame executes with no pickled partitions and no Python
-    workers.  The tuple-list ``createDataFrame`` form instead spreads
-    the rows over defaultParallelism pickled partitions, and every
-    EXECUTION that consumes them (a broadcast build, a model-state
-    write) pays a Python-worker round-trip for a handful of rows —
-    measured twice on this box: the round-13 centroid write (8 rows:
-    0.57-1.7 s tuple-list vs 0.25-0.31 s Arrow) and the round-14
-    broadcast-dim probe (4-row bands join at sf0.01: 0.401 s vs
-    0.212 s min-of-5, BASELINE.md).  Use for every small in-process
-    frame on a timed, gated or user-facing path — dims, model state,
-    the CLI's directory listing and dump results; plain tuple-list
-    remains fine for test fixtures.
+    """Bounded driver-side state as a JVM-parsed ``LocalRelation``: a
+    SQL ``VALUES`` inline table with every value cast to its field type.
 
-    ``rows`` is a list of tuples in ``schema`` column order; ``schema``
-    is a DDL string or a StructType.  The explicit schema keeps types
-    identical to the tuple-list form (pandas would otherwise
-    widen/narrow dtypes by inference).
+    The frame executes with no pickled partitions and no Python
+    workers, and building it needs neither pandas nor Arrow. The
+    tuple-list ``createDataFrame`` form instead spreads the rows over
+    defaultParallelism pickled partitions, and every execution that
+    consumes them (a broadcast build, a model-state write) pays a
+    Python-worker round trip for a handful of rows (BASELINE.md has
+    the measurements). Use it for every small in-process frame on a
+    timed, gated or user-facing path — dims, model state, the CLI's
+    dump results; plain tuple-list remains fine for test fixtures.
+
+    ``rows`` is an iterable of tuples in ``schema`` column order;
+    ``schema`` is a DDL string or a StructType. The result has exactly
+    that schema, nullability included. Supported field types: string,
+    integral, float and double (NaN and ±inf included), and maps and
+    structs of these (a struct value is a tuple, a ``Row`` or a dict);
+    other types raise ``TypeError``. Map values always come back
+    nullable. A None in a non-nullable field raises ``ValueError``, as
+    ``createDataFrame`` does. Zero rows fall back to the tuple-list
+    form, which has no per-row cost to save.
     """
-    import pandas as pd
+    from pyspark.sql.types import StructType
 
-    rows = list(rows)
-    if not rows:
-        # zero-row frames carry no per-row worker cost to save; the
-        # tuple-list form also sidesteps pandas' all-object dtype
-        # inference on an empty frame
-        return spark.createDataFrame([], schema)
     if isinstance(schema, str):
-        # real DDL parse, not a comma split: nested comma-bearing types
-        # (map<string,int>, struct<a:int,b:int>) would break a naive
-        # split, and the active session this helper requires is exactly
-        # what fromDDL needs
-        from pyspark.sql.types import StructType
+        schema = StructType.fromDDL(schema)
+    rows = [tuple(r) for r in rows]
+    if not rows:
+        return spark.createDataFrame([], schema)
+    fields = schema.fields
+    values = []
+    for i, row in enumerate(rows):
+        cells = []
+        for field, value in zip(fields, row, strict=True):
+            if value is None and not field.nullable:
+                raise ValueError(f"field {field.name!r} is not nullable, got None")
+            cell = _sql_literal(value, field.dataType)
+            if i == 0 and field.nullable:
+                # An inline-table column is nullable when one of its
+                # expressions is: this one is, and it evaluates to ``cell``.
+                cell = f"IF(TRUE, {cell}, NULL)"
+            cells.append(cell)
+        values.append(f"({', '.join(cells)})")
+    names = ", ".join(_sql_name(f.name) for f in fields)
+    return spark.sql(f"VALUES {', '.join(values)} AS t({names})")
 
-        cols = StructType.fromDDL(schema).fieldNames()
-    else:
-        cols = list(schema.fieldNames())
-    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(text: str) -> str:
+    # escaped for the default spark.sql.parser.escapedStringLiterals=false
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_type(dtype) -> str:
+    """``dtype`` as Spark SQL type text, nested field nullability kept."""
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.StructType):
+        inner = ", ".join(
+            f"{_sql_name(f.name)}: {_sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dtype.fields
+        )
+        return f"STRUCT<{inner}>"
+    if isinstance(dtype, T.MapType):
+        return f"MAP<{_sql_type(dtype.keyType)}, {_sql_type(dtype.valueType)}>"
+    return dtype.simpleString()
+
+
+def _sql_literal(value, dtype) -> str:
+    """``value`` as a Spark SQL expression of type ``dtype``."""
+    from pyspark.sql import types as T
+
+    sql_type = _sql_type(dtype)
+    if value is None:
+        return f"CAST(NULL AS {sql_type})"
+    if isinstance(dtype, T.StringType):
+        return _sql_string(str(value))
+    if isinstance(dtype, T.IntegralType):
+        return f"CAST({int(value)} AS {sql_type})"
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        # str() round-trips a float, and its 'nan', 'inf' and '-inf'
+        # are spellings Spark's string-to-double cast accepts
+        return f"CAST('{value}' AS {sql_type})"
+    if isinstance(dtype, T.MapType):
+        items = ", ".join(
+            f"{_sql_literal(k, dtype.keyType)}, {_sql_literal(v, dtype.valueType)}"
+            for k, v in value.items()
+        )
+        return f"CAST(map({items}) AS {sql_type})"
+    if isinstance(dtype, T.StructType):
+        if isinstance(value, dict):
+            value = [value.get(f.name) for f in dtype.fields]
+        items = ", ".join(
+            f"{_sql_string(f.name)}, {_sql_literal(v, f.dataType)}"
+            for f, v in zip(dtype.fields, value, strict=True)
+        )
+        return f"CAST(named_struct({items}) AS {sql_type})"
+    raise TypeError(f"local_frame does not support {dtype.simpleString()} fields")

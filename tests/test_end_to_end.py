@@ -9,6 +9,7 @@ the materialized tables rather than the driver's fixtures.
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
 import duckdb
@@ -299,25 +300,188 @@ def test_cli_root_with_trailing_slashes_is_analyzed_not_skipped(spark, tmp_path,
 
 
 def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, monkeypatch):
-    """Cost guard: the scanned-path and repository frames the CLI hands
-    to ``run_pipeline`` are Arrow ``LocalRelation``s — a tuple-list
-    frame (``LogicalRDD``) makes every job that reads it start Python
-    workers."""
-    from git_log_to_sqlite_spark.etl import pipeline
+    """Cost guard: every driver-side frame the CLI builds (the dump
+    results and the author map, under both frames it hands the SQLite
+    sink) is a ``LocalRelation`` — a tuple-list frame (``LogicalRDD``)
+    makes every job that reads it start Python workers. The scanned
+    paths never become a frame: the skipped report is computed on the
+    driver."""
+    from git_log_to_sqlite_spark.etl import writers
 
     seen = {}
-    real = pipeline.run_pipeline
+    real = writers.write_sqlite
 
-    def capture(spark_, commits, repos_meta, scanned_dirs=None, config=None):
-        seen.update(repos_meta=repos_meta, scanned_dirs=scanned_dirs)
-        return real(spark_, commits, repos_meta, scanned_dirs, config)
+    def capture(db_path, repositories, commits, clear=False):
+        seen.update(repositories=repositories, commits=commits)
+        return real(db_path, repositories, commits, clear=clear)
 
-    monkeypatch.setattr(pipeline, "run_pipeline", capture)
+    def leaves(df):
+        it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        names = []
+        while it.hasNext():
+            names.append(it.next().nodeName())
+        return names
+
+    monkeypatch.setattr(writers, "write_sqlite", capture)
     _repo_with_commit(tmp_path / "root" / "proj")
     (tmp_path / "root" / "not_a_repo").mkdir()
-    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(tmp_path / "o.db"))
-    for name, df in seen.items():
-        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name
+    config = tmp_path / "config.toml"
+    config.write_text('[author_map]\n"fixture@example.com" = "Canonical"\n')
+    _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(tmp_path / "o.db"),
+         "--config", str(config))
+    assert set(leaves(seen["repositories"])) == {"LocalRelation"}
+    commit_leaves = leaves(seen["commits"])
+    assert commit_leaves.count("LocalRelation") == 2, commit_leaves  # dumps, author map
+    assert "LogicalRDD" not in commit_leaves, commit_leaves
+
+
+def _gen_module():
+    """``perfbench/gen.py``: seeded git repositories with a manifest."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", Path(REPO_ROOT) / "perfbench" / "gen.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.fixture(scope="module")
+def gen_tree(tmp_path_factory):
+    """A small generated tree: 3 repositories of about 30 commits, plus
+    the ignored, empty and non-git directories; returns (root, manifest)."""
+    root = str(tmp_path_factory.mktemp("gen") / "root")
+    return root, _gen_module().git_repos(root, 7, 3, 30)
+
+
+def _pipeline_tables(spark, root, config_path, tmp_path):
+    """The three tables ``run_pipeline`` builds from the CLI's inputs
+    (scan, ignore list, dumps), rows ordered by primary key."""
+    from git_log_to_sqlite_spark.__main__ import _dump_repo, _named_by_dump
+    from git_log_to_sqlite_spark.config import Config
+    from git_log_to_sqlite_spark.etl.pipeline import scan_directories
+    from git_log_to_sqlite_spark.session import local_frame
+
+    config = Config.load(config_path)
+    dump_dir = tmp_path / "dumps"
+    dump_dir.mkdir()
+    dirs = [
+        d for d in scan_directories(root)
+        if os.path.basename(d) not in config.ignored_repositories
+    ]
+    dumped = [_dump_repo(d, str(dump_dir), i) for i, d in enumerate(dirs)]
+    dumps = [(str(i), *r) for i, r in enumerate(dumped) if r is not None]
+    repos_meta = local_frame(spark, dumps, "dump string, name string, url string")
+    commits = _named_by_dump(parse_git_log(spark, str(dump_dir)), repos_meta)
+    res = run_pipeline(spark, commits, repos_meta, config=config)
+    logs = res.logs.select(
+        "commit_hash", "author_name", "author_email", "message", "commit_epoch",
+        "insertions", "deletions", "repository_id", "parent_hash",
+    )
+    return {
+        "repositories": sorted(map(tuple, res.repositories.collect())),
+        "logs": sorted(map(tuple, logs.collect())),
+        "changed_files": sorted(map(tuple, res.changed_files.collect())),
+    }
+
+
+def _sqlite_tables(db):
+    import sqlite3
+
+    con = sqlite3.connect(db)
+    try:
+        return {
+            table: con.execute(f"SELECT * FROM {table} ORDER BY {key}").fetchall()
+            for table, key in (
+                ("repositories", "id"), ("logs", "commit_hash"), ("changed_files", "id")
+            )
+        }
+    finally:
+        con.close()
+
+
+def test_cli_sqlite_tables_equal_pipeline_frames(spark, gen_tree, tmp_path):
+    """The CLI's SQLite tables equal ``run_pipeline``'s frames row by
+    row, ``changed_files`` ids included (``ordered_row_number`` against
+    SQLite's own numbering): on a fresh database, after an append
+    without ``--clear`` (ids continue after the stored maximum and the
+    re-written commits' old rows go), and after a ``--clear`` rerun."""
+    root, manifest = gen_tree
+    want = _pipeline_tables(spark, root, manifest["config"], tmp_path)
+    assert len(want["logs"]) == manifest["commits"]
+    assert len(want["changed_files"]) == manifest["changed_files"]
+    db = str(tmp_path / "cli.db")
+
+    def cli(*flags):
+        _cli(spark, root, "-r", "-d", db, "-f", manifest["config"], *flags)
+        return _sqlite_tables(db)
+
+    assert cli() == want
+    n = len(want["changed_files"])
+    appended = cli()
+    assert appended["repositories"] == want["repositories"]
+    assert appended["logs"] == want["logs"]
+    assert appended["changed_files"] == [(i + n, h, p) for i, h, p in want["changed_files"]]
+    assert cli("--clear") == want
+
+
+def test_cli_commit_in_two_repositories_keeps_file_ids(spark, tmp_path):
+    """A commit found in two scanned repositories (a clone beside its
+    origin) is stored once, under the name that sorts first, and its
+    file rows keep the pipeline's (commit_hash, pos) numbering: the
+    copies are numbered position-major."""
+    import sqlite3
+
+    origin = tmp_path / "root" / "a_origin"
+    origin.mkdir(parents=True)
+    _git(origin, "init", "-q")
+    for i in range(3):
+        for name in ("x", "y"):
+            (origin / f"{name}{i}.txt").write_text(f"{name} {i}\n")
+            _git(origin, "add", f"{name}{i}.txt")
+        _git(origin, "commit", "-q", "-m", f"pair {i}")
+    clone = tmp_path / "root" / "b_clone"
+    _git(tmp_path / "root", "clone", "-q", str(origin), str(clone))
+    (clone / "only.txt").write_text("only\n")
+    _git(clone, "add", "only.txt")
+    _git(clone, "commit", "-q", "-m", "clone only")
+    (tmp_path / "config.toml").write_text("")
+
+    want = _pipeline_tables(spark, str(tmp_path / "root"), str(tmp_path / "config.toml"),
+                            tmp_path)
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "-r", "-d", str(db))
+    got = _sqlite_tables(db)
+    assert len(want["changed_files"]) == 2 * 6 + 1
+    assert got["changed_files"] == want["changed_files"]
+    con = sqlite3.connect(db)
+    try:
+        stored = con.execute(
+            "SELECT l.message, r.name FROM logs l JOIN repositories r"
+            " ON l.repository_id = r.id ORDER BY l.message"
+        ).fetchall()
+    finally:
+        con.close()
+    assert stored == [("clone only", "b_clone")] + [
+        (f"pair {i}", "a_origin") for i in range(3)
+    ]
+
+
+def test_cli_warm_run_spark_jobs(spark, gen_tree, tmp_path):
+    """Cost guard: a warm CLI ingest runs at most 10 Spark jobs (it ran
+    24 when the sink streamed three separately planned frames, one job
+    per partition, and ``skipped`` was an anti-join)."""
+    import time
+
+    root, manifest = gen_tree
+    tracker = spark.sparkContext._jsc.statusTracker()
+    for run in range(2):
+        before = len(tracker.getJobIdsForGroup(None))
+        _cli(spark, root, "-r", "-d", str(tmp_path / f"{run}.db"), "-f", manifest["config"])
+        time.sleep(0.5)
+        jobs = len(tracker.getJobIdsForGroup(None)) - before
+    assert jobs <= 10, jobs
 
 
 def test_cli_second_root_appends_to_existing_database(spark, tmp_path):

@@ -91,6 +91,22 @@ def test_changed_files_ids_deterministic(etl):
     assert resorted == rows
 
 
+def test_changed_files_ids_deterministic_sqlite(etl, tmp_path):
+    """The SQLite sink's twin: SQLite numbers ``changed_files`` as the
+    rows arrive, and gets the pipeline's ids, row for row."""
+    db = tmp_path / "ids.sqlite"
+    write_sqlite(str(db), etl.repositories, etl.commits)
+    con = sqlite3.connect(db)
+    try:
+        got = con.execute(
+            "SELECT id, commit_hash, file_path FROM changed_files ORDER BY id"
+        ).fetchall()
+    finally:
+        con.close()
+    want = [tuple(r) for r in etl.changed_files.orderBy("id").collect()]
+    assert got == want and len(got) > 0
+
+
 def test_repositories_table(etl):
     repos = {r["name"]: r for r in etl.repositories.collect()}
     assert set(repos) == {"alpha", "beta"}  # ignored-repo excluded
@@ -129,11 +145,34 @@ def test_skipped_basename_ignores_trailing_slash_runs(spark, etl):
     assert {r["path"] for r in res.skipped.collect()} == {"/tmp/scan/gone//"}
 
 
+def test_run_pipeline_construction_runs_no_job(spark, tmp_path):
+    """Constructing the full load stage is lazy: ``ordered_row_number``
+    on the string ``commit_hash`` key, the repositories window and the
+    author map run nothing until an action."""
+    import time
+
+    logs_dir = FX.write_fixture_logs(tmp_path)
+    cfg = Config(ignored_repositories=FX.IGNORED_REPOSITORIES, author_map=FX.AUTHOR_MAP)
+    commits = parse_git_log(spark, str(logs_dir))
+    repos_meta = spark.createDataFrame(FX.REPOS_META, "name string, url string")
+    dirs = spark.createDataFrame([(d,) for d in FX.SCANNED_DIRS], "path string")
+    tracker = spark.sparkContext._jsc.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    run_pipeline(spark, commits, repos_meta, scanned_dirs=dirs, config=cfg)
+    time.sleep(0.5)
+    assert len(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_parse_raw_logs_construction_py4j_calls(spark, monkeypatch):
     """Cost guard: building the parse plan is a handful of JVM-side SQL
     parses, not one py4j round trip per Column node (the Column-API form
-    made about 2,000 calls)."""
-    import gc
+    made about 2,000 calls).
+
+    Memory commands (``m``) are not counted: they are the finalizers of
+    JavaObjects other code left as garbage, and the garbage collector
+    runs them whenever it likes, so they made the count vary by
+    hundreds between runs."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
 
     from git_log_to_sqlite_spark.etl import parse_raw_logs
 
@@ -141,11 +180,11 @@ def test_parse_raw_logs_construction_py4j_calls(spark, monkeypatch):
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
 
-    def counted(*args, **kwargs):
-        calls.append(1)
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return send(command, *args, **kwargs)
 
-    gc.collect()
     monkeypatch.setattr(client, "send_command", counted)
     parsed = parse_raw_logs(raw)
     monkeypatch.undo()
@@ -155,7 +194,7 @@ def test_parse_raw_logs_construction_py4j_calls(spark, monkeypatch):
 
 def test_sqlite_parity_sink(etl, tmp_path):
     db = tmp_path / "out.sqlite"
-    write_sqlite(str(db), etl.repositories, etl.logs, etl.changed_files)
+    write_sqlite(str(db), etl.repositories, etl.commits)
     con = sqlite3.connect(db)
     try:
         n_logs = con.execute("SELECT count(*) FROM logs").fetchone()[0]
@@ -166,7 +205,7 @@ def test_sqlite_parity_sink(etl, tmp_path):
         ).fetchone()[0]
         assert epoch == 1700000000
         # idempotent re-write (R19 fixed): no duplicate repositories
-        write_sqlite(str(db), etl.repositories, etl.logs, etl.changed_files)
+        write_sqlite(str(db), etl.repositories, etl.commits)
         n_repos = con.execute("SELECT count(*) FROM repositories").fetchone()[0]
         assert n_repos == 2
     finally:

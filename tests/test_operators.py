@@ -2085,20 +2085,24 @@ def test_ordered_running_sum_matches_global_window(spark):
 
 
 def test_ordered_numeric_construction_is_lazy(spark):
-    """The round-16 contract: constructing a numeric-keyed ordered op
-    (and the composites built on it) fires ZERO Spark jobs. The
+    """Constructing an ordered op (and the composites built on it)
+    fires ZERO Spark jobs, for numeric and for string first keys. The
     retired localCheckpoint(eager=False) form was not lazy under AQE
     (Dataset.checkpoint -> queryExecution.toRdd ->
     AdaptiveSparkPlanExec materializes every upstream stage at
-    construction — measured 10 jobs / seconds of data work per
-    pretrain-composite construction)."""
+    construction)."""
     import time
 
     tracker = spark.sparkContext._jsc.statusTracker()
     df = spark.createDataFrame([(i, 1) for i in range(200)], "k long, v long")
+    text = spark.createDataFrame(
+        [(f"{i * 7919 % 200:040x}", i % 3) for i in range(200)], "h string, pos int"
+    )
     ordered_running_sum(df, ["k"], "v")  # warm (pin registry, py4j)
+    ordered_row_number(text, ["h", "pos"], out_col="id")
     before = len(tracker.getJobIdsForGroup(None))
     ordered_running_sum(df, ["k"], "v")
+    ordered_row_number(text, ["h", "pos"], out_col="id")
     time.sleep(0.5)  # async subquery futures would land here
     assert len(tracker.getJobIdsForGroup(None)) == before
 

@@ -454,3 +454,34 @@ def test_nearest_cells_table_equals_literal_property(sess, data, k, n_probe):
         for r in nearest_cells_table(df, "_v", cdf, npb).collect()
     }
     assert got == want
+
+
+_order_key = st.one_of(
+    st.none(),
+    st.text(max_size=10),
+    st.builds(lambda tail: "shared/prefix/" + tail, st.text(max_size=3)),
+    st.from_regex(r"[0-9a-f]{40}", fullmatch=True),
+)
+
+
+@given(keys=st.lists(_order_key, min_size=1, max_size=40))
+@example(keys=["", None, "abcdefg", "abcdefgh", "abcdefg\x00", "é", "日本", "\x7f", "z"])
+@settings(**_SETTINGS)
+def test_ordered_row_number_string_keys_match_global_window(sess, keys):
+    """The value-bucketed route keyed on a string's first UTF-8 bytes
+    numbers rows exactly as ``ROW_NUMBER() OVER (ORDER BY k, pos)``,
+    for NULL, empty, non-ASCII and long-shared-prefix keys."""
+    from pyspark.sql import Window
+
+    from git_log_to_sqlite_spark.operators.ordered import ordered_row_number
+
+    df = sess.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "k string, pos int"
+    ).repartition(3)
+    got = ordered_row_number(df, ["k", "pos"], out_col="id", num_partitions=8)
+    want = df.select(
+        "k", "pos", F.row_number().over(Window.orderBy("k", "pos")).cast("long").alias("id")
+    )
+    assert sorted(map(tuple, got.select("pos", "k", "id").collect())) == sorted(
+        (r["pos"], r["k"], r["id"]) for r in want.collect()
+    )

@@ -186,7 +186,7 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
 
 
 def test_local_frame_matches_tuple_list_form(spark):
-    """session.local_frame (the Arrow local path for bounded dim/model
+    """session.local_frame (the SQL VALUES path for bounded dim/model
     frames) must be value- and schema-identical to the tuple-list
     createDataFrame it replaces — including a nested comma-bearing DDL
     type, which a naive comma-split column parse would break on, and
@@ -216,6 +216,25 @@ def test_local_frame_matches_tuple_list_form(spark):
 
     empty = local_frame(spark, [], ddl)
     assert empty.schema == want.schema and empty.count() == 0
+
+    # SQL-text edge values: quotes, backslashes (a trailing one too),
+    # control characters, NULL, NaN and both infinities
+    import math
+
+    edge_rows = [
+        ("it's", float("nan")),
+        ("back\\slash\\", float("inf")),
+        ("\\'", float("-inf")),
+        ("tab\tnew\nline é", None),
+        (None, 1e-300),
+    ]
+    got_e = local_frame(spark, edge_rows, ddl)
+    assert got_e.schema == want.schema
+    assert got_e._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    rows_e = got_e.collect()
+    assert [r["k"] for r in rows_e] == [k for k, _ in edge_rows]
+    assert math.isnan(rows_e[0]["v"])
+    assert [r["v"] for r in rows_e[1:]] == [v for _, v in edge_rows[1:]]
 
 
 def test_write_parquet_bounds_records_per_file(spark, tmp_path):
