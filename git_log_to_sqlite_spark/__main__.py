@@ -14,10 +14,15 @@ Execution model:
   driver-side, as in the reference (analyzer.rs:102-135);
 * ``git log`` dumps run in a ``--num-threads`` pool (the reference's
   tokio worker pool, analyzer.rs:217-235);
-* the parse (``etl.gitlog``), the ignore filter, author map and
-  repositories dimension (``etl.pipeline.prepare``) are lazy Spark
-  frames, and ``etl.writers.write_sqlite`` runs them as one sorted pass
-  into SQLite. The CLI builds no ``logs`` or ``changed_files`` frame.
+* the parse (``etl.gitlog``), the dump-to-name mapping, the ignore
+  filter and the author map (``etl.pipeline.prepare``) are one lazy
+  Spark frame with no join: both mappings are SQL map literals. The
+  repositories dimension is built on the driver from the dump results;
+* ``etl.writers.write_sqlite`` streams the commits once, unsorted, into
+  SQLite, which orders them and numbers ``changed_files``. A warm
+  ingest runs two Spark jobs: the parse's shuffle-map stage and the
+  coalesced result. The CLI builds no ``logs`` or ``changed_files``
+  frame.
 
 ``--num-threads`` also sizes the local session's cores and shuffle
 partitions, the closest Spark analogue of the reference's
@@ -145,15 +150,17 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
     return name, url or _NO_REMOTE
 
 
-def _named_by_dump(commits: DataFrame, dumps: DataFrame) -> DataFrame:
+def _named_by_dump(commits: DataFrame, dumps: list[tuple[str, str, str]]) -> DataFrame:
     """Replace the parsed ``repository`` (the dump index, taken from the
-    file name) with the repository name, keeping the column order."""
+    file name) with the repository name, keeping the column order.
+    ``dumps`` holds the (dump, name, url) rows of the dumped
+    repositories; the lookup is a map literal, so no join runs."""
     from pyspark.sql import functions as F
 
-    names = F.broadcast(dumps.selectExpr("dump AS repository", "name"))
-    return commits.join(names, "repository").selectExpr(
-        *("name AS repository" if c == "repository" else c for c in commits.columns)
-    )
+    from .session import map_lookup
+
+    names = {dump: name for dump, name, _url in dumps}
+    return commits.withColumn("repository", F.expr(map_lookup(names, "repository")))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -164,7 +171,7 @@ def main(argv: list[str] | None = None) -> int:
     from .etl.gitlog import parse_git_log
     from .etl.pipeline import prepare, scan_directories
     from .etl.writers import write_sqlite
-    from .session import get_spark, local_frame
+    from .session import get_spark
 
     config = Config.load(args.config)
     spark = get_spark(
@@ -225,8 +232,7 @@ def main(argv: list[str] | None = None) -> int:
         names = {name for _, name, _ in dumps}
         analyzed = sorted(names)
         skipped = [d for d in directories if os.path.basename(d.rstrip("/")) not in names]
-        repos_meta = local_frame(spark, dumps, "dump string, name string, url string")
-        commits = _named_by_dump(parse_git_log(spark, dump_dir), repos_meta)
+        commits = _named_by_dump(parse_git_log(spark, dump_dir), dumps)
         # Reference parity (analyzer.rs:108-131): the ignore list applies
         # only to the recursive scan — a non-recursive run analyzes the
         # root even when its name is listed, so strip the list before the
@@ -237,7 +243,7 @@ def main(argv: list[str] | None = None) -> int:
                 ignored_repositories=[], author_map=config.author_map
             )
         commits, repositories, _ignored = prepare(
-            spark, commits, repos_meta, pipeline_config
+            spark, commits, [(name, url) for _, name, url in dumps], pipeline_config
         )
         write_sqlite(args.database, repositories, commits, clear=args.clear)
 

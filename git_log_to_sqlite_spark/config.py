@@ -6,9 +6,10 @@ from the scan, with side-reporting, analyzer.rs:120-126) and
 ``author_map`` (email -> canonical author name, applied as an override
 during extraction, repository.rs:167-171).
 
-Spark mapping (SURVEY.md section 1.2): the author map becomes a small
-dimension DataFrame used in a broadcast left join + coalesce; the
-ignore list becomes an ``isin`` filter (broadcast anti-join at scale).
+Spark mapping (SURVEY.md section 1.2): the author map becomes a SQL
+map literal looked up per commit with a coalesce
+(``etl.pipeline.apply_author_map``); the ignore list becomes an
+``isin`` filter.
 """
 
 from __future__ import annotations
@@ -16,16 +17,6 @@ from __future__ import annotations
 import tomllib
 from dataclasses import dataclass, field
 from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-AUTHOR_MAP_SCHEMA = T.StructType(
-    [
-        T.StructField("author_email", T.StringType(), False),
-        T.StructField("mapped_author_name", T.StringType(), False),
-    ]
-)
 
 
 @dataclass
@@ -46,12 +37,3 @@ class Config:
             ignored_repositories=list(raw.get("ignored_repositories") or []),
             author_map=dict(raw.get("author_map") or {}),
         )
-
-    def author_map_df(self, spark: SparkSession) -> DataFrame:
-        """The author map as a broadcastable dimension DataFrame —
-        a LocalRelation (``session.local_frame``), so the broadcast
-        build executes without a Python-worker round-trip."""
-        from .session import local_frame
-
-        rows = [(email, name) for email, name in sorted(self.author_map.items())]
-        return local_frame(spark, rows, AUTHOR_MAP_SCHEMA)

@@ -14,8 +14,12 @@ Two entry points, both lazy (constructing them runs no Spark job):
   and ``skipped`` frames with their ids, for the Parquet sink and the
   parity plans.
 
-Every join here is a broadcast join: repositories and the author map
-are small dimensions even at 100 TB of commit data, so the fact table
+The small inputs stay on the driver. ``repos_meta`` arrives as Python
+rows, one per scanned repository, and the repositories dimension is
+built from them in Python as a ``LocalRelation``: reading it runs no
+Spark job. The author map is a SQL map literal in the commits plan, so
+the fact table is never joined for it. ``build_logs`` and
+``build_skipped`` join the dimension as a broadcast, so the fact table
 never shuffles for id resolution (the reference instead ran one
 correlated SQLite subquery per row, analyzer.rs:322).
 """
@@ -23,14 +27,16 @@ correlated SQLite subquery per row, analyzer.rs:322).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import Config
 from ..functions.core import normalize_remote_url
 from ..operators.ordered import ordered_row_number
+from ..session import local_frame, map_lookup
 
 
 @dataclass
@@ -46,49 +52,42 @@ class EtlResult:
     skipped: DataFrame
 
 
-def apply_author_map(commits: DataFrame, config: Config, spark: SparkSession) -> DataFrame:
-    """R16: broadcast left join + coalesce override of author_name when
-    the email is mapped (repository.rs:163-171)."""
+def apply_author_map(commits: DataFrame, config: Config) -> DataFrame:
+    """R16: override ``author_name`` where the email is mapped
+    (repository.rs:163-171), as ``coalesce(map(...)[author_email],
+    author_name)`` over a map literal of the config's author map."""
     if not config.author_map:
         return commits
-    mapping = F.broadcast(config.author_map_df(spark))
-    return (
-        commits.join(mapping, "author_email", "left")
-        .withColumn(
-            "author_name",
-            F.coalesce(F.col("mapped_author_name"), F.col("author_name")),
-        )
-        .drop("mapped_author_name")
+    mapped = map_lookup(config.author_map, "author_email")
+    return commits.withColumn(
+        "author_name", F.expr(f"coalesce({mapped}, author_name)")
     )
 
 
-def build_repositories(repos_meta: DataFrame) -> DataFrame:
+def build_repositories(
+    spark: SparkSession, repos_meta: Iterable[tuple[str, str | None]]
+) -> DataFrame:
     """R19 (fixed): keyed, deterministic repositories dimension.
 
-    ids via row_number over name asc — reproducible, unlike
-    AUTOINCREMENT (analyzer.rs:152). URL normalization per
-    repository.rs:187-193.
+    ``repos_meta`` holds one (name, url) row per scanned repository.
+    Ids are numbered 1.. in name order, reproducible unlike
+    AUTOINCREMENT (analyzer.rs:152). A name found more than once keeps
+    its minimum non-null url, a deterministic survivor rule (an
+    arbitrary row would let re-runs flip the stored url). URL
+    normalization per repository.rs:187-193, as the same SQL text the
+    parse uses.
 
-    The global window here is deliberate: repositories is a bounded
-    dimension (one row per scanned repo — thousands at most), not a
-    fact table; data-sized id assignment uses
-    operators.ordered.ordered_row_number (see build_changed_files).
-    (WindowExec's single-partition warning is suppressed at the logger
-    in session.get_spark; a lit(0) partition key gets folded away.)
+    Built on the driver: the dimension is bounded (one row per scanned
+    repository), and as a ``LocalRelation`` with a projection it is
+    read without a Spark job.
     """
-    w = Window.orderBy("name")
-    return (
-        repos_meta.select("name", "url")
-        # Deterministic survivor rule for duplicate-basename repos:
-        # the minimum non-null url wins (dropDuplicates would keep an
-        # arbitrary row, so re-runs could flip the stored url).
-        .groupBy("name")
-        .agg(F.min("url").alias("url"))
-        .select(
-            F.row_number().over(w).cast("long").alias("id"),
-            F.col("name"),
-            F.expr(normalize_remote_url("url")).alias("url"),
-        )
+    urls: dict[str, str | None] = {}
+    for name, url in repos_meta:
+        old = urls.get(name)
+        urls[name] = url if old is None or (url is not None and url < old) else old
+    rows = [(i, name, urls[name]) for i, name in enumerate(sorted(urls), 1)]
+    return local_frame(spark, rows, "id long NOT NULL, name string, url string").selectExpr(
+        "id", "name", f"{normalize_remote_url('url')} AS url"
     )
 
 
@@ -150,42 +149,44 @@ def build_skipped(scanned_dirs: DataFrame, repositories: DataFrame) -> DataFrame
 def prepare(
     spark: SparkSession,
     commits: DataFrame,
-    repos_meta: DataFrame,
+    repos_meta: Iterable[tuple[str, str | None]],
     config: Config,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The load stage's shared first step: the R5 ignore filter, the
     R16 author map and the repositories dimension.
 
+    ``repos_meta`` holds (name, url) rows, one per scanned repository.
     Returns ``(commits, repositories, ignored)``: the filtered and
     author-mapped denormalized commits, the keyed repositories
     dimension, and the ignored names found in ``repos_meta``. Lazy: no
     Spark job runs."""
-    if config.ignored_repositories:
-        ignore = config.ignored_repositories
-        ignored = repos_meta.filter(F.col("name").isin(ignore)).select("name")
-        repos_meta = repos_meta.filter(~F.col("name").isin(ignore))
-        commits = commits.filter(~F.col("repository").isin(ignore))
-    else:
-        ignored = repos_meta.select("name").limit(0)
-    commits = apply_author_map(commits, config, spark)
-    return commits, build_repositories(repos_meta), ignored
+    repos_meta = list(repos_meta)
+    ignore = set(config.ignored_repositories)
+    ignored = local_frame(
+        spark, [(name,) for name, _url in repos_meta if name in ignore], "name string"
+    )
+    if ignore:
+        repos_meta = [(name, url) for name, url in repos_meta if name not in ignore]
+        commits = commits.filter(~F.col("repository").isin(config.ignored_repositories))
+    commits = apply_author_map(commits, config)
+    return commits, build_repositories(spark, repos_meta), ignored
 
 
 def run_pipeline(
     spark: SparkSession,
     commits: DataFrame,
-    repos_meta: DataFrame,
+    repos_meta: Iterable[tuple[str, str | None]],
     scanned_dirs: DataFrame | None = None,
     config: Config | None = None,
 ) -> EtlResult:
     """The full load stage as lazy frames (no Spark job runs).
 
-    ``commits`` is the parse_git_log output; ``repos_meta`` has (name,
-    url) — further columns are ignored; ``scanned_dirs`` has (path).
-    Returns every table with its ids assigned, for the Parquet sink and
-    the parity plans. The SQLite sink needs only ``repositories`` and
-    ``commits``: SQLite numbers ``changed_files`` itself (see
-    ``writers.write_sqlite``)."""
+    ``commits`` is the parse_git_log output; ``repos_meta`` holds
+    (name, url) rows, one per scanned repository; ``scanned_dirs`` has
+    (path). Returns every table with its ids assigned, for the Parquet
+    sink and the parity plans. The SQLite sink needs only
+    ``repositories`` and ``commits``: SQLite numbers ``changed_files``
+    itself (see ``writers.write_sqlite``)."""
     commits, repositories, ignored = prepare(
         spark, commits, repos_meta, config or Config()
     )

@@ -4,9 +4,11 @@
   ``run_pipeline`` tables, with ``--clear`` semantics (overwrite).
 * ``write_sqlite`` writes the reference's SQLite layout
   (analyzer.rs:149-188) from the repositories dimension and the
-  denormalized commits, streamed once in ``commit_hash`` order; SQLite
-  assigns the ``changed_files`` ids. The driver holds one partition of
-  the sorted commits at a time, never the full table.
+  denormalized commits. The commits stream through the driver one
+  partition at a time, in no particular order, into SQLite staging
+  tables; SQLite's own sorter then orders them and assigns the
+  ``changed_files`` ids. Neither the driver nor Spark ever holds the
+  full table, and Spark sorts nothing.
 * ``clear_sqlite`` truncates the SQLite tables without writing.
 """
 
@@ -140,25 +142,33 @@ def write_sqlite(
     ``repositories`` has (id, name, url) and is collected: it is a
     bounded dimension. ``commits`` is ``EtlResult.commits`` (or
     ``pipeline.prepare``'s commits): one row per commit with its
-    ``repository`` name and its ``changed_files`` array. It is streamed
-    once, sorted by ``commit_hash``, through ``toLocalIterator``, so the
-    driver holds one partition of the sorted frame at a time (AQE
-    coalesces the sort's partitions to the data's size). Each commit
-    yields its ``logs`` row, its ``repository_id`` looked up by name in
-    the dimension, and its ``changed_files`` rows.
+    ``repository`` name and its ``changed_files`` array.
 
-    ``changed_files.id`` is assigned by SQLite as the rows arrive, in
-    (commit_hash, array position) order: the reference's AUTOINCREMENT
-    rule (analyzer.rs:178-188, 305-346), and on an empty database the
-    ids ``pipeline.build_changed_files`` assigns. A commit found in
-    several scanned repositories is stored once, under the repository
-    whose name sorts first; its file rows are numbered position-major
-    across the copies, as ``build_changed_files`` numbers them.
+    Memory contract: ``commits`` is streamed once, in whatever order it
+    arrives, through a ``rebalance`` hint and ``toLocalIterator``, so
+    the driver holds one partition at a time (with AQE on, partitions
+    are coalesced or split to the advisory partition size). Each commit
+    is staged, ``batch_size`` rows per insert, into two SQLite ``TEMP``
+    tables: its ``logs`` row and one row per changed file with its
+    array position and repository name. ``logs`` and ``changed_files``
+    are then written with one ``INSERT ... SELECT ... ORDER BY`` each:
+    SQLite's sorter, which spills to temporary files, orders the rows,
+    so no Spark job samples or sorts the commits.
+
+    ``changed_files.id`` is assigned by SQLite as the rows are inserted,
+    in (commit_hash, array position, repository) order: the reference's
+    AUTOINCREMENT rule (analyzer.rs:178-188, 305-346), and on an empty
+    database the ids ``pipeline.build_changed_files`` assigns. A commit
+    found in several scanned repositories is stored once in ``logs``,
+    under the repository whose name sorts first; its file rows are
+    numbered position-major across the copies, as
+    ``build_changed_files`` numbers them. The result does not depend on
+    the order or partitioning of ``commits``.
 
     ``commit_datetime`` stores raw epoch seconds — exactly what the
     reference stores into its DATETIME column (repository.rs:178 via
-    analyzer.rs:327). Rows are inserted in batches of ``batch_size``,
-    one transaction per batch.
+    analyzer.rs:327). The tables change in one transaction, after the
+    stream has ended.
 
     Writing into a populated database without ``clear`` appends, as
     the reference's AUTOINCREMENT ids do: a stored repository name
@@ -172,38 +182,65 @@ def write_sqlite(
     try:
         for ddl in _DDL:
             con.execute(ddl)
-        if clear:  # R23 (analyzer.rs:190-194)
-            for table in ("changed_files", "logs", "repositories"):
-                con.execute(f"DELETE FROM {table}")
-        stored = dict(con.execute("SELECT name, id FROM repositories"))
-        (file_offset,) = con.execute(
-            "SELECT coalesce(max(id), 0) FROM changed_files"
-        ).fetchone()
+        con.execute(
+            "CREATE TEMP TABLE log_rows (commit_hash, author_name, author_email,"
+            " message, commit_epoch, insertions, deletions, parent_hash,"
+            " repository, repository_id)"
+        )
+        con.execute("CREATE TEMP TABLE file_rows (commit_hash, pos, repository, file_path)")
+        stored, file_offset = {}, 0
+        if not clear:
+            stored = dict(con.execute("SELECT name, id FROM repositories"))
+            (file_offset,) = con.execute(
+                "SELECT coalesce(max(id), 0) FROM changed_files"
+            ).fetchone()
         repo_rows = [tuple(r) for r in repositories.select("id", "name", "url").collect()]
         if stored:
             repo_id = _appended_ids(stored, repo_rows)
             repo_rows = [(repo_id[i], name, url) for i, name, url in repo_rows]
+        id_of = {name: i for i, name, _url in repo_rows}
+        rows = (
+            commits.select(*_LOG_COLUMNS, "repository", "changed_files")
+            .hint("rebalance")
+            .toLocalIterator()
+        )
+        for batch in _batched(rows, batch_size):
+            con.executemany(
+                "INSERT INTO log_rows VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
+                [(*r[:9], id_of.get(r[8])) for r in batch],
+            )
+            con.executemany(
+                "INSERT INTO file_rows VALUES (?, ?, ?, ?)",
+                [
+                    (r[0], pos, r[8], path)
+                    for r in batch
+                    for pos, path in enumerate(r[9] or ())
+                    if path is not None
+                ],
+            )
+        if clear:  # R23 (analyzer.rs:190-194)
+            for table in ("changed_files", "logs", "repositories"):
+                con.execute(f"DELETE FROM {table}")
         con.executemany(
             "INSERT OR REPLACE INTO repositories (id, name, url) VALUES (?, ?, ?)",
             repo_rows,
         )
-        id_of = {name: i for i, name, _url in repo_rows}
-        rows = (
-            commits.select(*_LOG_COLUMNS, "repository", "changed_files")
-            .orderBy("commit_hash")
-            .toLocalIterator()
+        # The first-sorted repository's copy of each commit wins.
+        con.execute(
+            "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
+            " message, commit_datetime, insertions, deletions, parent_hash,"
+            " repository_id)"
+            " SELECT commit_hash, author_name, author_email, message, commit_epoch,"
+            " insertions, deletions, parent_hash, repository_id FROM"
+            " (SELECT *, row_number() OVER (PARTITION BY commit_hash"
+            "  ORDER BY coalesce(repository, '')) AS copy FROM log_rows)"
+            " WHERE copy = 1 ORDER BY commit_hash"
         )
-        log_batch: list[tuple] = []
-        file_batch: list[tuple] = []
-        for commit_hash, copies in itertools.groupby(rows, key=lambda r: r[0]):
-            copies = sorted(copies, key=lambda r: r["repository"] or "")
-            first = copies[0]
-            log_batch.append((*first[:7], id_of.get(first["repository"]), first[7]))
-            for paths in itertools.zip_longest(*(r["changed_files"] or () for r in copies)):
-                file_batch.extend((commit_hash, p) for p in paths if p is not None)
-            if len(log_batch) + len(file_batch) >= batch_size:
-                _flush(con, log_batch, file_batch)
-        _flush(con, log_batch, file_batch)
+        con.execute(
+            "INSERT INTO changed_files (commit_hash, file_path)"
+            " SELECT commit_hash, file_path FROM file_rows"
+            " ORDER BY commit_hash, pos, coalesce(repository, '')"
+        )
         if file_offset:
             # A commit's file list is a function of its hash, so the
             # commits written now are the ones with rows above the offset.
@@ -217,8 +254,7 @@ def write_sqlite(
         con.close()
 
 
-# ``logs`` columns in the commits frame, with ``repository_id`` going
-# between the seventh and the last
+# ``logs`` columns in the commits frame, in staging order
 _LOG_COLUMNS = (
     "commit_hash",
     "author_name",
@@ -231,20 +267,11 @@ _LOG_COLUMNS = (
 )
 
 
-def _flush(con: sqlite3.Connection, log_rows: list, file_rows: list) -> None:
-    """Insert and commit one batch, then empty the lists."""
-    con.executemany(
-        "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
-        " message, commit_datetime, insertions, deletions, repository_id,"
-        " parent_hash) VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-        log_rows,
-    )
-    con.executemany(
-        "INSERT INTO changed_files (commit_hash, file_path) VALUES (?, ?)", file_rows
-    )
-    con.commit()
-    log_rows.clear()
-    file_rows.clear()
+def _batched(rows: Iterable, size: int) -> Iterable[list]:
+    """``rows`` in lists of at most ``size``."""
+    it = iter(rows)
+    while batch := list(itertools.islice(it, size)):
+        yield batch
 
 
 def _appended_ids(stored: dict[str, int], rows: list) -> dict[int, int]:

@@ -131,8 +131,9 @@ def _quantile_cap(d_values: DataFrame, q: float) -> DataFrame:
 
     The fold here runs over the df *histogram* (one row per distinct
     posting-list length — bounded by the longest posting list,
-    thousands of rows at worst at corpus scale), not over data; same
-    bounded-dimension exemption as build_repositories.
+    thousands of rows at worst at corpus scale), not over data; the
+    same bounded-dimension argument that keeps build_repositories on
+    the driver.
 
     Shape note (round 17, guide §2.4): this was previously a
     sort + two global windows + filter + global min-agg over the

@@ -4,7 +4,7 @@ The reference's whole purpose is the ETL dataflow (SURVEY.md §2.1
 R1–R30); until now that path was pytest-verified only. This module
 gives it a driver hash row: the gate query runs the REAL pipeline —
 git-log text parse → sentinels → merge exclusion → author-map
-broadcast join → repositories dimension → logs + changed_files
+lookup → repositories dimension → logs + changed_files
 normalization — over a deterministic embedded fixture, and the oracle
 is the hand-derived expected table as literal SQL ``VALUES`` (DuckDB
 needs no filesystem access).
@@ -204,8 +204,7 @@ def _write_fixture_dir() -> str:
 def etl_logs_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs_dir = _write_fixture_dir()
     commits = parse_git_log(spark, logs_dir)
-    repos_meta = local_frame(spark, _REPOS_META, "name string, url string")
-    res = run_pipeline(spark, commits, repos_meta, config=_CONFIG)
+    res = run_pipeline(spark, commits, _REPOS_META, config=_CONFIG)
 
     n_files = (
         res.changed_files.groupBy("commit_hash")
@@ -308,12 +307,10 @@ _REPOS_SKIPPED_ORACLE = f"""
 def etl_repos_skipped_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs_dir = _write_fixture_dir()
     commits = parse_git_log(spark, logs_dir)
-    # LocalRelations for both meta frames (round 14): each is a
-    # broadcast build side executed per gate run
-    repos_meta = local_frame(spark, _MULTI_REPOS_META, "name string, url string")
+    # a LocalRelation: the anti-join's probe side, executed per gate run
     scanned = local_frame(spark, [(p,) for p in _SCANNED_DIRS], "path string")
     res = run_pipeline(
-        spark, commits, repos_meta, scanned_dirs=scanned, config=_CONFIG
+        spark, commits, _MULTI_REPOS_META, scanned_dirs=scanned, config=_CONFIG
     )
     repos = res.repositories.select(
         F.lit("repository").alias("kind"),

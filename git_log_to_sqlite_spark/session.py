@@ -181,6 +181,23 @@ def _sql_name(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def map_lookup(mapping: dict[str, str], key: str) -> str:
+    """SQL text looking the string expression ``key`` up in ``mapping``:
+    the mapped string, or NULL for a missing or NULL key.
+
+    The map is a literal in the plan, so the lookup needs no join and
+    no job to broadcast a build side. Each row scans the map's keys, so
+    it suits driver-sized maps (an author map, one name per dumped
+    repository), not data-sized ones. Every key and value is escaped
+    (``'`` and ``\\`` included)."""
+    if not mapping:
+        return "CAST(NULL AS STRING)"
+    items = ", ".join(
+        f"{_sql_string(str(k))}, {_sql_string(str(v))}" for k, v in sorted(mapping.items())
+    )
+    return f"map({items})[{key}]"
+
+
 def _sql_string(text: str) -> str:
     # escaped for the default spark.sql.parser.escapedStringLiterals=false
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -34,9 +34,7 @@ def warehouse(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("e2e")
     logdir = write_fixture_logs(tmp / "logs")
     commits = parse_git_log(spark, str(logdir))
-    repos_meta = commits.select(F.col("repository").alias("name")).distinct().withColumn(
-        "url", F.lit(None).cast("string")
-    )
+    repos_meta = [(r[0], None) for r in commits.select("repository").distinct().collect()]
     res = run_pipeline(spark, commits, repos_meta)
     out = tmp / "wh"
     write_parquet(res.logs, str(out / "logs"))
@@ -300,12 +298,14 @@ def test_cli_root_with_trailing_slashes_is_analyzed_not_skipped(spark, tmp_path,
 
 
 def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, monkeypatch):
-    """Cost guard: every driver-side frame the CLI builds (the dump
-    results and the author map, under both frames it hands the SQLite
-    sink) is a ``LocalRelation`` — a tuple-list frame (``LogicalRDD``)
-    makes every job that reads it start Python workers. The scanned
-    paths never become a frame: the skipped report is computed on the
-    driver."""
+    """Cost guard: the repositories dimension the CLI hands the SQLite
+    sink is a ``LocalRelation`` built on the driver, and the commits
+    plan reads only the dumps: no ``LogicalRDD`` (a tuple-list frame
+    makes every job that reads it start Python workers) and no
+    ``Join`` (with AQE on, each broadcast build side runs a job of its
+    own). The dump names and the author map are map literals. The
+    scanned paths never become a frame: the skipped report is computed
+    on the driver."""
     from git_log_to_sqlite_spark.etl import writers
 
     seen = {}
@@ -314,6 +314,16 @@ def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, mon
     def capture(db_path, repositories, commits, clear=False):
         seen.update(repositories=repositories, commits=commits)
         return real(db_path, repositories, commits, clear=clear)
+
+    def nodes(df):
+        out, todo = [], [df._jdf.queryExecution().analyzed()]
+        while todo:
+            node = todo.pop()
+            out.append(node.nodeName())
+            it = node.children().iterator()
+            while it.hasNext():
+                todo.append(it.next())
+        return out
 
     def leaves(df):
         it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
@@ -330,9 +340,10 @@ def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, mon
     _cli(spark, str(tmp_path / "root"), "--recursive", "--database", str(tmp_path / "o.db"),
          "--config", str(config))
     assert set(leaves(seen["repositories"])) == {"LocalRelation"}
-    commit_leaves = leaves(seen["commits"])
-    assert commit_leaves.count("LocalRelation") == 2, commit_leaves  # dumps, author map
-    assert "LogicalRDD" not in commit_leaves, commit_leaves
+    commit_nodes = nodes(seen["commits"])
+    assert "LogicalRDD" not in commit_nodes, commit_nodes
+    assert not [n for n in commit_nodes if "Join" in n], commit_nodes
+    assert leaves(seen["commits"]) == ["LogicalRelation"]  # the dump files
 
 
 def _gen_module():
@@ -361,8 +372,6 @@ def _pipeline_tables(spark, root, config_path, tmp_path):
     from git_log_to_sqlite_spark.__main__ import _dump_repo, _named_by_dump
     from git_log_to_sqlite_spark.config import Config
     from git_log_to_sqlite_spark.etl.pipeline import scan_directories
-    from git_log_to_sqlite_spark.session import local_frame
-
     config = Config.load(config_path)
     dump_dir = tmp_path / "dumps"
     dump_dir.mkdir()
@@ -372,9 +381,8 @@ def _pipeline_tables(spark, root, config_path, tmp_path):
     ]
     dumped = [_dump_repo(d, str(dump_dir), i) for i, d in enumerate(dirs)]
     dumps = [(str(i), *r) for i, r in enumerate(dumped) if r is not None]
-    repos_meta = local_frame(spark, dumps, "dump string, name string, url string")
-    commits = _named_by_dump(parse_git_log(spark, str(dump_dir)), repos_meta)
-    res = run_pipeline(spark, commits, repos_meta, config=config)
+    commits = _named_by_dump(parse_git_log(spark, str(dump_dir)), dumps)
+    res = run_pipeline(spark, commits, [(name, url) for _, name, url in dumps], config=config)
     logs = res.logs.select(
         "commit_hash", "author_name", "author_email", "message", "commit_epoch",
         "insertions", "deletions", "repository_id", "parent_hash",
@@ -468,10 +476,43 @@ def test_cli_commit_in_two_repositories_keeps_file_ids(spark, tmp_path):
     ]
 
 
+def test_cli_names_needing_sql_escapes_equal_pipeline_frames(spark, tmp_path):
+    """Repository names, a remote URL and an author-map entry holding
+    ``'``, ``\\``, ``"``, spaces and non-ASCII letters reach SQLite
+    intact: the dump-name and author-map lookups and the repositories
+    dimension are SQL literals, and every one of them is escaped. The
+    tables equal ``run_pipeline``'s frames row by row."""
+    import sqlite3
+
+    root = tmp_path / "root"
+    names = ["it's", "back\\slash", 'q"uote \\\' é']
+    for name in names:
+        _repo_with_commit(root / name)
+    _git(root / names[0], "remote", "add", "origin", "git@github.com:o'wner/it's.git")
+    config = tmp_path / "config.toml"
+    config.write_text('[author_map]\n"fixture@example.com" = "O\'Brien \\\\ Ünal \\""\n')
+    want = _pipeline_tables(spark, str(root), str(config), tmp_path)
+    db = tmp_path / "out.db"
+    _cli(spark, str(root), "-r", "-d", str(db), "-f", str(config))
+    got = _sqlite_tables(db)
+    assert got == want
+    assert sorted(name for _, name, _ in got["repositories"]) == sorted(names)
+    assert (2, "it's", "https://github.com/o'wner/it's.git") in got["repositories"]
+    con = sqlite3.connect(db)
+    try:
+        authors = con.execute("SELECT DISTINCT author_name FROM logs").fetchall()
+    finally:
+        con.close()
+    assert authors == [("O'Brien \\ Ünal \"",)]
+
+
 def test_cli_warm_run_spark_jobs(spark, gen_tree, tmp_path):
-    """Cost guard: a warm CLI ingest runs at most 10 Spark jobs (it ran
-    24 when the sink streamed three separately planned frames, one job
-    per partition, and ``skipped`` was an anti-join)."""
+    """Cost guard: a warm CLI ingest runs at most 3 Spark jobs: the
+    parse's shuffle-map stage and the coalesced result it streams to
+    SQLite. It ran 24 when the sink streamed three separately planned
+    frames and ``skipped`` was an anti-join, and 8 when the
+    repositories dimension was a Spark window, the dump names and the
+    author map were broadcast joins and Spark sorted the commits."""
     import time
 
     root, manifest = gen_tree
@@ -481,7 +522,7 @@ def test_cli_warm_run_spark_jobs(spark, gen_tree, tmp_path):
         _cli(spark, root, "-r", "-d", str(tmp_path / f"{run}.db"), "-f", manifest["config"])
         time.sleep(0.5)
         jobs = len(tracker.getJobIdsForGroup(None)) - before
-    assert jobs <= 10, jobs
+    assert jobs <= 3, jobs
 
 
 def test_cli_second_root_appends_to_existing_database(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import sqlite3
 
 import pytest
+from pyspark.sql import functions as F
 
 from git_log_to_sqlite_spark.config import Config
 from git_log_to_sqlite_spark.etl import parse_git_log, run_pipeline
@@ -26,12 +27,11 @@ from . import fixtures as FX
 def etl(spark, tmp_path_factory):
     logs_dir = FX.write_fixture_logs(tmp_path_factory.mktemp("golden"))
     commits = parse_git_log(spark, str(logs_dir))
-    repos_meta = spark.createDataFrame(FX.REPOS_META, "name string, url string")
     dirs = spark.createDataFrame([(d,) for d in FX.SCANNED_DIRS], "path string")
     cfg = Config(
         ignored_repositories=FX.IGNORED_REPOSITORIES, author_map=FX.AUTHOR_MAP
     )
-    return run_pipeline(spark, commits, repos_meta, scanned_dirs=dirs, config=cfg)
+    return run_pipeline(spark, commits, FX.REPOS_META, scanned_dirs=dirs, config=cfg)
 
 
 def _by_hash(rows):
@@ -107,6 +107,53 @@ def test_changed_files_ids_deterministic_sqlite(etl, tmp_path):
     assert got == want and len(got) > 0
 
 
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_sqlite_sink_ignores_input_order(spark, etl, tmp_path, aqe):
+    """The sink's tables do not depend on the order or partitioning its
+    commits arrive in: SQLite orders the rows. The golden commits plus
+    a copy of two alpha commits under beta (a clone beside its origin),
+    shuffled into several partitions, with AQE on and off: the
+    ``changed_files`` ids equal ``build_changed_files`` ids row for
+    row on an empty database, and continue after the stored maximum on
+    an append without ``clear``. The shared commits' ``logs`` rows go
+    to alpha, the name that sorts first."""
+    from git_log_to_sqlite_spark.etl.pipeline import build_changed_files
+
+    shared = (FX.H[1], FX.H[2])
+    copies = etl.commits.filter(F.col("commit_hash").isin(*shared)).withColumn(
+        "repository", F.lit("beta")
+    )
+    assert copies.count() == len(shared)
+    commits = etl.commits.unionByName(copies)
+    want = [tuple(r) for r in build_changed_files(commits).orderBy("id").collect()]
+
+    def files(con):
+        return con.execute("SELECT id, commit_hash, file_path FROM changed_files ORDER BY id")
+
+    db = str(tmp_path / "order.sqlite")
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        write_sqlite(db, etl.repositories, commits.repartition(3))
+        con = sqlite3.connect(db)
+        try:
+            assert files(con).fetchall() == want
+            owners = con.execute(
+                "SELECT r.name FROM logs l JOIN repositories r ON l.repository_id = r.id"
+                " WHERE l.commit_hash IN (?, ?)",
+                shared,
+            ).fetchall()
+            assert owners == [("alpha",), ("alpha",)]
+            write_sqlite(db, etl.repositories, commits.repartition(4))
+            n = len(want)
+            assert files(con).fetchall() == [(i + n, h, p) for i, h, p in want]
+            assert con.execute("SELECT count(*) FROM logs").fetchone()[0] == 10
+        finally:
+            con.close()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+
+
 def test_repositories_table(etl):
     repos = {r["name"]: r for r in etl.repositories.collect()}
     assert set(repos) == {"alpha", "beta"}  # ignored-repo excluded
@@ -137,11 +184,10 @@ def test_skipped_basename_ignores_trailing_slash_runs(spark, etl):
     not also reported as skipped."""
     from git_log_to_sqlite_spark.session import local_frame
 
-    repos_meta = local_frame(spark, FX.REPOS_META, "name string, url string")
     dirs = local_frame(
         spark, [("/tmp/scan/alpha//",), ("/tmp/scan/beta/",), ("/tmp/scan/gone//",)], "path string"
     )
-    res = run_pipeline(spark, etl.commits, repos_meta, scanned_dirs=dirs)
+    res = run_pipeline(spark, etl.commits, FX.REPOS_META, scanned_dirs=dirs)
     assert {r["path"] for r in res.skipped.collect()} == {"/tmp/scan/gone//"}
 
 
@@ -154,11 +200,10 @@ def test_run_pipeline_construction_runs_no_job(spark, tmp_path):
     logs_dir = FX.write_fixture_logs(tmp_path)
     cfg = Config(ignored_repositories=FX.IGNORED_REPOSITORIES, author_map=FX.AUTHOR_MAP)
     commits = parse_git_log(spark, str(logs_dir))
-    repos_meta = spark.createDataFrame(FX.REPOS_META, "name string, url string")
     dirs = spark.createDataFrame([(d,) for d in FX.SCANNED_DIRS], "path string")
     tracker = spark.sparkContext._jsc.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
-    run_pipeline(spark, commits, repos_meta, scanned_dirs=dirs, config=cfg)
+    run_pipeline(spark, commits, FX.REPOS_META, scanned_dirs=dirs, config=cfg)
     time.sleep(0.5)
     assert len(tracker.getJobIdsForGroup(None)) == before
 

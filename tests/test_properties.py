@@ -22,8 +22,13 @@ _SETTINGS = dict(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
+# Letters of any script, digits, and the characters a SQL literal must
+# escape or a careless one would break on: quote, backslash,
+# double quote and space.
 _name = st.text(
-    alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")), min_size=1, max_size=8
+    alphabet=st.characters(categories=("Ll", "Lu", "Nd"), include_characters="'\\\" "),
+    min_size=1,
+    max_size=8,
 )
 _email = st.builds(lambda u, d: f"{u}@{d}.test", _name, _name)
 
@@ -38,16 +43,21 @@ def sess(spark):
 
 
 @given(rows=_commit_rows, mapping=st.dictionaries(_email, _name, max_size=5))
+@example(
+    rows=[(0, "Zoë", "o'brien\\x@d.test"), (1, 'say "hi"', "a b@é.test"), (2, "x\\", "z@z.test")],
+    mapping={"o'brien\\x@d.test": "O'Brien \\ Ünal", "a b@é.test": 'Ab "q" ß'},
+)
 @settings(**_SETTINGS)
 def test_author_map_preserves_rows_and_touches_only_name(sess, rows, mapping):
-    """R16 invariant: the broadcast-join override NEVER changes the row
-    count (a dup-keyed map would fan out) and only author_name moves."""
+    """R16 invariant: the map-literal override NEVER changes the row
+    count and only author_name moves, whatever the emails and names
+    hold (quotes, backslashes, spaces, non-ASCII letters)."""
     df = sess.createDataFrame(
         [(i, n, e) for i, (i_, n, e) in enumerate(rows) for _ in [i_]],
         "commit_id long, author_name string, author_email string",
     )
     cfg = Config(author_map=mapping)
-    out = apply_author_map(df, cfg, sess)
+    out = apply_author_map(df, cfg)
     assert out.count() == df.count()
     joined = (
         df.alias("i")

@@ -71,10 +71,7 @@ def replicate_logs(base_log: str, out_dir: str, n_repos: int) -> str:
 
 
 def probe(spark, logs_dir: str, n_repos: int, work: str) -> dict:
-    repos = spark.createDataFrame(
-        [(f"repo_{i:04d}", None) for i in range(n_repos)],
-        "name string, url string",
-    )
+    repos = [(f"repo_{i:04d}", None) for i in range(n_repos)]
 
     def mk_parse():
         return parse_git_log(spark, logs_dir)
