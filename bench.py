@@ -14,9 +14,12 @@ block, cool-down batches, per-window calibration — goes to a sidecar
 ``bench_detail.json`` next to this script, referenced by name in the
 compact line's ``detail`` field.
 
-Each query is fully materialized through the ``noop`` sink (real
-execution, no driver-side collect bottleneck). Numbers are recorded in
-BASELINE.md; the first recorded value per row is the frozen baseline.
+Every timed row is a ``(key, setup)`` pair: ``setup()`` does the row's
+one-time work and returns a zero-argument DataFrame builder, and every
+run of that builder goes through ``_timed_run``, fully materialized
+through the ``noop`` sink (real execution, no driver-side collect
+bottleneck). Numbers are recorded in BASELINE.md; the first recorded
+value per row is the frozen baseline.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 from git_log_to_sqlite_spark import plans
@@ -49,6 +53,32 @@ HEADLINE = [
     "text_quality",             # scalar battery over documents
     "asof_event_value",         # union-window as-of
 ]
+
+# Registry queries timed OUTSIDE the headline total: the 15-query
+# headline set is frozen so `value` stays comparable against the
+# reference baseline and earlier rounds.  sim_ann_ivf is deliberately
+# NOT benched — its time is ~90% the k-means FIT's per-iteration job
+# dispatch, which a production deployment pays once at index build, so
+# the number would track scheduler latency rather than the ANN probe
+# the query exists for — the recall test at sf0.1 is its perf/quality
+# gate.
+EXTRA_QUERIES = [
+    "pipeline_pretrain_corpus", "dedup_incremental_lsh",
+    "dedup_decontaminate", "dedup_embedding_cosine",
+    "dedup_simhash_pairs", "dedup_substring_spans",
+    "dedup_incremental_substring",
+    # connected-components closure consumers (pairs -> groups)
+    "dedup_substring_groups", "dedup_minhash_groups",
+    # binary-modality gate queries (mapInPandas decode + shared
+    # Hamming pair stage)
+    "mm_image_near_dup", "mm_video_near_dup", "mm_audio_near_dup",
+    # sequence-modality pair stages, simhash-distance decontamination
+    # and the cross-modal probe lookup
+    "mm_video_scene_pairs", "mm_audio_segment_pairs",
+    "mm_fuzzy_decontaminate", "mm_image_in_video",
+]
+
+DETAIL = "bench_detail.json"
 
 
 def _calibrate(spark) -> list[float]:
@@ -98,48 +128,147 @@ def _fmt_exc(exc: Exception) -> str:
     return f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"
 
 
-def _timed_run(fn, spark, sf_dir: str) -> float:
-    """One fully-materialized execution (noop sink) of a registry
-    query, wall-clock seconds — THE shared timing protocol of all
-    three headline passes and the registry extras, so a change to it
-    (sink, rounding, the cache-release step below) cannot skew one
-    pass against another.
+def _timed_run(thunk, spark) -> float:
+    """One fully-materialized execution (noop sink) of the DataFrame
+    ``thunk()`` builds, wall-clock seconds — THE timing protocol of
+    every row, so a change to it (sink, rounding, the cache release)
+    cannot skew one row or pass against another.  Construction is
+    inside the timed window.
 
-    COLD-RUN HONESTY (round 17, advisor item 1): operator pins are
-    released and the session cache cleared after EVERY timed run, not
-    once per min-of-3 triple.  Through round 16 the release ran only
-    after each triple, so for any query that ``pin()``s an
-    intermediate (the LSH families, the composites) runs 2-3 read the
-    run-1 InMemoryRelation back instead of recomputing it —
-    CacheManager substitutes cached plans by ``sameResult`` — and
-    min-of-3 reported a warm number (measured here: dedup_minhash_lsh
-    1.66 warm vs 4.2-6.5 cold, dedup_ngram_jaccard 1.34 warm vs
-    5-6.3 cold).  Every recorded run now computes the full pipeline
-    from the parquet inputs.  The release itself is OUTSIDE the timed
-    window and blocking, so async block eviction cannot overlap the
-    next run's timing.  The ``value`` FORMULA is unchanged (pass-1
-    min-of-3); what changed is that each run is genuinely cold —
-    recorded as a harness change in OPTIMIZATION_r17.md, with the
-    warm-formula numbers kept there for cross-round comparison."""
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    dt = round(time.perf_counter() - t0, 3)
-    release_caches(blocking=True)
-    spark.catalog.clearCache()
-    return dt
+    Every run is COLD: operator pins are released and the session
+    cache cleared after EVERY run, not once per min-of-3 triple.  With
+    a per-triple release, runs 2-3 of any query that ``pin()``s an
+    intermediate read the run-1 InMemoryRelation back — CacheManager
+    substitutes cached plans by ``sameResult`` — and min-of-3 reported
+    a warm number (dedup_minhash_lsh 1.66 warm vs 4.2-6.5 cold at sf0.1;
+    OPTIMIZATION_r17.md).  The release is OUTSIDE the timed window and
+    blocking, so async block eviction cannot overlap the next run, and
+    it runs after a failed run too, so a failure leaks no pin into the
+    next row."""
+    try:
+        t0 = time.perf_counter()
+        thunk().write.mode("overwrite").format("noop").save()
+        return round(time.perf_counter() - t0, 3)
+    finally:
+        release_caches(blocking=True)
+        spark.catalog.clearCache()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+def _sample(spark, setup, n: int, key: str, errors: dict,
+            tag: str = "") -> list[float] | None:
+    """Per-row containment: ``n`` timed runs of the thunk ``setup()``
+    returns, or None when the setup or any run raises — the error is
+    recorded under ``errors[key]`` with one stderr line, and the caller
+    moves on to the next row.  One failing row must never zero the
+    whole run's perf signal."""
+    try:
+        thunk = setup()
+        runs = [_timed_run(thunk, spark) for _ in range(n)]
+    except Exception as exc:  # noqa: BLE001 — record, keep benching
+        errors[key] = _fmt_exc(exc)
+        print(f"  {tag}{key}: FAILED ({errors[key]})", file=sys.stderr)
+        return None
+    print(f"  {tag}{key}: {min(runs):.3f}s (runs: {runs})", file=sys.stderr)
+    return runs
 
-    spark = get_spark("bench", cpus=cpus)
-    # Warm the JVM + parquet footers so q1 doesn't pay one-time costs.
-    plans.REGISTRY["agg_global"].fn(spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
 
+def _sample_rows(spark, rows, n: int, errors: dict,
+                 tag: str = "") -> dict[str, list[float]]:
+    """``{key: runs}`` for every ``(key, setup)`` row that completed."""
+    out = {}
+    for key, setup in rows:
+        runs = _sample(spark, setup, n, key, errors, tag)
+        if runs is not None:
+            out[key] = runs
+    return out
+
+
+def _query(spark, sf_dir: str, name: str):
+    """The ``(key, setup)`` row of a registry query: no one-time work."""
+    def setup():
+        fn = plans.REGISTRY[name].fn
+        return lambda: fn(spark, sf_dir)
+    return name, setup
+
+
+def _operator_rows(spark, sf_dir: str, ivf_dir: str, extra: dict) -> list:
+    """The extras that are not registry queries, as ``(key, setup)``
+    rows; each setup's one-time work is untimed unless noted."""
+    from pyspark.sql import functions as F
+
+    from git_log_to_sqlite_spark.operators import (
+        IvfIndex,
+        dsir_select,
+        kmeans_fit_sample,
+        semantic_dedup,
+        subword_token_counts,
+    )
+
+    def ivf_probe():
+        # The persisted build-once/probe-many API: one build, timed once
+        # and stage-split (fit / assign_write / centroids_write) into
+        # `extra`, because the build is the most contention-prone extra
+        # and the split shows WHICH term absorbed the load; then probe
+        # batches (100 queries, n_probe=2), the steady-state cost the
+        # index exists for and the number to watch across rounds.
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        idx = IvfIndex(spark, ivf_dir, id_col="vec_id", vec_col="embedding")
+        stages: dict = {}
+        t0 = time.perf_counter()
+        idx.build(emb, k=8, max_iter=5, stage_times=stages)
+        extra["ivf_index_build"] = round(time.perf_counter() - t0, 3)
+        for st, secs in stages.items():
+            extra[f"ivf_index_build_{st}"] = secs
+        probes = emb.orderBy("vec_id").limit(100)
+        return lambda: idx.probe(probes, n_probe=2, k=5)
+
+    def semantic_annotate():
+        # SemDeDup with a prefit quantizer, the steady-state shape: the
+        # bounded-sample fit is a once-per-rebuild cost already tracked
+        # by ivf_index_build; the annotate (assignment + rank window +
+        # cell-local pair join) is what a curation pipeline pays per run.
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        cents = kmeans_fit_sample(emb, "vec_id", "embedding", k=8,
+                                  max_iter=5, sample_size=1024)
+        return lambda: semantic_dedup(emb, "vec_id", "embedding", cents,
+                                      threshold=0.3)
+
+    def dsir(hash_fn):
+        # DSIR weights + Gumbel top-n at the gate parameters, once with
+        # the md5 oracle hash and once with the production xxhash64: the
+        # pair measures exactly the per-gram hashing cost BASELINE.md
+        # names as DSIR's dominant term.
+        def setup():
+            docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+            raw = docs.filter(F.col("doc_id") % 29 != 0)
+            tgt = docs.filter(F.col("doc_id") % 29 == 0)
+            return lambda: dsir_select(raw, tgt, "doc_id", "text", n=50,
+                                       buckets=2048, hash_fn=hash_fn)
+        return setup
+
+    def subword_seam():
+        # The stub tokenizer over the full documents table: the
+        # mapInPandas transport + per-text Python call cost a
+        # real-tokenizer deployment pays, the one Python hot path in the
+        # text battery (everything else is codegen).
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return lambda: subword_token_counts(docs, "doc_id", "text")
+
+    return [
+        ("ivf_index_probe", ivf_probe),
+        ("semantic_dedup_annotate", semantic_annotate),
+        ("dsir_select", dsir("md5")),
+        ("dsir_select_xxhash64", dsir("xxhash64")),
+        ("text_subword_tokens_seam", subword_seam),
+    ]
+
+
+def _bench(spark, sf: float, headline: list, extras: list,
+           extra: dict) -> tuple[dict, dict]:
+    """Time the ``headline`` and ``extras`` rows; returns the compact
+    line and the sidecar.  ``extra`` receives each extra's min-of-3,
+    next to the one-off numbers the extras' setups record in it (the
+    IVF build stages)."""
     # Contention sentinel, sampled before AND after the suite so
     # mid-run load spikes are visible too.  Bounded cool-down: the
     # r11/r12 driver artifacts both sampled a contended window
@@ -170,429 +299,78 @@ def main() -> None:
         # the floor, and further waiting just delays the suite
         if not improved:
             break
-    # batches superseded by a cool-down retry — nothing measured is
-    # dropped from the artifact; the accepted batch is whichever pre
-    # batch carries the best (minimum) sample
     cooldown_retries = [b for b in pre_batches if b is not calibration_pre]
 
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    runs_pass2: dict[str, list[float]] = {}
+    # Pass 1, cold min-of-3: run 1 pays codegen/compile; runs 2-3 absorb
+    # this box's +/-2x contention swings.  `value` is its sum.
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = plans.REGISTRY[name].fn
-        runs = []
-        # min-of-3: run 1 pays codegen/compile; runs 2-3 absorb this
-        # box's +/-2x contention swings on the shuffle-heavy queries
-        # (measured: identical code, 1.6s-8.0s across back-to-back runs)
-        # Per-query containment: one failing query records an error
-        # field instead of aborting the suite — a single regression
-        # must never zero the whole round's perf signal.
-        try:
-            for _ in range(3):
-                runs.append(_timed_run(fn, spark, sf_dir))
-            timings[name] = round(min(runs), 3)
-            all_runs[name] = runs
-        except Exception as exc:  # noqa: BLE001 — record, keep benching
-            errors[name] = _fmt_exc(exc)
-            print(f"  {name}: FAILED ({errors[name]})", file=sys.stderr)
-            continue
-        finally:
-            # operators that persist intermediates (minhash signatures)
-            # must not bleed executor memory into later queries' numbers
-            spark.catalog.clearCache()
-        print(f"  {name}: {timings[name]:.3f}s (runs: {[f'{r:.2f}' for r in runs]})",
-              file=sys.stderr)
+    all_runs = _sample_rows(spark, headline, 3, errors)
+    timings = {k: round(min(r), 3) for k, r in all_runs.items()}
 
-    # Second headline pass (round 15): one more timed run per query
-    # AFTER the whole suite has executed once.  The per-boot host-noise
-    # characterization (BASELINE.md, 18 round-14 anchors spanning
-    # 7.97-14.43 s on identical code) showed single-window sampling is
-    # the dominant artifact-variance term: pass 1's three runs of a
-    # query land back-to-back in ONE contention window, so a load spike
-    # there inflates that query with no later chance to recover.  The
-    # second pass re-samples every query minutes later in a different
-    # window.  Round 16 (advisor note): `value` stays on the ORIGINAL
-    # pass-1 min-of-3 formula so it remains comparable against the
-    # frozen reference baseline and rounds 1-14 (r15 is the one round
-    # whose `value` mixed passes); the cross-pass floor is reported as
-    # the SEPARATE `value_floor` field — the contention-resistant
-    # number to read when calibration says pass 1 was contended.
-    # Bounded cost: one warm run per query, ~+10 s at sf0.1.
-    timings_floor = dict(timings)
-    for name in HEADLINE:
-        if name in errors:
-            continue  # already failed whole-pass; don't re-litigate
-        fn = plans.REGISTRY[name].fn
-        try:
-            run2 = _timed_run(fn, spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — pass 2 only improves
-            print(f"  [pass2] {name}: FAILED ({_fmt_exc(exc)})",
-                  file=sys.stderr)
-            continue
-        finally:
-            spark.catalog.clearCache()
-        runs_pass2[name] = [run2]
-        if run2 < timings_floor[name]:
-            timings_floor[name] = run2
-    print(f"  [pass2] cross-pass floor updated "
-          f"({sum(len(v) for v in runs_pass2.values())} extra runs)",
-          file=sys.stderr)
+    # Pass 2: one more run per query AFTER the whole suite has run once,
+    # in a later contention window (pass 1's runs of a query land
+    # back-to-back in ONE window).  Pass 3 arbitrates only the queries
+    # whose pass-1 and pass-2 readings disagree by 2x or more.  Both
+    # feed `value_floor` only, never `value`, and their failures are
+    # not errors: they can only improve the floor.
+    setups = dict(headline)
+    runs_pass2 = _sample_rows(
+        spark, [(k, setups[k]) for k in all_runs], 1, {}, "[pass2] ")
+    spread = [k for k, (r2,) in runs_pass2.items()
+              if max(timings[k], r2) >= 2.0 * min(timings[k], r2)]
+    runs_pass3 = _sample_rows(
+        spark, [(k, setups[k]) for k in spread], 1, {}, "[pass3] ")
+    timings_floor = {
+        k: min(t, *runs_pass2.get(k, ()), *runs_pass3.get(k, ()))
+        for k, t in timings.items()
+    }
 
-    # Bounded third pass (round 16): ONLY for queries whose pass-1-min
-    # vs pass-2 spread exceeds 2x — i.e. the two windows disagree so
-    # badly that one of them was certainly a load spike; a third
-    # window arbitrates.  Feeds `value_floor` only (never `value`).
-    # Cost bound: in a quiet run nothing exceeds 2x and this pass is
-    # empty; in the worst case it is one warm run per headline query.
-    runs_pass3: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        if name not in runs_pass2 or name in errors:
-            continue
-        p1, p2 = timings[name], runs_pass2[name][0]
-        if max(p1, p2) < 2.0 * min(p1, p2):
-            continue
-        fn = plans.REGISTRY[name].fn
-        try:
-            run3 = _timed_run(fn, spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — pass 3 only improves
-            print(f"  [pass3] {name}: FAILED ({_fmt_exc(exc)})",
-                  file=sys.stderr)
-            continue
-        finally:
-            spark.catalog.clearCache()
-        runs_pass3[name] = [run3]
-        if run3 < timings_floor[name]:
-            timings_floor[name] = run3
-        print(f"  [pass3] {name}: {run3:.3f}s (p1 {p1:.2f} / p2 {p2:.2f} "
-              f"disagreed >2x)", file=sys.stderr)
-
-    # Round-7/8 additions, timed OUTSIDE the headline total: the
-    # 15-query headline set is frozen so `value` stays comparable
-    # against the reference baseline and earlier rounds; these ride
-    # along in a separate field for per-round visibility
-    # (dedup_embedding_cosine tracks the round-8 norm-precompute win;
-    # sim_ann_ivf is deliberately NOT benched — its time is ~90% the
-    # k-means FIT's per-iteration job dispatch, which a production
-    # deployment pays once at index build, so the number would track
-    # scheduler latency rather than the ANN probe the query exists
-    # for — the recall test at sf0.1 is its perf/quality gate).
     # Per-window contention sentinel sampled immediately BEFORE the
-    # extras block: the pre-suite cool-down protects the headline, but
-    # the extras run after it un-guarded — BENCH_r13's extras sampled
-    # the most contended window of any round (cold dsir A/B read
-    # reversed purely from load) and nothing in the artifact made that
-    # self-diagnosing.  A reader comparing extras across rounds checks
-    # this sample first; far above the idle band means the extras (not
-    # the headline) are a contended sample.
+    # extras: the pre-suite cool-down protects the headline, but the
+    # extras run after it un-guarded (BENCH_r13's cold dsir A/B read
+    # reversed purely from load).  Far above the idle band means the
+    # extras, not the headline, are a contended sample.
     calibration_extras = _calibrate(spark)
-
-    extra: dict[str, float] = {}
-    extra_runs: dict[str, list[float]] = {}
     extra_errors: dict[str, str] = {}
-    for name in ("pipeline_pretrain_corpus", "dedup_incremental_lsh",
-                 "dedup_decontaminate", "dedup_embedding_cosine",
-                 "dedup_simhash_pairs", "dedup_substring_spans",
-                 "dedup_incremental_substring",
-                 # round-10 additions: the connected-components closure
-                 # consumers (pairs -> groups) and the three binary-
-                 # modality gate queries (mapInPandas decode + shared
-                 # Hamming pair stage)
-                 "dedup_substring_groups", "dedup_minhash_groups",
-                 "mm_image_near_dup", "mm_video_near_dup",
-                 "mm_audio_near_dup",
-                 # round-11 additions: the four new gate rows — the
-                 # sequence-modality pair stages (frame-dHash scenes,
-                 # sub-fingerprint segments), the simhash-distance
-                 # decontamination, and the cross-modal probe lookup
-                 "mm_video_scene_pairs", "mm_audio_segment_pairs",
-                 "mm_fuzzy_decontaminate", "mm_image_in_video"):
-        try:
-            # the shared _timed_run protocol (noop sink + per-run
-            # cache release) — extras are cold min-of-3 like the
-            # headline since round 17; raw runs land in the sidecar
-            # so warm/cold contamination is auditable per run
-            runs = []
-            for _ in range(3):
-                runs.append(_timed_run(plans.REGISTRY[name].fn, spark, sf_dir))
-            extra[name] = round(min(runs), 3)
-            extra_runs[name] = runs
-        except Exception as exc:  # noqa: BLE001 — extras never gate:
-            # a failed extra must NOT set `incomplete` or join `errors`
-            # (both describe the frozen headline set whose total is
-            # `value`); it gets its own field and a loud stderr line.
-            extra_errors[name] = _fmt_exc(exc)
-            print(f"  [extra] {name}: FAILED ({extra_errors[name]})",
-                  file=sys.stderr)
-        finally:
-            spark.catalog.clearCache()
-        if name in extra:
-            print(f"  [extra] {name}: {extra[name]:.3f}s", file=sys.stderr)
-
-    # IvfIndex build+probe cycle (round-8 operator): not a registry
-    # query — it is the persisted build-once/probe-many API — so it is
-    # timed here directly: one index build, then min-of-3 probe
-    # batches (100 queries, n_probe=2) against the on-disk index.
-    # The BUILD number includes the k-means fit (per-iteration job
-    # dispatch dominates at this SF; a deployment pays it once per
-    # rebuild); the PROBE number is the steady-state cost the index
-    # exists for and is the one to watch across rounds.
-    import shutil
-    import tempfile
-
-    from git_log_to_sqlite_spark.operators import IvfIndex
-
-    ivf_dir = tempfile.mkdtemp(prefix="bench_ivf_")
-    try:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        idx = IvfIndex(spark, ivf_dir, id_col="vec_id", vec_col="embedding")
-        # stage-timed (fit / assign_write / centroids_write, flat
-        # float keys): the build is the most contention-variance-
-        # prone extra (5-14 s under load vs a 3.1-4.1 s floor), and a
-        # whole-run wall clock made every out-of-floor sample a
-        # re-litigation of contention-vs-code; the stage split shows
-        # WHICH term absorbed the load.
-        stages: dict = {}
-        t0 = time.perf_counter()
-        idx.build(emb, k=8, max_iter=5, stage_times=stages)
-        extra["ivf_index_build"] = round(time.perf_counter() - t0, 3)
-        for st, secs in stages.items():
-            extra[f"ivf_index_build_{st}"] = secs
-        probes = emb.orderBy("vec_id").limit(100)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            # since round 14 each probe() call pays the pinned-batch
-            # checkpoint + cell-set collect that guarantee static
-            # partition pruning (band moved ~0.94-1.15 -> ~1.3-1.6 s
-            # at sf0.1; flat in corpus size — BASELINE.md round 14)
-            idx.probe(probes, n_probe=2, k=5).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            release_caches(blocking=True)  # round-17 cold-run protocol
-            spark.catalog.clearCache()
-        extra["ivf_index_probe"] = round(min(runs), 3)
-        extra_runs["ivf_index_probe"] = runs
-        print(
-            f"  [extra] ivf_index build: {extra['ivf_index_build']:.3f}s "
-            f"probe: {extra['ivf_index_probe']:.3f}s",
-            file=sys.stderr,
-        )
-    except Exception as exc:  # noqa: BLE001 — extras never gate
-        extra_errors["ivf_index"] = _fmt_exc(exc)
-        print(f"  [extra] ivf_index: FAILED ({extra_errors['ivf_index']})",
-              file=sys.stderr)
-    finally:
-        spark.catalog.clearCache()
-        shutil.rmtree(ivf_dir, ignore_errors=True)
-
-    # SemDeDup annotate stage (round-11 operator): not yet a registry
-    # query (gated round 12 as sem_dedup_assign) — timed directly with
-    # a prefit quantizer, the steady-state shape: the bounded-sample
-    # fit is a once-per-rebuild cost already tracked by
-    # ivf_index_build; the annotate (assignment + rank window +
-    # cell-local pair join) is what a curation pipeline pays per run.
-    try:
-        from git_log_to_sqlite_spark.operators import (
-            kmeans_fit_sample,
-            semantic_dedup,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        cents = kmeans_fit_sample(emb, "vec_id", "embedding", k=8,
-                                  max_iter=5, sample_size=1024)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            semantic_dedup(emb, "vec_id", "embedding", cents,
-                           threshold=0.3).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            release_caches(blocking=True)  # round-17 cold-run protocol
-            spark.catalog.clearCache()
-        extra["semantic_dedup_annotate"] = round(min(runs), 3)
-        extra_runs["semantic_dedup_annotate"] = runs
-        print(
-            f"  [extra] semantic_dedup_annotate: "
-            f"{extra['semantic_dedup_annotate']:.3f}s",
-            file=sys.stderr,
-        )
-    except Exception as exc:  # noqa: BLE001 — extras never gate
-        extra_errors["semantic_dedup"] = _fmt_exc(exc)
-        print(
-            f"  [extra] semantic_dedup: FAILED ({extra_errors['semantic_dedup']})",
-            file=sys.stderr,
-        )
-    finally:
-        spark.catalog.clearCache()
-
-    # DSIR selection (round-11 operator, gated same-round as
-    # sample_dsir): weights + md5-Gumbel top-n at the gate parameters,
-    # then the SAME selection under the production xxhash64 feature
-    # hash (round-12 knob) — the pair measures exactly the md5-vs-
-    # native-hash cost BASELINE.md names as DSIR's dominant term.
-    try:
-        from pyspark.sql import functions as F
-
-        from git_log_to_sqlite_spark.operators import dsir_select
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        raw_docs = docs.filter(F.col("doc_id") % 29 != 0)
-        tgt_docs = docs.filter(F.col("doc_id") % 29 == 0)
-        # release_caches comes from the module-level import; a local
-        # re-import here would make the name function-local and
-        # UnboundLocalError the EARLIER ivf/semantic blocks
-
-        for hf, key in (("md5", "dsir_select"),
-                        ("xxhash64", "dsir_select_xxhash64")):
-            # per-leg try: an md5 failure must not skip the xxhash64
-            # measurement, and each leg's error lands under ITS key
-            try:
-                runs = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    dsir_select(
-                        raw_docs, tgt_docs, "doc_id", "text", n=50,
-                        buckets=2048, hash_fn=hf,
-                    ).write.mode("overwrite").format("noop").save()
-                    runs.append(round(time.perf_counter() - t0, 3))
-                    # DROP the operator pin between runs (the round-17
-                    # protocol for every extra; this row was cold from
-                    # the start): the row exists to track the
-                    # per-gram hashing cost (the md5 oracle trade vs
-                    # the xxhash64 knob), and a warm rf cache bypasses
-                    # exactly that stage — both legs would read the
-                    # same cached-selection time. BLOCKING, so async
-                    # block eviction cannot overlap the next timed
-                    # window.
-                    release_caches(blocking=True)
-                extra[key] = round(min(runs), 3)
-                extra_runs[key] = runs
-                print(f"  [extra] {key}: {extra[key]:.3f}s", file=sys.stderr)
-            except Exception as exc:  # noqa: BLE001 — extras never gate
-                extra_errors[key] = _fmt_exc(exc)
-                print(f"  [extra] {key}: FAILED ({extra_errors[key]})",
-                      file=sys.stderr)
-            finally:
-                # a mid-leg failure must not leak this leg's pinned
-                # frames into the next leg's first timed run
-                release_caches(blocking=True)
-    except Exception as exc:  # noqa: BLE001 — the shared scan setup
-        # a setup failure precedes BOTH legs: record it under both
-        # keys so neither reads as silently dropped
-        for key in ("dsir_select", "dsir_select_xxhash64"):
-            extra_errors.setdefault(key, _fmt_exc(exc))
-            print(f"  [extra] {key}: FAILED ({extra_errors[key]})",
-                  file=sys.stderr)
-    finally:
-        spark.catalog.clearCache()
-
-    # Subword-tokenizer Arrow seam (round 15): the stub tokenizer over
-    # the full documents table — tracks the mapInPandas transport +
-    # per-text Python call cost a real-tokenizer deployment pays, the
-    # one Python hot path in the text battery (everything else is
-    # codegen). Warm min-of-3, noop sink, extras-class (never gates).
-    try:
-        from git_log_to_sqlite_spark.operators import subword_token_counts
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            subword_token_counts(docs, "doc_id", "text").write.mode(
-                "overwrite"
-            ).format("noop").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            release_caches(blocking=True)  # round-17 cold-run protocol
-            spark.catalog.clearCache()
-        extra["text_subword_tokens_seam"] = round(min(runs), 3)
-        extra_runs["text_subword_tokens_seam"] = runs
-        print(
-            f"  [extra] text_subword_tokens_seam: "
-            f"{extra['text_subword_tokens_seam']:.3f}s",
-            file=sys.stderr,
-        )
-    except Exception as exc:  # noqa: BLE001 — extras never gate
-        extra_errors["text_subword_tokens_seam"] = _fmt_exc(exc)
-        print(
-            f"  [extra] text_subword_tokens_seam: FAILED "
-            f"({extra_errors['text_subword_tokens_seam']})",
-            file=sys.stderr,
-        )
-    finally:
-        spark.catalog.clearCache()
-
+    extra_runs = _sample_rows(spark, extras, 3, extra_errors, "[extra] ")
+    extra.update({k: round(min(r), 3) for k, r in extra_runs.items()})
     calibration_post = _calibrate(spark)
 
     total = round(sum(timings.values()), 3)
     total_floor = round(sum(timings_floor.values()), 3)
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_detail.json")
-    # COMPACT driver-parsed line: metric/value/queries/sf/calibration
-    # only (~700 chars) — the driver captures a bounded stdout tail and
-    # round 13's in-line extras grew the JSON past it, nulling the
-    # artifact of record.  Everything else lives in the sidecar.
+    # COMPACT driver-parsed line: keep it inside the capture window
+    # (module docstring); everything else lives in the sidecar.
     out = {
         "metric": "headline_suite_wall_clock",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        # Harness self-identification (round 17): sha256 prefix of this
-        # file's own bytes.  The round-16 driver hint
-        # `bench_harness_changed: false` missed a 90-line bench.py diff
-        # (VERDICT r16 §What's wrong 3); with the hash in the artifact
-        # of record, harness identity across rounds is checkable from
-        # the JSON alone — equal hash == byte-identical harness.
+        # sha256 prefix of this file's bytes: equal hash == identical
+        # harness, checkable from the artifact of record alone.
         "bench_sha": _self_sha(),
-        # Cross-pass per-query floor (passes 1-3, later contention
-        # windows): the contention-resistant reading.  `value` itself
-        # is pass-1 min-of-3 only — the formula every round except r15
-        # used — so it stays comparable vs baseline/earlier rounds.
+        # Cross-pass per-query floor (passes 1-3): the contention-
+        # resistant reading, next to the baseline-comparable `value`.
         "value_floor": total_floor,
         "sf": sf,
-        # Contention sentinel: fixed-cost generated-data shuffle+agg,
-        # ~0.3 s on this box when idle (band in BASELINE.md).  A value
-        # well above the band means the suite ran on a contended box and
-        # `value` is not comparable across rounds.
+        # A value well above the idle band (BASELINE.md) means the
+        # suite ran on a contended box and `value` is not comparable.
         "calibration_s": round(min(calibration_pre + calibration_post), 3),
-        # Full instrumentation (raw runs, extras, per-window
-        # calibration, cool-down batches) — sidecar filename, not
-        # inlined, to keep this line inside the capture window.
-        "detail": os.path.basename(detail_path),
+        "detail": DETAIL,
     }
     detail = {
-        # Self-identification: the sidecar is overwritten per run, so a
-        # reader pairing it with a recorded stdout line checks these
-        # match that line's sf/value before trusting the detail.
+        # The sidecar is overwritten per run: a reader pairing it with
+        # a recorded stdout line checks these match that line's.
         "sf": sf,
         "value": total,
         "calibration_runs": {"pre": calibration_pre,
                              "extras": calibration_extras,
                              "post": calibration_post},
-        # Round 17: EVERY timed run (headline passes 1-3 and all
-        # extras) is cold — operator pins released + session cache
-        # cleared between runs — so this field now names every row.
-        # Through round 16 only the dsir pair was cold and the other
-        # extras' min-of-3 could read pin-warm runs (r16 advisor
-        # item 1); kept as "all" so cross-round readers see the
-        # protocol boundary from the sidecar alone.
         "extra_cold": "all",
-        # Pre-suite calibration batches superseded by a cool-down
-        # retry: non-empty means the suite start was delayed 20 s per
-        # entry; calibration_runs "pre" is the accepted (best) batch.
+        # Non-empty means the suite start was delayed 20 s per entry.
         "calibration_cooldown_retries": cooldown_retries,
-        # Raw per-query runs (run 1 includes codegen/compile) so a
-        # reader can audit variance instead of trusting min-of-3.
+        # Raw runs (run 1 includes codegen/compile), so a reader can
+        # audit variance instead of trusting min-of-3.
         "runs": all_runs,
-        # Round-15 second headline pass (+ round-16 conditional third):
-        # warm re-samples in later contention windows.  Since round 16
-        # these feed ONLY the floor: `queries[name]`/`value` are pass-1
-        # min-of-3 (the formula of rounds 1-14 and the frozen
-        # baseline); `queries_floor`/`value_floor` take the min across
-        # all passes.  Pass 3 ran only for the names listed here —
-        # those whose pass-1/pass-2 spread exceeded 2x.
         "runs_pass2": runs_pass2,
         "runs_pass3": runs_pass3,
         "queries_floor": timings_floor,
@@ -603,21 +381,44 @@ def main() -> None:
                             "since round 17 every run is COLD "
                             "(operator pins released + cache cleared "
                             "between every timed run, all passes)",
-        # Non-headline queries (excluded from `value` so the suite
-        # total stays comparable across rounds / vs baseline).
+        # Excluded from `value` so the suite total stays comparable.
         "extra": extra,
-        # Raw per-run extras (round 17): same audit surface the
-        # headline's `runs` has — the r16 advisor showed min-of-3
-        # extras hid pin-warm runs 2-3 with no way to see it.
         "extra_runs": extra_runs,
     }
+    # Extras never gate: a failed extra gets its own field and never
+    # sets `errors`/`incomplete`, which describe the headline set.
     if extra_errors:
         detail["extra_errors"] = extra_errors
     if errors:
         # value covers only completed queries — flag the gap loudly.
         out["errors"] = errors
         out["incomplete"] = True
-    _write_detail(detail, detail_path, out)
+    return out, detail
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+    spark = get_spark("bench", cpus=cpus)
+    # Warm the JVM + parquet footers so q1 doesn't pay one-time costs.
+    plans.REGISTRY["agg_global"].fn(spark, sf_dir).write.mode("overwrite").format(
+        "noop"
+    ).save()
+
+    extra: dict[str, float] = {}
+    with tempfile.TemporaryDirectory(prefix="bench_ivf_",
+                                     ignore_cleanup_errors=True) as ivf_dir:
+        out, detail = _bench(
+            spark, sf,
+            [_query(spark, sf_dir, q) for q in HEADLINE],
+            [_query(spark, sf_dir, q) for q in EXTRA_QUERIES]
+            + _operator_rows(spark, sf_dir, ivf_dir, extra),
+            extra,
+        )
+    _write_detail(detail, os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), DETAIL), out)
     print(json.dumps(out))
     spark.stop()
 

@@ -87,11 +87,7 @@ def _rename_new_path(path: str) -> str:
     )
 
 
-def parse_git_log(
-    spark: SparkSession,
-    path: str,
-    repository_from_filename: bool = True,
-) -> DataFrame:
+def parse_git_log(spark: SparkSession, path: str) -> DataFrame:
     """Parse ``git log`` text files into the denormalized commits DataFrame.
 
     ``path`` may be a file, directory, or glob of per-repository log
@@ -102,7 +98,7 @@ def parse_git_log(
     raw = spark.read.text(path, wholetext=True).selectExpr(
         "value", "input_file_name() AS _file"
     )
-    return parse_raw_logs(raw, repository_from_filename)
+    return parse_raw_logs(raw)
 
 
 def read_gitlog_stream(
@@ -121,21 +117,19 @@ def read_gitlog_stream(
         .text(path)
         .selectExpr("value", "input_file_name() AS _file")
     )
-    return parse_raw_logs(raw, repository_from_filename=True)
+    return parse_raw_logs(raw)
 
 
-def parse_raw_logs(raw: DataFrame, repository_from_filename: bool = True) -> DataFrame:
+def parse_raw_logs(raw: DataFrame) -> DataFrame:
     """Shared batch/stream parse: (value, _file) rows -> commit rows.
     All transformations are stateless SQL expressions, one
     ``selectExpr``/``where`` per stage, so the same plan serves
     ``spark.read`` and ``spark.readStream`` inputs and each stage parses
-    JVM-side in one call."""
-    repository = (
-        f"regexp_extract(_file, {_REPO_FROM_FILE}, 1)" if repository_from_filename else "''"
-    )
+    JVM-side in one call. ``repository`` is the log file's base name
+    without a ``.log``/``.txt`` suffix."""
     blocks = (
         raw.selectExpr(
-            f"{repository} AS repository",
+            f"regexp_extract(_file, {_REPO_FROM_FILE}, 1) AS repository",
             f"explode(split(value, {sql_string(RECORD_SEP)})) AS block",
         )
         .selectExpr("repository", f"regexp_replace(block, {_CRLF}, {_LF}) AS block")

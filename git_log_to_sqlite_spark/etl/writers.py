@@ -21,6 +21,10 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame
 
+# Commits staged into SQLite per executemany (write_sqlite's memory
+# contract).
+_BATCH_ROWS = 10_000
+
 # DDL mirrors analyzer.rs:149-188 (reference), with the R19 fix:
 # repositories.name is UNIQUE so re-runs are idempotent.
 _DDL = (
@@ -134,7 +138,6 @@ def write_sqlite(
     repositories: DataFrame,
     commits: DataFrame,
     clear: bool = False,
-    batch_size: int = 10_000,
 ) -> None:
     """Write the reference's SQLite layout (analyzer.rs:149-188) from
     the repositories dimension and the denormalized commits.
@@ -147,10 +150,11 @@ def write_sqlite(
     Memory contract: ``commits`` is streamed once, in whatever order it
     arrives, through a ``rebalance`` hint and ``toLocalIterator``, so
     the driver holds one partition at a time (with AQE on, partitions
-    are coalesced or split to the advisory partition size). Each commit
-    is staged, ``batch_size`` rows per insert, into two SQLite ``TEMP``
-    tables: its ``logs`` row and one row per changed file with its
-    array position and repository name. ``logs`` and ``changed_files``
+    are coalesced or split to the advisory partition size), plus one
+    batch of ``_BATCH_ROWS`` (10,000) commits. Each batch is staged,
+    one ``executemany`` per table, into two SQLite ``TEMP`` tables: a
+    commit's ``logs`` row and one row per changed file with its array
+    position and repository name. ``logs`` and ``changed_files``
     are then written with one ``INSERT ... SELECT ... ORDER BY`` each:
     SQLite's sorter, which spills to temporary files, orders the rows,
     so no Spark job samples or sorts the commits.
@@ -204,7 +208,7 @@ def write_sqlite(
             .hint("rebalance")
             .toLocalIterator()
         )
-        for batch in _batched(rows, batch_size):
+        for batch in _batched(rows, _BATCH_ROWS):
             con.executemany(
                 "INSERT INTO log_rows VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
                 [(*r[:9], id_of.get(r[8])) for r in batch],

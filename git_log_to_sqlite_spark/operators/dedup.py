@@ -131,21 +131,20 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_dedup(
-    df: DataFrame, content_cols: list[str], id_col: str, keep: str = "min"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
     """Exact dedup with a deterministic survivor.
 
     Groups on a 128-bit content hash (never the raw content: the
     shuffle key is 32 bytes/row at any document size) and keeps the
-    min/max id. Returns the input columns of the surviving rows plus
-    ``n_copies``. ``id_col`` must be unique and non-null (the table-
-    key contract every id column here carries): a NULL id can never
-    survive (min/max skip NULLs, and NULL == NULL is not true).
+    row with the smallest id of each content group. Returns the input
+    columns of the surviving rows plus ``n_copies``. ``id_col`` must be
+    unique and non-null (the table-key contract every id column here
+    carries): a NULL id can never survive (min skips NULLs, and
+    NULL == NULL is not true).
     """
     fp = F.md5(F.concat_ws("\x00", *content_cols))
     # ONE unordered window for both the survivor pick and the count
-    # (ids are unique, so min/max id IS the row_number-1 survivor).
+    # (ids are unique, so the min id IS the row_number-1 survivor).
     # The previous two-spec form (row_number over an ordered window +
     # count over an unordered one) planned TWO Window nodes, each
     # buffering every duplicate family on one task, and the count
@@ -158,7 +157,7 @@ def exact_dedup(
     # twin is the groupBy-aggregate form — partial-combine, fully
     # skew-proof — for when no per-row annotation is needed.
     w = Window.partitionBy("_fp")
-    keeper = (F.min if keep == "min" else F.max)(F.col(id_col)).over(w)
+    keeper = F.min(F.col(id_col)).over(w)
     return (
         df.withColumn("_fp", fp)
         .withColumn("_keep", keeper)
@@ -1112,8 +1111,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     wins in every context — dedup_simhash 1.0 -> 0.48 s,
     dedup_simhash_pairs 2.05 -> 1.65 s, mm_fuzzy_decontaminate
     1.9 -> 1.36 s cold min-of-6 vs the round-16 form
-    (tools/simhash_pairs_ab_r17_results.json; signatures verified
-    value-identical at both widths across all three forms).
+    (OPTIMIZATION_r17.md; tools/simhash_pairs_ab_r17_results.json;
+    signatures verified value-identical at both widths across all
+    three forms).
     """
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60], got {bits}")

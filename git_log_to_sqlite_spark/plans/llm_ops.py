@@ -2202,7 +2202,7 @@ def pretrain_corpus(
     # window-noise-bounded there (~6%) because downstream stages
     # dominate, but the removed pass scales with the corpus.
     # Value-equal vs the round-16 form AND the oracle at all three
-    # SFs (tools/pretrain_decon_ab_r17_results.json).
+    # SFs (OPTIMIZATION_r17.md; tools/pretrain_decon_ab_r17_results.json).
     hit_ids = (
         corpus.filter(F.col("n_chars").between(50, 20000))
         .select("doc_id", gram.alias("gram"))

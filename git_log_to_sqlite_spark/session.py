@@ -59,7 +59,7 @@ def get_spark(
         # fragments — so in any session that cycles through the corpus
         # (bench passes, the 126-query gate, a serving deployment
         # dispatching a query mix) every revisit re-runs Janino over
-        # the full plan.  Measured (tools/codegen_cache_ab_r17.py,
+        # the full plan.  Measured (codegen-cache A/B, OPTIMIZATION_r17.md;
         # sf0.1, local[32], cold-cache protocol): suite pass after one
         # full cycle 19.28 s -> 12.55 s (-35%), first-cycle pass
         # 92 -> 31 s.  4096 covers the whole registry with headroom;

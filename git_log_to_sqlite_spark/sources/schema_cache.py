@@ -1,6 +1,6 @@
 """Fingerprint-keyed parquet schema cache.
 
-Measured (round 16, tools/plan_cost_sweep_r16.py follow-up): every
+Measured (round 16 plan-cost sweep, OPTIMIZATION_r16.md §1): every
 ``spark.read.parquet(path)`` fires a schema-inference job — a file
 listing plus a footer read — costing ~0.19 s on this box, on EVERY
 call, even for a path read moments earlier. The registry's ``table()``

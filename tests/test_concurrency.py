@@ -1,8 +1,8 @@
 """Concurrent query execution on a shared session — the serving shape.
 
-The round-16 probe (tools/concurrency_probe_r16.py) measured 15
-headline queries overlapping at 3.96-5.44x on one session with zero
-row drift. This test pins the CORRECTNESS half of that permanently at
+The round-16 probe (OPTIMIZATION_r16.md, BASELINE.md; raw numbers in
+tools/concurrency_probe_r16_results.json) measured 15 headline queries
+overlapping at 3.96-5.44x on one session with zero row drift. This test pins the CORRECTNESS half of that permanently at
 sf0.001: several registry queries submitted from worker threads must
 return exactly the rows the sequential pass returns — exercising
 thread-safe plan construction, the GIL-released py4j submission path,

@@ -6,9 +6,14 @@ extra full read) at scale."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from git_log_to_sqlite_spark.plans.registry import table
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 CUSTOMER_SCHEMA = (
     "c_custkey bigint, c_name string, c_nationkey bigint,"
@@ -269,19 +274,25 @@ def test_write_parquet_bounds_records_per_file(spark, tmp_path):
         write_parquet(df, str(tmp_path / "bad"), max_records_per_file=0)
 
 
+def _bench():
+    """``bench.py`` at the repo root, imported as a module."""
+    import sys
+
+    if str(REPO_ROOT) not in sys.path:
+        sys.path.insert(0, str(REPO_ROOT))
+    import bench
+
+    return bench
+
+
 def test_bench_detail_write_never_costs_the_stdout_line(tmp_path):
     """bench._write_detail (the round-14 artifact-of-record guard): a
     happy write round-trips the sidecar and leaves the compact line
     untouched; an unwritable path surfaces as detail_error in the
     compact line instead of raising after minutes of measured work."""
     import json
-    import os
-    import sys
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo_root not in sys.path:
-        sys.path.insert(0, repo_root)
-    from bench import _write_detail
+    _write_detail = _bench()._write_detail
 
     detail = {"sf": 0.01, "value": 1.23, "runs": {"q": [1.0]}}
     out = {"metric": "m", "value": 1.23}
@@ -301,3 +312,69 @@ def test_bench_detail_write_never_costs_the_stdout_line(tmp_path):
     _write_detail({"bad": {1, 2}}, str(tmp_path / "d2.json"), out2)
     assert out2["detail_error"].startswith("TypeError")
     assert out2["value"] == 4.56
+
+
+def test_bench_rows_are_contained(spark, monkeypatch):
+    """bench._sample / _bench: a row whose setup or run raises records
+    ``_fmt_exc`` under its key, releases its pins and returns None, and
+    the next row still runs; a passing row yields ``n`` runs rounded to
+    3 decimals. A
+    failed extra lands in ``extra_errors`` only: it never sets the
+    headline's ``errors`` or ``incomplete``."""
+    from git_log_to_sqlite_spark.operators import caching
+
+    bench = _bench()
+    boom = RuntimeError("boom\nsecond line")
+
+    def raising():
+        caching.pin(spark.range(5))  # a failed run must not leak its pins
+        raise boom
+
+    def ok():
+        return lambda: spark.range(3)
+
+    errors = {}
+    assert bench._sample(spark, lambda: raising, 3, "bad", errors) is None
+    assert errors == {"bad": bench._fmt_exc(boom)} == {"bad": "RuntimeError: boom"}
+    assert caching.release_caches() == 0
+    runs = bench._sample(spark, ok, 2, "ok", errors)
+    assert len(runs) == 2 and all(r == round(r, 3) >= 0 for r in runs)
+    assert list(errors) == ["bad"]
+
+    monkeypatch.setattr(bench, "_calibrate", lambda spark: [0.1, 0.1, 0.1])
+    out, detail = bench._bench(
+        spark, 0.001, [("q", ok)],
+        [("bad_run", lambda: raising), ("bad_setup", raising), ("fine", ok)],
+        {"one_off": 1.5},
+    )
+    assert "errors" not in out and "incomplete" not in out
+    assert detail["extra_errors"] == {
+        "bad_run": "RuntimeError: boom", "bad_setup": "RuntimeError: boom"
+    }
+    assert set(detail["extra"]) == {"one_off", "fine"}
+    assert len(detail["extra_runs"]["fine"]) == 3
+    assert out["queries"] == {"q": min(detail["runs"]["q"])} and out["value"] > 0
+    assert list(detail["runs_pass2"]) == ["q"]
+
+    out, detail = bench._bench(spark, 0.001, [("bad", lambda: raising), ("q", ok)], [], {})
+    assert out["errors"] == {"bad": "RuntimeError: boom"} and out["incomplete"] is True
+    assert list(out["queries"]) == list(detail["runs"]) == ["q"]
+    assert "extra_errors" not in detail
+
+
+def test_cited_tools_paths_exist():
+    """Every ``tools/<file>`` path cited in the package, the tests and
+    bench.py names a file that exists, so a deleted probe script cannot
+    be cited again as evidence."""
+    files = [
+        REPO_ROOT / "bench.py",
+        *(REPO_ROOT / "git_log_to_sqlite_spark").rglob("*.py"),
+        *(REPO_ROOT / "tests").rglob("*.py"),
+    ]
+    cited = {
+        (str(f.relative_to(REPO_ROOT)), m)
+        for f in files
+        for m in re.findall(r"\btools/[\w.-]*\w", f.read_text(encoding="utf-8"))
+    }
+    missing = sorted(f"{f}: {m}" for f, m in cited if not (REPO_ROOT / m).is_file())
+    assert cited and not missing, missing
