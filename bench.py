@@ -278,6 +278,9 @@ def _bench(spark, sf: float, headline: list, extras: list,
     # most twice, <=40 s added) so a transient spike doesn't stamp
     # the whole artifact as non-comparable.  All samples are
     # reported; a genuinely busy box still shows out-of-band numbers.
+    # One discarded batch first: the sentinel's first batch in a
+    # session pays its own JIT and codegen and reads far out of band.
+    _calibrate(spark)
     calibration_pre = _calibrate(spark)
     pre_batches = [calibration_pre]
     for _ in range(2):

@@ -13,9 +13,10 @@ designed for 100 TB scale.
 
 Layout:
     session     SparkSession factory with oracle-parity configs
-    schemas     explicit StructTypes for the git star schema
+    schemas     the reference's sentinels (author, summary, url, root parent)
     config      author_map / ignored_repositories (reference config.rs)
-    etl         git-log text source parser + ETL pipeline
+    etl         git-log text parser, load stage and sinks
+    sources     parquet schema cache and footer probes
     functions   scalar expression helpers (sentinels, url rewrite, ...)
     operators   dedup / similarity / text-analysis / as-of / multimodal
     plans       the oracle-testable query corpus (SURVEY.md section 2.2)

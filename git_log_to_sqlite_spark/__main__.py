@@ -14,10 +14,11 @@ Execution model:
   driver-side, as in the reference (analyzer.rs:102-135);
 * ``git log`` dumps run in a ``--num-threads`` pool (the reference's
   tokio worker pool, analyzer.rs:217-235);
-* the parse (``etl.gitlog``), the dump-to-name mapping, the ignore
-  filter and the author map (``etl.pipeline.prepare``) are one lazy
-  Spark frame with no join: both mappings are SQL map literals. The
-  repositories dimension is built on the driver from the dump results;
+* the parse (``etl.gitlog``), the dump-to-name mapping and the author
+  map (``etl.pipeline.apply_author_map``) are one lazy Spark frame with
+  no join: both mappings are SQL map literals. The repositories
+  dimension (``etl.pipeline.build_repositories``) is built on the
+  driver from the dump results;
 * ``etl.writers.write_sqlite`` streams the commits once, unsorted, into
   SQLite, which orders them and numbers ``changed_files``. A warm
   ingest runs two Spark jobs: the parse's shuffle-map stage and the
@@ -55,7 +56,6 @@ _GIT_LOG_ARGS = (
     "-M",
     "-C",
 )
-_NO_REMOTE = "(no remote url)"  # repository.rs:192 sentinel
 
 
 def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -106,10 +106,14 @@ def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return ap.parse_args(argv)
 
 
-def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | None:
+def _dump_repo(
+    directory: str, dump_dir: str, index: int
+) -> tuple[str, str | None] | None:
     """Run ``git log`` for one candidate directory into
     ``<dump_dir>/<index>.log``; returns (name, remote_url) or None when
     the directory is not a usable git repository (→ skipped report).
+    The url is None when there is no ``origin``; the repositories
+    dimension stores its sentinel.
 
     Dumps are named by scan index, never by repository name: two
     scanned directories can share a basename (root/a/proj and
@@ -128,7 +132,8 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
     holding ``"``, ``\\`` or control characters are still C-quoted by
     git, and are stored as git prints them.
     """
-    name = os.path.basename(directory.rstrip("/"))
+    from .etl.pipeline import repository_name
+
     try:
         log = subprocess.run(
             ("git", "-c", "core.quotePath=false", "-C", directory, *_GIT_LOG_ARGS),
@@ -147,10 +152,12 @@ def _dump_repo(directory: str, dump_dir: str, index: int) -> tuple[str, str] | N
         text=True,
         errors="replace",
     ).stdout.strip()
-    return name, url or _NO_REMOTE
+    return repository_name(directory), url or None
 
 
-def _named_by_dump(commits: DataFrame, dumps: list[tuple[str, str, str]]) -> DataFrame:
+def _named_by_dump(
+    commits: DataFrame, dumps: list[tuple[str, str, str | None]]
+) -> DataFrame:
     """Replace the parsed ``repository`` (the dump index, taken from the
     file name) with the repository name, keeping the column order.
     ``dumps`` holds the (dump, name, url) rows of the dumped
@@ -169,7 +176,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from .config import Config
     from .etl.gitlog import parse_git_log
-    from .etl.pipeline import prepare, scan_directories
+    from .etl.pipeline import (
+        apply_author_map,
+        build_repositories,
+        repository_name,
+        scan_directories,
+    )
     from .etl.writers import write_sqlite
     from .session import get_spark
 
@@ -185,17 +197,13 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     # Ignore-list filter at scan time with side collection, matching
-    # analyzer.rs:115-126 (recursive branch only, as in the reference;
-    # pipeline.prepare re-applies the same filter defensively downstream).
+    # analyzer.rs:115-126 (recursive branch only, as in the reference:
+    # a non-recursive run analyzes the root even when its name is listed).
     ignored: list[str] = []
     if args.recursive and config.ignored_repositories:
         ignore = set(config.ignored_repositories)
-        ignored = sorted(
-            {os.path.basename(d.rstrip("/")) for d in directories} & ignore
-        )
-        directories = [
-            d for d in directories if os.path.basename(d.rstrip("/")) not in ignore
-        ]
+        ignored = sorted({repository_name(d) for d in directories} & ignore)
+        directories = [d for d in directories if repository_name(d) not in ignore]
 
     with tempfile.TemporaryDirectory(prefix="gitlog_dump_") as dump_dir:
         with ThreadPoolExecutor(max_workers=max(args.num_threads, 1)) as pool:
@@ -226,25 +234,16 @@ def main(argv: list[str] | None = None) -> int:
                 print("\n".join(directories))
             return 0
 
-        # Every ignored name was dropped at scan time (or the list is
-        # stripped below), so the analyzed names are the dumped ones,
-        # and the skipped directories are the rest (R25, on the driver).
+        # Every ignored name was dropped at scan time, so the analyzed
+        # names are the dumped ones, and the skipped directories are the
+        # rest (R25, on the driver).
         names = {name for _, name, _ in dumps}
         analyzed = sorted(names)
-        skipped = [d for d in directories if os.path.basename(d.rstrip("/")) not in names]
-        commits = _named_by_dump(parse_git_log(spark, dump_dir), dumps)
-        # Reference parity (analyzer.rs:108-131): the ignore list applies
-        # only to the recursive scan — a non-recursive run analyzes the
-        # root even when its name is listed, so strip the list before the
-        # pipeline's defensive re-filter.
-        pipeline_config = config
-        if not args.recursive and config.ignored_repositories:
-            pipeline_config = Config(
-                ignored_repositories=[], author_map=config.author_map
-            )
-        commits, repositories, _ignored = prepare(
-            spark, commits, [(name, url) for _, name, url in dumps], pipeline_config
+        skipped = [d for d in directories if repository_name(d) not in names]
+        commits = apply_author_map(
+            _named_by_dump(parse_git_log(spark, dump_dir), dumps), config
         )
+        repositories = build_repositories(spark, [(name, url) for _, name, url in dumps])
         write_sqlite(args.database, repositories, commits, clear=args.clear)
 
     # Report format of /root/reference/src/main.rs:7-26.

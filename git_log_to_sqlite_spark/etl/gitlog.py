@@ -91,9 +91,12 @@ def parse_git_log(spark: SparkSession, path: str) -> DataFrame:
     """Parse ``git log`` text files into the denormalized commits DataFrame.
 
     ``path`` may be a file, directory, or glob of per-repository log
-    files. Returns schemas.COMMITS columns (changed_files kept as an
-    array; explode happens in the load stage, like the reference's
-    normalization at analyzer.rs:337-343).
+    files. Returns one row per non-merge commit with the columns
+    ``commit_hash``, ``parent_hash``, ``author_name``, ``author_email``,
+    ``message``, ``commit_epoch`` (long), ``commit_ts`` (timestamp,
+    UTC), ``insertions``, ``deletions`` (long), ``repository`` and
+    ``changed_files`` (an array of paths; explode happens in the load
+    stage, like the reference's normalization at analyzer.rs:337-343).
     """
     raw = spark.read.text(path, wholetext=True).selectExpr(
         "value", "input_file_name() AS _file"

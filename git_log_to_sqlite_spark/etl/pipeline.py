@@ -5,23 +5,21 @@ by design (SURVEY.md R19: the reference's ``INSERT OR IGNORE`` on a
 non-unique ``repositories.name`` duplicates rows on re-run; we make
 ``name`` a true key and assign deterministic ids).
 
-Two entry points, both lazy (constructing them runs no Spark job):
-
-* ``prepare``: the ignore filter, the author map and the repositories
-  dimension. The CLI's SQLite path needs only this; the sink derives
-  ``logs`` and ``changed_files`` rows from the commits itself.
-* ``run_pipeline``: ``prepare`` plus the ``logs``, ``changed_files``
-  and ``skipped`` frames with their ids, for the Parquet sink and the
-  parity plans.
+``run_pipeline`` builds every table as lazy frames (constructing them
+runs no Spark job), with their ids, for the Parquet sink and the parity
+plans. The CLI's SQLite path calls ``apply_author_map`` and
+``build_repositories`` itself: the sink derives ``logs`` and
+``changed_files`` rows from the commits.
 
 The small inputs stay on the driver. ``repos_meta`` arrives as Python
-rows, one per scanned repository, and the repositories dimension is
-built from them in Python as a ``LocalRelation``: reading it runs no
-Spark job. The author map is a SQL map literal in the commits plan, so
-the fact table is never joined for it. ``build_logs`` and
-``build_skipped`` join the dimension as a broadcast, so the fact table
-never shuffles for id resolution (the reference instead ran one
-correlated SQLite subquery per row, analyzer.rs:322).
+rows, one per scanned repository, and the repositories dimension, the
+ignored names and the skipped directories are built from them in
+Python as ``LocalRelation``s: reading them runs no Spark job. The
+author map is a SQL map literal in the commits plan, so the fact table
+is never joined for it. ``build_logs`` joins the dimension as a
+broadcast, so the fact table never shuffles for id resolution (the
+reference instead ran one correlated SQLite subquery per row,
+analyzer.rs:322).
 """
 
 from __future__ import annotations
@@ -42,7 +40,7 @@ from ..session import local_frame, map_lookup
 @dataclass
 class EtlResult:
     """The pipeline's output tables + side outputs (R5 ignored report,
-    R25 skipped-directories anti-join)."""
+    R25 skipped directories)."""
 
     repositories: DataFrame
     logs: DataFrame
@@ -132,76 +130,50 @@ def build_changed_files(commits: DataFrame) -> DataFrame:
     return numbered.select("id", "commit_hash", "file_path")
 
 
-def build_skipped(scanned_dirs: DataFrame, repositories: DataFrame) -> DataFrame:
-    """R25: directories whose basename is not among analyzed repo names
-    — left anti-join (analyzer.rs:255-263). The basename ignores any run
-    of trailing slashes, the rule the CLI names its dumps by
-    (``basename(path.rstrip("/"))``)."""
-    names = F.broadcast(repositories.select("name"))
-    basename = F.regexp_extract(F.col("path"), r"([^/]+)/*$", 1)
-    return (
-        scanned_dirs.withColumn("_name", basename)
-        .join(names, F.col("_name") == names["name"], "left_anti")
-        .select("path")
-    )
-
-
-def prepare(
-    spark: SparkSession,
-    commits: DataFrame,
-    repos_meta: Iterable[tuple[str, str | None]],
-    config: Config,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The load stage's shared first step: the R5 ignore filter, the
-    R16 author map and the repositories dimension.
-
-    ``repos_meta`` holds (name, url) rows, one per scanned repository.
-    Returns ``(commits, repositories, ignored)``: the filtered and
-    author-mapped denormalized commits, the keyed repositories
-    dimension, and the ignored names found in ``repos_meta``. Lazy: no
-    Spark job runs."""
-    repos_meta = list(repos_meta)
-    ignore = set(config.ignored_repositories)
-    ignored = local_frame(
-        spark, [(name,) for name, _url in repos_meta if name in ignore], "name string"
-    )
-    if ignore:
-        repos_meta = [(name, url) for name, url in repos_meta if name not in ignore]
-        commits = commits.filter(~F.col("repository").isin(config.ignored_repositories))
-    commits = apply_author_map(commits, config)
-    return commits, build_repositories(spark, repos_meta), ignored
+def repository_name(path: str) -> str:
+    """The name a scanned directory's repository is stored under: its
+    basename, ignoring any run of trailing slashes (``proj//`` is
+    ``proj``). The CLI's ignore list, dump names and skipped report and
+    ``run_pipeline``'s skipped report all use this one rule."""
+    return os.path.basename(path.rstrip("/"))
 
 
 def run_pipeline(
     spark: SparkSession,
     commits: DataFrame,
     repos_meta: Iterable[tuple[str, str | None]],
-    scanned_dirs: DataFrame | None = None,
+    scanned_dirs: Iterable[str] = (),
     config: Config | None = None,
 ) -> EtlResult:
     """The full load stage as lazy frames (no Spark job runs).
 
     ``commits`` is the parse_git_log output; ``repos_meta`` holds
-    (name, url) rows, one per scanned repository; ``scanned_dirs`` has
-    (path). Returns every table with its ids assigned, for the Parquet
-    sink and the parity plans. The SQLite sink needs only
-    ``repositories`` and ``commits``: SQLite numbers ``changed_files``
-    itself (see ``writers.write_sqlite``)."""
-    commits, repositories, ignored = prepare(
-        spark, commits, repos_meta, config or Config()
-    )
-    skipped = (
-        build_skipped(scanned_dirs, repositories)
-        if scanned_dirs is not None
-        else spark.createDataFrame([], "path string")
-    )
+    (name, url) rows, one per scanned repository; ``scanned_dirs`` holds
+    the scanned paths. The R5 ignore list drops its names from the
+    commits and the dimension, and reports the ones found in
+    ``repos_meta`` as ``ignored``. ``skipped`` (R25) holds the scanned
+    paths whose ``repository_name`` is not an analyzed name, built on
+    the driver. Returns every table with its ids assigned, for the
+    Parquet sink and the parity plans; the CLI calls
+    ``apply_author_map`` and ``build_repositories`` itself."""
+    config = config or Config()
+    ignore = set(config.ignored_repositories)
+    repos_meta = list(repos_meta)
+    ignored = [(name,) for name, _url in repos_meta if name in ignore]
+    if ignore:
+        repos_meta = [(name, url) for name, url in repos_meta if name not in ignore]
+        commits = commits.filter(~F.col("repository").isin(config.ignored_repositories))
+    commits = apply_author_map(commits, config)
+    repositories = build_repositories(spark, repos_meta)
+    names = {name for name, _url in repos_meta}
+    skipped = [(path,) for path in scanned_dirs if repository_name(path) not in names]
     return EtlResult(
         repositories=repositories,
         logs=build_logs(commits, repositories),
         changed_files=build_changed_files(commits),
         commits=commits,
-        ignored=ignored,
-        skipped=skipped,
+        ignored=local_frame(spark, ignored, "name string"),
+        skipped=local_frame(spark, skipped, "path string"),
     )
 
 

@@ -1,7 +1,7 @@
 """Sinks: Parquet (the scale path) and SQLite (reference drop-in parity).
 
-* ``write_parquet`` / ``write_delta`` write any frame, typically the
-  ``run_pipeline`` tables, with ``--clear`` semantics (overwrite).
+* ``write_parquet`` writes any frame, typically the ``run_pipeline``
+  tables, with ``--clear`` semantics (overwrite).
 * ``write_sqlite`` writes the reference's SQLite layout
   (analyzer.rs:149-188) from the repositories dimension and the
   denormalized commits. The commits stream through the driver one
@@ -14,7 +14,6 @@
 
 from __future__ import annotations
 
-import importlib.util
 import itertools
 import sqlite3
 from typing import Iterable
@@ -85,38 +84,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_delta(
-    df: DataFrame,
-    path: str,
-    partition_by: Iterable[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Delta Lake sink — same layout semantics as :func:`write_parquet`
-    plus ACID commits and time travel.
-
-    Gated on the optional ``delta-spark`` package (not baked into this
-    container): the session must also be built with
-    ``DeltaSparkSessionExtension`` + ``DeltaCatalog`` (see
-    ``delta.configure_spark_with_delta_pip`` in the delta-spark docs).
-    Raises ``ModuleNotFoundError`` with setup guidance when absent;
-    parquet remains the default scale sink.
-    """
-    if importlib.util.find_spec("delta") is None:
-        raise ModuleNotFoundError(
-            "delta-spark is not installed; install it and configure the "
-            "SparkSession with spark.sql.extensions="
-            "io.delta.sql.DeltaSparkSessionExtension and "
-            "spark.sql.catalog.spark_catalog="
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog to enable "
-            "the Delta sink (write_parquet is the default scale sink)"
-        )
-    writer = df.write.format("delta").mode(mode)
-    partition_by = list(partition_by)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-
-
 def clear_sqlite(db_path: str) -> None:
     """R23 standalone: DDL + truncate the three tables (analyzer.rs:
     190-194). The reference truncates during prepare, BEFORE any repo
@@ -143,8 +110,8 @@ def write_sqlite(
     the repositories dimension and the denormalized commits.
 
     ``repositories`` has (id, name, url) and is collected: it is a
-    bounded dimension. ``commits`` is ``EtlResult.commits`` (or
-    ``pipeline.prepare``'s commits): one row per commit with its
+    bounded dimension. ``commits`` is ``EtlResult.commits`` (or the
+    CLI's author-mapped parse): one row per commit with its
     ``repository`` name and its ``changed_files`` array.
 
     Memory contract: ``commits`` is streamed once, in whatever order it

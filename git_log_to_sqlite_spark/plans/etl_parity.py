@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from ..config import Config
 from ..etl.gitlog import parse_git_log
 from ..etl.pipeline import run_pipeline
-from ..session import local_frame
 from .registry import register
 
 X01, X02 = "\x01", "\x02"
@@ -245,8 +244,8 @@ def etl_logs_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   name column (analyzer.rs:300-303), which duplicates rows on re-run
 #   and keeps an arbitrary url;
 # * the R25 skipped-directories report: scanned paths whose basename
-#   is not an analyzed repo name, via broadcast left anti-join
-#   (analyzer.rs:255-263), including a trailing-slash path.
+#   is not an analyzed repo name (analyzer.rs:255-263), including a
+#   trailing-slash path.
 
 _MULTI_REPOS_META = [
     # three discoveries of the same repo basename: min(url) survivor is
@@ -260,7 +259,7 @@ _MULTI_REPOS_META = [
 
 _SCANNED_DIRS = [
     "/scan/alpha",
-    "/scan/beta/",  # trailing slash: basename regex must still match
+    "/scan/beta/",  # trailing slash: still names "beta"
     "/scan/.cache",
     "/scan/ignored-repo",  # ignored repos are NOT analyzed -> skipped
     "/scan/vendor",
@@ -300,17 +299,15 @@ _REPOS_SKIPPED_ORACLE = f"""
     "the deterministic min(url) survivor (the fix for the reference's "
     "INSERT OR IGNORE duplication, analyzer.rs:300-303), ids assigned "
     "by name order, URLs normalized; plus the R25 skipped-directories "
-    "broadcast anti-join report (analyzer.rs:255-263). Both outputs "
+    "report (analyzer.rs:255-263). Both outputs "
     "unioned into one frame and hash-compared to the hand-derived "
     "golden VALUES table.",
 )
 def etl_repos_skipped_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs_dir = _write_fixture_dir()
     commits = parse_git_log(spark, logs_dir)
-    # a LocalRelation: the anti-join's probe side, executed per gate run
-    scanned = local_frame(spark, [(p,) for p in _SCANNED_DIRS], "path string")
     res = run_pipeline(
-        spark, commits, _MULTI_REPOS_META, scanned_dirs=scanned, config=_CONFIG
+        spark, commits, _MULTI_REPOS_META, scanned_dirs=_SCANNED_DIRS, config=_CONFIG
     )
     repos = res.repositories.select(
         F.lit("repository").alias("kind"),

@@ -1,84 +1,14 @@
-"""Explicit StructTypes for the git star schema (never inferred).
+"""Sentinels of the git star schema.
 
-Mirrors the reference DDL (``/root/reference/src/analyzer.rs:149-188``)
-and in-memory record (``/root/reference/src/log.rs:6-25``), with the
-Spark type mapping from SURVEY.md section 1.2:
-
-* ``commit_datetime`` is stored by the reference as raw i64 epoch
-  seconds (``commit.time().seconds()``, repository.rs:178) despite the
-  DATETIME column type; we keep ``commit_epoch`` (LongType) as the
-  source of truth and derive ``commit_ts`` (TimestampType, UTC).
-* surrogate ``id`` columns are BIGINT assigned by ``row_number()`` over
-  a canonical order (AUTOINCREMENT is not reproducible across runs).
-* the denormalized commits DataFrame keeps ``changed_files`` as
-  ``ArrayType(StringType)`` (log.rs:24); the normalized child table is
-  derived by ``explode`` (analyzer.rs:337-343 equivalent).
+The reference extractor substitutes these strings instead of NULL
+(repository.rs:163-192). They are observable output, reproduced
+exactly by ``functions.core`` and checked by the golden ETL tests.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
-# Sentinels substituted by the reference extractor instead of NULL —
-# observable output, reproduced exactly (repository.rs:163-192).
 NO_AUTHOR_NAME = "(no author name)"
 NO_AUTHOR_EMAIL = "(no author email)"
 NO_COMMIT_SUMMARY = "(no commit summary)"
 NO_REMOTE_URL = "(no remote url)"
 ZERO_OID = "0" * 40  # root-commit parent sentinel (repository.rs:175)
-
-# repositories: id INTEGER PK, name TEXT NOT NULL, url TEXT
-# (analyzer.rs:149-158; the README omits `url` but the DDL is authoritative)
-REPOSITORIES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("url", T.StringType(), True),
-    ]
-)
-
-# Denormalized commits DataFrame — one row per non-merge commit, the
-# Spark-native inverse of GitLog (log.rs:6-25).
-COMMITS = T.StructType(
-    [
-        T.StructField("commit_hash", T.StringType(), False),
-        T.StructField("parent_hash", T.StringType(), True),
-        T.StructField("author_name", T.StringType(), False),
-        T.StructField("author_email", T.StringType(), False),
-        T.StructField("message", T.StringType(), True),
-        T.StructField("commit_epoch", T.LongType(), False),
-        T.StructField("commit_ts", T.TimestampType(), True),
-        T.StructField("insertions", T.LongType(), True),
-        T.StructField("deletions", T.LongType(), True),
-        T.StructField("repository", T.StringType(), False),
-        T.StructField("changed_files", T.ArrayType(T.StringType(), False), True),
-    ]
-)
-
-# logs: normalized output table (analyzer.rs:160-176) + repository_id FK
-LOGS = T.StructType(
-    [
-        T.StructField("commit_hash", T.StringType(), False),
-        T.StructField("author_name", T.StringType(), False),
-        T.StructField("author_email", T.StringType(), False),
-        T.StructField("message", T.StringType(), True),
-        T.StructField("commit_epoch", T.LongType(), False),
-        T.StructField("commit_ts", T.TimestampType(), True),
-        T.StructField("insertions", T.LongType(), True),
-        T.StructField("deletions", T.LongType(), True),
-        T.StructField("repository_id", T.LongType(), True),
-        T.StructField("parent_hash", T.StringType(), True),
-    ]
-)
-
-# changed_files: id INTEGER PK, commit_hash TEXT NOT NULL FK, file_path TEXT
-# (analyzer.rs:178-188); id assigned over (commit_hash asc, array position)
-CHANGED_FILES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("commit_hash", T.StringType(), False),
-        T.StructField("file_path", T.StringType(), True),
-    ]
-)
-
-SKIPPED_DIRECTORIES = T.StructType([T.StructField("path", T.StringType(), False)])

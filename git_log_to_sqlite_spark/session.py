@@ -51,6 +51,10 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # The console progress bar rewrites stderr lines with carriage
+        # returns, so it splices into the per-row lines bench.py
+        # prints there.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Whole-stage-codegen compile cache (static conf; JVM-wide,
         # same knob on driver and executors).  The default 100 entries

@@ -1,13 +1,6 @@
-"""Source connectors beyond the built-in readers.
+"""Source-side helpers beyond the built-in readers.
 
-``gitlog`` — a PySpark Python Data Source (Spark 4 DataSource API) so
-``spark.read.format("gitlog").load(dir)`` streams parsed commits with
-one input partition per repository log file. Registration is explicit:
-
-    from git_log_to_sqlite_spark.sources import register_gitlog_source
-    register_gitlog_source(spark)
+``schema_cache`` serves parquet schemas from a content-fingerprint
+cache; ``events_probe`` reads the ``events`` table's timestamp encoding
+from its footer. The git-log source is ``etl.gitlog``.
 """
-
-from .gitlog_source import GitLogDataSource, register_gitlog_source
-
-__all__ = ["GitLogDataSource", "register_gitlog_source"]

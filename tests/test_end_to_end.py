@@ -9,7 +9,6 @@ the materialized tables rather than the driver's fixtures.
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 import duckdb
@@ -187,24 +186,6 @@ def test_cli_end_to_end_subprocess(tmp_path):
     con.close()
 
 
-def test_write_delta_gated_on_optional_dep(spark, tmp_path):
-    """write_delta works where delta-spark exists and fails with setup
-    guidance (not an opaque ClassNotFound) where it doesn't."""
-    import importlib.util
-
-    import pytest
-
-    from git_log_to_sqlite_spark.etl.writers import write_delta
-
-    df = spark.range(3)
-    if importlib.util.find_spec("delta") is None:
-        with pytest.raises(ModuleNotFoundError, match="delta-spark"):
-            write_delta(df, str(tmp_path / "t"))
-    else:
-        write_delta(df, str(tmp_path / "t"))
-        assert spark.read.format("delta").load(str(tmp_path / "t")).count() == 3
-
-
 def test_cli_duplicate_basename_repos_lose_no_commits(tmp_path):
     """Two scanned directories sharing a basename (root/a/proj and
     root/b/proj) must both be parsed — per-directory dump subfolders
@@ -239,6 +220,28 @@ def test_cli_duplicate_basename_repos_lose_no_commits(tmp_path):
     assert con.execute("SELECT COUNT(*) FROM repositories").fetchone()[0] == 1
     assert con.execute("SELECT COUNT(*) FROM logs").fetchone()[0] == 5
     con.close()
+
+
+def test_cli_duplicate_basename_keeps_the_remote_url(spark, tmp_path):
+    """Of two directories sharing a basename, only one with an
+    ``origin``: the stored url is that origin, normalized. The dump
+    reports a missing remote as None, so the repositories dimension's
+    minimum non-null url rule sees the real url instead of the
+    ``(no remote url)`` sentinel, which sorts before it."""
+    import sqlite3
+
+    _repo_with_commit(tmp_path / "root" / "a" / "proj")
+    _git(tmp_path / "root" / "a" / "proj", "remote", "add", "origin",
+         "git@github.com:owner/proj.git")
+    _repo_with_commit(tmp_path / "root" / "b" / "proj")
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "-r", "-m", "2", "-d", str(db))
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute("SELECT name, url FROM repositories").fetchall()
+    finally:
+        con.close()
+    assert rows == [("proj", "https://github.com/owner/proj.git")]
 
 
 def _repo_with_commit(path):
@@ -371,13 +374,14 @@ def _pipeline_tables(spark, root, config_path, tmp_path):
     (scan, ignore list, dumps), rows ordered by primary key."""
     from git_log_to_sqlite_spark.__main__ import _dump_repo, _named_by_dump
     from git_log_to_sqlite_spark.config import Config
-    from git_log_to_sqlite_spark.etl.pipeline import scan_directories
+    from git_log_to_sqlite_spark.etl.pipeline import repository_name, scan_directories
+
     config = Config.load(config_path)
     dump_dir = tmp_path / "dumps"
     dump_dir.mkdir()
     dirs = [
         d for d in scan_directories(root)
-        if os.path.basename(d) not in config.ignored_repositories
+        if repository_name(d) not in config.ignored_repositories
     ]
     dumped = [_dump_repo(d, str(dump_dir), i) for i, d in enumerate(dirs)]
     dumps = [(str(i), *r) for i, r in enumerate(dumped) if r is not None]

@@ -27,11 +27,12 @@ from . import fixtures as FX
 def etl(spark, tmp_path_factory):
     logs_dir = FX.write_fixture_logs(tmp_path_factory.mktemp("golden"))
     commits = parse_git_log(spark, str(logs_dir))
-    dirs = spark.createDataFrame([(d,) for d in FX.SCANNED_DIRS], "path string")
     cfg = Config(
         ignored_repositories=FX.IGNORED_REPOSITORIES, author_map=FX.AUTHOR_MAP
     )
-    return run_pipeline(spark, commits, FX.REPOS_META, scanned_dirs=dirs, config=cfg)
+    return run_pipeline(
+        spark, commits, FX.REPOS_META, scanned_dirs=FX.SCANNED_DIRS, config=cfg
+    )
 
 
 def _by_hash(rows):
@@ -182,11 +183,7 @@ def test_skipped_basename_ignores_trailing_slash_runs(spark, etl):
     """A scanned path ending in any run of slashes names the repository
     its basename names (``proj//`` is ``proj``), so it is analyzed and
     not also reported as skipped."""
-    from git_log_to_sqlite_spark.session import local_frame
-
-    dirs = local_frame(
-        spark, [("/tmp/scan/alpha//",), ("/tmp/scan/beta/",), ("/tmp/scan/gone//",)], "path string"
-    )
+    dirs = ["/tmp/scan/alpha//", "/tmp/scan/beta/", "/tmp/scan/gone//"]
     res = run_pipeline(spark, etl.commits, FX.REPOS_META, scanned_dirs=dirs)
     assert {r["path"] for r in res.skipped.collect()} == {"/tmp/scan/gone//"}
 
@@ -200,10 +197,9 @@ def test_run_pipeline_construction_runs_no_job(spark, tmp_path):
     logs_dir = FX.write_fixture_logs(tmp_path)
     cfg = Config(ignored_repositories=FX.IGNORED_REPOSITORIES, author_map=FX.AUTHOR_MAP)
     commits = parse_git_log(spark, str(logs_dir))
-    dirs = spark.createDataFrame([(d,) for d in FX.SCANNED_DIRS], "path string")
     tracker = spark.sparkContext._jsc.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
-    run_pipeline(spark, commits, FX.REPOS_META, scanned_dirs=dirs, config=cfg)
+    run_pipeline(spark, commits, FX.REPOS_META, scanned_dirs=FX.SCANNED_DIRS, config=cfg)
     time.sleep(0.5)
     assert len(tracker.getJobIdsForGroup(None)) == before
 

@@ -154,7 +154,7 @@ def test_shingles_bounded_distinct_and_hash_range(sess, texts, n):
             assert 0 <= r["h"] < (1 << 60)
 
 
-# --- git-log parser round-trip fuzz (pure Python, no Spark job) --------
+# --- git-log parser round-trip fuzz (one Spark job per example) ----------
 
 _hash = st.text(alphabet="0123456789abcdef", min_size=7, max_size=40)
 # blacklist: the format's own separators, plus every char
@@ -194,16 +194,12 @@ def _render(commits) -> str:
     return "".join(blocks)
 
 
-@given(commits=st.lists(_commit, max_size=8))
-@settings(max_examples=150, deadline=None)
-def test_gitlog_parse_blocks_roundtrip(commits):
-    """Any well-formed rendering parses back to exactly the expected
-    rows: merges excluded, '-' counts as 0, sentinels applied, zero-OID
-    root parent, numstat summed — the reference semantics hold for ANY
-    input, not just the golden fixtures."""
-    from git_log_to_sqlite_spark.sources.gitlog_source import ZERO_OID, parse_blocks
+def _expected(commits, repository: str) -> list[tuple]:
+    """The reference's rows for one rendered log: merges excluded, '-'
+    counts as 0, sentinels applied, zero-OID root parent, numstat
+    summed."""
+    from git_log_to_sqlite_spark.schemas import ZERO_OID
 
-    got = list(parse_blocks(_render(commits), "repo"))
     expected = []
     for h, parents, name, email, epoch, summary, numstat in commits:
         if len(parents) >= 2:
@@ -220,11 +216,34 @@ def test_gitlog_parse_blocks_roundtrip(commits):
                 epoch,
                 ins,
                 dels,
-                "repo",
+                repository,
                 [p for _, _, p in numstat],
             )
         )
-    assert got == expected
+    return expected
+
+
+@given(logs=st.lists(st.lists(_commit, max_size=8), min_size=1, max_size=4))
+@settings(max_examples=50, deadline=None)
+def test_gitlog_parse_blocks_roundtrip(sess, logs):
+    """Any well-formed rendering parses back to exactly the expected
+    rows through ``parse_raw_logs``, the parse the CLI runs: the
+    reference semantics hold for ANY input, not just the golden
+    fixtures. Each example is several log files, one per commit list."""
+    from git_log_to_sqlite_spark.etl.gitlog import parse_raw_logs
+    from git_log_to_sqlite_spark.session import local_frame
+
+    raw = local_frame(
+        sess,
+        [(_render(commits), f"file:/logs/r{i}.log") for i, commits in enumerate(logs)],
+        "value string, _file string",
+    )
+    got = parse_raw_logs(raw).select(
+        "commit_hash", "parent_hash", "author_name", "author_email", "message",
+        "commit_epoch", "insertions", "deletions", "repository", "changed_files",
+    )
+    expected = [row for i, commits in enumerate(logs) for row in _expected(commits, f"r{i}")]
+    assert [tuple(r) for r in got.collect()] == expected
 
 
 # ----------------------------------------------------------------------

@@ -77,85 +77,6 @@ def test_csv_pushdown_still_prunes_columns(spark, oracle_sf_dir, tmp_path):
     assert "c_mktsegment" not in plan
 
 
-# --- gitlog Python Data Source ----------------------------------------
-
-
-def test_gitlog_datasource_matches_jvm_parser(spark, tmp_path):
-    """format('gitlog') must produce the same commits as the JVM-side
-    parse_git_log on the same input (modulo the derived commit_ts
-    column, which only the JVM parser adds)."""
-    import subprocess
-
-    from git_log_to_sqlite_spark.etl import parse_git_log
-    from git_log_to_sqlite_spark.sources import register_gitlog_source
-
-    logdir = tmp_path / "gitlogs"
-    logdir.mkdir()
-    log = subprocess.run(
-        [
-            "git", "-C", "/root/repo", "log", "--no-merges",
-            "--pretty=format:%x01%H%x02%P%x02%an%x02%ae%x02%at%x02%s",
-            "--numstat", "-M", "-C",
-        ],
-        capture_output=True, text=True, check=True,
-    ).stdout
-    (logdir / "repo.log").write_text(log)
-
-    register_gitlog_source(spark)
-    via_ds = spark.read.format("gitlog").load(str(logdir))
-    via_jvm = parse_git_log(spark, str(logdir)).drop("commit_ts")
-
-    cols = sorted(via_ds.columns)
-    assert cols == sorted(via_jvm.columns)
-    a = sorted(tuple(r) for r in via_ds.select(*cols).collect())
-    b = sorted(tuple(r) for r in via_jvm.select(*cols).collect())
-    assert a == b
-    assert len(a) > 0
-
-
-def test_gitlog_datasource_one_partition_per_file(spark, tmp_path):
-    from git_log_to_sqlite_spark.sources import register_gitlog_source
-
-    logdir = tmp_path / "logs"
-    logdir.mkdir()
-    block = (
-        "\x01" + "a" * 40 + "\x02\x02Ann\x02a@x.test\x021700000000\x02msg\n"
-        "1\t2\tfile.py\n"
-    )
-    for name in ("r1.log", "r2.log", "r3.log"):
-        (logdir / name).write_text(block)
-    register_gitlog_source(spark)
-    df = spark.read.format("gitlog").load(str(logdir))
-    assert df.rdd.getNumPartitions() == 3
-    repos = sorted(r["repository"] for r in df.select("repository").collect())
-    assert repos == ["r1", "r2", "r3"]
-
-
-def test_gitlog_parse_blocks_sentinels():
-    """Pure-parser unit checks: zero-OID root, author sentinels,
-    binary numstat, rename new-path, merge exclusion."""
-    from git_log_to_sqlite_spark.sources.gitlog_source import ZERO_OID, parse_blocks
-
-    text = (
-        # root commit, blank author fields, binary file, rename
-        "\x01" + "b" * 40 + "\x02\x02\x02\x021700000001\x02\n"
-        "-\t-\tassets/logo.png\n"
-        "3\t1\tsrc/{old.py => new.py}\n"
-        # merge commit -> excluded
-        "\x01" + "c" * 40 + "\x02" + "d" * 40 + " " + "e" * 40 +
-        "\x02M\x02m@x\x021700000002\x02merge\n"
-    )
-    rows = list(parse_blocks(text, "r"))
-    assert len(rows) == 1
-    (h, parent, name, email, msg, epoch, ins, dels, repo, files) = rows[0]
-    assert parent == ZERO_OID
-    assert name == "(no author name)"
-    assert email == "(no author email)"
-    assert msg == "(no commit summary)"
-    assert (ins, dels) == (3, 1)
-    assert files == ["assets/logo.png", "src/new.py"]
-
-
 def test_orc_sink_and_scan_roundtrip(spark, oracle_sf_dir, tmp_path):
     """ORC is the second columnar format Spark supports natively (no
     extra jars): write orders out, read it back with pushdown, and
@@ -378,3 +299,49 @@ def test_cited_tools_paths_exist():
     }
     missing = sorted(f"{f}: {m}" for f, m in cited if not (REPO_ROOT / m).is_file())
     assert cited and not missing, missing
+
+
+def test_session_has_no_console_progress_bar(spark):
+    """``get_spark`` turns Spark's console progress bar off: it rewrites
+    stderr lines with carriage returns, so it splices into bench.py's
+    per-row stderr lines and a line filter over a saved log drops
+    rows."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
+def test_perfbench_trace_targets_exist():
+    """Every ``tracer.wrap(<module>, "<attr>", ...)`` in
+    ``perfbench/run.py`` names an attribute its module still has, so
+    deleting or renaming a traced function cannot silently break
+    ``--trace 1``. The module names are resolved from the imports in
+    the function that makes the calls."""
+    import ast
+    import importlib
+
+    tree = ast.parse((REPO_ROOT / "perfbench" / "run.py").read_text(encoding="utf-8"))
+    checked, missing = [], []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        modules = {}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                for alias in node.names:
+                    modules[alias.asname or alias.name] = f"{node.module}.{alias.name}"
+            elif (
+                isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and ast.unparse(node.value.func) == "importlib.import_module"
+            ):
+                modules[node.targets[0].id] = node.value.args[0].value
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "tracer.wrap"
+            ):
+                var, attr = node.args[0].id, node.args[1].value
+                module = importlib.import_module(modules[var])
+                checked.append(f"{modules[var]}.{attr}")
+                if not callable(getattr(module, attr, None)):
+                    missing.append(checked[-1])
+    assert len(checked) >= 7 and not missing, (checked, missing)
