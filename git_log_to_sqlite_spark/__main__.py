@@ -33,6 +33,7 @@ worker-thread knob.
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import subprocess
 import sys
@@ -183,7 +184,7 @@ def main(argv: list[str] | None = None) -> int:
         scan_directories,
     )
     from .etl.writers import write_sqlite
-    from .session import get_spark
+    from .session import get_spark, jvm_archive_state
 
     config = Config.load(args.config)
     spark = get_spark(
@@ -191,6 +192,9 @@ def main(argv: list[str] | None = None) -> int:
         cpus=max(args.num_threads, 1),
         extra_conf={"spark.sql.session.timeZone": "UTC"},
     )
+    log = logging.getLogger(__name__)
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug("driver JVM class-data archive: %s", jvm_archive_state(spark))
 
     directories = scan_directories(
         args.root, recursive=args.recursive, max_depth=args.max_depth

@@ -48,6 +48,7 @@ _LF = sql_string("\n")
 _CRLF = sql_string("\r\n")
 _REPO_FROM_FILE = sql_string(r"([^/]+?)(\.(log|txt))?$")
 _RENAME_BRACE = sql_string(r"\{[^{}]*? => ([^{}]*?)\}")
+_RENAME_TO_EMPTY = sql_string(r"/\{[^{}]*? => \}")
 
 
 def _numstat_lines(block: str) -> str:
@@ -76,14 +77,17 @@ def _rename_new_path(path: str) -> str:
 
     numstat rename spellings handled:
       * brace form   ``dir/{old.txt => new.txt}/x`` -> ``dir/new.txt/x``
-        (empty sides collapse the doubled slash)
+        (an empty new side goes with the slash before it:
+        ``a/{b => }/c`` -> ``a/c``)
       * plain form   ``old.txt => new.txt``         -> ``new.txt``
+
+    Any other path is kept as printed.
     """
-    debraced = f"regexp_replace({path}, {_RENAME_BRACE}, '$1')"
-    collapsed = f"regexp_replace({debraced}, '//+', '/')"
+    emptied = f"regexp_replace({path}, {_RENAME_TO_EMPTY}, '')"
+    debraced = f"regexp_replace({emptied}, {_RENAME_BRACE}, '$1')"
     return (
-        f"CASE WHEN {collapsed} RLIKE ' => ' "
-        f"THEN regexp_extract({collapsed}, ' => (.*)$', 1) ELSE {collapsed} END"
+        f"CASE WHEN {debraced} RLIKE ' => ' "
+        f"THEN regexp_extract({debraced}, ' => (.*)$', 1) ELSE {debraced} END"
     )
 
 

@@ -83,6 +83,25 @@ def test_rename_keeps_new_path(etl):
     assert "βeta/ünicode.txt" in paths  # unicode round-trip
 
 
+def test_rename_spellings_keep_the_new_path(spark):
+    """Each numstat path spelling resolves to the new path; only the
+    doubled slash an empty brace side leaves is collapsed, so a path
+    that is not a rename comes back as printed."""
+    from git_log_to_sqlite_spark.etl.gitlog import _rename_new_path
+
+    cases = {
+        "src/{old.rs => new.rs}": "src/new.rs",
+        "{ => src2}/lib.rs": "src2/lib.rs",
+        "a/{b => }/c.txt": "a/c.txt",
+        "lib.rs => src2/lib.rs": "src2/lib.rs",
+        "plain/file.txt": "plain/file.txt",
+        "//": "//",
+    }
+    rows = spark.createDataFrame([(k,) for k in cases], "p string").selectExpr(
+        "p", f"{_rename_new_path('p')} AS new").collect()
+    assert {r["p"]: r["new"] for r in rows} == cases
+
+
 def test_changed_files_ids_deterministic(etl):
     rows = etl.changed_files.orderBy("id").collect()
     ids = [r["id"] for r in rows]
