@@ -27,7 +27,9 @@ Execution model:
 
 ``--num-threads`` also sizes the local session's cores and shuffle
 partitions, the closest Spark analogue of the reference's
-worker-thread knob.
+worker-thread knob. Called in a process that already has an active
+session, ``main`` runs on that session as it finds it and changes none
+of its settings.
 """
 
 from __future__ import annotations
@@ -184,13 +186,13 @@ def main(argv: list[str] | None = None) -> int:
         scan_directories,
     )
     from .etl.writers import write_sqlite
+    from pyspark.sql import SparkSession
+
     from .session import get_spark, jvm_archive_state
 
     config = Config.load(args.config)
-    spark = get_spark(
-        "git_log_to_sqlite_spark",
-        cpus=max(args.num_threads, 1),
-        extra_conf={"spark.sql.session.timeZone": "UTC"},
+    spark = SparkSession.getActiveSession() or get_spark(
+        "git_log_to_sqlite_spark", cpus=max(args.num_threads, 1)
     )
     log = logging.getLogger(__name__)
     if log.isEnabledFor(logging.DEBUG):

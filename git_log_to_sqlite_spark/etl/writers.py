@@ -69,8 +69,8 @@ def write_parquet(
     (None = Spark's 0) keeps today's one-file-per-task layout. This is
     an upper bound only — tiny-file pressure from over-parallel inputs
     is the caller's repartition/coalesce decision, and compaction for
-    append-cadence stores lives with the store (see
-    ``_ParquetStore.compact``)."""
+    an append-cadence table lives with the table (see
+    ``operators.IvfIndex.compact``)."""
     writer = df.write.mode("overwrite")
     if max_records_per_file is not None:
         if max_records_per_file < 1:

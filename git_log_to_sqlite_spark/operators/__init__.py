@@ -9,7 +9,7 @@ decode, merge_asof fallback).
 """
 
 from .asof import asof_join
-from .caching import cache_scope, pin, release_caches
+from .caching import pin, release_caches
 from .clustering import (
     assign_clusters,
     assign_clusters_table,
@@ -27,11 +27,7 @@ from .sampling import (
     weighted_reservoir,
 )
 from .dedup import (
-    HammingStore,
-    SignatureStore,
-    WindowStore,
     decontaminate,
-    exact_dedup,
     fuzzy_decontaminate,
     hamming_pairs,
     hamming_probe,
@@ -50,13 +46,10 @@ from .similarity import (
     IvfIndex,
     brute_force_topk,
     bucketed_ann_topk,
-    cosine,
-    embedding_dedup_ann,
     ivf_ann_topk,
     lsh_bucket,
     multiprobe_ann_topk,
     semantic_dedup,
-    SemanticStore,
 )
 from .multimodal import (
     as_media,
@@ -64,18 +57,15 @@ from .multimodal import (
     audio_frame_fingerprints,
     audio_near_dup_pairs,
     audio_shared_segment_pairs,
-    extract_image_features,
     image_dhash,
     image_in_video_frames,
     image_near_dup_pairs,
-    resize_images,
-    sample_frames,
     video_fingerprint,
     video_frame_dhash,
     video_near_dup_pairs,
     video_shared_scene_pairs,
 )
-from .skew import salted_aggregate, salted_join
+from .skew import salted_aggregate
 from .text import (
     add_text_stats,
     count_subword_tokens,
@@ -95,18 +85,14 @@ __all__ = [
     "audio_frame_fingerprints",
     "audio_near_dup_pairs",
     "audio_shared_segment_pairs",
-    "extract_image_features",
     "image_dhash",
     "image_in_video_frames",
     "image_near_dup_pairs",
-    "resize_images",
-    "sample_frames",
     "video_fingerprint",
     "video_frame_dhash",
     "video_near_dup_pairs",
     "video_shared_scene_pairs",
     "asof_join",
-    "cache_scope",
     "pin",
     "release_caches",
     "assign_clusters",
@@ -123,12 +109,8 @@ __all__ = [
     "dsir_select",
     "domain_mix",
     "token_budget_sample",
-    "SignatureStore",
-    "WindowStore",
     "decontaminate",
-    "exact_dedup",
     "fuzzy_decontaminate",
-    "HammingStore",
     "hamming_pairs",
     "hamming_probe",
     "incremental_minhash_dedup",
@@ -144,15 +126,11 @@ __all__ = [
     "IvfIndex",
     "brute_force_topk",
     "bucketed_ann_topk",
-    "cosine",
-    "embedding_dedup_ann",
     "ivf_ann_topk",
     "lsh_bucket",
     "multiprobe_ann_topk",
     "semantic_dedup",
-    "SemanticStore",
     "salted_aggregate",
-    "salted_join",
     "add_text_stats",
     "chunk_documents",
     "count_subword_tokens",

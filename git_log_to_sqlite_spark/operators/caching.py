@@ -11,7 +11,7 @@ unpersist itself — the cache is only populated when the CALLER runs an
 action.  Left alone, every invocation in a long-lived session pins a new
 entry (and Spark logs "Asked to cache already cached data" on repeat
 invocations with identical inputs).  This module gives those sites a
-registry with three properties:
+registry with two properties:
 
 * ``pin(df)`` — persist + register, UNLESS an equivalent plan is already
   live in the registry.  Spark's CacheManager substitutes cached plans
@@ -22,19 +22,9 @@ registry with three properties:
   consumers call this between pipeline stages; ``bench.py``-style
   ``clearCache()`` also works and the registry detects externally
   cleared entries via ``storageLevel``).
-* ``cache_scope()`` — context manager releasing exactly the frames
-  pinned inside the ``with`` body, for callers interleaving their own
-  ``.cache()`` use with operator calls::
-
-      with cache_scope():
-          ngram_jaccard_pairs(docs, "doc_id", "text").collect()
-      # operator-internal caches freed; caller caches untouched
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -104,36 +94,3 @@ def release_caches(blocking: bool = False) -> int:
         except Exception:
             pass
     return n
-
-
-@contextmanager
-def cache_scope() -> Iterator[None]:
-    """Release exactly the frames pinned inside the ``with`` body,
-    leaving earlier pins (and caller-owned caches) untouched.
-
-    Membership is tracked by object IDENTITY, not a list-length mark:
-    ``pin()`` prunes dead entries on every call, so an index captured
-    before the body could point below where the body's pins land (e.g.
-    after an external ``clearCache()`` removed stale pre-scope entries)
-    and a length-mark would leak those pins past scope exit. The
-    snapshot is a dict keyed by ``id()`` whose VALUES hold strong
-    references to the frames for the body's duration: the refs prevent
-    a pre-scope frame from being garbage-collected mid-body and
-    donating its reused address to a frame pinned inside the scope
-    (which would then masquerade as pre-existing and leak), while the
-    dict gives O(1) membership instead of an O(n) identity scan per
-    frame. Holding those refs does keep otherwise-collectable
-    pre-scope frames alive until scope exit — bounded by the snapshot
-    and the body's length, and the frames' cached blocks are governed
-    by the registry/CacheManager, not the Python wrapper."""
-    before = {id(d): d for d in _LIVE}
-    try:
-        yield
-    finally:
-        inner = [d for d in _LIVE if id(d) not in before]
-        _LIVE[:] = [d for d in _LIVE if id(d) in before]
-        for df in inner:
-            try:
-                df.unpersist()
-            except Exception:
-                pass

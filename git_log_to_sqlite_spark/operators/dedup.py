@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: MinHash-LSH, SimHash, n-gram Jaccard,
+exact-substring spans, and Hamming banding over any signature.
 
 Design rules for 100 TB:
   * group/join on compact derived keys (128-bit hash, 60-bit minhash,
@@ -129,42 +130,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
-
-
-def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
-    """Exact dedup with a deterministic survivor.
-
-    Groups on a 128-bit content hash (never the raw content: the
-    shuffle key is 32 bytes/row at any document size) and keeps the
-    row with the smallest id of each content group. Returns the input
-    columns of the surviving rows plus ``n_copies``. ``id_col`` must be
-    unique and non-null (the table-key contract every id column here
-    carries): a NULL id can never survive (min skips NULLs, and
-    NULL == NULL is not true).
-    """
-    fp = F.md5(F.concat_ws("\x00", *content_cols))
-    # ONE unordered window for both the survivor pick and the count
-    # (ids are unique, so the min id IS the row_number-1 survivor).
-    # The previous two-spec form (row_number over an ordered window +
-    # count over an unordered one) planned TWO Window nodes, each
-    # buffering every duplicate family on one task, and the count
-    # window sat between the rank filter and its window, blocking the
-    # WindowGroupLimit pushdown entirely (probed: no WindowGroupLimit
-    # in the plan). This form buffers each family once, with no
-    # per-family sort on the id — the viral-family exposure stays
-    # linear (inherent: n_copies needs the whole family) but pays one
-    # pass instead of two sorted ones. The registry's `dedup_exact`
-    # twin is the groupBy-aggregate form — partial-combine, fully
-    # skew-proof — for when no per-row annotation is needed.
-    w = Window.partitionBy("_fp")
-    keeper = F.min(F.col(id_col)).over(w)
-    return (
-        df.withColumn("_fp", fp)
-        .withColumn("_keep", keeper)
-        .withColumn("n_copies", F.count("*").over(w))
-        .filter(F.col(id_col) == F.col("_keep"))
-        .drop("_fp", "_keep")
-    )
 
 
 def minhash_signatures(
@@ -530,7 +495,7 @@ def minhash_lsh_pairs(
     # branches + both agreement joins); without persisting, Spark
     # recomputes the shingle explode + K-way min aggregate per branch.
     # Signatures are K x 8 bytes/doc — tiny relative to the corpus.
-    # pin() registers the cache for release_caches()/cache_scope().
+    # pin() registers the cache for release_caches().
     mh = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
     bands = _capped_bands(
         _band_keys(mh, id_col, num_hashes, rows_per_band),
@@ -743,13 +708,11 @@ def positional_windows(tokens: Column, k: int) -> Column:
 def window_table(
     df: DataFrame, id_col: str, text_col: str, window: int
 ) -> DataFrame:
-    """``(_id, pos, h)`` positional-window hash table — the
-    persistable artifact of the substring modality (the analog of a
-    minhash signature table: a daily pipeline materializes history's
-    window table once as parquet and every increment probes it via
-    :func:`incremental_substring_spans` without re-tokenizing history).
+    """``(_id, pos, h)`` positional-window hash table — the substring
+    modality's analog of a minhash signature table, consumed by
+    :func:`substring_span_pairs` and :func:`incremental_substring_spans`.
     One row per token position at ~24 B/row; the window text itself
-    never persists, only its 8-byte xxhash64."""
+    is never carried, only its 8-byte xxhash64."""
     return (
         _spread(df)
         .select(
@@ -966,7 +929,7 @@ def _island_spans(
 
 
 def incremental_substring_spans(
-    history: DataFrame | None,
+    history: DataFrame,
     increment: DataFrame,
     id_col: str,
     text_col: str,
@@ -975,16 +938,13 @@ def incremental_substring_spans(
     max_df: int | None = None,
     max_df_quantile: float | None = None,
     quantile_headroom: int = 10,
-    history_windows: DataFrame | None = None,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Passage-level dedup of a daily batch against accumulated
     history — :func:`substring_span_pairs`' production increment
     shape, mirroring :func:`incremental_minhash_dedup`'s contract:
-    history is NEVER self-joined and, when ``history_windows`` is
-    passed (a persisted :func:`window_table`), never re-tokenized —
-    each day tokenizes only its increment and probes the stored
-    (id, pos, h) table.
+    history is NEVER self-joined — the increment's windows probe
+    history's (id, pos, h) :func:`window_table`.
 
     Returns ``(inc_id, hist_id, longest_run_tokens,
     n_shared_windows)`` for every increment x history pair sharing a
@@ -1004,14 +964,10 @@ def incremental_substring_spans(
     candidates are unknowable from the history side alone, same
     argument as the minhash probe valve).
 
-    ``history_windows`` is deliberately NOT pinned (at scale it is a
-    column-pruned parquet scan, and a scan or two is cheaper than
-    caching a corpus-scale table — the same rationale as the minhash
-    twin's provided signature table). Windows DERIVED from ``history``
-    text are pinned when a cap is requested — the valve's count
-    aggregation and the probe join each consume the table, and
-    re-deriving means re-tokenizing history; without a cap the derived
-    table is consumed once and a cache would only add write cost.
+    History's window table is pinned when a cap is requested — the
+    valve's count aggregation and the probe join each consume it, and
+    re-deriving means re-tokenizing history; without a cap it is
+    consumed once and a cache would only add write cost.
 
     Hot windows: a daily-scale increment's window table sits far under
     the broadcast threshold, so the probe join is a BroadcastHashJoin
@@ -1030,22 +986,14 @@ def incremental_substring_spans(
             "a shorter run has no complete window and cannot be observed"
         )
     _validate_df_caps(max_df, max_df_quantile, observation)
-    if (history is None) == (history_windows is None):
-        raise ValueError("exactly one of history / history_windows is required")
-    if history_windows is not None:
-        missing = {"_id", "pos", "h"} - set(history_windows.columns)
-        if missing:
-            raise ValueError(f"history_windows missing columns: {sorted(missing)}")
-        wh = history_windows
-    else:
-        wh = window_table(history, id_col, text_col, window)
-        if max_df is not None or max_df_quantile is not None:
-            # consumed twice under a cap (the valve's count aggregation
-            # + the probe join): pin so history tokenizes once; see the
-            # docstring for why a PROVIDED table stays unpinned
-            wh = pin(wh)
+    capped = max_df is not None or max_df_quantile is not None
+    wh = window_table(history, id_col, text_col, window)
+    if capped:
+        # consumed twice under a cap (the valve's count aggregation +
+        # the probe join): pin so history tokenizes once
+        wh = pin(wh)
     wi = window_table(increment, id_col, text_col, window)
-    if max_df is not None or max_df_quantile is not None:
+    if capped:
         hot = _hot_key_set(
             wh,
             ["h"],
@@ -1298,10 +1246,9 @@ def hamming_probe(
     ``(*probe_id, *corpus_id, hamming)`` — the two id sets must be
     disjoint column names (alias before calling; a probe that is a
     subset of the corpus matches itself at hamming 0, filter if
-    unwanted). In production the corpus side is a persisted signature
-    table (``SignatureStore`` for minhash; the same parquet shape
-    works for any <= 60-bit signature), so a lookup never re-hashes
-    the corpus.
+    unwanted). The corpus side may be a persisted ``(id, sig)``
+    parquet table of any <= 60-bit signature, so a lookup never
+    re-hashes the corpus.
 
     The hot-band valve caps the CORPUS side only (``join_shape=
     'probe'``: candidates per band key are |probe bucket| x |corpus
@@ -1557,7 +1504,7 @@ def fuzzy_decontaminate(
 
 
 def incremental_minhash_dedup(
-    history: DataFrame | None,
+    history: DataFrame,
     increment: DataFrame,
     id_col: str,
     text_col: str,
@@ -1568,7 +1515,6 @@ def incremental_minhash_dedup(
     max_band_size: int | None = None,
     band_size_quantile: float | None = None,
     observation: "Observation | None" = None,
-    history_signatures: DataFrame | None = None,
     best_match: bool = False,
 ) -> DataFrame:
     """Dedup a new batch against the historical corpus WITHOUT
@@ -1591,12 +1537,11 @@ def incremental_minhash_dedup(
     a copy of" production answer.
 
     Scale shape: history contributes ONLY its signature table (K x 8
-    bytes/doc — in production a persisted/bucketed table maintained
-    across ingests, so the 100-TB text is never re-scanned; here it is
-    derived and pinned). The band equi-join is increment-bands x
-    history-bands — candidate mass tracks collisions, never
-    |history| x |increment| — and the agreement estimate compares the
-    two signature rows per candidate. History never self-joins: the
+    bytes/doc, derived and pinned). The band equi-join is
+    increment-bands x history-bands — candidate mass tracks
+    collisions, never |history| x |increment| — and the agreement
+    estimate compares the two signature rows per candidate. History
+    never self-joins: the
     only quadratic-risk surface is band-key skew — closed by the same
     hot-band valve the batch operator carries (``max_band_size`` /
     ``band_size_quantile``, :func:`_capped_bands`). The valve counts
@@ -1606,35 +1551,11 @@ def incremental_minhash_dedup(
     linear in the (small) increment even when the increment itself
     carries a degenerate key, while removing a hot history bucket
     removes the key from the join outright.
-
-    Pass ``history_signatures`` (a wide ``(id, mh_0..mh_{K-1})`` table,
-    e.g. :meth:`SignatureStore.read`) INSTEAD of ``history`` to run
-    against a persisted signature table — the production ingest shape.
-    A provided table is deliberately NOT pinned: at scale it is a
-    parquet scan (K x 8 B/doc, column-pruned) and its two consumers
-    (band projection, agreement join) each re-scan more cheaply than a
-    100-TB-history cache could ever be held; derived-from-text
-    signatures keep the pin since deriving them re-shingles the
-    corpus.
     """
-    if (history is None) == (history_signatures is None):
-        raise ValueError(
-            "exactly one of history / history_signatures is required"
-        )
     _validate_band_caps(  # before the pins — a bad call must not leak a cache entry
         max_band_size, band_size_quantile, observation
     )
-    if history_signatures is not None:
-        missing = {id_col, *(f"mh_{j}" for j in range(num_hashes))} - set(
-            history_signatures.columns
-        )
-        if missing:
-            raise ValueError(f"history_signatures missing columns: {sorted(missing)}")
-        mh_h = history_signatures
-    else:
-        mh_h = pin(
-            minhash_signatures(history, id_col, text_col, num_hashes, shingle_n)
-        )
+    mh_h = pin(minhash_signatures(history, id_col, text_col, num_hashes, shingle_n))
     mh_i = pin(minhash_signatures(increment, id_col, text_col, num_hashes, shingle_n))
     bands_h = _capped_bands(
         _band_keys(mh_h, id_col, num_hashes, rows_per_band),
@@ -1698,443 +1619,3 @@ def incremental_minhash_dedup(
         .join(matches.withColumnRenamed("_inc", id_col), id_col, "left")
         .select(*out_cols)
     )
-
-
-class _ParquetStore:
-    """Shared persistence machinery of every persisted store
-    (:class:`SignatureStore`, :class:`WindowStore`, ``HammingStore``,
-    ``SemanticStore`` and ``IvfIndex``): an append-only parquet table
-    with an existence probe that maps ONLY a missing path to False, a lazy
-    read, a fail-fast bootstrap guard, and staged-swap compaction.
-    One implementation so a fix to any of them lands once."""
-
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
-
-    def exists(self) -> bool:
-        """True iff the store's table exists at the path.
-
-        Only a genuinely-missing path maps to False. Any OTHER failure
-        (transient IO, permissions, a momentarily unreachable object
-        store) propagates: conflating it with "never bootstrapped"
-        would make :meth:`ingest`'s fail-fast guard advise calling
-        bootstrap() — whose mode("overwrite") would destroy a live
-        history table — on a store that merely hiccuped.
-        """
-        from pyspark.errors import AnalysisException
-
-        try:
-            self.spark.read.parquet(self.path).schema
-            return True
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e):
-                return False
-            raise
-
-    def read(self) -> DataFrame:
-        from ..sources.schema_cache import read_parquet_cached
-
-        return read_parquet_cached(self.spark, self.path)
-
-    #: subclass hint for the fail-fast message — the bootstrap call
-    #: shape differs per store (text stores take (corpus, text_col),
-    #: the signature store takes a signatures frame)
-    _bootstrap_hint = "bootstrap(corpus, text_col)"
-
-    #: partition columns of the store's table, () for flat layouts —
-    #: compact() preserves them (see its docstring)
-    _partition_cols: tuple = ()
-
-    def _require_bootstrapped(self) -> None:
-        if not self.exists():
-            # Fail HERE, not as a path-not-found AnalysisException from
-            # the lazy self.read() deep inside an operator — the first
-            # ingest against a never-bootstrapped store is a caller
-            # setup error with an obvious fix.
-            raise FileNotFoundError(
-                f"{type(self).__name__} at {self.path!r} has no table "
-                f"yet; call {self._bootstrap_hint} first"
-            )
-
-    def compact(self, num_files: int | None = None) -> None:
-        """Rewrite the store into ``num_files`` parquet files (default:
-        the session's default parallelism) — the offline maintenance
-        pass for ingest cadences where one appended file-set per day
-        makes small files dominate the scan. Content is append-only,
-        so compaction is rewrite-identical; the rewrite lands in a
-        sibling temp dir and swaps in via the Hadoop FileSystem API
-        (works on any scheme the session can reach). Run between
-        ingests, not concurrently with one.
-
-        Subclasses whose table is PARTITIONED (``_partition_cols``)
-        keep their layout: the rewrite clusters by the partition
-        columns and writes partitionBy them — a flat rewrite would
-        demote the partition column to data, silently lose partition
-        pruning, and make the NEXT partitioned append produce Spark's
-        'Conflicting directory structures' failure on read."""
-        sc = self.spark.sparkContext
-        n = num_files or sc.defaultParallelism
-        tmp = self.path.rstrip("/") + "__compact_tmp"
-        old = self.path.rstrip("/") + "__compact_old"
-        w = self.read()
-        if self._partition_cols:
-            (
-                w.repartition(n, *self._partition_cols)
-                .write.mode("overwrite")
-                .partitionBy(*self._partition_cols)
-                .parquet(tmp)
-            )
-        else:
-            w.repartition(n).write.mode("overwrite").parquet(tmp)
-        hpath = sc._jvm.org.apache.hadoop.fs.Path
-        fs = hpath(self.path).getFileSystem(sc._jsc.hadoopConfiguration())
-        # staged swap, no delete-before-rename: a crash between the two
-        # renames leaves the data intact at __compact_old (manual
-        # recovery: rename it back); the store is never deleted while
-        # it is the only copy
-        fs.delete(hpath(old), True)
-        if not fs.rename(hpath(self.path), hpath(old)):
-            raise IOError(f"compaction stage-out failed: {self.path} -> {old}")
-        if not fs.rename(hpath(tmp), hpath(self.path)):
-            fs.rename(hpath(old), hpath(self.path))  # roll back
-            raise IOError(f"compaction swap failed: {tmp} -> {self.path}")
-        fs.delete(hpath(old), True)
-
-
-class SignatureStore(_ParquetStore):
-    """Persisted MinHash signature table maintained across daily
-    ingests — the production contract :func:`incremental_minhash_dedup`
-    promises: the 100-TB history TEXT is never re-scanned, only its
-    K x 8 B/doc signature table is, and each day's novel documents
-    append their signatures so tomorrow's batch dedups against them.
-
-    Layout: plain parquet, wide signatures ``(id, mh_0..mh_{K-1})``,
-    one appended file-set per ingest. Deliberately NOT bucketed: with
-    the increment orders of magnitude smaller than history, both
-    consuming joins build/broadcast on the INCREMENT side (band probe
-    and agreement join), so history is scanned map-side and never
-    shuffled — a shape no bucketing improves — and band keys cannot
-    pre-bucket the wide table anyway (each row projects to
-    num_hashes/rows_per_band band keys). Compact the file count
-    offline if ingest cadence makes small files dominate; content is
-    append-only so compaction is a rewrite-identical operation.
-
-    :meth:`ingest` is the daily loop body: annotate the batch against
-    the store, then append the novel documents' signatures. The
-    annotation is materialized (``localCheckpoint``) BEFORE the append
-    so the returned frame can never lazily re-read the store post-
-    append and see the batch's own signatures as "history".
-    """
-
-    def __init__(
-        self,
-        spark,
-        path: str,
-        id_col: str = "doc_id",
-        num_hashes: int = 8,
-        shingle_n: int = 3,
-    ) -> None:
-        super().__init__(spark, path)
-        self.id_col = id_col
-        self.num_hashes = num_hashes
-        self.shingle_n = shingle_n
-
-    def signatures_for(self, df: DataFrame, text_col: str) -> DataFrame:
-        """Wide signatures of ``df`` under the store's parameters."""
-        return minhash_signatures(
-            df, self.id_col, text_col, self.num_hashes, self.shingle_n
-        )
-
-    def bootstrap(self, corpus: DataFrame, text_col: str) -> None:
-        """Initialize (overwrite) the store from a deduped corpus."""
-        self.signatures_for(corpus, text_col).write.mode("overwrite").parquet(
-            self.path
-        )
-
-    def ingest(
-        self,
-        batch: DataFrame,
-        text_col: str,
-        rows_per_band: int = 2,
-        min_agree: float = 0.25,
-        max_band_size: int | None = None,
-        band_size_quantile: float | None = None,
-    ) -> DataFrame:
-        """Dedup ``batch`` against the store and append the novel
-        documents' signatures. Returns the materialized per-batch
-        annotation ``(id, dup_of, best_est, is_new)``.
-
-        Every cache this call creates — the batch signature pin, the
-        operator's internal twin of it, and (under the quantile valve)
-        the per-batch history band-count pin — lives inside a
-        cache_scope, so a long-lived foreachBatch loop neither
-        accumulates one pinned frame per micro-batch nor lets a later
-        batch's valve read a STALE pre-append count table through
-        sameResult cache substitution. The scope also cannot evict a
-        cache the CALLER owns: a pre-existing equivalent pin makes the
-        inner pin() a no-op, and cache_scope releases only frames
-        pinned inside the body. The append happens inside the scope;
-        ``res`` is checkpointed first, so nothing returned depends on
-        the released caches or can lazily re-read the store
-        post-append."""
-        from .caching import cache_scope
-
-        self._require_bootstrapped()
-        with cache_scope():
-            sigs = pin(self.signatures_for(batch, text_col))
-            res = incremental_minhash_dedup(
-                None,
-                batch,
-                self.id_col,
-                text_col,
-                num_hashes=self.num_hashes,
-                rows_per_band=rows_per_band,
-                min_agree=min_agree,
-                shingle_n=self.shingle_n,
-                max_band_size=max_band_size,
-                band_size_quantile=band_size_quantile,
-                history_signatures=self.read(),
-            ).localCheckpoint(eager=True)
-            new_ids = res.filter(F.col("is_new") == 1).select(self.id_col)
-            sigs.join(new_ids, self.id_col, "left_semi").write.mode(
-                "append"
-            ).parquet(self.path)
-        return res
-
-
-class HammingStore(_ParquetStore):
-    """Persisted <= 60-bit signature table maintained across daily
-    ingests — the Hamming-family analog of :class:`SignatureStore`,
-    and the production contract :func:`hamming_probe` promises: the
-    binary corpus (images, audio, video, simhashed text) is DECODED
-    once, only its 16 B/item ``(id, sig)`` table is probed, and each
-    day's novel items append their signature so tomorrow's batch
-    dedups against them.
-
-    Modality-agnostic by design: the store holds SIGNATURES, not
-    payloads — the caller picks the hasher (``image_dhash``,
-    ``audio_fingerprint``, ``video_fingerprint``, ``simhash``) and
-    passes its output to :meth:`bootstrap` / :meth:`ingest`, so one
-    store class serves every <= 60-bit modality and the decode cost
-    stays wherever the caller's Arrow-batched mapInPandas ran it.
-
-    :meth:`ingest` is the daily loop body: probe the batch against
-    the store (:func:`hamming_probe` — history never self-joins),
-    annotate ``(id, sig, dup_of, best_hamming, is_new)``, then append
-    ONLY the novel items' signatures. The annotation is materialized
-    (``localCheckpoint``) before the append so the returned frame can
-    never lazily re-read the store post-append and see the batch's
-    own signatures as history — the same ordering contract as every
-    sibling store. BATCH-INTERNAL duplicates are deliberately out of
-    scope, exactly as in :func:`incremental_minhash_dedup`: two
-    identical novel signatures in one batch both annotate
-    ``is_new=1`` and both append — run :func:`hamming_pairs` on the
-    (small) batch first if the day's data may self-duplicate."""
-
-    _bootstrap_hint = "bootstrap(signatures)"
-
-    def __init__(
-        self,
-        spark,
-        path: str,
-        id_col: str = "media_id",
-        sig_col: str = "sig",
-        bits: int = 60,
-    ) -> None:
-        super().__init__(spark, path)
-        self.id_col = id_col
-        self.sig_col = sig_col
-        self.bits = bits
-
-    def bootstrap(self, signatures: DataFrame) -> None:
-        """Initialize (overwrite) the store from a deduped corpus's
-        signature table (``id_col``, ``sig_col``)."""
-        signatures.select(self.id_col, self.sig_col).write.mode(
-            "overwrite"
-        ).parquet(self.path)
-
-    def ingest(
-        self,
-        signatures: DataFrame,
-        bands: int = 4,
-        max_hamming: int = 3,
-        max_band_size: int | None = None,
-        band_size_quantile: float | None = None,
-        observation: "Observation | None" = None,
-    ) -> DataFrame:
-        """Dedup a batch's signature table against the store and
-        append the novel items' signatures. Returns the materialized
-        annotation ``(id, sig, dup_of, best_hamming, is_new)`` —
-        ``dup_of`` is the closest history item (ties to the smaller
-        id: min over (hamming, id) structs, deterministic),
-        ``is_new`` = 1 when no history signature is within
-        ``max_hamming``. Cache hygiene mirrors
-        :meth:`SignatureStore.ingest` (everything in a cache_scope;
-        checkpoint before append)."""
-        from .caching import cache_scope
-
-        _validate_banding(
-            self.bits, bands, max_hamming, max_band_size,
-            band_size_quantile, observation,
-        )
-        self._require_bootstrapped()
-        with cache_scope():
-            sigs = pin(signatures.select(self.id_col, self.sig_col))
-            hist = self.read().withColumnRenamed(self.id_col, "_hist_id")
-            matches = hamming_probe(
-                sigs,
-                hist,
-                probe_id=self.id_col,
-                corpus_id="_hist_id",
-                sig_col=self.sig_col,
-                bits=self.bits,
-                bands=bands,
-                max_hamming=max_hamming,
-                max_band_size=max_band_size,
-                band_size_quantile=band_size_quantile,
-                observation=observation,
-            )
-            best = matches.groupBy(self.id_col).agg(
-                F.min(F.struct("hamming", "_hist_id")).alias("_best")
-            )
-            res = (
-                sigs.join(best, self.id_col, "left")
-                .select(
-                    self.id_col,
-                    self.sig_col,
-                    F.col("_best._hist_id").alias("dup_of"),
-                    F.col("_best.hamming").alias("best_hamming"),
-                    F.when(F.col("_best").isNull(), F.lit(1))
-                    .otherwise(F.lit(0))
-                    .alias("is_new"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            res.filter(F.col("is_new") == 1).select(
-                self.id_col, self.sig_col
-            ).write.mode("append").parquet(self.path)
-        return res
-
-
-class WindowStore(_ParquetStore):
-    """Persisted positional-window table maintained across daily
-    ingests — the exact-substring analog of :class:`SignatureStore`,
-    and the production contract :func:`incremental_substring_spans`
-    promises: the 100-TB history TEXT is never re-tokenized, only its
-    ``(_id, pos, h)`` window table (~24 B/token, window text never
-    stored) is probed, and each day's novel documents append their
-    windows so tomorrow's batch is checked against them.
-
-    Layout: plain parquet, one appended file-set per ingest, NOT
-    bucketed — the probe join shuffles on the 8-byte window hash that
-    both sides derive, and with the increment orders of magnitude
-    smaller than history the planner builds on the increment side;
-    pre-bucketing by ``h`` would help only the full shuffle fallback
-    and is easy to add at write time if a deployment measures that
-    shape. :meth:`compact` (inherited) handles small-file buildup.
-
-    :meth:`ingest` is the daily loop body: annotate the batch against
-    the store, then append the NOVEL documents' windows — novel
-    meaning no shared run of >= ``min_run_tokens`` with history, the
-    same keep-one-copy policy as the signature store (documents that
-    merely contain a historical passage are flagged, kept out of the
-    store, and left to the caller's trim/drop policy). The annotation
-    is materialized (``localCheckpoint``) BEFORE the append so the
-    returned frame can never lazily re-read the store post-append and
-    see the batch's own windows as "history".
-    """
-
-    def __init__(
-        self,
-        spark,
-        path: str,
-        id_col: str = "doc_id",
-        window: int = 8,
-    ) -> None:
-        super().__init__(spark, path)
-        self.id_col = id_col
-        self.window = window
-
-    def windows_for(self, df: DataFrame, text_col: str) -> DataFrame:
-        """``(_id, pos, h)`` window table of ``df`` under the store's
-        parameters."""
-        return window_table(df, self.id_col, text_col, self.window)
-
-    def bootstrap(self, corpus: DataFrame, text_col: str) -> None:
-        """Initialize (overwrite) the store from a deduped corpus."""
-        self.windows_for(corpus, text_col).write.mode("overwrite").parquet(
-            self.path
-        )
-
-    def ingest(
-        self,
-        batch: DataFrame,
-        text_col: str,
-        min_run_tokens: int = 16,
-        max_df: int | None = None,
-        max_df_quantile: float | None = None,
-        quantile_headroom: int = 10,
-    ) -> DataFrame:
-        """Check ``batch`` for shared passages against the store and
-        append the novel documents' windows. Returns the materialized
-        per-batch annotation ``(id, max_run_tokens, n_hist_matches,
-        best_match_id, is_new)`` — ``best_match_id`` is the history
-        document with the LONGEST shared run (ties to the smaller id,
-        via the same type-agnostic min_by-on-(-run, id) form as the
-        signature store's best match), NULL for novel documents.
-
-        Cache discipline mirrors :meth:`SignatureStore.ingest`: the
-        batch window pin, the operator's internal twin of it
-        (sameResult reuse), and any valve pins live inside a
-        cache_scope, so a long-lived foreachBatch loop neither leaks a
-        pin per micro-batch nor serves a later batch a STALE
-        pre-append cache; the annotation is checkpointed before the
-        append inside the scope."""
-        from .caching import cache_scope
-
-        self._require_bootstrapped()
-        with cache_scope():
-            wb = pin(self.windows_for(batch, text_col))
-            pairs = incremental_substring_spans(
-                None,
-                batch,
-                self.id_col,
-                text_col,
-                window=self.window,
-                min_run_tokens=min_run_tokens,
-                max_df=max_df,
-                max_df_quantile=max_df_quantile,
-                quantile_headroom=quantile_headroom,
-                history_windows=self.read(),
-            )
-            per_doc = pairs.groupBy(F.col("inc_id").alias(self.id_col)).agg(
-                F.max("longest_run_tokens").alias("max_run_tokens"),
-                F.count(F.lit(1)).alias("n_hist_matches"),
-                F.expr(
-                    "min_by(hist_id, struct(-longest_run_tokens, hist_id))"
-                ).alias("best_match_id"),
-            )
-            res = (
-                batch.select(self.id_col)
-                .join(per_doc, self.id_col, "left")
-                .select(
-                    self.id_col,
-                    F.coalesce(F.col("max_run_tokens"), F.lit(0)).alias(
-                        "max_run_tokens"
-                    ),
-                    F.coalesce(F.col("n_hist_matches"), F.lit(0)).alias(
-                        "n_hist_matches"
-                    ),
-                    "best_match_id",
-                    F.when(F.col("max_run_tokens").isNull(), 1)
-                    .otherwise(0)
-                    .alias("is_new"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            new_ids = res.filter(F.col("is_new") == 1).select(self.id_col)
-            wb.join(
-                new_ids.withColumnRenamed(self.id_col, "_id"), "_id", "left_semi"
-            ).write.mode("append").parquet(self.path)
-        return res

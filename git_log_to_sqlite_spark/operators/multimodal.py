@@ -3,16 +3,17 @@ with typed metadata, processed by Arrow-batched Pandas UDFs over
 ``mapInPandas``.
 
 The Spark-side plumbing (schema, partitioning, UDF signature, batch
-shape) is real and tested. The decode step dispatches on availability:
-where Pillow is importable the real decoder runs; otherwise a
-deterministic fake (``_decode_image_stub``) keeps the operator and its
-tests runnable (this container has no PIL). The plumbing is the part
-that matters at 100 TB: binary payloads ride the same partitions as
-their metadata, batches stream through Arrow with bounded memory
-(maxRecordsPerBatch), and the output schema is declared, never
-inferred. Executors must resolve the same optional deps as the driver
-(same image, or ship wheels via ``--py-files``) — the dispatch runs at
-import time on each worker.
+shape) is real and tested. The decode step (``luma_grid``, the
+downsampled luma grid every perceptual hash starts from) dispatches on
+availability: where Pillow is importable the real decoder
+(``_luma_grid_pil``) runs; otherwise a deterministic fake
+(``_luma_grid_stub``) keeps the operators and their tests runnable
+without Pillow. The plumbing is the part that matters at 100 TB:
+binary payloads ride the same partitions as their metadata, batches
+stream through Arrow with bounded memory (maxRecordsPerBatch), and the
+output schema is declared, never inferred. Executors must resolve the
+same optional deps as the driver (same image, or ship wheels via
+``--py-files``) — the dispatch runs at import time on each worker.
 """
 
 from __future__ import annotations
@@ -37,16 +38,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("byte_len", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mean_luma", T.DoubleType(), True),
-    ]
-)
-
 
 def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:
     """Wrap an existing binary (or string) column as a media table with
@@ -59,135 +50,6 @@ def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFra
         payload.alias("payload"),
         F.lit(mime).alias("mime_type"),
         F.length(payload).cast("int").alias("byte_len"),
-    )
-
-
-def _decode_image_stub(payload: bytes) -> tuple[int, int, float]:
-    """Deterministic fake decoder. Derives (width, height, mean_luma)
-    from the payload bytes so tests are stable in PIL-less
-    environments."""
-    if payload is None or len(payload) == 0:
-        raise NotImplementedError("empty payload: no decoder available")
-    n = len(payload)
-    width = 16 + (n % 64)
-    height = 16 + ((n // 64) % 64)
-    mean_luma = (sum(payload[:32]) % 256) / 255.0
-    return width, height, mean_luma
-
-
-def _decode_image_pil(payload: bytes) -> tuple[int, int, float]:
-    """Real decoder: Pillow. mean_luma via the grayscale histogram —
-    O(256) per image after the decode, no full-pixel numpy round-trip."""
-    if payload is None or len(payload) == 0:
-        raise NotImplementedError("empty payload: no decoder available")
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as img:
-        gray = img.convert("L")
-        hist = gray.histogram()
-        total = sum(hist)
-        mean = sum(i * c for i, c in enumerate(hist)) / (total * 255.0)
-        return img.width, img.height, float(mean)
-
-
-#: default decoder — real when Pillow is importable, stub otherwise
-decode_image: Callable[[bytes], tuple[int, int, float]] = (
-    _decode_image_pil if HAS_PIL else _decode_image_stub
-)
-
-
-def extract_image_features(
-    media: DataFrame,
-    batch_size_hint: int = 1024,
-    decoder: Callable[[bytes], tuple[int, int, float]] | None = None,
-) -> DataFrame:
-    """Decode / feature-extract over ``mapInPandas``: batches stream
-    through Arrow, one output row per media row, bounded memory
-    regardless of payload size. ``decoder`` defaults to Pillow when
-    importable, else the deterministic stub; pass one explicitly to pin
-    behavior (tests pin the stub so they run identically either way)."""
-    decoder = decoder or decode_image
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decoder(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["byte_len"],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_luma": [f[2] for f in feats],
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: truncate/cycle the payload to
-    width*height bytes — same in/out types as the real resize, so
-    swapping implementations changes no plumbing."""
-    if payload is None or len(payload) == 0:
-        raise NotImplementedError("empty payload: no decoder available")
-    target = width * height
-    reps = (target // len(payload)) + 1
-    return (payload * reps)[:target]
-
-
-def _resize_pil(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize: Pillow decode -> resize -> PNG re-encode."""
-    if payload is None or len(payload) == 0:
-        raise NotImplementedError("empty payload: no decoder available")
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as img:
-        out = io.BytesIO()
-        img.resize((width, height)).save(out, format="PNG")
-        return out.getvalue()
-
-
-#: default resizer — real when Pillow is importable, stub otherwise
-resize_payload: Callable[[bytes, int, int], bytes] = (
-    _resize_pil if HAS_PIL else _resize_stub
-)
-
-
-def resize_images(
-    media: DataFrame,
-    width: int = 32,
-    height: int = 32,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize over ``mapInPandas``: payload in, transformed payload +
-    new dimensions out. The payload column round-trips binary through
-    Arrow (no base64 detours); metadata columns are recomputed, never
-    copied stale. ``resizer`` defaults like ``extract_image_features``'s
-    decoder."""
-    resizer = resizer or resize_payload
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [resizer(p, width, height) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": resized,
-                    "mime_type": pdf["mime_type"],
-                    "byte_len": [len(r) for r in resized],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.mapInPandas(
-        run,
-        schema="media_id long, payload binary, mime_type string,"
-        " byte_len int, width int, height int",
     )
 
 
@@ -248,8 +110,8 @@ def image_dhash(
     The decode+downsample runs as an Arrow-batched ``mapInPandas``
     (the multimodal convention: payloads never leave their partition,
     batches stream with bounded memory); the hash itself is integer
-    math over the tiny grid. ``grid_fn`` follows the Pillow-or-stub
-    dispatch of :func:`extract_image_features`.
+    math over the tiny grid. ``grid_fn`` defaults to ``luma_grid``,
+    the module's Pillow-or-stub dispatch.
     """
     if rows * cols > 60:
         raise ValueError(
@@ -637,29 +499,6 @@ def audio_shared_segment_pairs(
     )
 
 
-def sample_frames(media: DataFrame, every_nth_byte: int = 256) -> DataFrame:
-    """Frame-sampling shape: 1 media row -> N frame rows (here: one
-    'frame' per every_nth_byte slice — stands in for video frame
-    extraction; the explode-shaped output schema is the real part)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frame_nos, offsets = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                n_frames = max(1, len(payload or b"") // every_nth_byte)
-                for i in range(n_frames):
-                    ids.append(mid)
-                    frame_nos.append(i)
-                    offsets.append(i * every_nth_byte)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_no": frame_nos, "byte_offset": offsets}
-            )
-
-    return media.mapInPandas(
-        run, schema="media_id long, frame_no int, byte_offset int"
-    )
-
-
 def video_frame_dhash(
     media: DataFrame,
     rows: int = 6,
@@ -668,18 +507,16 @@ def video_frame_dhash(
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
 ) -> DataFrame:
     """Per-frame perceptual hashes for video clips: one ``(media_id,
-    frame_no, dhash)`` row per sampled frame — the explode-shaped
-    output of :func:`sample_frames` fused with :func:`image_dhash`'s
-    bit math (shared ``_grid_dhash``, so a video frame and a still
-    image of the same grid hash identically).
+    frame_no, dhash)`` row per sampled frame — an explode-shaped frame
+    sample fused with :func:`image_dhash`'s bit math (shared
+    ``_grid_dhash``, so a video frame and a still image of the same
+    grid hash identically).
 
-    Frame extraction follows :func:`sample_frames`' decode
-    convention: the clip payload splits into consecutive
+    Frame extraction: the clip payload splits into consecutive
     ``frame_bytes`` slices, ``max(1, len // frame_bytes)`` full
     frames (a clip shorter than one frame is its own single frame;
-    a trailing partial slice is dropped, mirroring sample_frames'
-    offset arithmetic).  Each slice runs through the same
-    Pillow-or-stub ``grid_fn`` seam as the image operators — with a
+    a trailing partial slice is dropped).  Each slice runs through
+    the same Pillow-or-stub ``grid_fn`` seam as the image operators — with a
     real decoder the slice would be a container-demuxed keyframe;
     the byte-slice stand-in keeps the plumbing (1 clip row -> N
     frame rows through one Arrow batch, payloads never leaving

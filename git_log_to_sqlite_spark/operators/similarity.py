@@ -21,7 +21,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.schema_cache import read_parquet_cached
-from .dedup import _ParquetStore
 
 if TYPE_CHECKING:
     from pyspark.sql import Observation
@@ -46,25 +45,12 @@ def vnorm(arr: Column) -> Column:
 
     Compute this ONCE PER VECTOR in each side's projection (aliased
     next to the cast vector) and divide the pair dot by the two norm
-    COLUMNS — never call :func:`cosine` on joined rows: a pairwise
-    cosine re-folds both self-norms per candidate, tripling the
-    per-pair arithmetic (3 O(dims) folds instead of 1) on the
-    operator's hottest path. Same expression tree per value, so the
-    result is bit-identical either way.
+    COLUMNS — never fold the norms on joined rows: that re-folds both
+    self-norms per candidate, tripling the per-pair arithmetic (3
+    O(dims) folds instead of 1) on the operator's hottest path.
     """
     v = _as_double(arr)
     return F.sqrt(_dot(v, v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array columns (JVM-side fold).
-
-    For one-shot row-local use. In a pair JOIN, precompute
-    :func:`vnorm` per side instead (see its docstring) — this form
-    re-evaluates both self-norms for every joined pair.
-    """
-    a, b = _as_double(a), _as_double(b)
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def _topk(joined: DataFrame, sim: Column, k: int, round_to: int | None) -> DataFrame:
@@ -287,77 +273,6 @@ def ivf_ann_topk(
     return _topk(joined, sim, k, round_to)
 
 
-def embedding_dedup_ann(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[float]],
-    threshold: float = 0.95,
-    n_probe: int = 2,
-) -> DataFrame:
-    """Corpus-scale embedding near-dup dedup — the production shape the
-    bounded all-pairs query (``dedup_embedding_cosine``) documents:
-    IVF cells generate the candidate pairs, an exact cosine verifies
-    them, and every vector with a smaller-id neighbor >= ``threshold``
-    is dropped (min-id survivor, no transitive chaining). Returns the
-    surviving rows' ``(id, cell)``.
-
-    Candidate generation is cell-local: each vector's ``n_probe``
-    nearest cells (probe side, exploded — n_probe rows per vector)
-    equi-join the corpus's primary-cell table on the cell id, so
-    candidate mass is sum over cells of |probers into cell| x |cell| —
-    never n^2 — and the exact cosine runs only on candidates. BOTH
-    probe directions count: the join keeps ``id_a != id_b`` and marks
-    ``greatest(id_a, id_b)`` as the duplicate, so a boundary pair is
-    caught when EITHER vector probes the other's primary cell (an
-    ``id_a < id_b`` candidate filter would silently halve boundary
-    recall — only the direction where the smaller id does the probing
-    would survive). Residual misses need both directions to fail —
-    the standard IVF recall contract; exact parity vs the all-pairs
-    form is asserted on planted near-dups in tests. Degenerate inputs
-    (thousands of identical vectors) belong to exact dedup first,
-    which groups them in one hash shuffle; cell balance is the
-    quantizer's job (re-fit when the corpus drifts).
-    """
-    from .clustering import assign_clusters_table, nearest_cells_table
-
-    cdf = _centroids_frame(df.sparkSession, centroids)
-    c = assign_clusters_table(
-        df.select(
-            F.col(id_col).alias("_idb"),
-            _as_double(F.col(vec_col)).alias("_bv"),
-            vnorm(F.col(vec_col)).alias("_bn"),
-        ),
-        "_bv",
-        cdf,
-    ).withColumnRenamed("cluster", "_cell")
-    a_base = df.select(
-        F.col(id_col).alias("_ida"),
-        _as_double(F.col(vec_col)).alias("_av"),
-        vnorm(F.col(vec_col)).alias("_an"),
-    )
-    a = nearest_cells_table(a_base, "_av", cdf, n_probe).select(
-        "_ida",
-        F.explode("_probe_cells").alias("_pcell"),
-        "_av",
-        "_an",
-    )
-    sim = _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn"))
-    dup_ids = (
-        a.join(
-            c,
-            (F.col("_pcell") == F.col("_cell")) & (F.col("_ida") != F.col("_idb")),
-        )
-        .filter(sim >= threshold)
-        .select(F.greatest(F.col("_ida"), F.col("_idb")).alias(id_col))
-        .distinct()
-    )
-    return (
-        c.select(F.col("_idb").alias(id_col), F.col("_cell").alias("cell"))
-        .join(dup_ids, id_col, "left_anti")
-    )
-
-
 def semantic_dedup(
     df: DataFrame,
     id_col: str,
@@ -382,9 +297,7 @@ def semantic_dedup(
     a~b~c with a !~ c drops both b and c). Pairs never cross cells —
     that is the scheme's scalability contract AND its documented
     recall limit (a boundary pair split across cells survives; the
-    paper accepts this, unlike :func:`embedding_dedup_ann`'s n_probe
-    recovery — use that operator when cross-cell recall matters more
-    than the keep-order semantics).
+    paper accepts this).
 
     Keep order follows the paper's finding that keeping the examples
     FARTHEST from the centroid works best: rank within a cell by
@@ -441,12 +354,11 @@ def semantic_dedup(
 
 
 def _centroids_frame(spark, centroids: "list[list[float]]") -> DataFrame:
-    """The k-row ``(cell, centroid)`` model-state frame every
-    persisted quantizer writes (IvfIndex.build, SemanticStore.
-    bootstrap), built via the ARROW local path: a pandas input
-    converts driver-side to Arrow batches and lands as a JVM
-    LocalRelation — no pickled partitions and no Python workers at
-    execution. The tuple-list ``createDataFrame`` form spreads the
+    """The k-row ``(cell, centroid)`` model-state frame (the one
+    :meth:`IvfIndex.build` persists), built via the ARROW local path:
+    a pandas input converts driver-side to Arrow batches and lands as
+    a JVM LocalRelation — no pickled partitions and no Python workers
+    at execution. The tuple-list ``createDataFrame`` form spreads the
     rows over defaultParallelism pickled partitions instead, and its
     write measured 0.57–1.7 s against 0.25–0.31 s here for the same
     8 rows (value-identical output; BASELINE.md round-13 notes) —
@@ -508,9 +420,8 @@ def _observe_cell_stats(ranked: DataFrame, observation: "Observation") -> None:
 
 
 def _checked_embedding(vec_col: str, dim: int, context: str) -> Column:
-    """Per-row vector-validity guard shared by the persistent stores
-    (IvfIndex.append, SemanticStore.bootstrap/ingest): counting
-    NON-NULL elements against the quantizer dim rejects BOTH a
+    """Per-row vector-validity guard of :meth:`IvfIndex.append`:
+    counting NON-NULL elements against the quantizer dim rejects BOTH a
     wrong-length vector and a right-length one carrying NULL elements
     (an upstream outer join's classic residue) — either would
     null-poison the zip_with distances into a meaningless cell and
@@ -549,33 +460,24 @@ def _semantic_ranked(
     centroids: "list[list[float]] | DataFrame",
     round_to: int | None,
     dist_round_to: int | None,
-    expect_dim: int | None = None,
-    guard_context: str = "",
 ) -> DataFrame:
-    """SemDeDup's assignment+rank stage, shared by the batch operator
-    and SemanticStore (which must run it exactly once per ingest):
-    returns the PINNED ``(_id, _v, _n, cell, _csim, _rank)`` frame.
-    Pinned because it feeds both self-join sides and the annotation
-    spine, whose pruned ReadSchemas differ — structurally different
-    subtrees, so ReuseExchange never fires and the scan -> assignment
-    (k distance folds) -> cosine -> window tree would execute three
-    times (measured: 3 scans, 2 window executions, 0 reuses at the
-    bench SF; ~2x wall clock). One row per vector, input-proportional
-    — the same trade as every pair-stage pin in this repo; the
-    joined centroid columns are dropped BEFORE the pin so high
-    dims don't double the cache bytes. ``expect_dim`` arms the
-    per-row :func:`_checked_embedding` guard (store callers)."""
+    """SemDeDup's assignment+rank stage: returns the PINNED
+    ``(_id, _v, _n, cell, _csim, _rank)`` frame. Pinned because it feeds both
+    self-join sides and the annotation spine, whose pruned
+    ReadSchemas differ — structurally different subtrees, so
+    ReuseExchange never fires and the scan -> assignment (k distance
+    folds) -> cosine -> window tree would execute three times
+    (measured: 3 scans, 2 window executions, 0 reuses at the bench
+    SF; ~2x wall clock). One row per vector, input-proportional —
+    the same trade as every pair-stage pin in this repo; the joined
+    centroid columns are dropped BEFORE the pin so high dims don't
+    double the cache bytes."""
     from .caching import pin
     from .clustering import assign_clusters_table
 
-    vec = (
-        _checked_embedding(vec_col, expect_dim, guard_context)
-        if expect_dim is not None
-        else _as_double(F.col(vec_col))
-    )
     base = df.select(
         F.col(id_col).alias("_id"),
-        vec.alias("_v"),
+        _as_double(F.col(vec_col)).alias("_v"),
         vnorm(F.col(vec_col)).alias("_n"),
     )
     if not isinstance(centroids, DataFrame):
@@ -668,27 +570,22 @@ def _semantic_annotate(
     )
 
 
-class IvfIndex(_ParquetStore):
+class IvfIndex:
     """Persisted IVF index — the build-once / probe-many deployment of
     :func:`ivf_ann_topk`: the fitted corpus (one row per vector:
     id, cast vector, precomputed norm, assigned cell) lives as parquet
-    PARTITIONED BY CELL at ``{base}/index`` (``path`` — the inherited
-    ``_ParquetStore`` machinery points there; ``compact()`` keeps the
-    cell layout), and the centroids (model state, k x dims doubles)
-    live beside it as a tiny parquet at ``{base}/centroids``. Each
-    probe batch then
-    reads only the probed cells: the batch's cell set is collected
-    (bounded by k) and STATICALLY prunes the partitioned scan — see
-    :meth:`probe` for why dynamic partition pruning is not relied on
-    (measured: it never fired on bare batches) — so a batch probing
-    m of k cells reads ~m/k of the index bytes, asserted on the
-    executed scan's own metrics in tests. Rebuild
-    the index when the corpus drifts (centroid fit is a batch job, the
-    same cadence as any ANN index rebuild).
+    PARTITIONED BY CELL at ``path`` (``{base}/index``; :meth:`compact`
+    keeps the cell layout), and the centroids (model state, k x dims
+    doubles) live beside it as a tiny parquet at ``{base}/centroids``.
+    Each probe batch then reads only the probed cells: the batch's
+    cell set is collected (bounded by k) and STATICALLY prunes the
+    partitioned scan — see :meth:`probe` for why dynamic partition
+    pruning is not relied on (measured: it never fired on bare
+    batches) — so a batch probing m of k cells reads ~m/k of the index
+    bytes, asserted on the executed scan's own metrics in tests.
+    Rebuild the index when the corpus drifts (centroid fit is a batch
+    job, the same cadence as any ANN index rebuild).
     """
-
-    _bootstrap_hint = "build(corpus)"
-    _partition_cols = ("cell",)  # compact() must keep the cell layout
 
     def __init__(
         self,
@@ -697,10 +594,74 @@ class IvfIndex(_ParquetStore):
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        super().__init__(spark, f"{path.rstrip('/')}/index")
+        self.spark = spark
         self.base = path.rstrip("/")
+        self.path = f"{self.base}/index"
         self.id_col = id_col
         self.vec_col = vec_col
+
+    def exists(self) -> bool:
+        """True iff the index table exists at ``path``.
+
+        Only a genuinely-missing path maps to False. Any OTHER failure
+        (transient IO, permissions, a momentarily unreachable object
+        store) propagates: conflating it with "never built" would make
+        :meth:`append`'s fail-fast guard advise calling build() — whose
+        mode("overwrite") would destroy a live index — on an index
+        that merely hiccuped.
+        """
+        from pyspark.errors import AnalysisException
+
+        try:
+            self.spark.read.parquet(self.path).schema
+            return True
+        except AnalysisException as e:
+            if "PATH_NOT_FOUND" in str(e):
+                return False
+            raise
+
+    def read(self) -> DataFrame:
+        return read_parquet_cached(self.spark, self.path)
+
+    def compact(self, num_files: int | None = None) -> None:
+        """Rewrite the index into ``num_files`` parquet files (default:
+        the session's default parallelism) — the offline maintenance
+        pass for ingest cadences where one appended file-set per day
+        makes small files dominate the scan. Content is append-only,
+        so compaction is rewrite-identical; the rewrite lands in a
+        sibling temp dir and swaps in via the Hadoop FileSystem API
+        (works on any scheme the session can reach). Run between
+        appends, not concurrently with one.
+
+        The rewrite clusters by ``cell`` and writes partitionBy it: a
+        flat rewrite would demote the partition column to data,
+        silently lose partition pruning, and make the NEXT partitioned
+        append produce Spark's 'Conflicting directory structures'
+        failure on read."""
+        sc = self.spark.sparkContext
+        n = num_files or sc.defaultParallelism
+        tmp = self.path + "__compact_tmp"
+        old = self.path + "__compact_old"
+        (
+            self.read()
+            .repartition(n, "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(tmp)
+        )
+        hpath = sc._jvm.org.apache.hadoop.fs.Path
+        fs = hpath(self.path).getFileSystem(sc._jsc.hadoopConfiguration())
+        # staged swap, no delete-before-rename: a crash between the two
+        # renames leaves the data intact at __compact_old (manual
+        # recovery: rename it back); the index is never deleted while
+        # it is the only copy
+        fs.delete(hpath(old), True)
+        if not fs.rename(hpath(self.path), hpath(old)):
+            raise IOError(f"compaction stage-out failed: {self.path} -> {old}")
+        if not fs.rename(hpath(tmp), hpath(self.path)):
+            fs.rename(hpath(old), hpath(self.path))  # roll back
+            raise IOError(f"compaction swap failed: {tmp} -> {self.path}")
+        fs.delete(hpath(old), True)
 
     def build(
         self,
@@ -791,11 +752,9 @@ class IvfIndex(_ParquetStore):
         return [list(r["centroid"]) for r in rows]
 
     def append(self, new_vectors: DataFrame) -> None:
-        """Grow the index WITHOUT refitting — the daily-ingest shape of
-        the persisted-index family (``SignatureStore.ingest`` for
-        minhash, ``WindowStore`` for substring windows): the quantizer
-        is model state fitted at build time, so new vectors are
-        assigned to the EXISTING cells (one codegen projection, no
+        """Grow the index WITHOUT refitting — the daily-ingest shape:
+        the quantizer is model state fitted at build time, so new
+        vectors are assigned to the EXISTING cells (one codegen projection, no
         shuffle beyond the partitioned write) and appended to the
         cell-partitioned parquet. The existing index is never
         re-scanned or re-written — an append touches only the new
@@ -806,7 +765,7 @@ class IvfIndex(_ParquetStore):
         observable (a cell absorbing a disproportionate share of
         appends means the Voronoi tessellation no longer fits the
         data and probe candidate mass is skewing). An index that was
-        never built raises the store family's ``FileNotFoundError``.
+        never built raises ``FileNotFoundError``.
 
         Every appended vector is validated against the stored
         quantizer IN the assignment projection (a per-row
@@ -818,7 +777,15 @@ class IvfIndex(_ParquetStore):
         cell. A sampled pre-check can't catch a mixed batch; the
         inline guard fails the job before the parquet commit, so a
         bad batch leaves the index untouched."""
-        self._require_bootstrapped()
+        if not self.exists():
+            # Fail HERE, not as a path-not-found AnalysisException from
+            # a lazy read deep inside the write — appending to a
+            # never-built index is a caller setup error with an obvious
+            # fix.
+            raise FileNotFoundError(
+                f"IvfIndex at {self.path!r} has no table yet; "
+                "call build(corpus) first"
+            )
         from .clustering import assign_clusters_table
 
         # assignment via the centroid TABLE the index already persists
@@ -864,9 +831,8 @@ class IvfIndex(_ParquetStore):
         ~8 B x dims each); unhinted, a bad estimate could shuffle the
         INDEX instead. A probe batch must therefore fit a broadcast
         (tens of MB = ~100k queries at 64 dims); for corpus-sized
-        "probes" use :func:`embedding_dedup_ann` (all-vs-index dedup)
-        — or chunk the batch and union, which is exact since per-query
-        top-k is independent across chunks.
+        "probes" chunk the batch and union, which is exact since
+        per-query top-k is independent across chunks.
 
         Partition pruning is STATIC, not dynamic: the batch's probed
         cells are collected (a bounded model-state-class collect —
@@ -948,9 +914,9 @@ def bucketed_ann_topk(
     fine; a corpus-sized query side is not. Callers probing with
     something corpus-sized are computing all-pairs similarity and
     want :func:`~git_log_to_sqlite_spark.plans.similarity` 's
-    threshold-pair shape or :func:`embedding_dedup_ann` instead;
-    otherwise chunk the probe batch and union the results — top-k per
-    query is independent across chunks, so chunking is exact."""
+    threshold-pair shape instead; otherwise chunk the probe batch and
+    union the results — top-k per query is independent across chunks,
+    so chunking is exact."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(bucket_col).alias("_qb"),
@@ -968,257 +934,3 @@ def bucketed_ann_topk(
         c, (F.col("_qb") == F.col("_cb")) & (F.col("query_id") != F.col("neighbor_id"))
     )
     return _topk(joined, sim, k, round_to)
-
-
-
-class SemanticStore(_ParquetStore):
-    """Persisted KEPT-set for incremental SemDeDup — the embedding
-    modality's daily-ingest store, completing the per-modality family
-    (:class:`~git_log_to_sqlite_spark.operators.dedup.SignatureStore`
-    for minhash, ``WindowStore`` for substring windows,
-    ``HammingStore`` for <= 60-bit signatures, :class:`IvfIndex` for
-    ANN): the kept corpus's ``(id, vector, norm, cell)`` table lives
-    as parquet PARTITIONED BY CELL (``{base}/kept`` — the inherited
-    ``_ParquetStore`` machinery points there; ``compact()`` included)
-    beside the quantizer's centroid table (``{base}/centroids``),
-    each day's batch is annotated against it, and only the batch's
-    novel (kept) rows append — history is never re-embedded,
-    re-assigned, or self-joined, so daily growth costs O(increment x
-    probed-cell mass). Every incoming vector passes the per-row
-    :func:`_checked_embedding` guard (the IvfIndex.append contract):
-    a wrong-dim or null-element vector fails the job before any
-    parquet commit instead of silently poisoning the kept table.
-
-    Priority semantics — the family's first-seen-wins contract, which
-    REPLACES batch-mode :func:`semantic_dedup`'s global
-    centroid_sim rank (an arrival-order priority is the only one an
-    append-only store can honor; the same documented divergence as
-    ``incremental_minhash_dedup`` vs global minhash):
-
-    * a batch row within ``threshold`` of a STORED kept row drops,
-      blaming the most-similar stored row (ties to the smaller id —
-      min over (-sim, id) structs, deterministic);
-    * otherwise the batch-INTERNAL upper-triangular rule applies
-      (the shared :func:`_semantic_annotate` stage over the SAME
-      ranked frame the history probe uses — the batch is scanned and
-      assigned exactly once per ingest): a row similar to an
-      earlier-ranked batch row drops blaming it — even when that
-      earlier row itself dropped against history (the
-      kept-or-itself-dropped rule, so a batch that arrives with its
-      own near-copies of a historical item resolves them all in one
-      ingest);
-    * history blame WINS when both apply.
-
-    Flagged rows' vectors are never appended; like every sibling
-    store, the returned annotation is checkpointed BEFORE the append
-    so it can never lazily re-read the store post-append, and every
-    internal pin lives in a cache_scope (bootstrap included — the
-    ranked frame is corpus-sized there)."""
-
-    _bootstrap_hint = "bootstrap(corpus, centroids)"
-    _partition_cols = ("cell",)  # compact() must keep the cell layout
-
-    def __init__(
-        self,
-        spark,
-        path: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        threshold: float = 0.95,
-        round_to: int | None = None,
-        dist_round_to: int | None = None,
-    ) -> None:
-        super().__init__(spark, f"{path.rstrip('/')}/kept")
-        self.base = path.rstrip("/")
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.threshold = threshold
-        self.round_to = round_to
-        self.dist_round_to = dist_round_to
-        self._dim_cache: int | None = None
-
-    def centroids_df(self) -> DataFrame:
-        return read_parquet_cached(self.spark, f"{self.base}/centroids")
-
-    def _dim(self) -> int:
-        # memoized: the quantizer dim is immutable between bootstraps
-        # (append-only kept table, centroids written once), so one
-        # k-row parquet read per store LIFETIME, not one per ingest.
-        # Single-writer contract (the whole store family's): a
-        # re-bootstrap through ANOTHER handle/process invalidates this
-        # handle entirely (threshold/rounding config could differ
-        # too, and its in-flight ingest would race the overwrite) —
-        # open a fresh SemanticStore after any external re-bootstrap.
-        if self._dim_cache is None:
-            self._dim_cache = (
-                self.centroids_df().select(F.size("centroid")).first()[0]
-            )
-        return self._dim_cache
-
-    def bootstrap(
-        self,
-        corpus: DataFrame,
-        centroids: "list[list[float]] | DataFrame",
-        observation: "Observation | None" = None,
-    ) -> None:
-        """Initialize (overwrite) the store: run batch SemDeDup on
-        ``corpus`` under ``centroids`` (the fitted quantizer — list or
-        ``(cell, centroid)`` table) and persist the KEPT rows'
-        ``(id, vector, norm, cell)`` plus the centroid table. The
-        bootstrap corpus itself gets the paper's centroid-rank
-        priority; arrival order takes over from the first ingest.
-        ``observation`` arms :func:`_observe_cell_stats` over the
-        corpus-sized ranked frame — the store path's mega-cell valve
-        (bootstrap is where the |corpus|^2/2 degenerate risk lives)."""
-        from .caching import cache_scope
-
-        self._dim_cache = None  # new quantizer → re-read the dim
-        if not isinstance(centroids, DataFrame):
-            cdf = _centroids_frame(self.spark, centroids)
-        else:
-            cdf = centroids
-        cdf.write.mode("overwrite").parquet(f"{self.base}/centroids")
-        with cache_scope():
-            ranked = _semantic_ranked(
-                corpus, self.id_col, self.vec_col, self.centroids_df(),
-                self.round_to, self.dist_round_to,
-                expect_dim=self._dim(),
-                guard_context=f"SemanticStore.bootstrap at {self.base}",
-            )
-            if observation is not None:
-                _observe_cell_stats(ranked, observation)
-            kept_ids = _semantic_annotate(
-                ranked, self.id_col, self.threshold, self.round_to
-            ).filter(F.col("is_kept") == 1).select(self.id_col)
-            (
-                ranked.select(
-                    F.col("_id").alias(self.id_col), "_v", "_n", "cell"
-                )
-                .join(kept_ids, self.id_col)
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(self.path)
-            )
-
-    def _probed_store_side(self, ranked: DataFrame) -> DataFrame:
-        """The kept table as the history-probe join's store side,
-        STATICALLY pruned to the batch's occupied cells: the cell set
-        is collected off the PINNED ranked frame (bounded — at most k
-        ints, model-state class) and reaches the cell-partitioned
-        kept scan as an ``isin`` partition filter. Spark's dynamic
-        partition pruning does NOT cover this join — its insertion
-        rule wants a selective predicate on the batch side, which a
-        checkpointed/pinned frame never has: measured at sf0.1, a
-        one-cell batch scanned all 8 kept partitions (2,000 rows)
-        before this filter, 1 partition after (round 14,
-        BASELINE.md). A backfill-scale batch occupying every cell
-        degrades gracefully (the filter passes all partitions)."""
-        probed = sorted(
-            r["cell"] for r in ranked.select("cell").distinct().collect()
-        )
-        return (
-            self.read()
-            .select(
-                F.col(self.id_col).alias("_hid"),
-                F.col("_v").alias("_hv"),
-                F.col("_n").alias("_hn"),
-                "cell",
-            )
-            .filter(F.col("cell").isin(probed))
-        )
-
-    def ingest(
-        self, batch: DataFrame, observation: "Observation | None" = None
-    ) -> DataFrame:
-        """Annotate ``batch`` against the store and append its kept
-        rows. Returns the materialized ``(id, cell, centroid_sim,
-        dup_of, dup_source, is_kept)`` — ``dup_source`` is 'history'
-        or 'batch' (NULL when kept), the audit column telling a
-        curation pipeline whether a drop was cross-day or intra-day.
-
-        Plan shape: the batch (daily increment, small) is scanned and
-        quantizer-assigned EXACTLY ONCE into the pinned ranked frame,
-        which feeds both the history probe (broadcast BY ESTIMATE into
-        the kept table's cell-partitioned scan while the batch is
-        small — candidate mass is sum over probed cells of
-        |batch cell| x |kept cell|, the store never self-joins,
-        unprobed cell partitions prune STATICALLY via the batch's
-        collected cell set (see the in-body note: DPP skips this
-        join shape); a backfill-scale batch
-        degrades to a shuffled cell join instead of a broadcast
-        cliff) and the batch-internal annotate stage. Cache hygiene mirrors
-        every sibling ingest: pins in a cache_scope, annotation
-        checkpointed before the append. ``observation`` arms
-        :func:`_observe_cell_stats` over the batch's ranked frame —
-        a skewed BATCH (all of today's vectors landing in one cell)
-        multiplies the history probe's candidate mass by that cell's
-        kept membership, and the batch-side occupancy is the early
-        signal a pipeline can alert on without scanning the store."""
-        from .caching import cache_scope
-
-        self._require_bootstrapped()
-        with cache_scope():
-            ranked = _semantic_ranked(
-                batch, self.id_col, self.vec_col, self.centroids_df(),
-                self.round_to, self.dist_round_to,
-                expect_dim=self._dim(),
-                guard_context=f"SemanticStore.ingest at {self.base}",
-            )
-            if observation is not None:
-                _observe_cell_stats(ranked, observation)
-            s = self._probed_store_side(ranked)
-            pden = F.col("_n") * F.col("_hn")
-            sim = F.when(
-                pden > 0, _dot(F.col("_v"), F.col("_hv")) / pden
-            ).otherwise(F.lit(float("-inf")))
-            if self.round_to is not None:
-                sim = F.round(sim, self.round_to)
-            # deliberately UNHINTED (the jaccard hot-set-join
-            # doctrine): the pinned ranked frame gives the planner an
-            # accurate size, so a daily-increment batch broadcasts
-            # into the statically cell-pruned kept scan
-            # (_probed_store_side), while a backfill-scale batch
-            # degrades to a shuffled cell join instead of hitting the
-            # 8 GB broadcast cliff a hard hint would force
-            probe = ranked.select("_id", "_v", "_n", "cell")
-            joined = probe.join(s, "cell")
-            hist = (
-                joined.filter(sim >= F.lit(self.threshold))
-                .groupBy(F.col("_id").alias(self.id_col))
-                .agg(
-                    F.min(
-                        F.struct((-sim).alias("ns"), F.col("_hid").alias("i"))
-                    )["i"].alias("_hist_dup")
-                )
-            )
-            ann_b = _semantic_annotate(
-                ranked, self.id_col, self.threshold, self.round_to
-            ).withColumnRenamed("dup_of", "_batch_dup")
-            dup_of = F.coalesce(F.col("_hist_dup"), F.col("_batch_dup"))
-            res = (
-                ann_b.join(hist, self.id_col, "left")
-                .select(
-                    self.id_col,
-                    "cell",
-                    "centroid_sim",
-                    dup_of.alias("dup_of"),
-                    F.when(F.col("_hist_dup").isNotNull(), F.lit("history"))
-                    .when(F.col("_batch_dup").isNotNull(), F.lit("batch"))
-                    .alias("dup_source"),
-                    dup_of.isNull().cast("int").alias("is_kept"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            (
-                ranked.select(
-                    F.col("_id").alias(self.id_col), "_v", "_n", "cell"
-                )
-                .join(
-                    res.filter(F.col("is_kept") == 1).select(self.id_col),
-                    self.id_col,
-                )
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(self.path)
-            )
-        return res

@@ -1,15 +1,11 @@
-"""Skew mitigation: salted two-phase aggregation and salted joins.
+"""Skew mitigation: salted two-phase aggregation.
 
 AQE's skew-join splitting (on by default in session.py) handles most
-skew at runtime by splitting oversized shuffle partitions. These
-operators cover the cases AQE cannot fix:
-
-* a single hot GROUP BY key whose partial aggregate still lands on one
-  reducer — ``salted_aggregate`` splits each key across B sub-keys and
-  recombines, so the hot key's work spreads over B tasks;
-* a hot join key against a small-but-not-broadcastable dimension —
-  ``salted_join`` replicates the small side B ways so the hot key's
-  fact rows spread over B tasks.
+skew at runtime by splitting oversized shuffle partitions. This module
+covers the case AQE cannot fix: a single hot GROUP BY key whose
+partial aggregate still lands on one reducer — ``salted_aggregate``
+splits each key across B sub-keys and recombines, so the hot key's
+work spreads over B tasks.
 
 Pair joins (the LSH band self/probe joins, the SemDeDup cell join) are
 not salted: their defence against a hot bucket is the hot-key valve in
@@ -73,36 +69,6 @@ def salted_aggregate(
             for name, (op, _c) in aggs.items()
         ]
     )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    fact_unique: str,
-    buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the fact side salted and the dim side replicated.
-
-    Each fact row gets a deterministic salt in [0, B); the dim side is
-    exploded B ways so every (key, salt) pair exists. The shuffle key
-    becomes (on, salt): a hot key's rows land on B reducers instead of
-    one. Dim cost: B x |dim| rows — use only when the dim is too big to
-    broadcast but B x |dim| still shuffles comfortably.
-
-    Deliberately NOT co-partition-pinned: AQE's rewrites are
-    benign-to-good here. A broadcast conversion of the replicated dim
-    turns the join map-side over the fact's EXISTING partitioning — no
-    fact shuffle at all, strictly better than any salt; and partition
-    coalescing only fires when the fact side's shuffle bytes are small,
-    in which case per-row join work is linear (one dim row per key).
-    """
-    f = fact.withColumn("_salt", _salt(F.col(fact_unique), buckets))
-    d = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>"))
-    )
-    return f.join(d, [on, "_salt"], how).drop("_salt")
 
 
 def _quantile_cap(d_values: DataFrame, q: float) -> DataFrame:

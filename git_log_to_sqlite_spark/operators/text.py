@@ -118,7 +118,7 @@ except Exception:  # pragma: no cover - environment-dependent
     HAS_TOKENIZER = False
 
 #: default subword counter — real when tiktoken is importable, stub
-#: otherwise (the multimodal ``decode_image`` convention)
+#: otherwise (the multimodal ``luma_grid`` convention)
 count_subword_tokens: Callable[[str | None], int] = (
     _count_subword_tiktoken if HAS_TOKENIZER else _count_subword_stub
 )

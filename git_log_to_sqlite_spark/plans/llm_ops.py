@@ -48,8 +48,7 @@ _SQL_SHINGLES = """
     doc="Exact dedup: hash-groupBy on content, deterministic survivor "
     "(min id). One shuffle on the 128-bit fingerprint; at 100 TB "
     "group on the hash, never the raw text (shuffle carries 32 bytes "
-    "per row, not the document). operators.dedup.exact_dedup is the "
-    "general API.",
+    "per row, not the document).",
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -241,9 +240,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Incremental exact-substring dedup (operators.dedup."
     "incremental_substring_spans): the daily batch's passages probed "
-    "against accumulated history — history is never self-joined and, "
-    "with a persisted window_table, never re-tokenized (the substring "
-    "analog of the minhash SignatureStore contract). The occurrence "
+    "against accumulated history — history is never self-joined (the "
+    "substring analog of incremental_minhash_dedup). The occurrence "
     "spread guard derives from the HISTORY side only and anti-filters "
     "it before the probe join, bounding per-window candidates by "
     "|increment occurrences| x cap; exact cross-split gaps-and-"
@@ -805,7 +803,7 @@ _VIDEO_FRAME_BYTES = 64
 def _mm_video_oracle(fb: int = _VIDEO_FRAME_BYTES) -> str:
     """DuckDB twin of ``mm_video_near_dup``: frame f of a payload of
     length L is the slice [f*fb, (f+1)*fb) (max(1, L // fb) full
-    frames, the sample_frames convention; a short payload is its own
+    frames, video_frame_dhash's convention; a short payload is its own
     single frame), the stub grid cycles each slice, per-frame dHash
     bits vote by strict majority per bit position, and the pair stage
     brute-forces the clip signatures."""
@@ -850,7 +848,7 @@ def _mm_video_oracle(fb: int = _VIDEO_FRAME_BYTES) -> str:
     "mm_video_near_dup",
     oracle=_mm_video_oracle(),
     doc="Video near-duplicate pairs end-to-end: payloads slice into "
-    "byte-range frames (sample_frames' convention), per-frame dHash "
+    "byte-range frames (video_frame_dhash's convention), per-frame dHash "
     "over the stub grid seam, clip signature by distributed bitwise "
     "majority vote (60 map-combinable sums, one shuffle row per clip "
     "per partition), pairs via the shared hamming_pairs band stage — "

@@ -253,13 +253,51 @@ def _repo_with_commit(path):
 
 
 def _cli(spark, *argv):
-    """Run the CLI's ``main`` in this process, on the test session.
-    ``-n`` is the session's own shuffle-partition count, so the settings
-    the CLI applies leave the shared session as it found them."""
+    """Run the CLI's ``main`` in this process. ``main`` runs on the
+    active session, so taking ``spark`` here keeps it the test's
+    session."""
     from git_log_to_sqlite_spark.__main__ import main
 
-    n = spark.conf.get("spark.sql.shuffle.partitions")
-    assert main([*argv, "--num-threads", n]) == 0
+    assert main(list(argv)) == 0
+
+
+def test_cli_in_process_leaves_the_session_settings(spark, tmp_path):
+    """``main`` run inside a process that already has a session uses
+    that session as it finds it: a ``-n`` different from the session's
+    partition count and a non-UTC session time zone both survive the
+    run, and the stored commit time is still the commit's epoch."""
+    import sqlite3
+    import subprocess
+
+    repo = tmp_path / "root" / "proj"
+    _repo_with_commit(repo)
+    epoch = int(
+        subprocess.run(
+            ("git", "-C", str(repo), "log", "-1", "--format=%at"),
+            capture_output=True, text=True, check=True,
+        ).stdout
+    )
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    db = tmp_path / "out.db"
+    try:
+        _cli(spark, str(tmp_path / "root"), "-r", "-d", str(db), "-n", "3")
+        after = {k: spark.conf.get(k) for k in keys}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert after == {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.session.timeZone": "Asia/Kolkata",
+    }
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute("SELECT commit_datetime FROM logs").fetchall()
+    finally:
+        con.close()
+    assert rows == [(epoch,)]
 
 
 def test_cli_repo_names_spark_would_skip_or_encode(spark, tmp_path, capsys):

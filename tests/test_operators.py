@@ -15,20 +15,13 @@ from git_log_to_sqlite_spark.operators import (
     asof_join,
     brute_force_topk,
     bucketed_ann_topk,
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     ordered_row_number,
     ordered_running_sum,
     simhash,
 )
-from git_log_to_sqlite_spark.operators.multimodal import (
-    HAS_PIL,
-    _decode_image_stub,
-    as_media,
-    extract_image_features,
-    sample_frames,
-)
+from git_log_to_sqlite_spark.operators.multimodal import HAS_PIL, as_media
 
 
 @pytest.fixture(scope="module")
@@ -42,22 +35,6 @@ def docs(spark):
         (6, "short doc"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup_survivor_and_counts(docs):
-    out = exact_dedup(docs, ["text"], "doc_id").collect()
-    by_id = {r["doc_id"]: r for r in out}
-    assert 1 in by_id and 2 not in by_id  # min-id survivor
-    assert by_id[1]["n_copies"] == 2
-    assert len(out) == 5
-
-
-def test_exact_dedup_idempotent(docs):
-    once = exact_dedup(docs, ["text"], "doc_id")
-    twice = exact_dedup(once.select("doc_id", "text"), ["text"], "doc_id")
-    assert sorted(r["doc_id"] for r in twice.collect()) == sorted(
-        r["doc_id"] for r in once.collect()
-    )
 
 
 def test_ngram_jaccard_finds_near_dups(docs):
@@ -696,19 +673,18 @@ def test_banding_validation_precedes_pins(spark):
         assert _LIVE == []
 
 
-def test_signature_store_exists_distinguishes_missing_from_broken(spark, tmp_path):
+def test_ivf_index_exists_distinguishes_missing_from_broken(spark, tmp_path):
     """exists() maps ONLY a missing path to False; any other failure
-    (here: an existing directory that is not a parquet table, standing
-    in for transient IO) propagates — returning False would make
-    ingest()'s guard advise a destructive re-bootstrap of a live
-    store."""
-    from git_log_to_sqlite_spark.operators import SignatureStore
+    (here: an existing index directory that is not a parquet table,
+    standing in for transient IO) propagates — returning False would
+    make append()'s guard advise a destructive re-build of a live
+    index."""
+    from git_log_to_sqlite_spark.operators import IvfIndex
 
-    missing = SignatureStore(spark, str(tmp_path / "nope"))
+    missing = IvfIndex(spark, str(tmp_path / "nope"))
     assert not missing.exists()
-    broken_dir = tmp_path / "broken"
-    broken_dir.mkdir()
-    broken = SignatureStore(spark, str(broken_dir))
+    broken = IvfIndex(spark, str(tmp_path / "broken"))
+    (tmp_path / "broken" / "index").mkdir(parents=True)
     with pytest.raises(Exception, match="(?i)unable_to_infer|schema"):
         broken.exists()
 
@@ -750,52 +726,6 @@ def test_incremental_substring_matches_batch_cross_split(spark, oracle_sf_dir):
         ).collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_incremental_substring_persisted_window_table(spark, oracle_sf_dir, tmp_path):
-    """The production path: history's window_table persisted as
-    parquet and passed via history_windows must reproduce the
-    derived-from-text result exactly — history text never
-    re-tokenized. Also pins the validation errors."""
-    from git_log_to_sqlite_spark.operators import (
-        incremental_substring_spans,
-        window_table,
-    )
-
-    d = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    history = d.filter(F.col("doc_id") % 5 != 0)
-    increment = d.filter(F.col("doc_id") % 5 == 0)
-    path = str(tmp_path / "hist_windows")
-    window_table(history, "doc_id", "text", 6).write.parquet(path)
-    stored = spark.read.parquet(path)
-    from_text = {
-        tuple(r)
-        for r in incremental_substring_spans(
-            history, increment, "doc_id", "text",
-            window=6, min_run_tokens=12, max_df_quantile=0.92,
-        ).collect()
-    }
-    from_store = {
-        tuple(r)
-        for r in incremental_substring_spans(
-            None, increment, "doc_id", "text",
-            window=6, min_run_tokens=12, max_df_quantile=0.92,
-            history_windows=stored,
-        ).collect()
-    }
-    assert from_store == from_text and len(from_text) > 0
-
-    with pytest.raises(ValueError, match="exactly one of"):
-        incremental_substring_spans(
-            history, increment, "doc_id", "text", history_windows=stored
-        )
-    with pytest.raises(ValueError, match="missing columns"):
-        incremental_substring_spans(
-            None, increment, "doc_id", "text",
-            history_windows=stored.drop("pos"),
-        )
 
 
 def test_incremental_substring_history_valve(spark):
@@ -984,51 +914,6 @@ def test_ivf_ann_recall_on_clustered_data(clustered_vectors):
     assert again == iv
 
 
-def test_embedding_dedup_ann_matches_all_pairs(spark, clustered_vectors):
-    """The ANN-fed dedup must reproduce the exact all-pairs min-id
-    survivor set on planted near-dups: doubled vectors (cosine ~1 with
-    their twin) are dropped, everything else survives — candidate
-    generation through IVF cells may only change COST, not the result,
-    on data where near-dups are genuinely close."""
-    from git_log_to_sqlite_spark.operators import embedding_dedup_ann, kmeans
-
-    base = clustered_vectors  # 100 well-separated vectors in 4 clusters
-    twins = base.filter(F.col("vec_id") % 3 == 0).select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.0001)).alias("embedding"),
-        "cluster",
-    )
-    corpus = base.unionByName(twins)
-    fit = corpus.withColumn("kid", (F.col("vec_id") % 25) * 4 + F.col("cluster"))
-    _, centroids = kmeans(fit, "kid", "embedding", k=4, max_iter=10)
-
-    got = {
-        r["vec_id"]
-        for r in embedding_dedup_ann(
-            corpus, "vec_id", "embedding", centroids, threshold=0.95, n_probe=2
-        ).collect()
-    }
-    # exact all-pairs reference (driver-side: 134 vectors)
-    import math
-
-    rows = {r["vec_id"]: list(r["embedding"]) for r in corpus.collect()}
-
-    def cos(u, v):
-        du = math.sqrt(sum(x * x for x in u))
-        dv = math.sqrt(sum(x * x for x in v))
-        return sum(x * y for x, y in zip(u, v)) / (du * dv)
-
-    want = {
-        i
-        for i in rows
-        if not any(cos(rows[i], rows[j]) >= 0.95 for j in rows if j < i)
-    }
-    assert got == want
-    # every planted twin has its base (smaller id, cosine ~1) -> dropped
-    assert not {i for i in rows if i >= 1000} & got
-    assert len(got) > 0
-
-
 def test_ivf_index_persisted_probe(clustered_vectors, tmp_path):
     """The build-once/probe-many deployment: a persisted cell-
     partitioned index must reproduce the in-memory operator exactly,
@@ -1138,68 +1023,6 @@ def test_ivf_probe_prunes_unfiltered_batch(clustered_vectors, tmp_path):
     )
 
 
-def test_semantic_store_history_probe_prunes_kept_scan(spark, tmp_path):
-    """SemanticStore.ingest's history probe must read only the kept
-    partitions of the batch's occupied cells (the _probed_store_side
-    contract — static pruning, since DPP skips the pinned-batch join
-    shape), measured on the executed scan, and ingest must still blame
-    history duplicates correctly through the pruned scan."""
-    import math
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-    from git_log_to_sqlite_spark.operators.similarity import _semantic_ranked
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    store = SemanticStore(spark, str(tmp_path / "s"), threshold=0.98)
-    store.bootstrap(
-        spark.createDataFrame(
-            [(1, at(0)), (2, at(40)), (3, at(179)), (4, at(140))],
-            "vec_id long, embedding array<double>",
-        ),
-        cents,
-    )
-    # bare one-cell batch (cell 0: x > 0)
-    batch = spark.createDataFrame(
-        [(10, at(5)), (11, at(12))], "vec_id long, embedding array<double>"
-    )
-    ranked = _semantic_ranked(
-        batch, "vec_id", "embedding", store.centroids_df(), None, None,
-        expect_dim=2, guard_context="test",
-    )
-    side = store._probed_store_side(ranked)
-    rows = side.collect()
-    kept_cell0 = {r["_hid"] for r in rows}
-    assert all(r["cell"] == 0 for r in rows) and len(rows) > 0
-    # measured: the scan itself read only cell 0's partition rows
-    kept_total = store.read().count()
-    scanned = _index_scan_rows(side)
-    assert 0 < scanned < kept_total, (
-        f"kept scan read {scanned} of {kept_total} rows — the history "
-        "probe did not prune unprobed cell partitions"
-    )
-    assert scanned == len(rows)
-    # end-to-end through ingest: cell-0 batch rows still blame the
-    # cell-0 history row they duplicate
-    res = {r["vec_id"]: r for r in store.ingest(batch).collect()}
-    assert res[10]["dup_source"] == "history" and res[10]["dup_of"] in kept_cell0
-
-    # pruning must survive the store lifecycle: compact() rewrites the
-    # files and ingest appends — if either demoted or split the cell
-    # layout, the probe would silently fall back to full scans (this
-    # is measured, not layout-asserted: cell= dirs existing does not
-    # prove the scan pruned)
-    store.compact(num_files=2)
-    side2 = store._probed_store_side(ranked)
-    rows2 = side2.collect()
-    total2 = store.read().count()
-    scanned2 = _index_scan_rows(side2)
-    assert 0 < scanned2 < total2 and scanned2 == len(rows2)
-
-
 def _index_scan_rows(res) -> int:
     """numOutputRows of the largest executed FileSourceScanExec under
     ``res``'s plan (the index scan), walked through AQE wrappers."""
@@ -1294,8 +1117,7 @@ def test_ivf_index_append_grows_without_refit(clustered_vectors, tmp_path):
     whose build saw everything, because the quantizer (model state) is
     identical and assignment is deterministic. Also: appended mass is
     visible to cell_sizes(), and an un-built path fails fast instead
-    of creating an empty-quantizer store (the SignatureStore ingest
-    contract)."""
+    of creating an empty-quantizer index."""
     from git_log_to_sqlite_spark.operators import IvfIndex, ivf_ann_topk
 
     e = clustered_vectors.select("vec_id", "embedding")
@@ -1326,6 +1148,20 @@ def test_ivf_index_append_grows_without_refit(clustered_vectors, tmp_path):
     # appended mass visible; totals add up
     sizes = {r["cell"]: r["n_vectors"] for r in idx.cell_sizes().collect()}
     assert sum(sizes.values()) == e.count()
+
+    # compact() keeps the cell layout: cell= directories survive, probes
+    # are unchanged, and a later append still reads (a flat rewrite
+    # would demote cell to a data column and break that read with
+    # conflicting directory structures)
+    idx.compact(num_files=2)
+    index_dir = tmp_path / "ivf_grow" / "index"
+    assert any(p.name.startswith("cell=") for p in index_dir.iterdir())
+    assert {tuple(r) for r in idx.probe(q, n_probe=2, k=5).collect()} == got
+    idx.append(
+        e.filter(F.col("vec_id") < 3).withColumn("vec_id", F.col("vec_id") + 10**6)
+    )
+    sizes = {r["cell"]: r["n_vectors"] for r in idx.cell_sizes().collect()}
+    assert sum(sizes.values()) == e.count() + 3
 
     # un-built path fails fast
     empty = IvfIndex(e.sparkSession, str(tmp_path / "ivf_nope"))
@@ -1602,105 +1438,6 @@ def test_semantic_dedup_cell_stats_observation(spark):
     assert obs_t.get == m
 
 
-def test_semantic_store_cell_stats_observation(spark, tmp_path):
-    """Both store paths carry the mega-cell valve: bootstrap observes
-    the corpus-sized ranked frame (where the |corpus|^2/2 degenerate
-    risk lives), each ingest observes its batch's — a fresh
-    Observation per call, matching pyspark's single-use contract.
-    Also pins the _dim() memoization introduced alongside: the
-    quantizer dim is cached after bootstrap's first read."""
-    import math
-
-    from pyspark.sql import Observation
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    store = SemanticStore(spark, str(tmp_path / "semstore"), threshold=0.98)
-    ob = Observation("boot_cells")
-    store.bootstrap(
-        spark.createDataFrame(
-            [(1, at(0)), (2, at(40)), (3, at(179))],
-            "vec_id long, embedding array<double>"),
-        cents, observation=ob)
-    assert ob.get["cells"] == 2
-    assert ob.get["max_cell_rows"] == 2   # cell 0 holds {1, 2}
-    assert ob.get["pair_mass"] == 1
-    assert store._dim_cache == 2          # memoized during bootstrap
-
-    oi = Observation("ingest_cells")
-    res = store.ingest(
-        spark.createDataFrame(
-            [(10, at(5)), (11, at(10)), (12, at(15))],
-            "vec_id long, embedding array<double>"),
-        observation=oi)
-    assert oi.get["cells"] == 1           # today's batch crowds cell 0
-    assert oi.get["max_cell_rows"] == 3
-    assert oi.get["pair_mass"] == 3
-    assert res.count() == 3
-
-
-def test_semantic_store_ingest_no_broadcast_plan_equivalence(spark, tmp_path):
-    """The backfill contract behind ingest's deliberately UNHINTED
-    history join (the round-11 docstring promise, now executed): a
-    daily-increment batch broadcasts by estimate, but a backfill-scale
-    batch must DEGRADE to a shuffled cell join instead of hitting the
-    8 GB broadcast cliff a hard hint would force. Forcing the degraded
-    regime (autoBroadcastJoinThreshold=-1 — the planner's view of
-    'too big to broadcast') must change the plan, not the answer:
-    identical annotation, blame ids, and kept set. Bootstrap runs
-    under the default conf both times; only the ingest differs."""
-    import math
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    # threshold 0.9995 <-> a ~1.81deg similarity cut. Bootstrap rows
-    # sit 4deg apart (no intra-boot drops); the batch plants 1deg
-    # history dups, 0.1deg intra-batch pairs at boot midpoints
-    # (>= 1.95deg from any boot row — no history hit), exercising
-    # both drop sources in both plan regimes.
-    cents = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0]]
-    schema = "vec_id long, embedding array<double>"
-    boot = [(i, at(4 * i)) for i in range(40)]
-    batch = [(200 + i, at(4 * i + 1)) for i in range(20)]
-    batch += [(300 + i, at(4 * i + 1.95)) for i in range(20, 39)]
-    batch += [(400 + i, at(4 * i + 2.05)) for i in range(20, 39)]
-
-    def run(path, threshold_conf):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        store = SemanticStore(spark, path, threshold=0.9995)
-        store.bootstrap(spark.createDataFrame(boot, schema), cents)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold_conf)
-        try:
-            ann = sorted(
-                map(tuple,
-                    store.ingest(spark.createDataFrame(batch, schema))
-                    .collect())
-            )
-            kept = sorted(r["vec_id"] for r in store.read().collect())
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        return ann, kept
-
-    broadcast_regime = run(str(tmp_path / "s_bcast"), "10485760")
-    shuffled_regime = run(str(tmp_path / "s_shuffle"), "-1")
-    assert broadcast_regime == shuffled_regime
-    # non-vacuous: both drop sources fired, and the novel half landed
-    ann, kept = broadcast_regime
-    sources = [r[4] for r in ann]
-    assert sources.count("history") == 20
-    assert sources.count("batch") == 19
-    assert len(kept) == 40 + 19
-
-
 def test_semantic_dedup_matches_duckdb_twin(spark, oracle_sf_dir):
     """Cross-engine determinism of the FULL SemDeDup annotation under
     the rounding knobs (round_to=6, dist_round_to=6) with pinned
@@ -1918,38 +1655,22 @@ def test_asof_join_basic(spark):
 
 
 def test_multimodal_plumbing(docs):
-    # the stub decoder is pinned explicitly: payloads here are text, and
-    # the test must behave identically whether or not PIL is installed
+    """as_media wraps a string column as a binary payload (UTF-8 bytes)
+    with typed metadata, one media row per input row."""
     media = as_media(docs, "doc_id", "text", mime="text/plain")
-    assert dict(media.dtypes)["payload"] == "binary"
-    feats = extract_image_features(media, decoder=_decode_image_stub).collect()
-    assert len(feats) == 6
-    for r in feats:
-        assert r["width"] >= 16 and r["height"] >= 16
-        assert 0.0 <= r["mean_luma"] <= 1.0
-    # deterministic stub: same payload -> same features
-    f = {r["media_id"]: (r["width"], r["height"], r["mean_luma"]) for r in feats}
-    assert f[1] == f[2]
-    frames = sample_frames(media, every_nth_byte=8).collect()
-    assert {r["media_id"] for r in frames} == {1, 2, 3, 4, 5, 6}
-    n1 = len([r for r in frames if r["media_id"] == 1])
-    assert n1 == len("the quick brown fox jumps over the lazy dog") // 8
-
-
-def test_multimodal_resize_roundtrips_binary(docs):
-    from git_log_to_sqlite_spark.operators.multimodal import resize_images
-
-    media = as_media(docs, "doc_id", "text", mime="text/plain")
-    out = resize_images(media, width=8, height=4)
-    assert dict(out.dtypes)["payload"] == "binary"
-    rows = out.collect()
-    assert len(rows) == 6
-    for r in rows:
-        assert (r["width"], r["height"]) == (8, 4)
-        assert len(r["payload"]) == 8 * 4 == r["byte_len"]
-    # deterministic stub: identical payloads resize identically
-    by_id = {r["media_id"]: bytes(r["payload"]) for r in rows}
-    assert by_id[1] == by_id[2]
+    assert dict(media.dtypes) == {
+        "media_id": "bigint",
+        "payload": "binary",
+        "mime_type": "string",
+        "byte_len": "int",
+    }
+    rows = {r["media_id"]: r for r in media.collect()}
+    assert set(rows) == {1, 2, 3, 4, 5, 6}
+    for doc_id, text in docs.collect():
+        r = rows[doc_id]
+        assert bytes(r["payload"]) == text.encode("utf-8")
+        assert r["byte_len"] == len(text.encode("utf-8"))
+        assert r["mime_type"] == "text/plain"
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -1984,24 +1705,6 @@ def test_salted_aggregate_rejects_non_mergeable(spark):
     df = spark.createDataFrame([(1, "a", 1.0)], "id long, k string, v double")
     with pytest.raises(ValueError, match="not mergeable"):
         salted_aggregate(df, ["k"], {"a": ("avg", "v")}, salt_from="id")
-
-
-def test_salted_join_matches_plain(spark):
-    """The salted equi-join returns exactly the plain join's rows."""
-    from git_log_to_sqlite_spark.operators import salted_join
-
-    fact = spark.createDataFrame(
-        [(i, 1 if i % 5 else i % 3) for i in range(1, 201)], "fid long, k long"
-    )
-    dim = spark.createDataFrame([(k, f"d{k}") for k in range(3)], "k long, label string")
-    got = sorted(
-        (r["fid"], r["k"], r["label"])
-        for r in salted_join(fact, dim, on="k", fact_unique="fid", buckets=4).collect()
-    )
-    want = sorted(
-        (r["fid"], r["k"], r["label"]) for r in fact.join(dim, "k").collect()
-    )
-    assert got == want
 
 
 def test_multiprobe_beats_single_probe_recall(clustered_vectors):
@@ -2903,177 +2606,6 @@ def test_image_in_video_frames_planted(spark):
     assert not any(t[0] == 901 for t in got)
 
 
-def test_hamming_store_multi_day_ingest(spark, tmp_path):
-    """The Hamming family's daily-ingest loop (HammingStore — one
-    store class for every <= 60-bit modality): three days of signature
-    batches must (a) resolve a day-2 near-copy of a day-1 item to the
-    day-1 id; (b) resolve a day-3 copy of the day-2 DUPLICATE to the
-    day-1 original — proving flagged items' signatures are never
-    appended; (c) pick the closest match with deterministic ties;
-    (d) grow the store by exactly the novel items; (e) fail fast on
-    an un-bootstrapped path."""
-    import random
-
-    from git_log_to_sqlite_spark.operators import HammingStore
-
-    rng = random.Random(53)
-    base = {i: rng.getrandbits(60) for i in range(20)}
-    store = HammingStore(spark, str(tmp_path / "hstore"), id_col="mid",
-                         sig_col="sig", bits=60)
-    assert not store.exists()
-    with pytest.raises(FileNotFoundError, match="bootstrap"):
-        store.ingest(spark.createDataFrame([(1, 2)], "mid long, sig long"))
-    store.bootstrap(
-        spark.createDataFrame(list(base.items()), "mid long, sig long")
-    )
-
-    def ingest(rows):
-        return {
-            r["mid"]: (r["dup_of"], r["best_hamming"], r["is_new"])
-            for r in store.ingest(
-                spark.createDataFrame(rows, "mid long, sig long"),
-                bands=4, max_hamming=3,
-            ).collect()
-        }
-
-    # day 1: one novel item, one 2-bit near-copy of bootstrap item 7
-    novel_sig = rng.getrandbits(60)
-    d1 = ingest([(101, novel_sig), (102, base[7] ^ 0b101)])
-    assert d1[101] == (None, None, 1)
-    assert d1[102] == (7, 2, 0)
-
-    # day 2: a 1-bit variant of day-1's NOVEL item -> resolves to 101
-    # (the append is live); an exact copy of the day-1 DUPLICATE's
-    # signature -> resolves to 7, NOT 102 (102 was never appended)
-    d2 = ingest([(201, novel_sig ^ 0b1), (202, base[7] ^ 0b101)])
-    assert d2[201] == (101, 1, 0)
-    assert d2[202] == (7, 2, 0)
-
-    # day 3: equidistant tie between bootstrap ids 3 and 4 (plant two
-    # history sigs 2 bits from the probe) -> min (hamming, id) struct
-    probe = rng.getrandbits(60)
-    store2 = HammingStore(spark, str(tmp_path / "hstore2"), id_col="mid",
-                          sig_col="sig", bits=60)
-    store2.bootstrap(spark.createDataFrame(
-        [(3, probe ^ 0b11), (4, probe ^ 0b1100), (9, rng.getrandbits(60))],
-        "mid long, sig long",
-    ))
-    [r] = store2.ingest(
-        spark.createDataFrame([(301, probe)], "mid long, sig long"),
-        bands=4, max_hamming=3,
-    ).collect()
-    assert (r["dup_of"], r["best_hamming"]) == (3, 2)
-
-    # store grew by exactly the novel items: 20 bootstrap + 101
-    assert store.read().count() == 21
-    assert {r["mid"] for r in store.read().collect()} == set(base) | {101}
-
-
-def test_semantic_store_multi_day_ingest(spark, tmp_path):
-    """The embedding modality's daily-ingest loop (SemanticStore —
-    incremental SemDeDup): (a) a day-1 novel item is live history for
-    day 2; (b) a copy of a day-1 DUPLICATE resolves to the bootstrap
-    ORIGINAL (flagged vectors never append); (c) history blame WINS
-    over batch blame; (d) the batch-internal upper-triangular rule
-    still applies among store-missed rows (keep-farthest-from-
-    centroid order, dup_source='batch'); (e) an assignment tie
-    breaks to the lower cell; (f) the store grows by exactly the
-    kept rows; (g) un-bootstrapped ingest fails fast."""
-    import math
-
-    import pytest
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    store = SemanticStore(spark, str(tmp_path / "semstore"),
-                          threshold=0.98)
-    assert not store.exists()
-    with pytest.raises(FileNotFoundError, match="bootstrap"):
-        store.ingest(spark.createDataFrame(
-            [(1, at(0))], "vec_id long, embedding array<double>"))
-
-    boot = [(10, at(0)), (11, at(30)), (20, at(180))]
-    store.bootstrap(
-        spark.createDataFrame(boot, "vec_id long, embedding array<double>"),
-        cents,
-    )
-    assert {r["vec_id"] for r in store.read().collect()} == {10, 11, 20}
-
-    def ingest(rows):
-        return {
-            r["vec_id"]: (r["dup_of"], r["dup_source"], r["is_kept"])
-            for r in store.ingest(
-                spark.createDataFrame(
-                    rows, "vec_id long, embedding array<double>")
-            ).collect()
-        }
-
-    # day 1: novel; two history near-dups (one also batch-similar to
-    # the other — history must win); a batch-internal pair with no
-    # history hit (the farther-from-centroid member survives)
-    d1 = ingest([(101, at(15)), (102, at(2)), (103, at(3)),
-                 (104, at(44)), (105, at(46))])
-    assert d1[101] == (None, None, 1)
-    assert d1[102] == (10, "history", 0)
-    assert d1[103] == (10, "history", 0)   # history beats batch-mate 102
-    assert d1[105] == (None, None, 1)      # 46deg: farther from centroid
-    assert d1[104] == (105, "batch", 0)    # intra-day drop, blames 105
-
-    # day 2: day-1 novel is live; dup-of-a-dup resolves to the
-    # ORIGINAL; the other cell matches too; an exact-tie assignment
-    # (90deg equidistant) goes to the lower cell and is kept
-    d2 = ingest([(201, at(16)), (202, at(2)), (203, at(179)),
-                 (204, at(90))])
-    assert d2[201] == (101, "history", 0)  # day-1 append is live
-    assert d2[202] == (10, "history", 0)   # 102 never appended
-    assert d2[203] == (20, "history", 0)
-    assert d2[204] == (None, None, 1)
-    [cell204] = [r["cell"] for r in store.read().collect()
-                 if r["vec_id"] == 204]
-    assert cell204 == 0                    # tie -> lower cell id
-
-    assert {r["vec_id"] for r in store.read().collect()} == {
-        10, 11, 20, 101, 105, 204
-    }
-
-    # (h) the IvfIndex.append guard contract: a wrong-dim or
-    # null-element vector fails the job BEFORE the parquet commit —
-    # zip_with would null-poison its distances into cell 0 and the
-    # NULL similarities would annotate it kept, permanently corrupting
-    # the kept table
-    before = {r["vec_id"] for r in store.read().collect()}
-    # [0.5]: under-length; [0.5, None]: right count of non-nulls would
-    # NOT excuse it either way; [0.5, 0.5, None]: the subtle hole — an
-    # OVER-length vector whose null padding leaves exactly dim
-    # non-nulls must still fail (nn == dim alone would wave it in)
-    for bad in ([0.5], [0.5, None], [0.5, 0.5, None]):
-        with pytest.raises(Exception, match="quantizer dim"):
-            store.ingest(spark.createDataFrame(
-                [(999, bad)], "vec_id long, embedding array<double>"))
-    assert {r["vec_id"] for r in store.read().collect()} == before
-
-    # (i) compact() preserves the cell-partitioned layout: the store
-    # stays readable, the next partitioned append still works, and
-    # cell= directories survive (a flat rewrite would demote cell to
-    # a data column and break the following read with conflicting
-    # directory structures)
-    import os
-
-    store.compact(num_files=2)
-    assert {r["vec_id"] for r in store.read().collect()} == before
-    d3 = ingest([(401, at(60))])  # novel; proves post-compact appends
-    assert d3[401] == (None, None, 1)
-    assert {r["vec_id"] for r in store.read().collect()} == before | {401}
-    assert any(
-        e.startswith("cell=") for e in os.listdir(store.path)
-    )
-
-
 def test_fuzzy_decontaminate_flags_near_dup_leakage(spark):
     """Fuzzy decontamination (simhash distance vs the eval set): a
     verbatim eval copy and a lightly-perturbed copy must flag, clean
@@ -3178,29 +2710,6 @@ def test_image_near_dup_real_pil_recompressed_twin(spark):
         for r in image_near_dup_pairs(media, max_hamming=3).collect()
     }
     assert (1, 2) in got and not any(3 in p for p in got)
-
-
-@pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed in this environment")
-def test_multimodal_real_pil_decode(spark):
-    """Real-decoder path: only runs where Pillow exists. Builds a tiny
-    PNG in-process and checks the decoded dimensions round-trip."""
-    import io
-
-    from PIL import Image
-
-    from git_log_to_sqlite_spark.operators.multimodal import resize_images
-
-    buf = io.BytesIO()
-    Image.new("L", (20, 10), color=128).save(buf, format="PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame([(1, png)], "doc_id long, payload binary")
-    media = as_media(df, "doc_id", "payload", mime="image/png")
-    feats = extract_image_features(media).collect()
-    assert (feats[0]["width"], feats[0]["height"]) == (20, 10)
-    assert abs(feats[0]["mean_luma"] - 128 / 255) < 0.01
-    resized = resize_images(media, width=8, height=8).collect()
-    with Image.open(io.BytesIO(resized[0]["payload"])) as out:
-        assert out.size == (8, 8)
 
 
 def test_kmeans_recovers_planted_clusters(clustered_vectors):
@@ -3647,28 +3156,6 @@ def test_operator_cache_lifecycle(spark, oracle_sf_dir):
     assert jcm.isEmpty()
 
 
-def test_cache_scope_releases_only_inner_pins(spark, oracle_sf_dir):
-    """cache_scope() frees frames pinned inside the with-body while
-    leaving earlier pins (a caller's own operator results) live."""
-    from git_log_to_sqlite_spark.operators import cache_scope, caching, release_caches
-
-    spark.catalog.clearCache()
-    release_caches()
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-
-    minhash_lsh_pairs(docs, "doc_id", "text").count()
-    outer = list(caching._LIVE)
-    assert outer
-    with cache_scope():
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.2, max_df_quantile=0.92
-        ).count()
-        assert len(caching._LIVE) > len(outer)
-    assert caching._LIVE == outer  # inner pins released, outer intact
-    assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in outer)
-    release_caches()
-
-
 def test_pin_hash_gated_dedup(spark):
     """pin()'s duplicate check is semanticHash-gated (round 16): a
     same-result re-pin still short-circuits (no duplicate registry
@@ -3820,49 +3307,6 @@ def test_incremental_dedup_best_match_column(spark):
         history, increment, "doc_id", "text"
     ).columns
     assert cols == ["doc_id", "dup_of", "best_est", "is_new"]
-
-
-def test_incremental_dedup_history_signatures_equivalent(spark, oracle_sf_dir):
-    """Passing the precomputed signature table (the SignatureStore
-    read shape) must reproduce the text-derived result exactly, and
-    the history/history_signatures arguments are mutually exclusive
-    and jointly required."""
-    from git_log_to_sqlite_spark.operators import (
-        incremental_minhash_dedup,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    history = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-    base = {
-        tuple(r)
-        for r in incremental_minhash_dedup(
-            history, increment, "doc_id", "text"
-        ).collect()
-    }
-    sigs = minhash_signatures(history, "doc_id", "text")
-    got = {
-        tuple(r)
-        for r in incremental_minhash_dedup(
-            None, increment, "doc_id", "text", history_signatures=sigs
-        ).collect()
-    }
-    assert got == base and len(base) > 0
-
-    with pytest.raises(ValueError, match="exactly one"):
-        incremental_minhash_dedup(None, increment, "doc_id", "text")
-    with pytest.raises(ValueError, match="exactly one"):
-        incremental_minhash_dedup(
-            history, increment, "doc_id", "text", history_signatures=sigs
-        )
-    with pytest.raises(ValueError, match="missing columns"):
-        incremental_minhash_dedup(
-            None, increment, "doc_id", "text",
-            history_signatures=sigs.drop("mh_3"),
-        )
 
 
 def test_incremental_dedup_planted_near_dup(spark):
@@ -4024,30 +3468,6 @@ def test_token_budget_empty_and_single_row(spark):
     one = spark.createDataFrame([(1, "d", 999)], "id long, dom string, w long")
     rows = token_budget_sample(one, "id", "w", 1, domain_col="dom").collect()
     assert len(rows) == 1 and rows[0]["cum_before"] == 0
-
-
-def test_cache_scope_survives_external_clearcache(spark):
-    """Round-7 review fix: cache_scope tracks membership by identity,
-    not a list-length mark — after an external clearCache() pruned dead
-    pre-scope entries, frames pinned INSIDE the scope must still be
-    released at scope exit (an index mark pointed below them and leaked
-    the pins)."""
-    from git_log_to_sqlite_spark.operators import cache_scope, pin, release_caches
-    from git_log_to_sqlite_spark.operators import caching
-
-    release_caches()
-    a = pin(spark.range(10).selectExpr("id * 2 AS v"))
-    a.count()
-    spark.catalog.clearCache()  # a is now dead but still registered
-    with cache_scope():
-        b = pin(spark.range(10).selectExpr("id * 3 AS w"))
-        b.count()
-        assert b.storageLevel.useMemory or b.storageLevel.useDisk
-    assert not (b.storageLevel.useMemory or b.storageLevel.useDisk), (
-        "inner pin must be released at scope exit even after external clearCache"
-    )
-    assert all(id(d) != id(b) for d in caching._LIVE)
-    release_caches()
 
 
 def test_token_hofs_stay_capture_free(spark):

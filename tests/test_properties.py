@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from git_log_to_sqlite_spark.config import Config
 from git_log_to_sqlite_spark.etl.pipeline import apply_author_map
-from git_log_to_sqlite_spark.operators.dedup import exact_dedup, md5_long, shingles
+from git_log_to_sqlite_spark.operators.dedup import md5_long, shingles
 
 _SETTINGS = dict(
     max_examples=8,
@@ -96,32 +96,6 @@ def test_explode_collect_roundtrip(sess, arrays):
     got = {r["id"]: r["xs_back"] for r in back.collect()}
     for i, a in enumerate(arrays):
         assert got.get(i, []) == sorted(a)
-
-
-@given(
-    docs=st.lists(
-        st.tuples(st.text(alphabet="ab ", min_size=0, max_size=30)),
-        min_size=1,
-        max_size=15,
-    )
-)
-@settings(**_SETTINGS)
-def test_exact_dedup_idempotent_and_partitions_input(sess, docs):
-    """dedup is idempotent; survivors+drops partition the input; the
-    survivor count equals the number of distinct contents."""
-    df = sess.createDataFrame(
-        [(i, t) for i, (t,) in enumerate(docs)], "doc_id long, body string"
-    )
-    d1 = exact_dedup(df, ["body"], "doc_id")
-    n_distinct = df.select("body").distinct().count()
-    assert d1.count() == n_distinct
-    d2 = exact_dedup(d1.drop("n_copies"), ["body"], "doc_id")
-    assert sorted(r["doc_id"] for r in d2.collect()) == sorted(
-        r["doc_id"] for r in d1.collect()
-    )
-    # copies add back up to the input row count
-    total = d1.agg(F.sum("n_copies")).collect()[0][0]
-    assert total == df.count()
 
 
 @given(

@@ -80,33 +80,6 @@ def test_join_agg_pipeline_at_replicated_scale(spark, oracle_sf_dir, big_lineite
     assert joined.count() == base_orders
 
 
-def test_exact_dedup_scales_multiplicatively(spark, oracle_sf_dir):
-    """Replicating every document 4x must multiply every survivor's
-    n_copies by exactly 4 and keep the SAME survivors (min id lives in
-    replica 0) — group counts are exact, so any partial-agg or
-    survivor-ordering drift at higher cardinality is a value error."""
-    from git_log_to_sqlite_spark.operators import exact_dedup
-
-    d = table(spark, oracle_sf_dir, "documents").select("doc_id", "text")
-    copies = [
-        d.withColumn("doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-        for i in range(4)
-    ]
-    big = copies[0]
-    for c in copies[1:]:
-        big = big.unionByName(c)
-    base = {
-        r["doc_id"]: r["n_copies"]
-        for r in exact_dedup(d, ["text"], "doc_id").collect()
-    }
-    got = {
-        r["doc_id"]: r["n_copies"]
-        for r in exact_dedup(big, ["text"], "doc_id").collect()
-    }
-    assert set(got) == set(base)  # same min-id survivors
-    assert all(got[k] == 4 * base[k] for k in base)
-
-
 def test_jaccard_quantile_cap_at_bench_sf(spark):
     """The quantile-derived max_df path at sf0.1 (the bench SF, 10x the
     oracle corpus): the in-plan p92 cap must still produce exactly the

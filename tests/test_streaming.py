@@ -410,322 +410,6 @@ def test_foreachbatch_incremental_dedup_against_static_history(
     assert got == want
 
 
-def test_window_store_multi_day_ingest(spark, oracle_sf_dir, tmp_path):
-    """The exact-substring production loop (WindowStore, the substring
-    analog of the signature store): three simulated days through
-    foreachBatch must (a) reproduce an in-memory sequential reference
-    loop exactly; (b) resolve a planted day-2/day-3 copy of a day-1
-    NOVEL passage to the day-1 document — proving the append is live
-    AND that flagged documents' windows are NOT appended (day 3 must
-    match day 1, never day 2); (c) grow the store by exactly the novel
-    documents' windows; (d) leak no pins across micro-batches."""
-    import os
-    import time
-
-    from git_log_to_sqlite_spark.operators import (
-        WindowStore,
-        incremental_substring_spans,
-        release_caches,
-    )
-    from git_log_to_sqlite_spark.operators.caching import _LIVE
-    from git_log_to_sqlite_spark.plans.registry import table as t
-
-    docs = t(spark, oracle_sf_dir, "documents").select("doc_id", "text")
-    history = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-
-    passage = (
-        "entirely novel sentinel passage planted for the window store "
-        "multi day loop test"  # 13 tokens > min_run_tokens=12
-    )
-    planted = {
-        0: [(20_000_001, f"alpha beta {passage} gamma delta")],
-        1: [(20_000_002, f"one two three {passage} four")],
-        2: [(20_000_003, f"five six {passage} seven eight nine")],
-    }
-    days = [
-        increment.filter((F.col("doc_id") / 5).cast("long") % 3 == d).unionByName(
-            spark.createDataFrame(planted[d], "doc_id long, text string")
-        )
-        for d in range(3)
-    ]
-
-    store = WindowStore(spark, str(tmp_path / "winstore"), id_col="doc_id", window=6)
-    assert not store.exists()
-    with pytest.raises(FileNotFoundError, match="bootstrap"):
-        store.ingest(days[0], "text")
-    store.bootstrap(history, "text")
-    n_hist = store.read().count()
-
-    inc_dir = str(tmp_path / "inc")
-    for d, day in enumerate(days):
-        p = os.path.join(inc_dir, f"day{d}")
-        day.coalesce(1).write.parquet(p)
-        stamp = time.time() - 300 + d * 60
-        for root, _, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (stamp, stamp))
-
-    n_live_before = len(_LIVE)
-    got: dict[int, tuple] = {}
-
-    def _ingest(batch_df, batch_id):
-        for r in store.ingest(batch_df, "text", min_run_tokens=12).collect():
-            got[r["doc_id"]] = (
-                r["max_run_tokens"], r["n_hist_matches"],
-                r["best_match_id"], r["is_new"],
-            )
-
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(inc_dir)
-        .writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len(_LIVE) == n_live_before  # (d) no per-batch pin leaked
-    release_caches()
-
-    # (b) the planted passage chain resolves to day 1 across days —
-    # day 2's copy was flagged, so its windows were never appended
-    n_pass = len(passage.split(" "))
-    assert got[20_000_001][3] == 1 and got[20_000_001][2] is None
-    assert got[20_000_002][:1] == (n_pass,) and got[20_000_002][2] == 20_000_001
-    assert got[20_000_003][:1] == (n_pass,) and got[20_000_003][2] == 20_000_001
-    assert got[20_000_002][3] == 0 and got[20_000_003][3] == 0
-
-    # (a) parquet-store loop == in-memory sequential reference
-    ref_windows = store.windows_for(history, "text").localCheckpoint()
-    ref: dict[int, tuple] = {}
-    for day in days:
-        pairs = incremental_substring_spans(
-            None, day, "doc_id", "text", window=6, min_run_tokens=12,
-            history_windows=ref_windows,
-        ).collect()
-        by: dict[int, list] = {}
-        for r in pairs:
-            by.setdefault(r["inc_id"], []).append(
-                (r["longest_run_tokens"], r["hist_id"])
-            )
-        day_ids = [r["doc_id"] for r in day.select("doc_id").collect()]
-        new_ids = []
-        for d_id in day_ids:
-            if d_id in by:
-                mx = max(x[0] for x in by[d_id])
-                best = min(h for run, h in by[d_id] if run == mx)
-                ref[d_id] = (mx, len(by[d_id]), best, 0)
-            else:
-                ref[d_id] = (0, 0, None, 1)
-                new_ids.append(d_id)
-        new_w = store.windows_for(
-            day.filter(F.col("doc_id").isin(new_ids)), "text"
-        )
-        ref_windows = ref_windows.unionByName(new_w).localCheckpoint()
-    release_caches()
-    assert got == ref
-
-    # (c) the store grew by exactly the novel documents' windows
-    n_new_windows = sum(
-        1 for r in store.read().collect()
-    ) - n_hist
-    want_new = ref_windows.count() - n_hist
-    assert n_new_windows == want_new > 0
-
-
-def test_signature_store_ingest_requires_bootstrap(spark, tmp_path):
-    """ingest() on a never-bootstrapped store must fail FAST with an
-    error naming bootstrap(), not a path-not-found AnalysisException
-    surfacing from the lazy self.read() deep inside the operator."""
-    from git_log_to_sqlite_spark.operators import SignatureStore
-
-    store = SignatureStore(spark, str(tmp_path / "never_bootstrapped"))
-    batch = spark.createDataFrame(
-        [(1, "some document text here")], "doc_id long, text string"
-    )
-    with pytest.raises(FileNotFoundError, match="bootstrap"):
-        store.ingest(batch, "text")
-
-
-def test_signature_store_multi_day_ingest(spark, oracle_sf_dir, tmp_path):
-    """The PRODUCTION daily-ingest loop: the history signature table
-    lives as parquet (SignatureStore), every micro-batch dedups
-    against the STORE (history text never re-read) and appends its
-    novel documents' signatures, so day N sees day N-1's novelties.
-    Three simulated days through foreachBatch must (a) reproduce an
-    in-memory sequential reference loop exactly — the persistence
-    layer is faithful; (b) catch a planted day-2/day-3 near-dup of a
-    day-1 NOVEL doc — the append is live, which the static-history
-    test structurally cannot show; (c) agree with the one-shot batch
-    operator on day 1 and only ever catch MORE than it later (growing
-    history is monotone); (d) grow the store by exactly the novel
-    rows."""
-    import os
-    import time
-
-    from git_log_to_sqlite_spark.operators import (
-        SignatureStore,
-        incremental_minhash_dedup,
-        release_caches,
-    )
-    from git_log_to_sqlite_spark.plans.registry import table as t
-
-    docs = t(spark, oracle_sf_dir, "documents").select("doc_id", "text")
-    history = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-
-    planted_text = "entirely novel sentinel prose planted for the multi day loop"
-    planted = {
-        0: [(10_000_001, planted_text)],        # day 1: novel
-        1: [(10_000_002, planted_text)],        # day 2: dup of day-1 novelty
-        2: [(10_000_003, planted_text)],        # day 3: still resolves to day 1
-    }
-    days = [
-        increment.filter((F.col("doc_id") / 5).cast("long") % 3 == d).unionByName(
-            spark.createDataFrame(planted[d], "doc_id long, text string")
-        )
-        for d in range(3)
-    ]
-
-    store = SignatureStore(spark, str(tmp_path / "sigstore"), id_col="doc_id")
-    assert not store.exists()
-    store.bootstrap(history, "text")
-    n_hist = store.read().count()
-    assert store.exists()
-
-    # three parquet "days"; mtimes force micro-batch order
-    inc_dir = str(tmp_path / "inc")
-    for d, day in enumerate(days):
-        p = f"{inc_dir}/day{d}"
-        day.coalesce(1).write.parquet(p)
-        stamp = time.time() - 300 + d * 60
-        for root, _, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (stamp, stamp))
-
-    got: dict[int, tuple] = {}
-
-    def _ingest(batch_df, batch_id):
-        for r in store.ingest(batch_df, "text").collect():
-            got[r["doc_id"]] = (r["dup_of"], r["is_new"])
-
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("latestFirst", "false")
-        .parquet(inc_dir)
-        .writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    release_caches()
-
-    # (b) the planted chain resolves across batch boundaries
-    assert got[10_000_001] == (None, 1)
-    assert got[10_000_002] == (10_000_001, 0)
-    assert got[10_000_003] == (10_000_001, 0)
-
-    # (a) parquet-store loop == in-memory sequential reference
-    ref_sigs = store.signatures_for(history, "text").localCheckpoint()
-    ref: dict[int, tuple] = {}
-    for day in days:
-        res = incremental_minhash_dedup(
-            None, day, "doc_id", "text", history_signatures=ref_sigs
-        ).localCheckpoint()
-        for r in res.collect():
-            ref[r["doc_id"]] = (r["dup_of"], r["is_new"])
-        new_sigs = store.signatures_for(day, "text").join(
-            res.filter(F.col("is_new") == 1).select("doc_id"), "doc_id", "left_semi"
-        )
-        ref_sigs = ref_sigs.unionByName(new_sigs).localCheckpoint()
-    release_caches()
-    assert got == ref
-
-    # (c) vs the one-shot batch operator on the ORIGINAL history:
-    # growing history can only catch more, never less
-    oneshot = {
-        r["doc_id"]: (r["dup_of"], r["is_new"])
-        for r in incremental_minhash_dedup(
-            history, increment, "doc_id", "text"
-        ).collect()
-    }
-    release_caches()
-    for doc_id, (dup_of, is_new) in oneshot.items():
-        if is_new == 0:
-            assert got[doc_id][1] == 0, doc_id
-
-    # (d) the store grew by exactly the novel rows
-    n_new = sum(1 for v in got.values() if v[1] == 1)
-    assert store.read().count() == n_hist + n_new
-
-    # (e) compaction is rewrite-identical and shrinks the file count
-    # (bootstrap + 3 ingest appends each left a file-set)
-    before = {tuple(r) for r in store.read().collect()}
-    n_files_before = len(store.read().inputFiles())
-    store.compact(num_files=2)
-    assert len(store.read().inputFiles()) == 2 < n_files_before
-    assert {tuple(r) for r in store.read().collect()} == before
-
-
-def test_signature_store_ingest_with_valve_no_cache_leak(
-    spark, oracle_sf_dir, tmp_path
-):
-    """ingest under the quantile valve pins a per-batch history
-    band-count table inside the operator; the cache_scope wrapper must
-    (a) release every per-batch pin (no growth across batches — the
-    foreachBatch leak class), (b) never evict a cache the CALLER owns,
-    and (c) keep results identical to the valve-less loop at this
-    scale (the spread guard is a no-op on the natural distribution)."""
-    from git_log_to_sqlite_spark.operators import (
-        SignatureStore,
-        pin,
-        release_caches,
-    )
-    from git_log_to_sqlite_spark.operators import caching
-    from git_log_to_sqlite_spark.plans.registry import table as t
-
-    spark.catalog.clearCache()
-    release_caches()
-    docs = t(spark, oracle_sf_dir, "documents").select("doc_id", "text")
-    history = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-    days = [
-        increment.filter((F.col("doc_id") / 5).cast("long") % 2 == d)
-        for d in range(2)
-    ]
-
-    base_store = SignatureStore(spark, str(tmp_path / "plain"), id_col="doc_id")
-    base_store.bootstrap(history, "text")
-    base = {}
-    for day in days:
-        for r in base_store.ingest(day, "text").collect():
-            base[r["doc_id"]] = (r["dup_of"], r["is_new"])
-    assert caching._LIVE == [], "valve-less ingest leaked pins"
-
-    store = SignatureStore(spark, str(tmp_path / "valved"), id_col="doc_id")
-    store.bootstrap(history, "text")
-    # a CALLER-owned cache equivalent to ingest's internal batch pin:
-    # ingest must not evict it on exit
-    mine = pin(store.signatures_for(days[0], "text"))
-    mine.count()
-    outer = list(caching._LIVE)
-    got = {}
-    for day in days:
-        for r in store.ingest(day, "text", band_size_quantile=0.92).collect():
-            got[r["doc_id"]] = (r["dup_of"], r["is_new"])
-        assert caching._LIVE == outer, "per-batch pins leaked past ingest"
-    assert got == base
-    assert mine.storageLevel.useMemory or mine.storageLevel.useDisk, (
-        "ingest evicted a caller-owned cache"
-    )
-    release_caches()
-
-
 def test_stream_static_join_equals_batch(spark, oracle_sf_dir, replay_dir):
     """Stream-static join: the replayed events stream enriched against
     a STATIC dimension (user segment) — the standard streaming
@@ -761,8 +445,7 @@ def test_stream_static_join_equals_batch(spark, oracle_sf_dir, replay_dir):
 
 
 def test_ivf_index_streaming_append(spark, oracle_sf_dir, tmp_path):
-    """The persisted ANN index's daily-ingest loop (IvfIndex.append —
-    the index analog of SignatureStore.ingest / WindowStore.ingest):
+    """The persisted ANN index's daily-ingest loop (IvfIndex.append):
     build on the day-0 corpus, stream three daily embedding batches
     through foreachBatch append, and the grown index must probe
     IDENTICALLY to the in-memory operator over the full corpus under
@@ -816,156 +499,3 @@ def test_ivf_index_streaming_append(spark, oracle_sf_dir, tmp_path):
     assert sum(sizes.values()) == emb.count()
 
 
-def test_hamming_store_streaming_ingest(spark, tmp_path):
-    """HammingStore's daily loop as a REAL micro-batch stream — the
-    same foreachBatch evidence its three persisted-store siblings
-    (SignatureStore, WindowStore, IvfIndex) carry: bootstrap on day-0
-    signatures, stream three daily signature files through
-    foreachBatch(store.ingest), and (a) the final store must be
-    IDENTICAL to the sequential 3-day reference loop's, (b) a day-2
-    near-copy of a day-1 novel item must resolve to the day-1 id
-    (each micro-batch's append is live for the next), and (c) a
-    dup-of-a-dup must resolve to the ORIGINAL (flagged items'
-    signatures never append, even mid-stream)."""
-    import os
-    import random
-    import time
-
-    from git_log_to_sqlite_spark.operators import HammingStore
-
-    rng = random.Random(97)
-    base = {i: rng.getrandbits(60) for i in range(16)}
-    novel_sig = rng.getrandbits(60)
-    days = [
-        [(101, novel_sig), (102, base[5] ^ 0b101)],          # day 1
-        [(201, novel_sig ^ 0b1), (202, base[5] ^ 0b101)],    # day 2
-        [(301, rng.getrandbits(60)), (302, novel_sig ^ 0b110)],  # day 3
-    ]
-
-    # sequential reference loop
-    ref = HammingStore(spark, str(tmp_path / "hs_seq"), id_col="mid",
-                       sig_col="sig", bits=60)
-    ref.bootstrap(spark.createDataFrame(list(base.items()),
-                                        "mid long, sig long"))
-    for rows in days:
-        ref.ingest(spark.createDataFrame(rows, "mid long, sig long"),
-                   bands=4, max_hamming=3)
-
-    # streamed loop over the same batches
-    store = HammingStore(spark, str(tmp_path / "hs_stream"), id_col="mid",
-                         sig_col="sig", bits=60)
-    store.bootstrap(spark.createDataFrame(list(base.items()),
-                                          "mid long, sig long"))
-    inc_dir = str(tmp_path / "hs_days")
-    for d, rows in enumerate(days, start=1):
-        p = os.path.join(inc_dir, f"day{d}")
-        spark.createDataFrame(rows, "mid long, sig long").coalesce(
-            1
-        ).write.parquet(p)
-        stamp = time.time() - 300 + d * 60
-        for root, _, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (stamp, stamp))
-
-    annotations: dict[int, tuple] = {}
-
-    def _ingest(batch_df, _id):
-        for r in store.ingest(batch_df, bands=4, max_hamming=3).collect():
-            annotations[r["mid"]] = (r["dup_of"], r["best_hamming"],
-                                     r["is_new"])
-
-    q = (
-        spark.readStream.schema("mid long, sig long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(inc_dir)
-        .writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    assert annotations[101] == (None, None, 1)
-    assert annotations[102] == (5, 2, 0)
-    assert annotations[201] == (101, 1, 0)   # day-1 append live on day 2
-    assert annotations[202] == (5, 2, 0)     # dup-of-a-dup -> the ORIGINAL
-    assert annotations[301][2] == 1
-    assert annotations[302] == (101, 2, 0)
-    got = {(r["mid"], r["sig"]) for r in store.read().collect()}
-    want = {(r["mid"], r["sig"]) for r in ref.read().collect()}
-    assert got == want  # streamed store == sequential reference store
-    assert {m for m, _ in got} == set(base) | {101, 301}
-
-
-def test_semantic_store_streaming_ingest(spark, tmp_path):
-    """SemanticStore's daily loop as a REAL micro-batch stream — the
-    fifth persisted store on the same foreachBatch evidence: bootstrap
-    on a day-0 kept set, stream three daily embedding files through
-    foreachBatch(store.ingest), and the final kept table must be
-    IDENTICAL to the sequential reference loop's, with a day-2 copy
-    of a day-1 novel item resolving to the day-1 id (appends live
-    across micro-batches) and a copy of a day-1 DUPLICATE resolving
-    to the bootstrap ORIGINAL (flagged vectors never append)."""
-    import math
-    import os
-    import time
-
-    from git_log_to_sqlite_spark.operators import SemanticStore
-
-    def at(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    boot = [(10, at(0)), (11, at(30)), (20, at(180))]
-    days = [
-        [(101, at(15)), (102, at(2))],            # novel + history dup
-        [(201, at(16)), (202, at(2))],            # dup of day-1 novel; dup-of-a-dup
-        [(301, at(90)), (302, at(179))],          # tie-cell novel; other-cell dup
-    ]
-    schema = "vec_id long, embedding array<double>"
-
-    ref = SemanticStore(spark, str(tmp_path / "sem_seq"), threshold=0.98)
-    ref.bootstrap(spark.createDataFrame(boot, schema), cents)
-    for rows in days:
-        ref.ingest(spark.createDataFrame(rows, schema))
-
-    store = SemanticStore(spark, str(tmp_path / "sem_stream"), threshold=0.98)
-    store.bootstrap(spark.createDataFrame(boot, schema), cents)
-    inc_dir = str(tmp_path / "sem_days")
-    for d, rows in enumerate(days, start=1):
-        p = os.path.join(inc_dir, f"day{d}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(p)
-        stamp = time.time() - 300 + d * 60
-        for root, _, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (stamp, stamp))
-
-    annotations: dict[int, tuple] = {}
-
-    def _ingest(batch_df, _id):
-        for r in store.ingest(batch_df).collect():
-            annotations[r["vec_id"]] = (r["dup_of"], r["dup_source"],
-                                        r["is_kept"])
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(inc_dir)
-        .writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    assert annotations[101] == (None, None, 1)
-    assert annotations[102] == (10, "history", 0)
-    assert annotations[201] == (101, "history", 0)  # day-1 append live
-    assert annotations[202] == (10, "history", 0)   # dup-of-a-dup -> original
-    assert annotations[301] == (None, None, 1)
-    assert annotations[302] == (20, "history", 0)
-    got = {(r["vec_id"], r["cell"], tuple(r["_v"])) for r in store.read().collect()}
-    want = {(r["vec_id"], r["cell"], tuple(r["_v"])) for r in ref.read().collect()}
-    assert got == want
-    assert {v for v, _, _ in got} == {10, 11, 20, 101, 301}
