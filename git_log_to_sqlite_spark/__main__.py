@@ -173,6 +173,21 @@ def _named_by_dump(
     return commits.withColumn("repository", F.expr(map_lookup(names, "repository")))
 
 
+def _print_report(
+    t0: float, analyzed: list[str], ignored: list[str], skipped: list[str]
+) -> None:
+    """The end-of-run report of the reference's main.rs:7-26."""
+    print(f"# Done in {time.monotonic() - t0:.1f} seconds\n")
+    print(f"# {len(analyzed)} repositories in the table\n\n{', '.join(analyzed)}\n")
+    print(f"# {len(ignored)} ignored repositories:\n\n{', '.join(ignored)}\n")
+    if skipped:
+        print(
+            f"# {len(skipped)} directories were not stored for some reason. "
+            "Maybe empty, or not a git repository?:\n"
+        )
+        print("\n".join(skipped))
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _parse_args(argv)
     t0 = time.monotonic()
@@ -229,15 +244,7 @@ def main(argv: list[str] | None = None) -> int:
                 from .etl.writers import clear_sqlite
 
                 clear_sqlite(args.database)
-            print(f"# Done in {time.monotonic() - t0:.1f} seconds\n")
-            print("# 0 repositories in the table\n\n\n")
-            print(f"# {len(ignored)} ignored repositories:\n\n{', '.join(ignored)}\n")
-            if directories:
-                print(
-                    f"# {len(directories)} directories were not stored for some "
-                    "reason. Maybe empty, or not a git repository?:\n"
-                )
-                print("\n".join(directories))
+            _print_report(t0, [], ignored, directories)
             return 0
 
         # Every ignored name was dropped at scan time, so the analyzed
@@ -252,16 +259,7 @@ def main(argv: list[str] | None = None) -> int:
         repositories = build_repositories(spark, [(name, url) for _, name, url in dumps])
         write_sqlite(args.database, repositories, commits, clear=args.clear)
 
-    # Report format of /root/reference/src/main.rs:7-26.
-    print(f"# Done in {time.monotonic() - t0:.1f} seconds\n")
-    print(f"# {len(analyzed)} repositories in the table\n\n{', '.join(analyzed)}\n")
-    print(f"# {len(ignored)} ignored repositories:\n\n{', '.join(ignored)}\n")
-    if skipped:
-        print(
-            f"# {len(skipped)} directories were not stored for some reason. "
-            "Maybe empty, or not a git repository?:\n"
-        )
-        print("\n".join(skipped))
+    _print_report(t0, analyzed, ignored, skipped)
     return 0
 
 

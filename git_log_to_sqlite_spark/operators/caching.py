@@ -41,8 +41,8 @@ def _is_live(df: DataFrame) -> bool:
         return False
 
 
-def pin(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """Persist ``df`` at ``level`` and register it for release — unless
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and register it for release — unless
     an equivalent plan from the same session is already live, in which
     case ``df`` is returned unpersisted and the planner substitutes the
     existing InMemoryRelation (Catalyst ``sameResult`` matching, the
@@ -73,7 +73,7 @@ def pin(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> Da
         df._pin_semhash = h
     except Exception:  # py4j hiccup — fall through to a plain persist
         pass
-    df.persist(level)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(df)
     return df
 

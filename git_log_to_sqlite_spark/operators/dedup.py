@@ -13,13 +13,13 @@ Design rules for 100 TB:
 from __future__ import annotations
 
 import re
+from fractions import Fraction
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .caching import pin
-from .skew import _quantile_cap
 
 if TYPE_CHECKING:
     from pyspark.sql import Observation
@@ -33,6 +33,13 @@ _SHUFFLE_NODE_RE = re.compile(
     r"|Distinct|GlobalLimit|Except|Intersect)",
     re.MULTILINE,
 )
+
+# The hot-key valve's one setting: ``cap_hot_keys=True`` caps every
+# repeated key at VALVE_HEADROOM x the VALVE_QUANTILE of the repeated-key
+# counts (the jaccard shingle valve applies the quantile directly; see
+# _drop_hot_keys). The DuckDB oracle twins read the same two constants.
+VALVE_QUANTILE = 0.92
+VALVE_HEADROOM = 10
 
 
 def md5_long(col: Column, hex_chars: int = 15) -> Column:
@@ -182,78 +189,199 @@ def _band_keys(
     )
 
 
-def _hot_key_set(
+def _check_valve(cap_hot_keys: bool, observation: "Observation | None") -> None:
+    """The valve's one argument check, run by every entry point BEFORE
+    its first pin: a raise after a pin leaks a never-materialized
+    cache-registry entry until ``release_caches()``. Telemetry needs
+    the valve — without it the observation is never attached and
+    ``Observation.get`` blocks or raises far from the cause."""
+    if observation is not None and not cap_hot_keys:
+        raise ValueError(
+            "observation requires cap_hot_keys=True; without the valve it "
+            "would never be attached and Observation.get would block/raise "
+            "far from the cause"
+        )
+
+
+def _quantile_cap(d_values: DataFrame) -> DataFrame:
+    """1-row ``(_max_df)`` DataFrame: the smallest posting-list length
+    d* such that at least fraction :data:`VALVE_QUANTILE` of (length
+    >= 2) posting lists have length <= d* — a discrete quantile of the
+    key-frequency distribution, computed INSIDE the plan (no driver
+    collect, no corpus constant) — the valve's bucket-size statistic.
+
+    Takes a ``(d)`` DataFrame with one row per length-{>=2} posting
+    list, derived from the PERSISTED per-key count table (the same
+    table that drives the cap-before-collect hot-set filter), so the
+    histogram costs no extra corpus pass. (A separate count
+    aggregation over the exploded ``(_id, shingle)`` table can never
+    share work with the posting build — the count-agg's partial
+    differs from partial_collect_list, so the two branches never share
+    an exchange and the whole corpus would be scanned and exploded
+    TWICE, half the jaccard query's wall clock at sf0.1.) The persisted
+    set is exactly the repeated-key posting lists — a subset of the one
+    shuffle output the pair explode consumes anyway, and in natural
+    corpora (rare keys dominate) a small fraction of the corpus;
+    MEMORY_AND_DISK spills instead of evicting under pressure.
+
+    The fold runs over the df *histogram* (one row per distinct
+    posting-list length — bounded by the longest posting list,
+    thousands of rows at worst at corpus scale), not over data.
+    Folding the sorted histogram ARRAY inside one global aggregate
+    computes d* with one exchange: partial collect_list combines
+    map-side, sort_array orders by d (distinct, so the tie field never
+    decides), and the running sum latches the first crossing. A sort
+    plus two global windows would cost an extra single-partition
+    exchange for the same answer; collecting the histogram into one
+    array is exactly as bounded as such a window — both put the whole
+    histogram on one task.
+    """
+    hist = d_values.groupBy("d").agg(F.count(F.lit(1)).alias("n_sh"))
+    # The threshold compare is pure integer arithmetic (cum * den >=
+    # num * tot with q = num/den taken from q's decimal digits), so the
+    # Spark and DuckDB twins can never disagree by a rounding ulp the
+    # way ceil(double * count) can (e.g. 0.9 * 10 = 9.000000000000002
+    # in doubles).
+    frac = Fraction(str(VALVE_QUANTILE))
+    # _tot is an AGGREGATE output, not a projected fold: CollapseProject
+    # would inline a projected fold into the crossing lambda below and
+    # re-evaluate it PER ELEMENT (O(H^2) over the histogram); an
+    # aggregate attribute cannot be inlined.
+    one = hist.agg(
+        F.sort_array(F.collect_list(F.struct("d", "n_sh"))).alias("_hist"),
+        F.sum("n_sh").alias("_tot"),
+    )
+    # running sum in d order; `best` latches the FIRST d whose
+    # cumulative count crosses q — the smallest such d.
+    crossing = F.aggregate(
+        F.col("_hist"),
+        F.struct(
+            F.lit(0).cast("long").alias("cum"),
+            F.lit(None).cast("long").alias("best"),
+        ),
+        lambda acc, x: F.struct(
+            (acc["cum"] + x["n_sh"]).alias("cum"),
+            F.coalesce(
+                acc["best"],
+                F.when(
+                    (acc["cum"] + x["n_sh"]) * F.lit(frac.denominator)
+                    >= F.lit(frac.numerator) * F.col("_tot"),
+                    x["d"],
+                ),
+            ).alias("best"),
+        ),
+        lambda acc: acc["best"],
+    )
+    return one.select(crossing.alias("_max_df"))
+
+
+def _drop_hot_keys(
     keyed: DataFrame,
     key_cols: list[str],
-    max_abs: int | None,
-    quantile: float | None,
-    quantile_headroom: int = 1,
-    observation: "Observation | None" = None,
-    dropped_name: str = "keys_dropped",
-    avoided: str = "pairs",
+    observation: "Observation | None",
+    dropped_name: str,
+    probe: bool = False,
+    headroom: int = VALVE_HEADROOM,
 ) -> DataFrame:
-    """The ONE hot-key derivation every skew valve shares (jaccard
-    shingles, minhash/simhash band buckets, substring windows —
-    previously three drifting copies): (1) a map-combinable count per
-    key over ``keyed`` — partial counts combine map-side, so the count
-    shuffle is skew-free by construction; (2) cap = ``max_abs``, or
-    ``quantile_headroom`` x the q-quantile of the repeated-key count
-    distribution (:func:`_quantile_cap`, derived in-plan and broadcast
-    back; the headroom multiply is integer and mirrored in every SQL
-    oracle twin, so the engines cannot diverge by a rounding ulp);
-    (3) the above-cap key set, returned PINNED — one row per
-    degenerate key, near-zero rows in natural corpora, and the
-    quantile chain above it is three tiny serialized stages that
-    would otherwise re-execute on every consumption.
+    """The hot-key valve every ``cap_hot_keys=True`` operator shares
+    (jaccard shingles, minhash/simhash band buckets, substring and
+    frame windows): anti-filter the degenerate keys out of ``keyed``
+    BEFORE it feeds a pair join or a posting aggregate.
 
-    Exactly one of ``max_abs`` / ``quantile`` must be set; callers
-    validate mutual exclusion in their own parameter vocabulary.
-    Telemetry is EAGER (see :func:`_capped_bands`'s docstring for the
-    three measured AQE failure modes of a lazily-planned valve
-    observation): ``dropped_name`` counts capped keys, and ``avoided``
-    picks the second metric — ``"pairs"`` reports ``pairs_avoided`` =
-    sum d(d-1)/2 over capped keys (self-join callers), ``"rows"``
-    reports ``rows_dropped`` = sum d (probe-side callers). Sums
-    coalesce to 0 so an empty d>=2 histogram reports honest zeros,
-    never SQL NULL.
+    A key with d rows emits d(d-1)/2 candidate pairs — quadratic in the
+    hottest key. Degenerate keys are a real corpus pathology: a
+    stop-shingle, near-empty documents all minhashing to the same band
+    key, templated boilerplate collapsing whole shards onto one window.
+    Three steps: (1) a map-combinable count per key — partial counts
+    combine map-side, so the count shuffle is skew-free by
+    construction; (2) cap = ``headroom`` x the :data:`VALVE_QUANTILE`
+    of the repeated-key count distribution (:func:`_quantile_cap`,
+    derived in-plan and broadcast back as one row; the headroom
+    multiply is integer and mirrored in every SQL oracle twin, so the
+    engines cannot diverge by a rounding ulp); (3) the above-cap key
+    set, PINNED — one row per degenerate key, near-zero rows in natural
+    corpora, and the quantile chain above it is three tiny serialized
+    stages that would otherwise re-execute on every consumption —
+    anti-joins ``keyed``.
+
+    The band and window valves are a SPREAD guard, not a tail cut
+    (``headroom`` = :data:`VALVE_HEADROOM`). (a) Each LSH band carries
+    rows_per_band/num_hashes of the whole signature, so buckets
+    moderately past the bulk DO witness unique true pairs (measured at
+    sf0.1: the one d=13 bucket against a p92 of 3 carries 77 pairs no
+    other band re-finds), and a shared passage's continuity depends on
+    every window along it — a direct tail quantile would shed recall.
+    (b) A degenerate bucket inflates its own histogram's tail, so as
+    q -> 1 the derived cap converges to the degenerate size and the
+    valve never fires — the failure mode it exists for. Anchoring at
+    the bulk (p92) and granting an order-of-magnitude headroom keeps
+    every naturally-sized bucket (natural max / p92 stays within one
+    magnitude — zipfian band keys are exactly what minhashing
+    destroys) while a degenerate key, which lands orders of magnitude
+    out, is dropped. The anchor has one limit: when degenerate keys
+    make up more than 1 - :data:`VALVE_QUANTILE` of the distinct
+    repeated keys (a small corpus, or one where most repeated buckets
+    are degenerate), they set the quantile themselves, the derived cap
+    rises to their size and nothing is dropped. No setting caps that
+    case; the valve has no absolute cap. The
+    jaccard shingle valve passes ``headroom=1``: rare shingles carry
+    the near-dup pairs, so the direct quantile is lossless there.
+
+    The anti-join is deliberately unhinted: the hot set is tiny in
+    natural corpora (the planner broadcasts it from size estimates)
+    but grows with corpus pathology — the top (1-q) fraction of
+    distinct repeated keys grows LINEARLY with the corpus, and a forced
+    broadcast at corpus scale would be multi-GB and fail outright — so
+    the planner degrades to a memory-safe shuffle anti-join on the
+    same key the downstream join or aggregate shuffles on anyway.
+
+    Telemetry is EAGER: ``dropped_name`` counts capped keys, and
+    ``probe`` picks the second metric — by default ``pairs_avoided`` =
+    sum d(d-1)/2 over capped keys (self-join callers); ``probe=True``
+    reports ``rows_dropped`` = sum d (probe-side callers, where ``keyed`` is the build side of a probe x corpus
+    join: the candidates avoided there are |probe bucket| x d,
+    unknowable from this side alone, and the self-join formula would
+    overstate the win). The metrics are computed at call time by a
+    dedicated tiny job over the pinned count table (the consuming
+    query reuses it), and ``Observation.get`` is readable immediately.
+    This is the only shape that survives Spark's runtime machinery, all
+    measured: (a) a CollectMetrics node inside an AQE query stage —
+    anywhere below the exchanges the consuming join needs — does not
+    propagate its metrics row once the corpus is big enough for AQE to
+    wrap stages, and Observation.get fails on an empty row; (b) when
+    the valve does not fire, AQE's empty-relation propagation prunes
+    the runtime-empty anti-join build side together with any observe
+    node inside it; (c) a self-join of one observed frame duplicates
+    the CollectMetrics node and the metrics row again never
+    materializes. Observing a root-level frame that the operator itself
+    consumes exactly once sidesteps all three. Sums coalesce to 0 so an
+    empty d>=2 histogram reports honest zeros, never SQL NULL.
     """
-    counts = (
+    # counts is consumed twice (histogram, then hot filter) — 16 B per
+    # distinct repeated key, the smallest aggregate in any caller.
+    # pin() registers it for release_caches().
+    counts = pin(
         keyed.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("d"))
         .filter(F.col("d") >= 2)
     )
-    if quantile is not None or observation is not None:
-        # quantile route: counts is consumed twice (histogram, then
-        # hot filter) — 16 B per distinct repeated key, the smallest
-        # aggregate in any caller. Absolute route with telemetry: the
-        # eager metrics job below would re-aggregate the stream
-        # without the pin. pin() registers it for release_caches().
-        counts = pin(counts)
-    if quantile is not None:
-        # 1-row broadcast: every count row sees the derived cap (a
-        # BuildRight nested-loop join whose build side is ONE row —
-        # the broadcast-scalar plan, not a data x data nested loop).
-        hot = counts.crossJoin(
-            F.broadcast(
-                _quantile_cap(
-                    counts.select(F.col("d").cast("long").alias("d")), quantile
-                )
-            )
-        )
-        cap = F.col("_max_df") * F.lit(quantile_headroom)
-    else:
-        hot = counts
-        cap = F.lit(max_abs)
+    # 1-row broadcast: every count row sees the derived cap (a
+    # BuildRight nested-loop join whose build side is ONE row — the
+    # broadcast-scalar plan, not a data x data nested loop).
+    hot = counts.crossJoin(
+        F.broadcast(_quantile_cap(counts.select(F.col("d").cast("long").alias("d"))))
+    )
+    cap = F.col("_max_df") * F.lit(headroom)
     if observation is not None:
         d = F.col("d").cast("long")
-        if avoided == "pairs":
-            second = F.coalesce(
-                F.sum(F.when(d > cap, d * (d - 1) / 2).otherwise(0)), F.lit(0)
-            ).cast("long").alias("pairs_avoided")
-        else:
+        if probe:
             second = F.coalesce(
                 F.sum(F.when(d > cap, d).otherwise(0)), F.lit(0)
             ).cast("long").alias("rows_dropped")
+        else:
+            second = F.coalesce(
+                F.sum(F.when(d > cap, d * (d - 1) / 2).otherwise(0)), F.lit(0)
+            ).cast("long").alias("pairs_avoided")
         hot.observe(
             observation,
             F.coalesce(F.sum((d > cap).cast("long")), F.lit(0)).alias(
@@ -261,153 +389,8 @@ def _hot_key_set(
             ),
             second,
         ).count()  # JVM-only drain; completes the Observation
-    return pin(hot.filter(F.col("d").cast("long") > cap).select(*key_cols))
-
-
-def _validate_band_caps(
-    max_band_size: int | None,
-    band_size_quantile: float | None,
-    observation: "Observation | None",
-) -> None:
-    """Valve-argument validation shared by every band-valve caller —
-    invoked by each ENTRY POINT before its signature pin (a check that
-    fires only inside :func:`_capped_bands` runs after the pin and
-    leaks a never-materialized cache-registry entry until
-    ``release_caches()``), and again by ``_capped_bands`` itself for
-    direct callers."""
-    if max_band_size is not None and band_size_quantile is not None:
-        raise ValueError("max_band_size and band_size_quantile are mutually exclusive")
-    if (
-        observation is not None
-        and max_band_size is None
-        and band_size_quantile is None
-    ):
-        raise ValueError(
-            "observation requires a cap (max_band_size or "
-            "band_size_quantile); without one it would never be "
-            "attached and Observation.get would block/raise far "
-            "from the cause"
-        )
-
-
-def _validate_df_caps(
-    max_df: int | None,
-    max_df_quantile: float | None,
-    observation: "Observation | None",
-) -> None:
-    """Occurrence-cap argument validation shared by every
-    inverted-index caller (batch/incremental substring, video scenes,
-    audio segments) — the ``max_df`` vocabulary twin of
-    :func:`_validate_band_caps`, called by each entry point BEFORE
-    any pin and again by :func:`_span_pairs_from_windows` for direct
-    callers."""
-    if max_df is not None and max_df_quantile is not None:
-        raise ValueError("max_df and max_df_quantile are mutually exclusive")
-    if observation is not None and max_df is None and max_df_quantile is None:
-        raise ValueError(
-            "observation requires a cap (max_df or max_df_quantile); "
-            "without one it would never be attached and Observation.get "
-            "would block/raise far from the cause"
-        )
-
-
-def _capped_bands(
-    bands: DataFrame,
-    max_band_size: int | None,
-    band_size_quantile: float | None,
-    observation: "Observation | None" = None,
-    quantile_headroom: int = 10,
-    join_shape: str = "self",
-) -> DataFrame:
-    """Hot-band skew valve: anti-filter degenerate band buckets out of
-    an (id, band, band_key) table BEFORE it feeds a band equi-join.
-
-    A band bucket with d documents emits d(d-1)/2 candidate pairs —
-    quadratic in the hottest key, exactly the blowup a stop-shingle
-    causes in the jaccard inverted index. Degenerate band keys are a
-    real corpus pathology: near-empty documents all minhash to the
-    same few values, and templated boilerplate collapses whole shards
-    onto one band key. The valve is the same two-phase shape as the
-    jaccard df cap: (1) a map-combinable count per (band, band_key) —
-    partial counts combine map-side, so the count shuffle is skew-free
-    by construction; (2) the above-cap bucket set anti-filters the
-    bands table before the self/probe join, so the join never sees a
-    hot key and candidate mass stays bounded by cap x buckets.
-
-    The quantile route is a SPREAD guard, not a tail cut: cap =
-    ``quantile_headroom`` x the q-quantile of the repeated-bucket-size
-    distribution (:func:`_quantile_cap`). Two reasons it differs from
-    the jaccard cap's direct quantile. (a) Each LSH band carries
-    rows_per_band/num_hashes of the whole signature, so buckets
-    moderately past the bulk DO witness unique true pairs (measured at
-    sf0.1: the one d=13 bucket against a p92 of 3 carries 77 pairs no
-    other band re-finds) — a direct tail quantile would shed recall.
-    (b) A degenerate bucket inflates its own histogram's tail, so as
-    q -> 1 the derived cap converges to the degenerate size and the
-    valve never fires — the failure mode it exists for. Anchoring at
-    the bulk (p92) and granting an order-of-magnitude headroom keeps
-    every naturally-sized bucket (natural max / p92 stays within one
-    magnitude — zipfian band keys are exactly what minhashing
-    destroys) while any degenerate key, which lands orders of
-    magnitude out, is dropped no matter how it skews the tail.
-
-    The anti-join is deliberately unhinted, mirroring the jaccard
-    hot-set join: the hot bucket set is tiny in natural corpora (the
-    planner broadcasts it from size estimates) but grows with corpus
-    pathology, where the planner degrades to a memory-safe shuffle
-    anti-join on the same (band, band_key) key the candidate join
-    shuffles on anyway.
-
-    ``max_band_size`` (absolute, applied as-is) and
-    ``band_size_quantile`` (the spread guard above) are mutually
-    exclusive; with neither, the bands pass through unfiltered (and
-    ``observation`` would never attach, so it raises). Telemetry
-    follows ``join_shape``: ``"self"`` (the batch operator's
-    self-join) reports ``bands_dropped`` + ``pairs_avoided`` =
-    sum d(d-1)/2 over dropped buckets; ``"probe"`` (the incremental
-    operator, where this table is the build side of an
-    increment x history join) reports ``bands_dropped`` +
-    ``rows_dropped`` = sum d — the candidates avoided there are
-    |increment bucket| x d, unknowable from this side alone, and
-    reporting the self-join formula would overstate the win by the
-    ratio of history to increment bucket sizes.
-
-    Telemetry is EAGER: when ``observation`` is passed, the metrics
-    are computed at call time by a dedicated tiny job over the count
-    table (pinned, so the consuming query reuses it — the extra job
-    aggregates one cached row per repeated bucket), and
-    ``Observation.get`` is readable immediately. This is the only
-    shape that survives Spark's runtime machinery, all measured on
-    this box: (a) a CollectMetrics node inside an AQE query stage —
-    anywhere below the exchanges the consuming band join needs — does
-    not propagate its metrics row once the corpus is big enough for
-    AQE to wrap stages, and Observation.get fails on an empty row;
-    (b) when the valve does not fire, AQE's empty-relation
-    propagation prunes the runtime-empty anti-join build side
-    together with any observe node inside it; (c) a self-join of one
-    observed frame duplicates the CollectMetrics node and the metrics
-    row again never materializes. Observing a root-level frame that
-    the operator itself consumes exactly once sidesteps all three.
-    The observed sums also coalesce to 0 — an empty d>=2 histogram
-    makes SQL sum-over-empty NULL, and the honest no-hot-bucket
-    report is 0, not None.
-    """
-    if join_shape not in ("self", "probe"):
-        raise ValueError(f"join_shape must be 'self' or 'probe', got {join_shape!r}")
-    _validate_band_caps(max_band_size, band_size_quantile, observation)
-    if max_band_size is None and band_size_quantile is None:
-        return bands
-    hot = _hot_key_set(
-        bands,
-        ["band", "band_key"],
-        max_band_size,
-        band_size_quantile,
-        quantile_headroom=quantile_headroom,
-        observation=observation,
-        dropped_name="bands_dropped",
-        avoided="pairs" if join_shape == "self" else "rows",
-    )
-    return bands.join(hot, ["band", "band_key"], "left_anti")
+    hot = pin(hot.filter(F.col("d").cast("long") > cap).select(*key_cols))
+    return keyed.join(hot, key_cols, "left_anti")
 
 
 def _band_self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
@@ -418,7 +401,7 @@ def _band_self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     perceptual bit slices via :func:`hamming_pairs`). Sides are
     column-renamed projections, so the join condition names each side
     unambiguously. A hot bucket with d members emits d(d-1)/2 pairs on
-    one join key; the defence is the :func:`_capped_bands` valve
+    one join key; the defence is the :func:`_drop_hot_keys` valve
     upstream and AQE's skew-join split."""
     a = bands.select(
         F.col("band").alias("_band_a"),
@@ -467,8 +450,7 @@ def minhash_lsh_pairs(
     rows_per_band: int = 2,
     min_agree: float = 0.25,
     shingle_n: int = 3,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
@@ -481,28 +463,23 @@ def minhash_lsh_pairs(
     estimate is a column comparison on a single joined row per pair
     (no K-row re-join).
 
-    ``max_band_size`` / ``band_size_quantile`` engage the hot-band
-    skew valve (:func:`_capped_bands`): degenerate band buckets — the
-    one quadratic-risk surface of the band join — are anti-filtered
-    before the self-join, bounding candidate mass by cap x buckets.
-    Pass an :class:`~pyspark.sql.Observation` to receive
+    ``cap_hot_keys=True`` engages the hot-band skew valve
+    (:func:`_drop_hot_keys`): degenerate band buckets — the one
+    quadratic-risk surface of the band join — are anti-filtered before
+    the self-join, bounding candidate mass by cap x buckets. Pass an
+    :class:`~pyspark.sql.Observation` (requires the valve) to receive
     ``bands_dropped`` / ``pairs_avoided`` telemetry.
     """
-    _validate_band_caps(  # before the pin — a bad call must not leak a cache entry
-        max_band_size, band_size_quantile, observation
-    )
+    _check_valve(cap_hot_keys, observation)
     # The signature table is referenced 4x downstream (both band-join
     # branches + both agreement joins); without persisting, Spark
     # recomputes the shingle explode + K-way min aggregate per branch.
     # Signatures are K x 8 bytes/doc — tiny relative to the corpus.
     # pin() registers the cache for release_caches().
     mh = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
-    bands = _capped_bands(
-        _band_keys(mh, id_col, num_hashes, rows_per_band),
-        max_band_size,
-        band_size_quantile,
-        observation,
-    )
+    bands = _band_keys(mh, id_col, num_hashes, rows_per_band)
+    if cap_hot_keys:
+        bands = _drop_hot_keys(bands, ["band", "band_key"], observation, "bands_dropped")
 
     cand = _band_self_pairs(bands, id_col)
     ma = mh.select(
@@ -533,8 +510,7 @@ def ngram_jaccard_pairs(
     text_col: str,
     threshold: float = 0.2,
     shingle_n: int = 3,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs >= threshold via an inverted index.
@@ -546,41 +522,27 @@ def ngram_jaccard_pairs(
     branches + a join, recomputing the explode on both sides) with two
     shuffles total — same output, about half the shuffle volume.
 
-    The df cap is the skew valve: a hot (stop-)shingle whose posting
-    list has d documents contributes d(d-1)/2 pairs — quadratic in the
-    hottest key, the thing that falls over first at corpus scale.
-    Above-cap shingles are anti-filtered out of the exploded stream
-    BEFORE the posting aggregate (round 7: a map-combinable per-shingle
-    count derives the hot set, which broadcasts back), so neither the
-    collect_list buffer nor the pair explode ever sees a hot shingle —
-    a stop-shingle posting array would otherwise be O(corpus), the
-    operator's OOM unit. The cap makes the reported jaccard a lower
+    ``cap_hot_keys=True`` engages the skew valve: a hot (stop-)shingle
+    whose posting list has d documents contributes d(d-1)/2 pairs —
+    quadratic in the hottest key, the thing that falls over first at
+    corpus scale. Above-cap shingles are anti-filtered out of the
+    exploded stream BEFORE the posting aggregate (round 7: a
+    map-combinable per-shingle count derives the hot set, which
+    broadcasts back), so neither the collect_list buffer nor the pair
+    explode ever sees a hot shingle — a stop-shingle posting array
+    would otherwise be O(corpus), the operator's OOM unit. The cap makes the reported jaccard a lower
     bound: hot shingles no longer count toward the intersection, while
     union sizes stay full-corpus. In practice near-dup pairs are
-    carried by their rare shingles — at a ~p92 cap the >=0.2 pair SET
-    is unchanged at both test SFs while the pair explode shrinks
-    measurably.
+    carried by their rare shingles — so the cap is the p92 of the
+    posting-list-length distribution itself (no spread-guard headroom),
+    derived inside the plan: the >=0.2 pair SET is unchanged at both
+    test SFs while the pair explode shrinks measurably.
 
-    Two spellings, mutually exclusive:
-
-    * ``max_df_quantile`` (preferred): the cap is the q-quantile of the
-      posting-list-length distribution, derived inside the plan by
-      :func:`_quantile_cap` and broadcast back — it scales with the
-      corpus instead of baking in an absolute.
-    * ``max_df``: an explicit absolute cap, for callers that pre-tuned
-      one.
-
-    Pass an :class:`~pyspark.sql.Observation` as ``observation`` to
-    receive ``shingles_dropped`` / ``pairs_avoided`` telemetry.
-    Telemetry is EAGER — the metrics run as a dedicated tiny job over
-    the pinned per-shingle count table at CALL time, and
-    ``Observation.get`` is readable immediately. (A lazily-planned
-    observe node inside this operator's join subtree loses its
-    metrics row under AQE — buried in a query stage, pruned with an
-    empty build side, or duplicated — see
-    :func:`_capped_bands`'s docstring for the measured failure
-    modes.)
+    Pass an :class:`~pyspark.sql.Observation` as ``observation``
+    (requires the valve) to receive eager ``shingles_dropped`` /
+    ``pairs_avoided`` telemetry (:func:`_drop_hot_keys`).
     """
+    _check_valve(cap_hot_keys, observation)
     df = _spread(df)
     # 64-bit-hash the shingle immediately: the groupBy/shuffle key is
     # 8 bytes instead of a 20-40 byte trigram string (~10% here, and
@@ -607,8 +569,7 @@ def ngram_jaccard_pairs(
             F.size(shingles(F.split(F.col(text_col), " "), shingle_n)).alias("n_sh"),
         )
     )
-    _validate_df_caps(max_df, max_df_quantile, observation)
-    if max_df is not None or max_df_quantile is not None:
+    if cap_hot_keys:
         # Two-phase cap (round 7): bound the AGGREGATE, not just its
         # output. Filtering posting lists after collect_list still
         # builds the full array for every hot shingle first — a
@@ -622,37 +583,18 @@ def ngram_jaccard_pairs(
         # scan+shingle map pass over the corpus; persisting the
         # exploded (id, shingle) stream instead would cache
         # ~16 B x every shingle occurrence (corpus-sized), strictly
-        # worse at scale.
-        hot = _hot_key_set(
-            sh,
-            ["shingle"],
-            max_df,
-            max_df_quantile,
-            quantile_headroom=1,  # direct quantile: rare shingles carry
-            # the pairs, so the tight cap is lossless (pair-set tests)
-            observation=observation,
-            dropped_name="shingles_dropped",
-            avoided="pairs",
-        )
-        # No broadcast HINT on the anti-join: the hot set is the top
-        # (1-q) fraction of distinct repeated shingles, which grows
-        # LINEARLY with corpus size — at the 100-TB design point a
-        # forced broadcast would be multi-GB and fail outright. Left
-        # unhinted, the planner broadcasts from its size estimate while
-        # the set is small (verified: the static plan at bench SF still
-        # compiles a BroadcastHashJoin LeftAnti, keeping the map-side
+        # worse at scale. The unhinted anti-join still compiles a
+        # BroadcastHashJoin LeftAnti at bench SF, keeping the map-side
         # drop of hot rows before the shuffle — this matters because
         # the join sits below the postings cache boundary, where AQE
-        # does not replan) and degrades to a shuffle-side anti-join
-        # when the estimate outgrows the threshold. The fallback is
-        # memory-safe (sorted streams), AQE-skew-splittable, and
-        # shuffles on the same shingle key the collect_list aggregate
-        # needs anyway.
-        sh = sh.join(hot, "shingle", "left_anti")
+        # does not replan.
+        sh = _drop_hot_keys(
+            sh, ["shingle"], observation, "shingles_dropped", headroom=1
+        )
     postings = sh.groupBy("shingle").agg(
         F.array_sort(F.collect_list("_id")).alias("ids")
     ).filter(F.size("ids") >= 2)
-    if max_df is not None or max_df_quantile is not None:
+    if cap_hot_keys:
         # With a cap every posting list is bounded (<= cap ids), so the
         # postings table is a safe, compact cache; pinning it makes
         # repeat invocations in one session (bench's min-of-3, a
@@ -731,9 +673,7 @@ def substring_span_pairs(
     text_col: str,
     window: int = 8,
     min_run_tokens: int = 16,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
-    quantile_headroom: int = 10,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Exact-substring dedup: for every document pair sharing a
@@ -763,11 +703,11 @@ def substring_span_pairs(
     window to 8 bytes (xxhash64 — the shuffle carries (id, pos, h) =
     ~24 B/cell, never window text; a collision merges two windows'
     postings and the probability is ~W^2/2^65 per corpus, the same
-    documented trade as jaccard's shingle hash); (2) a map-combinable
-    per-hash occurrence count derives the df-cap hot set, which
-    anti-filters the stream BEFORE collect_list, so no posting buffer
-    ever exceeds cap cells (cap-before-collect, the round-7
-    invariant); (3) postings explode into cross-document occurrence
+    documented trade as jaccard's shingle hash); (2) under
+    ``cap_hot_keys=True``, a map-combinable per-hash occurrence count
+    derives the hot set, which anti-filters the stream BEFORE
+    collect_list, so no posting buffer ever exceeds cap cells
+    (cap-before-collect, the round-7 invariant); (3) postings explode into cross-document occurrence
     pairs — candidate mass is sum(occ^2) bounded by cap x cells, not
     n^2; (4) ONE window function partitioned by (id_a, id_b, diag) —
     millions of small groups, no global window — computes islands,
@@ -777,34 +717,33 @@ def substring_span_pairs(
     Two semantic trades, both lower-bounding (a reported run is always
     real; a real run may be under-reported):
 
-    * The df cap drops BOILERPLATE windows (appearing > cap times
+    * The valve drops BOILERPLATE windows (appearing > cap times
       corpus-wide). A run containing a dropped window splits into
       shorter islands — runs whose every window is hot disappear.
       That is the intended semantics for training-data dedup (the
       passages worth catching are distinctive, and an uncapped hot
       window is this operator's d(d-1)/2 skew unit), and the oracle
       twin applies the identical cap so the engines cannot diverge.
-      The quantile route therefore takes the minhash valve's SPREAD
-      GUARD form, not jaccard's direct quantile: cap =
-      ``quantile_headroom`` x the q-quantile of the repeated-window
-      occurrence distribution. Unlike jaccard (where rare shingles
-      carry the pairs, so a tight cap is lossless), a shared run's
-      CONTINUITY depends on every window along it — and passage
-      families (3+ documents sharing one boilerplate passage) are
-      common and worth reporting, while a direct p92 cap lands at the
-      d=2 bulk and sheds them (measured at sf0.1: 27 of 246 pairs
-      lost). An order of magnitude of headroom keeps every natural
-      family while degenerate corpus-wide windows, which land orders
-      of magnitude out, are still dropped (at 10 x p92 the sf0.1
-      pair set equals uncapped exactly).
+      The cap takes the minhash valve's SPREAD GUARD form, not
+      jaccard's direct quantile: cap = :data:`VALVE_HEADROOM` x the
+      p92 of the repeated-window occurrence distribution. Unlike
+      jaccard (where rare shingles carry the pairs, so a tight cap is
+      lossless), a shared run's CONTINUITY depends on every window
+      along it — and passage families (3+ documents sharing one
+      boilerplate passage) are common and worth reporting, while a
+      direct p92 cap lands at the d=2 bulk and sheds them (measured at
+      sf0.1: 27 of 246 pairs lost). An order of magnitude of headroom
+      keeps every natural family while degenerate corpus-wide
+      windows, which land orders of magnitude out, are still dropped
+      (at 10 x p92 the sf0.1 pair set equals uncapped exactly).
     * Tokens are single-space splits, matching the repo's other text
       operators; runs are measured in tokens, not characters.
 
     Returns ``(id_a, id_b, longest_run_tokens, n_shared_windows)``
     with ``longest_run_tokens >= min_run_tokens``. Pass an
-    :class:`~pyspark.sql.Observation` (requires a cap) to receive
+    :class:`~pyspark.sql.Observation` (requires the valve) to receive
     eager ``windows_dropped`` / ``pairs_avoided`` telemetry — same
-    contract as every valve caller (:func:`_hot_key_set`).
+    contract as every valve caller (:func:`_drop_hot_keys`).
     """
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
@@ -813,14 +752,12 @@ def substring_span_pairs(
             f"min_run_tokens ({min_run_tokens}) must be >= window ({window}): "
             "a shorter run has no complete window and cannot be observed"
         )
-    _validate_df_caps(max_df, max_df_quantile, observation)
+    _check_valve(cap_hot_keys, observation)
     return _span_pairs_from_windows(
         window_table(df, id_col, text_col, window),
         window,
         min_run_tokens,
-        max_df,
-        max_df_quantile,
-        quantile_headroom,
+        cap_hot_keys,
         observation,
     )
 
@@ -829,9 +766,7 @@ def _span_pairs_from_windows(
     w: DataFrame,
     k: int,
     min_run_tokens: int,
-    max_df: int | None,
-    max_df_quantile: float | None,
-    quantile_headroom: int,
+    cap_hot_keys: bool,
     observation: "Observation | None",
     dropped_name: str = "windows_dropped",
 ) -> DataFrame:
@@ -846,7 +781,7 @@ def _span_pairs_from_windows(
     the tokens-per-cell width (run length = islands + k - 1; a
     one-frame cell passes k=1).
 
-    Under a cap, ``w`` is consumed twice (the valve's count aggregate
+    Under the valve, ``w`` is consumed twice (the valve's count aggregate
     and the anti-joined main stream).  Whether to pin it is the
     CALLER's trade, not this helper's: text windows are one row per
     token (~24 B x corpus tokens — caching is corpus-sized, and
@@ -854,19 +789,8 @@ def _span_pairs_from_windows(
     decision), while the multimodal callers' ``w`` derives from an
     expensive Python decode over far fewer rows (one per frame), so
     THOSE callers pin before passing it here."""
-    _validate_df_caps(max_df, max_df_quantile, observation)
-    if max_df is not None or max_df_quantile is not None:
-        hot = _hot_key_set(
-            w,
-            ["h"],
-            max_df,
-            max_df_quantile,
-            quantile_headroom=quantile_headroom,
-            observation=observation,
-            dropped_name=dropped_name,
-            avoided="pairs",
-        )
-        w = w.join(hot, "h", "left_anti")
+    if cap_hot_keys:
+        w = _drop_hot_keys(w, ["h"], observation, dropped_name)
     postings = (
         w.groupBy("h")
         .agg(F.array_sort(F.collect_list(F.struct("_id", "pos"))).alias("occ"))
@@ -935,9 +859,7 @@ def incremental_substring_spans(
     text_col: str,
     window: int = 8,
     min_run_tokens: int = 16,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
-    quantile_headroom: int = 10,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Passage-level dedup of a daily batch against accumulated
@@ -954,7 +876,7 @@ def incremental_substring_spans(
     internal duplicates are deliberately out of scope (run the batch
     operator within the day), exactly as in the minhash twin.
 
-    The occurrence cap is derived from the HISTORY side only (the
+    The valve's occurrence cap is derived from the HISTORY side only (the
     increment cannot skew a quantile computed before it arrives, and
     history boilerplate is what multiplies every future probe);
     above-cap windows anti-filter the history table BEFORE the probe
@@ -964,9 +886,9 @@ def incremental_substring_spans(
     candidates are unknowable from the history side alone, same
     argument as the minhash probe valve).
 
-    History's window table is pinned when a cap is requested — the
+    History's window table is pinned under the valve — the
     valve's count aggregation and the probe join each consume it, and
-    re-deriving means re-tokenizing history; without a cap it is
+    re-deriving means re-tokenizing history; without the valve it is
     consumed once and a cache would only add write cost.
 
     Hot windows: a daily-scale increment's window table sits far under
@@ -974,9 +896,8 @@ def incremental_substring_spans(
     and a boilerplate window's d_hist x d_inc product parallelizes over
     the history side's input splits. When the increment is too large
     to broadcast, one hot window is one sort-merge group; bound it with
-    ``max_df`` / ``max_df_quantile`` (which sheds the capped window's
-    matches, reported in the telemetry) or rely on AQE's skew-join
-    split.
+    ``cap_hot_keys=True`` (which sheds the capped window's matches,
+    reported in the telemetry) or rely on AQE's skew-join split.
     """
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
@@ -985,26 +906,17 @@ def incremental_substring_spans(
             f"min_run_tokens ({min_run_tokens}) must be >= window ({window}): "
             "a shorter run has no complete window and cannot be observed"
         )
-    _validate_df_caps(max_df, max_df_quantile, observation)
-    capped = max_df is not None or max_df_quantile is not None
+    _check_valve(cap_hot_keys, observation)
     wh = window_table(history, id_col, text_col, window)
-    if capped:
-        # consumed twice under a cap (the valve's count aggregation +
-        # the probe join): pin so history tokenizes once
+    if cap_hot_keys:
+        # consumed twice under the valve (its count aggregation + the
+        # probe join): pin so history tokenizes once
         wh = pin(wh)
     wi = window_table(increment, id_col, text_col, window)
-    if capped:
-        hot = _hot_key_set(
-            wh,
-            ["h"],
-            max_df,
-            max_df_quantile,
-            quantile_headroom=quantile_headroom,
-            observation=observation,
-            dropped_name="windows_dropped",
-            avoided="rows",
+    if cap_hot_keys:
+        wh = _drop_hot_keys(
+            wh, ["h"], observation, "windows_dropped", probe=True
         )
-        wh = wh.join(hot, "h", "left_anti")
     # renamed projections: history = corpus side, increment = probe side
     a = wh.select(
         F.col("h").alias("_h_h"),
@@ -1101,8 +1013,7 @@ def simhash_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Near-duplicate pairs via SimHash bit-slice banding — the pair
@@ -1133,10 +1044,7 @@ def simhash_pairs(
     documents use ``bits=60, bands=4`` (15-bit slices, ~32k keys) and
     beyond that shard the corpus or raise ``bands`` together with
     ``max_hamming`` budget — the honest limit of one-round simhash
-    banding. An ABSOLUTE ``max_band_size`` below the uniform bucket
-    size n/2^width would anti-filter EVERY bucket and silently return
-    zero pairs — prefer the quantile spread guard, which tracks the
-    distribution.
+    banding.
 
     Otherwise the scale shape mirrors :func:`minhash_lsh_pairs`:
     signatures are pinned (8 bytes/doc), band keys are a pure
@@ -1148,9 +1056,8 @@ def simhash_pairs(
     # any side effect — pin() registers a persist in the cache
     # registry, and an invalid-arguments exception after it would leak
     # that never-materialized entry until release_caches().
-    _validate_banding(
-        bits, bands, max_hamming, max_band_size, band_size_quantile, observation
-    )
+    _validate_banding(bits, bands, max_hamming)
+    _check_valve(cap_hot_keys, observation)
     sig = pin(simhash(df, id_col, text_col, bits))
     return hamming_pairs(
         sig,
@@ -1159,29 +1066,16 @@ def simhash_pairs(
         bits=bits,
         bands=bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
+        cap_hot_keys=cap_hot_keys,
         observation=observation,
     )
 
 
-def _validate_banding(
-    bits: int,
-    bands: int,
-    max_hamming: int,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation: "Observation | None" = None,
-) -> None:
+def _validate_banding(bits: int, bands: int, max_hamming: int) -> None:
     """Shared banding-argument validation for the Hamming pair stage —
     called by every entry point BEFORE any side effect (pins run first
-    otherwise and would leak registry entries on invalid calls).  The
-    valve-argument checks (cap mutual exclusion, observation-requires-
-    a-cap) live here too, not only in :func:`_capped_bands`: the
-    entry points pin the signature frame before the bands stage runs,
-    so a check that fires only inside ``_capped_bands`` would leak a
-    never-materialized cache-registry entry until ``release_caches()``
-    — the exact failure this pre-pin validation exists to prevent."""
+    otherwise and would leak registry entries on invalid calls), next
+    to the valve's own pre-pin :func:`_check_valve`."""
     if bands <= max_hamming:
         raise ValueError(
             f"bands ({bands}) must exceed max_hamming ({max_hamming}) "
@@ -1191,7 +1085,6 @@ def _validate_banding(
         raise ValueError(f"bits ({bits}) must divide evenly into {bands} bands")
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60], got {bits}")
-    _validate_band_caps(max_band_size, band_size_quantile, observation)
 
 
 def _sig_bands(
@@ -1230,8 +1123,7 @@ def hamming_probe(
     bits: int,
     bands: int = 4,
     max_hamming: int = 3,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Probe-shaped Hamming lookup: every (probe row, corpus row) pair
@@ -1250,11 +1142,11 @@ def hamming_probe(
     parquet table of any <= 60-bit signature, so a lookup never
     re-hashes the corpus.
 
-    The hot-band valve caps the CORPUS side only (``join_shape=
-    'probe'``: candidates per band key are |probe bucket| x |corpus
+    The hot-band valve (``cap_hot_keys=True``) caps the CORPUS side
+    only: candidates per band key are |probe bucket| x |corpus
     bucket|, so capping the corpus bucket bounds every key at
     |probe| x cap — and telemetry reports ``rows_dropped``, the
-    honest per-side number). Same keyspace-sizing caveat as
+    honest per-side number. Same keyspace-sizing caveat as
     :func:`simhash_pairs`: size ``bits/bands`` to the CORPUS."""
     p_ids = [probe_id] if isinstance(probe_id, str) else list(probe_id)
     c_ids = [corpus_id] if isinstance(corpus_id, str) else list(corpus_id)
@@ -1263,16 +1155,13 @@ def hamming_probe(
         raise ValueError(
             f"probe and corpus id columns must be disjoint, both have {sorted(clash)}"
         )
-    _validate_banding(
-        bits, bands, max_hamming, max_band_size, band_size_quantile, observation
-    )
-    bands_c = _capped_bands(
-        _sig_bands(corpus, c_ids, sig_col, bits, bands),
-        max_band_size,
-        band_size_quantile,
-        observation,
-        join_shape="probe",
-    )
+    _validate_banding(bits, bands, max_hamming)
+    _check_valve(cap_hot_keys, observation)
+    bands_c = _sig_bands(corpus, c_ids, sig_col, bits, bands)
+    if cap_hot_keys:
+        bands_c = _drop_hot_keys(
+            bands_c, ["band", "band_key"], observation, "bands_dropped", probe=True
+        )
     bands_p = _sig_bands(probe, p_ids, sig_col, bits, bands)
     cand = _band_probe_pairs(bands_p, bands_c, p_ids, c_ids)
     sp = probe.select(
@@ -1297,8 +1186,7 @@ def hamming_pairs(
     bits: int,
     bands: int = 4,
     max_hamming: int = 3,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
     """Pairs within ``max_hamming`` bits over ANY precomputed
@@ -1315,15 +1203,13 @@ def hamming_pairs(
     ``sig`` must carry one row per id; signatures are non-negative
     BIGINTs below 2^bits. Returns ``(id_a, id_b, hamming)``.
     """
-    _validate_banding(
-        bits, bands, max_hamming, max_band_size, band_size_quantile, observation
-    )
-    bands_df = _capped_bands(
-        _sig_bands(sig, [id_col], sig_col, bits, bands),
-        max_band_size,
-        band_size_quantile,
-        observation,
-    )
+    _validate_banding(bits, bands, max_hamming)
+    _check_valve(cap_hot_keys, observation)
+    bands_df = _sig_bands(sig, [id_col], sig_col, bits, bands)
+    if cap_hot_keys:
+        bands_df = _drop_hot_keys(
+            bands_df, ["band", "band_key"], observation, "bands_dropped"
+        )
     cand = _band_self_pairs(bands_df, id_col)
     sa = sig.select(F.col(id_col).alias("_ida"), F.col(sig_col).alias("_sa"))
     sb = sig.select(F.col(id_col).alias("_idb"), F.col(sig_col).alias("_sb"))
@@ -1409,9 +1295,6 @@ def fuzzy_decontaminate(
     bands: int = 4,
     max_hamming: int = 3,
     flag_col: str = "contaminated",
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation: "Observation | None" = None,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: flag training
     documents whose simhash is within ``max_hamming`` bits of any
@@ -1430,28 +1313,18 @@ def fuzzy_decontaminate(
     is MBs while the corpus is 100 TB, so the probe's band table is
     the tiny side of the equi-join and the train corpus is never
     self-joined; pigeonhole exactness (``bands > max_hamming``)
-    means recall 1.0 on the signature distance — WHEN UNCAPPED.
-    Any valve cap (``max_band_size`` / ``band_size_quantile``) VOIDS
-    that guarantee in the dangerous direction: the valve anti-filters
-    hot TRAIN band buckets, so capped-away train docs are silently
+    means recall 1.0 on the signature distance. The probe runs
+    uncapped, and deliberately so: the hot-key valve anti-filters hot
+    TRAIN band buckets, so capped-away train docs would be silently
     exempted from matching — false negatives, the one failure mode a
-    decontamination operator must not hide. ``rows_dropped > 0`` in
-    the telemetry means some train docs were never probed. Default
-    to NO cap here (the benchmark side is tiny, so per-bucket
-    candidate mass is bounded by |benchmark bucket| x |train bucket|
-    with the probe side already small); reach for the valve only if
-    a degenerate bucket (near-empty documents majority-voting to one
-    signature) actually materializes, and treat its telemetry as a
-    recall warning, not bookkeeping. Uncapped, a hot train bucket is
-    still matched in full: the eval side is small enough to
+    decontamination operator must not hide. Uncapped, a hot train
+    bucket is still matched in full: the eval side is small enough to
     broadcast, so its product parallelizes over the train side's
     input splits. Same honest limit as every simhash operator: the
     signature distance is a document-LEVEL proxy — passage-level
     leakage belongs to :func:`decontaminate` or the substring
     operators."""
-    _validate_banding(
-        bits, bands, max_hamming, max_band_size, band_size_quantile, observation
-    )
+    _validate_banding(bits, bands, max_hamming)
     sig_t = pin(
         simhash(train, id_col, text_col, bits).withColumnRenamed(
             id_col, "_train_id"
@@ -1475,9 +1348,6 @@ def fuzzy_decontaminate(
         bits=bits,
         bands=bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
-        observation=observation,
     )
     hits = matches.groupBy("_train_id").agg(
         F.count(F.lit(1)).alias("matched_evals"),
@@ -1512,8 +1382,7 @@ def incremental_minhash_dedup(
     rows_per_band: int = 2,
     min_agree: float = 0.25,
     shingle_n: int = 3,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
+    cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
     best_match: bool = False,
 ) -> DataFrame:
@@ -1543,8 +1412,8 @@ def incremental_minhash_dedup(
     estimate compares the two signature rows per candidate. History
     never self-joins: the
     only quadratic-risk surface is band-key skew — closed by the same
-    hot-band valve the batch operator carries (``max_band_size`` /
-    ``band_size_quantile``, :func:`_capped_bands`). The valve counts
+    hot-band valve the batch operator carries (``cap_hot_keys=True``,
+    :func:`_drop_hot_keys`). The valve counts
     and filters the HISTORY side only: candidates per band key are
     |increment bucket| x |history bucket|, so capping the history
     bucket bounds every key's candidate mass at |increment| x cap —
@@ -1552,18 +1421,14 @@ def incremental_minhash_dedup(
     carries a degenerate key, while removing a hot history bucket
     removes the key from the join outright.
     """
-    _validate_band_caps(  # before the pins — a bad call must not leak a cache entry
-        max_band_size, band_size_quantile, observation
-    )
+    _check_valve(cap_hot_keys, observation)
     mh_h = pin(minhash_signatures(history, id_col, text_col, num_hashes, shingle_n))
     mh_i = pin(minhash_signatures(increment, id_col, text_col, num_hashes, shingle_n))
-    bands_h = _capped_bands(
-        _band_keys(mh_h, id_col, num_hashes, rows_per_band),
-        max_band_size,
-        band_size_quantile,
-        observation,
-        join_shape="probe",
-    )
+    bands_h = _band_keys(mh_h, id_col, num_hashes, rows_per_band)
+    if cap_hot_keys:
+        bands_h = _drop_hot_keys(
+            bands_h, ["band", "band_key"], observation, "bands_dropped", probe=True
+        )
     bands_i = _band_keys(mh_i, id_col, num_hashes, rows_per_band)
     # shared probe-pair stage: increment = probe (small),
     # history = corpus (big)

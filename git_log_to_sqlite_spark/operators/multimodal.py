@@ -24,19 +24,8 @@ from collections.abc import Callable, Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 HAS_PIL = importlib.util.find_spec("PIL") is not None
-
-# binary payload + typed metadata — the multimodal column convention
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("byte_len", T.IntegerType(), True),
-    ]
-)
 
 
 def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:
@@ -191,27 +180,21 @@ def image_near_dup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation=None,
 ) -> DataFrame:
     """Image near-duplicate pairs: :func:`image_dhash` feeding
     :func:`~git_log_to_sqlite_spark.operators.dedup.hamming_pairs` —
     binary columns become first-class dedup citizens through the same
     banded pair stage the text operators use (pigeonhole-EXACT for
-    ``bands > max_hamming``, hot-band valve for degenerate hashes —
-    e.g. flat-color images all hashing to 0). Returns
-    ``(id_a, id_b, hamming)``. The dHash pin means the decode runs
-    once, not once per band join branch. ``observation`` (requires a
-    cap) receives the same eager ``bands_dropped`` telemetry as every
-    valve caller — see ``dedup._hot_key_set``."""
+    ``bands > max_hamming``). Returns ``(id_a, id_b, hamming)``. The
+    dHash pin means the decode runs once, not once per band join
+    branch. The pair stage runs uncapped; a caller that expects
+    degenerate hashes (e.g. flat-color images all hashing to 0) passes
+    :func:`image_dhash`'s output to ``hamming_pairs(...,
+    cap_hot_keys=True)`` itself."""
     from .caching import pin
     from .dedup import _validate_banding, hamming_pairs
 
-    _validate_banding(  # all arg checks before the pin (incl. valve args)
-        rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
-        observation,
-    )
+    _validate_banding(rows * cols, bands, max_hamming)  # before the pin
     sig = pin(image_dhash(media, rows, cols, grid_fn))
     return hamming_pairs(
         sig,
@@ -220,9 +203,6 @@ def image_near_dup_pairs(
         bits=rows * cols,
         bands=bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
-        observation=observation,
     )
 
 
@@ -306,23 +286,18 @@ def audio_near_dup_pairs(
     max_hamming: int = 3,
     lsh_bands: int = 4,
     energy_fn: Callable[[bytes, int, int], list[list[float]]] | None = None,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation=None,
 ) -> DataFrame:
     """Audio near-duplicate pairs: :func:`audio_fingerprint` feeding
     the shared :func:`~git_log_to_sqlite_spark.operators.dedup.
     hamming_pairs` band stage — the third modality (after text simhash
     and image dHash) on the one pigeonhole-exact pair machinery.
-    Returns ``(id_a, id_b, hamming)``."""
+    Returns ``(id_a, id_b, hamming)``, uncapped like
+    :func:`image_near_dup_pairs`."""
     from .caching import pin
     from .dedup import _validate_banding, hamming_pairs
 
     bits = (frames - 1) * (bands - 1)
-    _validate_banding(  # all arg checks before the pin (incl. valve args)
-        bits, lsh_bands, max_hamming, max_band_size, band_size_quantile,
-        observation,
-    )
+    _validate_banding(bits, lsh_bands, max_hamming)  # before the pin
     sig = pin(audio_fingerprint(media, frames, bands, energy_fn))
     return hamming_pairs(
         sig,
@@ -331,9 +306,6 @@ def audio_near_dup_pairs(
         bits=bits,
         bands=lsh_bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
-        observation=observation,
     )
 
 
@@ -412,9 +384,7 @@ def audio_shared_segment_pairs(
     bands: int = 11,
     min_run: int = 4,
     window: int = 4,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
-    quantile_headroom: int = 10,
+    cap_hot_keys: bool = False,
     energy_fn: Callable[[bytes, int, int], list[list[float]]] | None = None,
     observation=None,
 ) -> DataFrame:
@@ -445,13 +415,13 @@ def audio_shared_segment_pairs(
 
     Degenerate windows (silence — runs of zero-words shared by half
     the corpus) are this operator's boilerplate pathology: cap them
-    (``max_df`` / ``max_df_quantile``) with ``subfps_dropped``
-    telemetry, the standard valve contract. Under a cap the window
+    (``cap_hot_keys=True``) with ``subfps_dropped`` telemetry, the
+    standard valve contract. Under the valve the window
     table is consumed twice, so it is PINNED here — it derives from
     the Python decode, the modality's dominant cost (see
     ``_span_pairs_from_windows``'s caller-owns-the-pin note)."""
     from .caching import pin
-    from .dedup import _span_pairs_from_windows, _validate_df_caps
+    from .dedup import _check_valve, _span_pairs_from_windows
 
     if min_run < 1:
         raise ValueError(f"min_run must be >= 1, got {min_run}")
@@ -462,7 +432,7 @@ def audio_shared_segment_pairs(
             f"min_run ({min_run}) must be >= window ({window}): a shorter "
             "run has no complete window and cannot be observed"
         )
-    _validate_df_caps(max_df, max_df_quantile, observation)  # before the pin
+    _check_valve(cap_hot_keys, observation)  # before the pin
     sfps = audio_frame_fingerprints(media, frame_bytes, bands, energy_fn)
     from pyspark.sql import Window as W
 
@@ -480,15 +450,13 @@ def audio_shared_segment_pairs(
         .filter(F.col("_last").isNotNull())
         .drop("_last")
     )
-    if max_df is not None or max_df_quantile is not None:
+    if cap_hot_keys:
         w = pin(w)
     return _span_pairs_from_windows(
         w,
         k=window,
         min_run_tokens=min_run,
-        max_df=max_df,
-        max_df_quantile=max_df_quantile,
-        quantile_headroom=quantile_headroom,
+        cap_hot_keys=cap_hot_keys,
         observation=observation,
         dropped_name="subfps_dropped",
     ).select(
@@ -607,9 +575,6 @@ def image_in_video_frames(
     max_hamming: int = 3,
     bands: int = 4,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation=None,
 ) -> DataFrame:
     """Cross-modal content lookup: which video frames (near-)match a
     batch of still images — ``image_dhash`` over the stills probed
@@ -621,16 +586,13 @@ def image_in_video_frames(
     media_id, frame_no, hamming)``. The shared ``_grid_dhash`` means
     a still and a frame of the same content hash identically by
     construction — the property that makes the cross-modal probe
-    exact under the pigeonhole guarantee. The valve caps the FRAME
-    side (black frames are the degenerate bucket; ``rows_dropped``
-    telemetry), mirroring every probe-shaped caller."""
+    exact under the pigeonhole guarantee. The probe runs uncapped;
+    black frames, the degenerate frame bucket, are matched in full."""
     from .caching import pin
     from .dedup import _validate_banding, hamming_probe
 
-    _validate_banding(  # all arg checks before the pins (incl. valve args)
-        rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
-        observation,
-    )
+    # all arg checks before the pins
+    _validate_banding(rows * cols, bands, max_hamming)
     if frame_bytes < 1:  # video_frame_dhash re-checks, but after sig_p pins
         raise ValueError(f"frame_bytes must be >= 1, got {frame_bytes}")
     sig_p = pin(
@@ -652,9 +614,6 @@ def image_in_video_frames(
         bits=rows * cols,
         bands=bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
-        observation=observation,
     )
 
 
@@ -664,9 +623,7 @@ def video_shared_scene_pairs(
     cols: int = 10,
     frame_bytes: int = 256,
     min_run_frames: int = 4,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
-    quantile_headroom: int = 10,
+    cap_hot_keys: bool = False,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
     observation=None,
 ) -> DataFrame:
@@ -696,26 +653,26 @@ def video_shared_scene_pairs(
     frame-hash equality — robustness to re-encoding comes from the
     perceptual hash upstream, and a frame whose dHash flips a bit
     splits the run (the documented trade of every exact-hash
-    substring recovery); (2) ``max_df`` / ``max_df_quantile`` cap
+    substring recovery); (2) ``cap_hot_keys=True`` caps
     degenerate frames — black/title-card frames shared by half the
     corpus are this operator's d(d-1)/2 skew unit, exactly the
     boilerplate-window pathology of the text operator, and the valve
     reports ``frames_dropped`` / ``pairs_avoided`` telemetry through
     the standard eager contract."""
     from .caching import pin
-    from .dedup import _span_pairs_from_windows, _validate_df_caps
+    from .dedup import _check_valve, _span_pairs_from_windows
 
     if min_run_frames < 1:
         raise ValueError(f"min_run_frames must be >= 1, got {min_run_frames}")
-    _validate_df_caps(max_df, max_df_quantile, observation)  # before the pin
+    _check_valve(cap_hot_keys, observation)  # before the pin
     frames = video_frame_dhash(media, rows, cols, frame_bytes, grid_fn)
     w = frames.select(
         F.col("media_id").alias("_id"),
         F.col("frame_no").alias("pos"),
         F.col("dhash").alias("h"),
     )
-    if max_df is not None or max_df_quantile is not None:
-        # consumed twice under a cap (valve count + anti-joined main
+    if cap_hot_keys:
+        # consumed twice under the valve (its count + anti-joined main
         # stream); the upstream is the Python frame decode — pin so it
         # runs once (the caller-owns-the-pin note on the helper)
         w = pin(w)
@@ -723,9 +680,7 @@ def video_shared_scene_pairs(
         w,
         k=1,  # one frame per cell: run length == island size
         min_run_tokens=min_run_frames,
-        max_df=max_df,
-        max_df_quantile=max_df_quantile,
-        quantile_headroom=quantile_headroom,
+        cap_hot_keys=cap_hot_keys,
         observation=observation,
         dropped_name="frames_dropped",
     ).select(
@@ -744,26 +699,20 @@ def video_near_dup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
-    max_band_size: int | None = None,
-    band_size_quantile: float | None = None,
-    observation=None,
 ) -> DataFrame:
     """Video near-duplicate pairs: :func:`video_fingerprint` feeding
     the shared :func:`~git_log_to_sqlite_spark.operators.dedup.
     hamming_pairs` band stage — the fourth and final modality (text
     simhash, image dHash, audio Haitsma-Kalker, video frame-vote) on
     the one pigeonhole-exact pair machinery.  Returns ``(id_a, id_b,
-    hamming)`` over clip-level signatures; the same valve/telemetry
-    contract as every Hamming caller (degenerate clips — e.g. black
-    frames majority-voting to 0 — are exactly the hot-band
-    pathology the valve bounds)."""
+    hamming)`` over clip-level signatures, uncapped like
+    :func:`image_near_dup_pairs` (degenerate clips, e.g. black frames
+    majority-voting to 0, are the hot-band case a caller caps by
+    passing :func:`video_fingerprint`'s output to ``hamming_pairs``)."""
     from .caching import pin
     from .dedup import _validate_banding, hamming_pairs
 
-    _validate_banding(  # all arg checks before the pin (incl. valve args)
-        rows * cols, bands, max_hamming, max_band_size, band_size_quantile,
-        observation,
-    )
+    _validate_banding(rows * cols, bands, max_hamming)  # before the pin
     sig = pin(video_fingerprint(media, rows, cols, frame_bytes, grid_fn))
     return hamming_pairs(
         sig,
@@ -772,7 +721,4 @@ def video_near_dup_pairs(
         bits=rows * cols,
         bands=bands,
         max_hamming=max_hamming,
-        max_band_size=max_band_size,
-        band_size_quantile=band_size_quantile,
-        observation=observation,
     )

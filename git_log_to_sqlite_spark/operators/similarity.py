@@ -392,7 +392,7 @@ def _observe_cell_stats(ranked: DataFrame, observation: "Observation") -> None:
     * ``pair_mass`` — sum d(d-1)/2 over cells, the EXACT candidate
       row count the upper-triangular join will produce.
 
-    EAGER, per the round-9 doctrine (`_capped_bands` docstring: a
+    EAGER, per the round-9 doctrine (`_drop_hot_keys` docstring: a
     lazily-planned observe node under AQE loses its metrics row when
     stage-wrapped/pruned/duplicated): a dedicated tiny aggregate
     rooted on the pinned frame, drained JVM-side with ``.count()`` at

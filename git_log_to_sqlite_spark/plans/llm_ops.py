@@ -59,24 +59,19 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The hot-shingle cap is the p92 of the posting-list-length (document
-# frequency) distribution, derived from the data inside the plan — no
-# corpus-tuned absolute. At this quantile the >=0.2 pair SET is
-# verified identical to uncapped at both test SFs
-# (test_jaccard_quantile_cap_preserves_pairs).
-_JACCARD_DF_Q = 0.92
-
 # DuckDB twin of operators.dedup._quantile_cap: smallest d* with
 # cum-count(d <= d*) >= q * total over length-{>=2} groups of the
-# ``d`` column of CTE ``src``. The compare is the same integer
-# arithmetic as the Spark side (cum * den >= num * tot, q = num/den
-# from q's decimal digits) so the two engines can never diverge by a
-# double-rounding ulp.
+# ``d`` column of CTE ``src``, q = dd.VALVE_QUANTILE. The compare is
+# the same integer arithmetic as the Spark side (cum * den >= num *
+# tot, q = num/den from q's decimal digits) so the two engines can
+# never diverge by a double-rounding ulp. The jaccard twins apply the
+# cap directly; the band and window twins multiply it by
+# dd.VALVE_HEADROOM, as the operators do under cap_hot_keys=True.
 from fractions import Fraction as _Fraction
 
 
-def _sql_quantile_cap(src: str, q: float) -> str:
-    frac = _Fraction(str(q))
+def _sql_quantile_cap(src: str) -> str:
+    frac = _Fraction(str(dd.VALVE_QUANTILE))
     return f"""
       SELECT MIN(d) AS max_df FROM (
         SELECT d, SUM(n_sh) OVER (ORDER BY d) AS cum,
@@ -85,7 +80,7 @@ def _sql_quantile_cap(src: str, q: float) -> str:
       WHERE cum * {frac.denominator} >= {frac.numerator} * tot"""
 
 
-_SQL_DF_CAP = _sql_quantile_cap("dfreq", _JACCARD_DF_Q)
+_SQL_DF_CAP = _sql_quantile_cap("dfreq")
 
 
 @register(
@@ -120,7 +115,7 @@ _SQL_DF_CAP = _sql_quantile_cap("dfreq", _JACCARD_DF_Q)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return dd.ngram_jaccard_pairs(
-        d, "doc_id", "text", threshold=0.2, max_df_quantile=_JACCARD_DF_Q
+        d, "doc_id", "text", threshold=0.2, cap_hot_keys=True
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -132,11 +127,6 @@ _INC_MOD = 5  # history/increment split for the incremental gate queries:
 # every 5th doc plays the "daily batch"; the rest are already-ingested history
 _SUBSTR_K = 6  # window width in tokens
 _SUBSTR_MIN_RUN = 12  # report pairs sharing a verbatim run >= this many tokens
-_SUBSTR_Q = 0.92  # quantile anchor for the window occurrence spread guard
-_SUBSTR_HEADROOM = 10  # cap = headroom x p92 (minhash-valve form: run
-# continuity needs every window, and passage families are worth keeping —
-# see substring_span_pairs' docstring; at this cap the sf0.1 pair set
-# equals uncapped exactly while degenerate windows stay bounded)
 
 
 # Shared CTE chains of the THREE substring oracles (spans, groups,
@@ -152,11 +142,11 @@ _SQL_WIN_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS a FROM do
 
 _SQL_SUBSTR_CTES = f"""{_SQL_WIN_CTES},
     sfreq AS (SELECT gram, COUNT(*) AS d FROM wins GROUP BY gram),
-    caps AS ({_sql_quantile_cap("sfreq", _SUBSTR_Q)}),
+    caps AS ({_sql_quantile_cap("sfreq")}),
     w2 AS (
       SELECT w.doc_id, w.pos, w.gram
       FROM wins w JOIN sfreq f ON f.gram = w.gram
-      JOIN caps ON f.d <= COALESCE(caps.max_df * {_SUBSTR_HEADROOM}, f.d)),
+      JOIN caps ON f.d <= COALESCE(caps.max_df * {dd.VALVE_HEADROOM}, f.d)),
     m AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              a.pos - b.pos AS diag, a.pos AS pos_a
@@ -199,8 +189,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text",
         window=_SUBSTR_K,
         min_run_tokens=_SUBSTR_MIN_RUN,
-        max_df_quantile=_SUBSTR_Q,
-        quantile_headroom=_SUBSTR_HEADROOM,
+        cap_hot_keys=True,
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -216,11 +205,11 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     hwins AS (SELECT * FROM wins WHERE doc_id % {_INC_MOD} <> 0),
     iwins AS (SELECT * FROM wins WHERE doc_id % {_INC_MOD} = 0),
     hfreq AS (SELECT gram, COUNT(*) AS d FROM hwins GROUP BY gram),
-    hcaps AS ({_sql_quantile_cap("hfreq", _SUBSTR_Q)}),
+    hcaps AS ({_sql_quantile_cap("hfreq")}),
     h2 AS (
       SELECT w.doc_id, w.pos, w.gram
       FROM hwins w JOIN hfreq f ON f.gram = w.gram
-      JOIN hcaps ON f.d <= COALESCE(hcaps.max_df * {_SUBSTR_HEADROOM}, f.d)),
+      JOIN hcaps ON f.d <= COALESCE(hcaps.max_df * {dd.VALVE_HEADROOM}, f.d)),
     m AS (
       SELECT i.doc_id AS inc_id, h.doc_id AS hist_id,
              i.pos - h.pos AS diag, i.pos AS pos_a
@@ -255,8 +244,7 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         history, increment, "doc_id", "text",
         window=_SUBSTR_K,
         min_run_tokens=_SUBSTR_MIN_RUN,
-        max_df_quantile=_SUBSTR_Q,
-        quantile_headroom=_SUBSTR_HEADROOM,
+        cap_hot_keys=True,
     )
 
 
@@ -297,8 +285,7 @@ def dedup_substring_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text",
         window=_SUBSTR_K,
         min_run_tokens=_SUBSTR_MIN_RUN,
-        max_df_quantile=_SUBSTR_Q,
-        quantile_headroom=_SUBSTR_HEADROOM,
+        cap_hot_keys=True,
     )
     out = assign_dedup_groups(d, pairs, "doc_id")
     return out.select(
@@ -354,7 +341,7 @@ def dedup_group_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     pairs = dd.ngram_jaccard_pairs(
-        d, "doc_id", "text", threshold=0.2, max_df_quantile=_JACCARD_DF_Q
+        d, "doc_id", "text", threshold=0.2, cap_hot_keys=True
     )
     out = assign_dedup_groups(d, pairs, "doc_id")
     return out.select(
@@ -366,24 +353,20 @@ def dedup_group_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINHASH_K = 8  # hash functions; bands of 2 -> 4 LSH bands
 
-# Hot-band valve for the LSH gate queries: cap = 10 x the p92 of the
-# repeated-band-bucket-size distribution, derived in-plan (see
-# operators.dedup._capped_bands for why a spread guard and not a
-# direct tail quantile — a degenerate bucket inflates its own tail,
-# and near-tail buckets carry unique true pairs). At 10 x p92 the
-# pair set is verified identical to uncapped at both test SFs
+# Hot-band valve of the LSH gate queries (cap_hot_keys=True): cap =
+# 10 x the p92 of the repeated-band-bucket-size distribution, derived
+# in-plan (see operators.dedup._drop_hot_keys for why a spread guard
+# and not a direct tail quantile). At 10 x p92 the pair set is
+# verified identical to uncapped at both test SFs
 # (test_minhash_band_cap_preserves_pairs) while a degenerate key
 # (thousands of near-empty docs) lands past the cap and is dropped
 # before the band join (test_minhash_band_cap_bounds_degenerate_key).
-_BAND_Q = 0.92
-_BAND_HEADROOM = 10
-
 # Shared CTE tail: per-bucket sizes + the derived cap. Expects a CTE
 # named bands(doc_id, band, band_key) in scope.
 _SQL_BAND_CAP = f"""
     bfreq AS (SELECT band, band_key, COUNT(*) AS d
               FROM bands GROUP BY band, band_key),
-    bcaps AS ({_sql_quantile_cap("bfreq", _BAND_Q)})"""
+    bcaps AS ({_sql_quantile_cap("bfreq")})"""
 
 
 @register(
@@ -405,7 +388,7 @@ _SQL_BAND_CAP = f"""
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
       JOIN bfreq f ON f.band = a.band AND f.band_key = a.band_key
-      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {_BAND_HEADROOM}, f.d))
+      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {dd.VALVE_HEADROOM}, f.d))
     SELECT doc_a, doc_b,
            CAST(SUM(CASE WHEN ma.minh = mb.minh THEN 1 ELSE 0 END) AS DOUBLE)
              / {_MINHASH_K} AS est_jaccard
@@ -429,7 +412,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return dd.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=_MINHASH_K, rows_per_band=2, min_agree=0.25,
-        band_size_quantile=_BAND_Q,
+        cap_hot_keys=True,
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -456,7 +439,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
       JOIN bfreq f ON f.band = a.band AND f.band_key = a.band_key
-      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {_BAND_HEADROOM}, f.d)),
+      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {dd.VALVE_HEADROOM}, f.d)),
     near AS (
       SELECT doc_a, doc_b FROM cand
       JOIN mh ma ON ma.doc_id = doc_a
@@ -491,7 +474,7 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=_MINHASH_K, rows_per_band=2, min_agree=0.25,
-        band_size_quantile=_BAND_Q,
+        cap_hot_keys=True,
     )
     out = assign_dedup_groups(d, pairs, "doc_id")
     return out.select(
@@ -551,7 +534,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
       JOIN bfreq f ON f.band = a.band AND f.band_key = a.band_key
-      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {_BAND_HEADROOM}, f.d))
+      JOIN bcaps ON f.d <= COALESCE(bcaps.max_df * {dd.VALVE_HEADROOM}, f.d))
     SELECT id_a, id_b,
            CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hamming
     FROM cand
@@ -572,7 +555,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return dd.simhash_pairs(
         d, "doc_id", "text", bits=32, bands=4, max_hamming=3,
-        band_size_quantile=_BAND_Q,
+        cap_hot_keys=True,
     )
 
 
@@ -1008,11 +991,7 @@ _SCENE_FRAME_BYTES = 64  # smaller than the near-dup query's 256: more
 _SCENE_MIN_RUN = 3
 
 
-def _mm_video_scene_oracle(
-    fb: int = _SCENE_FRAME_BYTES,
-    q: float = _SUBSTR_Q,
-    headroom: int = _SUBSTR_HEADROOM,
-) -> str:
+def _mm_video_scene_oracle(fb: int = _SCENE_FRAME_BYTES) -> str:
     """DuckDB twin of ``mm_video_scene_pairs``: the video oracle's
     frame-slice convention (frame f of a length-L payload is the
     byte slice [f*fb, (f+1)*fb), max(1, L // fb) full frames) feeds
@@ -1035,11 +1014,11 @@ def _mm_video_scene_oracle(
       SELECT doc_id, f AS pos, CAST({_sql_dhash_terms(byte)} AS BIGINT) AS h
       FROM d, LATERAL (SELECT unnest(range(nf)) AS f) t),
     ffreq AS (SELECT h, COUNT(*) AS d FROM fr GROUP BY h),
-    caps AS ({_sql_quantile_cap("ffreq", q)}),
+    caps AS ({_sql_quantile_cap("ffreq")}),
     f2 AS (
       SELECT w.doc_id, w.pos, w.h
       FROM fr w JOIN ffreq fq ON fq.h = w.h
-      JOIN caps ON fq.d <= COALESCE(caps.max_df * {headroom}, fq.d)),
+      JOIN caps ON fq.d <= COALESCE(caps.max_df * {dd.VALVE_HEADROOM}, fq.d)),
     m AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              a.pos - b.pos AS diag, a.pos AS pos_a
@@ -1084,8 +1063,7 @@ def mm_video_scene_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cols=10,
         frame_bytes=_SCENE_FRAME_BYTES,
         min_run_frames=_SCENE_MIN_RUN,
-        max_df_quantile=_SUBSTR_Q,
-        quantile_headroom=_SUBSTR_HEADROOM,
+        cap_hot_keys=True,
         grid_fn=mm._luma_grid_stub,
     )
 
@@ -1181,8 +1159,6 @@ def _mm_audio_segment_oracle(
     bands: int = _ASEG_BANDS,
     window: int = _ASEG_WINDOW,
     min_run: int = _ASEG_MIN_RUN,
-    q: float = _SUBSTR_Q,
-    head: int = _SUBSTR_HEADROOM,
 ) -> str:
     """DuckDB twin of ``mm_audio_segment_pairs`` — the hardest of the
     four sequence twins, composed from three gate-green pieces: (1)
@@ -1203,7 +1179,7 @@ def _mm_audio_segment_oracle(
     oracle joins on the word TUPLE where Spark joins on
     ``xxhash64`` of it — identical pair sets absent a 64-bit hash
     collision, the same equivalence every substring twin relies on."""
-    cap = _sql_quantile_cap("sfreq", q)
+    cap = _sql_quantile_cap("sfreq")
     en_cols = []
     for b in range(bands):
         st = f"({b} * step)"
@@ -1263,7 +1239,7 @@ def _mm_audio_segment_oracle(
     w2 AS (
       SELECT w.doc_id, w.pos, w.gram
       FROM w1 w JOIN sfreq fq ON fq.gram = w.gram
-      JOIN caps ON fq.d <= COALESCE(caps.max_df * {head}, fq.d)),
+      JOIN caps ON fq.d <= COALESCE(caps.max_df * {dd.VALVE_HEADROOM}, fq.d)),
     m AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              a.pos - b.pos AS diag, a.pos AS pos_a
@@ -1310,8 +1286,7 @@ def mm_audio_segment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_ASEG_BANDS,
         min_run=_ASEG_MIN_RUN,
         window=_ASEG_WINDOW,
-        max_df_quantile=_SUBSTR_Q,
-        quantile_headroom=_SUBSTR_HEADROOM,
+        cap_hot_keys=True,
     )
 
 
@@ -1656,7 +1631,7 @@ def curate_corpus(d: DataFrame, telemetry: dict | None = None) -> DataFrame:
     (each ``Observation.get`` blocks until the query's action runs).
 
     Placement audit (round 9, after the valve-telemetry AQE failures —
-    see ``operators.dedup._capped_bands``): these observes are safe as
+    see ``operators.dedup._drop_hot_keys``): these observes are safe as
     LAZY CollectMetrics because they sit on the SPINE of the plan —
     every row of the result flows through them, so the nodes land in
     stages that always materialize, never in a join build side AQE can
@@ -1975,7 +1950,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     hfreq AS (SELECT band, band_key, COUNT(*) AS d
               FROM bands WHERE doc_id % {_INC_MOD} <> 0
               GROUP BY band, band_key),
-    hcaps AS ({_sql_quantile_cap("hfreq", _BAND_Q)}),
+    hcaps AS ({_sql_quantile_cap("hfreq")}),
     cand AS (
       SELECT DISTINCT i.doc_id AS inc_id, h.doc_id AS hist_id
       FROM bands i JOIN bands h
@@ -1984,7 +1959,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- COALESCE mirrors the Spark valve's no-repeated-bucket case:
       -- an empty d>=2 histogram yields a NULL cap, which must keep
       -- every candidate (the hot set is empty), not drop them all
-      JOIN hcaps ON f.d <= COALESCE(hcaps.max_df * {_BAND_HEADROOM}, f.d)
+      JOIN hcaps ON f.d <= COALESCE(hcaps.max_df * {dd.VALVE_HEADROOM}, f.d)
       WHERE i.doc_id % {_INC_MOD} = 0 AND h.doc_id % {_INC_MOD} <> 0),
     agreed AS (
       SELECT inc_id, hist_id,
@@ -2023,7 +1998,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.incremental_minhash_dedup(
         history, increment, "doc_id", "text",
         num_hashes=_MINHASH_K, rows_per_band=2, min_agree=0.25,
-        band_size_quantile=_BAND_Q,
+        cap_hot_keys=True,
     )
 
 

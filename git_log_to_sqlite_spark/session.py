@@ -358,23 +358,21 @@ def jvm_archive_state(spark: SparkSession) -> str:
 def get_spark(
     app_name: str = "git_log_to_sqlite_spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the session used by tests, bench, and the driver.
 
-    ``cpus`` controls local-mode threads; ``shuffle_partitions`` defaults
-    to the same number — at local scale each shuffle partition should map
-    to one core, while at cluster scale AQE coalesces from a higher
-    initial count. A call that launches the driver JVM starts it from
-    the class-data-sharing archive (module docstring).
+    ``cpus`` sets the local-mode threads and the shuffle partitions
+    alike — at local scale each shuffle partition should map to one
+    core, while at cluster scale AQE coalesces from a higher initial
+    count. A call that launches the driver JVM starts it from the
+    class-data-sharing archive (module docstring).
     """
     cpus = str(cpus or _DEFAULT_CPUS)
-    shuffle = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -436,36 +434,6 @@ def get_spark(
             jvm.org.apache.logging.log4j.Level.ERROR,
         )
     return spark
-
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES):
-    """Load the driver's parquet tables as DataFrames keyed by name.
-
-    Plain ``spark.read.parquet`` — Catalyst pushes filters/projections
-    into the scan, so no eager caching here; callers that reuse a table
-    across many queries (bench) may ``.cache()`` selectively.
-    """
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register the driver tables as temp views for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
 
 
 def local_frame(spark: SparkSession, rows, schema):

@@ -338,6 +338,46 @@ def test_cli_root_with_trailing_slashes_is_analyzed_not_skipped(spark, tmp_path,
     assert "not stored" not in out
 
 
+def test_cli_clear_with_nothing_to_store_empties_the_database(spark, tmp_path, capsys):
+    """``-c`` over a root holding no git repository still truncates all
+    three tables (the reference clears before it scans, analyzer.rs:
+    190-194), and the report lists every scanned directory as not
+    stored."""
+    import re
+    import sqlite3
+
+    _repo_with_commit(tmp_path / "root" / "proj")
+    db = tmp_path / "out.db"
+    _cli(spark, str(tmp_path / "root"), "-r", "-d", str(db))
+    tables = ("repositories", "logs", "changed_files")
+
+    def counts():
+        con = sqlite3.connect(db)
+        try:
+            return [con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0] for t in tables]
+        finally:
+            con.close()
+
+    assert counts() == [1, 1, 1]
+    empty = tmp_path / "empty"
+    for name in ("b_plain", "a_notes"):
+        (empty / name).mkdir(parents=True)
+    (empty / "a_notes" / "readme.txt").write_text("not a repository\n")
+    capsys.readouterr()
+    _cli(spark, str(empty), "-r", "-c", "-d", str(db))
+    out = re.sub(r"Done in \d+\.\d seconds", "Done in X seconds", capsys.readouterr().out)
+
+    assert counts() == [0, 0, 0]
+    assert out == (
+        "# Done in X seconds\n\n"
+        "# 0 repositories in the table\n\n\n\n"
+        "# 0 ignored repositories:\n\n\n\n"
+        "# 2 directories were not stored for some reason. "
+        "Maybe empty, or not a git repository?:\n\n"
+        f"{empty / 'a_notes'}\n{empty / 'b_plain'}\n"
+    )
+
+
 def test_cli_scan_and_repository_frames_are_local_relations(spark, tmp_path, monkeypatch):
     """Cost guard: the repositories dimension the CLI hands the SQLite
     sink is a ``LocalRelation`` built on the driver, and the commits

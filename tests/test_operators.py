@@ -47,31 +47,33 @@ def test_ngram_jaccard_finds_near_dups(docs):
     assert not any(4 in p for p in pairs)  # unrelated doc never pairs
 
 
-def test_ngram_jaccard_max_df_drops_hot_shingle_pairs(spark):
-    # 6 docs share exactly one hot trigram; 2 docs are true near-dups
-    # through rare shingles only.
-    rows = [(i, f"common common common u{i}a u{i}b u{i}c") for i in range(1, 7)]
-    rows += [(7, "x y z w q r"), (8, "x y z w q r")]
+def test_ngram_jaccard_valve_drops_hot_shingle_pairs(spark):
+    # 20 docs share exactly one hot trigram (d=20); 2 docs are true
+    # near-dups through 13 rare trigrams only (d=2 each), which anchor
+    # the p92 shingle cap at 2.
+    rows = [(i, f"common common common u{i}a u{i}b u{i}c") for i in range(1, 21)]
+    twin = " ".join(f"t{j}" for j in range(15))
+    rows += [(100, twin), (101, twin)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     uncapped = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
-    assert len(uncapped.collect()) == 15 + 1  # C(6,2) hot pairs + (7,8)
+    assert len(uncapped.collect()) == 190 + 1  # C(20,2) hot pairs + the twins
 
     from pyspark.sql import Observation
 
     obs = Observation("cap_metrics")
     capped = ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.1, max_df=5, observation=obs
+        docs, "doc_id", "text", threshold=0.1, cap_hot_keys=True, observation=obs
     )
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in capped.collect()}
-    assert got == {(7, 8): 1.0}  # hot-shingle pairs gone, rare-shingle pair kept
+    assert got == {(100, 101): 1.0}  # hot-shingle pairs gone, rare-shingle pair kept
     metrics = obs.get  # first-action semantics: the collect above
     assert metrics["shingles_dropped"] == 1
-    assert metrics["pairs_avoided"] == 15
+    assert metrics["pairs_avoided"] == 190
 
 
 def test_ngram_jaccard_quantile_cap_derives_from_data(spark):
-    """max_df_quantile mode: the cap is the in-plan df-quantile, so a
+    """The jaccard valve's cap is the in-plan df-quantile, so a
     hot shingle well past the quantile is dropped without any absolute
     constant. 13 doc-pairs share one unique trigram each (d=2); 6 docs
     share one hot trigram (d=6): the p92 cap lands at 2 and only the
@@ -91,7 +93,7 @@ def test_ngram_jaccard_quantile_cap_derives_from_data(spark):
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
             docs, "doc_id", "text", threshold=0.1,
-            max_df_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     # d >= 2 histogram: 13 pair-trigrams x 2 each at d=2, 1 hot at d=6
@@ -114,7 +116,7 @@ def test_jaccard_quantile_cap_preserves_pairs(spark, oracle_sf_dir):
     capped = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.2, max_df_quantile=0.92
+            docs, "doc_id", "text", threshold=0.2, cap_hot_keys=True
         ).collect()
     }
     assert capped == uncapped and len(uncapped) > 0
@@ -146,7 +148,7 @@ def test_minhash_band_cap_preserves_pairs(spark, oracle_sf_dir):
     capped = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", band_size_quantile=0.92
+            docs, "doc_id", "text", cap_hot_keys=True
         ).collect()
     }
     assert capped == uncapped and len(uncapped) > 0
@@ -161,7 +163,7 @@ def test_minhash_band_cap_preserves_pairs(spark, oracle_sf_dir):
     inc_cap = {
         tuple(r)
         for r in incremental_minhash_dedup(
-            history, increment, "doc_id", "text", band_size_quantile=0.92
+            history, increment, "doc_id", "text", cap_hot_keys=True
         ).collect()
     }
     assert inc_cap == inc_un and len(inc_un) > 0
@@ -204,23 +206,6 @@ def test_band_join_default_plans_are_plain_equi_joins(spark):
         assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_minhash_band_cap_validation(spark):
-    """The two cap spellings are mutually exclusive, and telemetry
-    without a cap raises eagerly instead of blocking in
-    Observation.get far from the cause."""
-    from pyspark.sql import Observation
-
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        minhash_lsh_pairs(
-            docs, "doc_id", "text", max_band_size=5, band_size_quantile=0.9
-        )
-    with pytest.raises(ValueError, match="observation requires a cap"):
-        minhash_lsh_pairs(
-            docs, "doc_id", "text", observation=Observation("x")
-        )
-
-
 def test_minhash_valve_no_hot_buckets_reports_zero(spark):
     """Valve telemetry when the valve does NOT fire must report 0/0,
     not fail: pre-fix, AQE's empty-relation propagation pruned the
@@ -239,17 +224,18 @@ def test_minhash_valve_no_hot_buckets_reports_zero(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     obs = Observation("novalve")
     got = minhash_lsh_pairs(
-        docs, "doc_id", "text", band_size_quantile=0.92, observation=obs
+        docs, "doc_id", "text", cap_hot_keys=True, observation=obs
     ).collect()
     assert got == []
     assert obs.get == {"bands_dropped": 0, "pairs_avoided": 0}
 
-    # case 2: one repeated bucket (the identical pair), cap far above it
+    # case 2: repeated buckets (the identical pair's d=2 band keys),
+    # none past 10 x their own p92
     rows2 = rows + [(100, "same text twins here today"), (101, "same text twins here today")]
     docs2 = spark.createDataFrame(rows2, "doc_id long, text string")
     obs2 = Observation("undercap")
     got2 = minhash_lsh_pairs(
-        docs2, "doc_id", "text", max_band_size=50, observation=obs2
+        docs2, "doc_id", "text", cap_hot_keys=True, observation=obs2
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in got2} == {(100, 101)}
     assert obs2.get == {"bands_dropped": 0, "pairs_avoided": 0}
@@ -274,7 +260,7 @@ def test_valve_telemetry_no_fire_all_operators(spark):
 
     obs_j = Observation()
     got = ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.5, max_df=50, observation=obs_j
+        docs, "doc_id", "text", threshold=0.5, cap_hot_keys=True, observation=obs_j
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(100, 101)}
     assert obs_j.get == {"shingles_dropped": 0, "pairs_avoided": 0}
@@ -282,7 +268,7 @@ def test_valve_telemetry_no_fire_all_operators(spark):
     obs_s = Observation()
     got = simhash_pairs(
         docs, "doc_id", "text", bits=60, bands=4, max_hamming=3,
-        max_band_size=50, observation=obs_s,
+        cap_hot_keys=True, observation=obs_s,
     ).collect()
     assert (100, 101) in {(r["id_a"], r["id_b"]) for r in got}
     assert obs_s.get == {"bands_dropped": 0, "pairs_avoided": 0}
@@ -292,7 +278,7 @@ def test_valve_telemetry_no_fire_all_operators(spark):
     increment = docs.filter(F.col("doc_id") >= 100)
     res = incremental_minhash_dedup(
         history, increment, "doc_id", "text",
-        band_size_quantile=0.92, observation=obs_i,
+        cap_hot_keys=True, observation=obs_i,
     ).collect()
     assert len(res) == 2
     assert obs_i.get == {"bands_dropped": 0, "rows_dropped": 0}
@@ -317,7 +303,7 @@ def test_minhash_valve_telemetry_when_firing(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     obs = Observation()
     got = minhash_lsh_pairs(
-        docs, "doc_id", "text", band_size_quantile=0.92, observation=obs
+        docs, "doc_id", "text", cap_hot_keys=True, observation=obs
     ).collect()
     m = obs.get
     assert m["bands_dropped"] >= 1
@@ -521,7 +507,7 @@ def test_substring_spans_match_bruteforce(spark):
 
 
 def test_substring_spans_cap_lower_bounds(spark):
-    """The df cap drops boilerplate windows and SPLITS runs containing
+    """The valve drops boilerplate windows and SPLITS runs containing
     them — reported runs are lower bounds, never inventions. With the
     shared hot window dropped (it appears in every doc), the two
     12-token twin passages split into two sub-runs around it."""
@@ -529,11 +515,18 @@ def test_substring_spans_cap_lower_bounds(spark):
 
     hot = "BOILER PLATE HOT WINDOW"  # 4 tokens, one k=4 window when aligned
     rows = [
-        (i, f"u{i}a u{i}b {hot} u{i}c u{i}d") for i in range(1, 9)
-    ]  # 8 docs all containing the hot window -> df 8 > cap 4
+        (i, f"u{i}a u{i}b {hot} u{i}c u{i}d") for i in range(1, 31)
+    ]  # 30 docs all containing the hot window -> df 32 > cap 10 x 2
     rows += [
         (100, f"p1 p2 p3 p4 {hot} q1 q2 q3 q4"),
         (101, f"p1 p2 p3 p4 {hot} q1 q2 q3 q4"),
+    ]
+    # three more twin pairs: with the 8 non-hot twin windows above,
+    # 23 windows at d=2 anchor the p92 occurrence count at 2
+    rows += [
+        (200 + 2 * p + s, " ".join(f"r{p}w{j}" for j in range(8)))
+        for p in range(3)
+        for s in (0, 1)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     uncapped = {
@@ -546,15 +539,14 @@ def test_substring_spans_cap_lower_bounds(spark):
     capped = {
         (r["id_a"], r["id_b"]): r["longest_run_tokens"]
         for r in substring_span_pairs(
-            docs, "doc_id", "text", window=4, min_run_tokens=4, max_df=4
+            docs, "doc_id", "text", window=4, min_run_tokens=4, cap_hot_keys=True
         ).collect()
     }
-    # every window containing a hot token pair... the exact windows
-    # crossing the boilerplate are rarer (doc-specific neighbours), so
-    # only the one fully-boilerplate window exceeds df=4 (10 docs
-    # carry it). Dropping it splits the twins' 12-token run into two
-    # shorter aligned runs; the reported longest is the larger
-    # fragment — strictly less than 12, still >= min_run.
+    # the windows crossing the boilerplate are rarer (doc-specific
+    # neighbours), so only the one fully-boilerplate window exceeds the
+    # cap (32 docs carry it). Dropping it splits the twins' 12-token
+    # run into two shorter aligned runs; the reported longest is the
+    # larger fragment — strictly less than 12, still >= min_run.
     assert (100, 101) in capped
     assert 4 <= capped[(100, 101)] < 12
     # capped output never invents pairs
@@ -570,30 +562,28 @@ def test_substring_spans_telemetry(spark):
 
     from git_log_to_sqlite_spark.operators import substring_span_pairs
 
-    rows = [
-        (100, "p1 p2 p3 p4 p5 p6 p7 p8"),
-        (101, "p1 p2 p3 p4 p5 p6 p7 p8"),
-    ]
+    # twins with 13 shared windows (d=2): the p92 occurrence count is 2
+    twin = " ".join(f"p{j}" for j in range(16))
+    rows = [(100, twin), (101, twin)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     obs = Observation()
     got = substring_span_pairs(
         docs, "doc_id", "text", window=4, min_run_tokens=4,
-        max_df=50, observation=obs,
+        cap_hot_keys=True, observation=obs,
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(100, 101)}
     assert obs.get == {"windows_dropped": 0, "pairs_avoided": 0}
 
-    # degenerate window shared by 30 docs, cap 10 -> fires
+    # degenerate window shared by 30 docs, cap 10 x 2 -> fires
     rows2 = rows + [(i, f"u{i}a HOT WIN DOW TEXT u{i}b") for i in range(30)]
     docs2 = spark.createDataFrame(rows2, "doc_id long, text string")
     obs2 = Observation()
     substring_span_pairs(
         docs2, "doc_id", "text", window=4, min_run_tokens=4,
-        max_df=10, observation=obs2,
+        cap_hot_keys=True, observation=obs2,
     ).collect()
-    m = obs2.get
-    assert m["windows_dropped"] >= 1 and m["pairs_avoided"] >= 30 * 29 // 2
-    with pytest.raises(ValueError, match="observation requires a cap"):
+    assert obs2.get == {"windows_dropped": 1, "pairs_avoided": 30 * 29 // 2}
+    with pytest.raises(ValueError, match="observation requires cap_hot_keys"):
         substring_span_pairs(
             docs, "doc_id", "text", window=4, min_run_tokens=4,
             observation=Observation(),
@@ -621,56 +611,80 @@ def test_banding_validation_precedes_pins(spark):
     with pytest.raises(ValueError, match="must exceed max_hamming"):
         image_near_dup_pairs(media, max_hamming=5, bands=4)
     assert _LIVE == []
-    # observation-without-cap must ALSO fail pre-pin: pre-fix this
-    # check lived only in _capped_bands, which runs after the
-    # signature pin in every Hamming entry point (ADVICE r9).
-    from pyspark.sql import Observation
-
-    from git_log_to_sqlite_spark.operators.multimodal import audio_near_dup_pairs
-
-    for call in (
-        lambda: simhash_pairs(docs, "doc_id", "text", observation=Observation()),
-        lambda: image_near_dup_pairs(media, observation=Observation()),
-        lambda: audio_near_dup_pairs(media, observation=Observation()),
-    ):
-        with pytest.raises(ValueError, match="observation requires a cap"):
-            call()
-        assert _LIVE == []
-    # both caps at once is the other _capped_bands-only check hoisted
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        simhash_pairs(
-            docs, "doc_id", "text", max_band_size=2, band_size_quantile=0.9
-        )
-    assert _LIVE == []
     # the cross-modal probe validates frame_bytes before its pins too
     from git_log_to_sqlite_spark.operators import image_in_video_frames
 
     with pytest.raises(ValueError, match="frame_bytes"):
         image_in_video_frames(media, media, frame_bytes=0)
     assert _LIVE == []
-    # the minhash entry points pin signatures too (the review-pass
-    # gap: the Hamming fix alone left these leaking)
-    from git_log_to_sqlite_spark.operators import (
-        incremental_minhash_dedup,
-        minhash_lsh_pairs,
-    )
 
-    for call in (
-        lambda: minhash_lsh_pairs(
-            docs, "doc_id", "text", max_band_size=2, band_size_quantile=0.9
-        ),
-        lambda: minhash_lsh_pairs(docs, "doc_id", "text", observation=Observation()),
-        lambda: incremental_minhash_dedup(
-            docs, docs.limit(1), "doc_id", "text",
-            max_band_size=2, band_size_quantile=0.9,
-        ),
-        lambda: incremental_minhash_dedup(
-            docs, docs.limit(1), "doc_id", "text", observation=Observation()
-        ),
-    ):
-        with pytest.raises(ValueError, match="mutually exclusive|requires a cap"):
-            call()
-        assert _LIVE == []
+
+_VALVE_CALLS = {
+    "minhash_lsh_pairs": lambda o, d, s, m, obs: o.minhash_lsh_pairs(
+        d, "doc_id", "text", observation=obs
+    ),
+    "ngram_jaccard_pairs": lambda o, d, s, m, obs: o.ngram_jaccard_pairs(
+        d, "doc_id", "text", observation=obs
+    ),
+    "substring_span_pairs": lambda o, d, s, m, obs: o.substring_span_pairs(
+        d, "doc_id", "text", observation=obs
+    ),
+    "incremental_substring_spans": lambda o, d, s, m, obs: (
+        o.incremental_substring_spans(d, d, "doc_id", "text", observation=obs)
+    ),
+    "simhash_pairs": lambda o, d, s, m, obs: o.simhash_pairs(
+        d, "doc_id", "text", observation=obs
+    ),
+    "hamming_pairs": lambda o, d, s, m, obs: o.hamming_pairs(
+        s, "doc_id", "sig", bits=32, observation=obs
+    ),
+    "hamming_probe": lambda o, d, s, m, obs: o.hamming_probe(
+        s.withColumnRenamed("doc_id", "pid"), s, "pid", "doc_id", "sig",
+        bits=32, observation=obs,
+    ),
+    "incremental_minhash_dedup": lambda o, d, s, m, obs: (
+        o.incremental_minhash_dedup(d, d, "doc_id", "text", observation=obs)
+    ),
+    "audio_shared_segment_pairs": lambda o, d, s, m, obs: (
+        o.audio_shared_segment_pairs(m, observation=obs)
+    ),
+    "video_shared_scene_pairs": lambda o, d, s, m, obs: (
+        o.video_shared_scene_pairs(m, observation=obs)
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_VALVE_CALLS))
+def test_observation_without_valve_raises_before_any_pin(spark, name):
+    """Every valve-bearing pair operator takes the one ``cap_hot_keys``
+    switch (off by default) and no absolute cap, quantile or headroom,
+    and an ``observation`` without the switch raises before the
+    operator pins anything: a raise after a pin would leak a
+    never-materialized cache-registry entry until release_caches()."""
+    import inspect
+
+    from pyspark.sql import Observation
+
+    from git_log_to_sqlite_spark import operators
+    from git_log_to_sqlite_spark.operators.caching import _LIVE, release_caches
+
+    params = inspect.signature(getattr(operators, name)).parameters
+    assert params["cap_hot_keys"].default is False
+    removed = {
+        "max_band_size", "band_size_quantile", "max_df", "max_df_quantile",
+        "quantile_headroom",
+    }
+    assert removed.isdisjoint(params)
+    release_caches()
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    sig = spark.createDataFrame([(1, 5)], "doc_id long, sig long")
+    media = spark.createDataFrame(
+        [(1, b"xyz", "image/raw", 3)],
+        "media_id long, payload binary, mime_type string, byte_len int",
+    )
+    with pytest.raises(ValueError, match="observation requires cap_hot_keys"):
+        _VALVE_CALLS[name](operators, docs, sig, media, Observation())
+    assert _LIVE == []
 
 
 def test_ivf_index_exists_distinguishes_missing_from_broken(spark, tmp_path):
@@ -756,7 +770,7 @@ def test_incremental_substring_history_valve(spark):
         (r["inc_id"], r["hist_id"]): r["longest_run_tokens"]
         for r in incremental_substring_spans(
             history, increment, "doc_id", "text", window=4, min_run_tokens=4,
-            max_df_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     assert got == {
@@ -776,10 +790,6 @@ def test_substring_spans_validation(spark):
         substring_span_pairs(docs, "doc_id", "text", window=1)
     with pytest.raises(ValueError, match="min_run_tokens"):
         substring_span_pairs(docs, "doc_id", "text", window=8, min_run_tokens=4)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        substring_span_pairs(
-            docs, "doc_id", "text", max_df=5, max_df_quantile=0.9
-        )
     # short docs yield no windows, no crash
     assert (
         substring_span_pairs(docs, "doc_id", "text", window=8, min_run_tokens=8)
@@ -2323,10 +2333,11 @@ def test_video_shared_scene_pairs_planted(spark):
     assert got[(1, 2)][0] == 6 and got[(1, 4)][0] == 12 and got[(2, 4)][0] == 6
     assert (1, 5) not in got and not any(3 in p for p in got)
 
-    # degenerate black frame across every clip: the cap drops it and
-    # reports honest telemetry; run recovery elsewhere is untouched
+    # degenerate black frame, 16 per clip (80 rows) against a frame-hash
+    # p92 of 4 (cap 40): the valve drops it and reports honest
+    # telemetry; run recovery elsewhere is untouched
     black = bytes([0]) * fb
-    capped_clips = {i: [black] + fs + [black] for i, fs in clips.items()}
+    capped_clips = {i: [black] * 8 + fs + [black] * 8 for i, fs in clips.items()}
     media_b = spark.createDataFrame(
         [(i, b"".join(fs), "video/raw", fb * len(fs))
          for i, fs in capped_clips.items()],
@@ -2337,10 +2348,10 @@ def test_video_shared_scene_pairs_planted(spark):
         (r["id_a"], r["id_b"]): r["longest_run_frames"]
         for r in video_shared_scene_pairs(
             media_b, rows_, cols, frame_bytes=fb, min_run_frames=4,
-            max_df=4, grid_fn=grid_fn, observation=obs,
+            cap_hot_keys=True, grid_fn=grid_fn, observation=obs,
         ).collect()
     }
-    assert obs.get["frames_dropped"] >= 1 and obs.get["pairs_avoided"] > 0
+    assert obs.get == {"frames_dropped": 1, "pairs_avoided": 80 * 79 // 2}
     # interior scenes survive the cap (black frames were at the edges)
     assert got_b[(1, 2)] == 6 and got_b[(1, 4)] == 12
 
@@ -2349,9 +2360,7 @@ def test_video_shared_scene_pairs_planted(spark):
     release_caches()  # the capped runs pin the frame table
     with pytest.raises(ValueError, match="min_run_frames"):
         video_shared_scene_pairs(media, min_run_frames=0)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        video_shared_scene_pairs(media, max_df=2, max_df_quantile=0.9)
-    with pytest.raises(ValueError, match="requires a cap"):
+    with pytest.raises(ValueError, match="requires cap_hot_keys"):
         video_shared_scene_pairs(media, observation=Observation())
 
 
@@ -2424,13 +2433,14 @@ def test_audio_shared_segment_pairs_planted(spark):
     assert got[(1, 2)][1] == 2  # a 5-word run carries 2 four-word windows
     assert not any(4 in p for p in got)
 
-    # planted trailing silence (8 frames -> a 7-zero-word run -> 4
-    # complete all-zero windows per clip): the degenerate window key
-    # repeats across every clip; the cap drops it and reports, the
-    # interior segments survive
-    silent = [[0] * BA] * 8
+    # planted trailing silence (20 frames -> a 19-zero-word run -> 16
+    # complete all-zero windows per clip, 64 rows against a window-key
+    # p92 of at most 3): the degenerate window key repeats across every
+    # clip; the valve drops it and reports, the interior segments
+    # survive
+    silent = [[0] * BA] * 20
     media_s = spark.createDataFrame(
-        [(i, payload(fs + silent), "audio/raw", BA * (len(fs) + 8))
+        [(i, payload(fs + silent), "audio/raw", BA * (len(fs) + 20))
          for i, fs in clips.items()],
         "media_id long, payload binary, mime_type string, byte_len int",
     )
@@ -2439,10 +2449,10 @@ def test_audio_shared_segment_pairs_planted(spark):
         (r["id_a"], r["id_b"]): r["longest_run_subfps"]
         for r in audio_shared_segment_pairs(
             media_s, frame_bytes=BA, bands=BA, min_run=4, window=4,
-            max_df=8, energy_fn=energy, observation=obs,
+            cap_hot_keys=True, energy_fn=energy, observation=obs,
         ).collect()
     }
-    assert obs.get["subfps_dropped"] >= 1 and obs.get["pairs_avoided"] > 0
+    assert obs.get == {"subfps_dropped": 1, "pairs_avoided": 64 * 63 // 2}
     assert got_s[(1, 3)] >= 13 and got_s[(1, 2)] == 5
 
     # the default length-proportional stub path runs end-to-end (the
@@ -2464,9 +2474,7 @@ def test_audio_shared_segment_pairs_planted(spark):
         audio_shared_segment_pairs(media, min_run=0)
     with pytest.raises(ValueError, match="must be >= window"):
         audio_shared_segment_pairs(media, min_run=2, window=4)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        audio_shared_segment_pairs(media, max_df=2, max_df_quantile=0.9)
-    with pytest.raises(ValueError, match="requires a cap"):
+    with pytest.raises(ValueError, match="requires cap_hot_keys"):
         audio_shared_segment_pairs(media, observation=Observation())
     with pytest.raises(ValueError, match="frame_bytes"):
         audio_shared_segment_pairs(media, frame_bytes=0)
@@ -2484,7 +2492,10 @@ def test_hamming_probe_matches_brute_force(spark):
     from git_log_to_sqlite_spark.operators import hamming_probe
 
     rng = random.Random(41)
-    corpus_sigs = [(i, rng.getrandbits(32)) for i in range(60)]
+    # 120 random signatures: enough naturally repeated 8-bit band
+    # buckets (85 keys, p92 = 3) that the planted degenerate family
+    # below is past the valve's 10 x p92 cap in every band
+    corpus_sigs = [(i, rng.getrandbits(32)) for i in range(120)]
     # probes: two planted near-matches + copies + randoms
     probe_sigs = [
         (100, corpus_sigs[3][1]),                    # exact
@@ -2511,8 +2522,9 @@ def test_hamming_probe_matches_brute_force(spark):
     }
     assert got == want and (100, 3, 0) in got and (101, 7, 2) in got
 
-    # corpus-side valve: a degenerate all-zero corpus bucket is capped
-    # with probe-shape telemetry; the planted matches elsewhere survive
+    # corpus-side valve: a degenerate all-zero corpus bucket (40 rows
+    # in every band, past the cap of 30) is capped with probe-shape
+    # telemetry; the planted matches elsewhere survive
     degen = corpus.unionByName(
         spark.createDataFrame([(i, 0) for i in range(500, 540)], "cid long, sig long")
     )
@@ -2521,11 +2533,11 @@ def test_hamming_probe_matches_brute_force(spark):
         tuple(r)
         for r in hamming_probe(
             probe, degen, "pid", "cid", "sig", bits=32, bands=4, max_hamming=3,
-            max_band_size=10, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     m = obs.get
-    assert m["bands_dropped"] >= 1 and m["rows_dropped"] >= 40
+    assert m["bands_dropped"] == 4 and m["rows_dropped"] >= 4 * 40
     assert (100, 3, 0) in got_d and (101, 7, 2) in got_d
     from git_log_to_sqlite_spark.operators import release_caches
 
@@ -2533,7 +2545,7 @@ def test_hamming_probe_matches_brute_force(spark):
 
     with pytest.raises(ValueError, match="disjoint"):
         hamming_probe(probe, corpus, "sig", "sig", "sig", bits=32)
-    with pytest.raises(ValueError, match="requires a cap"):
+    with pytest.raises(ValueError, match="requires cap_hot_keys"):
         hamming_probe(
             probe, corpus, "pid", "cid", "sig", bits=32, observation=Observation()
         )
@@ -3133,14 +3145,14 @@ def test_operator_cache_lifecycle(spark, oracle_sf_dir):
     docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
 
     ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.2, max_df_quantile=0.92
+        docs, "doc_id", "text", threshold=0.2, cap_hot_keys=True
     ).count()
     n_first = len(caching._LIVE)
     # per-doc sizes + per-shingle counts + pinned hot-shingle set
-    # (round 9: _hot_key_set pins the filtered hot set) + postings
+    # (round 9: _drop_hot_keys pins the filtered hot set) + postings
     assert n_first == 4
     ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.2, max_df_quantile=0.92
+        docs, "doc_id", "text", threshold=0.2, cap_hot_keys=True
     ).count()
     assert len(caching._LIVE) == n_first  # equivalent plan -> no new pin
 

@@ -103,7 +103,7 @@ def test_jaccard_quantile_cap_at_bench_sf(spark):
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
             docs, "doc_id", "text", threshold=0.2,
-            max_df_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     assert capped == uncapped and len(uncapped) > 0
@@ -134,7 +134,7 @@ def test_substring_spread_guard_lossless_at_bench_sf(spark):
     capped = {
         (r["id_a"], r["id_b"]): (r["longest_run_tokens"], r["n_shared_windows"])
         for r in substring_span_pairs(
-            docs, "doc_id", "text", max_df_quantile=0.92, **kw
+            docs, "doc_id", "text", cap_hot_keys=True, **kw
         ).collect()
     }
     release_caches()
@@ -305,7 +305,7 @@ def test_jaccard_cap_bounds_stop_shingle_blowup(spark):
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
             docs, "doc_id", "text", threshold=0.2,
-            max_df_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     release_caches()
@@ -344,7 +344,7 @@ def test_minhash_band_cap_bounds_degenerate_key(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", band_size_quantile=0.92, observation=obs
+            docs, "doc_id", "text", cap_hot_keys=True, observation=obs
         ).collect()
     }
     release_caches()
@@ -386,7 +386,7 @@ def test_substring_cap_bounds_degenerate_window(spark):
         (r["id_a"], r["id_b"]): r["longest_run_tokens"]
         for r in substring_span_pairs(
             docs, "doc_id", "text", window=4, min_run_tokens=4,
-            max_df_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     release_caches()
@@ -428,7 +428,7 @@ def test_incremental_band_cap_bounds_degenerate_history(spark):
         r["doc_id"]: r
         for r in incremental_minhash_dedup(
             history, increment, "doc_id", "text",
-            band_size_quantile=0.92, observation=obs,
+            cap_hot_keys=True, observation=obs,
         ).collect()
     }
     release_caches()

@@ -383,3 +383,61 @@ def test_every_exported_operator_is_reached():
                 loaded.add(node.attr)
     unreached = {name for name in operators.__all__ if name not in loaded}
     assert unreached == set(ALLOWED), sorted(unreached ^ set(ALLOWED))
+
+
+def _loads(tree) -> "list[str]":
+    """Every name an AST loads, as a ``Name`` or as an ``Attribute``."""
+    import ast
+
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            out.append(node.id)
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            out.append(node.attr)
+    return out
+
+
+def test_every_module_level_name_is_loaded():
+    """Every module-level ``def``, ``class`` and assignment in the
+    package is loaded, as a ``Name`` or an ``Attribute``, somewhere
+    outside its own definition: in the package, ``bench.py``,
+    ``perfbench/``, ``__spark_entry__.py`` or ``tests/`` (tests count
+    here, so reference helpers that only a test reads stay).
+    Docstrings, ``__all__`` strings and imports are not loads. Two
+    kinds of name are reached without a load and are skipped:
+    dunders, and decorated functions (``@register`` puts a query in
+    the registry)."""
+    import ast
+    from collections import Counter
+
+    package = REPO_ROOT / "git_log_to_sqlite_spark"
+    readers = [
+        *package.rglob("*.py"),
+        REPO_ROOT / "bench.py",
+        REPO_ROOT / "__spark_entry__.py",
+        *(REPO_ROOT / "perfbench").rglob("*.py"),
+        *(REPO_ROOT / "tests").rglob("*.py"),
+    ]
+    trees = {f: ast.parse(f.read_text(encoding="utf-8")) for f in readers}
+    loads = Counter(name for tree in trees.values() for name in _loads(tree))
+    unloaded = []
+    for f in package.rglob("*.py"):
+        for stmt in trees[f].body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if stmt.decorator_list:
+                    continue
+                names = [stmt.name]
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            own = Counter(_loads(stmt))
+            for name in names:
+                if name.startswith("__") and name.endswith("__"):
+                    continue
+                if loads[name] - own[name] <= 0:
+                    unloaded.append(f"{f.relative_to(REPO_ROOT)}:{stmt.lineno} {name}")
+    assert unloaded == [], unloaded
+
