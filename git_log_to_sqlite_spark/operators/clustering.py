@@ -52,9 +52,8 @@ def _sq_dist(
     if round_to is None:
         diff2 = F.zip_with(F.col(vec_col), c, lambda a, b: (a - b) * (a - b))
         return F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x)
-    dot = lambda x, y: F.aggregate(  # noqa: E731 — same fold as similarity._dot
-        F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t
-    )
+    from .similarity import dot
+
     v = F.col(vec_col)
     raw = dot(v, v) - F.lit(2.0) * dot(v, c) + dot(c, c)
     return F.round(raw, round_to)

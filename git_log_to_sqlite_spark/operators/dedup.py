@@ -62,7 +62,8 @@ def ngram_chain(tokens: Column, n: int) -> Column:
     per document. Measured on 200 x 2000-token docs: 18.7 s
     (index-lambda) vs 0.3 s (this form), identical outputs. This is
     the ONE place the chain lives: :func:`shingles` distincts it,
-    DSIR's hashed bigram features consume the raw bag."""
+    :func:`window_table` posexplodes it and DSIR's hashed bigram
+    features consume the raw bag."""
     L = F.size(tokens) - (n - 1)
     parts = [F.slice(tokens, k + 1, L) for k in range(n)]
     acc = parts[0]
@@ -393,52 +394,68 @@ def _drop_hot_keys(
     return keyed.join(hot, key_cols, "left_anti")
 
 
-def _band_self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
-    """Candidate ``(id_a, id_b)`` pairs from an (id, band, band_key)
-    table: self-join on the bucket key with ``id_a < id_b``, distinct
-    across bands — the ONE band self-join both LSH families share
-    (minhash band keys via :func:`minhash_lsh_pairs`, simhash /
-    perceptual bit slices via :func:`hamming_pairs`). Sides are
-    column-renamed projections, so the join condition names each side
-    unambiguously. A hot bucket with d members emits d(d-1)/2 pairs on
+def _band_pairs(
+    bands_a: DataFrame,
+    bands_b: DataFrame,
+    a_ids: list[str],
+    b_ids: list[str],
+) -> DataFrame:
+    """Candidate pairs from a bands x bands equi-join on (band,
+    band_key) — the ONE band join every LSH family shares (minhash band
+    keys, simhash / perceptual bit slices). Returns ``(*a_ids,
+    *b_ids)`` distinct: every pair that shares at least one bucket,
+    once. The id column sets must be disjoint names.
+
+    Probe shape (:func:`hamming_probe`,
+    :func:`incremental_minhash_dedup`): probe bands x corpus bands; a
+    probe side small enough to broadcast gives a BroadcastHashJoin,
+    which parallelizes a hot bucket's product over the corpus side's
+    input splits. Self shape (:func:`minhash_lsh_pairs`,
+    :func:`hamming_pairs`): the same bands frame on both sides with its
+    id renamed to ``id_a`` / ``id_b``, then ``.filter(id_a < id_b)``,
+    which the optimizer pushes through the distinct into the join
+    condition. A hot bucket with d members emits d(d-1)/2 self pairs on
     one join key; the defence is the :func:`_drop_hot_keys` valve
     upstream and AQE's skew-join split."""
-    a = bands.select(
-        F.col("band").alias("_band_a"),
-        F.col("band_key").alias("_bk_a"),
-        F.col(id_col).alias("id_a"),
-    )
-    b = bands.select(
-        F.col("band").alias("_band_b"),
-        F.col("band_key").alias("_bk_b"),
-        F.col(id_col).alias("id_b"),
-    )
-    pair_cond = (
-        (F.col("_band_a") == F.col("_band_b"))
-        & (F.col("_bk_a") == F.col("_bk_b"))
-        & (F.col("id_a") < F.col("id_b"))
-    )
-    return a.join(b, pair_cond).select("id_a", "id_b").distinct()
-
-
-def _band_probe_pairs(
-    bands_p: DataFrame,
-    bands_c: DataFrame,
-    p_ids: list[str],
-    c_ids: list[str],
-) -> DataFrame:
-    """Candidate pairs from a probe-bands x corpus-bands equi-join on
-    (band, band_key) — the PROBE-shaped twin of
-    :func:`_band_self_pairs`, shared by :func:`hamming_probe` and
-    :func:`incremental_minhash_dedup`. Returns ``(*p_ids, *c_ids)``
-    distinct: every (probe, corpus) pair that shares at least one
-    bucket, once. A probe side small enough to broadcast gives a
-    BroadcastHashJoin, which parallelizes a hot bucket's product over
-    the corpus side's input splits."""
     return (
-        bands_p.join(bands_c, ["band", "band_key"])
-        .select(*p_ids, *c_ids)
+        bands_a.join(bands_b, ["band", "band_key"])
+        .select(*a_ids, *b_ids)
         .distinct()
+    )
+
+
+def _minhash_verified(
+    cand: DataFrame,
+    mh_a: DataFrame,
+    mh_b: DataFrame,
+    id_col: str,
+    a_id: str,
+    b_id: str,
+    num_hashes: int,
+    min_agree: float,
+) -> DataFrame:
+    """The minhash verify: join each ``(a_id, b_id)`` candidate back to
+    its two wide signature rows (``mh_a`` keyed by ``a_id``, ``mh_b``
+    by ``b_id``; both carry ``id_col``) and keep it when the fraction
+    ``est`` of agreeing minhashes is >= ``min_agree`` — one column
+    comparison per hash on a single joined row, no K-row re-join."""
+    sa = mh_a.select(
+        F.col(id_col).alias(a_id),
+        *[F.col(f"mh_{j}").alias(f"_a{j}") for j in range(num_hashes)],
+    )
+    sb = mh_b.select(
+        F.col(id_col).alias(b_id),
+        *[F.col(f"mh_{j}").alias(f"_b{j}") for j in range(num_hashes)],
+    )
+    agree = sum(
+        F.when(F.col(f"_a{j}") == F.col(f"_b{j}"), 1).otherwise(0)
+        for j in range(num_hashes)
+    )
+    return (
+        cand.join(sa, a_id)
+        .join(sb, b_id)
+        .withColumn("est", agree.cast("double") / num_hashes)
+        .filter(F.col("est") >= min_agree)
     )
 
 
@@ -481,27 +498,15 @@ def minhash_lsh_pairs(
     if cap_hot_keys:
         bands = _drop_hot_keys(bands, ["band", "band_key"], observation, "bands_dropped")
 
-    cand = _band_self_pairs(bands, id_col)
-    ma = mh.select(
-        F.col(id_col).alias("_ida"), *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(num_hashes)]
-    )
-    mb = mh.select(
-        F.col(id_col).alias("_idb"), *[F.col(f"mh_{j}").alias(f"b_{j}") for j in range(num_hashes)]
-    )
-    agree = sum(
-        F.when(F.col(f"a_{j}") == F.col(f"b_{j}"), 1).otherwise(0)
-        for j in range(num_hashes)
-    )
-    return (
-        cand.join(ma, F.col("id_a") == F.col("_ida"))
-        .join(mb, F.col("id_b") == F.col("_idb"))
-        .select(
-            "id_a",
-            "id_b",
-            (agree.cast("double") / num_hashes).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= min_agree)
-    )
+    cand = _band_pairs(
+        bands.select("band", "band_key", F.col(id_col).alias("id_a")),
+        bands.select("band", "band_key", F.col(id_col).alias("id_b")),
+        ["id_a"],
+        ["id_b"],
+    ).filter(F.col("id_a") < F.col("id_b"))
+    return _minhash_verified(
+        cand, mh, mh, id_col, "id_a", "id_b", num_hashes, min_agree
+    ).select("id_a", "id_b", F.col("est").alias("est_jaccard"))
 
 
 def ngram_jaccard_pairs(
@@ -602,15 +607,8 @@ def ngram_jaccard_pairs(
         # explode + collect entirely. Uncapped postings are unbounded
         # and are deliberately NOT cached.
         postings = pin(postings)
-    # all (i < j) pairs within one posting list, as a flat struct array
-    pair_array = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_array = _ordered_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     pairs = (
         postings.select(F.explode(pair_array).alias("p"))
@@ -630,20 +628,21 @@ def ngram_jaccard_pairs(
     return out
 
 
-def positional_windows(tokens: Column, k: int) -> Column:
-    """Ordered (not distinct) k-token windows of a tokens array:
-    element i is the window starting at token i. The same
-    zip_with-chain form as :func:`shingles` (and for the same measured
-    O(tokens^2) reason the index-lambda form is banned there), minus
-    the array_distinct — position identity is the point here. Docs
-    shorter than k yield []."""
-    L = F.size(tokens) - (k - 1)
-    parts = [F.slice(tokens, j + 1, L) for j in range(k)]
-    acc = parts[0]
-    for j in range(1, k):
-        acc = F.zip_with(acc, parts[j], lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(F.size(tokens) >= k, acc).otherwise(
-        F.array().cast("array<string>")
+def _ordered_pairs(arr: Column, make) -> Column:
+    """Every (i < j) element pair of an array column as ``make(x, y)``,
+    flattened into one array: c(c-1)/2 cells per array of c, where a
+    full double explode makes c^2 (self pairs and both orientations)
+    and filters them afterwards. Serves the jaccard posting lists and
+    the substring occurrence lists. ``arr`` must be a materialized
+    attribute, not a recomputed expression: the lambdas reference it
+    (the capture rule in :func:`ngram_chain`)."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)), lambda y: make(x, y)
+            ),
+        )
     )
 
 
@@ -654,13 +653,15 @@ def window_table(
     modality's analog of a minhash signature table, consumed by
     :func:`substring_span_pairs` and :func:`incremental_substring_spans`.
     One row per token position at ~24 B/row; the window text itself
-    is never carried, only its 8-byte xxhash64."""
+    is never carried, only its 8-byte xxhash64. The windows are
+    :func:`ngram_chain` (ordered, not distinct: element i is the window
+    starting at token i — position identity is the point here)."""
     return (
         _spread(df)
         .select(
             F.col(id_col).alias("_id"),
             F.posexplode(
-                positional_windows(F.split(F.col(text_col), " "), window)
+                ngram_chain(F.split(F.col(text_col), " "), window)
             ).alias("pos", "gram"),
         )
         .select("_id", "pos", F.xxhash64("gram").alias("h"))
@@ -796,28 +797,18 @@ def _span_pairs_from_windows(
         .agg(F.array_sort(F.collect_list(F.struct("_id", "pos"))).alias("occ"))
         .filter(F.size("occ") >= 2)
     )
-    # Ordered (i < j) occurrence pairs via the jaccard slice/transform
-    # form — emits c(c-1)/2 cells per posting instead of the c^2 a
-    # full double-explode produces (self-pairs + both orientations,
-    # then filtered): on the operator's hottest stage that halves the
-    # exploded row volume. occ is sorted by (_id, pos), so i < j
-    # implies x._id <= y._id and the only cells left to drop are
-    # same-document ones. The lambdas reference occ — a materialized
-    # aggregate ATTRIBUTE, not a recomputed expression — so the HOF
-    # capture rule (shingles() docstring) is not violated.
-    pair_array = F.flatten(
-        F.transform(
-            F.col("occ"),
-            lambda x, i: F.transform(
-                F.slice(F.col("occ"), i + 2, F.size(F.col("occ"))),
-                lambda y: F.struct(
-                    x["_id"].alias("id_a"),
-                    y["_id"].alias("id_b"),
-                    (x["pos"] - y["pos"]).alias("diag"),
-                    x["pos"].alias("pos_a"),
-                ),
-            ),
-        )
+    # Ordered (i < j) occurrence pairs: on the operator's hottest stage
+    # that halves the exploded row volume against a double explode.
+    # occ is sorted by (_id, pos), so i < j implies x._id <= y._id and
+    # the only cells left to drop are same-document ones.
+    pair_array = _ordered_pairs(
+        F.col("occ"),
+        lambda x, y: F.struct(
+            x["_id"].alias("id_a"),
+            y["_id"].alias("id_b"),
+            (x["pos"] - y["pos"]).alias("diag"),
+            x["pos"].alias("pos_a"),
+        ),
     )
     m = (
         postings.select(F.explode(pair_array).alias("p"))
@@ -1163,19 +1154,31 @@ def hamming_probe(
             bands_c, ["band", "band_key"], observation, "bands_dropped", probe=True
         )
     bands_p = _sig_bands(probe, p_ids, sig_col, bits, bands)
-    cand = _band_probe_pairs(bands_p, bands_c, p_ids, c_ids)
-    sp = probe.select(
-        *[F.col(c) for c in p_ids], F.col(sig_col).alias("_sp")
-    )
-    sc = corpus.select(
-        *[F.col(c) for c in c_ids], F.col(sig_col).alias("_sc")
-    )
-    ham = F.bit_count(F.col("_sp").bitwiseXOR(F.col("_sc")))
+    cand = _band_pairs(bands_p, bands_c, p_ids, c_ids)
+    return _hamming_verified(cand, probe, corpus, p_ids, c_ids, sig_col, max_hamming)
+
+
+def _hamming_verified(
+    cand: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    a_ids: list[str],
+    b_ids: list[str],
+    sig_col: str,
+    max_hamming: int,
+) -> DataFrame:
+    """The Hamming verify: join each candidate back to its two
+    signatures (``sig_a`` keyed by ``a_ids``, ``sig_b`` by ``b_ids``)
+    and keep it when one ``bit_count(xor)`` is <= ``max_hamming``.
+    Returns ``(*a_ids, *b_ids, hamming)``."""
+    sa = sig_a.select(*a_ids, F.col(sig_col).alias("_sa"))
+    sb = sig_b.select(*b_ids, F.col(sig_col).alias("_sb"))
+    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
     return (
-        cand.join(sp, p_ids)
-        .join(sc, c_ids)
+        cand.join(sa, a_ids)
+        .join(sb, b_ids)
         .filter(ham <= max_hamming)
-        .select(*p_ids, *c_ids, ham.cast("int").alias("hamming"))
+        .select(*a_ids, *b_ids, ham.cast("int").alias("hamming"))
     )
 
 
@@ -1210,15 +1213,20 @@ def hamming_pairs(
         bands_df = _drop_hot_keys(
             bands_df, ["band", "band_key"], observation, "bands_dropped"
         )
-    cand = _band_self_pairs(bands_df, id_col)
-    sa = sig.select(F.col(id_col).alias("_ida"), F.col(sig_col).alias("_sa"))
-    sb = sig.select(F.col(id_col).alias("_idb"), F.col(sig_col).alias("_sb"))
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    return (
-        cand.join(sa, F.col("id_a") == F.col("_ida"))
-        .join(sb, F.col("id_b") == F.col("_idb"))
-        .filter(ham <= max_hamming)
-        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
+    cand = _band_pairs(
+        bands_df.select("band", "band_key", F.col(id_col).alias("id_a")),
+        bands_df.select("band", "band_key", F.col(id_col).alias("id_b")),
+        ["id_a"],
+        ["id_b"],
+    ).filter(F.col("id_a") < F.col("id_b"))
+    return _hamming_verified(
+        cand,
+        sig.withColumnRenamed(id_col, "id_a"),
+        sig.withColumnRenamed(id_col, "id_b"),
+        ["id_a"],
+        ["id_b"],
+        sig_col,
+        max_hamming,
     )
 
 
@@ -1430,25 +1438,12 @@ def incremental_minhash_dedup(
             bands_h, ["band", "band_key"], observation, "bands_dropped", probe=True
         )
     bands_i = _band_keys(mh_i, id_col, num_hashes, rows_per_band)
-    # shared probe-pair stage: increment = probe (small),
-    # history = corpus (big)
-    cand = _band_probe_pairs(
+    # increment = probe (small), history = corpus (big)
+    cand = _band_pairs(
         bands_i.withColumnRenamed(id_col, "_inc"),
         bands_h.withColumnRenamed(id_col, "_hist"),
         ["_inc"],
         ["_hist"],
-    )
-    mi = mh_i.select(
-        F.col(id_col).alias("_inc"),
-        *[F.col(f"mh_{j}").alias(f"i_{j}") for j in range(num_hashes)],
-    )
-    mht = mh_h.select(
-        F.col(id_col).alias("_hist"),
-        *[F.col(f"mh_{j}").alias(f"h_{j}") for j in range(num_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"i_{j}") == F.col(f"h_{j}"), 1).otherwise(0)
-        for j in range(num_hashes)
     )
     aggs = [
         F.min("_hist").alias("dup_of"),
@@ -1464,10 +1459,9 @@ def incremental_minhash_dedup(
             F.expr("min_by(_hist, struct(-est, _hist))").alias("best_match_id")
         )
     matches = (
-        cand.join(mi, "_inc")
-        .join(mht, "_hist")
-        .withColumn("est", agree.cast("double") / num_hashes)
-        .filter(F.col("est") >= min_agree)
+        _minhash_verified(
+            cand, mh_i, mh_h, id_col, "_inc", "_hist", num_hashes, min_agree
+        )
         .groupBy("_inc")
         .agg(*aggs)
     )

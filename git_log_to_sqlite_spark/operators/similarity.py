@@ -26,38 +26,82 @@ if TYPE_CHECKING:
     from pyspark.sql import Observation
 
 
-def _as_double(arr: Column) -> Column:
+def as_double(arr: Column) -> Column:
+    """Cast an embedding array to doubles (once, in a side projection)."""
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def _dot(a: Column, b: Column) -> Column:
+def dot(a: Column, b: Column) -> Column:
+    """Raw dot fold over two double arrays (:func:`as_double` first)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
-as_double = _as_double  # public: cast an embedding column once, in a side projection
-dot = _dot  # public: raw dot fold — expects double arrays (as_double first)
-
-
 def vnorm(arr: Column) -> Column:
-    """L2 norm of an array column (casts to double, JVM-side fold).
-
-    Compute this ONCE PER VECTOR in each side's projection (aliased
-    next to the cast vector) and divide the pair dot by the two norm
-    COLUMNS — never fold the norms on joined rows: that re-folds both
-    self-norms per candidate, tripling the per-pair arithmetic (3
-    O(dims) folds instead of 1) on the operator's hottest path.
-    """
-    v = _as_double(arr)
-    return F.sqrt(_dot(v, v))
+    """L2 norm of an array column (casts to double, JVM-side fold)."""
+    v = as_double(arr)
+    return F.sqrt(dot(v, v))
 
 
-def _topk(joined: DataFrame, sim: Column, k: int, round_to: int | None) -> DataFrame:
-    """Shared ranking tail of every top-k operator: project
+def vec_side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_as: str,
+    tag: str,
+    *extra: Column,
+    vec: Column | None = None,
+) -> DataFrame:
+    """The side projection of every cosine pair stage: ``(id_as,
+    *extra, _{tag}v, _{tag}n)`` — the vector cast to double and its L2
+    norm, each computed ONCE PER VECTOR, so the pair stage
+    (:func:`pair_cosine`) pays one O(dims) dot. Folding the norms on joined
+    rows instead re-folds both self-norms per candidate: 3 folds per
+    pair instead of 1 on the operator's hottest path. ``vec`` replaces
+    the plain cast (:meth:`IvfIndex.append` passes its checked form)."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(id_as),
+        *extra,
+        (as_double(v) if vec is None else vec).alias(f"_{tag}v"),
+        vnorm(v).alias(f"_{tag}n"),
+    )
+
+
+def pair_cosine(a: str, b: str, zero_norm: float | None = None) -> Column:
+    """Cosine similarity between two :func:`vec_side` projections
+    tagged ``a`` and ``b``: their dot over the product of their
+    precomputed norms. With ``zero_norm``, a pair whose norm product is
+    0 scores ``zero_norm`` instead of dividing by zero (a hard error
+    under ANSI mode)."""
+    den = F.col(f"_{a}n") * F.col(f"_{b}n")
+    sim = dot(F.col(f"_{a}v"), F.col(f"_{b}v")) / den
+    if zero_norm is None:
+        return sim
+    return F.when(den > 0, sim).otherwise(F.lit(zero_norm))
+
+
+def _topk(
+    q: DataFrame,
+    c: DataFrame,
+    on: Column | None,
+    k: int,
+    round_to: int | None,
+) -> DataFrame:
+    """Shared join and ranking tail of every top-k operator: the
+    query side ``q`` (``query_id``, tag ``q``) is broadcast against the
+    corpus side ``c`` (``neighbor_id``, tag ``c``) on ``on`` (None:
+    every pair, a broadcast cross join), self matches dropped; project
     (query_id, neighbor_id, cos_sim), rank per query (similarity desc,
     neighbor id tie-break — deterministic), keep k. ``round_to``
     rounds BEFORE ranking so tie behavior matches the SQL oracles."""
+    not_self = F.col("query_id") != F.col("neighbor_id")
+    if on is None:
+        joined = F.broadcast(q).crossJoin(c).filter(not_self)
+    else:
+        joined = F.broadcast(q).join(c, on & not_self)
+    sim = pair_cosine("q", "c")
     if round_to is not None:
         sim = F.round(sim, round_to)
     w = Window.partitionBy("query_id").orderBy(
@@ -110,25 +154,9 @@ def brute_force_topk(
     cos_sim). The query side is broadcast — keep it small; the corpus
     streams through one pass. ``round_to`` rounds the similarity BEFORE
     ranking (deterministic cross-engine tie behavior)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("_qv"),
-        vnorm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("_cv"),
-        vnorm(F.col(vec_col)).alias("_cn"),
-    )
-    # norms fold once per VECTOR (side projections); the pair stage
-    # pays one O(dims) dot, not three
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    joined = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _topk(joined, sim, k, round_to)
+    q = vec_side(queries, id_col, vec_col, "query_id", "q")
+    c = vec_side(corpus, id_col, vec_col, "neighbor_id", "c")
+    return _topk(q, c, None, k, round_to)
 
 
 def lsh_bucket(
@@ -150,11 +178,11 @@ def lsh_bucket(
         h = hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()
         return (int(h[:8], 16) / 0xFFFFFFFF) * 2.0 - 1.0
 
-    v = _as_double(vec_col)
+    v = as_double(vec_col)
     bucket = F.lit(0)
     for p in range(num_planes):
         plane = F.array(*[F.lit(weight(p, d)) for d in range(dims)])
-        proj = _dot(v, plane)
+        proj = dot(v, plane)
         bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
 
@@ -182,24 +210,12 @@ def multiprobe_ann_topk(
     corpus.
     """
     bucket = lsh_bucket(F.col(vec_col), dims, num_planes)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        bucket.alias("_cb"),
-        _as_double(F.col(vec_col)).alias("_cv"),
-        vnorm(F.col(vec_col)).alias("_cn"),
-    )
+    c = vec_side(corpus, id_col, vec_col, "neighbor_id", "c", bucket.alias("_cb"))
     probes = F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << p)) for p in range(num_planes)])
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(probes).alias("_qb"),
-        _as_double(F.col(vec_col)).alias("_qv"),
-        vnorm(F.col(vec_col)).alias("_qn"),
+    q = vec_side(
+        queries, id_col, vec_col, "query_id", "q", F.explode(probes).alias("_qb")
     )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    joined = F.broadcast(q).join(
-        c, (F.col("_qb") == F.col("_cb")) & (F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _topk(joined, sim, k, round_to)
+    return _topk(q, c, F.col("_qb") == F.col("_cb"), k, round_to)
 
 
 def ivf_ann_topk(
@@ -244,20 +260,12 @@ def ivf_ann_topk(
 
     cdf = _centroids_frame(corpus.sparkSession, centroids)
     c = assign_clusters_table(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("_cv"),
-            vnorm(F.col(vec_col)).alias("_cn"),
-        ),
+        vec_side(corpus, id_col, vec_col, "neighbor_id", "c"),
         "_cv",
         cdf,
         round_to=dist_round_to,
     ).withColumnRenamed("cluster", "_cc")
-    q_base = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("_qv"),
-        vnorm(F.col(vec_col)).alias("_qn"),
-    )
+    q_base = vec_side(queries, id_col, vec_col, "query_id", "q")
     q = nearest_cells_table(
         q_base, "_qv", cdf, n_probe, round_to=dist_round_to
     ).select(
@@ -266,11 +274,7 @@ def ivf_ann_topk(
         "_qv",
         "_qn",
     )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    joined = F.broadcast(q).join(
-        c, (F.col("_qc") == F.col("_cc")) & (F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _topk(joined, sim, k, round_to)
+    return _topk(q, c, F.col("_qc") == F.col("_cc"), k, round_to)
 
 
 def semantic_dedup(
@@ -429,7 +433,7 @@ def _checked_embedding(vec_col: str, dim: int, context: str) -> Column:
     projection (free next to the k dot products), so a bad batch
     fails the job BEFORE the parquet commit and a mixed batch cannot
     slip past a sampled pre-check."""
-    vec = _as_double(F.col(vec_col))
+    vec = as_double(F.col(vec_col))
     nn = F.size(F.filter(vec, lambda x: x.isNotNull()))
     # BOTH conditions: nn == dim alone would pass an over-length
     # vector whose null padding leaves exactly dim non-nulls (a
@@ -475,11 +479,7 @@ def _semantic_ranked(
     from .caching import pin
     from .clustering import assign_clusters_table
 
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        _as_double(F.col(vec_col)).alias("_v"),
-        vnorm(F.col(vec_col)).alias("_n"),
-    )
+    base = vec_side(df, id_col, vec_col, "_id", "")
     if not isinstance(centroids, DataFrame):
         centroids = _centroids_frame(df.sparkSession, centroids)
     # centroids as DATA (see assign_clusters_table): assignment via the
@@ -490,22 +490,20 @@ def _semantic_ranked(
     ).withColumnRenamed("cluster", "cell")
     cenj = centroids.select(
         "cell",
-        F.col("centroid").alias("_cen"),
-        F.sqrt(_dot(F.col("centroid"), F.col("centroid"))).alias("_cen_n"),
+        F.col("centroid").alias("_cenv"),
+        F.sqrt(dot(F.col("centroid"), F.col("centroid"))).alias("_cenn"),
     )
     ranked = ranked.join(F.broadcast(cenj), "cell")
-    cden = F.col("_n") * F.col("_cen_n")
-    cnum = _dot(F.col("_v"), F.col("_cen"))
     # zero-norm guard #1: a zero vector (failed encoder, empty input)
     # would make this 0/0 — a hard DIVIDE_BY_ZERO under ANSI mode.
     # NaN-out its centroid_sim instead: NaN sorts GREATEST, so zero
     # vectors deterministically rank LAST in their cell (ties by id).
-    csim = F.when(cden > 0, cnum / cden).otherwise(F.lit(float("nan")))
+    csim = pair_cosine("", "cen", zero_norm=float("nan"))
     if round_to is not None:
         csim = F.round(csim, round_to)
     return pin(
         ranked.withColumn("_csim", csim)
-        .drop("_cen", "_cen_n")  # csim is materialized; don't cache k x dims per row
+        .drop("_cenv", "_cenn")  # csim is materialized; don't cache k x dims per row
         .withColumn(
             "_rank",
             F.row_number().over(
@@ -529,13 +527,13 @@ def _semantic_annotate(
     cost is sum over cells of d(d-1)/2, in one task per cell."""
     a = ranked.select(
         F.col("cell").alias("_ca"), F.col("_rank").alias("_ra"),
-        F.col("_id").alias("_ia"), F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
+        F.col("_id").alias("_ia"), F.col("_v").alias("_av"),
+        F.col("_n").alias("_an"),
     )
     b = ranked.select(
         F.col("cell").alias("_cb"), F.col("_rank").alias("_rb"),
-        F.col("_id").alias("_ib"), F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
+        F.col("_id").alias("_ib"), F.col("_v").alias("_bv"),
+        F.col("_n").alias("_bn"),
     )
     pair_cond = (F.col("_ca") == F.col("_cb")) & (F.col("_ra") < F.col("_rb"))
     # zero-norm guard #2: a pair cosine involving a zero vector would
@@ -546,10 +544,7 @@ def _semantic_annotate(
     # it scores -inf: zero vectors are never dropped and never blamed
     # (identical zero vectors belong to exact dedup, which groups
     # them in one hash shuffle).
-    pden = F.col("_na") * F.col("_nb")
-    sim = F.when(
-        pden > 0, _dot(F.col("_va"), F.col("_vb")) / pden
-    ).otherwise(F.lit(float("-inf")))
+    sim = pair_cosine("a", "b", zero_norm=float("-inf"))
     if round_to is not None:
         sim = F.round(sim, round_to)
     drops = (
@@ -712,7 +707,7 @@ class IvfIndex:
         from .clustering import assign_clusters_table, kmeans, kmeans_fit_sample
 
         fit = corpus.select(
-            self.id_col, _as_double(F.col(self.vec_col)).alias("_v")
+            self.id_col, as_double(F.col(self.vec_col)).alias("_v")
         )
         t0 = time.perf_counter()
         if fit_sample_size is None:
@@ -730,11 +725,7 @@ class IvfIndex:
         if stage_times is not None:
             stage_times["centroids_write"] = round(time.perf_counter() - t0, 3)
         indexed = assign_clusters_table(
-            corpus.select(
-                F.col(self.id_col).alias("neighbor_id"),
-                _as_double(F.col(self.vec_col)).alias("_cv"),
-                vnorm(F.col(self.vec_col)).alias("_cn"),
-            ),
+            vec_side(corpus, self.id_col, self.vec_col, "neighbor_id", "c"),
             "_cv",
             cdf,
         ).withColumnRenamed("cluster", "cell")
@@ -798,10 +789,9 @@ class IvfIndex:
             self.vec_col, dim, f"IvfIndex.append at {self.base}"
         )
         assigned = assign_clusters_table(
-            new_vectors.select(
-                F.col(self.id_col).alias("neighbor_id"),
-                checked.alias("_cv"),
-                vnorm(F.col(self.vec_col)).alias("_cn"),
+            vec_side(
+                new_vectors, self.id_col, self.vec_col, "neighbor_id", "c",
+                vec=checked,
             ),
             "_cv",
             cents_df,
@@ -862,11 +852,7 @@ class IvfIndex:
         keep cells bounded."""
         from .clustering import nearest_cells_table
 
-        base = queries.select(
-            F.col(self.id_col).alias("query_id"),
-            _as_double(F.col(self.vec_col)).alias("_qv"),
-            vnorm(F.col(self.vec_col)).alias("_qn"),
-        )
+        base = vec_side(queries, self.id_col, self.vec_col, "query_id", "q")
         cents_df = read_parquet_cached(self.spark, f"{self.base}/centroids")
         q = (
             nearest_cells_table(base, "_qv", cents_df, n_probe)
@@ -882,13 +868,7 @@ class IvfIndex:
             r["_qc"] for r in q.select("_qc").distinct().collect()
         )
         index = self.read().filter(F.col("cell").isin(probed))
-        sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-        joined = F.broadcast(q).join(
-            index,
-            (F.col("_qc") == F.col("cell"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        return _topk(joined, sim, k, round_to)
+        return _topk(q, index, F.col("_qc") == F.col("cell"), k, round_to)
 
 
 def bucketed_ann_topk(
@@ -917,20 +897,10 @@ def bucketed_ann_topk(
     threshold-pair shape instead; otherwise chunk the probe batch and
     union the results — top-k per query is independent across chunks,
     so chunking is exact."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(bucket_col).alias("_qb"),
-        _as_double(F.col(vec_col)).alias("_qv"),
-        vnorm(F.col(vec_col)).alias("_qn"),
+    q = vec_side(
+        queries, id_col, vec_col, "query_id", "q", F.col(bucket_col).alias("_qb")
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(bucket_col).alias("_cb"),
-        _as_double(F.col(vec_col)).alias("_cv"),
-        vnorm(F.col(vec_col)).alias("_cn"),
+    c = vec_side(
+        corpus, id_col, vec_col, "neighbor_id", "c", F.col(bucket_col).alias("_cb")
     )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    joined = F.broadcast(q).join(
-        c, (F.col("_qb") == F.col("_cb")) & (F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _topk(joined, sim, k, round_to)
+    return _topk(q, c, F.col("_qb") == F.col("_cb"), k, round_to)

@@ -86,21 +86,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     inference (a measured ~0.19 s listing+footer job per plain
     ``spark.read.parquet`` call, ~6x the explicit-schema read);
     rewritten files re-infer via the fingerprint, unstattable paths
-    fall back to plain inference.
+    fall back to plain inference. The events ``ts`` encoding is read
+    from that same schema (``probe_events_ts``), so a first events read
+    infers once.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         from pyspark.sql import functions as F
 
-        from ..sources.events_probe import probe_events_ts
-        from ..sources.schema_cache import cached_parquet_schema
+        from ..sources.schema_cache import probe_events_ts
 
-        ts_dtype = probe_events_ts(spark, path)  # scopes the legacy conf
-        # probe first, THEN schema: a nanos file's schema (ts bigint)
-        # is only inferable/cacheable under the conf the probe latches.
-        schema = cached_parquet_schema(spark, path)
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(path)
+        # scopes the legacy conf: a nanos file's schema (ts bigint) is
+        # only inferable under the conf the probe latches
+        ts_dtype, schema = probe_events_ts(spark, path)
+        df = spark.read.schema(schema).parquet(path)
         if ts_dtype == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
         elif ts_dtype == "timestamp_ntz":

@@ -91,21 +91,14 @@ def sim_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_pairs_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
-    # norms fold once per vector in the side projections (see
-    # operators.similarity.vnorm) — the pair stage pays one dot;
     # stream side widened like dedup_embedding_cosine (bounded slice,
     # one scan partition otherwise)
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
-        F.col("vec_id").alias("vec_a"),
-        sim.as_double(F.col("embedding")).alias("av"),
-        sim.vnorm(F.col("embedding")).alias("an"),
+    a = sim.vec_side(
+        e.repartition(spark.sparkContext.defaultParallelism),
+        "vec_id", "embedding", "vec_a", "a",
     )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        sim.as_double(F.col("embedding")).alias("bv"),
-        sim.vnorm(F.col("embedding")).alias("bn"),
-    )
-    s = sim.dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))
+    b = sim.vec_side(e, "vec_id", "embedding", "vec_b", "b")
+    s = sim.pair_cosine("a", "b")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(s >= 0.8)
@@ -140,17 +133,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of cluster size (measured 2.6 -> 1.2 s at 32 cores; rows
     # identical). The slice is bounded by the filter (<= 512 rows), so
     # the repartition shuffles a few KB at any corpus scale.
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
-        F.col("vec_id").alias("vec_a"),
-        sim.as_double(F.col("embedding")).alias("av"),
-        sim.vnorm(F.col("embedding")).alias("an"),
+    a = sim.vec_side(
+        e.repartition(spark.sparkContext.defaultParallelism),
+        "vec_id", "embedding", "vec_a", "a",
     )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        sim.as_double(F.col("embedding")).alias("bv"),
-        sim.vnorm(F.col("embedding")).alias("bn"),
-    )
-    s = sim.dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))
+    b = sim.vec_side(e, "vec_id", "embedding", "vec_b", "b")
+    s = sim.pair_cosine("a", "b")
     dup_ids = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(s >= 0.95)
@@ -489,19 +477,14 @@ def dedup_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 256)
     # same stream-side widening as dedup_embedding_cosine: the bounded
     # slice scans as one partition and would serialize the pair folds
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
-        F.col("vec_id").alias("id_a"),
-        sim.as_double(F.col("embedding")).alias("av"),
-        sim.vnorm(F.col("embedding")).alias("an"),
+    a = sim.vec_side(
+        e.repartition(spark.sparkContext.defaultParallelism),
+        "vec_id", "embedding", "id_a", "a",
     )
-    b = e.select(
-        F.col("vec_id").alias("id_b"),
-        sim.as_double(F.col("embedding")).alias("bv"),
-        sim.vnorm(F.col("embedding")).alias("bn"),
-    )
+    b = sim.vec_side(e, "vec_id", "embedding", "id_b", "b")
     pairs = (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .filter(sim.dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn")) >= 0.3)
+        .filter(sim.pair_cosine("a", "b") >= 0.3)
         .select("id_a", "id_b")
     )
     out = assign_dedup_groups(e.select("vec_id"), pairs, "vec_id")

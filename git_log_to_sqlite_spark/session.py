@@ -422,17 +422,12 @@ def get_spark(
     # logger itself. Trade-off: a genuinely data-sized empty-spec
     # window would also log nothing — that class of mistake is guarded
     # by plan-shape tests (tests/test_plans.py) instead of log grep.
-    # The suppression is JVM-global and permanent, so embedding
-    # applications that share the session and want the warning for
-    # THEIR plans can opt out: SPARK_GRAFT_KEEP_WINDOW_WARN=1
-    # ("", "0", and "false" count as unset, so wrapper scripts that
-    # always export the var with a 0/1 value behave as written).
-    if os.environ.get("SPARK_GRAFT_KEEP_WINDOW_WARN", "").lower() in ("", "0", "false"):
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.sql.execution.window.WindowExec",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
+    # The suppression is JVM-global and permanent.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

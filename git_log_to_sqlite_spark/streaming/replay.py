@@ -73,13 +73,13 @@ def read_events_stream(
     (TIMESTAMP(NANOS) -> timestamp[us]); this probe is what survives
     the next switch.
     """
-    from ..sources.events_probe import probe_events_ts
+    from ..sources.schema_cache import probe_events_ts
 
     # The probe scopes the nanosAsLong legacy conf: restored unless the
-    # file really is nanos-encoded (sources/events_probe.py has the
-    # lifetime rule — a nanos file needs the conf at stream-execution
-    # time too, so only the not-nanos path can undo it).
-    probed = probe_events_ts(spark, path)
+    # file really is nanos-encoded (probe_events_ts has the lifetime
+    # rule — a nanos file needs the conf at stream-execution time too,
+    # so only the not-nanos path can undo it).
+    probed, _ = probe_events_ts(spark, path)
     if probed == "bigint":
         schema = EVENTS_RAW_SCHEMA
     elif probed == "timestamp_ntz":

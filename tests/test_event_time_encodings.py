@@ -173,24 +173,24 @@ def test_nanos_conf_scoped_to_probe(spark, encoded_dirs):
     TIMESTAMP(NANOS) column elsewhere would silently come back as
     bigint); for a genuinely nanos-encoded file it MUST stay set,
     because the returned frame still needs it at execution time."""
-    from git_log_to_sqlite_spark.sources.events_probe import (
+    from git_log_to_sqlite_spark.sources.schema_cache import (
         _NANOS_CONF,
-        _PROBE_CACHE,
+        clear_schema_cache,
         probe_events_ts,
     )
 
-    _PROBE_CACHE.clear()  # earlier tests probed these paths already
+    clear_schema_cache()  # earlier tests probed these paths already
     spark.conf.unset(_NANOS_CONF)
 
-    got = probe_events_ts(spark, f"{encoded_dirs['micros_ntz']}/events.parquet")
+    got = probe_events_ts(spark, f"{encoded_dirs['micros_ntz']}/events.parquet")[0]
     assert got == "timestamp_ntz"
     assert spark.conf.get(_NANOS_CONF, None) is None  # restored
 
-    got = probe_events_ts(spark, f"{encoded_dirs['micros_utc']}/events.parquet")
+    got = probe_events_ts(spark, f"{encoded_dirs['micros_utc']}/events.parquet")[0]
     assert got == "timestamp"
     assert spark.conf.get(_NANOS_CONF, None) is None  # restored
 
-    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")
+    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0]
     assert got == "bigint"
     assert spark.conf.get(_NANOS_CONF) == "true"  # must stay for execution
 
@@ -204,7 +204,7 @@ def test_nanos_conf_scoped_to_probe(spark, encoded_dirs):
     # a cache HIT on a nanos path must re-establish the conf: frames
     # built after the hit still need it at execution time
     spark.conf.unset(_NANOS_CONF)
-    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")
+    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0]
     assert got == "bigint"
     assert spark.conf.get(_NANOS_CONF) == "true"
     spark.conf.unset(_NANOS_CONF)
@@ -215,7 +215,7 @@ def test_failed_probe_restores_conf(spark, tmp_path):
     speculative nanosAsLong conf before re-raising — a failed probe
     leaving it latched is exactly the silent-bigint leak the module
     exists to prevent."""
-    from git_log_to_sqlite_spark.sources.events_probe import (
+    from git_log_to_sqlite_spark.sources.schema_cache import (
         _NANOS_CONF,
         probe_events_ts,
     )
@@ -232,6 +232,49 @@ def test_failed_probe_restores_conf(spark, tmp_path):
     spark.conf.unset(_NANOS_CONF)
 
 
+def test_warm_non_nanos_probe_writes_no_conf(spark, encoded_dirs, monkeypatch):
+    """A cache hit on a non-nanos file writes the nanosAsLong conf not
+    at all. Queries share one session across threads: a hit that set
+    and restored the conf could interleave with another probe's pair
+    and leave it latched for the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from git_log_to_sqlite_spark.sources.schema_cache import (
+        _NANOS_CONF,
+        probe_events_ts,
+    )
+
+    path = f"{encoded_dirs['micros_utc']}/events.parquet"
+    probe_events_ts(spark, path)  # warm
+    spark.conf.set(_NANOS_CONF, "false")  # neither unset nor the probe's "true"
+    writes = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: writes.append(("set", k, v)))
+    monkeypatch.setattr(RuntimeConfig, "unset", lambda self, k: writes.append(("unset", k)))
+    assert probe_events_ts(spark, path)[0] == "timestamp"
+    monkeypatch.undo()
+    assert writes == []
+    assert spark.conf.get(_NANOS_CONF) == "false"
+    spark.conf.unset(_NANOS_CONF)
+
+
+def test_probe_without_ts_column_restores_conf(spark, tmp_path):
+    """A file with no ``ts`` column fails the probe after the read; the
+    speculative conf is restored all the same."""
+    from git_log_to_sqlite_spark.sources.schema_cache import (
+        _NANOS_CONF,
+        clear_schema_cache,
+        probe_events_ts,
+    )
+
+    p = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"event_id": [1, 2]}), p)
+    clear_schema_cache()
+    spark.conf.unset(_NANOS_CONF)
+    with pytest.raises(KeyError):
+        probe_events_ts(spark, p)
+    assert spark.conf.get(_NANOS_CONF, None) is None
+
+
 def test_probe_cache_invalidated_on_regeneration(spark, tmp_path):
     """The probe cache is keyed on a file fingerprint (size + mtime),
     so regenerating the parquet at the SAME path with a different ts
@@ -239,22 +282,22 @@ def test_probe_cache_invalidated_on_regeneration(spark, tmp_path):
     dtype (which would misdecode every ts by 1000x)."""
     import os
 
-    from git_log_to_sqlite_spark.sources.events_probe import (
+    from git_log_to_sqlite_spark.sources.schema_cache import (
         _NANOS_CONF,
         probe_events_ts,
     )
 
     p = str(tmp_path / "events.parquet")
     pq.write_table(_events_table(pa.timestamp("us")), p)
-    assert probe_events_ts(spark, p) == "timestamp_ntz"
-    assert probe_events_ts(spark, p) == "timestamp_ntz"  # cache hit
+    assert probe_events_ts(spark, p)[0] == "timestamp_ntz"
+    assert probe_events_ts(spark, p)[0] == "timestamp_ntz"  # cache hit
 
     pq.write_table(_events_table(pa.timestamp("ns")), p)
     # same row count could mean same size; force a distinct mtime so the
     # fingerprint can't collide even on coarse-grained filesystems
     st = os.stat(p)
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    assert probe_events_ts(spark, p) == "bigint"  # NOT the stale entry
+    assert probe_events_ts(spark, p)[0] == "bigint"  # NOT the stale entry
     spark.conf.unset(_NANOS_CONF)
 
 
@@ -267,12 +310,12 @@ def test_latched_nanos_conf_is_session_wide(spark, encoded_dirs, tmp_path):
     and all event reads flow through the table() choke point, but a
     deployment adding a second nanos table must normalize it through
     that choke point too (see probe_events_ts docstring)."""
-    from git_log_to_sqlite_spark.sources.events_probe import (
+    from git_log_to_sqlite_spark.sources.schema_cache import (
         _NANOS_CONF,
         probe_events_ts,
     )
 
-    assert probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet") == "bigint"
+    assert probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0] == "bigint"
     assert spark.conf.get(_NANOS_CONF) == "true"  # latched
 
     other = str(tmp_path / "other_nanos.parquet")
@@ -288,7 +331,7 @@ def test_probe_fingerprint_sees_nested_part_rewrite(tmp_path):
     even though the top-level directory entry's name/size/mtime do not."""
     import os
 
-    from git_log_to_sqlite_spark.sources.events_probe import _fingerprint
+    from git_log_to_sqlite_spark.sources.schema_cache import _fingerprint
 
     root = tmp_path / "events.parquet"
     sub = root / "date=2024"

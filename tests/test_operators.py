@@ -170,17 +170,14 @@ def test_minhash_band_cap_preserves_pairs(spark, oracle_sf_dir):
 
 
 def test_band_join_default_plans_are_plain_equi_joins(spark):
-    """The shared band self-join and probe-join stages plan as one
-    equi-join on (band, band_key): no explicitly pinned repartition
-    (REPARTITION_BY_NUM — AQE never rewrites it), no cartesian, no
-    nested-loop join."""
+    """The shared band join plans as one equi-join on (band, band_key)
+    in both its self form (ids renamed, ``id_a < id_b``) and its probe
+    form: no explicitly pinned repartition (REPARTITION_BY_NUM — AQE
+    never rewrites it), no cartesian, no nested-loop join."""
     import contextlib
     import io
 
-    from git_log_to_sqlite_spark.operators.dedup import (
-        _band_probe_pairs,
-        _band_self_pairs,
-    )
+    from git_log_to_sqlite_spark.operators.dedup import _band_pairs
 
     bands = spark.createDataFrame(
         [(i, 0, "k") for i in range(6)],
@@ -197,9 +194,15 @@ def test_band_join_default_plans_are_plain_equi_joins(spark):
             df_.explain("formatted")
         return buf.getvalue()
 
+    self_pairs = _band_pairs(
+        bands.select("band", "band_key", F.col("doc_id").alias("id_a")),
+        bands.select("band", "band_key", F.col("doc_id").alias("id_b")),
+        ["id_a"],
+        ["id_b"],
+    ).filter(F.col("id_a") < F.col("id_b"))
     for plan in (
-        plan_of(_band_self_pairs(bands, "doc_id")),
-        plan_of(_band_probe_pairs(bands_p, bands, ["pid"], ["doc_id"])),
+        plan_of(self_pairs),
+        plan_of(_band_pairs(bands_p, bands, ["pid"], ["doc_id"])),
     ):
         assert "REPARTITION_BY_NUM" not in plan, plan
         assert "CartesianProduct" not in plan, plan
@@ -3548,7 +3551,7 @@ def test_append_assignment_never_shuffles_the_data(clustered_vectors, tmp_path):
         assign_clusters_table,
     )
     from git_log_to_sqlite_spark.operators.similarity import (
-        _as_double,
+        as_double,
         vnorm,
     )
 
@@ -3561,7 +3564,7 @@ def test_append_assignment_never_shuffles_the_data(clustered_vectors, tmp_path):
     cdf = e.sparkSession.read.parquet(f"{idx.base}/centroids")
     new = e.select(
         F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("_cv"),
+        as_double(F.col("embedding")).alias("_cv"),
         vnorm(F.col("embedding")).alias("_cn"),
     )
     af = assign_clusters_table(new, "_cv", cdf)

@@ -135,10 +135,9 @@ def test_simhash_pairs_no_cartesian(spark, sf):
     band_inner = [
         i
         for i, b in nodes.items()
-        # the shared _band_self_pairs stage joins renamed projections
-        # (_bk_a on the left) — the ONLY spelling; a raw band_key join
-        # here would mean a plan that bypassed the shared stage
-        if "Join type: Inner" in b and "_bk_a" in b.split("Right keys")[0]
+        # the shared _band_pairs stage is the only inner join keyed
+        # on band_key (the verify joins key on the ids)
+        if "Join type: Inner" in b and "band_key" in b.split("Right keys")[0]
     ]
     assert len(anti) == 2 and band_inner
     assert max(anti) < min(band_inner), (anti, band_inner)
@@ -483,10 +482,9 @@ def test_minhash_band_cap_filters_before_band_join(spark, sf):
     band_inner = [
         i
         for i, b in nodes.items()
-        # _band_self_pairs joins renamed projections (_bk_a on the
-        # left) — the ONLY spelling; a raw band_key join here would
-        # mean a plan that bypassed the shared stage
-        if "Join type: Inner" in b and "_bk_a" in b.split("Right keys")[0]
+        # the shared _band_pairs stage is the only inner join keyed
+        # on band_key (the verify joins key on the ids)
+        if "Join type: Inner" in b and "band_key" in b.split("Right keys")[0]
     ]
     assert len(anti) == 2, sorted(nodes)  # one per self-join alias
     assert band_inner, sorted(nodes)

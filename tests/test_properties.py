@@ -374,14 +374,12 @@ _band_rows = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_salted_pair_joins_row_identical_any_input(sess, rows, probe):
     """Band-join algebra on ANY bands table (SURVEY 5.2.4), duplicate
-    rows included, against a pure-Python reference: the self join
-    yields every ``(id_a, id_b)`` with ``id_a < id_b`` sharing a
-    ``(band, band_key)``, once across bands; the probe join yields
-    every ``(pid, doc_id)`` sharing a ``(band, band_key)``, once."""
-    from git_log_to_sqlite_spark.operators.dedup import (
-        _band_probe_pairs,
-        _band_self_pairs,
-    )
+    rows included, against a pure-Python reference: the self form (the
+    bands frame against itself, ids renamed, ``id_a < id_b``) yields
+    every such pair sharing a ``(band, band_key)``, once across bands;
+    the probe form yields every ``(pid, doc_id)`` sharing a
+    ``(band, band_key)``, once."""
+    from git_log_to_sqlite_spark.operators.dedup import _band_pairs
 
     bands = sess.createDataFrame(
         rows, "doc_id long, band int, band_key string"
@@ -392,7 +390,12 @@ def test_salted_pair_joins_row_identical_any_input(sess, rows, probe):
         for b, bb, kb in rows
         if (ba, ka) == (bb, kb) and a < b
     }
-    got_self = list(map(tuple, _band_self_pairs(bands, "doc_id").collect()))
+    got_self = list(map(tuple, _band_pairs(
+        bands.select("band", "band_key", F.col("doc_id").alias("id_a")),
+        bands.select("band", "band_key", F.col("doc_id").alias("id_b")),
+        ["id_a"],
+        ["id_b"],
+    ).filter(F.col("id_a") < F.col("id_b")).collect()))
     assert len(got_self) == len(set(got_self))
     assert set(got_self) == want_self
 
@@ -405,11 +408,39 @@ def test_salted_pair_joins_row_identical_any_input(sess, rows, probe):
         for c, bc, kc in rows
         if (bp, kp) == (bc, kc)
     }
-    got_probe = list(map(tuple, _band_probe_pairs(
+    got_probe = list(map(tuple, _band_pairs(
         bands_p, bands, ["pid"], ["doc_id"]
     ).collect()))
     assert len(got_probe) == len(set(got_probe))
     assert set(got_probe) == want_probe
+
+
+@given(sigs=st.lists(st.integers(0, 255), min_size=1, max_size=30))
+@settings(**_SETTINGS)
+def test_hamming_pairs_is_self_probe_any_signatures(sess, sigs):
+    """The two Hamming operators share one band join and one verify:
+    on ANY 8-bit signatures, ``hamming_pairs(sig)`` equals
+    ``hamming_probe`` of ``sig`` against itself restricted to
+    ``id_a < id_b`` — pairs AND their hamming distances."""
+    from git_log_to_sqlite_spark.operators.dedup import (
+        hamming_pairs,
+        hamming_probe,
+    )
+
+    sig = sess.createDataFrame(list(enumerate(sigs)), "doc_id long, sig long")
+    knobs = dict(bits=8, bands=4, max_hamming=3)
+    got = hamming_pairs(sig, "doc_id", "sig", **knobs).collect()
+    probe = hamming_probe(
+        sig.withColumnRenamed("doc_id", "id_a"),
+        sig.withColumnRenamed("doc_id", "id_b"),
+        "id_a",
+        "id_b",
+        "sig",
+        **knobs,
+    ).filter(F.col("id_a") < F.col("id_b"))
+    want = {tuple(r) for r in probe.collect()}
+    assert len(got) == len(want)
+    assert set(map(tuple, got)) == want
 
 
 @given(

@@ -1,5 +1,6 @@
 """Parquet schema cache (sources/schema_cache.py): hit behavior,
-fingerprint invalidation, fallback, and the events-conf interplay.
+fingerprint invalidation, fallback, and the events ts probe that reads
+through it.
 
 The cache exists for a measured reason (see the module docstring):
 plain ``spark.read.parquet`` fires a ~0.19 s listing+footer job on
@@ -23,8 +24,10 @@ from git_log_to_sqlite_spark.sources.schema_cache import (
 )
 
 
-def _job_count(spark) -> int:
-    return len(spark.sparkContext._jsc.statusTracker().getJobIdsForGroup(None))
+def _last_job_id(spark) -> int:
+    # job ids are sequential; a count of retained jobs stops growing at
+    # spark.ui.retainedJobs (1000), the newest id does not
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
 
 
 def test_hit_serves_identical_schema_with_zero_jobs(spark, sf_dir):
@@ -32,17 +35,17 @@ def test_hit_serves_identical_schema_with_zero_jobs(spark, sf_dir):
     path = f"{sf_dir}/customer.parquet"
     inferred = spark.read.parquet(path).schema  # ground truth, pays the job
     first = cached_parquet_schema(spark, path)  # may infer (fills cache)
-    before = _job_count(spark)
+    before = _last_job_id(spark)
     second = cached_parquet_schema(spark, path)
-    assert _job_count(spark) == before, "cache hit must not fire a Spark job"
+    assert _last_job_id(spark) == before, "cache hit must not fire a Spark job"
     assert first == inferred and second == inferred
 
 
 def test_table_reconstruction_fires_no_inference_job(spark, sf_dir):
     df1 = table(spark, sf_dir, "customer")  # fills the cache
-    before = _job_count(spark)
+    before = _last_job_id(spark)
     df2 = table(spark, sf_dir, "customer")
-    assert _job_count(spark) == before
+    assert _last_job_id(spark) == before
     assert df2.schema == df1.schema
     # and the declared-schema scan reads the same data
     assert df2.count() == df1.count()
@@ -96,3 +99,15 @@ def test_events_reencode_same_path_stays_correct(spark, tmp_path):
     write("ns")
     t2 = table(spark, sf, "events").select("ts").first()["ts"]
     assert t1 == t2, "re-encoded events at the same path must normalize identically"
+
+
+def test_first_events_read_infers_once(spark, sf_dir):
+    """The events ts probe reads the encoding from the cached schema,
+    so the first ``table(..., "events")`` after the cache is cleared
+    runs ONE schema-inference job — not one for the probe and a second
+    for the read's own schema."""
+    clear_schema_cache()
+    before = _last_job_id(spark)
+    df = table(spark, sf_dir, "events")
+    assert _last_job_id(spark) - before == 1
+    assert dict(df.dtypes)["ts"] == "timestamp"
