@@ -56,8 +56,13 @@ def pin(df: DataFrame) -> DataFrame:
     Python wrapper and compared first (one py4j int fetch per NEW
     frame, Python int compares for the rest). ``sameResult`` runs
     only on a hash match; the Catalyst contract (equal results imply
-    equal semanticHash) makes the short-circuit sound."""
-    _LIVE[:] = [d for d in _LIVE if _is_live(d)]
+    equal semanticHash) makes the short-circuit sound.
+
+    The registry list is only ever appended to here (never rebound:
+    py4j calls release the GIL, and a pin appended by another thread
+    between a rebuild and its store would be lost, never unpersisted).
+    A hash match on an externally cleared entry is skipped, so it never
+    suppresses a fresh persist; ``release_caches`` drains it."""
     try:
         analyzed = df._jdf.queryExecution().analyzed()
         h = analyzed.semanticHash()
@@ -68,7 +73,11 @@ def pin(df: DataFrame) -> DataFrame:
             if lh is None:
                 lh = live._jdf.queryExecution().analyzed().semanticHash()
                 live._pin_semhash = lh
-            if lh == h and live._jdf.queryExecution().analyzed().sameResult(analyzed):
+            if (
+                lh == h
+                and _is_live(live)
+                and live._jdf.queryExecution().analyzed().sameResult(analyzed)
+            ):
                 return df
         df._pin_semhash = h
     except Exception:  # py4j hiccup — fall through to a plain persist

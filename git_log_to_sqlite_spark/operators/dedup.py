@@ -934,6 +934,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     signatures are 8 bytes/doc, so the pair stage can band on bit
     slices or broadcast.
 
+    Precondition: ids are unique (duplicates merge into one signature).
+
     ``bits`` <= 60 (the md5-derived token hash is at most 15 hex chars
     = 60 bits, keeping the signature a non-negative BIGINT). The token
     hash width is 32 bits for ``bits`` <= 32 (frozen: the 32-bit

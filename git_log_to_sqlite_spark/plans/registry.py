@@ -28,6 +28,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.schema_cache import events_schema, read_parquet_cached, with_event_time
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -66,45 +68,23 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver table. Plain parquet read — filters/projections
     in the calling query push down into this scan.
 
-    ``events.ts`` is normalized to TIMESTAMP here — the single choke
-    point — whatever the producer's physical encoding, because upstream
-    writers change encodings over time (this repo has seen both):
-
-    * ``TIMESTAMP(NANOS)``: Spark's parquet reader rejects it natively;
-      read as raw nanos (legacy conf) and converted with integer
-      division (a double division would lose precision on 1e18-scale
-      nanos). DuckDB truncates the same nanos to micros — identical.
-    * ``timestamp[us]`` with no timezone (Spark TIMESTAMP_NTZ): cast to
-      session-TZ TIMESTAMP. The session TZ is pinned to UTC, so the
-      wall-clock reading — and therefore the epoch value DuckDB's naive
-      TIMESTAMP read produces — is unchanged.
-    * ``timestamp[us, tz=UTC]`` (plain TIMESTAMP): passthrough.
-
-    Schemas are served from the fingerprint-keyed cache
-    (``sources.schema_cache``) so repeated ``table()`` calls — every
+    Every read declares its schema from the fingerprint-keyed cache
+    (``sources.schema_cache``), so repeated ``table()`` calls — every
     query construction, every bench pass — skip parquet schema
     inference (a measured ~0.19 s listing+footer job per plain
     ``spark.read.parquet`` call, ~6x the explicit-schema read);
     rewritten files re-infer via the fingerprint, unstattable paths
-    fall back to plain inference. The events ``ts`` encoding is read
-    from that same schema (``probe_events_ts``), so a first events read
-    infers once.
+    fall back to plain inference.
+
+    ``events`` declares ``events_schema`` and decodes ``ts`` to
+    TIMESTAMP through ``with_event_time``, the same pair the streaming
+    replay uses, whatever the producer's physical encoding
+    (TIMESTAMP(NANOS), ``timestamp[us]`` with or without a UTC tz):
+    upstream writers change encodings over time, and this repo has
+    seen both. The caller's session conf is never touched.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        from pyspark.sql import functions as F
-
-        from ..sources.schema_cache import probe_events_ts
-
-        # scopes the legacy conf: a nanos file's schema (ts bigint) is
-        # only inferable under the conf the probe latches
-        ts_dtype, schema = probe_events_ts(spark, path)
-        df = spark.read.schema(schema).parquet(path)
-        if ts_dtype == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    from ..sources.schema_cache import read_parquet_cached
-
+        schema = events_schema(spark, path)
+        return with_event_time(spark.read.schema(schema).parquet(path), schema)
     return read_parquet_cached(spark, path)

@@ -1,5 +1,5 @@
-"""Fingerprint-keyed parquet schema cache, and the events table's
-timestamp-encoding probe that reads through it.
+"""Fingerprint-keyed parquet schema cache, and the ``events`` table's
+declared schema and ``ts`` decode, which read through it.
 
 Measured (round 16 plan-cost sweep, OPTIMIZATION_r16.md §1): every
 ``spark.read.parquet(path)`` fires a schema-inference job — a file
@@ -40,7 +40,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -99,11 +100,9 @@ def cached_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     fingerprinted (caller should fall back to plain inference).
 
     The schema is inferred under the session confs active at the first
-    call and served verbatim thereafter. Only the legacy nanos conf
-    changes what a read infers, and only for a TIMESTAMP(NANOS) file,
-    which cannot be inferred at all without it — so such a file's
-    schema is cached only through :func:`probe_events_ts`, which sets
-    the conf first."""
+    call and served verbatim thereafter. A TIMESTAMP(NANOS) file
+    cannot be inferred here; the events file's schema is cached
+    through :func:`events_schema`."""
     fp, schema = _lookup(path)
     if fp == _UNSTATTABLE:
         return None
@@ -138,71 +137,43 @@ def read_parquet_cached(spark: SparkSession, path: str):
     return spark.read.parquet(path)
 
 
-def _restore_nanos_conf(spark: SparkSession, prior: str | None) -> None:
-    if prior is None:
-        spark.conf.unset(_NANOS_CONF)
-    else:
-        spark.conf.set(_NANOS_CONF, prior)
+def events_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema every ``events`` read declares: the file's own
+    columns, with ``ts`` as ``bigint`` (the raw nanos of a
+    TIMESTAMP(NANOS) file), ``timestamp_ntz`` (``timestamp[us]``, no
+    tz) or ``timestamp``. Served from the fingerprint cache, so the
+    file is inferred once.
 
-
-def probe_events_ts(spark: SparkSession, path: str) -> tuple[str, StructType]:
-    """Return ``(ts dtype, schema)`` of the events file at ``path`` as
-    Spark reads it; the dtype is ``"bigint"`` (TIMESTAMP(NANOS) under
-    the legacy conf), ``"timestamp_ntz"`` (timestamp[us], no tz), or
-    ``"timestamp"``. Shared by the batch choke point
-    (plans/registry.table) and the streaming replay source
-    (streaming/replay.read_events_stream), so the legacy-conf lifetime
-    rule lives in exactly one place. The schema comes from the
-    fingerprint cache, so the file is inferred once, not once for the
-    probe and again for the read.
-
-    On a cache miss the probe needs
-    ``spark.sql.legacy.parquet.nanosAsLong=true`` set *speculatively* —
-    a TIMESTAMP(NANOS) footer makes the read throw without it. The conf cannot simply be restored afterwards in every
-    case, because for a genuinely nanos-encoded file it must also be
-    active when the returned DataFrame / stream EXECUTES, not just at
-    probe time. So the scope rule is:
-
-    * file is NOT nanos-encoded (the common case): restore the conf to
-      its prior state — no session-wide side effect leaks, and a later
-      batch read of some other table with a real TIMESTAMP(NANOS)
-      column fails loudly instead of silently coming back as bigint;
-    * probe read THROWS (missing/corrupt path): restore the prior state
-      before re-raising — a failed probe must not leave the speculative
-      conf latched session-wide (the exact silent-bigint leak this
-      rule exists to prevent);
-    * file IS nanos-encoded: the conf stays set for the session — and
-      is set again on a cache hit, since a frame built after the hit
-      still needs it at execution time — and every parquet read of ANY
-      nanos column in that session returns bigint, the invariant
-      tests/test_event_time_encodings.py exercises. This bakes in the
-      single-nanos-table assumption: ``events`` is the only
-      nanos-candidate table in this engine's data model, so no OTHER
-      table's read can be silently widened by the latched conf. A
-      deployment adding a second TIMESTAMP(NANOS)-encoded table must
-      normalize it through the same choke point (plans/registry.table)
-      rather than reading it raw while an events probe may have
-      latched the conf —
-      tests/test_event_time_encodings.py::test_latched_nanos_conf_is_session_wide
-      pins the latched behavior so the assumption is explicit.
-    """
+    Spark cannot infer a TIMESTAMP(NANOS) schema without
+    ``spark.sql.legacy.parquet.nanosAsLong``, but a read that declares
+    ``ts bigint`` returns the raw nanos with the conf unset. So a miss
+    infers in a private session (``spark.newSession()``, which shares
+    the SparkContext and never becomes the active or default session)
+    with the conf set on that session only; the caller's conf is never
+    read or written. Any other table's TIMESTAMP(NANOS) column still
+    fails to infer, every time."""
     fp, schema = _lookup(path)
     if schema is not None:
-        # a hit writes the conf only to re-latch it for a nanos file; a
-        # non-nanos hit leaves it alone, so concurrent probes cannot
-        # interleave a set/restore pair and latch it by accident
-        ts_dtype = schema["ts"].dataType.simpleString()
-        if ts_dtype == "bigint":
-            spark.conf.set(_NANOS_CONF, "true")
-        return ts_dtype, schema
-    prior = spark.conf.get(_NANOS_CONF, None)
-    spark.conf.set(_NANOS_CONF, "true")
-    try:
-        schema = _infer(spark, path, fp)
-        ts_dtype = schema["ts"].dataType.simpleString()
-    except Exception:
-        _restore_nanos_conf(spark, prior)
-        raise
-    if ts_dtype != "bigint":
-        _restore_nanos_conf(spark, prior)
-    return ts_dtype, schema
+        return schema
+    private = spark.newSession()
+    private.conf.set(_NANOS_CONF, "true")
+    return _infer(private, path, fp)
+
+
+def with_event_time(df: DataFrame, schema: StructType) -> DataFrame:
+    """Decode the ``ts`` of an events frame read with the declared
+    ``schema`` (:func:`events_schema`) to TIMESTAMP, batch or stream:
+
+    * raw nanos: integer division to micros (a double division would
+      lose precision on 1e18-scale nanos; DuckDB truncates the same
+      nanos to micros);
+    * TIMESTAMP_NTZ: cast under the session TZ, pinned to UTC, so the
+      wall clock, and the epoch value DuckDB's naive read produces, is
+      unchanged;
+    * TIMESTAMP: passthrough."""
+    ts_dtype = schema["ts"].dataType.simpleString()
+    if ts_dtype == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    if ts_dtype == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df

@@ -16,43 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", ts_type, True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("props", T.StringType(), True),
-        ]
-    )
-
-
-# TIMESTAMP(NANOS) files: Spark reads ts as raw LongType nanos under
-# the legacy conf.
-EVENTS_RAW_SCHEMA = _events_schema(T.LongType())
-
-# timestamp[us] with no timezone: Spark reads TIMESTAMP_NTZ.
-EVENTS_NTZ_SCHEMA = _events_schema(T.TimestampNTZType())
-
-# timestamp[us, tz=UTC] / re-materialized event parquet: TIMESTAMP.
-EVENTS_SCHEMA = _events_schema(T.TimestampType())
-
-
-def with_event_time(df: DataFrame) -> DataFrame:
-    """Normalize ``ts`` to TimestampType event time from any physical
-    encoding: raw nanos (integer division — a double division would
-    lose precision on 1e18-scale nanos) or TIMESTAMP_NTZ (cast under
-    the UTC session TZ, wall clock preserved)."""
-    ts_dtype = dict(df.dtypes).get("ts")
-    if ts_dtype == "bigint":
-        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    if ts_dtype == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+from ..sources.schema_cache import events_schema, with_event_time
 
 
 def read_events_stream(
@@ -62,30 +27,17 @@ def read_events_stream(
 ) -> DataFrame:
     """Replay parquet file(s) as a stream, one micro-batch per file.
 
-    File-source schemas must be declared, never inferred — and a
-    declared schema that disagrees with the file's physical encoding
-    reads garbage **silently** (a LongType declaration over micros
-    files yields values 1000x off, no error). So the encoding is never
-    a caller-supplied flag: a one-time driver-side footer probe (a
-    batch ``spark.read.parquet`` touches only metadata) picks the
-    matching declared schema, and ``with_event_time`` normalizes to
-    TIMESTAMP. Upstream writers have switched encodings before
-    (TIMESTAMP(NANOS) -> timestamp[us]); this probe is what survives
-    the next switch.
+    A file-stream source must declare its schema, and a declaration
+    that disagrees with the file's physical ``ts`` encoding reads
+    garbage silently (LongType over micros files yields values 1000x
+    off, no error). So the declaration is the file's own schema,
+    ``events_schema`` (inferred once, off the caller's session conf),
+    and ``with_event_time`` decodes ``ts`` to TIMESTAMP, the same pair
+    ``plans.registry.table`` uses. Upstream writers have switched
+    encodings before (TIMESTAMP(NANOS) -> timestamp[us]); reading the
+    encoding from the file is what survives the next switch.
     """
-    from ..sources.schema_cache import probe_events_ts
-
-    # The probe scopes the nanosAsLong legacy conf: restored unless the
-    # file really is nanos-encoded (probe_events_ts has the lifetime
-    # rule — a nanos file needs the conf at stream-execution time too,
-    # so only the not-nanos path can undo it).
-    probed, _ = probe_events_ts(spark, path)
-    if probed == "bigint":
-        schema = EVENTS_RAW_SCHEMA
-    elif probed == "timestamp_ntz":
-        schema = EVENTS_NTZ_SCHEMA
-    else:
-        schema = EVENTS_SCHEMA
+    schema = events_schema(spark, path)
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
@@ -95,7 +47,7 @@ def read_events_stream(
         parent, _, fname = path.rpartition("/")
         reader = reader.option("pathGlobFilter", fname)
         path = parent
-    return with_event_time(reader.parquet(path))
+    return with_event_time(reader.parquet(path), schema)
 
 
 # --- transformation builders (batch AND stream) ------------------------

@@ -147,7 +147,7 @@ def test_asof_tolerance_branch_is_ntz_proof(spark, encoded_dirs):
 
 @pytest.mark.parametrize("enc", list(ENCODINGS))
 def test_stream_replay_probe_reads_every_encoding(spark, encoded_dirs, enc):
-    """The footer probe must declare the matching schema per encoding —
+    """The stream must declare the file's own schema per encoding —
     a wrong declaration reads garbage silently (the round-4 failure:
     LongType over micros files = values 1000x off)."""
     from git_log_to_sqlite_spark.streaming.replay import (
@@ -167,161 +167,125 @@ def test_stream_replay_probe_reads_every_encoding(spark, encoded_dirs, enc):
     assert len(got) > 0
 
 
-def test_nanos_conf_scoped_to_probe(spark, encoded_dirs):
-    """The legacy nanosAsLong conf must not leak session-wide from
-    probing a non-nanos file (a later batch read of a genuine
-    TIMESTAMP(NANOS) column elsewhere would silently come back as
-    bigint); for a genuinely nanos-encoded file it MUST stay set,
-    because the returned frame still needs it at execution time."""
-    from git_log_to_sqlite_spark.sources.schema_cache import (
-        _NANOS_CONF,
-        clear_schema_cache,
-        probe_events_ts,
-    )
-
-    clear_schema_cache()  # earlier tests probed these paths already
-    spark.conf.unset(_NANOS_CONF)
-
-    got = probe_events_ts(spark, f"{encoded_dirs['micros_ntz']}/events.parquet")[0]
-    assert got == "timestamp_ntz"
-    assert spark.conf.get(_NANOS_CONF, None) is None  # restored
-
-    got = probe_events_ts(spark, f"{encoded_dirs['micros_utc']}/events.parquet")[0]
-    assert got == "timestamp"
-    assert spark.conf.get(_NANOS_CONF, None) is None  # restored
-
-    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0]
-    assert got == "bigint"
-    assert spark.conf.get(_NANOS_CONF) == "true"  # must stay for execution
-
-    # a prior explicit setting is restored verbatim on the non-nanos path
-    # (a cache hit here — the path was probed above — must behave the
-    # same: no conf mutation)
-    spark.conf.set(_NANOS_CONF, "false")
-    probe_events_ts(spark, f"{encoded_dirs['micros_ntz']}/events.parquet")
-    assert spark.conf.get(_NANOS_CONF) == "false"
-
-    # a cache HIT on a nanos path must re-establish the conf: frames
-    # built after the hit still need it at execution time
-    spark.conf.unset(_NANOS_CONF)
-    got = probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0]
-    assert got == "bigint"
-    assert spark.conf.get(_NANOS_CONF) == "true"
-    spark.conf.unset(_NANOS_CONF)
+CONF_CASES = [(enc, warm) for enc in ENCODINGS for warm in (False, True)] + [
+    ("missing", False),
+    ("no_ts", False),
+]
 
 
-def test_failed_probe_restores_conf(spark, tmp_path):
-    """A probe that THROWS (missing/corrupt path) must restore the
-    speculative nanosAsLong conf before re-raising — a failed probe
-    leaving it latched is exactly the silent-bigint leak the module
-    exists to prevent."""
-    from git_log_to_sqlite_spark.sources.schema_cache import (
-        _NANOS_CONF,
-        probe_events_ts,
-    )
-
-    spark.conf.unset(_NANOS_CONF)
-    with pytest.raises(Exception):
-        probe_events_ts(spark, str(tmp_path / "missing.parquet"))
-    assert spark.conf.get(_NANOS_CONF, None) is None  # restored (unset)
-
-    spark.conf.set(_NANOS_CONF, "false")
-    with pytest.raises(Exception):
-        probe_events_ts(spark, str(tmp_path / "missing.parquet"))
-    assert spark.conf.get(_NANOS_CONF) == "false"  # restored verbatim
-    spark.conf.unset(_NANOS_CONF)
-
-
-def test_warm_non_nanos_probe_writes_no_conf(spark, encoded_dirs, monkeypatch):
-    """A cache hit on a non-nanos file writes the nanosAsLong conf not
-    at all. Queries share one session across threads: a hit that set
-    and restored the conf could interleave with another probe's pair
-    and leave it latched for the session."""
+@pytest.mark.parametrize("case,warm", CONF_CASES)
+def test_events_reads_never_write_caller_conf(
+    spark, encoded_dirs, tmp_path, monkeypatch, case, warm
+):
+    """``table(..., "events")`` and ``read_events_stream`` write nothing
+    to the caller's session conf, on a cold or warm schema cache, and
+    for a path that does not exist or a file with no ``ts`` column.
+    The nanos schema is inferred in a private session, which never
+    becomes the active session; the caller's ``nanosAsLong`` stays
+    unset while the nanos frame executes, and the frame still decodes
+    the right instants."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
     from pyspark.sql.conf import RuntimeConfig
 
     from git_log_to_sqlite_spark.sources.schema_cache import (
         _NANOS_CONF,
-        probe_events_ts,
-    )
-
-    path = f"{encoded_dirs['micros_utc']}/events.parquet"
-    probe_events_ts(spark, path)  # warm
-    spark.conf.set(_NANOS_CONF, "false")  # neither unset nor the probe's "true"
-    writes = []
-    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: writes.append(("set", k, v)))
-    monkeypatch.setattr(RuntimeConfig, "unset", lambda self, k: writes.append(("unset", k)))
-    assert probe_events_ts(spark, path)[0] == "timestamp"
-    monkeypatch.undo()
-    assert writes == []
-    assert spark.conf.get(_NANOS_CONF) == "false"
-    spark.conf.unset(_NANOS_CONF)
-
-
-def test_probe_without_ts_column_restores_conf(spark, tmp_path):
-    """A file with no ``ts`` column fails the probe after the read; the
-    speculative conf is restored all the same."""
-    from git_log_to_sqlite_spark.sources.schema_cache import (
-        _NANOS_CONF,
         clear_schema_cache,
-        probe_events_ts,
     )
+    from git_log_to_sqlite_spark.streaming.replay import read_events_stream
 
-    p = str(tmp_path / "events.parquet")
-    pq.write_table(pa.table({"event_id": [1, 2]}), p)
-    clear_schema_cache()
-    spark.conf.unset(_NANOS_CONF)
-    with pytest.raises(KeyError):
-        probe_events_ts(spark, p)
+    sf = encoded_dirs.get(case, str(tmp_path))
+    path = f"{sf}/events.parquet"
+    if case == "no_ts":
+        pq.write_table(pa.table({"event_id": [1, 2]}), path)
     assert spark.conf.get(_NANOS_CONF, None) is None
+    clear_schema_cache()
+    if warm:
+        table(spark, sf, "events")
+
+    caller = spark._jsparkSession.conf()
+    writes = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        writes.append((key, self._jconf.equals(caller)))
+        real_set(self, key, value)
+
+    def spy_unset(self, key):
+        writes.append((key, self._jconf.equals(caller)))
+        real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+    if case in ENCODINGS:
+        batch = table(spark, sf, "events")
+        stream = read_events_stream(spark, path)
+        assert stream.isStreaming and dict(stream.dtypes)["ts"] == "timestamp"
+        assert spark.conf.get(_NANOS_CONF, None) is None
+        got = sorted(r[0] for r in batch.select(F.unix_micros("ts")).collect())
+        assert spark.conf.get(_NANOS_CONF, None) is None
+        utc = dt.timezone.utc
+        want = sorted(
+            int(r["ts"].replace(tzinfo=utc).timestamp()) * 1_000_000 for r in _ROWS
+        )
+        assert got == want
+    else:
+        with pytest.raises(Exception):
+            table(spark, sf, "events")
+        with pytest.raises(Exception):
+            read_events_stream(spark, path)
+    monkeypatch.undo()
+
+    assert not [key for key, on_caller in writes if on_caller]
+    # a warm cache writes no conf at all; a miss writes the private one
+    assert {key for key, _ in writes} <= ({_NANOS_CONF} if not warm else set())
+    assert spark.conf.get(_NANOS_CONF, None) is None
+    assert SparkSession.getActiveSession() is spark
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    assert jsession.getActiveSession().get().equals(spark._jsparkSession)
+    assert jsession.getDefaultSession().get().equals(spark._jsparkSession)
+
+
+def test_nanos_events_read_leaves_other_nanos_reads_failing(
+    spark, encoded_dirs, tmp_path
+):
+    """A nanos ``events`` read widens no other read: a plain
+    ``spark.read.parquet`` of another TIMESTAMP(NANOS) file still fails
+    to infer, before and after the events read."""
+    from git_log_to_sqlite_spark.sources.schema_cache import clear_schema_cache
+
+    other = str(tmp_path / "other_nanos.parquet")
+    pq.write_table(_events_table(pa.timestamp("ns")), other)
+    clear_schema_cache()
+    events = table(spark, encoded_dirs["nanos"], "events")
+    assert events.count() == len(_ROWS)
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        spark.read.parquet(other)
 
 
 def test_probe_cache_invalidated_on_regeneration(spark, tmp_path):
-    """The probe cache is keyed on a file fingerprint (size + mtime),
-    so regenerating the parquet at the SAME path with a different ts
-    encoding mid-process must re-probe instead of serving the stale
-    dtype (which would misdecode every ts by 1000x)."""
+    """The events schema cache is keyed on a file fingerprint (size +
+    mtime), so regenerating the parquet at the SAME path with a
+    different ts encoding mid-process must re-infer instead of serving
+    the stale schema (which would misdecode every ts by 1000x)."""
     import os
 
-    from git_log_to_sqlite_spark.sources.schema_cache import (
-        _NANOS_CONF,
-        probe_events_ts,
-    )
+    from git_log_to_sqlite_spark.sources.schema_cache import events_schema
+
+    def ts_dtype(p):
+        return events_schema(spark, p)["ts"].dataType.simpleString()
 
     p = str(tmp_path / "events.parquet")
     pq.write_table(_events_table(pa.timestamp("us")), p)
-    assert probe_events_ts(spark, p)[0] == "timestamp_ntz"
-    assert probe_events_ts(spark, p)[0] == "timestamp_ntz"  # cache hit
+    assert ts_dtype(p) == "timestamp_ntz"
+    assert ts_dtype(p) == "timestamp_ntz"  # cache hit
 
     pq.write_table(_events_table(pa.timestamp("ns")), p)
     # same row count could mean same size; force a distinct mtime so the
     # fingerprint can't collide even on coarse-grained filesystems
     st = os.stat(p)
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    assert probe_events_ts(spark, p)[0] == "bigint"  # NOT the stale entry
-    spark.conf.unset(_NANOS_CONF)
-
-
-def test_latched_nanos_conf_is_session_wide(spark, encoded_dirs, tmp_path):
-    """The single-nanos-table assumption, pinned as a negative test:
-    once a nanos events probe latches the conf (required at execution
-    time of the returned frames), a RAW read of any other
-    TIMESTAMP(NANOS) parquet in the same session comes back bigint —
-    intended here because events is this engine's only nanos candidate
-    and all event reads flow through the table() choke point, but a
-    deployment adding a second nanos table must normalize it through
-    that choke point too (see probe_events_ts docstring)."""
-    from git_log_to_sqlite_spark.sources.schema_cache import (
-        _NANOS_CONF,
-        probe_events_ts,
-    )
-
-    assert probe_events_ts(spark, f"{encoded_dirs['nanos']}/events.parquet")[0] == "bigint"
-    assert spark.conf.get(_NANOS_CONF) == "true"  # latched
-
-    other = str(tmp_path / "other_nanos.parquet")
-    pq.write_table(_events_table(pa.timestamp("ns")), other)
-    assert dict(spark.read.parquet(other).dtypes)["ts"] == "bigint"
-    spark.conf.unset(_NANOS_CONF)
+    assert ts_dtype(p) == "bigint"  # NOT the stale entry
 
 
 def test_probe_fingerprint_sees_nested_part_rewrite(tmp_path):

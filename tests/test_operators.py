@@ -315,6 +315,61 @@ def test_minhash_valve_telemetry_when_firing(spark):
     assert not any(r["id_a"] >= 1000 for r in got)
 
 
+def test_minhash_valve_blind_when_degenerate_keys_set_the_quantile(spark):
+    """The valve's documented limit, pinned as today's answer: when
+    degenerate band keys are more than 1 - VALVE_QUANTILE of the
+    distinct repeated keys, they set the quantile themselves, the cap
+    rises to their size and nothing is dropped. Here one 30-doc
+    identical clique fills 4 band buckets at d=30 and 3 twin pairs fill
+    12 at d=2, so 4/16 of the repeated keys are degenerate (> 8%): the
+    capped run drops no band and returns the uncapped run's rows. A
+    valve change that fires here must update this test on purpose."""
+    from pyspark.sql import Observation
+
+    from git_log_to_sqlite_spark.operators import release_caches
+    from git_log_to_sqlite_spark.operators.dedup import VALVE_QUANTILE
+
+    rows = [
+        (10 * p + s, " ".join(f"p{p}w{j}" for j in range(8)))
+        for p in range(3)
+        for s in (0, 1)
+    ]
+    rows += [(1000 + i, "degenerate boilerplate template page") for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    assert 4 / 16 > 1 - VALVE_QUANTILE
+    obs = Observation()
+    capped = sorted(
+        map(tuple, minhash_lsh_pairs(
+            docs, "doc_id", "text", cap_hot_keys=True, observation=obs
+        ).collect())
+    )
+    uncapped = sorted(map(tuple, minhash_lsh_pairs(docs, "doc_id", "text").collect()))
+    release_caches()
+    assert obs.get == {"bands_dropped": 0, "pairs_avoided": 0}
+    assert capped == uncapped
+    assert len(uncapped) == 3 + 30 * 29 // 2
+
+
+def test_simhash_duplicate_ids_merge_into_one_signature(spark):
+    """``simhash`` groups on the id, so documents sharing an id merge
+    without error into ONE signature over both token sets — one row
+    per distinct id (the precondition its docstring states: ids must
+    be unique). With disjoint token sets the merged signature equals
+    the signature of the two texts concatenated."""
+    from git_log_to_sqlite_spark.operators import simhash
+
+    dup = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (1, "delta epsilon zeta"), (2, "eta theta iota")],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["simhash"] for r in simhash(dup, "doc_id", "text").collect()}
+    assert set(got) == {1, 2}
+    joined = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
+    )
+    assert got[1] == simhash(joined, "doc_id", "text").first()["simhash"]
+
+
 def test_simhash_pairs_pigeonhole_exact(spark, oracle_sf_dir):
     """With bands > max_hamming the banding stage is EXACT by
     pigeonhole: the pair set must equal a driver-side brute-force
@@ -3197,6 +3252,54 @@ def test_pin_hash_gated_dedup(spark):
     assert len(caching._LIVE) == 2
     assert isinstance(getattr(other, "_pin_semhash", None), int)
     release_caches()
+
+
+def test_pin_skips_externally_cleared_entry(spark):
+    """An entry cleared by ``clearCache()`` never suppresses a fresh
+    persist of the same plan: the re-pin registers and is live."""
+    from git_log_to_sqlite_spark.operators import caching
+    from git_log_to_sqlite_spark.operators.caching import pin, release_caches
+
+    spark.catalog.clearCache()
+    release_caches()
+    pin(spark.range(100).selectExpr("id", "id * 5 AS q"))
+    spark.catalog.clearCache()
+    again = pin(spark.range(100).selectExpr("id", "id * 5 AS q"))
+    assert len(caching._LIVE) == 2 and caching._LIVE[-1] is again
+    assert caching._is_live(again)
+    assert release_caches() == 1
+
+
+def test_concurrent_pins_are_all_released(spark):
+    """Pins from threads sharing one session are never lost: 8 threads
+    pin 8 distinct frames at once, and ``release_caches`` unpersists
+    every one of them, leaving the session cache empty."""
+    import threading
+
+    from git_log_to_sqlite_spark.operators.caching import pin, release_caches
+
+    spark.catalog.clearCache()
+    release_caches()
+    n = 8
+    start = threading.Barrier(n)
+    errors = []
+
+    def work(i):
+        try:
+            frame = spark.range(100 + i).selectExpr("id", f"id * {i + 2} AS v")
+            start.wait()
+            pin(frame)
+        except Exception as e:  # noqa: BLE001 — surfaced via assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert release_caches(blocking=True) == n
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ----------------------------------------------------------------------

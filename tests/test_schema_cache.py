@@ -1,6 +1,6 @@
 """Parquet schema cache (sources/schema_cache.py): hit behavior,
-fingerprint invalidation, fallback, and the events ts probe that reads
-through it.
+fingerprint invalidation, fallback, and the events schema
+(``events_schema``) that reads through it.
 
 The cache exists for a measured reason (see the module docstring):
 plain ``spark.read.parquet`` fires a ~0.19 s listing+footer job on
@@ -70,8 +70,8 @@ def test_unstattable_path_returns_none(spark, tmp_path):
 
 
 def test_events_reencode_same_path_stays_correct(spark, tmp_path):
-    """The nanos-conf interplay: table() probes (latching the legacy
-    conf for nanos files) BEFORE caching the schema, and a re-encoded
+    """``events_schema`` caches the events schema per fingerprint
+    (a nanos file's inferred in a private session), and a re-encoded
     file at the SAME path re-fingerprints — so the normalized ts must
     be identical whichever encoding is on disk when it is read."""
     pa = pytest.importorskip("pyarrow")
@@ -102,10 +102,10 @@ def test_events_reencode_same_path_stays_correct(spark, tmp_path):
 
 
 def test_first_events_read_infers_once(spark, sf_dir):
-    """The events ts probe reads the encoding from the cached schema,
-    so the first ``table(..., "events")`` after the cache is cleared
-    runs ONE schema-inference job — not one for the probe and a second
-    for the read's own schema."""
+    """``events_schema`` infers into the cache and the read declares
+    that schema, so the first ``table(..., "events")`` after the cache
+    is cleared runs ONE schema-inference job — the private session's —
+    not a second for the read's own schema."""
     clear_schema_cache()
     before = _last_job_id(spark)
     df = table(spark, sf_dir, "events")

@@ -270,14 +270,12 @@ def test_gate_streaming_query_runs_state_store(spark, oracle_sf_dir):
     exercise the REAL streaming stateful machinery — assert the run's
     progress reports a state-store operator with retained rows, so the
     gate row can never silently degrade into a batch shortcut."""
-    from git_log_to_sqlite_spark.plans.registry import table
     from git_log_to_sqlite_spark.streaming.replay import (
         read_events_stream,
         run_to_memory,
         tumbling_counts,
     )
 
-    table(spark, oracle_sf_dir, "events")  # owns the nanosAsLong conf
     s = read_events_stream(
         spark,
         f"{oracle_sf_dir}/events.parquet",
