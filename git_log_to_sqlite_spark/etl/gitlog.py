@@ -108,19 +108,18 @@ def parse_git_log(spark: SparkSession, path: str) -> DataFrame:
     return parse_raw_logs(raw)
 
 
-def read_gitlog_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
+def read_gitlog_stream(spark: SparkSession, path: str) -> DataFrame:
     """Incremental commit ingestion (SURVEY.md section 1.4 / section 7
     stretch): the file-stream source picks up newly landed per-repo log
-    files and the SAME JVM-side parse produces commit rows — the batch
-    pipeline's transformations apply unchanged downstream. The unit of
-    incrementality is the log file (re-dumping a repo re-emits its
-    commits; pair with dropDuplicates on commit_hash or an idempotent
-    MERGE sink for exactly-once tables)."""
+    files, at most 4 per trigger, and the SAME JVM-side parse produces
+    commit rows — the batch pipeline's transformations apply unchanged
+    downstream. The unit of incrementality is the log file (re-dumping
+    a repo re-emits its commits; pair with dropDuplicates on
+    commit_hash or an idempotent MERGE sink for exactly-once
+    tables)."""
     raw = (
         spark.readStream.option("wholetext", "true")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 4)
         .text(path)
         .selectExpr("value", "input_file_name() AS _file")
     )

@@ -19,7 +19,8 @@ author map is a SQL map literal in the commits plan, so the fact table
 is never joined for it. ``build_logs`` joins the dimension as a
 broadcast, so the fact table never shuffles for id resolution (the
 reference instead ran one correlated SQLite subquery per row,
-analyzer.rs:322).
+analyzer.rs:322); its one shuffle, on ``commit_hash``, keeps one row
+per commit.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ import os
 from collections.abc import Iterable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import Config
@@ -91,10 +92,21 @@ def build_repositories(
 
 def build_logs(commits: DataFrame, repositories: DataFrame) -> DataFrame:
     """R20/R21: resolve repository_id with a broadcast equi-join
-    (replaces the per-row correlated subquery at analyzer.rs:322)."""
+    (replaces the per-row correlated subquery at analyzer.rs:322).
+
+    ``commit_hash`` is the key, as in the SQLite sink: a commit found
+    in several repositories (a fork beside its origin) keeps the row
+    of the repository whose name sorts first, a NULL name first
+    (``writers.write_sqlite``'s rule). Ids are numbered in name order,
+    so that is the minimum ``repository_id``."""
     dim = F.broadcast(repositories.select(F.col("id").alias("repository_id"), "name"))
-    return commits.join(
-        dim, commits["repository"] == dim["name"], "left"
+    first = Window.partitionBy("commit_hash").orderBy(
+        F.coalesce(F.col("repository"), F.lit(""))
+    )
+    return (
+        commits.join(dim, commits["repository"] == dim["name"], "left")
+        .withColumn("_copy", F.row_number().over(first))
+        .filter(F.col("_copy") == 1)
     ).select(
         "commit_hash",
         "author_name",

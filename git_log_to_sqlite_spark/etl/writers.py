@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import itertools
 import sqlite3
-from typing import Iterable
+from contextlib import closing, contextmanager
+from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -56,11 +57,10 @@ _DDL = (
 def write_parquet(
     df: DataFrame,
     path: str,
-    partition_by: Iterable[str] = (),
     max_records_per_file: int | None = None,
 ) -> None:
-    """The scale sink. ``--clear`` semantics == mode('overwrite')
-    (analyzer.rs:190-194).
+    """The scale sink: one unpartitioned Parquet table. ``--clear``
+    semantics == mode('overwrite') (analyzer.rs:190-194).
 
     ``max_records_per_file`` bounds output file size per task (the
     per-write form of ``spark.sql.files.maxRecordsPerFile``): at fleet
@@ -78,10 +78,23 @@ def write_parquet(
                 f"max_records_per_file must be >= 1, got {max_records_per_file}"
             )
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    partition_by = list(partition_by)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+@contextmanager
+def _connect(db_path: str) -> Iterator[sqlite3.Connection]:
+    """A connection to ``db_path`` with the three tables created,
+    closed on exit."""
+    with closing(sqlite3.connect(db_path)) as con:
+        for ddl in _DDL:
+            con.execute(ddl)
+        yield con
+
+
+def _truncate(con: sqlite3.Connection) -> None:
+    """R23: delete every row of the three tables (analyzer.rs:190-194)."""
+    for table in ("changed_files", "logs", "repositories"):
+        con.execute(f"DELETE FROM {table}")
 
 
 def clear_sqlite(db_path: str) -> None:
@@ -89,15 +102,9 @@ def clear_sqlite(db_path: str) -> None:
     190-194). The reference truncates during prepare, BEFORE any repo
     is scanned — so ``--clear`` must purge even when the scan then
     finds nothing to store."""
-    con = sqlite3.connect(db_path)
-    try:
-        for ddl in _DDL:
-            con.execute(ddl)
-        for table in ("changed_files", "logs", "repositories"):
-            con.execute(f"DELETE FROM {table}")
+    with _connect(db_path) as con:
+        _truncate(con)
         con.commit()
-    finally:
-        con.close()
 
 
 def write_sqlite(
@@ -149,10 +156,7 @@ def write_sqlite(
     ``changed_files`` rows are replaced. On an empty database the
     dimension's own ids are written unchanged.
     """
-    con = sqlite3.connect(db_path)
-    try:
-        for ddl in _DDL:
-            con.execute(ddl)
+    with _connect(db_path) as con:
         con.execute(
             "CREATE TEMP TABLE log_rows (commit_hash, author_name, author_email,"
             " message, commit_epoch, insertions, deletions, parent_hash,"
@@ -189,9 +193,8 @@ def write_sqlite(
                     if path is not None
                 ],
             )
-        if clear:  # R23 (analyzer.rs:190-194)
-            for table in ("changed_files", "logs", "repositories"):
-                con.execute(f"DELETE FROM {table}")
+        if clear:
+            _truncate(con)
         con.executemany(
             "INSERT OR REPLACE INTO repositories (id, name, url) VALUES (?, ?, ?)",
             repo_rows,
@@ -221,8 +224,6 @@ def write_sqlite(
                 (file_offset, file_offset),
             )
         con.commit()
-    finally:
-        con.close()
 
 
 # ``logs`` columns in the commits frame, in staging order

@@ -31,14 +31,13 @@ def asof_join(
     right_ts: str,
     value_cols: list[str],
     tie_col: str | None = None,
-    suffix: str = "_asof",
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """For each left row, attach the nearest right-side ``value_cols``
-    with the same ``key`` — the most recent with ``right_ts <=
-    left_ts`` (direction="backward", default) or the earliest with
-    ``right_ts >= left_ts`` (direction="forward").
+    with the same ``key``, each as ``<col>_asof`` — the most recent
+    with ``right_ts <= left_ts`` (direction="backward", default) or the
+    earliest with ``right_ts >= left_ts`` (direction="forward").
 
     ``tie_col`` breaks ordering ties among right rows at equal
     timestamps (highest wins); required for deterministic output when
@@ -100,7 +99,7 @@ def asof_join(
                 - F.col("_f___mts").cast("timestamp").cast("double")
             )
             v = F.when(dist <= tolerance_seconds, v)
-        out_vals.append(v.alias(f"{c}{suffix}"))
+        out_vals.append(v.alias(f"{c}_asof"))
     return (
         filled.filter(F.col("_is_q") == 1)
         .select(*left_cols, *out_vals)

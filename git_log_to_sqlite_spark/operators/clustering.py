@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# A k-means fit stops once no centroid moves more than this (squared).
+_TOL = 1e-6
+
 
 def _sq_dist(
     vec_col: str, centroid: list[float], round_to: int | None = None
@@ -161,12 +164,11 @@ def nearest_cells_table(
     centroids_df: DataFrame,
     n_probe: int,
     round_to: int | None = None,
-    out_col: str = "_probe_cells",
 ) -> DataFrame:
     """The n-probe fan-out every IVF probe runs, with the centroids as
     DATA — the table form of the literal ``similarity._nearest_cells``
     reference, exactly as :func:`assign_clusters_table` is the table
-    form of :func:`assign_clusters`. Adds ``out_col``: the ordered
+    form of :func:`assign_clusters`. Adds ``_probe_cells``: the ordered
     array of the ``n_probe`` nearest cell ids.
 
     The centroids collapse to the one-row broadcast array
@@ -184,7 +186,7 @@ def nearest_cells_table(
     )
     return (
         df.crossJoin(F.broadcast(_collapsed_centroids(centroids_df)))
-        .withColumn(out_col, picked)
+        .withColumn("_probe_cells", picked)
         .drop("_cens")
     )
 
@@ -195,7 +197,6 @@ def kmeans(
     vec_col: str,
     k: int = 4,
     max_iter: int = 10,
-    tol: float = 1e-6,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means. Returns ``(assigned, centroids)`` where
     ``assigned`` is the input plus a ``cluster`` column and
@@ -204,7 +205,7 @@ def kmeans(
     Deterministic: initial centroids are the vectors of the k lowest
     ids (reproducible across runs and partitionings, unlike random
     init; callers wanting k-means++ quality can pass a pre-sampled df).
-    Stops early when no centroid moves more than ``tol`` (squared).
+    Stops early when no centroid moves more than ``_TOL`` (squared).
     Empty clusters keep their previous centroid.
     """
     # Deliberately NOT pinned: the loop does re-scan df per iteration,
@@ -253,7 +254,7 @@ def kmeans(
             for old, new in zip(centroids, new_centroids)
         )
         centroids = new_centroids
-        if shift <= tol:
+        if shift <= _TOL:
             break
 
     return _assign(centroids), centroids
@@ -265,7 +266,6 @@ def kmeans_fit_sample(
     vec_col: str,
     k: int = 4,
     max_iter: int = 10,
-    tol: float = 1e-6,
     sample_size: int = 4096,
 ) -> list[list[float]]:
     """Fit k-means centroids on a BOUNDED deterministic sample — the
@@ -338,6 +338,6 @@ def kmeans_fit_sample(
                 new_c[j] = members.mean(axis=0)
         shift = ((new_c - c) ** 2).sum(axis=1).max()
         c = new_c
-        if shift <= tol:
+        if shift <= _TOL:
             break
     return [[float(v) for v in row] for row in c]

@@ -41,6 +41,9 @@ _SHUFFLE_NODE_RE = re.compile(
 VALVE_QUANTILE = 0.92
 VALVE_HEADROOM = 10
 
+# Word n-gram length of the MinHash and n-gram Jaccard shingles.
+_SHINGLE_N = 3
+
 
 def md5_long(col: Column, hex_chars: int = 15) -> Column:
     """First ``hex_chars`` hex digits of md5 as a non-negative BIGINT
@@ -141,9 +144,10 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, shingle_n: int = 3
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8
 ) -> DataFrame:
-    """Wide-format MinHash signatures: (id, mh_0 .. mh_{k-1}).
+    """Wide-format MinHash signatures over word trigram shingles:
+    (id, mh_0 .. mh_{k-1}).
 
     All K minhashes are computed as K min-aggregates in ONE groupBy
     pass over the exploded shingles — no K-fold row explosion and no
@@ -155,7 +159,7 @@ def minhash_signatures(
     df = _spread(df)
     sh = df.select(
         F.col(id_col).alias("_id"),
-        exploded_shingles(text_col, shingle_n).alias("shingle"),
+        exploded_shingles(text_col, _SHINGLE_N).alias("shingle"),
     )
     mins = [
         F.min(md5_long(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"mh_{j}")
@@ -466,7 +470,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     min_agree: float = 0.25,
-    shingle_n: int = 3,
     cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
@@ -493,7 +496,7 @@ def minhash_lsh_pairs(
     # recomputes the shingle explode + K-way min aggregate per branch.
     # Signatures are K x 8 bytes/doc — tiny relative to the corpus.
     # pin() registers the cache for release_caches().
-    mh = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
+    mh = pin(minhash_signatures(df, id_col, text_col, num_hashes))
     bands = _band_keys(mh, id_col, num_hashes, rows_per_band)
     if cap_hot_keys:
         bands = _drop_hot_keys(bands, ["band", "band_key"], observation, "bands_dropped")
@@ -514,7 +517,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.2,
-    shingle_n: int = 3,
     cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
 ) -> DataFrame:
@@ -557,7 +559,7 @@ def ngram_jaccard_pairs(
     # CORPUS, and a single collision perturbs one pair count by 1.
     sh = df.select(
         F.col(id_col).alias("_id"),
-        exploded_shingles(text_col, shingle_n).alias("shingle"),
+        exploded_shingles(text_col, _SHINGLE_N).alias("shingle"),
     ).select("_id", F.xxhash64("shingle").alias("shingle"))
     # per-doc shingle count is a pure projection (shingles() dedups),
     # NOT an aggregate over the exploded table — zero extra shuffles.
@@ -571,7 +573,7 @@ def ngram_jaccard_pairs(
     sizes = pin(
         df.select(
             F.col(id_col).alias("_id"),
-            F.size(shingles(F.split(F.col(text_col), " "), shingle_n)).alias("n_sh"),
+            F.size(shingles(F.split(F.col(text_col), " "), _SHINGLE_N)).alias("n_sh"),
         )
     )
     if cap_hot_keys:
@@ -1238,7 +1240,6 @@ def decontaminate(
     id_col: str,
     text_col: str,
     ngram_n: int = 4,
-    flag_col: str = "contaminated",
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share
     any token ``ngram_n``-gram with a held-out benchmark/eval corpus —
@@ -1291,7 +1292,7 @@ def decontaminate(
         .select(
             id_col,
             shared.alias("shared_ngrams"),
-            (shared > 0).cast("int").alias(flag_col),
+            (shared > 0).cast("int").alias("contaminated"),
         )
     )
 
@@ -1304,7 +1305,6 @@ def fuzzy_decontaminate(
     bits: int = 60,
     bands: int = 4,
     max_hamming: int = 3,
-    flag_col: str = "contaminated",
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: flag training
     documents whose simhash is within ``max_hamming`` bits of any
@@ -1378,7 +1378,7 @@ def fuzzy_decontaminate(
             id_col,
             matched.alias("matched_evals"),
             F.col("best_hamming"),
-            (matched > 0).cast("int").alias(flag_col),
+            (matched > 0).cast("int").alias("contaminated"),
         )
     )
 
@@ -1391,7 +1391,6 @@ def incremental_minhash_dedup(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     min_agree: float = 0.25,
-    shingle_n: int = 3,
     cap_hot_keys: bool = False,
     observation: "Observation | None" = None,
     best_match: bool = False,
@@ -1432,8 +1431,8 @@ def incremental_minhash_dedup(
     removes the key from the join outright.
     """
     _check_valve(cap_hot_keys, observation)
-    mh_h = pin(minhash_signatures(history, id_col, text_col, num_hashes, shingle_n))
-    mh_i = pin(minhash_signatures(increment, id_col, text_col, num_hashes, shingle_n))
+    mh_h = pin(minhash_signatures(history, id_col, text_col, num_hashes))
+    mh_i = pin(minhash_signatures(increment, id_col, text_col, num_hashes))
     bands_h = _band_keys(mh_h, id_col, num_hashes, rows_per_band)
     if cap_hot_keys:
         bands_h = _drop_hot_keys(

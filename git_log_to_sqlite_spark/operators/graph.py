@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Large+small-star rounds before connected_components gives up.
+_MAX_ROUNDS = 25
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge list -> canonical directed (u > v joins toward
@@ -81,7 +84,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of an undirected graph given as an edge
@@ -89,8 +91,8 @@ def connected_components(
     MINIMUM node id in the component — deterministic, so downstream
     dedup survivors are stable across runs and cluster layouts.
 
-    Converges in O(log^2 n) large/small-star rounds; raises if
-    ``max_rounds`` (default 25, enough for any realistic graph) passes
+    Converges in O(log^2 n) large/small-star rounds; raises if 25
+    rounds (``_MAX_ROUNDS``, enough for any realistic graph) pass
     without reaching the fixpoint rather than returning a possibly
     wrong labeling.
 
@@ -125,7 +127,7 @@ def connected_components(
     cur_sig = _signature(cur)
     converged = cur_sig[0] == 0
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         if converged:
             break
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
@@ -138,7 +140,7 @@ def connected_components(
         stats["rounds"] = rounds
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
         )
     # cur is a star per component: (u, component-min v). Roots appear
     # only on the right side; add their self-assignments.
@@ -157,19 +159,18 @@ def assign_dedup_groups(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    pair_a: str = "id_a",
-    pair_b: str = "id_b",
 ) -> DataFrame:
     """Near-dup group assignment: every row of ``df`` gets a
     ``group_id`` (the minimum ``id_col`` of its near-dup cluster, from
-    the transitive closure of ``pairs``) and an ``is_survivor`` flag
+    the transitive closure of ``pairs``, an ``(id_a, id_b)`` frame as
+    every pair operator emits) and an ``is_survivor`` flag
     (true exactly once per group — on the minimum id). Rows in no pair
     are their own singleton group.
 
     The left join against the (small) component map is broadcast-
     friendly; the corpus never reshuffles.
     """
-    comp = connected_components(pairs, src=pair_a, dst=pair_b)
+    comp = connected_components(pairs, src="id_a", dst="id_b")
     out = df.join(comp, df[id_col] == comp["node"], "left").drop("node")
     group = F.coalesce(F.col("component"), F.col(id_col))
     return (

@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 HAS_PIL = importlib.util.find_spec("PIL") is not None
 
+# Hamming bands of the audio and video pair stages: pigeonhole-exact
+# for max_hamming <= 3.
+_BANDS = 4
+
 
 def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:
     """Wrap an existing binary (or string) column as a media table with
@@ -284,7 +288,6 @@ def audio_near_dup_pairs(
     frames: int = 7,
     bands: int = 11,
     max_hamming: int = 3,
-    lsh_bands: int = 4,
     energy_fn: Callable[[bytes, int, int], list[list[float]]] | None = None,
 ) -> DataFrame:
     """Audio near-duplicate pairs: :func:`audio_fingerprint` feeding
@@ -297,14 +300,14 @@ def audio_near_dup_pairs(
     from .dedup import _validate_banding, hamming_pairs
 
     bits = (frames - 1) * (bands - 1)
-    _validate_banding(bits, lsh_bands, max_hamming)  # before the pin
+    _validate_banding(bits, _BANDS, max_hamming)  # before the pin
     sig = pin(audio_fingerprint(media, frames, bands, energy_fn))
     return hamming_pairs(
         sig,
         "media_id",
         "afp",
         bits=bits,
-        bands=lsh_bands,
+        bands=_BANDS,
         max_hamming=max_hamming,
     )
 
@@ -573,7 +576,6 @@ def image_in_video_frames(
     cols: int = 10,
     frame_bytes: int = 256,
     max_hamming: int = 3,
-    bands: int = 4,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
 ) -> DataFrame:
     """Cross-modal content lookup: which video frames (near-)match a
@@ -592,7 +594,7 @@ def image_in_video_frames(
     from .dedup import _validate_banding, hamming_probe
 
     # all arg checks before the pins
-    _validate_banding(rows * cols, bands, max_hamming)
+    _validate_banding(rows * cols, _BANDS, max_hamming)
     if frame_bytes < 1:  # video_frame_dhash re-checks, but after sig_p pins
         raise ValueError(f"frame_bytes must be >= 1, got {frame_bytes}")
     sig_p = pin(
@@ -612,7 +614,7 @@ def image_in_video_frames(
         corpus_id=["media_id", "frame_no"],
         sig_col="_sig",
         bits=rows * cols,
-        bands=bands,
+        bands=_BANDS,
         max_hamming=max_hamming,
     )
 
@@ -697,7 +699,6 @@ def video_near_dup_pairs(
     cols: int = 10,
     frame_bytes: int = 256,
     max_hamming: int = 3,
-    bands: int = 4,
     grid_fn: Callable[[bytes, int, int], Sequence[int]] | None = None,
 ) -> DataFrame:
     """Video near-duplicate pairs: :func:`video_fingerprint` feeding
@@ -712,13 +713,13 @@ def video_near_dup_pairs(
     from .caching import pin
     from .dedup import _validate_banding, hamming_pairs
 
-    _validate_banding(rows * cols, bands, max_hamming)  # before the pin
+    _validate_banding(rows * cols, _BANDS, max_hamming)  # before the pin
     sig = pin(video_fingerprint(media, rows, cols, frame_bytes, grid_fn))
     return hamming_pairs(
         sig,
         "media_id",
         "vfp",
         bits=rows * cols,
-        bands=bands,
+        bands=_BANDS,
         max_hamming=max_hamming,
     )

@@ -71,17 +71,17 @@ def weighted_reservoir(
     weight_col: str,
     k: int,
     strata_col: str | None = None,
-    key_out: str = "priority",
 ) -> DataFrame:
     """Deterministic weighted sample of k rows (per stratum when
-    ``strata_col`` is given). Rows with non-positive weight are
+    ``strata_col`` is given), each with its ``priority`` key (smallest
+    kept first). Rows with non-positive weight are
     excluded (they'd get infinite keys). Ties are impossible in
     practice (60-bit uniforms), but the id breaks them determinically
     anyway."""
     keyed = df.filter(F.col(weight_col) > 0).withColumn(
-        key_out, priority_key(F.col(id_col), F.col(weight_col))
+        "priority", priority_key(F.col(id_col), F.col(weight_col))
     )
-    order = [F.col(key_out).asc(), F.col(id_col).asc()]
+    order = [F.col("priority").asc(), F.col(id_col).asc()]
     if strata_col is None:
         # global top-k: sort+limit plans as TakeOrderedAndProject —
         # only k rows ever reach a single task
@@ -100,11 +100,11 @@ def domain_mix(
     domain_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    u_out: str = "u",
 ) -> DataFrame:
     """Deterministic domain reweighting — the data-mixing step that
     turns a raw corpus into a target source distribution: each row is
-    kept iff its md5-uniform coin is below its domain's sampling rate.
+    kept iff its md5-uniform coin, returned as ``u``, is below its
+    domain's sampling rate.
 
     The rates ride in as a broadcast dimension join (data-driven mix
     config, not a baked CASE), so at 100 TB the fact table takes one
@@ -127,8 +127,8 @@ def domain_mix(
         "_rate", F.coalesce(F.col("_rate"), F.lit(float(default_rate)))
     )
     return (
-        keyed.withColumn(u_out, uniform_key(F.col(id_col)))
-        .filter(F.col(u_out) < F.col("_rate"))
+        keyed.withColumn("u", uniform_key(F.col(id_col)))
+        .filter(F.col("u") < F.col("_rate"))
         .drop("_rate")
     )
 
@@ -139,7 +139,6 @@ def token_budget_sample(
     weight_col: str,
     budget: int,
     domain_col: str,
-    cum_out: str = "cum_before",
 ) -> DataFrame:
     """Greedy deterministic budget fill per domain — the corpus-mixing
     step that answers "give me ~B tokens from every source": rows are
@@ -158,9 +157,10 @@ def token_budget_sample(
     Plan shape: one projection for the coin, one shuffle on the
     domain key, one running-sum window per domain (frame = UNBOUNDED
     PRECEDING to 1 PRECEDING), one filter. Each domain's window is a
-    SINGLE partition, so one domain must fit one task. ``cum_out``
-    keeps the weight column's summed type (long for integral
-    weights, double for fractional).
+    SINGLE partition, so one domain must fit one task. The added
+    ``cum_before`` column (the weight admitted before the row) keeps
+    the weight column's summed type (long for integral weights, double
+    for fractional).
     """
     keyed = df.withColumn("_u", uniform_key(F.col(id_col)))
     w = (
@@ -172,8 +172,8 @@ def token_budget_sample(
         F.sum(weight_col).over(w), F.lit(0).cast("long")
     )
     return (
-        keyed.withColumn(cum_out, cum_before)
-        .filter(F.col(cum_out) < budget)
+        keyed.withColumn("cum_before", cum_before)
+        .filter(F.col("cum_before") < budget)
         .drop("_u")
     )
 

@@ -159,29 +159,30 @@ def brute_force_topk(
     return _topk(q, c, None, k, round_to)
 
 
-def lsh_bucket(
-    vec_col: Column, dims: int, num_planes: int = 4, seed: str = "lsh"
-) -> Column:
+def _plane_weight(p: int, d: int) -> float:
+    """Dimension ``d`` of sign-LSH hyperplane ``p``: md5 of
+    ``lsh:p:d`` mapped to [-1, 1]."""
+    import hashlib
+
+    h = hashlib.md5(f"lsh:{p}:{d}".encode()).hexdigest()
+    return (int(h[:8], 16) / 0xFFFFFFFF) * 2.0 - 1.0
+
+
+def lsh_bucket(vec_col: Column, dims: int, num_planes: int = 4) -> Column:
     """Sign-LSH coarse quantizer: bucket id from the sign pattern of
     ``num_planes`` deterministic random-hyperplane projections.
 
-    Hyperplanes are derived from md5 of (seed, plane, dim) — no RNG
+    Hyperplanes are derived from md5 of ("lsh", plane, dim) — no RNG
     state, so bucket assignment is reproducible across runs, engines,
     and cluster layouts. Vectors at cosine angle theta collide per
     plane with probability 1 - theta/pi (the SimHash bound), so tight
     clusters stay together. Use as the ``bucket_col`` input of
     ``bucketed_ann_topk`` when no fitted quantizer exists.
     """
-    import hashlib
-
-    def weight(p: int, d: int) -> float:
-        h = hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()
-        return (int(h[:8], 16) / 0xFFFFFFFF) * 2.0 - 1.0
-
     v = as_double(vec_col)
     bucket = F.lit(0)
     for p in range(num_planes):
-        plane = F.array(*[F.lit(weight(p, d)) for d in range(dims)])
+        plane = F.array(*[F.lit(_plane_weight(p, d)) for d in range(dims)])
         proj = dot(v, plane)
         bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
@@ -812,9 +813,9 @@ class IvfIndex:
         queries: DataFrame,
         n_probe: int = 2,
         k: int = 5,
-        round_to: int | None = None,
     ) -> DataFrame:
-        """Top-k neighbors per query against the persisted index.
+        """Top-k neighbors per query against the persisted index,
+        ranked by unrounded cosine similarity.
 
         HARD CONTRACT on ``queries``: the probe side is FORCE-broadcast
         (after the n_probe cell fan-out — n_probe rows per query of
@@ -868,7 +869,7 @@ class IvfIndex:
             r["_qc"] for r in q.select("_qc").distinct().collect()
         )
         index = self.read().filter(F.col("cell").isin(probed))
-        return _topk(q, index, F.col("_qc") == F.col("cell"), k, round_to)
+        return _topk(q, index, F.col("_qc") == F.col("cell"), k, None)
 
 
 def bucketed_ann_topk(

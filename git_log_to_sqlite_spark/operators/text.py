@@ -14,7 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_STOPWORDS = ("the", "a", "of", "and", "to", "in")
+STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "value"),
@@ -27,8 +27,9 @@ def _marker_count(tokens: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*markers)))
 
 
-def lang_id(df: DataFrame, text_col: str, out_col: str = "predicted_lang") -> DataFrame:
-    """Marker-stopword language ID with a deterministic argmax order.
+def lang_id(df: DataFrame, text_col: str) -> DataFrame:
+    """Marker-stopword language ID with a deterministic argmax order,
+    added as ``predicted_lang``.
     The n-gram-heuristic class of detector: cheap, seedless, and good
     enough for corpus routing; swap the marker table per deployment."""
     toks = F.split(F.col(text_col), " ")
@@ -39,19 +40,17 @@ def lang_id(df: DataFrame, text_col: str, out_col: str = "predicted_lang") -> Da
     pred = pred.when(
         (counts["en"] >= counts["es"]) & (counts["en"] >= counts["de"]), "en"
     ).when(counts["es"] >= counts["de"], "es").otherwise("de")
-    return df.withColumn(out_col, pred)
+    return df.withColumn("predicted_lang", pred)
 
 
-def add_text_stats(
-    df: DataFrame, text_col: str, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
-) -> DataFrame:
+def add_text_stats(df: DataFrame, text_col: str) -> DataFrame:
     """Quality-scoring battery: token counts, char/token ratio,
     punctuation density, stopword ratio, and a pass/fail length gate —
     the standard pre-training filters as one projection."""
     toks = F.split(F.col(text_col), " ")
     n_tokens = F.size(toks)
     n_chars = F.length(F.col(text_col))
-    stop = _marker_count(toks, stopwords)
+    stop = _marker_count(toks, STOPWORDS)
     punct = F.size(F.regexp_extract_all(F.col(text_col), F.lit("[.,;:!?]"), 0))
     return (
         df.withColumn("n_tokens", n_tokens)
@@ -243,7 +242,7 @@ def pack_token_shards(
     )
 
 
-def fingerprint(df: DataFrame, text_col: str, out_col: str = "fingerprint") -> DataFrame:
+def fingerprint(df: DataFrame, text_col: str) -> DataFrame:
     """Bag-of-words fingerprint: md5 of the sorted distinct lowercased
     token set — catches token-permutation duplicates exact dedup
     misses (a rolling-hash/winnowing variant slots in here for
@@ -253,7 +252,7 @@ def fingerprint(df: DataFrame, text_col: str, out_col: str = "fingerprint") -> D
             F.sort_array(F.array_distinct(F.split(F.lower(F.col(text_col)), " "))), " "
         )
     )
-    return df.withColumn(out_col, fp)
+    return df.withColumn("fingerprint", fp)
 
 
 def tfidf_topk(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:

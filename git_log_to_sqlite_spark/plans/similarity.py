@@ -185,20 +185,16 @@ def sim_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_plane_sql(dims: int, num_planes: int, seed: str = "lsh") -> str:
+def _lsh_plane_sql(dims: int, num_planes: int) -> str:
     """DuckDB expression for operators.similarity.lsh_bucket: the
-    hyperplane weights are md5-derived in Python (identical constants
-    both engines), so the bucket id is oracle-checkable."""
-    import hashlib
-
-    def weight(p: int, d: int) -> float:
-        h = hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()
-        return (int(h[:8], 16) / 0xFFFFFFFF) * 2.0 - 1.0
-
+    hyperplane weights are md5-derived in Python (the same
+    ``_plane_weight`` constants in both engines), so the bucket id is
+    oracle-checkable."""
     planes = []
     for p in range(num_planes):
         terms = " + ".join(
-            f"({weight(p, d)!r} * embedding[{d + 1}]::DOUBLE)" for d in range(dims)
+            f"({sim._plane_weight(p, d)!r} * embedding[{d + 1}]::DOUBLE)"
+            for d in range(dims)
         )
         planes.append(f"(CASE WHEN ({terms}) >= 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(planes)

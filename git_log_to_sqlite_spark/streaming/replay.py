@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 
 from ..sources.schema_cache import events_schema, with_event_time
 
+# Event-time watermark of every streaming builder below: the lateness
+# a stream tolerates before its state is evicted.
+_WATERMARK = "2 hours"
+
 
 def read_events_stream(
     spark: SparkSession,
@@ -52,15 +56,14 @@ def read_events_stream(
 
 # --- transformation builders (batch AND stream) ------------------------
 
-def tumbling_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling event-time window: count + value sum per (window,
-    event_type). The watermark bounds streaming state; in batch it is
-    a no-op (batch frames have complete data by definition)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window: count + value sum per
+    (window, event_type). The watermark bounds streaming state; in
+    batch it is a no-op (batch frames have complete data by
+    definition)."""
+    src = events.withWatermark("ts", _WATERMARK) if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
@@ -69,30 +72,24 @@ def tumbling_counts(
     )
 
 
-def sliding_value_sum(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding window: each event lands in window/slide overlapping
-    windows (here 2); state cost scales with the overlap factor."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def sliding_value_sum(events: DataFrame) -> DataFrame:
+    """Sliding 1-hour window every 30 minutes: each event lands in
+    window/slide overlapping windows (here 2); state cost scales with
+    the overlap factor."""
+    src = events.withWatermark("ts", _WATERMARK) if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "user_id")
+        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "user_id", "n")
     )
 
 
-def session_agg(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Session windows (gap-based): the streaming-native form of the
+def session_agg(events: DataFrame) -> DataFrame:
+    """Session windows (30-minute gap): the streaming-native form of the
     batch lag-gap sessionization in plans/windows.events_sessionize."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", _WATERMARK) if events.isStreaming else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        src.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("session_value"),
@@ -107,28 +104,21 @@ def session_agg(
     )
 
 
-def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Stateful stream dedup on event_id: duplicates arriving within
-    the watermark horizon are dropped; state for ids older than the
+    the 2-hour watermark horizon are dropped; state for ids older than the
     watermark is evicted (bounded memory — plain dropDuplicates on a
     stream keeps ALL ids forever)."""
     if events.isStreaming:
-        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        return events.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(
             ["event_id"]
         )
     return events.dropDuplicates(["event_id"])
 
 
-def typed_event_join(
-    events_a: DataFrame,
-    events_b: DataFrame,
-    type_a: str = "click",
-    type_b: str = "purchase",
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join: type-B events following a type-A event
-    by the same user within ``within``.
+def typed_event_join(events_a: DataFrame, events_b: DataFrame) -> DataFrame:
+    """Stream-stream inner join: ``purchase`` events following a
+    ``click`` by the same user within 1 hour.
 
     On streams, BOTH sides carry watermarks and the join condition
     includes the time bound — that pair is what lets Spark evict join
@@ -136,25 +126,25 @@ def typed_event_join(
     streams forever). On batch frames the same builder is a plain
     range-condition join, which the equivalence test exploits.
     """
-    a = events_a.filter(F.col("event_type") == type_a).select(
+    a = events_a.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("a_user"),
         F.col("ts").alias("a_ts"),
         F.col("event_id").alias("a_event"),
     )
-    b = events_b.filter(F.col("event_type") == type_b).select(
+    b = events_b.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("b_user"),
         F.col("ts").alias("b_ts"),
         F.col("event_id").alias("b_event"),
         F.col("value").alias("b_value"),
     )
     if events_a.isStreaming:
-        a = a.withWatermark("a_ts", watermark)
-        b = b.withWatermark("b_ts", watermark)
+        a = a.withWatermark("a_ts", _WATERMARK)
+        b = b.withWatermark("b_ts", _WATERMARK)
     return a.join(
         b,
         (F.col("a_user") == F.col("b_user"))
         & (F.col("b_ts") >= F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr(f"INTERVAL {within}")),
+        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 1 hour")),
     ).select("a_user", "a_event", "b_event", "a_ts", "b_ts", "b_value")
 
 

@@ -106,12 +106,22 @@ def _coarse_type(t: str) -> str:
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "?"):
     """Returns (ok, message). Compares column-name sets, coarse column
     types, row counts, and canonicalized values."""
+    return compare_counted(spark_df, con, sql, name)[:2]
+
+
+def compare_counted(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "?"):
+    """``compare``, plus the number of rows the oracle returned:
+    (ok, message, oracle rows)."""
+    rel = con.sql(sql)
+    duck_rows = rel.fetchall()
+    return (*_compare(spark_df, rel, duck_rows, name), len(duck_rows))
+
+
+def _compare(spark_df, rel: duckdb.DuckDBPyRelation, duck_rows: list, name: str):
     spark_cols = list(spark_df.columns)
     spark_rows = [tuple(r) for r in spark_df.collect()]
-    rel = con.sql(sql)
     duck_cols = list(rel.columns)
     duck_types = [str(t) for t in rel.types]
-    duck_rows = rel.fetchall()
 
     if sorted(spark_cols) != sorted(duck_cols):
         return False, f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"

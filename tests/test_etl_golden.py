@@ -174,6 +174,55 @@ def test_sqlite_sink_ignores_input_order(spark, etl, tmp_path, aqe):
         spark.conf.set("spark.sql.adaptive.enabled", before)
 
 
+def test_fork_tables_equal_between_parquet_and_sqlite_sinks(spark, tmp_path):
+    """A commit found in several repositories (a fork beside its origin)
+    is one ``logs`` row in the Parquet tables, as in the SQLite sink:
+    the copy of the repository whose name sorts first, an unlisted
+    repository (NULL id) included. ``run_pipeline``'s ``logs`` and
+    ``changed_files`` written with ``write_parquet`` equal the
+    ``write_sqlite`` tables row for row."""
+    from git_log_to_sqlite_spark.etl.writers import write_parquet
+
+    logs_dir = tmp_path / "gitlogs"
+    logs_dir.mkdir()
+    # "aa-fork" sorts before its origin; "0-unlisted" (not in the
+    # dimension) sorts before beta, whose log it copies
+    for name, text in (
+        ("alpha", FX.ALPHA_LOG),
+        ("aa-fork", FX.ALPHA_LOG),
+        ("beta", FX.BETA_LOG),
+        ("0-unlisted", FX.BETA_LOG),
+    ):
+        (logs_dir / f"{name}.log").write_text(text, encoding="utf-8")
+    res = run_pipeline(
+        spark,
+        parse_git_log(spark, str(logs_dir)),
+        [("alpha", None), ("aa-fork", None), ("beta", None)],
+    )
+    for table in ("logs", "changed_files"):
+        write_parquet(getattr(res, table), str(tmp_path / table))
+    logs = spark.read.parquet(str(tmp_path / "logs")).select(
+        "commit_hash", "author_name", "author_email", "message", "commit_epoch",
+        "insertions", "deletions", "repository_id", "parent_hash",
+    )
+    files = spark.read.parquet(str(tmp_path / "changed_files"))
+    db = str(tmp_path / "fork.sqlite")
+    write_sqlite(db, res.repositories, res.commits)
+    con = sqlite3.connect(db)
+    try:
+        want_logs = con.execute("SELECT * FROM logs ORDER BY commit_hash").fetchall()
+        want_files = con.execute("SELECT * FROM changed_files ORDER BY id").fetchall()
+    finally:
+        con.close()
+    assert sorted(map(tuple, logs.collect())) == want_logs
+    assert sorted(map(tuple, files.select("id", "commit_hash", "file_path").collect())) == (
+        want_files
+    )
+    owner = {h: rid for h, *_, rid, _parent in want_logs}
+    assert len(owner) == 10  # 8 alpha and 2 beta commits, each stored once
+    assert owner[FX.H[1]] == 1 and owner[FX.H[10]] is None  # aa-fork; 0-unlisted
+
+
 def test_repositories_table(etl):
     repos = {r["name"]: r for r in etl.repositories.collect()}
     assert set(repos) == {"alpha", "beta"}  # ignored-repo excluded

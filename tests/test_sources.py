@@ -441,3 +441,149 @@ def test_every_module_level_name_is_loaded():
                     unloaded.append(f"{f.relative_to(REPO_ROOT)}:{stmt.lineno} {name}")
     assert unloaded == [], unloaded
 
+
+
+# Defaulted parameters of the package's public API that only tests
+# set, each with the reason it stays an option.
+ALLOWED_TEST_ONLY = {
+    # test seams: a test swaps in a deterministic stand-in
+    "audio_shared_segment_pairs(energy_fn)": "test seam for the band energies",
+    "pack_token_shards(tokenizer_fn)": "test seam for the subword tokenizer",
+    "ordered_running_sum(num_partitions)": "test seam: the answer must not "
+    "depend on the range-partition count",
+    "ordered_row_number(num_partitions)": "test seam: the answer must not "
+    "depend on the range-partition count",
+    # telemetry sinks: a test reads what the operator reports
+    "minhash_lsh_pairs(observation)": "valve telemetry sink",
+    "ngram_jaccard_pairs(observation)": "valve telemetry sink",
+    "substring_span_pairs(observation)": "valve telemetry sink",
+    "incremental_substring_spans(observation)": "valve telemetry sink",
+    "simhash_pairs(observation)": "valve telemetry sink",
+    "hamming_probe(observation)": "valve telemetry sink",
+    "incremental_minhash_dedup(observation)": "valve telemetry sink",
+    "audio_shared_segment_pairs(observation)": "valve telemetry sink",
+    "video_shared_scene_pairs(observation)": "valve telemetry sink",
+    "semantic_dedup(observation)": "valve telemetry sink",
+    "connected_components(stats)": "round-count sink that pins the "
+    "convergence bound",
+    "curate_corpus(telemetry)": "stage-funnel telemetry sink",
+    "pretrain_corpus(telemetry)": "stage-funnel telemetry sink",
+    # contracts that a test documents
+    "write_parquet(max_records_per_file)": "the per-write file-size bound",
+    "asof_join(direction)": "forward as-of, pd.merge_asof's direction",
+    "asof_join(tolerance_seconds)": "pd.merge_asof's tolerance bound",
+    "assign_clusters(round_to)": "the literal reference's rounding, "
+    "tested equal to the table form",
+    "hamming_probe(cap_hot_keys)": "the probe's hot-key valve; its "
+    "package callers run uncapped",
+    "incremental_minhash_dedup(best_match)": "the best-estimate match id",
+    "image_near_dup_pairs(bands)": "the pigeonhole check runs before any pin",
+    "IvfIndex.build(fit_sample_size)": "the full-corpus and sampled fits",
+    "IvfIndex.compact(num_files)": "compaction to a set file count",
+    "pretrain_corpus(char_budget_per_source)": "the subword token budget, "
+    "tested against the char path",
+    "pretrain_corpus(shard_chars)": "the subword token budget, tested "
+    "against the char path",
+    "pretrain_corpus(token_col)": "the subword token budget, tested "
+    "against the char path",
+}
+
+
+def _public_options(tree) -> "list[tuple[str, str, str, int | None, int]]":
+    """``(callee, qualname, param, position, line)`` for every defaulted
+    parameter of a public function, public method or ``__init__`` in a
+    module. ``callee`` is the name a call uses (the class for an
+    ``__init__``); ``position`` is the parameter's index among the
+    positional arguments a call passes (``self`` excluded), or None
+    for a keyword-only one."""
+    import ast
+
+    def options(fn, callee, qualname, method):
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        if method:
+            pos = pos[1:]
+        first = len(pos) - len(a.defaults)
+        out = [(callee, qualname, p.arg, i, fn.lineno) for i, p in enumerate(pos) if i >= first]
+        out += [
+            (callee, qualname, p.arg, None, fn.lineno)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+        return out
+
+    found = []
+    for stmt in tree.body:
+        if isinstance(stmt, ast.FunctionDef) and not stmt.name.startswith("_"):
+            found += options(stmt, stmt.name, stmt.name, False)
+        elif isinstance(stmt, ast.ClassDef) and not stmt.name.startswith("_"):
+            for m in stmt.body:
+                if isinstance(m, ast.FunctionDef) and (
+                    not m.name.startswith("_") or m.name == "__init__"
+                ):
+                    callee = stmt.name if m.name == "__init__" else m.name
+                    found += options(m, callee, f"{stmt.name}.{m.name}", True)
+    return found
+
+
+def _settings(files) -> "tuple[dict[str, set[str]], dict[str, int]]":
+    """For every name called in ``files`` (a ``Name`` or an
+    ``Attribute``): the keywords some call passes, and the most
+    positional arguments one call passes (``*args`` not counted)."""
+    import ast
+    from collections import defaultdict
+
+    keywords, positional = defaultdict(set), defaultdict(int)
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name is None:
+                continue
+            keywords[name].update(k.arg for k in node.keywords if k.arg)
+            n = sum(not isinstance(a, ast.Starred) for a in node.args)
+            positional[name] = max(positional[name], n)
+    return keywords, positional
+
+
+def test_every_public_option_is_set():
+    """Every defaulted parameter of a public function, public method or
+    ``__init__`` in the package is set, by keyword or by position, by
+    some call to that name in the package, ``bench.py``,
+    ``perfbench/`` or ``tools/``. Calls match by name alone. An option
+    that no caller sets is a constant and is folded into one; one that
+    only tests set is listed in ``ALLOWED_TEST_ONLY`` with its reason.
+    A listed option that gains a real caller (or is deleted) must
+    leave the list."""
+    import ast
+
+    package = REPO_ROOT / "git_log_to_sqlite_spark"
+    callers = [
+        *package.rglob("*.py"),
+        REPO_ROOT / "bench.py",
+        *(REPO_ROOT / "perfbench").rglob("*.py"),
+        *(REPO_ROOT / "tools").rglob("*.py"),
+    ]
+    real = _settings(callers)
+    tested = _settings((REPO_ROOT / "tests").rglob("*.py"))
+
+    def is_set(settings, callee, param, position):
+        keywords, positional = settings
+        return param in keywords[callee] or (
+            position is not None and positional[callee] > position
+        )
+
+    unset, test_only = [], set()
+    for f in sorted(package.rglob("*.py")):
+        tree = ast.parse(f.read_text(encoding="utf-8"))
+        for callee, qualname, param, position, line in _public_options(tree):
+            if is_set(real, callee, param, position):
+                continue
+            key = f"{qualname}({param})"
+            if is_set(tested, callee, param, position):
+                test_only.add(key)
+            else:
+                unset.append(f"{f.relative_to(REPO_ROOT)}:{line} {key}")
+    stray = sorted(test_only ^ set(ALLOWED_TEST_ONLY))
+    assert unset == [] and stray == [], (unset, stray)

@@ -65,7 +65,7 @@ def test_stateful_dedup_within_watermark(spark, tmp_path):
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
         str(tmp_path / "f*")
     )
-    deduped = dedup_within_watermark(stream, watermark="2 hours")
+    deduped = dedup_within_watermark(stream)
     q = (
         deduped.writeStream.outputMode("append")
         .format("memory")
@@ -314,7 +314,7 @@ def test_dedup_state_evicted_past_watermark(spark, tmp_path):
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
         str(tmp_path / "f*")
     )
-    deduped = dedup_within_watermark(stream, watermark="2 hours")
+    deduped = dedup_within_watermark(stream)
     q = (
         deduped.writeStream.outputMode("append")
         .format("memory")
