@@ -19,8 +19,8 @@ author map is a SQL map literal in the commits plan, so the fact table
 is never joined for it. ``build_logs`` joins the dimension as a
 broadcast, so the fact table never shuffles for id resolution (the
 reference instead ran one correlated SQLite subquery per row,
-analyzer.rs:322); its one shuffle, on ``commit_hash``, keeps one row
-per commit.
+analyzer.rs:322). A commit found in several repositories is kept once,
+before either fact table is built (``_first_copy``).
 """
 
 from __future__ import annotations
@@ -90,24 +90,30 @@ def build_repositories(
     )
 
 
-def build_logs(commits: DataFrame, repositories: DataFrame) -> DataFrame:
-    """R20/R21: resolve repository_id with a broadcast equi-join
-    (replaces the per-row correlated subquery at analyzer.rs:322).
-
-    ``commit_hash`` is the key, as in the SQLite sink: a commit found
-    in several repositories (a fork beside its origin) keeps the row
-    of the repository whose name sorts first, a NULL name first
-    (``writers.write_sqlite``'s rule). Ids are numbered in name order,
-    so that is the minimum ``repository_id``."""
-    dim = F.broadcast(repositories.select(F.col("id").alias("repository_id"), "name"))
+def _first_copy(commits: DataFrame) -> DataFrame:
+    """One row per ``commit_hash``: a commit found in several
+    repositories (a fork beside its origin) keeps the copy of the
+    repository whose name sorts first, a NULL name first, as
+    ``writers.write_sqlite`` does. Its one shuffle is on
+    ``commit_hash``."""
     first = Window.partitionBy("commit_hash").orderBy(
         F.coalesce(F.col("repository"), F.lit(""))
     )
     return (
-        commits.join(dim, commits["repository"] == dim["name"], "left")
-        .withColumn("_copy", F.row_number().over(first))
+        commits.withColumn("_copy", F.row_number().over(first))
         .filter(F.col("_copy") == 1)
-    ).select(
+        .drop("_copy")
+    )
+
+
+def build_logs(commits: DataFrame, repositories: DataFrame) -> DataFrame:
+    """R20/R21: resolve repository_id with a broadcast equi-join
+    (replaces the per-row correlated subquery at analyzer.rs:322).
+    ``commits`` holds one row per commit (``_first_copy``); ids are
+    numbered in name order, so a fork's commit keeps the minimum
+    ``repository_id``."""
+    dim = F.broadcast(repositories.select(F.col("id").alias("repository_id"), "name"))
+    return commits.join(dim, commits["repository"] == dim["name"], "left").select(
         "commit_hash",
         "author_name",
         "author_email",
@@ -175,7 +181,7 @@ def run_pipeline(
     if ignore:
         repos_meta = [(name, url) for name, url in repos_meta if name not in ignore]
         commits = commits.filter(~F.col("repository").isin(config.ignored_repositories))
-    commits = apply_author_map(commits, config)
+    commits = _first_copy(apply_author_map(commits, config))
     repositories = build_repositories(spark, repos_meta)
     names = {name for name, _url in repos_meta}
     skipped = [(path,) for path in scanned_dirs if repository_name(path) not in names]

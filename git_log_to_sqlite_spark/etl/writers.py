@@ -128,20 +128,20 @@ def write_sqlite(
     batch of ``_BATCH_ROWS`` (10,000) commits. Each batch is staged,
     one ``executemany`` per table, into two SQLite ``TEMP`` tables: a
     commit's ``logs`` row and one row per changed file with its array
-    position and repository name. ``logs`` and ``changed_files``
-    are then written with one ``INSERT ... SELECT ... ORDER BY`` each:
-    SQLite's sorter, which spills to temporary files, orders the rows,
-    so no Spark job samples or sorts the commits.
+    position, both under the copy's arrival number. ``logs`` and
+    ``changed_files`` are then written with one ``INSERT ... SELECT ...
+    ORDER BY`` each: SQLite's sorter, which spills to temporary files,
+    orders the rows, so no Spark job samples or sorts the commits.
 
+    A commit found in several scanned repositories is stored once, in
+    ``logs`` and ``changed_files`` alike: the copy of the repository
+    whose name sorts first, as ``pipeline.run_pipeline`` keeps it.
     ``changed_files.id`` is assigned by SQLite as the rows are inserted,
-    in (commit_hash, array position, repository) order: the reference's
+    in (commit_hash, array position) order: the reference's
     AUTOINCREMENT rule (analyzer.rs:178-188, 305-346), and on an empty
-    database the ids ``pipeline.build_changed_files`` assigns. A commit
-    found in several scanned repositories is stored once in ``logs``,
-    under the repository whose name sorts first; its file rows are
-    numbered position-major across the copies, as
-    ``build_changed_files`` numbers them. The result does not depend on
-    the order or partitioning of ``commits``.
+    database the ids ``pipeline.build_changed_files`` assigns. The
+    result does not depend on the order or partitioning of
+    ``commits``.
 
     ``commit_datetime`` stores raw epoch seconds — exactly what the
     reference stores into its DATETIME column (repository.rs:178 via
@@ -158,11 +158,11 @@ def write_sqlite(
     """
     with _connect(db_path) as con:
         con.execute(
-            "CREATE TEMP TABLE log_rows (commit_hash, author_name, author_email,"
-            " message, commit_epoch, insertions, deletions, parent_hash,"
-            " repository, repository_id)"
+            "CREATE TEMP TABLE log_rows (seq INTEGER PRIMARY KEY, commit_hash,"
+            " author_name, author_email, message, commit_epoch, insertions,"
+            " deletions, parent_hash, repository, repository_id)"
         )
-        con.execute("CREATE TEMP TABLE file_rows (commit_hash, pos, repository, file_path)")
+        con.execute("CREATE TEMP TABLE file_rows (seq, commit_hash, pos, file_path)")
         stored, file_offset = {}, 0
         if not clear:
             stored = dict(con.execute("SELECT name, id FROM repositories"))
@@ -179,17 +179,19 @@ def write_sqlite(
             .hint("rebalance")
             .toLocalIterator()
         )
+        seq = itertools.count()
         for batch in _batched(rows, _BATCH_ROWS):
+            batch = [(next(seq), *r) for r in batch]
             con.executemany(
-                "INSERT INTO log_rows VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
-                [(*r[:9], id_of.get(r[8])) for r in batch],
+                "INSERT INTO log_rows VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
+                [(*r[:10], id_of.get(r[9])) for r in batch],
             )
             con.executemany(
                 "INSERT INTO file_rows VALUES (?, ?, ?, ?)",
                 [
-                    (r[0], pos, r[8], path)
+                    (r[0], r[1], pos, path)
                     for r in batch
-                    for pos, path in enumerate(r[9] or ())
+                    for pos, path in enumerate(r[10] or ())
                     if path is not None
                 ],
             )
@@ -201,19 +203,23 @@ def write_sqlite(
         )
         # The first-sorted repository's copy of each commit wins.
         con.execute(
+            "DELETE FROM log_rows WHERE seq NOT IN (SELECT seq FROM"
+            " (SELECT seq, row_number() OVER (PARTITION BY commit_hash"
+            "  ORDER BY coalesce(repository, ''), seq) AS copy FROM log_rows)"
+            " WHERE copy = 1)"
+        )
+        con.execute(
             "INSERT OR REPLACE INTO logs (commit_hash, author_name, author_email,"
             " message, commit_datetime, insertions, deletions, parent_hash,"
             " repository_id)"
             " SELECT commit_hash, author_name, author_email, message, commit_epoch,"
-            " insertions, deletions, parent_hash, repository_id FROM"
-            " (SELECT *, row_number() OVER (PARTITION BY commit_hash"
-            "  ORDER BY coalesce(repository, '')) AS copy FROM log_rows)"
-            " WHERE copy = 1 ORDER BY commit_hash"
+            " insertions, deletions, parent_hash, repository_id FROM log_rows"
+            " ORDER BY commit_hash"
         )
         con.execute(
             "INSERT INTO changed_files (commit_hash, file_path)"
             " SELECT commit_hash, file_path FROM file_rows"
-            " ORDER BY commit_hash, pos, coalesce(repository, '')"
+            " WHERE seq IN (SELECT seq FROM log_rows) ORDER BY commit_hash, pos"
         )
         if file_offset:
             # A commit's file list is a function of its hash, so the

@@ -24,19 +24,25 @@ in ``$XDG_CACHE_HOME/git_log_to_sqlite_spark/<key>/`` (default
   (``-XX:SharedArchiveFile``). A file whose size is no longer the
   validated size is deleted, never mapped: a truncated archive kills
   the JVM with SIGBUS;
-* none exists: the JVM writes ``<token>.part`` at its normal exit
-  (``-XX:ArchiveClassesAtExit``), after the session's work. A later
-  launch promotes it with ``os.replace``, but only after its writer
-  JVM has exited and a trial ``java -Xshare:on
-  -XX:+VerifySharedSpaces`` with the writer's class path accepted it;
-  a rejected part file is deleted.
+* none exists, and no live session writes one: this session writes
+  it. Its JVM dumps ``<token>.part`` when it exits
+  (``-XX:ArchiveClassesAtExit``), and an ``atexit`` hook of the
+  launching process closes the JVM's stdin, waits for it (at most
+  ``_DUMP_TIMEOUT_S``) and renames the part to ``archive-<size>.jsa``
+  only when the JVM exited 0, its ``cds`` log reports the archive
+  written and no validated archive exists yet; otherwise it deletes
+  the part. So the first run of an install returns after the dump
+  (7-13 s, README "Cold start"), and no JVM outlives it;
+* none exists, but a live session writes one: the JVM launches
+  without the archive.
 
-A launch also deletes the directories that other Java runtimes or
-Spark installs left in the cache, unless one of their sessions still
-runs, so the cache holds one archive (about 150 MB). The first
-session of an install pays for the archive: a JVM that dumps at exit
-starts about 4 s slower and spends 7-13 s writing the archive when it
-exits (README "Cold start" has the measurements).
+Each launch holds an exclusive ``flock`` on ``<token>.lock`` for the
+life of its process; the kernel drops it when the process dies, even
+on SIGKILL. A launch deletes every ``<token>.*`` whose lock it can
+take, so a dead writer's part file is deleted, never mapped. It also
+deletes the directories that other Java runtimes or Spark installs
+left in the cache unless a lock in them is held, so the cache holds
+one archive (about 150 MB).
 
 The archive needs a class path without non-empty directories, so the
 launch points ``SPARK_CONF_DIR`` at an empty cache directory (restored
@@ -54,16 +60,16 @@ any ``spark.driver.extraJavaOptions`` the caller passes. The JVM's
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import fcntl
 import glob
 import hashlib
-import json
 import os
 import re
 import shutil
-import subprocess
-import time
 import uuid
+from subprocess import TimeoutExpired
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -81,18 +87,12 @@ _CLASS_PATH_ENV = (
 )
 _JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 _CDS_LOG = "-Xlog:cds*=info,class+path=info:file="
-# A session launch that never recorded its JVM is given up after this.
-_LAUNCH_TIMEOUT_S = 3600
+# The longest a writer's exit waits for its JVM to dump the archive
+# and exit; the JVM is then killed and its part deleted.
+_DUMP_TIMEOUT_S = 120
 # The JVM system property that holds why a JVM launched without the
 # archive; ``jvm_archive_state`` reports it.
 _OFF_PROPERTY = "git_log_to_sqlite_spark.jvm_archive_off"
-
-
-def _write_json(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh)
-    os.replace(tmp, path)
 
 
 def _cache_root() -> str:
@@ -148,56 +148,17 @@ def _archive_blocker(caller_conf: dict[str, str], conf_dir: str) -> str:
     return ""
 
 
-def _alive(pid: int, token: str) -> bool:
-    """Whether the JVM launched for ``token`` still runs: ``pid`` is
-    alive and, where ``/proc`` shows it, its command line names the
-    token (so a reused pid or a zombie does not count). Only a pid
-    that is gone counts as exited: a process of another user, or one
-    ``/proc`` hides, counts as running."""
+def _held(lock: str) -> bool:
+    """Whether a live process holds the ``flock`` on ``lock`` (a
+    missing file is created, and is free)."""
+    fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         return False
-    except PermissionError:
+    except BlockingIOError:
         return True
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as fh:
-            return token.encode() in fh.read()
-    except OSError:
-        return True
-
-
-def _running(record: str) -> tuple[bool, dict]:
-    """Whether the session of ``record`` still runs (its JVM, or a
-    launch that has not recorded its JVM yet), and the record."""
-    token = os.path.basename(record)[:-len(".json")]
-    try:
-        with open(record) as fh:
-            meta = json.load(fh)
-        pid = meta.get("pid")
-    except (OSError, ValueError, AttributeError):
-        meta, pid = {}, None
-    if isinstance(pid, int):
-        return _alive(pid, token), meta
-    try:
-        return time.time() - os.path.getmtime(record) < _LAUNCH_TIMEOUT_S, meta
-    except OSError:
-        return False, meta
-
-
-def _trial(meta: dict, part: str) -> bool:
-    """Whether a JVM with the writer's java and class path maps ``part``
-    and verifies every region's checksum. A truncated archive crashes
-    this JVM, not a session's."""
-    try:
-        return subprocess.run(
-            (meta["java"], "-Xshare:on", f"-XX:SharedArchiveFile={part}",
-             "-XX:+VerifySharedSpaces", f"-XX:ErrorFile={os.devnull}",
-             "-XX:-CreateCoredumpOnCrash", "-cp", meta["class_path"], "-version"),
-            capture_output=True, timeout=120, cwd=os.path.dirname(part),
-        ).returncode == 0
-    except (KeyError, TypeError, OSError, subprocess.SubprocessError):
-        return False
+    finally:
+        os.close(fd)
 
 
 def _remove(*paths: str) -> None:
@@ -220,45 +181,41 @@ def _validated_archive(cache: str) -> str | None:
     return None
 
 
-def _settle(cache: str) -> None:
-    """Finish the records of sessions whose JVM has exited: promote the
-    first part file the trial accepts when no archive exists, delete
-    every other part file, and delete their logs and records."""
-    for record in sorted(glob.glob(os.path.join(cache, "*.json"))):
-        running, meta = _running(record)
-        if running:
-            continue
-        token = os.path.basename(record)[:-len(".json")]
-        part = os.path.join(cache, f"{token}.part")
-        if os.path.exists(part):
-            recorded = isinstance(meta.get("pid"), int)  # its JVM ran and exited
-            if recorded and _validated_archive(cache) is None and _trial(meta, part):
-                with contextlib.suppress(OSError):
-                    size = os.path.getsize(part)
-                    os.replace(part, os.path.join(cache, f"archive-{size}.jsa"))
-            _remove(part)
-        _remove(os.path.join(cache, f"{token}.log"), record)
+def _sweep(cache: str) -> bool:
+    """Delete the files of every session in ``cache`` whose lock is
+    free (its process has exited, however it ended), and say whether a
+    live session writes the archive (its part file exists)."""
+    writing = False
+    for token in {n[:16] for n in os.listdir(cache) if re.match(r"[0-9a-f]{16}\.", n)}:
+        stem = os.path.join(cache, token)
+        if _held(f"{stem}.lock"):
+            writing = writing or os.path.exists(f"{stem}.part")
+        else:
+            _remove(*glob.glob(f"{stem}.*"))
+    return writing
 
 
 def _drop_other_installs(root: str, key: str) -> None:
     """Delete the cache directories of other Java runtimes and Spark
-    installs (a JDK or Spark update leaves one behind) unless one of
-    their sessions still runs, so one archive stays per cache."""
+    installs (a JDK or Spark update leaves one behind) unless a lock
+    in them is held, so one archive stays per cache."""
     with os.scandir(root) as entries:
         stale = [e.path for e in entries
                  if e.name != key and re.fullmatch(r"[0-9a-f]{16}", e.name)
                  and e.is_dir(follow_symlinks=False)]
     for path in stale:
-        if not any(_running(r)[0] for r in glob.glob(os.path.join(path, "*.json"))):
+        if not any(_held(lock) for lock in glob.glob(os.path.join(path, "*.lock"))):
             shutil.rmtree(path, ignore_errors=True)
 
 
 def _archive_launch(caller_conf: dict[str, str]) -> tuple[str, str | None, str]:
     """The archive decision for a driver JVM launch with the caller's
     Spark conf ``caller_conf``: the options to append to its
-    ``spark.driver.extraJavaOptions``, the path of the session's record,
-    and why the archive is off (options "" and no record). Writes the
-    record (and settles finished sessions) in the cache directory."""
+    ``spark.driver.extraJavaOptions``, the stem ``<cache>/<token>`` of
+    the part file its JVM writes (None when it maps the archive), and
+    why the archive is off (options "" and no stem). Sweeps the cache
+    directory and takes the session's lock, held for the life of the
+    process."""
     spark_home = _spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     reason = _archive_blocker(caller_conf, conf_dir)
@@ -273,23 +230,54 @@ def _archive_launch(caller_conf: dict[str, str]) -> tuple[str, str | None, str]:
     key = _archive_key(java_home, spark_home)
     cache = os.path.join(root, key)
     empty_conf = os.path.join(root, "conf")
-    token = uuid.uuid4().hex[:16]
-    record = os.path.join(cache, f"{token}.json")
+    stem = os.path.join(cache, uuid.uuid4().hex[:16])
     try:
         os.makedirs(empty_conf, exist_ok=True)
         os.makedirs(cache, exist_ok=True)
         if os.listdir(empty_conf):
             return "", None, f"{empty_conf} is not empty"
         _drop_other_installs(root, key)
-        _settle(cache)
-        _write_json(record, {"started": time.time()})
+        writing = _sweep(cache)
+        archive = _validated_archive(cache)
+        if archive is None and writing:
+            return "", None, "another session is writing the archive"
+        # The fd stays open, and so the lock held, until the process ends.
+        fcntl.flock(os.open(f"{stem}.lock", os.O_RDWR | os.O_CREAT, 0o644), fcntl.LOCK_EX)
+        if archive is None:
+            # The writer's marker, which the JVM replaces when it dumps.
+            open(f"{stem}.part", "x").close()
     except OSError as exc:
         return "", None, f"cache directory not writable: {exc}"
-    archive = _validated_archive(cache)
     flag = (f"-XX:SharedArchiveFile={archive}" if archive else
-            f"-XX:ArchiveClassesAtExit={os.path.join(cache, token)}.part")
-    log = os.path.join(cache, f"{token}.log")
-    return f"-Xlog:cds*=off,class+path=off {_CDS_LOG}{log}::filecount=0 {flag}", record, ""
+            f"-XX:ArchiveClassesAtExit={stem}.part")
+    options = f"-Xlog:cds*=off,class+path=off {_CDS_LOG}{stem}.log::filecount=0 {flag}"
+    return options, None if archive else stem, ""
+
+
+def _promote_at_exit(proc, stem: str) -> None:
+    """The exit hook of a session whose driver JVM ``proc`` writes
+    ``<stem>.part``: close the JVM's stdin (the gateway exits on EOF),
+    wait for it to dump and exit, and rename the part to
+    ``archive-<size>.jsa`` when the JVM exited 0, its ``cds`` log reports
+    the archive written and no validated archive exists yet. Otherwise
+    the part is deleted. The session's log and lock go either way."""
+    with contextlib.suppress(OSError):
+        proc.stdin.close()
+    try:
+        code = proc.wait(timeout=_DUMP_TIMEOUT_S)
+    except TimeoutExpired:
+        proc.kill()
+        code = proc.wait()
+    cache, part, log = os.path.dirname(stem), f"{stem}.part", f"{stem}.log"
+    try:
+        with open(log, "rb") as fh:
+            written = b"Written dynamic archive" in fh.read()
+    except OSError:
+        written = False
+    if code == 0 and written and _validated_archive(cache) is None:
+        with contextlib.suppress(OSError):
+            os.replace(part, os.path.join(cache, f"archive-{os.path.getsize(part)}.jsa"))
+    _remove(part, log, f"{stem}.lock")
 
 
 def _launch(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
@@ -297,10 +285,9 @@ def _launch(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession
     JVM: with the archive options appended to the caller's Java options
     and ``SPARK_CONF_DIR`` at the empty cache directory (restored
     afterwards), unless the archive is off: then the JVM keeps the
-    reason as a system property. The session's record gets the JVM's
-    pid, which tells a later launch when the part file is complete,
-    and its java and class path, which the trial runs."""
-    options, record, reason = _archive_launch(conf)
+    reason as a system property. A JVM that writes the archive gets the
+    exit hook that promotes it."""
+    options, stem, reason = _archive_launch(conf)
     if not options:
         spark = builder.getOrCreate()
         spark.sparkContext._jvm.java.lang.System.setProperty(_OFF_PROPERTY, reason)
@@ -316,14 +303,8 @@ def _launch(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession
             os.environ.pop("SPARK_CONF_DIR", None)
         else:
             os.environ["SPARK_CONF_DIR"] = old
-    jvm = spark.sparkContext._jvm
-    system = jvm.java.lang.System
-    with contextlib.suppress(OSError):
-        _write_json(record, {
-            "pid": int(jvm.java.lang.ProcessHandle.current().pid()),
-            "java": os.path.join(system.getProperty("java.home"), "bin", "java"),
-            "class_path": system.getProperty("java.class.path"),
-        })
+    if stem is not None:
+        atexit.register(_promote_at_exit, spark.sparkContext._gateway.proc, stem)
     return spark
 
 

@@ -518,9 +518,8 @@ def test_cli_sqlite_tables_equal_pipeline_frames(spark, gen_tree, tmp_path):
 
 def test_cli_commit_in_two_repositories_keeps_file_ids(spark, tmp_path):
     """A commit found in two scanned repositories (a clone beside its
-    origin) is stored once, under the name that sorts first, and its
-    file rows keep the pipeline's (commit_hash, pos) numbering: the
-    copies are numbered position-major."""
+    origin) is stored once, under the name that sorts first, and so are
+    its file rows, with the pipeline's (commit_hash, pos) numbering."""
     import sqlite3
 
     origin = tmp_path / "root" / "a_origin"
@@ -543,8 +542,10 @@ def test_cli_commit_in_two_repositories_keeps_file_ids(spark, tmp_path):
     db = tmp_path / "out.db"
     _cli(spark, str(tmp_path / "root"), "-r", "-d", str(db))
     got = _sqlite_tables(db)
-    assert len(want["changed_files"]) == 2 * 6 + 1
+    assert len(want["changed_files"]) == 6 + 1
     assert got["changed_files"] == want["changed_files"]
+    keys = [(h, path) for _id, h, path in got["changed_files"]]
+    assert len(set(keys)) == len(keys)
     con = sqlite3.connect(db)
     try:
         stored = con.execute(

@@ -133,11 +133,12 @@ def test_sqlite_sink_ignores_input_order(spark, etl, tmp_path, aqe):
     commits arrive in: SQLite orders the rows. The golden commits plus
     a copy of two alpha commits under beta (a clone beside its origin),
     shuffled into several partitions, with AQE on and off: the
-    ``changed_files`` ids equal ``build_changed_files`` ids row for
-    row on an empty database, and continue after the stored maximum on
-    an append without ``clear``. The shared commits' ``logs`` rows go
-    to alpha, the name that sorts first."""
-    from git_log_to_sqlite_spark.etl.pipeline import build_changed_files
+    ``changed_files`` ids equal ``build_changed_files`` ids of the
+    pipeline's one copy per commit row for row on an empty database,
+    and continue after the stored maximum on an append without
+    ``clear``. The shared commits' rows go to alpha, the name that
+    sorts first."""
+    from git_log_to_sqlite_spark.etl.pipeline import _first_copy, build_changed_files
 
     shared = (FX.H[1], FX.H[2])
     copies = etl.commits.filter(F.col("commit_hash").isin(*shared)).withColumn(
@@ -145,7 +146,7 @@ def test_sqlite_sink_ignores_input_order(spark, etl, tmp_path, aqe):
     )
     assert copies.count() == len(shared)
     commits = etl.commits.unionByName(copies)
-    want = [tuple(r) for r in build_changed_files(commits).orderBy("id").collect()]
+    want = [tuple(r) for r in build_changed_files(_first_copy(commits)).orderBy("id").collect()]
 
     def files(con):
         return con.execute("SELECT id, commit_hash, file_path FROM changed_files ORDER BY id")
@@ -178,9 +179,9 @@ def test_fork_tables_equal_between_parquet_and_sqlite_sinks(spark, tmp_path):
     """A commit found in several repositories (a fork beside its origin)
     is one ``logs`` row in the Parquet tables, as in the SQLite sink:
     the copy of the repository whose name sorts first, an unlisted
-    repository (NULL id) included. ``run_pipeline``'s ``logs`` and
-    ``changed_files`` written with ``write_parquet`` equal the
-    ``write_sqlite`` tables row for row."""
+    repository (NULL id) included, and its files are stored once.
+    ``run_pipeline``'s ``logs`` and ``changed_files`` written with
+    ``write_parquet`` equal the ``write_sqlite`` tables row for row."""
     from git_log_to_sqlite_spark.etl.writers import write_parquet
 
     logs_dir = tmp_path / "gitlogs"
@@ -221,6 +222,8 @@ def test_fork_tables_equal_between_parquet_and_sqlite_sinks(spark, tmp_path):
     owner = {h: rid for h, *_, rid, _parent in want_logs}
     assert len(owner) == 10  # 8 alpha and 2 beta commits, each stored once
     assert owner[FX.H[1]] == 1 and owner[FX.H[10]] is None  # aa-fork; 0-unlisted
+    keys = [(h, path) for _id, h, path in want_files]
+    assert len(set(keys)) == len(keys)
 
 
 def test_repositories_table(etl):

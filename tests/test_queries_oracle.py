@@ -11,7 +11,7 @@ import pytest
 
 from git_log_to_sqlite_spark import plans
 
-from .oracle_harness import compare_counted, duck_connection
+from .oracle_harness import compare, compare_counted, duck_connection
 
 ORACLE_SPECS = [s for s in plans.REGISTRY.values() if s.oracle]
 ROWS_ONLY_SPECS = [s for s in plans.REGISTRY.values() if not s.oracle]
@@ -47,6 +47,27 @@ def test_query_matches_oracle(spec, spark, oracle_sf_dir, duck):
             f"{spec.name}: {n_rows} oracle rows; EMPTY_AT_SF001 lists the "
             "queries, and only those, whose oracle returns none"
         )
+
+
+def test_benchmark_oracle_call_returns_two_values(spark, oracle_sf_dir, duck):
+    """``perfbench/run.py`` checks each headline query in its warm-up
+    with ``ok, msg = compare(...)`` from this package's harness, over a
+    result it has already collected. The same call, on one headline
+    query, must still return exactly those two values."""
+    import ast
+    from types import SimpleNamespace
+
+    run_py = Path(__file__).resolve().parents[1] / "perfbench" / "run.py"
+    calls = [ast.unparse(node) for node in ast.walk(ast.parse(run_py.read_text()))
+             if isinstance(node, ast.Assign) and isinstance(node.value, ast.Call)
+             and ast.unparse(node.value.func) == "compare"]
+    assert calls == ["ok, msg = compare(result, con, plans.REGISTRY[name].oracle, name)"]
+    name = "agg_pricing_summary"
+    df = plans.REGISTRY[name].fn(spark, oracle_sf_dir)
+    rows = df.collect()
+    result = SimpleNamespace(columns=df.columns, dtypes=df.dtypes, collect=lambda: rows)
+    ok, msg = compare(result, duck, plans.REGISTRY[name].oracle, name)
+    assert ok, msg
 
 
 @pytest.mark.parametrize("spec", ROWS_ONLY_SPECS, ids=lambda s: s.name)

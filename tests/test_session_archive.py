@@ -1,13 +1,15 @@
 """The driver JVM's class-data-sharing archive (``session`` module
-docstring): the launch decision without a JVM, and one fresh session
-that must start, with the same answers, while a truncated part file
-waits in the cache."""
+docstring): the launch decision and the exit hook without a JVM, a
+writer session that leaves only the archive behind and a second one
+that maps it, and one fresh session that must start, with the same
+answers, while a truncated part file waits in the cache."""
 
 from __future__ import annotations
 
-import json
+import contextlib
 import logging
 import os
+import signal
 import sqlite3
 import subprocess
 import sys
@@ -30,7 +32,8 @@ CALLER_OPTIONS = "-Djava.io.tmpdir=/tmp/x -XX:-UsePerfData"
 @pytest.fixture
 def conf_dir(tmp_path, monkeypatch):
     """A template-only Spark conf directory and an empty cache, with
-    nothing else feeding the class path."""
+    nothing else feeding the class path. Exit hooks ``session`` would
+    register go to ``session.atexit.hooks`` instead."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf.template").write_text("# template\n")
@@ -38,6 +41,9 @@ def conf_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
     for var in session._CLASS_PATH_ENV:
         monkeypatch.delenv(var, raising=False)
+    hooks = []
+    monkeypatch.setattr(session, "atexit", SimpleNamespace(
+        hooks=hooks, register=lambda *args: hooks.append(args)))
     return conf
 
 
@@ -58,7 +64,7 @@ class _Builder:
     def __init__(self, conf: dict[str, str]):
         self.conf = dict(conf)
         self.launch_env: dict[str, str] = {}
-        self.jvm_properties = {"java.home": "/jdk", "java.class.path": "cp"}
+        self.jvm_properties: dict[str, str] = {}
 
     def config(self, key: str, value: str) -> _Builder:
         self.conf[key] = value
@@ -68,23 +74,42 @@ class _Builder:
         self.launch_env = dict(os.environ)
         system = SimpleNamespace(getProperty=self.jvm_properties.get,
                                  setProperty=self.jvm_properties.__setitem__)
-        lang = SimpleNamespace(System=system, ProcessHandle=SimpleNamespace(
-            current=lambda: SimpleNamespace(pid=lambda: 4242)))
         return SimpleNamespace(sparkContext=SimpleNamespace(
-            _jvm=SimpleNamespace(java=SimpleNamespace(lang=lang))))
+            _gateway=SimpleNamespace(proc="the JVM"),
+            _jvm=SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))))
+
+
+def _hold(lock: str) -> subprocess.Popen:
+    """A process that holds the ``flock`` on ``lock`` until it is killed."""
+    holder = subprocess.Popen(
+        (sys.executable, "-c", "import fcntl, os, sys, time\n"
+         "fcntl.flock(os.open(sys.argv[1], os.O_RDWR | os.O_CREAT), fcntl.LOCK_EX)\n"
+         "print(flush=True)\ntime.sleep(120)", lock),
+        stdout=subprocess.PIPE)
+    holder.stdout.readline()  # the lock is taken
+    return holder
+
+
+def _kill(proc: subprocess.Popen) -> None:
+    proc.kill()
+    proc.wait(timeout=30)
+    proc.stdout.close()
 
 
 def test_template_only_conf_writes_the_archive_and_restores_the_env(conf_dir):
     builder = _Builder({})
     session._launch(builder, {})
-    assert "-XX:ArchiveClassesAtExit=" in builder.conf[session._JAVA_OPTIONS]
     empty_conf = builder.launch_env["SPARK_CONF_DIR"]
     assert empty_conf == os.path.join(session._cache_root(), "conf") != str(conf_dir)
     assert os.listdir(empty_conf) == []
     assert os.environ["SPARK_CONF_DIR"] == str(conf_dir)
-    record, = Path(_cache()).glob("*.json")
-    assert json.loads(record.read_text()) == {
-        "pid": 4242, "java": "/jdk/bin/java", "class_path": "cp"}
+    (hook, proc, stem), = session.atexit.hooks
+    assert (hook, proc) == (session._promote_at_exit, "the JVM")
+    assert f"-XX:ArchiveClassesAtExit={stem}.part" in builder.conf[session._JAVA_OPTIONS]
+    assert sorted(os.listdir(_cache())) == [f"{os.path.basename(stem)}.{ext}"
+                                            for ext in ("lock", "part")]
+    assert os.path.getsize(f"{stem}.part") == 0  # the writer's marker
+    assert session._held(f"{stem}.lock")
 
 
 def test_real_spark_defaults_gives_no_archive(conf_dir):
@@ -105,8 +130,8 @@ def test_unwritable_cache_gives_no_archive(conf_dir, monkeypatch, tmp_path):
     # a path below a regular file: no directory can be made there, even as root
     (tmp_path / "file").write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file" / "cache"))
-    options, record, reason = session._archive_launch({})
-    assert options == "" and record is None
+    options, stem, reason = session._archive_launch({})
+    assert options == "" and stem is None
     assert "not writable" in reason
 
 
@@ -121,36 +146,40 @@ def test_archive_whose_size_changed_is_deleted_not_mapped(conf_dir):
 
 
 def test_part_file_is_not_promoted_while_its_writer_runs(conf_dir):
+    """A part file whose lock is held belongs to a live writer: a launch
+    keeps it and starts without the archive. Once the writer is killed
+    the kernel frees its lock, and the next launch deletes its files and
+    writes the archive itself."""
     cache = _cache()
-    token = "0123456789abcdef"
-    part = os.path.join(cache, f"{token}.part")
-    Path(part).write_bytes(b"not an archive")
-    writer = subprocess.Popen(
-        (sys.executable, "-c", "import time; print(flush=True); time.sleep(120)", token),
-        stdout=subprocess.PIPE)
+    stem = os.path.join(cache, "0123456789abcdef")
+    Path(f"{stem}.part").write_bytes(b"")
+    Path(f"{stem}.log").write_text("")
+    writer = _hold(f"{stem}.lock")
     try:
-        writer.stdout.readline()  # running, its command line set
-        meta = {"pid": writer.pid, "java": "java", "class_path": "."}
-        Path(cache, f"{token}.json").write_text(json.dumps(meta))
-        session._archive_launch({})
-        assert os.path.exists(part)
-        assert not [f for f in os.listdir(cache) if f.startswith("archive-")]
+        builder = _Builder({})
+        session._launch(builder, {})
+        assert builder.conf == {} and session.atexit.hooks == []
+        assert builder.jvm_properties[session._OFF_PROPERTY] == (
+            "another session is writing the archive")
+        assert os.path.exists(f"{stem}.part") and session._held(f"{stem}.lock")
     finally:
-        writer.kill()
-        writer.wait(timeout=30)
-        writer.stdout.close()
-    # once the writer has exited, the trial rejects the garbage
-    session._archive_launch({})
-    assert not os.path.exists(part)
-    assert not [f for f in os.listdir(cache) if f.startswith("archive-")]
+        _kill(writer)
+    options, new, _ = session._archive_launch({})
+    assert f"-XX:ArchiveClassesAtExit={new}.part" in options
+    assert not [f for f in os.listdir(cache) if f.startswith("0123456789abcdef")]
 
 
-def test_a_writer_of_another_user_counts_as_running(monkeypatch):
-    def kill(pid, sig):
-        raise PermissionError(1, "Operation not permitted")
-
-    monkeypatch.setattr(session.os, "kill", kill)
-    assert session._alive(1, "0123456789abcdef")
+def test_files_of_a_dead_session_are_deleted(conf_dir):
+    """A session whose lock is free has exited: every ``<token>.*`` of
+    it goes, a lock file missing or left behind alike."""
+    cache = _cache()
+    Path(cache, "aaaaaaaaaaaaaaaa.part").write_bytes(b"cut short")
+    Path(cache, "aaaaaaaaaaaaaaaa.lock").write_text("")
+    Path(cache, "bbbbbbbbbbbbbbbb.log").write_text("")
+    Path(cache, "cccccccccccccccc.json").write_text("{}")  # an older record
+    _, stem, _ = session._archive_launch({})
+    token = os.path.basename(stem)
+    assert sorted(os.listdir(cache)) == [f"{token}.lock", f"{token}.part"]
 
 
 def test_other_installs_are_deleted_unless_a_session_runs(conf_dir):
@@ -159,16 +188,56 @@ def test_other_installs_are_deleted_unless_a_session_runs(conf_dir):
     stale = Path(root, "00000000deadbeef")
     stale.mkdir()
     Path(stale, "archive-3.jsa").write_bytes(b"old")
-    Path(stale, "aaaaaaaaaaaaaaaa.json").write_text(json.dumps({"pid": 2 ** 22 + 1}))
+    Path(stale, "aaaaaaaaaaaaaaaa.lock").write_text("")
     busy = Path(root, "11111111deadbeef")
     busy.mkdir()
-    # a launch that has not recorded its JVM yet
-    Path(busy, "bbbbbbbbbbbbbbbb.json").write_text(json.dumps({"started": 0}))
     other = Path(root, "notes")
     other.mkdir()
-    session._archive_launch({})
+    holder = _hold(str(busy / "bbbbbbbbbbbbbbbb.lock"))
+    try:
+        session._archive_launch({})
+    finally:
+        _kill(holder)
     assert not stale.exists()
     assert busy.exists() and other.exists() and os.path.isdir(cache)
+
+
+@pytest.mark.parametrize("code, log, archive, promoted", [
+    (0, "[info][cds,dynamic] Written dynamic archive 0x8 - 0x9\n", False, True),
+    (0, "[info][cds] no dump\n", False, False),
+    (1, "[info][cds,dynamic] Written dynamic archive 0x8 - 0x9\n", False, False),
+    (0, "[info][cds,dynamic] Written dynamic archive 0x8 - 0x9\n", True, False),
+])
+def test_exit_hook_promotes_only_a_written_archive(conf_dir, code, log, archive, promoted):
+    """The hook renames the part only when the JVM exited 0, its log
+    reports the archive written and no validated archive exists; it
+    always removes the session's part, log and lock."""
+    cache = _cache()
+    stem = os.path.join(cache, "0123456789abcdef")
+    Path(f"{stem}.part").write_bytes(b"x" * 7)
+    Path(f"{stem}.log").write_text(log)
+    Path(f"{stem}.lock").write_text("")
+    if archive:
+        Path(cache, "archive-3.jsa").write_bytes(b"old")
+    stdin = open(os.devnull, "wb")
+    proc = SimpleNamespace(stdin=stdin, wait=lambda timeout: code)
+    session._promote_at_exit(proc, stem)
+    assert stdin.closed
+    want = ["archive-7.jsa"] if promoted else ["archive-3.jsa"] if archive else []
+    assert sorted(os.listdir(cache)) == want
+
+
+def test_exit_hook_kills_a_jvm_that_outlives_the_bound(conf_dir, monkeypatch):
+    cache = _cache()
+    stem = os.path.join(cache, "0123456789abcdef")
+    Path(f"{stem}.part").write_bytes(b"x")
+    Path(f"{stem}.log").write_text("Written dynamic archive\n")
+    monkeypatch.setattr(session, "_DUMP_TIMEOUT_S", 0.2)
+    proc = subprocess.Popen((sys.executable, "-c", "import time; time.sleep(120)"),
+                            stdin=subprocess.PIPE)
+    session._promote_at_exit(proc, stem)
+    assert proc.returncode == -signal.SIGKILL
+    assert os.listdir(cache) == []
 
 
 def test_caller_java_options_survive_next_to_the_archive_flag(conf_dir):
@@ -243,6 +312,41 @@ def _tables(db: str) -> dict[str, list]:
         con.close()
 
 
+def _python(script: str, *args: str) -> subprocess.CompletedProcess:
+    """``script`` run to a zero exit in a fresh Python process, with no
+    gateway to join and a small driver heap."""
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    proc = subprocess.run((sys.executable, "-c", script, *args), capture_output=True,
+                          text=True, timeout=300, cwd=REPO_ROOT, env=env)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return proc
+
+
+_SESSION = """
+from git_log_to_sqlite_spark.session import get_spark, jvm_archive_state
+spark = get_spark("archive-lifecycle", cpus=1)
+assert spark.range(10).count() == 10
+print(jvm_archive_state(spark), flush=True)
+"""
+
+
+def test_writer_session_leaves_the_archive_and_the_next_maps_it(conf_dir):
+    """A session that writes the archive and exits normally returns
+    only after its JVM has dumped and exited: the cache then holds the
+    promoted archive and nothing else, and no process names the cache.
+    The next session maps it."""
+    cache = _cache()
+    assert _python(_SESSION).stdout.splitlines()[-1] == "writing"
+    archive, = os.listdir(cache)
+    assert archive == f"archive-{os.path.getsize(os.path.join(cache, archive))}.jsa"
+    root = session._cache_root().encode()
+    for cmdline in Path("/proc").glob("[0-9]*/cmdline"):
+        with contextlib.suppress(OSError):
+            assert root not in cmdline.read_bytes(), cmdline
+    assert _python(_SESSION).stdout.splitlines()[-1] == "mapped"
+
+
 # The fresh session ends its own JVM before it can write an archive
 # into the test's temporary cache.
 _FRESH_SESSION = """
@@ -260,8 +364,8 @@ os._exit(0)
 def test_truncated_part_file_is_rejected_and_the_session_starts(
         spark, conf_dir, tmp_path):
     """A part file cut short (its JVM killed mid-dump) crashes any JVM
-    that maps it. The trial must reject and delete it, and a fresh
-    session must start and load the same tables as this one."""
+    that maps it. Its lock is free, so a launch must delete it, and a
+    fresh session must start and load the same tables as this one."""
     cache = _cache()
     empty_conf = os.path.join(session._cache_root(), "conf")
     os.makedirs(empty_conf, exist_ok=True)
@@ -276,16 +380,10 @@ def test_truncated_part_file_is_rejected_and_the_session_starts(
     data = Path(part).read_bytes()
     os.chmod(part, 0o644)
     Path(part).write_bytes(data[: len(data) // 2])
-    meta = {"pid": writer.pid, "java": java, "class_path": empty_conf + os.sep}
-    Path(cache, "0123456789abcdef.json").write_text(json.dumps(meta))
+    Path(cache, "0123456789abcdef.lock").write_text("")
 
     logs_dir = str(FX.write_fixture_logs(tmp_path / "logs"))
-    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
-    env.pop("PYSPARK_GATEWAY_PORT", None)
-    proc = subprocess.run(
-        (sys.executable, "-c", _FRESH_SESSION, logs_dir, str(tmp_path / "fresh.db")),
-        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT, env=env)
-    assert proc.returncode == 0, proc.stderr[-2000:]
+    proc = _python(_FRESH_SESSION, logs_dir, str(tmp_path / "fresh.db"))
     assert proc.stdout.splitlines()[-1] == "writing"
     assert not os.path.exists(part)
     assert not [f for f in os.listdir(cache) if f.startswith("archive-")]
