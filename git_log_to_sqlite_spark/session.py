@@ -32,7 +32,7 @@ in ``$XDG_CACHE_HOME/git_log_to_sqlite_spark/<key>/`` (default
   only when the JVM exited 0, its ``cds`` log reports the archive
   written and no validated archive exists yet; otherwise it deletes
   the part. So the first run of an install returns after the dump
-  (7-13 s, README "Cold start"), and no JVM outlives it;
+  (6-13 s, README "Cold start"), and no JVM outlives it;
 * none exists, but a live session writes one: the JVM launches
   without the archive.
 

@@ -1,4 +1,4 @@
-"""Answers do not depend on the runtime plan choices (ROADMAP item 1):
+"""Answers do not depend on the runtime plan choices:
 the 15 headline queries and the 11 consumers of the skew valve return
 the same sorted rows under AQE off, no broadcast joins, and a fixed 1
 or 7 shuffle partitions with coalescing off as under the default

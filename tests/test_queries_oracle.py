@@ -51,8 +51,8 @@ def test_query_matches_oracle(spec, spark, oracle_sf_dir, duck):
 
 def test_benchmark_oracle_call_returns_two_values(spark, oracle_sf_dir, duck):
     """``perfbench/run.py`` checks each headline query in its warm-up
-    with ``ok, msg = compare(...)`` from this package's harness, over a
-    result it has already collected. The same call, on one headline
+    with ``ok, msg = compare(...)`` from ``tests.oracle_harness``, over
+    a result it has already collected. The same call, on one headline
     query, must still return exactly those two values."""
     import ast
     from types import SimpleNamespace
