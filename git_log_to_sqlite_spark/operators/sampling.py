@@ -117,9 +117,6 @@ def domain_mix(
     spark = df.sparkSession
     from ..session import local_frame
 
-    # LocalRelation: the rates dim is a broadcast build side, and a
-    # tuple-list frame pays a Python-worker round-trip per execution
-    # for a handful of rows (local_frame docstring has the numbers)
     rates_df = local_frame(
         spark, sorted(rates.items()), f"{domain_col} string, _rate double"
     )

@@ -20,6 +20,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.schema_cache import read_parquet_cached
 
 if TYPE_CHECKING:
@@ -360,29 +361,10 @@ def semantic_dedup(
 
 def _centroids_frame(spark, centroids: "list[list[float]]") -> DataFrame:
     """The k-row ``(cell, centroid)`` model-state frame (the one
-    :meth:`IvfIndex.build` persists), built via the ARROW local path:
-    a pandas input converts driver-side to Arrow batches and lands as
-    a JVM LocalRelation — no pickled partitions and no Python workers
-    at execution. The tuple-list ``createDataFrame`` form spreads the
-    rows over defaultParallelism pickled partitions instead, and its
-    write measured 0.57–1.7 s against 0.25–0.31 s here for the same
-    8 rows (value-identical output; BASELINE.md round-13 notes) —
-    pure Python-worker round-trip cost for a k-row table.
-    ``repartition(1)``, NOT ``coalesce(1)``: one output file for the
-    model state, and on a LocalRelation the shuffle is a trivial
-    JVM move of k rows (the serial Python-worker deserialize trap
-    coalesce used to hit is gone with the workers themselves)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "cell": range(len(centroids)),
-            "centroid": [[float(x) for x in c] for c in centroids],
-        }
-    )
-    return spark.createDataFrame(
-        pdf, "cell int, centroid array<double>"
-    ).repartition(1)
+    :meth:`IvfIndex.build` persists), a ``session.local_frame`` in one
+    partition, so the model state writes one file."""
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+    return local_frame(spark, rows, "cell int, centroid array<double>").repartition(1)
 
 
 def _observe_cell_stats(ranked: DataFrame, observation: "Observation") -> None:

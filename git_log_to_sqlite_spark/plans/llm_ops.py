@@ -11,7 +11,7 @@ LSH implementations and a deliberate design choice here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import asof as asof_ops
@@ -1581,6 +1581,16 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(d, "doc_id", "text", chunk_size=32, stride=24)
 
 
+def _observe(df: DataFrame, telemetry: dict | None, name: str, *metrics) -> DataFrame:
+    """``df`` with ``metrics`` observed as ``telemetry[name]``, a new
+    ``pyspark.sql.Observation``; ``df`` itself when ``telemetry`` is None."""
+    if telemetry is None:
+        return df
+    obs = Observation(name)
+    telemetry[name] = obs
+    return df.observe(obs, *metrics)
+
+
 @register(
     "pipeline_curate_corpus",
     oracle="""
@@ -1639,16 +1649,7 @@ def curate_corpus(d: DataFrame, telemetry: dict | None = None) -> DataFrame:
     both composite funnels at the bench SF. Keep new funnel metrics on
     the spine; anything observed off-spine must use the eager pattern.
     """
-    from pyspark.sql import Observation
-
-    def _observe(df: DataFrame, name: str, *metrics) -> DataFrame:
-        if telemetry is None:
-            return df
-        obs = Observation(name)
-        telemetry[name] = obs
-        return df.observe(obs, *metrics)
-
-    d = _observe(d, "input", F.count(F.lit(1)).alias("rows"))
+    d = _observe(d, telemetry, "input", F.count(F.lit(1)).alias("rows"))
     toks = F.size(F.split(F.col("text"), " "))
     kept = d.filter(
         (F.col("lang") == "en")
@@ -1657,6 +1658,7 @@ def curate_corpus(d: DataFrame, telemetry: dict | None = None) -> DataFrame:
     ).select(F.md5("text").alias("_fp"), "doc_id", toks.alias("n_tokens"))
     kept = _observe(
         kept,
+        telemetry,
         "post_filter",
         F.count(F.lit(1)).alias("rows"),
         F.sum("n_tokens").alias("tokens"),
@@ -1683,6 +1685,7 @@ def curate_corpus(d: DataFrame, telemetry: dict | None = None) -> DataFrame:
     # over its child — observed 2x counts).
     return _observe(
         out,
+        telemetry,
         "post_dedup",
         F.count(F.lit(1)).alias("rows"),
         F.sum("n_tokens").alias("tokens"),
@@ -2104,18 +2107,9 @@ def pretrain_corpus(
     is exact), and it appears in the output next to ``n_chars``. At
     the default (``None``) the plan is byte-identical to the pre-knob
     form — the ``pipeline_pretrain_corpus`` gate row is unchanged."""
-    from pyspark.sql import Observation
-
     from ..operators.dedup import _spread, exploded_shingles
     from ..operators.sampling import token_budget_sample
     from ..operators.text import repetition_gate
-
-    def _observe(df: DataFrame, name: str, *metrics) -> DataFrame:
-        if telemetry is None:
-            return df
-        obs = Observation(name)
-        telemetry[name] = obs
-        return df.observe(obs, *metrics)
 
     # widen a narrow scan BEFORE the compute-heavy stages: the
     # repetition gate's per-doc fold and the 4-gram explode otherwise
@@ -2147,11 +2141,11 @@ def pretrain_corpus(
     # PRE-observe frame so the "input"/"post_quality" CollectMetrics
     # nodes sit on the spine only, exactly as before the round-17
     # gram-branch change.
-    spine = _observe(corpus, "input", F.count(F.lit(1)).alias("rows"))
+    spine = _observe(corpus, telemetry, "input", F.count(F.lit(1)).alias("rows"))
     quality = spine.filter(
         repetition_gate(F.col("text")) & F.col("n_chars").between(50, 20000)
     ).select(*carried, "text")
-    quality = _observe(quality, "post_quality", F.count(F.lit(1)).alias("rows"))
+    quality = _observe(quality, telemetry, "post_quality", F.count(F.lit(1)).alias("rows"))
 
     gram = exploded_shingles("text", 4)
     ev = benchmark.select(gram.alias("gram")).distinct()
@@ -2184,7 +2178,7 @@ def pretrain_corpus(
         .distinct()
     )
     clean = quality.join(hit_ids, "doc_id", "left_anti")
-    clean = _observe(clean, "post_decontam", F.count(F.lit(1)).alias("rows"))
+    clean = _observe(clean, telemetry, "post_decontam", F.count(F.lit(1)).alias("rows"))
 
     surv = (
         clean.groupBy(F.md5("text").alias("_fp"))
@@ -2210,4 +2204,4 @@ def pretrain_corpus(
         *carried,
         F.floor((F.col("cum") - 1) / shard_chars).cast("int").alias("shard_id"),
     )
-    return _observe(out, "post_mix", F.count(F.lit(1)).alias("rows"))
+    return _observe(out, telemetry, "post_mix", F.count(F.lit(1)).alias("rows"))

@@ -574,9 +574,6 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part")
     from ..session import local_frame
 
-    # LocalRelation (round 14): the 4-row broadcast build side of a
-    # tuple-list frame pays a Python-worker round-trip per execution —
-    # measured 0.401 s vs 0.212 s min-of-5 at sf0.01 (BASELINE.md)
     bands = local_frame(
         p.sparkSession,
         [

@@ -26,15 +26,17 @@ in ``$XDG_CACHE_HOME/git_log_to_sqlite_spark/<key>/`` (default
   the JVM with SIGBUS;
 * none exists, and no live session writes one: this session writes
   it. Its JVM dumps ``<token>.part`` when it exits
-  (``-XX:ArchiveClassesAtExit``), and an ``atexit`` hook of the
-  launching process closes the JVM's stdin, waits for it (at most
-  ``_DUMP_TIMEOUT_S``) and renames the part to ``archive-<size>.jsa``
-  only when the JVM exited 0, its ``cds`` log reports the archive
-  written and no validated archive exists yet; otherwise it deletes
-  the part. So the first run of an install returns after the dump
-  (6-13 s, README "Cold start"), and no JVM outlives it;
+  (``-XX:ArchiveClassesAtExit``), and the exit hook renames the part
+  to ``archive-<size>.jsa`` only when the JVM exited 0, its ``cds``
+  log reports the archive written and no validated archive exists
+  yet; otherwise it deletes the part. So the first run of an install
+  returns after the dump (6-13 s, README "Cold start");
 * none exists, but a live session writes one: the JVM launches
   without the archive.
+
+Every driver JVM ``get_spark`` launches, archive or not, gets an
+``atexit`` hook that ends it and waits for its exit, so no JVM
+outlives the process, and then deletes the session's ``<token>.*``.
 
 Each launch holds an exclusive ``flock`` on ``<token>.lock`` for the
 life of its process; the kernel drops it when the process dies, even
@@ -87,8 +89,8 @@ _CLASS_PATH_ENV = (
 )
 _JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 _CDS_LOG = "-Xlog:cds*=info,class+path=info:file="
-# The longest a writer's exit waits for its JVM to dump the archive
-# and exit; the JVM is then killed and its part deleted.
+# The longest the exit hook waits for the driver JVM to exit (a
+# writer's dumps the archive first); the JVM is then killed.
 _DUMP_TIMEOUT_S = 120
 # The JVM system property that holds why a JVM launched without the
 # archive; ``jvm_archive_state`` reports it.
@@ -212,10 +214,10 @@ def _archive_launch(caller_conf: dict[str, str]) -> tuple[str, str | None, str]:
     """The archive decision for a driver JVM launch with the caller's
     Spark conf ``caller_conf``: the options to append to its
     ``spark.driver.extraJavaOptions``, the stem ``<cache>/<token>`` of
-    the part file its JVM writes (None when it maps the archive), and
-    why the archive is off (options "" and no stem). Sweeps the cache
-    directory and takes the session's lock, held for the life of the
-    process."""
+    the session's files (its lock and log, and the part file a writer's
+    JVM dumps), and why the archive is off (options "" and no stem).
+    Sweeps the cache directory and takes the session's lock, held for
+    the life of the process."""
     spark_home = _spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     reason = _archive_blocker(caller_conf, conf_dir)
@@ -251,16 +253,23 @@ def _archive_launch(caller_conf: dict[str, str]) -> tuple[str, str | None, str]:
     flag = (f"-XX:SharedArchiveFile={archive}" if archive else
             f"-XX:ArchiveClassesAtExit={stem}.part")
     options = f"-Xlog:cds*=off,class+path=off {_CDS_LOG}{stem}.log::filecount=0 {flag}"
-    return options, None if archive else stem, ""
+    return options, stem, ""
 
 
-def _promote_at_exit(proc, stem: str) -> None:
-    """The exit hook of a session whose driver JVM ``proc`` writes
-    ``<stem>.part``: close the JVM's stdin (the gateway exits on EOF),
-    wait for it to dump and exit, and rename the part to
-    ``archive-<size>.jsa`` when the JVM exited 0, its ``cds`` log reports
-    the archive written and no validated archive exists yet. Otherwise
-    the part is deleted. The session's log and lock go either way."""
+def _end_jvm_at_exit(gateway, stem: str | None, accumulators) -> None:
+    """The exit hook of a session whose driver JVM (``gateway.proc``)
+    this process launched. It shuts the py4j ``gateway`` down, so no
+    late command (a garbage-collected object's release) reaches a dying
+    JVM, silences the ``accumulators`` server, whose connection the
+    JVM's exit ends, closes the JVM's stdin (it exits on EOF) and waits
+    for it, killing it after ``_DUMP_TIMEOUT_S``. ``stem`` (None with
+    the archive off) names the session's files: a ``<stem>.part`` is
+    renamed to ``archive-<size>.jsa`` when the JVM exited 0, its
+    ``cds`` log reports the archive written and no validated archive
+    exists yet, and deleted otherwise; the log and lock go either way."""
+    gateway.shutdown()
+    accumulators.handle_error = lambda request, client_address: None
+    proc = gateway.proc
     with contextlib.suppress(OSError):
         proc.stdin.close()
     try:
@@ -268,6 +277,8 @@ def _promote_at_exit(proc, stem: str) -> None:
     except TimeoutExpired:
         proc.kill()
         code = proc.wait()
+    if stem is None:
+        return
     cache, part, log = os.path.dirname(stem), f"{stem}.part", f"{stem}.log"
     try:
         with open(log, "rb") as fh:
@@ -285,26 +296,26 @@ def _launch(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession
     JVM: with the archive options appended to the caller's Java options
     and ``SPARK_CONF_DIR`` at the empty cache directory (restored
     afterwards), unless the archive is off: then the JVM keeps the
-    reason as a system property. A JVM that writes the archive gets the
-    exit hook that promotes it."""
+    reason as a system property. Either way the JVM gets the exit hook
+    that ends it."""
     options, stem, reason = _archive_launch(conf)
     if not options:
         spark = builder.getOrCreate()
         spark.sparkContext._jvm.java.lang.System.setProperty(_OFF_PROPERTY, reason)
-        return spark
-    caller = conf.get(_JAVA_OPTIONS, "").strip()
-    builder = builder.config(_JAVA_OPTIONS, f"{caller} {options}".strip())
-    old = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = os.path.join(_cache_root(), "conf")
-    try:
-        spark = builder.getOrCreate()
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_CONF_DIR", None)
-        else:
-            os.environ["SPARK_CONF_DIR"] = old
-    if stem is not None:
-        atexit.register(_promote_at_exit, spark.sparkContext._gateway.proc, stem)
+    else:
+        caller = conf.get(_JAVA_OPTIONS, "").strip()
+        builder = builder.config(_JAVA_OPTIONS, f"{caller} {options}".strip())
+        old = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = os.path.join(_cache_root(), "conf")
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if old is None:
+                os.environ.pop("SPARK_CONF_DIR", None)
+            else:
+                os.environ["SPARK_CONF_DIR"] = old
+    sc = spark.sparkContext
+    atexit.register(_end_jvm_at_exit, sc._gateway, stem, sc._accumulatorServer)
     return spark
 
 
@@ -413,56 +424,42 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows, schema):
-    """Bounded driver-side state as a JVM-parsed ``LocalRelation``: a
-    SQL ``VALUES`` inline table with every value cast to its field type.
+    """Bounded driver-side state as a ``LocalRelation``: the rows go to
+    the JVM as one Arrow table (``createDataFrame(pyarrow.Table,
+    schema)``).
 
-    The frame executes with no pickled partitions and no Python
-    workers, and building it needs neither pandas nor Arrow. The
-    tuple-list ``createDataFrame`` form instead spreads the rows over
-    defaultParallelism pickled partitions, and every execution that
-    consumes them (a broadcast build, a model-state write) pays a
-    Python-worker round trip for a handful of rows (BASELINE.md has
-    the measurements). Use it for every small in-process frame on a
-    timed, gated or user-facing path — dims, model state, the CLI's
-    dump results; plain tuple-list remains fine for test fixtures.
+    The frame executes with no pickled partitions, no Python workers
+    and no Spark job, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, where each
+    execution over a tuple-list frame pays a Python-worker round trip
+    (BASELINE.md). Use it for every small in-process frame on a timed,
+    gated or user-facing path; plain tuple-list is fine for test
+    fixtures.
 
     ``rows`` is an iterable of tuples in ``schema`` column order;
     ``schema`` is a DDL string or a StructType. The result has exactly
-    that schema, nullability included. Supported field types: string,
-    integral, float and double (NaN and ±inf included), and maps and
-    structs of these (a struct value is a tuple, a ``Row`` or a dict);
-    other types raise ``TypeError``. Map values always come back
-    nullable. A None in a non-nullable field raises ``ValueError``, as
-    ``createDataFrame`` does. Zero rows fall back to the tuple-list
-    form, which has no per-row cost to save.
+    that schema, nullability included. Field types are those Arrow
+    converts from Python values: strings, integral and floating types
+    (NaN and ±inf included; ints convert to a floating field), and
+    arrays, maps and structs of these. A struct value is a tuple, a
+    ``Row`` or a dict, one form per column. A None in a non-nullable
+    field raises ``ValueError``, as ``createDataFrame`` does.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    rows = [tuple(r) for r in rows]
-    if not rows:
-        return spark.createDataFrame([], schema)
     fields = schema.fields
-    values = []
-    for i, row in enumerate(rows):
-        cells = []
+    rows = [tuple(r) for r in rows]
+    for row in rows:
         for field, value in zip(fields, row, strict=True):
             if value is None and not field.nullable:
                 raise ValueError(f"field {field.name!r} is not nullable, got None")
-            cell = _sql_literal(value, field.dataType)
-            if i == 0 and field.nullable:
-                # An inline-table column is nullable when one of its
-                # expressions is: this one is, and it evaluates to ``cell``.
-                cell = f"IF(TRUE, {cell}, NULL)"
-            cells.append(cell)
-        values.append(f"({', '.join(cells)})")
-    names = ", ".join(_sql_name(f.name) for f in fields)
-    return spark.sql(f"VALUES {', '.join(values)} AS t({names})")
-
-
-def _sql_name(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+    columns = [[row[i] for row in rows] for i in range(len(fields))]
+    table = pa.Table.from_arrays(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def map_lookup(mapping: dict[str, str], key: str) -> str:
@@ -485,51 +482,3 @@ def map_lookup(mapping: dict[str, str], key: str) -> str:
 def _sql_string(text: str) -> str:
     # escaped for the default spark.sql.parser.escapedStringLiterals=false
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_type(dtype) -> str:
-    """``dtype`` as Spark SQL type text, nested field nullability kept."""
-    from pyspark.sql import types as T
-
-    if isinstance(dtype, T.StructType):
-        inner = ", ".join(
-            f"{_sql_name(f.name)}: {_sql_type(f.dataType)}"
-            + ("" if f.nullable else " NOT NULL")
-            for f in dtype.fields
-        )
-        return f"STRUCT<{inner}>"
-    if isinstance(dtype, T.MapType):
-        return f"MAP<{_sql_type(dtype.keyType)}, {_sql_type(dtype.valueType)}>"
-    return dtype.simpleString()
-
-
-def _sql_literal(value, dtype) -> str:
-    """``value`` as a Spark SQL expression of type ``dtype``."""
-    from pyspark.sql import types as T
-
-    sql_type = _sql_type(dtype)
-    if value is None:
-        return f"CAST(NULL AS {sql_type})"
-    if isinstance(dtype, T.StringType):
-        return _sql_string(str(value))
-    if isinstance(dtype, T.IntegralType):
-        return f"CAST({int(value)} AS {sql_type})"
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        # str() round-trips a float, and its 'nan', 'inf' and '-inf'
-        # are spellings Spark's string-to-double cast accepts
-        return f"CAST('{value}' AS {sql_type})"
-    if isinstance(dtype, T.MapType):
-        items = ", ".join(
-            f"{_sql_literal(k, dtype.keyType)}, {_sql_literal(v, dtype.valueType)}"
-            for k, v in value.items()
-        )
-        return f"CAST(map({items}) AS {sql_type})"
-    if isinstance(dtype, T.StructType):
-        if isinstance(value, dict):
-            value = [value.get(f.name) for f in dtype.fields]
-        items = ", ".join(
-            f"{_sql_string(f.name)}, {_sql_literal(v, f.dataType)}"
-            for f, v in zip(dtype.fields, value, strict=True)
-        )
-        return f"CAST(named_struct({items}) AS {sql_type})"
-    raise TypeError(f"local_frame does not support {dtype.simpleString()} fields")

@@ -75,7 +75,7 @@ class _Builder:
         system = SimpleNamespace(getProperty=self.jvm_properties.get,
                                  setProperty=self.jvm_properties.__setitem__)
         return SimpleNamespace(sparkContext=SimpleNamespace(
-            _gateway=SimpleNamespace(proc="the JVM"),
+            _gateway="the gateway", _accumulatorServer="the server",
             _jvm=SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))))
 
 
@@ -88,6 +88,15 @@ def _hold(lock: str) -> subprocess.Popen:
         stdout=subprocess.PIPE)
     holder.stdout.readline()  # the lock is taken
     return holder
+
+
+def _end_jvm(proc, stem: str) -> SimpleNamespace:
+    """Run the exit hook for a stand-in gateway of ``proc``; returns
+    the gateway, whose ``shut`` says whether it was shut down."""
+    gateway = SimpleNamespace(proc=proc, shut=False)
+    gateway.shutdown = lambda: setattr(gateway, "shut", True)
+    session._end_jvm_at_exit(gateway, stem, SimpleNamespace())
+    return gateway
 
 
 def _kill(proc: subprocess.Popen) -> None:
@@ -103,8 +112,8 @@ def test_template_only_conf_writes_the_archive_and_restores_the_env(conf_dir):
     assert empty_conf == os.path.join(session._cache_root(), "conf") != str(conf_dir)
     assert os.listdir(empty_conf) == []
     assert os.environ["SPARK_CONF_DIR"] == str(conf_dir)
-    (hook, proc, stem), = session.atexit.hooks
-    assert (hook, proc) == (session._promote_at_exit, "the JVM")
+    (hook, gateway, stem, server), = session.atexit.hooks
+    assert (hook, gateway, server) == (session._end_jvm_at_exit, "the gateway", "the server")
     assert f"-XX:ArchiveClassesAtExit={stem}.part" in builder.conf[session._JAVA_OPTIONS]
     assert sorted(os.listdir(_cache())) == [f"{os.path.basename(stem)}.{ext}"
                                             for ext in ("lock", "part")]
@@ -158,7 +167,9 @@ def test_part_file_is_not_promoted_while_its_writer_runs(conf_dir):
     try:
         builder = _Builder({})
         session._launch(builder, {})
-        assert builder.conf == {} and session.atexit.hooks == []
+        assert builder.conf == {}
+        assert session.atexit.hooks == [
+            (session._end_jvm_at_exit, "the gateway", None, "the server")]
         assert builder.jvm_properties[session._OFF_PROPERTY] == (
             "another session is writing the archive")
         assert os.path.exists(f"{stem}.part") and session._held(f"{stem}.lock")
@@ -221,7 +232,7 @@ def test_exit_hook_promotes_only_a_written_archive(conf_dir, code, log, archive,
         Path(cache, "archive-3.jsa").write_bytes(b"old")
     stdin = open(os.devnull, "wb")
     proc = SimpleNamespace(stdin=stdin, wait=lambda timeout: code)
-    session._promote_at_exit(proc, stem)
+    assert _end_jvm(proc, stem).shut
     assert stdin.closed
     want = ["archive-7.jsa"] if promoted else ["archive-3.jsa"] if archive else []
     assert sorted(os.listdir(cache)) == want
@@ -235,7 +246,7 @@ def test_exit_hook_kills_a_jvm_that_outlives_the_bound(conf_dir, monkeypatch):
     monkeypatch.setattr(session, "_DUMP_TIMEOUT_S", 0.2)
     proc = subprocess.Popen((sys.executable, "-c", "import time; time.sleep(120)"),
                             stdin=subprocess.PIPE)
-    session._promote_at_exit(proc, stem)
+    _end_jvm(proc, stem)
     assert proc.returncode == -signal.SIGKILL
     assert os.listdir(cache) == []
 
@@ -323,28 +334,41 @@ def _python(script: str, *args: str) -> subprocess.CompletedProcess:
     return proc
 
 
+# The Python-worker job opens the JVM's connection to the accumulator
+# server, which the JVM's exit then ends.
 _SESSION = """
 from git_log_to_sqlite_spark.session import get_spark, jvm_archive_state
 spark = get_spark("archive-lifecycle", cpus=1)
 assert spark.range(10).count() == 10
+assert spark.sparkContext.parallelize(range(10), 1).map(lambda x: x).count() == 10
 print(jvm_archive_state(spark), flush=True)
 """
 
 
-def test_writer_session_leaves_the_archive_and_the_next_maps_it(conf_dir):
-    """A session that writes the archive and exits normally returns
-    only after its JVM has dumped and exited: the cache then holds the
-    promoted archive and nothing else, and no process names the cache.
-    The next session maps it."""
-    cache = _cache()
-    assert _python(_SESSION).stdout.splitlines()[-1] == "writing"
+def _assert_only_the_archive_is_left(cache: str) -> None:
+    """The cache holds the promoted archive and nothing else, and no
+    process (no driver JVM) names the cache on its command line."""
     archive, = os.listdir(cache)
     assert archive == f"archive-{os.path.getsize(os.path.join(cache, archive))}.jsa"
     root = session._cache_root().encode()
     for cmdline in Path("/proc").glob("[0-9]*/cmdline"):
         with contextlib.suppress(OSError):
             assert root not in cmdline.read_bytes(), cmdline
-    assert _python(_SESSION).stdout.splitlines()[-1] == "mapped"
+
+
+def test_writer_session_leaves_the_archive_and_the_next_maps_it(conf_dir):
+    """A session that writes the archive and exits normally returns
+    only after its JVM has dumped and exited: the cache then holds the
+    promoted archive and nothing else, and no process names the cache.
+    The next session maps it, and it too returns only after its JVM
+    has exited, leaving only the archive. Neither prints an error as
+    its JVM ends."""
+    cache = _cache()
+    for state in ("writing", "mapped"):
+        proc = _python(_SESSION)
+        assert proc.stdout.splitlines()[-1] == state
+        assert "Traceback" not in proc.stderr, proc.stderr[-2000:]
+        _assert_only_the_archive_is_left(cache)
 
 
 # The fresh session ends its own JVM before it can write an archive

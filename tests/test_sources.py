@@ -112,11 +112,16 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
 
 
 def test_local_frame_matches_tuple_list_form(spark):
-    """session.local_frame (the SQL VALUES path for bounded dim/model
+    """session.local_frame (the Arrow path for bounded dim/model
     frames) must be value- and schema-identical to the tuple-list
     createDataFrame it replaces — including a nested comma-bearing DDL
-    type, which a naive comma-split column parse would break on, and
-    the zero-row fallback."""
+    type, which a naive comma-split column parse would break on, an
+    ``array<double>`` column (the centroids shape) and zero rows. It
+    rejects a None in a NOT NULL field, and its frame is a
+    LocalRelation that collects with no Spark job, also with the Arrow
+    conf off."""
+    import pytest
+
     from git_log_to_sqlite_spark.session import local_frame
 
     ddl = "k string, v double"
@@ -143,8 +148,8 @@ def test_local_frame_matches_tuple_list_form(spark):
     empty = local_frame(spark, [], ddl)
     assert empty.schema == want.schema and empty.count() == 0
 
-    # SQL-text edge values: quotes, backslashes (a trailing one too),
-    # control characters, NULL, NaN and both infinities
+    # edge values: quotes, backslashes (a trailing one too), control
+    # characters, NULL, NaN and both infinities
     import math
 
     edge_rows = [
@@ -161,6 +166,51 @@ def test_local_frame_matches_tuple_list_form(spark):
     assert [r["k"] for r in rows_e] == [k for k, _ in edge_rows]
     assert math.isnan(rows_e[0]["v"])
     assert [r["v"] for r in rows_e[1:]] == [v for _, v in edge_rows[1:]]
+
+    arr_ddl = "cell int, centroid array<double>"
+    arr_rows = [(0, [0.5, -1.0]), (1, [2.0, float("inf")]), (2, None)]
+    got_a = local_frame(spark, arr_rows, arr_ddl)
+    assert got_a.schema == spark.createDataFrame(arr_rows, arr_ddl).schema
+    assert [tuple(r) for r in got_a.collect()] == arr_rows
+
+    with pytest.raises(ValueError, match="'id' is not nullable"):
+        local_frame(spark, [(1, "a"), (None, "b")], "id long NOT NULL, name string")
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(), default=-1)
+    big = local_frame(spark, [(i, f"r{i}") for i in range(1000)], "id long NOT NULL, name string")
+    assert len(big.collect()) == 1000
+    assert max(tracker.getJobIdsForGroup(), default=-1) == last_job
+
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    old_arrow = spark.conf.get(arrow)
+    spark.conf.set(arrow, "false")
+    try:
+        off = local_frame(spark, edge_rows, ddl)
+        assert off._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    finally:
+        spark.conf.set(arrow, old_arrow)
+
+
+def test_only_local_frame_creates_frames_from_driver_rows():
+    """Small driver-side frames enter Spark one way: in the package,
+    ``createDataFrame`` is reached only from ``session.local_frame``."""
+    import ast
+
+    package = REPO_ROOT / "git_log_to_sqlite_spark"
+    found = []
+    for f in sorted(package.rglob("*.py")):
+        tree = ast.parse(f.read_text(encoding="utf-8"))
+        # ast.walk is breadth-first, so an inner function overwrites
+        # its outer one: each node maps to its innermost function
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner.update(dict.fromkeys(ast.walk(fn), fn.name))
+        found += [f"{f.relative_to(package)}:{owner.get(node, '<module>')}"
+                  for node in ast.walk(tree)
+                  if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"]
+    assert found == ["session.py:local_frame"], found
 
 
 def test_write_parquet_bounds_records_per_file(spark, tmp_path):
